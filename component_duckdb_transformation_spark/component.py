@@ -6,11 +6,18 @@ Flow of ``run()`` (mirrors reference src/component.py:36-56):
 1. parse ``config.json`` -> :class:`Configuration`
 2. optional startup syntax check
 3. import: every entry under ``in/tables`` becomes a temp view
-   (manifest-driven schema; input-mapping destination overrides name)
+   (manifest-driven schema; input-mapping destination overrides name),
+   ``threads`` imports at a time
 4. execute: DAG-batched blocks of SQL scripts on Spark (FAIR pools,
    fail-fast)
-5. export: every output-mapping entry -> quoted CSV + manifest
+5. export: every output-mapping entry -> quoted CSV + manifest,
+   ``threads`` exports at a time; a source mapped twice is exported
+   once, with its last mapping
 6. out-file manifests
+
+Steps 3-5 share one fail-fast pool (:func:`plans.orchestrator.run_fail_fast`,
+``threads`` wide); the pool threads inherit the caller's Spark job group
+and local properties.
 
 Divergence from the reference, by design: no ``.duck.db`` passthrough —
 the persistent store is the TableStore's Parquet warehouse dir, which
@@ -27,6 +34,7 @@ import shutil
 import time
 from typing import Optional
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 from . import set_requested_engine_version
@@ -35,7 +43,7 @@ from .exceptions import UserException
 from .actions.results import ValidationResult
 from .actions import sync_actions
 from .plans.executor import SparkStatementExecutor, TableStore
-from .plans.orchestrator import BlockOrchestrator
+from .plans.orchestrator import BlockOrchestrator, run_fail_fast
 from .session import build_spark_session
 from .system_resources import spark_resource_stats
 from .sinks.table_export import export_file_manifests, export_table
@@ -230,17 +238,50 @@ class Component:
         except Exception:  # pragma: no cover
             pass
 
+    def _run_pooled(self, fn, items, name, what: str) -> None:
+        """Imports and exports: the orchestrator's fail-fast pool, with the
+        caller's job group and local properties carried into each task."""
+        run_fail_fast(
+            fn,
+            items,
+            max_workers=self.params.threads or 4,
+            name=name,
+            what=what,
+            cancel_running=self._cancel_all_jobs,
+            thread_target=self._inherit_local_properties,
+        )
+
+    def _inherit_local_properties(self, fn):
+        """``fn`` with a copy of this thread's Spark local properties (job
+        group, scheduler pool) applied in whichever thread runs it."""
+        wrap = inheritable_thread_target(self.spark)
+        # pinned-thread mode off: pyspark hands the session back, and there
+        # are no per-thread properties to carry
+        return fn if wrap is self.spark else wrap(fn)
+
     def _create_input_tables(self) -> None:
         t0 = time.time()
-        for table in self.get_input_tables_definitions():
+        # one view per destination, the last definition winning as it
+        # would serially
+        tables = {t.destination: t for t in self.get_input_tables_definitions()}
+
+        def create(table: InputTable) -> None:
             created = create_input_view(self.spark, table, self.params.dtypes_infer)
             LOG.info("Input table created: %s (is_view=%s)", created.name, created.is_view)
+
+        self._run_pooled(
+            create, tables.values(), name=lambda t: t.destination, what="Input import"
+        )
         LOG.debug("Input tables created in %.2fs", time.time() - t0)
 
     def _export_tables(self, store: TableStore) -> None:
         out_dir = os.path.join(self.data_dir, "out", "tables")
         os.makedirs(out_dir, exist_ok=True)
-        for mapping in self.output_mapping:
+        # a source mapped twice writes one file: export it once with its
+        # last mapping, the result a serial export loop leaves
+        mappings = {m.source: m for m in self.output_mapping}
+
+        def export(mapping: OutputTable) -> None:
             order_by = None
             if self.executor is not None:
                 order_by = self.executor.view_order_by.get(mapping.source)
@@ -254,6 +295,10 @@ class Component:
                 order_by=order_by,
                 sliced=self.params.sliced_output,
             )
+
+        self._run_pooled(
+            export, mappings.values(), name=lambda m: m.source, what="Table export"
+        )
 
     # -- sync actions (reference src/component.py:93-137) ------------------
     def syntax_check(self) -> ValidationResult:

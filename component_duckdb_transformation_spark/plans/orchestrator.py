@@ -14,7 +14,9 @@ Re-implements the scheduling semantics of reference
   src/query_orchestrator.py:124-131
 - each batch runs its scripts concurrently on a thread pool, fail-fast
   with cancellation of unstarted work — reference
-  src/query_orchestrator.py:359-420
+  src/query_orchestrator.py:359-420. The pool is
+  :func:`run_fail_fast`, which the component also uses for its input
+  imports and output exports.
 
 Spark specifics: concurrent batches submit jobs from multiple Python
 threads into one SparkSession (thread-safe); the session runs a FAIR
@@ -31,7 +33,7 @@ import time
 from collections import defaultdict
 from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass, field
-from typing import Callable, Iterable, List, Sequence
+from typing import Callable, Iterable, List, Sequence, TypeVar
 
 from ..configuration import Block as ConfigBlock
 from ..configuration import Code
@@ -39,6 +41,9 @@ from ..exceptions import UserException
 from .sql_parser import ParsedStatement, StatementType, parse_script
 
 LOG = logging.getLogger(__name__)
+
+_T = TypeVar("_T")
+_R = TypeVar("_R")
 
 
 @dataclass
@@ -315,6 +320,79 @@ def build_execution_plan(queries: List[Query]) -> ExecutionPlan:
     return ExecutionPlan(blocks=blocks)
 
 
+class _NotStarted(Exception):
+    """An item skipped because an earlier item had already failed."""
+
+
+def run_fail_fast(
+    fn: Callable[[_T], _R],
+    items: Sequence[_T],
+    *,
+    max_workers: int,
+    name: Callable[[_T], str],
+    what: str,
+    cancel_running: Callable[[], None] | None = None,
+    thread_target: Callable[[Callable], Callable] | None = None,
+) -> List[_R]:
+    """Run ``fn`` over ``items`` on a ``max_workers``-wide thread pool and
+    return the results in item order.
+
+    Fail-fast: once an item fails, no further item starts; items already
+    running finish. If anything failed, ``cancel_running`` is called once
+    and one :class:`UserException` lists each failure as
+    ``<name>: <error>``. A single item runs inline on the caller thread.
+
+    ``thread_target`` wraps ``fn`` once per item, in the caller thread,
+    before submission: the hook for carrying thread-local engine state
+    (e.g. the Spark job group) into pool threads.
+    """
+    items = list(items)
+    results: List = [None] * len(items)
+    failures: List[tuple[str, Exception]] = []
+    skipped = 0
+    failed = threading.Event()
+
+    def guarded(item):
+        if failed.is_set():
+            raise _NotStarted
+        try:
+            return fn(item)
+        except BaseException:
+            failed.set()
+            raise
+
+    if len(items) == 1:
+        try:
+            results[0] = fn(items[0])
+        except Exception as exc:
+            failures.append((name(items[0]), exc))
+    elif items:
+        wrap = thread_target or (lambda f: f)
+        with ThreadPoolExecutor(max_workers=min(max_workers, len(items))) as pool:
+            futures = {
+                pool.submit(wrap(guarded), item): i for i, item in enumerate(items)
+            }
+            for future in as_completed(futures):
+                i = futures[future]
+                try:
+                    results[i] = future.result()
+                except _NotStarted:
+                    skipped += 1
+                except Exception as exc:
+                    failures.append((name(items[i]), exc))
+    if failures:
+        if cancel_running is not None:
+            cancel_running()
+        succeeded = len(items) - len(failures) - skipped
+        sep = "\n  - "
+        listed = sep.join(f"{label}: {exc}" for label, exc in failures)
+        raise UserException(
+            f"{what} failed ({succeeded} of {len(items)} succeeded, "
+            f"{skipped} not started):{sep}{listed}"
+        ) from failures[0][1]
+    return results
+
+
 class BlockOrchestrator:
     """Executes an ExecutionPlan: blocks sequential, batch members parallel.
 
@@ -385,32 +463,11 @@ class BlockOrchestrator:
         return duration
 
     def _run_batch(self, batch: Batch) -> List[float]:
-        if len(batch) == 1:
-            try:
-                return [self._run_one(batch[0])]
-            except Exception as exc:
-                raise UserException(f"Query '{batch[0].name}' failed: {exc}") from exc
-        workers = min(self.max_workers, len(batch))
-        times: List[float] = []
-        failures: List[str] = []
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            future_to_query = {pool.submit(self._run_one, q): q for q in batch}
-            completed = set()
-            for future in as_completed(future_to_query):
-                completed.add(future)
-                try:
-                    times.append(future.result())
-                except Exception as exc:
-                    failures.append(f"{future_to_query[future].name}: {exc}")
-            if failures:
-                for future in future_to_query:
-                    if future not in completed and not future.done():
-                        future.cancel()
-                if self.cancel_running is not None:
-                    self.cancel_running()
-                sep = "\n  - "
-                raise UserException(
-                    f"Query execution failed after {len(times)} successful "
-                    f"quer{'y' if len(times) == 1 else 'ies'}:{sep}{sep.join(failures)}"
-                )
-        return times
+        return run_fail_fast(
+            self._run_one,
+            batch,
+            max_workers=self.max_workers,
+            name=lambda q: q.name,
+            what="Query execution",
+            cancel_running=self.cancel_running,
+        )

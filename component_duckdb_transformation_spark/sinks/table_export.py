@@ -18,6 +18,14 @@ CSV file, every value quoted. Spark-first equivalents:
 Export-time ORDER BY: Spark views don't persist order, so the defining
 query's terminal ORDER BY (tracked by the executor) is re-applied here
 (SURVEY §7 hard-part 2).
+
+String values are written as they are: leading and trailing spaces
+survive, and an empty string is ``""``.
+
+``export_table`` is safe to call from several threads at once for
+distinct tables: the component runs its exports on the orchestrator's
+``threads``-wide pool. Each single-file export writes into its own
+``cdts-export-*`` temp dir, removed on success and failure alike.
 """
 
 from __future__ import annotations
@@ -80,6 +88,9 @@ _CSV_WRITE_OPTIONS = {
     "dateFormat": "yyyy-MM-dd",
     "nullValue": "",
     "emptyValue": '""',
+    # the writer trims strings by default; DuckDB's COPY keeps them as is
+    "ignoreLeadingWhiteSpace": False,
+    "ignoreTrailingWhiteSpace": False,
 }
 
 

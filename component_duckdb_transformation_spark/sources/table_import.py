@@ -18,6 +18,7 @@ Spark-first mapping (SURVEY §2.A A1-A4):
 
 from __future__ import annotations
 
+import hashlib
 import logging
 import os
 from dataclasses import dataclass
@@ -61,9 +62,12 @@ def register_view(spark: SparkSession, df: DataFrame, name: str) -> None:
 
     Spark's ``createOrReplaceTempView`` parses its argument as a
     multipart identifier, so the df is registered under a safe alias and
-    re-exposed via SQL with backticks.
+    re-exposed via SQL with backticks. The alias carries a digest of the
+    exact name, so names that sanitize alike (``a.b``, ``a_b``) or differ
+    only in case get distinct aliases.
     """
-    safe = "_import_" + "".join(c if c.isalnum() else "_" for c in name)
+    digest = hashlib.sha1(name.encode("utf-8")).hexdigest()
+    safe = "_import_" + "".join(c if c.isalnum() else "_" for c in name) + "_" + digest
     df.createOrReplaceTempView(safe)
     spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {_bt(name)} AS SELECT * FROM {safe}")
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 import csv
 import json
 import os
+import re
 
 import pytest
 
@@ -387,3 +388,247 @@ def test_round3_surface_datadir(spark, tmp_path):
     # matching DuckDB's native PIVOT
     assert pv[1] == ["0", "5", "0"]
     assert pv[2] == ["1", "0", "2"]
+
+
+def _typed_manifest(table_id: str, columns: dict, **extra) -> str:
+    return json.dumps({
+        "id": table_id,
+        "columns": list(columns),
+        "column_metadata": {
+            name: [{"key": "KBC.datatype.basetype", "value": base}]
+            for name, base in columns.items()
+        },
+        **extra,
+    })
+
+
+def _make_wide_datadir(root, threads: int, sliced_output: bool, extra_script=(),
+                       extra_outputs=()) -> str:
+    """Six inputs (CSV with an inferred and with a typed schema, two sliced
+    CSVs, a parquet dir and a parquet file) and seven outputs, ordered
+    and unordered. Every statement is its own block, so the batches run
+    the same way at any ``threads`` and only the imports and exports
+    change with it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    data = root / "data"
+    in_tables = data / "in" / "tables"
+    _write(str(in_tables / "days.csv"), DAYS_CSV)
+    _write(str(in_tables / "days.csv.manifest"), json.dumps({"id": "in.c-app.days"}))
+    _write(
+        str(in_tables / "people.csv"),
+        '"id","name"\n"1","  Ann "\n"2","Bob"\n"3",""\n"4","Dee"\n',
+    )
+    _write(
+        str(in_tables / "people.csv.manifest"),
+        _typed_manifest("in.c-app.people", {"id": "INTEGER", "name": "STRING"}),
+    )
+    for table, slices in {
+        "sliced_a": {"a.csv": '"1","10","x"\n"2","20","y"\n', "b.csv": '"3","30","x"\n'},
+        "sliced_b": {"a.csv": '"1","5","p"\n', "b.csv": '"2","6","q"\n"4","7","p"\n'},
+    }.items():
+        for name, body in slices.items():
+            _write(str(in_tables / table / name), body)
+        _write(
+            str(in_tables / f"{table}.manifest"),
+            _typed_manifest(
+                f"in.c-app.{table}",
+                {"id": "INTEGER", "value": "INTEGER", "role": "STRING"},
+            ),
+        )
+    os.makedirs(in_tables / "pq_dir")
+    for part in range(2):
+        pq.write_table(
+            pa.table({"k": [part * 10 + i for i in range(5)],
+                      "tag": [f"t{(part + i) % 3}" for i in range(5)]}),
+            str(in_tables / "pq_dir" / f"part-{part}.parquet"),
+        )
+    _write(str(in_tables / "pq_dir.manifest"), json.dumps({"id": "in.c-app.pq_dir"}))
+    pq.write_table(
+        pa.table({"k": [3, 1, 2], "w": [0.5, 1.5, 2.5]}),
+        str(in_tables / "pq_file.parquet"),
+    )
+    _write(
+        str(in_tables / "pq_file.parquet.manifest"),
+        json.dumps({"id": "in.c-app.pq_file"}),
+    )
+    script = [
+        "CREATE TABLE days_t AS SELECT id, name FROM days ORDER BY id DESC;",
+        "CREATE TABLE role_sums AS SELECT role, sum(value) AS total "
+        "FROM sliced_a GROUP BY role;",
+        "CREATE VIEW tags AS SELECT tag, count(*) AS n FROM pq_dir "
+        "GROUP BY tag ORDER BY tag;",
+        "CREATE TABLE weights AS SELECT * FROM pq_file;",
+        "CREATE TABLE joined AS SELECT p.id, p.name, s.value FROM people p "
+        "JOIN sliced_b s USING (id) ORDER BY p.id;",
+        *extra_script,
+    ]
+    outputs = [
+        "days_t", "role_sums", "tags", "weights", "joined", "pq_dir", "people",
+        *extra_outputs,
+    ]
+    config = {
+        "parameters": {
+            "threads": threads,
+            "sliced_output": sliced_output,
+            "blocks": [
+                {"name": f"b{i}", "codes": [{"name": f"c{i}", "script": [sql]}]}
+                for i, sql in enumerate(script)
+            ],
+        },
+        "storage": {
+            "input": {"tables": [
+                {"source": "in.c-app.days", "destination": "days"},
+                {"source": "in.c-app.people", "destination": "people"},
+                {"source": "in.c-app.sliced_a", "destination": "sliced_a"},
+                {"source": "in.c-app.sliced_b", "destination": "sliced_b"},
+                {"source": "in.c-app.pq_dir", "destination": "pq_dir",
+                 "file_type": "parquet"},
+                {"source": "in.c-app.pq_file", "destination": "pq_file",
+                 "file_type": "parquet"},
+            ]},
+            "output": {"tables": [
+                {"source": name, "destination": f"out.c-out.{name}"}
+                for name in outputs
+            ]},
+        },
+    }
+    _write(str(data / "config.json"), json.dumps(config))
+    return str(data)
+
+
+def _out_files(data_dir: str) -> dict:
+    """Every file under out/tables by relative path, with the per-write
+    UUID in Spark part-file names masked."""
+    root = os.path.join(data_dir, "out", "tables")
+    files = {}
+    for dirpath, _, names in os.walk(root):
+        for name in names:
+            path = os.path.join(dirpath, name)
+            rel = re.sub(r"part-(\d+)-[0-9a-f-]{36}", r"part-\1", os.path.relpath(path, root))
+            with open(path, "rb") as fh:
+                files[rel] = fh.read()
+    return files
+
+
+@pytest.mark.parametrize("sliced_output", [False, True])
+def test_concurrent_import_export_matches_serial(spark, tmp_path, sliced_output):
+    outs = {}
+    for threads in (1, 4):
+        data_dir = _make_wide_datadir(tmp_path / f"t{threads}", threads, sliced_output)
+        Component(data_dir=data_dir, spark=spark).run()
+        outs[threads] = _out_files(data_dir)
+    assert sorted(outs[1]) == sorted(outs[4])
+    assert len([f for f in outs[1] if f.endswith(".manifest")]) == 7
+    for rel, body in outs[1].items():
+        assert outs[4][rel] == body, rel
+    if not sliced_output:
+        # padded and empty strings pass through import and export as is
+        assert _read_rows(
+            os.path.join(data_dir, "out", "tables", "people")
+        )[1:3] == [["1", "  Ann "], ["2", "Bob"]]
+
+
+def test_failing_export_names_table_and_leaves_no_temp_dir(spark, tmp_path):
+    # the terminal ORDER BY names a column the table does not carry, so
+    # re-applying it at export fails
+    data_dir = _make_wide_datadir(
+        tmp_path, 4, False,
+        extra_script=["CREATE TABLE bad_order AS SELECT id FROM people ORDER BY name;"],
+        extra_outputs=["bad_order"],
+    )
+    with pytest.raises(UserException, match="Table export failed") as info:
+        Component(data_dir=data_dir, spark=spark).run()
+    assert "bad_order: Error exporting table bad_order" in str(info.value)
+    leftovers = [
+        e for e in os.listdir(os.path.join(data_dir, "out", "tables"))
+        if e.startswith("cdts-export-")
+    ]
+    assert leftovers == []
+
+
+def test_duplicate_output_source_last_mapping_wins(spark, tmp_path, monkeypatch):
+    from component_duckdb_transformation_spark import component
+
+    exported = []
+    real_export = component.export_table
+
+    def recording_export(spark, name, mapping, *args, **kwargs):
+        exported.append((name, mapping.destination))
+        return real_export(spark, name, mapping, *args, **kwargs)
+
+    # concurrent exports of one source would race on its file: it must be
+    # exported once, with the last mapping
+    monkeypatch.setattr(component, "export_table", recording_export)
+    data = tmp_path / "data"
+    _write(str(data / "in" / "tables" / "days.csv"), DAYS_CSV)
+    config = {
+        "parameters": {
+            "threads": 4,
+            "blocks": [{"name": "b", "codes": [{"name": "c", "script": [
+                "CREATE TABLE t AS SELECT * FROM 'days.csv' ORDER BY id;",
+            ]}]}],
+        },
+        "storage": {"output": {"tables": [
+            {"source": "t", "destination": "out.c-out.first"},
+            {"source": "t", "destination": "out.c-out.second",
+             "primary_key": ["id"]},
+        ]}},
+    }
+    _write(str(data / "config.json"), json.dumps(config))
+    Component(data_dir=str(data), spark=spark).run()
+    assert exported == [("t", "out.c-out.second")]
+    out = os.path.join(str(data), "out", "tables")
+    assert sorted(os.listdir(out)) == ["t", "t.manifest"]
+    with open(os.path.join(out, "t.manifest"), encoding="utf-8") as fh:
+        manifest = json.load(fh)
+    assert manifest["destination"] == "out.c-out.second"
+    assert manifest["primary_key"] == ["id"]
+    assert len(_read_rows(os.path.join(out, "t"))) == 8
+
+
+def test_pool_threads_carry_callers_job_group(spark, tmp_path, monkeypatch):
+    """Imports and exports run on pool threads; their Spark jobs must
+    stay in the caller's job group (harnesses attribute jobs by it)."""
+    from component_duckdb_transformation_spark import component
+
+    sc = spark.sparkContext
+    seen = []
+    real_export = component.export_table
+
+    def recording_export(*args, **kwargs):
+        seen.append(sc.getLocalProperty("spark.jobGroup.id"))
+        return real_export(*args, **kwargs)
+
+    monkeypatch.setattr(component, "export_table", recording_export)
+    data = tmp_path / "data"
+    _write(str(data / "in" / "tables" / "days.csv"), DAYS_CSV)
+    config = {
+        "parameters": {
+            "threads": 4,
+            # one batch of two: the executor tags those jobs
+            # "<group>/<query>" and leaves the caller's thread untouched
+            "blocks": [{"name": "b", "codes": [{"name": "c", "script": [
+                "CREATE TABLE a AS SELECT * FROM 'days.csv' WHERE id <= 3;",
+                "CREATE TABLE b AS SELECT * FROM 'days.csv' WHERE id > 3;",
+            ]}]}],
+        },
+        "storage": {"output": {"tables": [
+            {"source": "a", "destination": "out.c-out.a"},
+            {"source": "b", "destination": "out.c-out.b"},
+            {"source": "days.csv", "destination": "out.c-out.days"},
+        ]}},
+    }
+    _write(str(data / "config.json"), json.dumps(config))
+    group = "cdts-pool-group-probe"
+    sc.setJobGroup(group, group)
+    try:
+        Component(data_dir=str(data), spark=spark).run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert seen == [group] * 3
+    # at least the CSV schema inference at import and one write job per
+    # export ran under the group itself
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 4

@@ -1,5 +1,9 @@
 """DAG scheduling semantics (reference src/query_orchestrator.py)."""
 
+import sys
+import threading
+import time
+
 import pytest
 
 from component_duckdb_transformation_spark.configuration import Block, Code
@@ -8,6 +12,7 @@ from component_duckdb_transformation_spark.plans.orchestrator import (
     BlockOrchestrator,
     build_execution_plan,
     build_queries,
+    run_fail_fast,
 )
 
 
@@ -80,6 +85,91 @@ def test_fail_fast_raises_user_exception():
     orch.add_queries_from_blocks(blocks)
     with pytest.raises(UserException, match="failed"):
         orch.execute()
+
+
+def test_run_fail_fast_returns_results_in_item_order():
+    gate = threading.Barrier(3)
+
+    def square(x):
+        gate.wait(timeout=10)  # all three run at once
+        return x * x
+
+    out = run_fail_fast(
+        square, [3, 1, 2], max_workers=3, name=str, what="Square"
+    )
+    assert out == [9, 1, 4]
+
+
+def test_run_fail_fast_cancels_unstarted_and_reports_once():
+    started = []
+    cancelled = []
+
+    def work(x):
+        started.append(x)
+        if x == 0:
+            raise RuntimeError("boom")
+        return x
+
+    with pytest.raises(UserException) as info:
+        run_fail_fast(
+            work, range(5), max_workers=1, name=lambda x: f"item{x}",
+            what="Work", cancel_running=lambda: cancelled.append(True),
+        )
+    # one worker: the first failure stops the rest from starting, as a
+    # serial loop would
+    assert started == [0]
+    assert cancelled == [True]
+    msg = str(info.value)
+    assert msg.startswith("Work failed (0 of 5 succeeded, 4 not started):")
+    assert "item0: boom" in msg
+    assert isinstance(info.value.__cause__, RuntimeError)
+
+
+def test_run_fail_fast_lets_running_items_finish():
+    started = threading.Event()
+    finished = []
+
+    def work(x):
+        if x == "bad":
+            started.wait(timeout=10)  # fail only once "slow" is running
+            raise ValueError("no")
+        started.set()
+        time.sleep(0.2)
+        finished.append(x)
+
+    with pytest.raises(UserException, match="bad: no"):
+        run_fail_fast(work, ["slow", "bad"], max_workers=2, name=str, what="Work")
+    assert finished == ["slow"]
+
+
+def test_run_fail_fast_stress_accounts_for_every_item():
+    """More workers than cores and a short switch interval: every item
+    either ran once or is counted as not started, and results stay in
+    item order."""
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        out = run_fail_fast(
+            lambda x: x + 1, range(400), max_workers=32, name=str, what="Inc"
+        )
+        assert out == [x + 1 for x in range(400)]
+
+        ran = []
+        lock = threading.Lock()
+
+        def work(x):
+            with lock:
+                ran.append(x)
+            if x == 150:
+                raise RuntimeError("stop")
+
+        with pytest.raises(UserException) as info:
+            run_fail_fast(work, range(400), max_workers=32, name=str, what="Work")
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(ran) == len(set(ran))
+    skipped = int(str(info.value).split(" not started")[0].rsplit(" ", 1)[1])
+    assert len(ran) + skipped == 400
 
 
 def test_mutation_chain_serialized():

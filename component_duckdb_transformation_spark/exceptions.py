@@ -6,7 +6,3 @@ class UserException(Exception):
     """An error attributable to user configuration or SQL — reported
     without a stack trace, mirroring the reference's UserException usage
     (e.g. reference src/query_orchestrator.py:404-420)."""
-
-
-class EngineError(Exception):
-    """Internal engine failure."""

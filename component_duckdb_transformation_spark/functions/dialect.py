@@ -49,7 +49,7 @@ from contextvars import ContextVar
 from typing import Dict, List, Optional
 
 from .. import engine_version_string
-from ..plans.sql_tokens import Token, tokenize, unquote_name
+from ..plans.sql_tokens import Token, _bt, tokenize, unquote_name
 
 # Column-type hints for schema-aware dispatch. Translation is lexical
 # (the reference surface is raw DuckDB SQL strings, reference
@@ -2000,178 +2000,14 @@ def _parse_table_primary(toks: List[Token]):
     return src, alias
 
 
-# Scan-order position WITHOUT a single-partition window: a global
-# ``row_number() OVER (ORDER BY monotonically_increasing_id())`` moves
-# every row to one task. monotonically_increasing_id() packs
-# (partition index << 33) | row-offset-within-partition, so the global
-# position is recoverable distributedly: count rows per partition
-# (tiny shuffle), cumulative-sum the counts in a window over
-# #partitions rows (not data rows), then broadcast-join the offsets
-# back and add the in-partition offset. Only partition STATS ever
-# concentrate; the data path stays map-side.
-#
-# The template evaluates ``{src}`` twice (data pass + zero-column count
-# pass), which is ONLY sound when both scans are guaranteed the same
-# partition layout and row order: a FileScan/LocalTableScan primary
-# with no Exchange (file-split determinism; the count pass prunes all
-# columns but pruning never changes file splits). A shuffled source
-# breaks that guarantee — column pruning makes the two subtrees
-# non-identical so the exchange is not reused, and AQE can coalesce
-# the count side to fewer partitions than the data side, silently
-# dropping or misnumbering rows. ``_scan_stable_primary`` gates this
-# template; everything else takes ``_POSITIONAL_WRAP_CTE``.
-_POSITIONAL_WRAP = (
-    "(SELECT __pt.* EXCEPT (__mid), "
-    "CAST(__po.__off + (__pt.__mid & 8589934591) + 1 AS BIGINT) AS __pos "
-    "FROM (SELECT *, monotonically_increasing_id() AS __mid FROM {src}) __pt "
-    "JOIN (SELECT __pid, sum(__cnt) OVER (ORDER BY __pid "
-    "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - __cnt AS __off "
-    "FROM (SELECT __pid, count(*) AS __cnt FROM "
-    "(SELECT shiftright(monotonically_increasing_id(), 33) AS __pid "
-    "FROM {src}) __pr GROUP BY __pid) __pc) __po "
-    "ON shiftright(__pt.__mid, 33) = __po.__pid) {al}"
-)
-
-# Safe variant for sources that may shuffle (subqueries with GROUP
-# BY/JOIN/aggregates, views registered unstable by the executor): the
-# tagged frame is a CTE referenced twice. Because the CTE contains a
-# non-deterministic expression (monotonically_increasing_id) and has
-# two references, Spark's ReplaceCTERefWithRepartition rule wraps each
-# reference's child in a round-robin repartition whose
-# sort-before-repartition contract (SPARK-23207) makes row->partition
-# assignment AND within-partition order a pure function of the row
-# data — identical across both references even on a real cluster with
-# non-deterministic shuffle-fetch arrival order. Costs one extra
-# rebalance shuffle of the data side; still fully distributed (no
-# single-task window over data rows).
-_POSITIONAL_WRAP_CTE = (
-    "(WITH {pt} AS "
-    "(SELECT *, monotonically_increasing_id() AS __mid FROM {src}) "
-    "SELECT {pt}.* EXCEPT (__mid), "
-    "CAST(__po.__off + ({pt}.__mid & 8589934591) + 1 AS BIGINT) AS __pos "
-    "FROM {pt} "
-    "JOIN (SELECT __pid, sum(__cnt) OVER (ORDER BY __pid "
-    "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - __cnt AS __off "
-    "FROM (SELECT __pid, count(*) AS __cnt FROM "
-    "(SELECT shiftright(__mid, 33) AS __pid FROM {pt}) __pr "
-    "GROUP BY __pid) __pc) __po "
-    "ON shiftright({pt}.__mid, 33) = __po.__pid) {al}"
-)
-
-# Names KNOWN to be scan-order stable (parquet-backed store views,
-# CREATE VIEW bodies verified shuffle-free, harness-registered parquet
-# temp views). A bare name in a POSITIONAL JOIN takes the zero-shuffle
-# two-scan numbering ONLY when registered here; every unknown name
-# defaults to the rebalance-CTE wrap, which is always safe — a temp
-# view registered outside TableStore over a shuffled DataFrame must
-# not silently misnumber. Opt-in via ``mark_scan_stable``.
-#
-# Scoping (r10): the registry is SESSION-SCOPED, not process-global —
-# the executor keeps one set per TableStore and activates it via
-# ``scan_stability_scope`` around statement execution, so two engines
-# in one process cannot cross-contaminate stability marks. Raw callers
-# (the workload harness) fall back to the process-default set.
-_SCAN_STABLE_NAMES: set = set()
-
-_SCAN_REGISTRY: ContextVar[set] = ContextVar(
-    "_duck_scan_registry", default=_SCAN_STABLE_NAMES
-)
-
-
-@contextlib.contextmanager
-def scan_stability_scope(registry: set):
-    """Activate a session-private scan-stability registry for every
-    mark/lookup inside the block."""
-    token = _SCAN_REGISTRY.set(registry)
-    try:
-        yield
-    finally:
-        _SCAN_REGISTRY.reset(token)
-
-
-def mark_scan_unstable(name: str, registry: Optional[set] = None) -> None:
-    reg = registry if registry is not None else _SCAN_REGISTRY.get()
-    reg.discard(name.strip('`"').lower())
-
-
-def mark_scan_stable(name: str, registry: Optional[set] = None) -> None:
-    reg = registry if registry is not None else _SCAN_REGISTRY.get()
-    reg.add(name.strip('`"').lower())
-
-
-# Keywords/functions whose presence anywhere in a subquery primary
-# means its physical layout may involve an Exchange (or row-level
-# non-determinism), so two evaluations can diverge.
-_SCAN_UNSTABLE_KWS = frozenset({
-    "GROUP", "JOIN", "ORDER", "DISTINCT", "OVER", "QUALIFY", "LIMIT",
-    "UNION", "INTERSECT", "EXCEPT", "SAMPLE", "TABLESAMPLE", "NATURAL",
-    "CROSS", "LATERAL", "WITH", "HAVING", "WINDOW", "CLUSTER", "SORT",
-    "ASOF", "POSITIONAL", "USING", "UNNEST",
-})
-_SCAN_UNSTABLE_FNS = frozenset({
-    # non-deterministic row functions
-    "rand", "randn", "random", "uuid", "gen_random_uuid", "uuidv4",
-    "uuidv7", "shuffle", "monotonically_increasing_id", "setseed",
-    # aggregates (an aggregate without GROUP BY still plans an
-    # Exchange SinglePartition)
-    "count", "count_if", "sum", "avg", "mean", "min", "max", "median",
-    "mode", "product", "entropy", "mad", "stddev", "stddev_pop",
-    "stddev_samp", "std", "variance", "var_pop", "var_samp", "skewness",
-    "kurtosis", "corr", "covar_pop", "covar_samp", "regr_avgx",
-    "regr_avgy", "regr_count", "regr_intercept", "regr_r2", "regr_slope",
-    "regr_sxx", "regr_sxy", "regr_syy", "first", "first_value", "last",
-    "last_value", "any_value", "arbitrary", "bool_and", "bool_or",
-    "every", "quantile", "quantile_cont", "quantile_disc", "percentile",
-    "percentile_cont", "percentile_disc", "percentile_approx",
-    "approx_count_distinct", "approx_percentile", "approx_quantile",
-    "collect_list", "collect_set", "array_agg", "list", "listagg",
-    "string_agg", "group_concat", "map_agg", "histogram", "bit_and",
-    "bit_or", "bit_xor", "bitstring_agg", "arg_min", "arg_max",
-    "min_by", "max_by", "argmin", "argmax", "favg", "fsum", "kahan_sum",
-    "grouping", "grouping_id", "reservoir_quantile", "approx_top_k",
-})
-
-
-def _scan_stable_primary(src: str) -> bool:
-    """True when two textual evaluations of ``src`` (a table primary's
-    source SQL from ``_parse_table_primary``) are guaranteed identical
-    partition layout and row order: a bare name not registered
-    unstable, or a parenthesized projection/filter subquery with no
-    shuffle-inducing construct, aggregate, or non-deterministic
-    function at any depth (every FROM must also reference stable
-    names). Conservative: unknown shapes return False and take the
-    rebalance-CTE path, which is always safe."""
-    s = src.strip()
-    stable_names = _SCAN_REGISTRY.get()
-    if not s.startswith("("):
-        base = s.split(".")[-1].strip('`"').lower()
-        return base in stable_names
-    toks = tokenize(s)
-    n_ = len(toks)
-    for k, t in enumerate(toks):
-        if t.kind == "word":
-            up = t.upper
-            if up in _SCAN_UNSTABLE_KWS:
-                return False
-            nk = _next_code(toks, k)
-            if (
-                nk < n_
-                and toks[nk].kind == "op"
-                and toks[nk].text == "("
-                and t.text.lower() in _SCAN_UNSTABLE_FNS
-            ):
-                return False
-            if up == "FROM":
-                nk2 = _next_code(toks, k)
-                if nk2 < n_ and toks[nk2].kind in (
-                    "word", "bident", "qident"
-                ):
-                    nm = unquote_name(toks[nk2]).lower()
-                    # FROM VALUES is a LocalRelation: deterministic
-                    # row order, no registration needed
-                    if nm != "values" and nm not in stable_names:
-                        return False
-    return True
+# Scan-order position: one expression numbers every row DuckDB
+# positions by scan order (POSITIONAL JOIN sides, unordered ranking
+# windows, multi-row nextval). monotonically_increasing_id() follows
+# partition-concatenation order, i.e. file order on the Parquet
+# TableStore; the window computes the dense position in one pass, so
+# no second scan has to agree with the first. It runs in one task.
+SCAN_ORDER_KEY = "monotonically_increasing_id()"
+SCAN_ROW_NUMBER = f"row_number() OVER (ORDER BY {SCAN_ORDER_KEY})"
 
 
 _ANY_ALL_CMP_OPS = {"=", "==", "<", ">", "<=", ">=", "<>"}
@@ -2314,20 +2150,15 @@ def _rewrite_any_all(tokens: List[Token]) -> List[Token]:
 
 def _rewrite_positional_join(tokens: List[Token]) -> List[Token]:
     """DuckDB ``l POSITIONAL JOIN r``: pair rows by position, padding
-    the shorter side with NULLs. Both sides get a scan-order row number
-    (``row_number() OVER (ORDER BY monotonically_increasing_id())`` —
-    partition-concatenation order, i.e. file order on this engine's
-    Parquet TableStore) and FULL-join on it; star projections are
-    patched to exclude the helper (COVERAGE.md documents the ordering
-    caveat after COW mutations). Supported shape: both sides plain
-    table primaries (name or aliased subquery); anything else is left
-    for Spark's parser to reject loudly. Scan-stable sides use the
-    zero-shuffle two-scan wrap; potentially-shuffling sides the
-    rebalance-CTE wrap (see the template docstrings)."""
+    the shorter side with NULLs. Both sides get the scan-order row
+    number (``SCAN_ROW_NUMBER``) and FULL-join on it; star projections
+    are patched to exclude the helper (COVERAGE.md documents the
+    ordering caveat after COW mutations). Supported shape: both sides
+    plain table primaries (name or aliased subquery); anything else is
+    left for Spark's parser to reject loudly."""
     out: List[Token] = []
     i = 0
     n = len(tokens)
-    wrap_seq = [0]
     while i < n:
         tok = tokens[i]
         if not tok.is_kw("POSITIONAL"):
@@ -2384,20 +2215,15 @@ def _rewrite_positional_join(tokens: List[Token]) -> List[Token]:
             continue
         (lsrc, lal), (rsrc, ral) = left, right
 
-        def _wrap(src: str, al: str, tag: str) -> str:
-            if _scan_stable_primary(src):
-                return _POSITIONAL_WRAP.format(src=src, al=f"`{al}`")
-            return _POSITIONAL_WRAP_CTE.format(
-                src=src, al=f"`{al}`", pt=f"__pt_{tag}{wrap_seq[0]}"
-            )
+        def _wrap(src: str, al: str) -> str:
+            return f"(SELECT *, {SCAN_ROW_NUMBER} AS __pos FROM {src}) `{al}`"
 
-        wrap_seq[0] += 1
         del out[lstart:]
         out.extend(
             _toks(
-                _wrap(lsrc, lal, "l")
+                _wrap(lsrc, lal)
                 + " FULL JOIN "
-                + _wrap(rsrc, ral, "r")
+                + _wrap(rsrc, ral)
                 + f" ON `{lal}`.__pos = `{ral}`.__pos"
             )
         )
@@ -3583,22 +3409,6 @@ def _mad_round_sql(expr: str) -> str:
     integer micros (floor(x + 0.5) == lo + half-up on the
     non-negative delta for any sign of x); NULL-propagating."""
     return f"floor(({expr}) + 0.5D)"
-
-
-def _mad_median_sql(arr: str) -> str:
-    """DuckDB median over a SORTED double array: middle element for
-    odd counts, mean of the two middles for even, NULL when empty."""
-    return (
-        f"(CASE WHEN size({arr}) = 0 THEN CAST(NULL AS DOUBLE) "
-        f"WHEN size({arr}) % 2 = 1 "
-        f"THEN CAST(element_at({arr}, "
-        f"CAST((size({arr}) + 1) / 2 AS INT)) AS DOUBLE) "
-        f"ELSE (CAST(element_at({arr}, "
-        f"CAST(size({arr}) / 2 AS INT)) AS DOUBLE) + "
-        f"CAST(element_at({arr}, "
-        f"CAST(size({arr}) / 2 AS INT) + 1) AS DOUBLE)) / 2.0 "
-        "END)"
-    )
 
 
 def _mad_fold_sql(collected: str, mode) -> str:
@@ -8899,17 +8709,6 @@ def _shortest_double_core_sql(
     return f"__duck_repr_j(({sexpr}), {lo}, {hi}, {yl})"
 
 
-def _yyjson_double_sql(dexpr: str) -> str:
-    """Render a DOUBLE exactly like DuckDB's yyjson writer: shortest
-    round-trip digits, plain decimal with a ``.0`` integer suffix for
-    decimal exponents in [-6, 20], otherwise ``<digits>e<exp>`` with
-    lowercase ``e``, no ``+``, and no ``.0`` on integer mantissas
-    (``1e21``, not ``1.0e21``). See ``_shortest_double_core_sql``."""
-    return _shortest_double_core_sql(
-        f"CAST(({dexpr}) AS STRING)", -6, 20, yy=True
-    )
-
-
 def _fmtlib_double_sql(dexpr: str) -> str:
     """Render a DOUBLE exactly like fmtlib's ``{}`` (DuckDB
     ``format()`` receives DECIMAL/DOUBLE args as doubles): shortest
@@ -8931,7 +8730,8 @@ def _fmtlib_double_sql(dexpr: str) -> str:
 # (canonical integer JSON), DOUBLE leaves (scientific-notation
 # sources) and DECIMAL leaves with a fraction or beyond the
 # int64/uint64 range (yyjson parses those as doubles) re-render
-# through the shortest-round-trip writer (``_yyjson_double_sql``).
+# through the shortest-round-trip writer in yyjson mode
+# (``_shortest_double_core_sql(..., yy=True)``).
 # Catalyst's subexpression elimination collapses the repeated
 # parse_json.
 # Object/array values whose rendering might diverge from yyjson's
@@ -9758,39 +9558,6 @@ def _contains_expanding_call(arg_tokens: List[Token]) -> bool:
         if t.kind == "word" and t.text.lower() in ("over", "exclude"):
             return True
     return False
-
-
-def _numeric_literal_chain(arg_tokens: List[Token]) -> Optional[str]:
-    """'decimal' / 'int' when the argument is an arithmetic chain
-    (+ - * and parens) over plain numeric literals — statically typed
-    the same way in BOTH engines (DECIMAL when any literal is
-    fractional, INTEGER otherwise), else None. Exponent literals
-    (DOUBLE-typed in DuckDB) and any other token disqualify; division
-    is excluded (DuckDB types decimal division differently)."""
-    code = [t for t in arg_tokens if t.kind not in ("ws", "comment")]
-    if not code:
-        return None
-    has_frac = False
-    for t in code:
-        if t.kind == "op" and t.text in ("(", ")", "+", "-", "*"):
-            continue
-        if (
-            t.kind in ("word", "number")
-            and _PLAIN_NUM_CHAIN_RE.match(t.text)
-        ):
-            has_frac = has_frac or "." in t.text
-            continue
-        return None
-    return "decimal" if has_frac else "int"
-
-
-def _decimal_literal_chain(arg_tokens: List[Token]) -> bool:
-    """True for fractional-literal arithmetic chains — DECIMAL-typed in
-    BOTH engines, where Spark's native round/ceil/floor already match
-    DuckDB (values, scale-keeping renderings, half-away ties; probed).
-    Pure-integer chains return False (DuckDB types their round/ceil
-    DOUBLE, which the typeof template's CASE coercion reproduces)."""
-    return _numeric_literal_chain(arg_tokens) == "decimal"
 
 
 # The fns whose DuckDB result type is a function of the argument type
@@ -11596,24 +11363,6 @@ def _visibly_string_base(base: List[Token]) -> bool:
         and code[0].text.lower() in _STRING_VALUED_FNS
         and code[1].kind == "op" and code[1].text == "("
         and _matching_paren(code, 1) == len(code) - 1
-    )
-
-
-def _negative_int_literal(tokens: List[Token]) -> bool:
-    """True when a token run is exactly a negative integer literal."""
-    code = [t for t in tokens if t.kind not in ("ws", "comment")]
-    if len(code) == 2:
-        return (
-            code[0].kind == "op"
-            and code[0].text == "-"
-            and code[1].kind == "word"
-            and code[1].text.isdigit()
-        )
-    return (
-        len(code) == 1
-        and code[0].kind == "word"
-        and code[0].text.startswith("-")
-        and code[0].text[1:].isdigit()
     )
 
 
@@ -14999,10 +14748,6 @@ def expand_union_by_name(sql: str, resolve_columns) -> str:
     return "".join(t.text for t in tokens)
 
 
-def _ubn_bt(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _ubn_wrap(ctes: List[str], recursive: bool, text: str) -> str:
     if not ctes:
         return text
@@ -15185,13 +14930,13 @@ def _expand_ubn_scope(
         merged = list(cl) + [c for c in cr if c.lower() not in low_l]
         low_r = {c.lower(): c for c in cr}
         proj_l = ", ".join(
-            f"{_ubn_bt(c)}" if c in cl else f"NULL AS {_ubn_bt(c)}"
+            f"{_bt(c)}" if c in cl else f"NULL AS {_bt(c)}"
             for c in merged
         )
         proj_r = ", ".join(
-            f"{_ubn_bt(low_r[c.lower()])} AS {_ubn_bt(c)}"
+            f"{_bt(low_r[c.lower()])} AS {_bt(c)}"
             if c.lower() in low_r
-            else f"NULL AS {_ubn_bt(c)}"
+            else f"NULL AS {_bt(c)}"
             for c in merged
         )
         op_sql = "UNION ALL" if all_flag else "UNION"
@@ -16027,9 +15772,9 @@ _ORDER_REQUIRED_WINDOW_FNS = {
 def _rewrite_unordered_ranking(tokens: List[Token]) -> List[Token]:
     """DuckDB allows ``row_number() OVER ()`` (and the other ranking /
     offset functions) without an ORDER BY — values follow scan order.
-    Spark rejects the unordered form, so ``ORDER BY
-    monotonically_increasing_id()`` is injected (partition/file order —
-    the same physical-order contract as POSITIONAL JOIN, COVERAGE.md)."""
+    Spark rejects the unordered form, so the scan-order key
+    (``SCAN_ORDER_KEY``) is injected as its ORDER BY — the same
+    physical-order contract as POSITIONAL JOIN, COVERAGE.md."""
     out: List[Token] = []
     i, n = 0, len(tokens)
     while i < n:
@@ -16078,7 +15823,7 @@ def _rewrite_unordered_ranking(tokens: List[Token]) -> List[Token]:
                         out.extend(body)
                         sep = " " if body and body[-1].kind != "ws" else ""
                         out.extend(_toks(
-                            f"{sep}ORDER BY monotonically_increasing_id()"
+                            f"{sep}ORDER BY {SCAN_ORDER_KEY}"
                         ))
                         out.append(tokens[close])
                         i = close + 1

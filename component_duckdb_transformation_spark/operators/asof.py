@@ -1,17 +1,12 @@
 """As-of (point-in-time) join — an operator DuckDB ships natively
 (``ASOF JOIN``) but Spark lacks as a built-in.
 
-Two implementations:
-
-- ``asof_join`` (union + window): the scale path. Tags left/right rows,
-  unions them, and per key computes the last non-null right value over
-  an ordering by (ts, side). Exactly ONE shuffle on the key — no range
-  blowup, no skew amplification — the same strategy a dedicated
-  time-series engine uses. Right-side rows sort before left rows at
-  equal timestamps, so semantics are "latest right.ts <= left.ts".
-- ``asof_join_windowed`` (join + rank): simpler variant restricted by a
-  tolerance window; useful when a bounded lookback is known (keeps the
-  join selective).
+``asof_join`` (union + window) tags left/right rows, unions them, and
+per key computes the last non-null right value over an ordering by
+(ts, side). Exactly ONE shuffle on the key — no range blowup, no skew
+amplification — the same strategy a dedicated time-series engine uses.
+Right-side rows sort before left rows at equal timestamps, so semantics
+are "latest right.ts <= left.ts".
 """
 
 from __future__ import annotations
@@ -80,47 +75,3 @@ def asof_join(
         F.col("__matched_ts").alias(right_ts + suffix),
     )
     return result
-
-
-def asof_join_windowed(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | Sequence[str],
-    left_ts: str,
-    right_ts: str,
-    tolerance_expr: str | None = None,
-    value_cols: Sequence[str] | None = None,
-    suffix: str = "_right",
-) -> DataFrame:
-    """Bounded-lookback as-of: equi-join on key with
-    right_ts <= left_ts [AND right_ts >= left_ts - tolerance], rank by
-    right_ts desc per left row, keep rank 1. Left rows without a match
-    are preserved (left join)."""
-    keys = [on] if isinstance(on, str) else list(on)
-    if value_cols is None:
-        value_cols = [c for c in right.columns if c not in keys and c != right_ts]
-    l = left.alias("l")
-    r = right.alias("r")
-    cond = F.lit(True)
-    for k in keys:
-        cond = cond & (F.col(f"l.{k}") == F.col(f"r.{k}"))
-    cond = cond & (F.col(f"r.{right_ts}") <= F.col(f"l.{left_ts}"))
-    if tolerance_expr:
-        cond = cond & (
-            F.col(f"r.{right_ts}")
-            >= F.col(f"l.{left_ts}") - F.expr(tolerance_expr)
-        )
-    joined = l.join(r, cond, "left")
-    order_cols = [F.col(f"r.{right_ts}").desc_nulls_last()] + [
-        F.col(f"r.{c}").desc_nulls_last() for c in value_cols
-    ]
-    w = Window.partitionBy(*[F.col(f"l.{c}") for c in left.columns]).orderBy(*order_cols)
-    return (
-        joined.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(
-            *[F.col(f"l.{c}").alias(c) for c in left.columns],
-            *[F.col(f"r.{c}").alias(c + suffix) for c in value_cols],
-            F.col(f"r.{right_ts}").alias(right_ts + suffix),
-        )
-    )

@@ -74,9 +74,9 @@ def shingles_pandas(
     """Distinct k-word shingles per document: (id, shingle).
 
     Arrow ``mapInPandas``: plain Python slicing + a set per document.
-    Spark's higher-order functions are interpreted per element — the
-    zip_with/array_distinct formulation (kept in
-    ``shingles_column_expr`` as the oracle-documented semantics) spent
+    Spark's higher-order functions are interpreted per element — a
+    zip_with/array_distinct column-expression formulation (the
+    semantics the SQL oracles replay) spent
     ~1.3 s on a 3k-doc/260k-shingle corpus purely in lambda dispatch,
     ~5x this implementation. Identical output set: split on a literal
     space (empty words kept, like ``string_split``), set-dedup ==
@@ -108,33 +108,8 @@ def shingles(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
 ) -> DataFrame:
     """Distinct k-word shingles per document — see ``shingles_pandas``
-    (the default, Arrow-vectorized) and ``shingles_column_expr`` (the
-    pure-JVM form whose semantics the SQL oracles replay; measured
-    slower end-to-end because higher-order lambdas are interpreted)."""
+    (Arrow-vectorized)."""
     return shingles_pandas(df, id_col, text_col, k)
-
-
-def shingles_column_expr(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
-) -> DataFrame:
-    """Column-expression shingles (reference semantics the SQL oracles
-    replay): zip_with-ing k shifted slices of the word array — a
-    constant number of split() evaluations per row. (The index-based
-    formulation ``transform(sequence, i -> element_at(w, i+j))``
-    re-evaluates the split per element because Catalyst inlines
-    collapsed projections into lambda bodies — quadratic per row.)
-    """
-    w = F.split(F.col(text_col), " ")
-    n_out = F.greatest(F.size(w) - (k - 1), F.lit(0))
-    sh = F.slice(w, 1, n_out)
-    for j in range(1, k):
-        sh = F.zip_with(
-            sh, F.slice(w, j + 1, n_out), lambda a, b: F.concat(a, F.lit(" "), b)
-        )
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(sh)).alias("shingle"),
-    )
 
 
 def ngram_jaccard_pairs(

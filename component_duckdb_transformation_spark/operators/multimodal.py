@@ -95,11 +95,3 @@ def frame_sample_stub(df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
         "doc_id",
         F.posexplode(offsets).alias("frame_idx", "byte_offset"),
     )
-
-
-def resize_stub(*args, **kwargs):
-    raise NotImplementedError(
-        "Image resize requires an image library (PIL/libvips) not present "
-        "in this environment; the mapInPandas plumbing is identical to "
-        "extract_image_metadata."
-    )

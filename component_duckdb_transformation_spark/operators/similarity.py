@@ -268,110 +268,6 @@ def lsh_bucketed_topk(
     )
 
 
-def train_ivf_centroids(
-    corpus: DataFrame,
-    n_clusters: int = 16,
-    vec_col: str = "embedding",
-    sample_size: int = 4096,
-    n_iters: int = 10,
-    seed: int = 42,
-) -> "np.ndarray":
-    """Deterministic Lloyd k-means on a driver-side sample — the coarse
-    quantizer of an IVF index. The sample (<= ``sample_size`` rows) is
-    the only data that touches the driver; assignment and search stay
-    distributed."""
-    pdf = corpus.select(vec_col).limit(sample_size).toPandas()
-    x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    rng = np.random.default_rng(seed)
-    centroids = x[rng.choice(len(x), size=min(n_clusters, len(x)), replace=False)]
-    for _ in range(n_iters):
-        d2 = ((x[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
-        for c in range(len(centroids)):
-            members = x[assign == c]
-            if len(members):
-                centroids[c] = members.mean(axis=0)
-    return centroids
-
-
-def _ivf_assign(df: DataFrame, centroids: "np.ndarray", vec_col: str, n_probe: int = 1) -> DataFrame:
-    """Attach nearest-centroid ids (top ``n_probe``) via one vectorized
-    numpy pass per Arrow batch. Output adds an int ``cluster`` column,
-    one row per probe."""
-    spark = df.sparkSession
-    b_cent = spark.sparkContext.broadcast(centroids)
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    # fresh StructType — StructType.add would mutate the DataFrame's
-    # cached schema object and corrupt later column resolution
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("cluster", IntegerType())]
-    )
-
-    def assign(batches):
-        import pandas as pd
-
-        cent = b_cent.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            d2 = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            top = np.argsort(d2, axis=1)[:, :n_probe]
-            reps = []
-            for p in range(top.shape[1]):
-                rep = pdf.copy()
-                rep["cluster"] = top[:, p].astype("int32")
-                reps.append(rep)
-            yield pd.concat(reps, ignore_index=True)
-
-    return df.mapInPandas(assign, out_schema)
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_clusters: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    seed: int = 42,
-) -> DataFrame:
-    """IVF approximate top-k: corpus partitioned into k-means cells, each
-    query scored only against its ``n_probe`` nearest cells (exact cosine
-    re-rank inside). The inverted-file analogue on Spark: the cell id is
-    the join/shuffle key, so search cost is corpus/n_clusters * n_probe
-    per query instead of the full corpus."""
-    centroids = train_ivf_centroids(corpus, n_clusters, vec_col, seed=seed)
-    c = _ivf_assign(
-        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("c_vec")),
-        centroids,
-        "c_vec",
-        n_probe=1,
-    )
-    q = _ivf_assign(
-        queries.select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-        ),
-        centroids,
-        "q_vec",
-        n_probe=n_probe,
-    )
-    joined = c.join(F.broadcast(q), "cluster")
-    score = _dot_double(F.col("q_vec"), F.col("c_vec")) / (
-        _norm(F.col("q_vec")) * _norm(F.col("c_vec"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("vec_id").asc())
-    return (
-        joined.withColumn("score", score)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "score", "rank")
-    )
-
-
 def _quantize_col(vec, q: int) -> F.Column:
     """array<float> -> array<bigint>: round(x*q) half-away-from-zero —
     the engine-portable quantization shared with the DuckDB oracles."""

@@ -28,6 +28,7 @@ import dataclasses
 import logging
 import os
 import re
+import shutil
 import threading
 import uuid
 from dataclasses import dataclass, field
@@ -37,23 +38,20 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..exceptions import UserException
 from ..functions.dialect import (
+    SCAN_ROW_NUMBER,
     _alias_expr_hint,
     _matching_paren,
     _pop_operand,
-    _scan_stable_primary,
     _split_top_commas,
     _split_top_level_args,
     column_type_hints,
     expand_columns_macro,
     expand_union_by_name,
-    mark_scan_stable,
-    mark_scan_unstable,
-    scan_stability_scope,
     translate,
 )
 from .orchestrator import Query
 from .sql_parser import ParsedStatement, StatementType, parse_statement
-from .sql_tokens import Token, code_tokens, tokenize, unquote_name
+from .sql_tokens import Token, _bt, code_tokens, tokenize, unquote_name
 
 LOG = logging.getLogger(__name__)
 
@@ -113,11 +111,6 @@ def _as_read_schema(schema):
     return conv(schema)
 
 
-def _bt(name: str) -> str:
-    """Backtick-quote a (possibly dotted / dashed) logical table name."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 @dataclass
 class TableState:
     name: str
@@ -157,10 +150,6 @@ class TableStore:
         self.spark = spark
         self.warehouse_dir = warehouse_dir
         self.tables: Dict[str, TableState] = {}
-        # session-private scan-stability registry (shared with the
-        # owning executor via scan_stability_scope): two engines in one
-        # process must not cross-contaminate stability marks
-        self.scan_registry: set = set()
         self._lock = threading.Lock()
         # per-table write locks: concurrent appends to ONE directory can
         # race on the FileOutputCommitter _temporary staging dir (one
@@ -182,11 +171,7 @@ class TableStore:
         return os.path.join(self.warehouse_dir, slug)
 
     def _bind_view(self, state: TableState) -> None:
-        if (
-            state.stream
-            or state.schema is None
-            or not re.match(r"^[A-Za-z_][A-Za-z0-9_]*$", state.name)
-        ):
+        if state.stream or state.schema is None:
             # stream tables carry a partition column the schema-pinned
             # path would have to model; they stay on the re-resolving
             # text view (appends land as new partition dirs)
@@ -206,9 +191,7 @@ class TableStore:
             # listing is taken fresh here — every mutation re-binds.
             self.spark.read.schema(state.schema).parquet(
                 state.path
-            ).createOrReplaceTempView(state.name)
-        # parquet-backed: file-split scan order is deterministic
-        mark_scan_stable(state.name, self.scan_registry)
+            ).createOrReplaceTempView(_bt(state.name))
 
     def create_table(
         self,
@@ -217,15 +200,29 @@ class TableStore:
         order_by: str | None = None,
         empty: bool = False,
     ) -> None:
+        self._commit_version(name, df, order_by=order_by, empty=empty)
+
+    def _commit_version(self, name: str, df: DataFrame, **fields) -> None:
+        """Write ``df`` as the next version of ``name``, then publish it
+        (path, schema and ``fields``) under the lock and re-bind the
+        view. A failed write publishes nothing — the table keeps its
+        previous version, as in DuckDB — and its staged directory is
+        removed."""
         with self._lock:
             state = self.tables.get(name) or TableState(name=name)
             state.version += 1
-            state.order_by = order_by
-            state.empty = empty
-            state.path = os.path.join(self._safe_dir(name), f"v{state.version}")
+            path = os.path.join(self._safe_dir(name), f"v{state.version}")
+        try:
+            df.write.mode("overwrite").parquet(path)
+        except BaseException:
+            shutil.rmtree(path, ignore_errors=True)
+            raise
+        with self._lock:
+            for key, value in fields.items():
+                setattr(state, key, value)
+            state.path = path
+            state.schema = _as_read_schema(df.schema)
             self.tables[name] = state
-        df.write.mode("overwrite").parquet(state.path)
-        state.schema = _as_read_schema(df.schema)
         self._bind_view(state)
 
     def insert_into(
@@ -243,8 +240,9 @@ class TableStore:
             # batch-partitioned layout can't take root-level appends
             # (conflicting directory structures): fold the insert in via
             # copy-on-write, converting to a plain versioned table
-            state.stream = False
-            self.rewrite(name, target.unionAll(aligned))
+            self._commit_version(
+                name, target.unionAll(aligned), stream=False, empty=False
+            )
             return
         state.empty = False
         with self._write_lock(name):
@@ -293,14 +291,7 @@ class TableStore:
         state = self.tables.get(name)
         if state is None:
             raise UserException(f"UPDATE/DELETE on unknown table '{name}'")
-        with self._lock:
-            state.version += 1
-            state.empty = False
-            new_path = os.path.join(self._safe_dir(name), f"v{state.version}")
-        df.write.mode("overwrite").parquet(new_path)
-        state.path = new_path
-        state.schema = _as_read_schema(df.schema)
-        self._bind_view(state)
+        self._commit_version(name, df, empty=False)
 
     def order_by_clause(self, name: str) -> Optional[str]:
         state = self.tables.get(name)
@@ -1336,51 +1327,14 @@ class SparkStatementExecutor:
             spans.append((i, close, lit))
         return spans
 
-    def _scan_order_rank_sql(self, query_sql: str) -> Optional[str]:
-        """Distributed 1-based scan-order rank expression for the rows
-        ``query_sql`` produces, or None when it can't be built safely.
-
-        ``monotonically_increasing_id()`` packs (partition << 33) |
-        row-offset-within-partition, so a dense rank is per-partition
-        offset + local index — the offsets come from one probe pass
-        counting rows per partition (the same count job
-        ``rdd.zipWithIndex`` runs), inlined as a literal map. Only
-        partition STATS reach the driver; the data path stays map-side
-        with no single-partition exchange.
-
-        Probe/real-run agreement requires reproducible per-partition
-        counts, which holds for shuffle-free plans (file-split
-        determinism); a plan with an Exchange (AQE may re-coalesce
-        differently between runs) returns None and the caller keeps
-        the single-task window fallback."""
+    def _plan_has_exchange(self, query_sql: str) -> bool:
+        """True when ``query_sql``'s physical plan shuffles (or fails to
+        plan). Planning runs no Spark job."""
         try:
-            probe = self.spark.sql(translate(query_sql))
-            plan = probe._jdf.queryExecution().executedPlan().toString()
-            if "Exchange" in plan:
-                return None
-            cnt = self.spark.sql(
-                "SELECT __pid, count(*) AS __cnt FROM (SELECT "
-                "shiftright(monotonically_increasing_id(), 33) AS __pid "
-                f"FROM ({translate(query_sql)}) __q) __p GROUP BY __pid"
-            ).collect()
-        except Exception:  # noqa: BLE001 — any probe failure keeps fallback
-            return None
-        if not cnt:
-            return "CAST(1 AS BIGINT)"  # zero rows: never evaluated
-        pids, offs, off = [], [], 0
-        for pid, c in sorted((r["__pid"], r["__cnt"]) for r in cnt):
-            pids.append(f"{pid}L")
-            offs.append(f"{off}L")
-            off += c
-        mid = "monotonically_increasing_id()"
-        # map_from_arrays literal (NOT 2-arg map(): this text passes
-        # through translate(), whose DuckDB map(keys, values) rewrite
-        # would mangle a variadic pair)
-        return (
-            f"(element_at(map_from_arrays(array({', '.join(pids)}), "
-            f"array({', '.join(offs)})), "
-            f"shiftright({mid}, 33)) + ({mid} & 8589934591) + 1)"
-        )
+            plan = self.spark.sql(translate(query_sql))._jdf.queryExecution()
+            return "Exchange" in plan.executedPlan().toString()
+        except Exception:  # noqa: BLE001 — unplannable counts as shuffled
+            return True
 
     def _sequence_step(self, st: ParsedStatement) -> bool:
         """Handle sequence DDL and nextval/currval statements. Returns
@@ -1388,14 +1342,11 @@ class SparkStatementExecutor:
 
         ``nextval('s')`` values are assigned in scan order — the same
         physical-order contract as POSITIONAL JOIN (COVERAGE.md).
-        Position assignment avoids the single-task global window
-        wherever possible: FROM-less statements (single row) inline the
-        literal next value; shuffle-free FROM queries get the
-        distributed per-partition-offset rank (see
-        ``_scan_order_rank_sql``); only shuffled sources keep
-        ``row_number() OVER (ORDER BY monotonically_increasing_id())``
-        (reproducible per-partition counts can't be guaranteed across
-        the probe and the real run there). Supported where surrogate
+        FROM-less statements (single row) inline the literal next
+        value; FROM queries number rows with ``SCAN_ROW_NUMBER``. A
+        shuffled source is first materialized to scratch parquet
+        (``_seq_materialize_shuffled``) so ids follow the statement's
+        ORDER BY rather than shuffle arrival order. Supported where surrogate
         keys are actually minted: CREATE TABLE AS / INSERT / plain
         SELECT, one nextval call per statement; the sequence advances
         by the statement's row count after it runs (a bounds violation
@@ -1460,7 +1411,7 @@ class SparkStatementExecutor:
             )
         base, inc = seq["next"], seq["inc"]
 
-        # pick the rank strategy on the (possibly currval-inlined) text
+        # statement shape, read on the (possibly currval-inlined) text
         sql_toks = tokenize(sql)
         depth = 0
         has_from = False
@@ -1482,8 +1433,6 @@ class SparkStatementExecutor:
                 saw_body = True
             elif depth == 0 and t.is_kw("SELECT"):
                 saw_body = True
-        rank_sql = None
-        mat_view = None
         # a FROM-less, filter-less, conflict-mode-less INSERT inserts
         # exactly one row (or raises): the post-execute sequence advance
         # is statically n=1 — skips the two full-table count() jobs the
@@ -1512,7 +1461,8 @@ class SparkStatementExecutor:
         if not has_from:
             rank_sql = "CAST(1 AS BIGINT)"  # single-row statement
         else:
-            # probe on the query part (first top-level SELECT/VALUES,
+            rank_sql = SCAN_ROW_NUMBER
+            # plan the query part (first top-level SELECT/VALUES,
             # minus any INSERT tail clauses), with nextval neutralized
             qlo = qhi = None
             depth = 0
@@ -1547,14 +1497,13 @@ class SparkStatementExecutor:
                 probe_q = self._replace_nextval_once(
                     qtext, "CAST(0 AS BIGINT)"
                 )
-                rank_sql = self._scan_order_rank_sql(probe_q)
-                if rank_sql is None:
+                if self._plan_has_exchange(probe_q):
                     # shuffled source: materialize the non-sequence
                     # columns to scratch parquet (deterministic file
-                    # order) and number the parquet scan distributedly.
-                    # Positional INSERT never reads output column
-                    # names, so unaliased expression items may be
-                    # auto-aliased into the rebuild
+                    # order) and number the parquet scan. Positional
+                    # INSERT never reads output column names, so
+                    # unaliased expression items may be auto-aliased
+                    # into the rebuild
                     prefix = "".join(
                         t.text for t in sql_toks[:qlo]
                     ).upper()
@@ -1564,22 +1513,11 @@ class SparkStatementExecutor:
                         and "BY NAME" not in prefix,
                     )
                     if mat is not None:
-                        outer_q, mat_view = mat
                         sql = (
                             "".join(t.text for t in sql_toks[:qlo])
-                            + outer_q
+                            + mat[0]
                             + "".join(t.text for t in sql_toks[qhi:])
                         )
-                        rank_sql = self._scan_order_rank_sql(
-                            f"SELECT * FROM {_bt(mat_view)}"
-                        )
-        if rank_sql is None:
-            # unrebuildable shuffled shape: serialization point,
-            # documented (COVERAGE.md)
-            rank_sql = (
-                "row_number() OVER (ORDER BY "
-                "monotonically_increasing_id())"
-            )
         if seq["cycle"]:
             span = seq["maxv"] - seq["minv"] + 1
             expr = (
@@ -1656,12 +1594,11 @@ class SparkStatementExecutor:
         non-sequence columns to scratch parquet (scan order of the
         materialization is deterministic file order — parquet part
         files are listed name-sorted in write order), then rebuild the
-        query as a scan of that table so the existing distributed
-        partition-stats numbering applies. Returns ``(outer_query_sql,
-        mat_view_name)`` with the nextval call left intact for the
-        caller's value substitution, or None when the statement shape
-        can't be safely rebuilt (the caller keeps the documented
-        single-task window fallback).
+        query as a scan of that table, numbered in file order. Returns
+        ``(outer_query_sql, mat_view_name)`` with the nextval call left
+        intact for the caller's value substitution, or None when the
+        statement shape can't be safely rebuilt (the caller then
+        numbers the shuffled source directly).
 
         Supported shape: plain SELECT list where the nextval item
         references only the call plus constants, every other item is a
@@ -2168,9 +2105,7 @@ class SparkStatementExecutor:
     def _execute_statement(self, st: ParsedStatement) -> None:
         try:
             hints, shadowed = self._statement_type_hints(st)
-            with column_type_hints(hints, shadowed), scan_stability_scope(
-                self.store.scan_registry
-            ):
+            with column_type_hints(hints, shadowed):
                 self._execute_statement_hinted(st)
         finally:
             # any non-SELECT statement may have changed the schemas it
@@ -2690,7 +2625,6 @@ class SparkStatementExecutor:
         tables are parquet-backed temp views), so Spark's strict
         DROP TABLE-vs-VIEW distinction must not leak through."""
         existed = self.spark.catalog.dropTempView(name)
-        mark_scan_unstable(name)  # forget any stability registration
         self.store.tables.pop(name, None)
         self.view_order_by.pop(name, None)
         self.primary_keys.pop(name.lower(), None)
@@ -2710,13 +2644,6 @@ class SparkStatementExecutor:
         self.spark.sql(
             f"CREATE OR REPLACE TEMPORARY VIEW {_bt(name)} AS {translate(body)}"
         )
-        # a view whose body may shuffle is not scan-order stable: a
-        # later POSITIONAL JOIN referencing it by name must take the
-        # rebalance-CTE numbering, not the two-scan wrap
-        if _scan_stable_primary("(" + body + ")"):
-            mark_scan_stable(name)
-        else:
-            mark_scan_unstable(name)
         order_clause = _terminal_order_by(body)
         if order_clause:
             self.view_order_by[name] = order_clause
@@ -4944,10 +4871,6 @@ def _parse_drop(sql: str) -> Optional[tuple[str, bool]]:
     tok = code[i][1]
     name = unquote_name(tok) if tok.kind != "string" else tok.text[1:-1]
     return name, if_exists
-
-
-def _delete_where(sql: str) -> Optional[str]:
-    return _delete_using_where(sql)[1]
 
 
 def _delete_using_where(sql: str) -> tuple[Optional[str], Optional[str]]:

@@ -121,15 +121,6 @@ class ExecutionStats:
     fastest_query: float
     slowest_query: float
 
-    @property
-    def average_query_time(self) -> float:
-        return sum(self.query_times) / len(self.query_times) if self.query_times else 0.0
-
-    @property
-    def average_batch_time(self) -> float:
-        return sum(self.batch_times) / len(self.batch_times) if self.batch_times else 0.0
-
-
 def iterate_blocks(blocks: Sequence[ConfigBlock]) -> Iterable[tuple[ConfigBlock, Code, str, int]]:
     """Yield (block, code, script, index) in config order
     (reference src/sql_parser.py:130-144)."""

@@ -196,6 +196,11 @@ def split_statements(sql: str) -> List[str]:
     return statements
 
 
+def _bt(name: str) -> str:
+    """Backtick-quote a (possibly dotted / dashed) logical name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def unquote_name(tok: Token) -> str:
     """Canonical table name for a name-position token.
 

@@ -107,13 +107,3 @@ def build_spark_session(
 
     register_text_udfs(spark)
     return spark
-
-
-def get_test_session(threads: int = 4) -> SparkSession:
-    """Small-footprint session for unit tests."""
-    return build_spark_session(
-        app_name="cdts-tests",
-        threads=threads,
-        shuffle_partitions=max(8, threads),
-        extra_conf={"spark.driver.memory": "2g"},
-    )

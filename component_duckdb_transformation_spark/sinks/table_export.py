@@ -42,6 +42,7 @@ from pyspark.sql import types as T
 
 from ..configuration import OutputTable
 from ..exceptions import UserException
+from ..plans.sql_tokens import _bt, tokenize
 
 LOG = logging.getLogger(__name__)
 
@@ -117,8 +118,6 @@ def _strip_order_qualifiers(clause: str, columns: list[str]) -> str:
     aliases (``ORDER BY s.id``); at export time only the view's output
     columns exist, so qualifiers whose final part is an output column are
     dropped."""
-    from ..plans.sql_tokens import tokenize
-
     lowered = {c.lower() for c in columns}
     tokens = tokenize(clause)
     out: list[str] = []
@@ -154,12 +153,11 @@ def export_table(
     sliced: bool = False,
 ) -> dict:
     """Export one output-mapping entry; returns the manifest dict."""
-    bt = "`" + name.replace("`", "``") + "`"
     try:
-        df = spark.table(bt)
+        df = spark.table(_bt(name))
         if order_by:
             clause = _strip_order_qualifiers(order_by, df.columns)
-            df = spark.sql(f"SELECT * FROM {bt} ORDER BY {clause}")
+            df = spark.sql(f"SELECT * FROM {_bt(name)} ORDER BY {clause}")
     except Exception as exc:
         raise UserException(f"Error exporting table {name}: {exc}") from exc
 

@@ -18,7 +18,6 @@ Spark-first mapping (SURVEY §2.A A1-A4):
 
 from __future__ import annotations
 
-import hashlib
 import logging
 import os
 from dataclasses import dataclass
@@ -29,6 +28,7 @@ from pyspark.sql import types as T
 
 from ..configuration import InputTable
 from ..exceptions import UserException
+from ..plans.sql_tokens import _bt
 from .parquet_io import read_parquet
 
 LOG = logging.getLogger(__name__)
@@ -52,24 +52,15 @@ class CreatedTable:
     is_view: bool
 
 
-def _bt(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
-def register_view(spark: SparkSession, df: DataFrame, name: str) -> None:
+def register_view(df: DataFrame, name: str) -> None:
     """Bind a DataFrame under a logical name that may contain dots or
     dashes (DuckDB string-literal table names, e.g. ``'days.csv'``).
 
     Spark's ``createOrReplaceTempView`` parses its argument as a
-    multipart identifier, so the df is registered under a safe alias and
-    re-exposed via SQL with backticks. The alias carries a digest of the
-    exact name, so names that sanitize alike (``a.b``, ``a_b``) or differ
-    only in case get distinct aliases.
+    multipart identifier, so the name is passed backtick-quoted: one
+    view, named exactly ``name``.
     """
-    digest = hashlib.sha1(name.encode("utf-8")).hexdigest()
-    safe = "_import_" + "".join(c if c.isalnum() else "_" for c in name) + "_" + digest
-    df.createOrReplaceTempView(safe)
-    spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {_bt(name)} AS SELECT * FROM {safe}")
+    df.createOrReplaceTempView(_bt(name))
 
 
 def _manifest_schema(table: InputTable) -> T.StructType | None:
@@ -112,7 +103,7 @@ def _from_parquet(spark: SparkSession, table: InputTable, path: str) -> CreatedT
                 for c in df.columns
             ]
         )
-    register_view(spark, df, table.destination)
+    register_view(df, table.destination)
     return CreatedTable(name=table.destination, is_view=True)
 
 
@@ -152,5 +143,5 @@ def _from_csv(
     elif names and schema is not None and not has_header:
         # schema carries the names already (built from manifest columns)
         pass
-    register_view(spark, df, table.destination)
+    register_view(df, table.destination)
     return CreatedTable(name=table.destination, is_view=True)

@@ -289,16 +289,3 @@ class SQLValidator:
         if len(errors) > 10:
             summary += f"\n... and {len(errors) - 10} more errors"
         return ValidationResult(summary, MessageType.DANGER)
-
-    def validate_single_query(self, sql: str, qname: str = "query") -> ValidationResult:
-        parse_err = self._parse_ok(sql)
-        if parse_err:
-            return ValidationResult(f"❌ Query '{qname}': {parse_err}", MessageType.DANGER)
-        lints = check_common_sql_errors(sql)
-        if lints:
-            return ValidationResult(
-                f"❌ Query '{qname}': {'; '.join(lints)}", MessageType.DANGER
-            )
-        return ValidationResult(
-            f"✅ Query '{qname}': SQL is syntactically valid", MessageType.SUCCESS
-        )

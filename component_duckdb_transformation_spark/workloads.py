@@ -28,7 +28,7 @@ from typing import Callable, Dict, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.dialect import expand_union_by_name, mark_scan_stable, translate
+from .functions.dialect import expand_union_by_name, translate
 from .operators import dedup, multimodal, sampling, similarity, temporal, text_analysis
 from .operators.asof import asof_join
 from .sources.parquet_io import read_parquet
@@ -78,10 +78,6 @@ def register_tables(spark: SparkSession, sf_dir: str) -> None:
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     for t in TABLES:
         read_parquet(spark, f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
-        # plain parquet temp views are file-split scan-order stable:
-        # opt them into the zero-shuffle POSITIONAL JOIN numbering
-        # (unknown names now default to the safe rebalance-CTE wrap)
-        mark_scan_stable(t)
     # similarity UDFs (jaro/damerau) must resolve on a harness-built
     # vanilla session too, not only the repo's factory sessions
     from .functions.text_udfs import register_text_udfs

@@ -632,3 +632,57 @@ def test_pool_threads_carry_callers_job_group(spark, tmp_path, monkeypatch):
     # at least the CSV schema inference at import and one write job per
     # export ran under the group itself
     assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 4
+
+
+def test_dotted_names_ctas_insert_rename_export(spark, tmp_path):
+    """Dotted table names bind as one quoted view each (no alias view):
+    an input, a CTAS over it, an INSERT, a RENAME and the export all go
+    through the exact logical names."""
+    data = tmp_path / "data"
+    in_tables = data / "in" / "tables"
+    _write(str(in_tables / "days.csv"), DAYS_CSV)
+    _write(
+        str(in_tables / "days.csv.manifest"),
+        json.dumps({"id": "in.c-main.days", "incremental": False}),
+    )
+    config = {
+        "parameters": {
+            "threads": 2,
+            "blocks": [
+                {
+                    "name": "B",
+                    "codes": [
+                        {
+                            "name": "C",
+                            "script": [
+                                "CREATE TABLE 'res.v1' AS SELECT id, name "
+                                "FROM 'in.c-main.days' WHERE id::INT <= 2;",
+                                "INSERT INTO 'res.v1' VALUES ('9', 'Extra');",
+                                'ALTER TABLE "res.v1" RENAME TO "res.final";',
+                            ],
+                        }
+                    ],
+                }
+            ],
+        },
+        "storage": {
+            "input": {
+                "tables": [
+                    {"source": "in.c-main.days", "destination": "in.c-main.days"}
+                ]
+            },
+            "output": {
+                "tables": [{"source": "res.final", "destination": "out.c-out.res"}]
+            },
+        },
+    }
+    _write(str(data / "config.json"), json.dumps(config))
+    Component(data_dir=str(data), spark=spark).run()
+
+    rows = _read_rows(os.path.join(str(data), "out", "tables", "res.final"))
+    assert rows[0] == ["id", "name"]
+    assert sorted(rows[1:]) == [["1", "Monday"], ["2", "Tuesday"], ["9", "Extra"]]
+    views = {t.name for t in spark.catalog.listTables()}
+    assert {"in.c-main.days", "res.final"} <= views
+    assert "res.v1" not in views
+    assert not any(v.startswith("_import_") for v in views)

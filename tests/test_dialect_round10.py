@@ -407,61 +407,6 @@ def test_enum_binding_survives_ctas(spark):
     assert spark.table("p2_r10").count() == 4
 
 
-# ---- session-scoped scan-stability registry (r9 item 5) -------------
-
-
-def test_scan_registry_scoped_per_session():
-    """Two engines in one process must not cross-contaminate scan-
-    stability marks: a name marked stable in one store's registry is
-    unknown (-> safe rebalance path) inside another's scope."""
-    from component_duckdb_transformation_spark.functions.dialect import (
-        _scan_stable_primary,
-        mark_scan_stable,
-        mark_scan_unstable,
-        scan_stability_scope,
-    )
-
-    reg_a: set = set()
-    reg_b: set = set()
-    mark_scan_stable("shared_t_r10", reg_a)
-    with scan_stability_scope(reg_a):
-        assert _scan_stable_primary("shared_t_r10")
-    with scan_stability_scope(reg_b):
-        assert not _scan_stable_primary("shared_t_r10")
-    # the process-default registry is untouched by scoped marks
-    assert not _scan_stable_primary("shared_t_r10")
-    # default-registry marks still work for raw callers
-    mark_scan_stable("shared_t_r10")
-    try:
-        assert _scan_stable_primary("shared_t_r10")
-    finally:
-        mark_scan_unstable("shared_t_r10")
-
-
-def test_table_store_marks_own_registry(spark):
-    import tempfile
-
-    from component_duckdb_transformation_spark.functions.dialect import (
-        _scan_stable_primary,
-        scan_stability_scope,
-    )
-    from component_duckdb_transformation_spark.plans.executor import (
-        TableStore,
-    )
-
-    store_a = TableStore(spark, tempfile.mkdtemp())
-    store_b = TableStore(spark, tempfile.mkdtemp())
-    store_a.create_table(
-        "reg_t_r10", spark.range(3).selectExpr("id AS a")
-    )
-    with scan_stability_scope(store_a.scan_registry):
-        assert _scan_stable_primary("reg_t_r10")
-    with scan_stability_scope(store_b.scan_registry):
-        assert not _scan_stable_primary("reg_t_r10")
-    # the global default registry never saw the store's mark
-    assert not _scan_stable_primary("reg_t_r10")
-
-
 # ---- exact float-list stringification through concat (r9 item 6) ----
 
 

@@ -1,10 +1,7 @@
-"""Round-8 hardening tests: POSITIONAL JOIN over shuffled sides (the
-two-scan numbering is only layout-stable for FileScan/LocalTableScan
-primaries — a side containing a GROUP BY/JOIN/aggregate must route to
-the rebalance-CTE wrap, which Spark's ReplaceCTERefWithRepartition rule
-evaluates consistently across both references), plus the round-8
-dialect divergence closers. Reference behavior: DuckDB positional join
-semantics (reference delegates all SQL at
+"""Round-8 hardening tests: POSITIONAL JOIN over shuffled sides (a side
+containing a GROUP BY/JOIN/aggregate must still pair every row exactly
+once), plus the round-8 dialect divergence closers. Reference behavior:
+DuckDB positional join semantics (reference delegates all SQL at
 src/query_orchestrator.py:351)."""
 
 from __future__ import annotations
@@ -15,60 +12,13 @@ import duckdb
 import pytest
 
 from component_duckdb_transformation_spark.functions.dialect import (
-    _scan_stable_primary,
-    mark_scan_stable,
-    mark_scan_unstable,
     translate,
 )
 
 
-def test_scan_stable_classifier():
-    # r9: bare names are stable only when REGISTERED (opt-in whitelist;
-    # unknown names take the always-safe CTE wrap)
-    assert not _scan_stable_primary("nation_unregistered")
-    mark_scan_stable("nation")
-    mark_scan_stable("region")
-    mark_scan_stable("`quoted name`")
-    assert _scan_stable_primary("nation")
-    assert _scan_stable_primary("`quoted name`")
-    mark_scan_unstable("shuffly_view")
-    try:
-        assert not _scan_stable_primary("shuffly_view")
-        assert not _scan_stable_primary("(SELECT a FROM shuffly_view)")
-        mark_scan_stable("shuffly_view")
-        assert _scan_stable_primary("shuffly_view")
-    finally:
-        mark_scan_unstable("shuffly_view")
-    # projection/filter-only subqueries over REGISTERED names: stable
-    assert _scan_stable_primary("(SELECT r_name FROM region)")
-    assert _scan_stable_primary(
-        "(SELECT r_name, upper(r_comment) FROM region WHERE r_regionkey > 1)"
-    )
-    # ...but not over unregistered names
-    assert not _scan_stable_primary("(SELECT a FROM never_marked_t)")
-    # FROM VALUES needs no registration (LocalRelation)
-    assert _scan_stable_primary("(SELECT * FROM VALUES (1),(2) t(v))")
-    # anything that can plan an Exchange (or is row-nondeterministic)
-    for src in (
-        "(SELECT k, sum(v) FROM t GROUP BY k)",
-        "(SELECT count(*) FROM t)",
-        "(SELECT max(a) FROM t)",
-        "(SELECT a FROM t ORDER BY a)",
-        "(SELECT a FROM t JOIN u USING (id))",
-        "(SELECT DISTINCT a FROM t)",
-        "(SELECT a, row_number() OVER (ORDER BY a) FROM t)",
-        "(SELECT a FROM t LIMIT 5)",
-        "(SELECT a FROM t UNION SELECT a FROM u)",
-        "(SELECT a, rand() AS r FROM t)",
-    ):
-        assert not _scan_stable_primary(src), src
-
-
 def test_positional_join_shuffled_side_no_row_loss(spark):
     """A GROUP BY side must pair every row exactly once (no silent
-    drops from divergent partition layouts between the data pass and
-    the count pass) — the exact hazard of the two-scan wrap on a
-    shuffled source."""
+    drops or duplicates from a shuffled source)."""
     spark.range(0, 50000, 1, 16).selectExpr(
         "id % 777 AS k", "id AS v"
     ).createOrReplaceTempView("pos_big")
@@ -81,42 +31,14 @@ def test_positional_join_shuffled_side_no_row_loss(spark):
         "POSITIONAL JOIN pos_small r"
     )
     t = translate(sql)
-    assert "__pt_l" in t  # the CTE wrap was chosen for the left side
     for _ in range(3):
         row = spark.sql(t).collect()[0]
         assert (row.n, row.nk, row.nr) == (777, 777, 777), row
 
 
-def test_positional_join_shuffled_side_plan(spark):
-    """Shuffled side: plan must show Spark's consistency rebalance
-    (ReplaceCTERefWithRepartition) and still no global row_number and
-    no SinglePartition exchange of data rows."""
-    spark.range(0, 5000, 1, 8).selectExpr(
-        "id % 97 AS k", "id AS v"
-    ).createOrReplaceTempView("pos_big2")
-    spark.range(0, 97, 1, 2).selectExpr("id AS rn").createOrReplaceTempView(
-        "pos_small2"
-    )
-    t = translate(
-        "SELECT g.k, r.rn FROM "
-        "(SELECT k, sum(v) AS sv FROM pos_big2 GROUP BY k) g "
-        "POSITIONAL JOIN pos_small2 r"
-    )
-    plan = spark.sql(t)._jdf.queryExecution().executedPlan().toString()
-    assert "REBALANCE" in plan
-    assert "row_number" not in plan
-    for m in re.finditer(r"\(\d+\) Exchange[^\n]*\n((?:[^\n]*\n){0,3})", plan):
-        blk = m.group(0)
-        if "SinglePartition" in blk:
-            assert "__pid" in blk, (
-                "SinglePartition exchange over non-stats rows:\n" + blk
-            )
-
-
 def test_positional_join_values_and_projection_sides(spark):
-    """Stable sides (names over VALUES, projection subqueries) keep
-    matching DuckDB exactly, including NULL padding of the shorter
-    side."""
+    """Names over VALUES and projection subqueries match DuckDB
+    exactly, including NULL padding of the shorter side."""
     con = duckdb.connect()
     con.execute(
         "CREATE TABLE pa AS SELECT * FROM (VALUES (1,'x'),(2,'y'),(3,'z')) "
@@ -131,22 +53,12 @@ def test_positional_join_values_and_projection_sides(spark):
         "CREATE OR REPLACE TEMP VIEW pb AS "
         "SELECT * FROM VALUES (10),(20) t(v)"
     )
-    # r9: scan stability is OPT-IN (unknown names default to the safe
-    # CTE wrap); raw-registered stable views must declare themselves —
-    # TableStore/_create_view and the workload harness do this
-    from component_duckdb_transformation_spark.functions.dialect import (
-        mark_scan_stable,
-    )
-
-    mark_scan_stable("pa")
-    mark_scan_stable("pb")
     for sql in (
         "SELECT * FROM pa POSITIONAL JOIN pb",
         "SELECT * FROM (SELECT id FROM pa WHERE id > 1) l POSITIONAL JOIN pb",
         "SELECT * FROM pb POSITIONAL JOIN pa",
     ):
         t = translate(sql)
-        assert "__pt_l" not in t and "__pt_r" not in t, (sql, t)
         key = lambda r: tuple((x is None, x) for x in r)  # noqa: E731
         want = sorted(
             (tuple(r) for r in con.execute(sql).fetchall()), key=key

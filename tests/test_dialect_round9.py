@@ -352,24 +352,10 @@ def test_format_single_binding_and_null_guard(spark):
     assert out is not None and out.isdigit()
 
 
-def test_positional_join_unknown_view_defaults_to_safe_wrap(spark):
-    # a temp view registered OUTSIDE TableStore over a shuffled
-    # DataFrame must NOT take the zero-shuffle two-scan numbering
-    # (r8 defaulted unknown bare names to scan-stable; now stability
-    # is opt-in via mark_scan_stable)
-    from component_duckdb_transformation_spark.functions.dialect import (
-        _scan_stable_primary,
-        mark_scan_stable,
-        mark_scan_unstable,
-    )
-
-    assert not _scan_stable_primary("some_unregistered_view_r9")
-    mark_scan_stable("some_unregistered_view_r9")
-    assert _scan_stable_primary("some_unregistered_view_r9")
-    mark_scan_unstable("some_unregistered_view_r9")
-    assert not _scan_stable_primary("some_unregistered_view_r9")
-    # end-to-end: a shuffled unregistered view still pairs rows
-    # 1:1 with no loss through POSITIONAL JOIN
+def test_positional_join_shuffled_temp_view(spark):
+    # a temp view registered outside TableStore over a shuffled
+    # DataFrame still pairs rows 1:1 with no loss through POSITIONAL
+    # JOIN
     spark.range(0, 100).selectExpr(
         "id", "CAST(id % 7 AS INT) AS g"
     ).groupBy("g").count().createOrReplaceTempView("pos_unreg_r9")

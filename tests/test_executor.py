@@ -1075,8 +1075,7 @@ def test_star_replace_preserves_column_order(spark, table_store):
 def test_sequences_shuffled_source_distributed(spark, table_store):
     """nextval over a shuffled source (GROUP BY / JOIN): the executor
     materializes the non-sequence columns to scratch parquet and
-    numbers the parquet scan with the distributed partition-stats rank
-    — no single-task row_number window. Values are still a dense
+    numbers the parquet scan in file order. Values are a dense
     1..N · inc progression and the sequence advances correctly."""
     from component_duckdb_transformation_spark.plans.executor import (
         SparkStatementExecutor,
@@ -1118,8 +1117,8 @@ def test_sequences_shuffled_source_distributed(spark, table_store):
         "SELECT count(DISTINCT id) d FROM sh_tgt"
     ).collect()[0].d == 53
     assert spark.sql("SELECT count(*) c FROM returning").collect()[0].c == 53
-    # unrebuildable shape (unaliased expression item): still correct
-    # via the documented single-task fallback
+    # unrebuildable shape (unaliased expression item): still correct,
+    # numbered directly over the shuffled source
     mat_before = ex._seq_mat_counter
     _run(ex, "CREATE SEQUENCE sh_fb")
     _run(ex, "CREATE TABLE sh_fb_out AS SELECT nextval('sh_fb') AS id, "
@@ -1129,6 +1128,33 @@ def test_sequences_shuffled_source_distributed(spark, table_store):
         "SELECT count(DISTINCT id) d FROM sh_fb_out"
     ).collect()[0].d
     assert n == 53
+
+
+def test_failed_ctas_replace_keeps_previous_version(spark, table_store):
+    """A CREATE OR REPLACE TABLE that fails at runtime leaves the table
+    as it was (DuckDB: [1] stays), so a later INSERT appends to the old
+    version — it must not land in the failed version's directory."""
+    import os
+
+    import pytest
+
+    from component_duckdb_transformation_spark.plans.executor import (
+        SparkStatementExecutor,
+    )
+
+    ex = SparkStatementExecutor(spark, table_store)
+    _run(ex, "CREATE TABLE fc AS SELECT 1 AS a")
+    with pytest.raises(Exception):
+        _run(ex, "CREATE OR REPLACE TABLE fc AS SELECT CAST('x' AS INTEGER) AS a")
+    _run(ex, "INSERT INTO fc VALUES (2)")
+    assert sorted(r.a for r in spark.table("fc").collect()) == [1, 2]
+    # the failed version's staged directory is gone
+    table_dir = os.path.dirname(table_store.tables["fc"].path)
+    assert sorted(os.listdir(table_dir)) == ["v1"]
+    # a failed CTAS of a NEW name publishes nothing
+    with pytest.raises(Exception):
+        _run(ex, "CREATE TABLE fc_new AS SELECT CAST('x' AS INTEGER) AS a")
+    assert "fc_new" not in table_store.tables
 
 
 def test_seq_materialize_shuffled_shapes(spark, table_store):
@@ -1316,7 +1342,7 @@ def test_sequence_rebuild_expression_items_and_ordinals(spark, tmp_path):
     assert [g[2] for g in by_v] == sorted(
         (g[2] for g in by_v), reverse=True
     )
-    # distributed rebuild actually ran (scratch views registered)
+    # the scratch-parquet rebuild actually ran (views registered)
     mats = [
         t.name
         for t in spark.catalog.listTables()

@@ -54,8 +54,8 @@ def test_nullable_metadata_string_false():
 def test_register_view_aliases_do_not_collide(spark):
     # both names sanitize to the same identifier; each view must still
     # read its own DataFrame
-    register_view(spark, spark.createDataFrame([(1,)], "v INT"), "alias_probe.b")
-    register_view(spark, spark.createDataFrame([(2,)], "v INT"), "alias_probe_b")
+    register_view(spark.createDataFrame([(1,)], "v INT"), "alias_probe.b")
+    register_view(spark.createDataFrame([(2,)], "v INT"), "alias_probe_b")
     assert spark.sql("SELECT v FROM `alias_probe.b`").collect()[0].v == 1
     assert spark.sql("SELECT v FROM `alias_probe_b`").collect()[0].v == 2
 

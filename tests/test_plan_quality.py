@@ -198,24 +198,17 @@ def test_q61_global_mad_no_pandas_funnel(spark):
     assert "FlatMapGroupsInPandas" not in plan
 
 
-def test_q59_positional_join_distributed(spark):
-    """POSITIONAL JOIN must not funnel DATA rows through a single
-    partition: scan-order positions come from per-partition counts
-    (the only SinglePartition exchanges carry the (__pid, __cnt)
-    stats rows) plus the in-partition offset — no global row_number
-    window over the data."""
+def test_q59_positional_join_single_pass(spark):
+    """POSITIONAL JOIN numbers each side in one pass: one scan per side
+    (no second pass whose layout must agree with the first) and no
+    per-partition count stats."""
     import re
 
     plan = _plan(spark, "q59_positional_join_comprehension")
-    assert "row_number" not in plan
-    for m in re.finditer(
-        r"\(\d+\) Exchange[^\n]*\n((?:[^\n]*\n){0,3})", plan
-    ):
-        blk = m.group(0)
-        if "SinglePartition" in blk:
-            assert "__pid" in blk, (
-                "SinglePartition exchange over non-stats rows:\n" + blk
-            )
+    assert "row_number" in plan
+    assert "__pid" not in plan
+    scans = re.findall(r"\(\d+\) Scan parquet\s*(\S*)", plan)
+    assert len(scans) == 2, scans
 
 
 def test_grouped_mad_two_phase(spark):

@@ -282,17 +282,13 @@ class Component:
         mappings = {m.source: m for m in self.output_mapping}
 
         def export(mapping: OutputTable) -> None:
-            order_by = None
-            if self.executor is not None:
-                order_by = self.executor.view_order_by.get(mapping.source)
-            if order_by is None:
-                order_by = store.order_by_clause(mapping.source)
+            state = store.record(mapping.source)
             export_table(
                 self.spark,
                 mapping.source,
                 mapping,
                 out_dir,
-                order_by=order_by,
+                order_by=state.order_by if state else None,
                 sliced=self.params.sliced_output,
             )
 

@@ -113,9 +113,13 @@ def _as_read_schema(schema):
 
 @dataclass
 class TableState:
+    """One catalog record per script-created relation, like a DuckDB
+    catalog entry: its physical state (views have no ``path``) plus the
+    metadata CREATE declared or inherited."""
+
     name: str
     version: int = 0
-    path: Optional[str] = None
+    path: Optional[str] = None  # None for a view
     order_by: Optional[str] = None  # terminal ORDER BY clause text, for export
     # True for tables fed by streaming ingest: data lives in
     # ingest_batch=<id> partition dirs (idempotent micro-batch commits)
@@ -130,6 +134,59 @@ class TableState:
     # read, so per-statement re-resolutions never pay a footer-reading
     # schema-inference job (r14 driver-floor work, guide §1.2)
     schema: object = None
+    # PRIMARY KEY / UNIQUE and NOT NULL columns (lowercase) and CHECK
+    # expressions: DuckDB constraint semantics on INSERT and UPDATE
+    primary_key: List[str] = field(default_factory=list)
+    not_null: List[str] = field(default_factory=list)
+    checks: List[str] = field(default_factory=list)
+    # ENUM columns, lowercase column -> enum type name: ordinal
+    # comparison/sort semantics (DuckDB orders enums by declaration
+    # position, not lexically)
+    enum_columns: Dict[str, str] = field(default_factory=dict)
+    # TIME columns (lowercase), stored as epoch-day TIMESTAMP (Spark has
+    # no TIME); published as the 'time' pseudo-hint so the 24 h wrap
+    # holds when a value reaches arithmetic through the column
+    time_columns: set = field(default_factory=set)
+
+
+def _without_column(
+    state: TableState, col: str, to: Optional[str] = None
+) -> dict:
+    """The constraint and type metadata after column ``col`` is
+    renamed to ``to`` or, with no ``to``, dropped: NOT NULL, key,
+    enum and TIME markings follow the column, and a CHECK on a
+    dropped column goes with it (as in DuckDB)."""
+    cl = col.lower()
+
+    def is_col(t: Token) -> bool:
+        return (
+            t.kind in ("word", "bident", "qident")
+            and t.text.strip('`"').lower() == cl
+        )
+
+    def renamed(cols):
+        return [to.lower() if c == cl else c for c in cols if to or c != cl]
+
+    if to:
+        checks = [
+            "".join(_bt(to) if is_col(t) else t.text for t in tokenize(e))
+            for e in state.checks
+        ]
+    else:
+        checks = [
+            e for e in state.checks if not any(map(is_col, tokenize(e)))
+        ]
+    return dict(
+        primary_key=renamed(state.primary_key),
+        not_null=renamed(state.not_null),
+        checks=checks,
+        enum_columns={
+            (to.lower() if c == cl else c): e
+            for c, e in state.enum_columns.items()
+            if to or c != cl
+        },
+        time_columns=set(renamed(state.time_columns)),
+    )
 
 
 # partition-style directory key for streaming micro-batch commits;
@@ -138,12 +195,15 @@ _BATCH_COL = "ingest_batch"
 
 
 class TableStore:
-    """Materialized-table catalog over a Parquet warehouse directory.
+    """Catalog and Parquet warehouse of the relations a script creates.
 
     Replaces the reference's persistent ``.duck.db`` working database
-    (reference src/component.py:58-66): every CREATE TABLE lands here,
-    versioned per mutation, always exposed as a temp view under its
-    logical name.
+    (reference src/component.py:58-66): one :class:`TableState` record
+    per table or view, keyed case-insensitively like DuckDB's catalog.
+    Every CREATE TABLE lands here, versioned per mutation, always
+    exposed as a temp view under its logical name; a view's record has
+    no directory. Records are published, moved and removed whole, under
+    the store lock.
     """
 
     def __init__(self, spark: SparkSession, warehouse_dir: str):
@@ -158,6 +218,28 @@ class TableStore:
         # write fully in parallel
         self._write_locks: Dict[str, threading.Lock] = {}
         os.makedirs(warehouse_dir, exist_ok=True)
+
+    def record(self, name: str) -> Optional[TableState]:
+        return self.tables.get(name.lower())
+
+    def table(self, name: str) -> Optional[TableState]:
+        """``name``'s record when it is a table, not a view."""
+        state = self.record(name)
+        return state if state is not None and state.path is not None else None
+
+    def _claim(self, name: str, view: bool) -> Optional[TableState]:
+        """The record a CREATE of ``name`` replaces (caller holds the
+        lock). Like DuckDB, a table never replaces a view, nor a view a
+        table."""
+        state = self.tables.get(name.lower())
+        if state is None or (state.path is None) == view:
+            return state
+        if view:
+            raise UserException(
+                f"Catalog Error: Existing object {name} is of type Table, "
+                "trying to replace with type View"
+            )
+        raise UserException(f"Catalog Error: {name} is a view, not a table")
 
     def _write_lock(self, name: str) -> threading.Lock:
         with self._lock:
@@ -199,36 +281,62 @@ class TableStore:
         df: DataFrame,
         order_by: str | None = None,
         empty: bool = False,
+        **catalog,
     ) -> None:
-        self._commit_version(name, df, order_by=order_by, empty=empty)
+        """CREATE [OR REPLACE] TABLE: ``df`` becomes the first version
+        of a fresh record whose order, constraint and type metadata
+        (``catalog``: :class:`TableState` fields) replace the old."""
+        fresh = TableState(name=name, order_by=order_by, empty=empty, **catalog)
+        self._commit_version(name, df, fresh)
 
-    def _commit_version(self, name: str, df: DataFrame, **fields) -> None:
-        """Write ``df`` as the next version of ``name``, then publish it
-        (path, schema and ``fields``) under the lock and re-bind the
-        view. A failed write publishes nothing — the table keeps its
-        previous version, as in DuckDB — and its staged directory is
-        removed."""
+    def create_view(self, name: str, sql: str, **catalog) -> None:
+        """CREATE [OR REPLACE] VIEW: bind ``name`` over the translated
+        ``sql`` and publish its record (no path; ``catalog`` fields)."""
         with self._lock:
-            state = self.tables.get(name) or TableState(name=name)
-            state.version += 1
-            path = os.path.join(self._safe_dir(name), f"v{state.version}")
+            self._claim(name, view=True)
+        self.spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {_bt(name)} AS {sql}")
+        with self._lock:
+            self.tables[name.lower()] = TableState(name=name, **catalog)
+
+    def _commit_version(
+        self, name: str, df: DataFrame, fresh: TableState = None, **fields
+    ) -> None:
+        """Write ``df`` as the next version of ``name``, then publish it
+        under the lock — as the ``fresh`` record of a CREATE, or as the
+        current record with ``fields`` set — and re-bind the view. A
+        failed write publishes nothing — the table keeps its previous
+        version, as in DuckDB — and its staged directory is removed."""
+        with self._lock:
+            state = self._claim(name, view=False) if fresh else self.record(name)
+            version = (state.version if state else 0) + 1
+            path = os.path.join(self._safe_dir(name), f"v{version}")
+            # a renamed table keeps its directory: a new table under
+            # the old name must not write over it
+            live = {s.path for s in self.tables.values()}
+            while path in live:
+                version += 1
+                path = os.path.join(self._safe_dir(name), f"v{version}")
+            if state is not None:
+                state.version = version
         try:
             df.write.mode("overwrite").parquet(path)
         except BaseException:
             shutil.rmtree(path, ignore_errors=True)
             raise
         with self._lock:
+            state = fresh or state
             for key, value in fields.items():
                 setattr(state, key, value)
+            state.version = version
             state.path = path
             state.schema = _as_read_schema(df.schema)
-            self.tables[name] = state
+            self.tables[name.lower()] = state
         self._bind_view(state)
 
     def insert_into(
         self, name: str, df: DataFrame, columns: Optional[List[str]] = None
     ) -> None:
-        state = self.tables.get(name)
+        state = self.table(name)
         if state is None:
             raise UserException(f"INSERT INTO unknown table '{name}'")
         target = self.spark.table(_bt(name))
@@ -265,12 +373,12 @@ class TableStore:
         one lifecycle: reuse both or neither). First batch creates the
         table."""
         with self._lock:
-            state = self.tables.get(name)
+            state = self.record(name)
             created = state is None
             if created:
                 state = TableState(name=name, version=1, stream=True)
                 state.path = os.path.join(self._safe_dir(name), "stream_v1")
-                self.tables[name] = state
+                self.tables[name.lower()] = state
             elif not state.stream:
                 raise UserException(
                     f"stream ingest into non-stream table '{name}'"
@@ -286,27 +394,37 @@ class TableStore:
             # view re-bind was redundant (r13-opt)
             self._bind_view(state)
 
-    def rewrite(self, name: str, df: DataFrame) -> None:
-        """Copy-on-write: write a new version, re-bind the view."""
-        state = self.tables.get(name)
-        if state is None:
+    def rewrite(self, name: str, df: DataFrame, **catalog) -> None:
+        """Copy-on-write: write a new version, re-bind the view; a column
+        ALTER passes the record's new metadata as ``catalog``."""
+        if self.table(name) is None:
             raise UserException(f"UPDATE/DELETE on unknown table '{name}'")
-        self._commit_version(name, df, empty=False)
-
-    def order_by_clause(self, name: str) -> Optional[str]:
-        state = self.tables.get(name)
-        return state.order_by if state else None
+        self._commit_version(name, df, empty=False, **catalog)
 
     def rename_table(self, old: str, new: str) -> None:
-        """Metadata-only rename: same parquet files, new view name."""
+        """Metadata-only rename: the whole record moves to the new name
+        (same parquet files, new view name)."""
         with self._lock:
-            state = self.tables.pop(old, None)
+            state = self.table(old)
             if state is None:
                 raise UserException(f"RENAME: unknown table '{old}'")
+            if new.lower() != old.lower() and new.lower() in self.tables:
+                raise UserException(
+                    f'Catalog Error: Could not rename "{old}" to "{new}": '
+                    "another entry with this name already exists!"
+                )
+            del self.tables[old.lower()]
             state.name = new
-            self.tables[new] = state
+            self.tables[new.lower()] = state
         self.spark.catalog.dropTempView(old)
         self._bind_view(state)
+
+    def drop(self, name: str) -> bool:
+        """DROP TABLE/VIEW: remove the record and the temp view; False
+        when neither existed."""
+        with self._lock:
+            state = self.tables.pop(name.lower(), None)
+        return self.spark.catalog.dropTempView(name) or state is not None
 
 
 def _align_by_position(df: DataFrame, target: DataFrame) -> DataFrame:
@@ -364,18 +482,6 @@ class SparkStatementExecutor:
     def __init__(self, spark: SparkSession, store: TableStore):
         self.spark = spark
         self.store = store
-        # view ORDER BY clauses for export-time re-sort (SURVEY §7.2)
-        self.view_order_by: Dict[str, str] = {}
-        # PRIMARY KEY / UNIQUE columns from bare-DDL CREATE TABLE,
-        # lowercase table name -> lowercase key columns. Drives DuckDB
-        # constraint semantics on INSERT (duplicate-key errors,
-        # OR REPLACE / OR IGNORE / ON CONFLICT)
-        self.primary_keys: Dict[str, List[str]] = {}
-        # NOT NULL columns and CHECK expressions (bare-DDL tables);
-        # enforced at INSERT time and re-validated on UPDATE for the
-        # assigned columns (_validate_update_constraints)
-        self.not_null: Dict[str, List[str]] = {}
-        self.checks: Dict[str, List[str]] = {}
         # scalar macros: name -> (params, body text), inlined at use
         self._macros: Dict[str, tuple[List[str], str]] = {}
         # temp views already bound (and fresh) for file-reading table
@@ -391,18 +497,9 @@ class SparkStatementExecutor:
         # scratch parquet materializations for nextval over shuffled
         # sources (_seq_materialize_shuffled)
         self._seq_mat_counter = 0
-        # ENUM types: lowercase name -> ordered value list
+        # ENUM types: lowercase name -> ordered value list (the columns
+        # declared or inherited with one live on their table's record)
         self._enum_types: Dict[str, List[str]] = {}
-        # DDL-declared ENUM columns: table -> {col -> enum name}, for
-        # ordinal comparison/sort semantics (DuckDB orders enums by
-        # declaration position, not lexically)
-        self._enum_columns: Dict[str, Dict[str, str]] = {}
-        # DDL-declared TIME columns: table -> {col}; stored as
-        # epoch-day TIMESTAMP (Spark has no TIME), the declaration is
-        # what keeps the 24 h modular-arithmetic wrap working when the
-        # value reaches arithmetic through the column (published as
-        # the 'time' pseudo-hint to the translator)
-        self._time_columns: Dict[str, set] = {}
         # dep-table schema cache for the hint publisher; entries for a
         # statement's outputs/dependencies are invalidated after every
         # non-SELECT statement (see _execute_statement)
@@ -996,8 +1093,9 @@ class SparkStatementExecutor:
         expression."""
         colmap: Dict[str, List[str]] = {}
         drop: set = set()
-        for tbl in deps or []:
-            for c, ename in self._enum_columns.get(tbl, {}).items():
+        enum_maps = {t: self._catalog(t).enum_columns for t in deps or []}
+        for emap in enum_maps.values():
+            for c, ename in emap.items():
                 vals = self._enum_types.get(ename)
                 if vals is None:
                     continue
@@ -1005,8 +1103,9 @@ class SparkStatementExecutor:
                     drop.add(c)
                 else:
                     colmap[c] = vals
-        for tbl in deps or []:
-            emap = self._enum_columns.get(tbl, {})
+        if not colmap:
+            return sql
+        for tbl, emap in enum_maps.items():
             for c in self._table_columns(tbl) or []:
                 cl = c.lower()
                 if cl not in colmap:
@@ -2071,6 +2170,11 @@ class SparkStatementExecutor:
         except Exception:  # noqa: BLE001 — unresolvable: leave unexpanded
             return None
 
+    def _catalog(self, name: str) -> TableState:
+        """``name``'s store record; an empty one for a relation the
+        script did not create (input views, CTEs)."""
+        return self.store.record(name) or TableState(name=name)
+
     # -- public entry -----------------------------------------------------
     def execute_query(self, query: Query) -> None:
         """Run one script (possibly multiple statements, sequentially),
@@ -2092,11 +2196,15 @@ class SparkStatementExecutor:
     # -- routing ----------------------------------------------------------
     def _statement_type_hints(self, st: ParsedStatement):
         shadowed: set = set()
+        time_columns = {
+            dep.lower(): self._catalog(dep).time_columns
+            for dep in st.dependencies
+        }
         hints = statement_type_hints(
             self.spark,
             st.sql,
             st.dependencies,
-            self._time_columns,
+            time_columns,
             self._hint_schema_cache,
             shadowed_out=shadowed,
         )
@@ -2167,7 +2275,7 @@ class SparkStatementExecutor:
         if re.match(r"(?is)\s*(CREATE|DROP)\s+TYPE\b", st.sql):
             self._type_ddl(st.sql)
             return
-        if self._enum_columns:
+        if self._enum_types:
             # ordinals BEFORE casts: the positional rewrite needs the
             # 'lit'::ename form intact (the cast pass lowers it to a
             # validating CASE expression)
@@ -2304,7 +2412,7 @@ class SparkStatementExecutor:
         if parsed is None:
             raise UserException(f"Unsupported MERGE form: {st.sql[:140]}")
         name = parsed["target"]
-        if name not in self.store.tables:
+        if self.store.table(name) is None:
             raise UserException(f"MERGE INTO unknown table '{name}'")
         current = self.spark.table(_bt(name))
         fields = current.schema.fields
@@ -2517,7 +2625,8 @@ class SparkStatementExecutor:
         if parsed is None:
             raise UserException(f"Unsupported ALTER form: {st.sql[:120]}")
         name, if_exists, action, args = parsed
-        if name not in self.store.tables:
+        state = self.store.table(name)
+        if state is None:
             if if_exists:
                 return
             raise UserException(f"ALTER TABLE: unknown table '{name}'")
@@ -2525,18 +2634,10 @@ class SparkStatementExecutor:
 
         if action == "rename_table":
             self.store.rename_table(name, args["to"])
-            for reg in (
-                self.primary_keys,
-                self.not_null,
-                self.checks,
-                self._enum_columns,
-            ):
-                v = reg.pop(name.lower(), None)
-                if v:
-                    reg[args["to"].lower()] = v
             return
         current = self.spark.table(_bt(name))
         have = {c.lower() for c in current.columns}
+        catalog = {}
         if action == "add_column":
             col, type_text, default = args["col"], args["type"], args["default"]
             if col.lower() in have:
@@ -2553,60 +2654,20 @@ class SparkStatementExecutor:
                 if args["if_exists"]:
                     return
                 raise UserException(f"ALTER TABLE: unknown column '{col}'")
-            cl, key = col.lower(), name.lower()
-            # DuckDB refuses to drop a PK/UNIQUE-constrained column; a
-            # CHECK that references it is dropped along with the
-            # column, and NOT NULL/enum metadata follows the column out
-            if cl in (k.lower() for k in self.primary_keys.get(key, [])):
+            # DuckDB refuses to drop a PK/UNIQUE-constrained column;
+            # the rest of the column's metadata goes with it
+            if col.lower() in state.primary_key:
                 raise UserException(
                     f'Catalog Error: Cannot drop column "{col}" because '
                     "there is a UNIQUE constraint that depends on it"
                 )
-            if key in self.not_null:
-                self.not_null[key] = [
-                    c for c in self.not_null[key] if c.lower() != cl
-                ]
-            if key in self.checks:
-                self.checks[key] = [
-                    e for e in self.checks[key]
-                    if not any(
-                        t.kind in ("word", "bident", "qident")
-                        and t.text.strip('`"').lower() == cl
-                        for t in tokenize(e)
-                    )
-                ]
-            self._enum_columns.get(key, {}).pop(cl, None)
+            catalog = _without_column(state, col)
             new_df = current.drop(col)
         elif action == "rename_column":
             col, to = args["col"], args["to"]
             if col.lower() not in have:
                 raise UserException(f"ALTER TABLE: unknown column '{col}'")
-            cl, key = col.lower(), name.lower()
-            # constraints follow the renamed column, like DuckDB
-            if key in self.primary_keys:
-                self.primary_keys[key] = [
-                    to.lower() if k.lower() == cl else k
-                    for k in self.primary_keys[key]
-                ]
-            if key in self.not_null:
-                self.not_null[key] = [
-                    to.lower() if c.lower() == cl else c
-                    for c in self.not_null[key]
-                ]
-            if key in self.checks:
-                self.checks[key] = [
-                    "".join(
-                        _bt(to)
-                        if t.kind in ("word", "bident", "qident")
-                        and t.text.strip('`"').lower() == cl
-                        else t.text
-                        for t in tokenize(e)
-                    )
-                    for e in self.checks[key]
-                ]
-            emap = self._enum_columns.get(key)
-            if emap and cl in emap:
-                emap[to.lower()] = emap.pop(cl)
+            catalog = _without_column(state, col, to)
             new_df = current.withColumnRenamed(col, to)
         elif action == "set_type":
             col, type_text = args["col"], args["type"]
@@ -2618,21 +2679,13 @@ class SparkStatementExecutor:
             )
         else:  # pragma: no cover
             raise UserException(f"Unsupported ALTER action: {action}")
-        self.store.rewrite(name, new_df)
+        self.store.rewrite(name, new_df, **catalog)
 
     def _drop(self, name: str, if_exists: bool) -> None:
         """DROP TABLE/VIEW: both kinds live as temp views here (store
         tables are parquet-backed temp views), so Spark's strict
         DROP TABLE-vs-VIEW distinction must not leak through."""
-        existed = self.spark.catalog.dropTempView(name)
-        self.store.tables.pop(name, None)
-        self.view_order_by.pop(name, None)
-        self.primary_keys.pop(name.lower(), None)
-        self.not_null.pop(name.lower(), None)
-        self.checks.pop(name.lower(), None)
-        self._enum_columns.pop(name.lower(), None)
-        self._time_columns.pop(name.lower(), None)
-        if not existed and not if_exists:
+        if not self.store.drop(name) and not if_exists:
             raise UserException(f"DROP: table or view '{name}' does not exist")
 
     # -- CREATE -----------------------------------------------------------
@@ -2641,24 +2694,17 @@ class SparkStatementExecutor:
         if name is None:
             raise UserException(f"Cannot determine view name in: {st.sql[:100]}")
         body = _body_after_as(st.sql)
-        self.spark.sql(
-            f"CREATE OR REPLACE TEMPORARY VIEW {_bt(name)} AS {translate(body)}"
-        )
-        order_clause = _terminal_order_by(body)
-        if order_clause:
-            self.view_order_by[name] = order_clause
         # views inherit TIME/enum column bindings like CTAS outputs
         time_cols, enum_cols = self._body_special_columns(
             body, st.dependencies
         )
-        if time_cols:
-            self._time_columns[name.lower()] = time_cols
-        else:
-            self._time_columns.pop(name.lower(), None)
-        if enum_cols:
-            self._enum_columns[name.lower()] = enum_cols
-        else:
-            self._enum_columns.pop(name.lower(), None)
+        self.store.create_view(
+            name,
+            translate(body),
+            order_by=_terminal_order_by(body),
+            time_columns=time_cols,
+            enum_columns=enum_cols,
+        )
 
     def _target_table(self, st: ParsedStatement):
         """The statement's target TABLE from its outputs set, skipping
@@ -2682,8 +2728,17 @@ class SparkStatementExecutor:
         whose expression is statically TIME-typed (plain time-column
         renames, ``CAST(x AS TIME)`` — via the r10 alias typer), and a
         lone ``*`` over a SINGLE dependency (whole-set inheritance).
-        Set operations, multi-dep stars, and computed TIME arithmetic
-        items conservatively inherit nothing (COVERAGE.md)."""
+
+        A plain SELECT is the one-branch case of a depth-0 set
+        operation (r12), which inherits POSITIONALLY: names come from
+        the FIRST branch; a column stays enum only when EVERY branch's
+        item at that position is a ref to the SAME enum (DuckDB decays
+        enum-vs-varchar and enum-vs-other-enum unions to VARCHAR) and
+        TIME only when every branch's item is. Star items in a set
+        operation, UNION BY NAME (name-matched, not positional),
+        unparenthesized shapes, item-count mismatches, multi-dep stars
+        and computed TIME arithmetic items inherit nothing
+        (COVERAGE.md)."""
         time_cols: set = set()
         enum_cols: Dict[str, str] = {}
         code = [
@@ -2691,183 +2746,58 @@ class SparkStatementExecutor:
         ]
         n = len(code)
         depth = 0
-        sel = None
+        starts: List[int] = []
+        ends: List[int] = []
         for i, t in enumerate(code):
             if t.kind == "op" and t.text in ("(", "["):
                 depth += 1
             elif t.kind == "op" and t.text in (")", "]"):
                 depth -= 1
-            elif depth == 0 and t.kind == "word" and t.upper == "SELECT":
-                sel = i
-                break
-        if sel is None:
+            elif depth or t.kind != "word":
+                continue
+            elif t.upper == "SELECT" and len(starts) == len(ends):
+                starts.append(i)
+            elif starts and t.upper in ("UNION", "EXCEPT", "INTERSECT"):
+                ends.append(i)
+                j = i + 1
+                while j < n and code[j].kind == "word" and code[j].upper in (
+                    "ALL",
+                    "DISTINCT",
+                ):
+                    j += 1
+                if not (
+                    j < n
+                    and code[j].kind == "word"
+                    and code[j].upper == "SELECT"
+                ):
+                    return time_cols, enum_cols  # UNION BY NAME, (SELECT..)
+        if not starts:
             return time_cols, enum_cols
-        # depth-0 set operation: analyze every branch and inherit a
-        # column only where ALL branches agree POSITIONALLY (DuckDB:
-        # enum UNION same-enum stays enum, enum UNION varchar decays
-        # to VARCHAR; names come from the first branch). UNION BY NAME
-        # matches by name, not position — inherit nothing there (r12).
-        depth = 0
-        ops: List[int] = []
-        for k, t in enumerate(code[sel + 1 :], start=sel + 1):
-            if t.kind == "op" and t.text in ("(", "["):
-                depth += 1
-            elif t.kind == "op" and t.text in (")", "]"):
-                depth -= 1
-            elif depth == 0 and t.kind == "word" and t.upper in (
-                "UNION",
-                "EXCEPT",
-                "INTERSECT",
-            ):
-                ops.append(k)
-        if ops:
-            return self._setop_special_columns(code, sel, ops, deps)
-        lo = sel + 1
-        if lo < n and code[lo].kind == "word" and code[lo].upper in (
-            "DISTINCT",
-            "ALL",
-        ):
-            lo += 1
-        hi = lo
-        depth = 0
-        while hi < n:
-            t = code[hi]
-            if t.kind == "op" and t.text in ("(", "["):
-                depth += 1
-            elif t.kind == "op" and t.text in (")", "]"):
-                depth -= 1
-            elif depth == 0 and t.kind == "word" and t.upper == "FROM":
-                break
-            hi += 1
-        # split items on depth-0 commas
-        items: List[List[Token]] = [[]]
-        depth = 0
-        for t in code[lo:hi]:
-            if t.kind == "op" and t.text in ("(", "["):
-                depth += 1
-            elif t.kind == "op" and t.text in (")", "]"):
-                depth -= 1
-            if depth == 0 and t.kind == "op" and t.text == ",":
-                items.append([])
-            else:
-                items[-1].append(t)
+        ends.append(n)
         dep_enums: Dict[str, str] = {}
-        dep_enum_conflict: set = set()
-        dep_times: set = set()
+        conflict: set = set()
         for dep in deps:
-            for c, e in self._enum_columns.get(dep.lower(), {}).items():
+            for c, e in self._catalog(dep).enum_columns.items():
                 if e not in self._enum_types:
                     continue  # type dropped since binding
                 if dep_enums.get(c, e) != e:
-                    dep_enum_conflict.add(c)
-                dep_enums[c] = e
-            dep_times |= self._time_columns.get(dep.lower(), set())
-        for item in items:
-            if not item:
-                continue
-            if (
-                len(item) == 1
-                and item[0].kind == "op"
-                and item[0].text == "*"
-            ):
-                only = [d for d in deps if d != "returning"]
-                if len(only) == 1:
-                    key = only[0].lower()
-                    time_cols |= self._time_columns.get(key, set())
-                    enum_cols.update(
-                        (c, e)
-                        for c, e in self._enum_columns.get(key, {}).items()
-                        if e in self._enum_types
-                    )
-                continue
-            name = None
-            expr = item
-            if (
-                len(item) >= 3
-                and item[-2].kind == "word"
-                and item[-2].upper == "AS"
-                and item[-1].kind in ("word", "bident", "qident")
-            ):
-                name = unquote_name(item[-1]).lower()
-                expr = item[:-2]
-            elif item[-1].kind in ("word", "bident", "qident") and all(
-                t.kind in ("word", "bident", "qident")
-                or (t.kind == "op" and t.text == ".")
-                for t in item
-            ):
-                name = unquote_name(item[-1]).lower()
-            if name is None:
-                continue
-            hint = _alias_expr_hint(list(expr))
-            if hint == "time":
-                time_cols.add(name)
-            # enum inheritance: a plain (dotted) ref to an unambiguous
-            # dependency enum column
-            ecode = [t for t in expr if t.kind not in ("ws", "comment")]
-            if ecode and all(
-                t.kind in ("word", "bident", "qident")
-                or (t.kind == "op" and t.text == ".")
-                for t in ecode
-            ):
-                src = unquote_name(ecode[-1]).lower()
-                if src in dep_enums and src not in dep_enum_conflict:
-                    enum_cols[name] = dep_enums[src]
-        return time_cols, enum_cols
-
-    def _dep_special_maps(self, deps):
-        """(enum bindings, ambiguous-name set, time columns) merged
-        over the statement's dependencies."""
-        dep_enums: Dict[str, str] = {}
-        conflict: set = set()
-        dep_times: set = set()
-        for dep in deps:
-            for c, e in self._enum_columns.get(dep.lower(), {}).items():
-                if e not in self._enum_types:
-                    continue
-                if dep_enums.get(c, e) != e:
                     conflict.add(c)
                 dep_enums[c] = e
-            dep_times |= self._time_columns.get(dep.lower(), set())
-        return dep_enums, conflict, dep_times
-
-    def _setop_special_columns(self, code, sel, ops, deps):
-        """Positional (time, enum) inheritance across set-operation
-        branches (r12): names come from the FIRST branch; a column
-        stays enum only when EVERY branch's item at that position is a
-        ref to the SAME enum (DuckDB decays enum-vs-varchar and
-        enum-vs-other-enum unions to VARCHAR). Star items, UNION BY
-        NAME (name-matched, not positional), unparenthesized shapes,
-        and item-count mismatches conservatively inherit nothing."""
-        n = len(code)
-        starts = [sel]
-        for op in ops:
-            j = op + 1
-            while j < n and code[j].kind == "word" and code[j].upper in (
-                "ALL",
-                "DISTINCT",
-            ):
-                j += 1
-            if j < n and code[j].kind == "word" and code[j].upper == "BY":
-                return set(), {}  # UNION BY NAME
-            if not (
-                j < n and code[j].kind == "word" and code[j].upper == "SELECT"
-            ):
-                return set(), {}
-            starts.append(j)
-        dep_enums, conflict, _ = self._dep_special_maps(deps)
-        anns = []
-        for bi, st_i in enumerate(starts):
-            end = ops[bi] if bi < len(ops) else n
-            ann = self._branch_item_annotations(
-                code, st_i, end, dep_enums, conflict
-            )
-            if ann is None:
-                return set(), {}
-            anns.append(ann)
-        if len({len(a) for a in anns}) != 1:
-            return set(), {}
-        time_cols: set = set()
-        enum_cols: Dict[str, str] = {}
+        anns = [
+            self._branch_item_annotations(code, lo, hi, dep_enums, conflict)
+            for lo, hi in zip(starts, ends)
+        ]
+        if len(anns) > 1:
+            if any(None in a or "*" in a for a in anns):
+                return time_cols, enum_cols  # star: positions unknowable
+            if len({len(a) for a in anns}) != 1:
+                return time_cols, enum_cols
+        elif "*" in anns[0]:
+            only = [d for d in deps if d != "returning"]
+            if len(only) == 1:
+                time_cols |= self._catalog(only[0]).time_columns
+                enum_cols.update(dep_enums)
+        anns = [[a for a in ann if a and a != "*"] for ann in anns]
         for i, (name, _e, _t) in enumerate(anns[0]):
             if not name:
                 continue
@@ -2879,19 +2809,18 @@ class SparkStatementExecutor:
         return time_cols, enum_cols
 
     def _branch_item_annotations(self, code, sel, end, dep_enums, conflict):
-        """``[(output_name | None, enum | None, is_time)]`` for one
-        SELECT branch's top-level items; None when a star item makes
-        positions unknowable."""
-        n = end
+        """``(output_name | None, enum | None, is_time)`` per top-level
+        item of the SELECT branch ``code[sel:end]``; a star item is
+        ``"*"`` when it is a lone ``*`` and None otherwise."""
         lo = sel + 1
-        if lo < n and code[lo].kind == "word" and code[lo].upper in (
+        if lo < end and code[lo].kind == "word" and code[lo].upper in (
             "DISTINCT",
             "ALL",
         ):
             lo += 1
         hi = lo
         depth = 0
-        while hi < n:
+        while hi < end:
             t = code[hi]
             if t.kind == "op" and t.text in ("(", "["):
                 depth += 1
@@ -2900,23 +2829,21 @@ class SparkStatementExecutor:
             elif depth == 0 and t.kind == "word" and t.upper == "FROM":
                 break
             hi += 1
-        items: List[List[Token]] = [[]]
-        depth = 0
-        for t in code[lo:hi]:
-            if t.kind == "op" and t.text in ("(", "["):
-                depth += 1
-            elif t.kind == "op" and t.text in (")", "]"):
-                depth -= 1
-            if depth == 0 and t.kind == "op" and t.text == ",":
-                items.append([])
-            else:
-                items[-1].append(t)
         out = []
-        for item in items:
+        for item in _split_top_level_args(code, lo - 1, hi):
             if not item:
                 continue
-            if any(t.kind == "op" and t.text == "*" for t in item):
-                return None  # star: positions unknowable
+            if len(item) == 1 and item[0].text == "*":
+                out.append("*")
+                continue
+            if any(
+                t.kind == "op" and t.text == "*" and (
+                    k == 0 or item[k - 1].text == "."
+                )
+                for k, t in enumerate(item)
+            ):
+                out.append(None)  # qualified or modified star
+                continue
             name = None
             expr = item
             if (
@@ -2935,13 +2862,12 @@ class SparkStatementExecutor:
                 name = unquote_name(item[-1]).lower()
             enum = None
             is_time = _alias_expr_hint(list(expr)) == "time"
-            ecode = [t for t in expr if t.kind not in ("ws", "comment")]
-            if ecode and all(
+            if all(
                 t.kind in ("word", "bident", "qident")
                 or (t.kind == "op" and t.text == ".")
-                for t in ecode
+                for t in expr
             ):
-                src = unquote_name(ecode[-1]).lower()
+                src = unquote_name(expr[-1]).lower()
                 if src in dep_enums and src not in conflict:
                     enum = dep_enums[src]
             out.append((name, enum, is_time))
@@ -2958,52 +2884,25 @@ class SparkStatementExecutor:
             except Exception:  # noqa: BLE001 — not there: create below
                 pass
         body = _body_after_as(st.sql, allow_missing=True)
+        keys: dict = {}
+        checks: List[str] = []
         if body is None:
             # bare DDL: CREATE TABLE t (col type, ...) -> empty table
-            enum_cols: Dict[str, str] = {}
-            time_cols: List[str] = []
+            enum_decl: Dict[str, str] = {}
+            time_decl: List[str] = []
             schema_sql = _ddl_column_schema(
-                st.sql, self._enum_types, enum_cols, time_cols
+                st.sql, self._enum_types, enum_decl, time_decl
             )
-            if time_cols:
-                self._time_columns[name.lower()] = {
-                    c.lower() for c in time_cols
-                }
-            else:
-                self._time_columns.pop(name.lower(), None)
             df = self.spark.sql(f"SELECT {schema_sql} LIMIT 0")
-            keys = _ddl_primary_key(st.sql)
-            if keys:
-                self.primary_keys[name.lower()] = keys
-            else:
-                self.primary_keys.pop(name.lower(), None)
-            nn = _ddl_not_null(st.sql)
-            if nn:
-                self.not_null[name.lower()] = nn
-            else:
-                self.not_null.pop(name.lower(), None)
-            chk = _ddl_checks(st.sql)
-            for col, ename in enum_cols.items():
-                vals = ", ".join(
-                    "'" + v.replace("'", "''") + "'"
-                    for v in self._enum_types[ename]
-                )
-                chk.append(f"{_bt(col)} IS NULL OR {_bt(col)} IN ({vals})")
-            if chk:
-                self.checks[name.lower()] = chk
-            else:
-                self.checks.pop(name.lower(), None)
-            if enum_cols:
-                self._enum_columns[name.lower()] = {
-                    c.lower(): e for c, e in enum_cols.items()
-                }
-            else:
-                self._enum_columns.pop(name.lower(), None)
+            enum_cols = {c.lower(): e for c, e in enum_decl.items()}
+            time_cols = {c.lower() for c in time_decl}
+            keys = dict(
+                primary_key=_ddl_primary_key(st.sql) or [],
+                not_null=_ddl_not_null(st.sql),
+            )
+            checks = _ddl_checks(st.sql)
         else:
             df = self.spark.sql(translate(body))
-            self.primary_keys.pop(name.lower(), None)
-            self.not_null.pop(name.lower(), None)
-            self.checks.pop(name.lower(), None)
             # persist TIME pseudo-hints and enum bindings the CTAS
             # output inherits from its defining statement, so TIME
             # values wrap at midnight and enum ordinals survive a
@@ -3011,31 +2910,23 @@ class SparkStatementExecutor:
             time_cols, enum_cols = self._body_special_columns(
                 body, st.dependencies
             )
-            if time_cols:
-                self._time_columns[name.lower()] = time_cols
-            else:
-                self._time_columns.pop(name.lower(), None)
-            if enum_cols:
-                self._enum_columns[name.lower()] = enum_cols
-                # inherited enum columns stay ENUM-typed in DuckDB:
-                # later INSERTs must validate against the value set
-                chk = []
-                for col, ename in enum_cols.items():
-                    vals = ", ".join(
-                        "'" + v.replace("'", "''") + "'"
-                        for v in self._enum_types[ename]
-                    )
-                    chk.append(
-                        f"{_bt(col)} IS NULL OR {_bt(col)} IN ({vals})"
-                    )
-                self.checks[name.lower()] = chk
-            else:
-                self._enum_columns.pop(name.lower(), None)
+        # enum columns, declared or inherited, stay ENUM-typed in
+        # DuckDB: INSERT and UPDATE validate against the value set
+        for col, ename in enum_cols.items():
+            vals = ", ".join(
+                "'" + v.replace("'", "''") + "'"
+                for v in self._enum_types[ename]
+            )
+            checks.append(f"{_bt(col)} IS NULL OR {_bt(col)} IN ({vals})")
         self.store.create_table(
             name,
             df,
             order_by=_terminal_order_by(body or ""),
             empty=body is None,  # bare DDL creates a known-row-free table
+            checks=checks,
+            enum_columns=enum_cols,
+            time_columns=time_cols,
+            **keys,
         )
 
     # -- DML --------------------------------------------------------------
@@ -3067,18 +2958,21 @@ class SparkStatementExecutor:
             # DuckDB `INSERT INTO t BY NAME select`: the SELECT's output
             # names pick the target columns; missing ones get NULL
             cols = df.columns
-        keys = (
-            (conflict or {}).get("cols")
-            or self.primary_keys.get((name or "").lower())
-        )
+        state = self._catalog(name or "")
+        keys = state.primary_key
+        target = (conflict or {}).get("cols")
+        if target and sorted(target) != sorted(keys):
+            raise UserException(
+                "Binder Error: The specified columns as conflict target are "
+                "not referenced by a UNIQUE/PRIMARY KEY CONSTRAINT"
+            )
         if mode is not None and not keys:
             # exactly DuckDB's binder complaint
             raise UserException(
                 "There are no UNIQUE/PRIMARY KEY Indexes that refer to "
                 f"this table, ON CONFLICT is a no-op for '{name}'"
             )
-        nn = self.not_null.get((name or "").lower())
-        chk = self.checks.get((name or "").lower())
+        nn, chk = state.not_null, state.checks
         if returning is not None and (mode is not None or keys or nn or chk):
             raise UserException(
                 "INSERT ... RETURNING is not supported together with "
@@ -3110,28 +3004,20 @@ class SparkStatementExecutor:
             return
         self._keyed_insert(name, df, cols, keys, mode, nn, chk)
 
-    def _keyed_insert(
-        self, name, df, cols, keys, mode, nn=None, chk=None
-    ) -> None:
+    def _keyed_insert(self, name, df, cols, keys, mode, nn, chk) -> None:
         """INSERT into a PRIMARY KEY/UNIQUE table with DuckDB
         constraint semantics: duplicate keys (within the batch, or vs
         the table for plain INSERT) raise; OR REPLACE copy-on-writes
         matching rows out; OR IGNORE / ON CONFLICT DO NOTHING anti-joins
         the incoming side; ON CONFLICT DO UPDATE lowers onto the MERGE
         executor with the source aliased ``excluded``. All paths are
-        joins on the key columns — no collects beyond a fused 1-row
-        constraint probe.
-
-        All constraint probes run as ONE aggregate pass over the
-        incoming frame: every NOT NULL flag, every CHECK violation,
-        the within-batch duplicate count, and (for plain keyed INSERT)
-        a table-clash flag via a LEFT join against the current keys —
-        instead of 3+N separate LIMIT-1 jobs each re-scanning the
-        frame. Violations re-run a targeted probe only on the failure
-        path to recover the offending key text."""
+        joins on the key columns — no collects beyond the fused 1-row
+        constraint probe (``_probe_constraints``; a plain keyed INSERT
+        adds its table-clash join to it)."""
         from pyspark.sql import functions as F
 
-        if name not in self.store.tables:
+        state = self.store.table(name)
+        if state is None:
             raise UserException(f"INSERT INTO unknown table '{name}'")
         current = self.spark.table(_bt(name))
         aligned = (
@@ -3140,53 +3026,8 @@ class SparkStatementExecutor:
             else _align_by_position(df, current)
         )
         by_lower = {f.name.lower(): f.name for f in current.schema.fields}
-        key_cols = None
-        if keys:
-            try:
-                key_cols = [by_lower[k] for k in keys]
-            except KeyError as exc:
-                raise UserException(
-                    f"ON CONFLICT key column {exc} not in table '{name}'"
-                )
-        nn_actual = [
-            by_lower[c] for c in (nn or []) if by_lower.get(c) is not None
-        ]
-        chk = list(chk or [])
-        # a known-row-free target (bare-DDL create, nothing inserted
-        # yet) cannot clash: the probe skips its join against current
-        # keys — one shuffle less on the pipeline-opening INSERT
-        probe_clash = (
-            bool(key_cols)
-            and mode is None
-            and not self.store.tables[name].empty
-        )
-        aggs: List = []
-        for i, c in enumerate(nn_actual):
-            aggs.append(
-                F.expr(
-                    f"max(CASE WHEN {_bt(c)} IS NULL THEN 1 ELSE 0 END)"
-                ).alias(f"__nn_{i}")
-            )
-        for i, e in enumerate(chk):
-            # DuckDB: a CHECK violates only when the predicate is FALSE
-            # (NULL passes)
-            aggs.append(
-                F.expr(
-                    f"max(CASE WHEN ({translate(e)}) = FALSE "
-                    f"THEN 1 ELSE 0 END)"
-                ).alias(f"__ck_{i}")
-            )
-        if key_cols:
-            # struct-wrapped so NULL key fields still count as rows
-            # (matching the groupBy-equality the error path reports)
-            ks = ", ".join(_bt(k) for k in key_cols)
-            aggs.append(
-                F.expr(
-                    f"count(*) - count(DISTINCT struct({ks}))"
-                ).alias("__dup")
-            )
-        if probe_clash:
-            aggs.append(F.max(F.col("__clash")).alias("__clash"))
+        # key columns follow RENAME COLUMN and cannot be dropped
+        key_cols = [by_lower[k] for k in keys] if keys else None
         # NOTE (r13-opt, measured): persisting ``aligned`` across the
         # probe collect and the mutation (each executes the source plan
         # once) was tried and reverted — the cache materialization cost
@@ -3194,48 +3035,23 @@ class SparkStatementExecutor:
         # statement. The re-execution is a second scan of the same
         # pruned parquet source; the COW model re-scans ``current``
         # every statement anyway, so it is proportionally minor.
-        if aggs:
-            probe_df = aligned
-            if probe_clash:
-                marker = current.select(
-                    *[F.col(_bt(k)) for k in key_cols]
-                ).withColumn("__clash", F.lit(1))
-                probe_df = aligned.join(marker, on=key_cols, how="left")
-            flags = probe_df.agg(*aggs).collect()[0]
-            for i, c in enumerate(nn_actual):
-                if flags[f"__nn_{i}"]:
-                    raise UserException(
-                        f'Constraint Error: NOT NULL constraint failed: '
-                        f'{name}.{c}'
-                    )
-            for i, e in enumerate(chk):
-                if flags[f"__ck_{i}"]:
-                    raise UserException(
-                        f"Constraint Error: CHECK constraint failed on "
-                        f"table {name}: ({e})"
-                    )
-            if key_cols and flags["__dup"]:
-                dup = (
-                    aligned.groupBy(*[_bt(k) for k in key_cols])
-                    .count()
-                    .where("count > 1")
-                    .limit(1)
-                    .collect()
-                )
-                key_txt = ", ".join(str(v) for v in list(dup[0])[:-1])
-                raise UserException(
-                    "Constraint Error: PRIMARY KEY or UNIQUE constraint "
-                    f'violated: duplicate key "{key_txt}"'
-                )
-            if probe_clash and flags["__clash"]:
-                raise UserException(
-                    "Constraint Error: Duplicate key violates primary "
-                    f"key constraint on '{name}'"
-                )
-        if not keys:
-            self.store.insert_into(name, aligned)
-            return
-        if mode is None:
+        self._probe_constraints(
+            name,
+            aligned,
+            [by_lower[c] for c in nn if c in by_lower],
+            chk,
+            key_cols,
+            # a known-row-free target (bare-DDL create, nothing
+            # inserted yet) cannot clash: the probe skips its join
+            # against current keys — one shuffle less on the
+            # pipeline-opening INSERT
+            clash=(
+                current.select(*[F.col(_bt(k)) for k in key_cols])
+                if key_cols and mode is None and not state.empty
+                else None
+            ),
+        )
+        if not keys or mode is None:
             self.store.insert_into(name, aligned)
             return
         if mode == "replace":
@@ -3276,6 +3092,80 @@ class SparkStatementExecutor:
         finally:
             self.spark.catalog.dropTempView(src_view)
 
+    def _probe_constraints(
+        self, name, df, nn, chk, key_cols, clash=None, update=False
+    ) -> None:
+        """Check DuckDB's constraints on ``df`` — the rows an INSERT
+        adds, or the table an UPDATE leaves — in ONE fused aggregate
+        job: a flag per NOT NULL column ``nn`` and per CHECK in ``chk``
+        (violated only when FALSE — NULL passes), the duplicate count
+        over ``key_cols``, and, given ``clash`` (the current keys), a
+        LEFT join flag for incoming keys already in the table — instead
+        of 3+N separate LIMIT-1 jobs each re-scanning the frame. The
+        first violation raises DuckDB's error; an INSERT's duplicate
+        key re-probes only on that failure path, for the key text."""
+        from pyspark.sql import functions as F
+
+        aggs: List = [
+            F.expr(f"max(CASE WHEN {_bt(c)} IS NULL THEN 1 ELSE 0 END)")
+            .alias(f"__nn_{i}")
+            for i, c in enumerate(nn)
+        ] + [
+            F.expr(f"max(CASE WHEN ({translate(e)}) = FALSE THEN 1 ELSE 0 END)")
+            .alias(f"__ck_{i}")
+            for i, e in enumerate(chk)
+        ]
+        if key_cols:
+            # struct-wrapped so NULL key fields still count as rows
+            # (matching the groupBy-equality the error path reports)
+            ks = ", ".join(_bt(k) for k in key_cols)
+            aggs.append(
+                F.expr(f"count(*) - count(DISTINCT struct({ks}))").alias("__dup")
+            )
+        if not aggs:
+            return
+        probe = df
+        if clash is not None:
+            aggs.append(F.max(F.col("__clash")).alias("__clash"))
+            probe = df.join(
+                clash.withColumn("__clash", F.lit(1)), on=key_cols, how="left"
+            )
+        flags = probe.agg(*aggs).collect()[0]
+        for i, c in enumerate(nn):
+            if flags[f"__nn_{i}"]:
+                raise UserException(
+                    f"Constraint Error: NOT NULL constraint failed: {name}.{c}"
+                )
+        for i, e in enumerate(chk):
+            if flags[f"__ck_{i}"]:
+                raise UserException(
+                    f"Constraint Error: CHECK constraint failed on "
+                    f"table {name}: ({e})"
+                )
+        if key_cols and flags["__dup"]:
+            if update:
+                raise UserException(
+                    "Constraint Error: PRIMARY KEY or UNIQUE constraint "
+                    f"violated by UPDATE on '{name}'"
+                )
+            dup = (
+                df.groupBy(*[_bt(k) for k in key_cols])
+                .count()
+                .where("count > 1")
+                .limit(1)
+                .collect()
+            )
+            key_txt = ", ".join(str(v) for v in list(dup[0])[:-1])
+            raise UserException(
+                "Constraint Error: PRIMARY KEY or UNIQUE constraint "
+                f'violated: duplicate key "{key_txt}"'
+            )
+        if clash is not None and flags["__clash"]:
+            raise UserException(
+                "Constraint Error: Duplicate key violates primary "
+                f"key constraint on '{name}'"
+            )
+
     def _validate_update_constraints(
         self, name: str, new_df: DataFrame, assigned_lower: set
     ) -> None:
@@ -3283,69 +3173,33 @@ class SparkStatementExecutor:
         enforces NOT NULL / CHECK / PRIMARY KEY on update, and skipping
         it lets an UPDATE silently write a NULL into a NOT NULL column.
         Cost-proportional: only constraints whose columns are actually
-        assigned are probed, in ONE fused aggregate pass over the
+        assigned are probed, in the one fused aggregate pass over the
         post-update frame (the COW rewrite scans it anyway)."""
-        from pyspark.sql import functions as F
-
-        key = (name or "").lower()
+        state = self._catalog(name or "")
         by_lower = {f.name.lower(): f.name for f in new_df.schema.fields}
-        nn_hit = [
-            by_lower[c]
-            for c in (self.not_null.get(key) or [])
-            if c in assigned_lower and c in by_lower
-        ]
-        chk_hit = [
-            e
-            for e in (self.checks.get(key) or [])
-            if any(
-                t.kind in ("word", "bident", "qident")
-                and t.text.strip('`"').lower() in assigned_lower
-                for t in tokenize(e)
-            )
-        ]
-        keys = self.primary_keys.get(key)
-        key_hit = bool(keys) and any(k in assigned_lower for k in keys)
-        if not nn_hit and not chk_hit and not key_hit:
-            return
-        aggs: List = []
-        for i, c in enumerate(nn_hit):
-            aggs.append(
-                F.expr(
-                    f"max(CASE WHEN {_bt(c)} IS NULL THEN 1 ELSE 0 END)"
-                ).alias(f"__nn_{i}")
-            )
-        for i, e in enumerate(chk_hit):
-            aggs.append(
-                F.expr(
-                    f"max(CASE WHEN ({translate(e)}) = FALSE "
-                    f"THEN 1 ELSE 0 END)"
-                ).alias(f"__ck_{i}")
-            )
-        if key_hit:
-            ks = ", ".join(_bt(by_lower[k]) for k in keys if k in by_lower)
-            aggs.append(
-                F.expr(
-                    f"count(*) - count(DISTINCT struct({ks}))"
-                ).alias("__dup")
-            )
-        flags = new_df.agg(*aggs).collect()[0]
-        for i, c in enumerate(nn_hit):
-            if flags[f"__nn_{i}"]:
-                raise UserException(
-                    f'Constraint Error: NOT NULL constraint failed: '
-                    f'{name}.{c}'
+        keys = state.primary_key
+        self._probe_constraints(
+            name,
+            new_df,
+            [
+                by_lower[c]
+                for c in state.not_null
+                if c in assigned_lower and c in by_lower
+            ],
+            [
+                e
+                for e in state.checks
+                if any(
+                    t.kind in ("word", "bident", "qident")
+                    and t.text.strip('`"').lower() in assigned_lower
+                    for t in tokenize(e)
                 )
-        for i, e in enumerate(chk_hit):
-            if flags[f"__ck_{i}"]:
-                raise UserException(
-                    f"Constraint Error: CHECK constraint failed on "
-                    f"table {name}: ({e})"
-                )
-        if key_hit and flags["__dup"]:
-            raise UserException(
-                "Constraint Error: PRIMARY KEY or UNIQUE constraint "
-                f"violated by UPDATE on '{name}'"
-            )
+            ],
+            [by_lower[k] for k in keys if k in by_lower]
+            if any(k in assigned_lower for k in keys)
+            else None,
+            update=True,
+        )
 
     def _update(self, st: ParsedStatement) -> None:
         name = self._target_table(st)

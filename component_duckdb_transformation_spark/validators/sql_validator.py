@@ -26,6 +26,7 @@ from ..functions.dialect import (
     replace_first_composition,
     translate,
 )
+from ..plans.executor import _body_after_as
 from ..plans.orchestrator import iterate_blocks, query_name
 from ..plans.sql_parser import parse_script
 from ..plans.sql_tokens import tokenize
@@ -245,14 +246,23 @@ class SQLValidator:
                     # CREATE ... AS PIVOT tbl ON ...) — the raw text is
                     # not Spark-parseable by design
                     continue
+                # the text the executor sends: a CREATE TABLE/VIEW ... AS
+                # runs only its body (which is where QUALIFY lowers)
+                sql = st.sql
+                if st.statement_type.is_create:
+                    sql = _body_after_as(st.sql, allow_missing=True) or sql
                 try:
                     # Spark's parser on the translated text — parse only,
                     # no analysis/execution (sessionState is JVM-only in
                     # the Spark 4 Python API, hence the py4j handle)
                     jspark = self.spark._jsparkSession  # noqa: SLF001
-                    jspark.sessionState().sqlParser().parsePlan(translate(st.sql))
+                    jspark.sessionState().sqlParser().parsePlan(translate(sql))
                 except Exception as exc:
-                    return f"Syntax error: {str(exc).splitlines()[0][:300]}"
+                    # py4j errors open with a blank line
+                    line = next(
+                        (ln for ln in str(exc).splitlines() if ln.strip()), ""
+                    )
+                    return f"Syntax error: {line.strip()[:300]}"
         return None
 
     def validate_queries(self, blocks: Sequence[Block]) -> ValidationResult:

@@ -686,3 +686,40 @@ def test_dotted_names_ctas_insert_rename_export(spark, tmp_path):
     assert {"in.c-main.days", "res.final"} <= views
     assert "res.v1" not in views
     assert not any(v.startswith("_import_") for v in views)
+
+
+def test_replaced_view_exports_without_stale_order_by(spark, tmp_path):
+    """CREATE OR REPLACE VIEW replaces the view's whole record: the
+    export no longer sorts by the ORDER BY of the view it replaced (a
+    column the new view does not have)."""
+    data = tmp_path / "data"
+    config = {
+        "parameters": {
+            "threads": 2,
+            "blocks": [
+                {
+                    "name": "B",
+                    "codes": [
+                        {
+                            "name": "C",
+                            "script": [
+                                "CREATE TABLE base AS SELECT * FROM "
+                                "(VALUES (2, 'a'), (1, 'b')) t(k, s);",
+                                "CREATE VIEW vo AS SELECT k, s FROM base ORDER BY s;",
+                                "CREATE OR REPLACE VIEW vo AS SELECT k FROM base;",
+                            ],
+                        }
+                    ],
+                }
+            ],
+        },
+        "storage": {
+            "output": {"tables": [{"source": "vo", "destination": "out.c-out.vo"}]}
+        },
+    }
+    _write(str(data / "config.json"), json.dumps(config))
+    Component(data_dir=str(data), spark=spark).run()
+
+    rows = _read_rows(os.path.join(str(data), "out", "tables", "vo"))
+    assert rows[0] == ["k"]
+    assert sorted(rows[1:]) == [["1"], ["2"]]

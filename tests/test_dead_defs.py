@@ -18,8 +18,6 @@ ALLOWED = {
     "_check_engine_version",
     "_check_duckdb_version",
     "model_post_init",
-    # sync-action entry point of the component contract
-    "execute_action",
 }
 
 _SKIP_DIRS = {"__pycache__", "spark-warehouse"}

@@ -127,3 +127,30 @@ def test_validator_accepts_executor_handled_statements(spark):
     ])])]
     res = v.validate_queries(blocks)
     assert "Syntax error" not in res.message, res.message
+
+
+def test_validator_parses_ctas_body_with_qualify(spark):
+    """The startup check parses what the executor runs: the body of a
+    CREATE TABLE ... AS, where QUALIFY is lowered."""
+    from component_duckdb_transformation_spark.configuration import Block, Code
+    from component_duckdb_transformation_spark.validators.sql_validator import (
+        SQLValidator,
+    )
+
+    v = SQLValidator(spark)
+    ok = v.validate_queries([Block(name="b", codes=[Code(name="c", script=[
+        "CREATE TABLE top_customers AS SELECT c.n_name, c.c_custkey, "
+        "sum(o.net) AS spend, count(*) AS n_orders "
+        "FROM orders o JOIN cust c ON o.o_custkey = c.c_custkey "
+        "GROUP BY c.n_name, c.c_custkey "
+        "QUALIFY row_number() OVER (PARTITION BY c.n_name "
+        "ORDER BY sum(o.net) DESC, c.c_custkey) <= 10",
+    ])])])
+    assert ok.type.value == "success", ok.message
+    # a real syntax error reports Spark's message, not a blank line
+    bad = v.validate_queries([Block(name="b", codes=[Code(name="c", script=[
+        "CREATE TABLE t AS SELECT a FROM x WHERE a = = 1",
+    ])])])
+    assert bad.type.value == "danger"
+    err = bad.message.split("Syntax error:", 1)[1].splitlines()[0]
+    assert err.strip()

@@ -41,7 +41,10 @@ def gen_ops(g: random.Random, n_ops: int) -> list:
     has_t7 = False
     has_t9 = False
     for _ in range(n_ops):
-        c = g.randrange(17)
+        c = g.randrange(18)
+        if c == 17:
+            ops.extend(_catalog_ops(g, has_t2, has_t3, has_enum, has_t7))
+            continue
         if c == 16:
             # r10c: fmt-exact printf/format columns through CTAS
             # round-trips (the Arrow twin renders, the result is a
@@ -317,6 +320,64 @@ def gen_ops(g: random.Random, n_ops: int) -> list:
     return ops
 
 
+def _catalog_ops(g: random.Random, has_t2, has_t3, has_enum, has_t7) -> list:
+    """Catalog statements (every relation is one record): RENAME to a
+    fresh name on a PRIMARY KEY, ENUM or TIME table, use it there and
+    (mostly) rename it back; RENAME onto an existing table; DROP and
+    re-create with another body; CREATE OR REPLACE VIEW over a table.
+    The error cases must fail on both engines and change nothing."""
+    pick = g.randrange(4)
+    keyed = [t for t, have in (("t3", has_t3), ("t4", has_enum), ("t7", has_t7))
+             if have]
+    if pick == 0 and keyed:
+        t = g.choice(keyed)
+        ops = [f"ALTER TABLE {t} RENAME TO {t}r"]
+        if t == "t3":
+            a = g.randint(1, 900)
+            ops.append(
+                f"INSERT INTO t3r SELECT o_orderkey, o_totalprice FROM orders "
+                f"WHERE o_orderkey BETWEEN {a} AND {a + g.randint(0, 30)}"
+            )
+        elif t == "t4":
+            v = g.choice(["lo", "hi", "bogus"])
+            ops.append(f"INSERT INTO t4r VALUES ({g.randint(1, 100)}, '{v}')")
+            ops.append(
+                "CREATE OR REPLACE TABLE t12 AS SELECT k, e, "
+                "row_number() OVER (ORDER BY e, k) AS r FROM t4r"
+            )
+        else:
+            ops.append(
+                "CREATE OR REPLACE TABLE t13 AS SELECT k, extract(hour FROM "
+                f"tt + INTERVAL {g.randint(1, 47)} HOUR) AS h FROM t7r"
+            )
+        if g.random() < 0.8:
+            ops.append(f"ALTER TABLE {t}r RENAME TO {t}")
+        return ops
+    existing = ["t1"] + [t for t, have in (("t2", has_t2), ("t3", has_t3)) if have]
+    if pick == 1 and len(existing) > 1:
+        src, dst = g.sample(existing, 2)
+        return [f"ALTER TABLE {src} RENAME TO {dst}"]
+    if pick == 2:
+        t = g.choice(existing)
+        m = g.choice([2, 3, 5])
+        body = {
+            "t1": "SELECT o_orderkey AS k, o_orderstatus AS s, "
+                  f"o_totalprice AS p FROM orders WHERE o_orderkey % {m} = 0",
+            "t2": f"SELECT k, s, p FROM t1 WHERE k % {m} = 1",
+            # no PRIMARY KEY or NOT NULL any more on either engine
+            "t3": "SELECT o_orderkey AS k, o_totalprice AS p FROM orders "
+                  f"WHERE o_orderkey % {m} = 0",
+        }[t]
+        return [f"DROP TABLE {t}", f"CREATE TABLE {t} AS {body}"]
+    if g.random() < 0.5:
+        return [f"CREATE OR REPLACE VIEW {g.choice(existing)} AS SELECT 1 AS k"]
+    return [
+        "CREATE OR REPLACE VIEW v1 AS SELECT k, s FROM t1 "
+        f"WHERE k % {g.choice([2, 3])} = 0 ORDER BY k",
+        "CREATE OR REPLACE TABLE t14 AS SELECT s, count(*) AS n FROM v1 GROUP BY s",
+    ]
+
+
 def _sorted_frame(df):
     """Order rows by every column (floats rounded so sub-tolerance
     engine noise can't flip the sort); NaN/None normalized for keys."""
@@ -331,6 +392,13 @@ def _sorted_frame(df):
             keys[c] = col.astype(str)
     order = pd.DataFrame(keys).sort_values(list(df.columns)).index
     return df.loc[order].reset_index(drop=True)
+
+
+#: not compared directly: t5 holds a LIST column (frame stringification
+#: of lists differs between drivers), t7/t7r/t9 TIME columns (TIME
+#: renders as epoch-day timestamps here by documented contract; t8, t10
+#: and t13 compare extracts instead)
+_NOT_COMPARED = {"t5", "t7", "t7r", "t9"}
 
 
 def compare_tables(spark, con, tables) -> list:
@@ -446,22 +514,26 @@ def main() -> int:
             print(f"SEQ {i} ERROR {err}")
             failures += 1
             continue
-        tables = ["t1"] + (
-            ["t2"] if any("CREATE TABLE t2" in o for o in ops) else []
-        ) + (
-            ["t3"] if any("CREATE TABLE t3" in o for o in ops) else []
-        ) + (
-            ["t4"] if any("CREATE TABLE t4" in o for o in ops) else []
-        ) + (
-            ["t6"] if any("CREATE TABLE t6" in o for o in ops) else []
-        ) + (
-            ["t8"] if any("TABLE t8" in o for o in ops) else []
-        ) + (
-            ["t10"] if any("TABLE t10" in o for o in ops) else []
-        ) + (
-            ["t11"] if any("TABLE t11" in o for o in ops) else []
+        # end state: the same catalog on both engines (tables and views,
+        # renamed names included), then every relation's contents
+        duck = {
+            (name, kind)
+            for name, kind in con.execute(
+                "SELECT table_name, 'table' FROM duckdb_tables() UNION ALL "
+                "SELECT view_name, 'view' FROM duckdb_views() WHERE NOT "
+                "internal AND view_name NOT IN ('orders', 'documents')"
+            ).fetchall()
+        }
+        ours = {
+            (name, "view" if s.path is None else "table")
+            for name, s in store.tables.items()
+        }
+        bad = [] if duck == ours else [
+            f"catalog: spark={sorted(ours)} duck={sorted(duck)}"
+        ]
+        bad += compare_tables(
+            spark, con, sorted(n for n, _ in duck if n not in _NOT_COMPARED)
         )
-        bad = compare_tables(spark, con, tables)
         if bad:
             print(f"SEQ {i} MISMATCH: {bad}")
             for op in ops:

@@ -227,19 +227,29 @@ class TableStore:
         state = self.record(name)
         return state if state is not None and state.path is not None else None
 
-    def _claim(self, name: str, view: bool) -> Optional[TableState]:
+    @staticmethod
+    def _check_kind(name: str, state: Optional[TableState], view: bool) -> None:
+        """DuckDB's catalog error when a statement naming a view (or a
+        table) meets ``name``'s record of the other kind."""
+        if state is not None and (state.path is None) != view:
+            have, want = ("Table", "View") if view else ("View", "Table")
+            raise UserException(
+                f"Catalog Error: Existing object {name} is of type {have}, "
+                f"trying to replace with type {want}"
+            )
+
+    def _claim(self, name: str, view: bool, replace: bool) -> Optional[TableState]:
         """The record a CREATE of ``name`` replaces (caller holds the
         lock). Like DuckDB, a table never replaces a view, nor a view a
-        table."""
+        table, and only CREATE OR REPLACE replaces at all."""
         state = self.tables.get(name.lower())
-        if state is None or (state.path is None) == view:
-            return state
-        if view:
+        self._check_kind(name, state, view)
+        if state is not None and not replace:
             raise UserException(
-                f"Catalog Error: Existing object {name} is of type Table, "
-                "trying to replace with type View"
+                f'Catalog Error: {"View" if view else "Table"} with name '
+                f'"{name}" already exists!'
             )
-        raise UserException(f"Catalog Error: {name} is a view, not a table")
+        return state
 
     def _write_lock(self, name: str) -> threading.Lock:
         with self._lock:
@@ -281,25 +291,33 @@ class TableStore:
         df: DataFrame,
         order_by: str | None = None,
         empty: bool = False,
+        replace: bool = True,
         **catalog,
     ) -> None:
         """CREATE [OR REPLACE] TABLE: ``df`` becomes the first version
         of a fresh record whose order, constraint and type metadata
         (``catalog``: :class:`TableState` fields) replace the old."""
         fresh = TableState(name=name, order_by=order_by, empty=empty, **catalog)
-        self._commit_version(name, df, fresh)
+        self._commit_version(name, df, fresh, replace)
 
-    def create_view(self, name: str, sql: str, **catalog) -> None:
+    def create_view(
+        self, name: str, sql: str, replace: bool = True, **catalog
+    ) -> None:
         """CREATE [OR REPLACE] VIEW: bind ``name`` over the translated
         ``sql`` and publish its record (no path; ``catalog`` fields)."""
         with self._lock:
-            self._claim(name, view=True)
+            self._claim(name, view=True, replace=replace)
         self.spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {_bt(name)} AS {sql}")
         with self._lock:
             self.tables[name.lower()] = TableState(name=name, **catalog)
 
     def _commit_version(
-        self, name: str, df: DataFrame, fresh: TableState = None, **fields
+        self,
+        name: str,
+        df: DataFrame,
+        fresh: TableState = None,
+        replace: bool = True,
+        **fields,
     ) -> None:
         """Write ``df`` as the next version of ``name``, then publish it
         under the lock — as the ``fresh`` record of a CREATE, or as the
@@ -307,7 +325,11 @@ class TableStore:
         failed write publishes nothing — the table keeps its previous
         version, as in DuckDB — and its staged directory is removed."""
         with self._lock:
-            state = self._claim(name, view=False) if fresh else self.record(name)
+            state = (
+                self._claim(name, view=False, replace=replace)
+                if fresh
+                else self.record(name)
+            )
             version = (state.version if state else 0) + 1
             path = os.path.join(self._safe_dir(name), f"v{version}")
             # a renamed table keeps its directory: a new table under
@@ -419,10 +441,12 @@ class TableStore:
         self.spark.catalog.dropTempView(old)
         self._bind_view(state)
 
-    def drop(self, name: str) -> bool:
+    def drop(self, name: str, view: bool) -> bool:
         """DROP TABLE/VIEW: remove the record and the temp view; False
-        when neither existed."""
+        when neither existed. Like DuckDB, DROP TABLE of a view (or
+        DROP VIEW of a table) raises, IF EXISTS or not."""
         with self._lock:
+            self._check_kind(name, self.record(name), view)
             state = self.tables.pop(name.lower(), None)
         return self.spark.catalog.dropTempView(name) or state is not None
 
@@ -700,19 +724,17 @@ class SparkStatementExecutor:
             "null_percentage double",
         )
 
-    def _describe(self, rest: str) -> DataFrame:
+    def _describe(self, name: Optional[str], query: str) -> DataFrame:
         """DuckDB ``DESCRIBE t`` / ``DESCRIBE SELECT ...`` — schema
         report with DuckDB's column set (column_name, column_type,
         null, key, default, extra). Metadata-only: a DESCRIBE'd query
         is analyzed (Catalyst schema), never executed. Types render
         with DuckDB's names (VARCHAR, BLOB, ``T[]`` arrays,
         STRUCT(...))."""
-        rest = rest.strip()
-        head = rest.split(None, 1)[0].upper() if rest else ""
-        if head in ("SELECT", "WITH", "FROM", "VALUES", "TABLE"):
-            schema = self.spark.sql(translate(rest)).schema
+        if name:
+            schema = self.spark.table(_bt(name)).schema
         else:
-            schema = self.spark.table(_bt(rest.strip().strip('`"'))).schema
+            schema = self.spark.sql(translate(query)).schema
         rows = [
             (
                 f.name,
@@ -734,51 +756,44 @@ class SparkStatementExecutor:
     # ENUM types (DuckDB CREATE TYPE ... AS ENUM)
     # ------------------------------------------------------------------
 
-    def _type_ddl(self, sql: str) -> None:
-        """``CREATE TYPE name AS ENUM ('a', ...)`` / ``DROP TYPE``.
-        ENUM columns map to STRING plus an insert-time CHECK on the
-        value set; casts validate via ``_bind_enum_casts``. Divergence
-        (documented, COVERAGE.md): comparisons and ORDER BY on an ENUM
-        column are lexical (VARCHAR), not positional. Non-ENUM CREATE
-        TYPE (aliases, structs) is unsupported and raises."""
-        m = re.match(
-            r"(?is)\s*CREATE\s+TYPE\s+([\w`\"]+)\s+AS\s+ENUM\s*\(", sql
-        )
-        if m:
-            name = m.group(1).strip('`"').lower()
-            tokens = tokenize(sql)
-            open_idx = next(
-                i for i, t in enumerate(tokens)
-                if t.kind == "op" and t.text == "("
+    def _create_type(self, st: ParsedStatement) -> None:
+        """``CREATE TYPE name AS ENUM ('a', ...)``. ENUM columns map to
+        STRING plus an insert-time CHECK on the value set; casts
+        validate via ``_bind_enum_casts``, comparisons and ORDER BY
+        follow declaration order via ``_bind_enum_ordinals``. Non-ENUM
+        CREATE TYPE (aliases, structs) is unsupported and raises."""
+        name = st.head.name.lower()
+        tokens = tokenize(st.tail)
+        code = [i for i, t in enumerate(tokens) if t.kind not in ("ws", "comment")]
+        if not (
+            len(code) > 2
+            and tokens[code[0]].is_kw("AS")
+            and tokens[code[1]].is_kw("ENUM")
+            and tokens[code[2]].text == "("
+        ):
+            raise UserException(
+                f"Only CREATE TYPE ... AS ENUM is supported: {st.sql[:80]}"
             )
-            close = _matching_paren(tokens, open_idx)
-            vals: List[str] = []
-            for arg in _split_top_level_args(tokens, open_idx, close):
-                code = [t for t in arg if t.kind not in ("ws", "comment")]
-                if len(code) != 1 or code[0].kind != "string":
-                    raise UserException(
-                        "CREATE TYPE AS ENUM: values must be string "
-                        f"literals: {sql[:80]}"
-                    )
-                vals.append(code[0].text[1:-1].replace("''", "'"))
-            if name in self._enum_types:
-                raise UserException(f'Type "{name}" already exists')
-            self._enum_types[name] = vals
-            return
-        m = re.match(
-            r"(?is)\s*DROP\s+TYPE\s+(IF\s+EXISTS\s+)?([\w`\"]+)", sql
-        )
-        if m:
-            name = m.group(2).strip('`"').lower()
-            if name not in self._enum_types and not m.group(1):
+        vals: List[str] = []
+        close = _matching_paren(tokens, code[2])
+        for arg in _split_top_level_args(tokens, code[2], close):
+            arg = [t for t in arg if t.kind not in ("ws", "comment")]
+            if len(arg) != 1 or arg[0].kind != "string":
                 raise UserException(
-                    f"Catalog Error: Type with name {name} does not exist!"
+                    "CREATE TYPE AS ENUM: values must be string "
+                    f"literals: {st.sql[:80]}"
                 )
-            self._enum_types.pop(name, None)
-            return
-        raise UserException(
-            f"Only CREATE TYPE ... AS ENUM is supported: {sql[:80]}"
-        )
+            vals.append(arg[0].text[1:-1].replace("''", "'"))
+        if name in self._enum_types:
+            raise UserException(f'Type "{name}" already exists')
+        self._enum_types[name] = vals
+
+    def _drop_type(self, st: ParsedStatement) -> None:
+        name = st.head.name.lower()
+        if self._enum_types.pop(name, None) is None and not st.head.if_exists:
+            raise UserException(
+                f"Catalog Error: Type with name {name} does not exist!"
+            )
 
     def _enum_check_expr(self, ename: str, operand: str) -> str:
         vals = ", ".join(
@@ -1436,8 +1451,8 @@ class SparkStatementExecutor:
             return True
 
     def _sequence_step(self, st: ParsedStatement) -> bool:
-        """Handle sequence DDL and nextval/currval statements. Returns
-        True when the statement was fully handled here.
+        """Handle nextval/currval statements. Returns True when the
+        statement was fully handled here.
 
         ``nextval('s')`` values are assigned in scan order — the same
         physical-order contract as POSITIONAL JOIN (COVERAGE.md).
@@ -1451,38 +1466,9 @@ class SparkStatementExecutor:
         by the statement's row count after it runs (a bounds violation
         therefore surfaces after execution, not mid-scan like DuckDB —
         documented). currval inlines the last value and errors if the
-        sequence was never advanced, like DuckDB.
-
-        All routing is token-shaped ('sequence' is NOT a reserved word
-        in DuckDB: ``CREATE TABLE t (sequence INT)`` or the word inside
-        a string literal/comment must not land here)."""
-        toks = _code_toks(st.sql)
-        if not toks:
-            return False
-        if toks[0].is_kw("CREATE"):
-            k = 1
-            if k < len(toks) and toks[k].is_kw("OR"):
-                k += 2  # OR REPLACE
-            if k < len(toks) and toks[k].is_kw("TEMP", "TEMPORARY"):
-                k += 1
-            if k < len(toks) and toks[k].is_kw("SEQUENCE"):
-                self._create_sequence(st.sql)
-                return True
-        if toks[0].is_kw("DROP") and len(toks) > 1 and toks[1].is_kw(
-            "SEQUENCE"
-        ):
-            m = re.search(
-                r"(?is)\bSEQUENCE\s+(IF\s+EXISTS\s+)?([\w`\"\.]+)", st.sql
-            )
-            if not m:
-                raise UserException(f"Unsupported DROP form: {st.sql[:80]}")
-            name = m.group(2).strip('`"').lower()
-            if name not in self._sequences and not m.group(1):
-                raise UserException(
-                    f"Catalog Error: Sequence with name {name} does not exist!"
-                )
-            self._sequences.pop(name, None)
-            return True
+        sequence was never advanced, like DuckDB. Calls are found
+        token-shaped, so the words inside a string literal or comment
+        never land here."""
         full = tokenize(st.sql)
         has_curr = bool(self._seq_call_spans(full, "currval"))
         next_spans = self._seq_call_spans(full, "nextval")
@@ -1552,10 +1538,8 @@ class SparkStatementExecutor:
             and not has_row_filter
             and not has_values
             and saw_body
-            and re.search(
-                r"(?i)\bOR\s+(REPLACE|IGNORE)\b|\bON\s+CONFLICT\b", sql
-            )
-            is None
+            and not (st.head.or_replace or st.head.or_ignore)
+            and re.search(r"(?i)\bON\s+CONFLICT\b", sql) is None
         )
         if not has_from:
             rank_sql = "CAST(1 AS BIGINT)"  # single-row statement
@@ -1608,7 +1592,7 @@ class SparkStatementExecutor:
                     ).upper()
                     mat = self._seq_materialize_shuffled(
                         qtext,
-                        allow_rename=prefix.lstrip().startswith("INSERT")
+                        allow_rename=st.head.verb == "INSERT"
                         and "BY NAME" not in prefix,
                     )
                     if mat is not None:
@@ -1633,7 +1617,7 @@ class SparkStatementExecutor:
         new_sql = self._replace_nextval_once(sql, expr)
         new_st = parse_statement(new_sql)
         stype = new_st.statement_type
-        target = self._target_table(new_st)
+        target = new_st.head.name
         # NOTE: a scratch __seq_mat_N view stays registered — the
         # RETURNING view (and any lazy consumer of this statement's
         # result) may still reference it; names are unique per counter
@@ -1927,24 +1911,20 @@ class SparkStatementExecutor:
         out.append("".join(t.text for t in tokens[pos:]))
         return "".join(out)
 
-    def _create_sequence(self, sql: str) -> None:
-        m = re.match(
-            r"(?is)\s*CREATE\s+(OR\s+REPLACE\s+)?(?:TEMP\w*\s+)?SEQUENCE\s+"
-            r"(IF\s+NOT\s+EXISTS\s+)?([\w`\"\.]+)\s*(.*?);?\s*$",
-            sql,
-        )
-        if not m:
-            raise UserException(f"Unsupported CREATE SEQUENCE: {sql[:80]}")
-        replace, if_not_exists = bool(m.group(1)), bool(m.group(2))
-        name = m.group(3).strip('`"').lower()
-        rest = m.group(4) or ""
+    def _create_sequence(self, st: ParsedStatement) -> None:
+        """``CREATE [OR REPLACE] SEQUENCE [IF NOT EXISTS] name
+        [options]``; the options are INCREMENT, MINVALUE, MAXVALUE,
+        START and [NO] CYCLE."""
+        head, rest = st.head, st.tail
+        name = head.name.lower()
         if name in self._sequences:
-            if if_not_exists:
+            if head.if_exists:
                 return
-            if not replace:
+            if not head.or_replace:
                 raise UserException(
                     f'Sequence "{name}" already exists (use OR REPLACE)'
                 )
+
         def num(pat, default):
             mm = re.search(pat, rest, re.I)
             return int(mm.group(1)) if mm else default
@@ -1976,6 +1956,13 @@ class SparkStatementExecutor:
             "next": start, "curr": None, "inc": inc, "minv": minv,
             "maxv": maxv, "cycle": cycle, "used": False,
         }
+
+    def _drop_sequence(self, st: ParsedStatement) -> None:
+        name = st.head.name.lower()
+        if self._sequences.pop(name, None) is None and not st.head.if_exists:
+            raise UserException(
+                f"Catalog Error: Sequence with name {name} does not exist!"
+            )
 
     _FILE_READ_FNS = {
         "read_csv", "read_csv_auto", "read_json", "read_json_auto",
@@ -2096,19 +2083,26 @@ class SparkStatementExecutor:
         return view
 
     def _create_macro(self, st: ParsedStatement) -> None:
-        """``CREATE [OR REPLACE] MACRO name(params) AS expr`` — DuckDB
-        scalar macros, kept as (params, body-token) templates and
+        """``CREATE [OR REPLACE] [TEMP] MACRO name(params) AS expr`` —
+        DuckDB scalar macros, kept as (params, body-token) templates and
         inlined into later statements at the call site (Spark SQL
         temporary functions can't be defined from SQL text without a
         JVM class, so expansion-at-use is the faithful equivalent;
         DuckDB macros are also inlined by its binder). Macros defined
-        in one script are visible to subsequent statements; table
-        macros and default parameters are not supported."""
-        parsed = _parse_macro(st.sql)
+        in one script are visible to subsequent statements; a table
+        macro's ``AS TABLE <select>`` body expands to a derived table;
+        default parameters are not supported."""
+        parsed = _parse_macro(st.tail)
         if parsed is None:
             raise UserException(f"Unsupported MACRO form: {st.sql[:120]}")
-        name, params, body = parsed
-        self._macros[name.lower()] = (params, body)
+        self._macros[st.head.name.lower()] = parsed
+
+    def _drop_macro(self, st: ParsedStatement) -> None:
+        name = st.head.name.lower()
+        if self._macros.pop(name, None) is None and not st.head.if_exists:
+            raise UserException(
+                f"Catalog Error: Macro Function with name {name} does not exist!"
+            )
 
     def _expand_macros(self, sql: str, depth: int = 0) -> str:
         """Inline every known-macro call; recurses for macros calling
@@ -2223,17 +2217,14 @@ class SparkStatementExecutor:
                     self._hint_schema_cache.pop(name.lower(), None)
 
     def _execute_statement_hinted(self, st: ParsedStatement) -> None:
-        upper = st.sql.upper()
-        if "MACRO" in upper:
-            head = st.sql.lstrip().split(None, 1)
-            first = head[0].upper() if head else ""
-            if first == "CREATE" and re.search(r"\bMACRO\b", upper):
-                self._create_macro(st)
-                return
-            if first == "DROP" and re.search(r"\bMACRO\b", upper):
-                name = st.sql.split()[-1].rstrip(";").strip('`"').lower()
-                self._macros.pop(name, None)
-                return
+        head = st.head
+        if head.kind and not head.name:
+            raise UserException(f"Missing {head.kind} name in: {st.sql[:100]}")
+        if head.is_catalog_ddl:
+            # ahead of the expansions: a macro's own head and body must
+            # not be rewritten by the macros it replaces or calls
+            self._ROUTES[head.verb, head.kind](self, st)
+            return
         if self._macros:
             expanded = self._expand_macros(st.sql)
             if expanded != st.sql:
@@ -2269,11 +2260,7 @@ class SparkStatementExecutor:
             if expanded != st.sql:
                 st = dataclasses.replace(st, sql=expanded)
         low = st.sql.lower()
-        if "sequence" in low or "nextval" in low or "currval" in low:
-            if self._sequence_step(st):
-                return
-        if re.match(r"(?is)\s*(CREATE|DROP)\s+TYPE\b", st.sql):
-            self._type_ddl(st.sql)
+        if ("nextval" in low or "currval" in low) and self._sequence_step(st):
             return
         if self._enum_types:
             # ordinals BEFORE casts: the positional rewrite needs the
@@ -2286,112 +2273,64 @@ class SparkStatementExecutor:
             expanded = self._bind_enum_casts(st.sql)
             if expanded != st.sql:
                 st = dataclasses.replace(st, sql=expanded)
-        stype = st.statement_type
+        if head.verb == "CREATE" and head.if_exists:
+            try:
+                self.spark.table(_bt(head.name))
+                return  # exists: IF NOT EXISTS is a no-op, not a replace
+            except Exception:  # noqa: BLE001 — not there: create below
+                pass
+        route = self._ROUTES.get((head.verb, head.kind), SparkStatementExecutor._run)
+        route(self, st)
 
-        if stype == StatementType.CREATE_VIEW:
-            if re.search(r"(?i)\bIF\s+NOT\s+EXISTS\b", st.sql):
-                name = next(iter(st.outputs), None)
-                try:
-                    self.spark.table(_bt(name))
-                    return  # exists: no-op, not a replace
-                except Exception:  # noqa: BLE001 — create below
-                    pass
-            self._create_view(st)
-        elif stype == StatementType.CREATE_TABLE:
-            self._create_table(st)
-        elif stype == StatementType.INSERT:
-            self._insert(st)
-        elif stype == StatementType.UPDATE:
-            self._update(st)
-        elif stype == StatementType.DELETE:
-            self._delete(st)
-        elif stype == StatementType.DROP:
-            drop = _parse_drop(st.sql)
-            if drop is None:
-                raise UserException(f"Unsupported DROP form: {st.sql[:100]}")
-            self._drop(*drop)
-        elif stype == StatementType.ALTER:
-            self._alter(st)
-        elif stype == StatementType.MERGE:
-            self._merge(st)
-        else:
-            first = st.sql.lstrip().split(None, 1)
-            head = first[0].upper().rstrip(";") if first else ""
-            if head == "COPY":
-                self._copy(st)
-                return
-            if head == "TRUNCATE":
-                # TRUNCATE [TABLE] t = DELETE FROM t (empty rewrite)
-                rest = first[1].strip().rstrip(";") if len(first) > 1 else ""
-                parts = rest.split()
-                if parts and parts[0].upper() == "TABLE":
-                    parts = parts[1:]
-                if not parts:
-                    raise UserException(f"TRUNCATE without table: {st.sql[:80]}")
-                tname = parts[0].strip('`"')
-                self.store.rewrite(
-                    tname, self.spark.table(_bt(tname)).limit(0)
-                )
-                return
-            if head == "SUMMARIZE":
-                # DuckDB profiling statement; result registered as the
-                # summarize view so scripts can SELECT from it
-                rest = first[1].strip().rstrip(";") if len(first) > 1 else ""
-                if rest:
-                    self._summarize(rest).createOrReplaceTempView(
-                        "summarize"
-                    )
-                return
-            if head == "DESCRIBE":
-                # DuckDB schema statement; result registered as the
-                # describe view so scripts can SELECT from it
-                rest = first[1].strip().rstrip(";") if len(first) > 1 else ""
-                if rest:
-                    self._describe(rest).createOrReplaceTempView(
-                        "describe"
-                    )
-                return
-            if head == "SHOW":
-                # DuckDB: SHOW TABLES lists relations (single `name`
-                # column); SHOW <t> is DESCRIBE <t>
-                rest = first[1].strip().rstrip(";") if len(first) > 1 else ""
-                if rest.upper() == "TABLES":
-                    names = sorted(
-                        t.name for t in self.spark.catalog.listTables()
-                    )
-                    self.spark.createDataFrame(
-                        [(n,) for n in names], "name string"
-                    ).createOrReplaceTempView("show_tables")
-                elif rest:
-                    self._describe(rest).createOrReplaceTempView(
-                        "describe"
-                    )
-                return
-            if head in ("PRAGMA", "CHECKPOINT", "VACUUM", "ANALYZE"):
-                # DuckDB engine-maintenance/resource statements: no
-                # Spark equivalent at statement level (session sizing
-                # comes from session.py); scripts keep running
-                LOG.warning(
-                    "Ignoring DuckDB engine statement (no-op here): %s",
-                    st.sql[:80],
-                )
-                return
-            if head == "SET":
-                # DuckDB SET configures the engine (memory_limit,
-                # threads, TimeZone...). Try Spark's own SET (harmless
-                # for spark.* keys); ignore unknown engine knobs.
-                try:
-                    self.spark.sql(st.sql)
-                except Exception:  # noqa: BLE001
-                    LOG.warning(
-                        "Ignoring engine SET (no Spark equivalent): %s",
-                        st.sql[:80],
-                    )
-                return
-            df = self.spark.sql(translate(st.sql))
-            if df.columns:
-                # execute fully, discard rows — distributed, no driver collect
-                df.write.format("noop").mode("overwrite").save()
+    def _run(self, st: ParsedStatement) -> None:
+        """A statement Spark runs whole: executed fully, rows discarded
+        (distributed, no driver collect)."""
+        sql = spark_query_text(st)
+        if sql is None:
+            raise UserException(f"Unsupported {st.head.verb} form: {st.sql[:100]}")
+        df = self.spark.sql(translate(sql))
+        if df.columns:
+            df.write.format("noop").mode("overwrite").save()
+
+    def _truncate(self, st: ParsedStatement) -> None:
+        """TRUNCATE [TABLE] t = DELETE FROM t (empty rewrite)."""
+        name = st.head.name
+        self.store.rewrite(name, self.spark.table(_bt(name)).limit(0))
+
+    def _summarize_view(self, st: ParsedStatement) -> None:
+        """DuckDB profiling statement; the result is registered as the
+        summarize view so scripts can SELECT from it."""
+        self._summarize(st.head.name or st.tail).createOrReplaceTempView(
+            "summarize"
+        )
+
+    def _describe_view(self, st: ParsedStatement) -> None:
+        """DESCRIBE t | query and SHOW t register DuckDB's schema report
+        as the describe view; SHOW TABLES lists relations (single
+        `name` column) as the show_tables view."""
+        if st.head.verb == "SHOW" and st.head.name is None:
+            names = sorted(t.name for t in self.spark.catalog.listTables())
+            self.spark.createDataFrame(
+                [(n,) for n in names], "name string"
+            ).createOrReplaceTempView("show_tables")
+            return
+        self._describe(st.head.name, st.tail).createOrReplaceTempView("describe")
+
+    def _engine_statement(self, st: ParsedStatement) -> None:
+        """DuckDB engine-maintenance/resource statements (PRAGMA,
+        CHECKPOINT, VACUUM, ANALYZE): no Spark equivalent at statement
+        level (session sizing comes from session.py); scripts keep
+        running."""
+        LOG.warning("Ignoring DuckDB engine statement (no-op here): %s", st.sql[:80])
+
+    def _set(self, st: ParsedStatement) -> None:
+        """DuckDB SET configures the engine (memory_limit, threads,
+        TimeZone...). Try Spark's own SET (harmless for spark.* keys);
+        ignore unknown engine knobs."""
+        try:
+            self.spark.sql(st.sql)
+        except Exception:  # noqa: BLE001
+            LOG.warning("Ignoring engine SET (no Spark equivalent): %s", st.sql[:80])
 
     def _merge(self, st: ParsedStatement) -> None:
         """``MERGE INTO target USING source ON cond WHEN MATCHED [AND c]
@@ -2621,13 +2560,14 @@ class SparkStatementExecutor:
         scale a format with schema evolution (Delta/Iceberg) would make
         the column ops metadata-only too; plain Parquet versioning keeps
         the engine dependency-free."""
-        parsed = _parse_alter(st.sql)
+        parsed = _parse_alter(st.tail)
         if parsed is None:
             raise UserException(f"Unsupported ALTER form: {st.sql[:120]}")
-        name, if_exists, action, args = parsed
+        action, args = parsed
+        name = st.head.name
         state = self.store.table(name)
         if state is None:
-            if if_exists:
+            if st.head.if_exists:
                 return
             raise UserException(f"ALTER TABLE: unknown table '{name}'")
         from pyspark.sql import functions as F
@@ -2681,19 +2621,21 @@ class SparkStatementExecutor:
             raise UserException(f"Unsupported ALTER action: {action}")
         self.store.rewrite(name, new_df, **catalog)
 
-    def _drop(self, name: str, if_exists: bool) -> None:
+    def _drop(self, st: ParsedStatement) -> None:
         """DROP TABLE/VIEW: both kinds live as temp views here (store
-        tables are parquet-backed temp views), so Spark's strict
-        DROP TABLE-vs-VIEW distinction must not leak through."""
-        if not self.store.drop(name) and not if_exists:
-            raise UserException(f"DROP: table or view '{name}' does not exist")
+        tables are parquet-backed temp views); the store record says
+        which kind a script-created name is."""
+        name = st.head.name
+        if not self.store.drop(name, view=st.head.kind == "view"):
+            if not st.head.if_exists:
+                raise UserException(f"DROP: table or view '{name}' does not exist")
 
     # -- CREATE -----------------------------------------------------------
     def _create_view(self, st: ParsedStatement) -> None:
-        name = next(iter(st.outputs), None)
-        if name is None:
-            raise UserException(f"Cannot determine view name in: {st.sql[:100]}")
-        body = _body_after_as(st.sql)
+        name = st.head.name
+        body = spark_query_text(st)
+        if body is None:
+            raise UserException(f"Missing AS <select> body in: {st.sql[:100]}")
         # views inherit TIME/enum column bindings like CTAS outputs
         time_cols, enum_cols = self._body_special_columns(
             body, st.dependencies
@@ -2701,22 +2643,11 @@ class SparkStatementExecutor:
         self.store.create_view(
             name,
             translate(body),
+            replace=st.head.or_replace,
             order_by=_terminal_order_by(body),
             time_columns=time_cols,
             enum_columns=enum_cols,
         )
-
-    def _target_table(self, st: ParsedStatement):
-        """The statement's target TABLE from its outputs set, skipping
-        bookkeeping outputs the parser adds for scheduling (the
-        `returning` view, sequence names advanced by nextval)."""
-        cands = [
-            o for o in st.outputs
-            if o != "returning" and o not in self._sequences
-        ]
-        if cands:
-            return cands[0]
-        return next(iter(st.outputs), None)
 
     def _body_special_columns(self, body: str, deps):
         """(time_cols, enum_cols) a CTAS/VIEW output inherits from its
@@ -2874,16 +2805,8 @@ class SparkStatementExecutor:
         return out
 
     def _create_table(self, st: ParsedStatement) -> None:
-        name = self._target_table(st)
-        if name is None:
-            raise UserException(f"Cannot determine table name in: {st.sql[:100]}")
-        if re.search(r"(?i)\bIF\s+NOT\s+EXISTS\b", st.sql):
-            try:
-                self.spark.table(_bt(name))
-                return  # exists: IF NOT EXISTS is a no-op, not a replace
-            except Exception:  # noqa: BLE001 — not there: create below
-                pass
-        body = _body_after_as(st.sql, allow_missing=True)
+        name = st.head.name
+        body = spark_query_text(st)
         keys: dict = {}
         checks: List[str] = []
         if body is None:
@@ -2923,6 +2846,7 @@ class SparkStatementExecutor:
             df,
             order_by=_terminal_order_by(body or ""),
             empty=body is None,  # bare DDL creates a known-row-free table
+            replace=st.head.or_replace,
             checks=checks,
             enum_columns=enum_cols,
             time_columns=time_cols,
@@ -2931,28 +2855,21 @@ class SparkStatementExecutor:
 
     # -- DML --------------------------------------------------------------
     def _insert(self, st: ParsedStatement) -> None:
-        name = self._target_table(st)
-        sql = st.sql
-        sql, returning = _split_returning(sql)
+        head = st.head
+        name = head.name
+        sql, conflict, returning = _insert_clauses(st.sql)
         # DuckDB constraint-aware forms: OR REPLACE / OR IGNORE
         # modifiers and a trailing ON CONFLICT upsert clause
-        mode: object = None
-        m = re.match(r"\s*INSERT\s+OR\s+(REPLACE|IGNORE)\s+", sql, re.IGNORECASE)
-        if m:
-            mode = m.group(1).lower()
-            sql = re.sub(
-                r"(?i)^\s*INSERT\s+OR\s+(REPLACE|IGNORE)\s+",
-                "INSERT ", sql, count=1,
-            )
-        sql, conflict = _split_on_conflict(sql)
+        mode: object = (
+            "replace" if head.or_replace else "ignore" if head.or_ignore else None
+        )
         if conflict is not None:
             mode = (
                 "ignore"
                 if conflict["action"] == "nothing"
                 else ("update", conflict["sets"], conflict["where"])
             )
-        tail = _insert_source_sql(sql)
-        df = self.spark.sql(translate(tail))
+        df = self.spark.sql(translate(spark_query_text(st)))
         cols = _insert_column_list(sql)
         if cols is None and _insert_is_by_name(sql):
             # DuckDB `INSERT INTO t BY NAME select`: the SELECT's output
@@ -3202,7 +3119,7 @@ class SparkStatementExecutor:
         )
 
     def _update(self, st: ParsedStatement) -> None:
-        name = self._target_table(st)
+        name = st.head.name
         sql, returning = _split_returning(st.sql)
         assignments, from_text, where = _parse_update(sql)
         if from_text is not None:
@@ -3333,7 +3250,7 @@ class SparkStatementExecutor:
             tagged.unpersist()
 
     def _delete(self, st: ParsedStatement) -> None:
-        name = self._target_table(st)
+        name = st.head.name
         sql, returning = _split_returning(st.sql)
         using, where = _delete_using_where(sql)
         if returning is not None and using is not None:
@@ -3373,6 +3290,55 @@ class SparkStatementExecutor:
         self.store.rewrite(name, new_df)
         if returning is not None:
             ret_df.createOrReplaceTempView("returning")
+
+    #: statements the executor's own code parses, by head (verb, kind);
+    #: every other statement is a query ``_run`` hands to Spark
+    _ROUTES = {
+        ("CREATE", "macro"): _create_macro,
+        ("DROP", "macro"): _drop_macro,
+        ("CREATE", "type"): _create_type,
+        ("DROP", "type"): _drop_type,
+        ("CREATE", "sequence"): _create_sequence,
+        ("DROP", "sequence"): _drop_sequence,
+        ("CREATE", "table"): _create_table,
+        ("CREATE", "view"): _create_view,
+        ("DROP", "table"): _drop,
+        ("DROP", "view"): _drop,
+        ("INSERT", ""): _insert,
+        ("UPDATE", ""): _update,
+        ("DELETE", ""): _delete,
+        ("TRUNCATE", "table"): _truncate,
+        ("ALTER", "table"): _alter,
+        ("MERGE", ""): _merge,
+        ("COPY", ""): _copy,
+        ("SUMMARIZE", ""): _summarize_view,
+        ("DESCRIBE", ""): _describe_view,
+        ("SHOW", ""): _describe_view,
+        ("PRAGMA", ""): _engine_statement,
+        ("CHECKPOINT", ""): _engine_statement,
+        ("VACUUM", ""): _engine_statement,
+        ("ANALYZE", ""): _engine_statement,
+        ("SET", ""): _set,
+    }
+
+
+def spark_query_text(st: ParsedStatement) -> Optional[str]:
+    """The DuckDB-dialect text of ``st`` the executor translates and
+    hands to ``spark.sql``: a query whole, the body of CREATE TABLE/VIEW
+    ... AS, an INSERT's source query (its OR REPLACE/IGNORE, ON CONFLICT
+    and RETURNING parts split off). None for a bare-DDL CREATE, for
+    every other statement the executor parses itself, and for a DML or
+    DDL form nothing handles. The startup check parses exactly this."""
+    head = st.head
+    if head.verb == "CREATE" and head.kind in ("table", "view"):
+        return _body_after_as(st.sql, allow_missing=True)
+    if head.verb == "INSERT":
+        return _insert_source_sql(_insert_clauses(st.sql)[0])
+    if (head.verb, head.kind) in SparkStatementExecutor._ROUTES:
+        return None
+    if st.statement_type not in (StatementType.SELECT, StatementType.OTHER):
+        return None
+    return st.sql
 
 
 # -- statement-text helpers (tokenizer-based, string/comment safe) --------
@@ -3949,6 +3915,14 @@ def _split_on_conflict(sql: str):
     return pre, {"cols": cols, "action": "update", "sets": sets, "where": where}
 
 
+def _insert_clauses(sql: str):
+    """(insert_text, on_conflict, returning): an INSERT with its
+    trailing RETURNING and ON CONFLICT clauses split off."""
+    sql, returning = _split_returning(sql)
+    sql, conflict = _split_on_conflict(sql)
+    return sql, conflict, returning
+
+
 def _split_returning(sql: str):
     """Split a trailing top-level ``RETURNING <exprs>`` off an INSERT.
     Returns (sql_without_returning, exprs_text_or_None)."""
@@ -3971,11 +3945,6 @@ def _next_code_idx(tokens: List[Token], i: int) -> int:
     while j < len(tokens) and tokens[j].kind in ("ws", "comment"):
         j += 1
     return j
-
-
-def _code_toks(sql: str) -> List[Token]:
-    """Code tokens of ``sql`` (whitespace/comments stripped)."""
-    return [t for _, t in code_tokens(tokenize(sql))]
 
 
 def _insert_column_list(sql: str) -> Optional[List[str]]:
@@ -4080,24 +4049,15 @@ def _parse_update(
     return assignments, from_text, where
 
 
-def _parse_alter(sql: str):
-    """Parse supported ALTER TABLE forms into
-    ``(table, if_exists, action, args)``; None for unsupported forms."""
-    code = _code(sql)
+def _parse_alter(tail: str):
+    """Parse the action of a supported ALTER TABLE form (the text after
+    its head) into ``(action, args)``; None for unsupported forms."""
+    tokens = tokenize(tail)
+    code = list(code_tokens(tokens))
     n = len(code)
-    if n < 3 or code[0][1].upper != "ALTER" or code[1][1].upper != "TABLE":
+    if n == 0:
         return None
-    i = 2
-    if_exists = False
-    if i + 1 < n and code[i][1].is_kw("IF") and code[i + 1][1].is_kw("EXISTS"):
-        if_exists = True
-        i += 2
-    if i >= n or code[i][1].kind not in ("word", "bident", "qident"):
-        return None
-    name = unquote_name(code[i][1])
-    i += 1
-    if i >= n:
-        return None
+    i = 0
     verb = code[i][1].upper
 
     def _name_at(j):
@@ -4106,12 +4066,12 @@ def _parse_alter(sql: str):
     if verb == "RENAME":
         i += 1
         if i < n and code[i][1].is_kw("TO"):
-            return name, if_exists, "rename_table", {"to": _name_at(i + 1)}
+            return "rename_table", {"to": _name_at(i + 1)}
         if i < n and code[i][1].is_kw("COLUMN"):
             i += 1
         col = _name_at(i)
         if col and i + 1 < n and code[i + 1][1].is_kw("TO"):
-            return name, if_exists, "rename_column", {
+            return "rename_column", {
                 "col": col, "to": _name_at(i + 2),
             }
         return None
@@ -4132,9 +4092,7 @@ def _parse_alter(sql: str):
         if col is None or i + 1 >= n:
             return None
         # remaining text = type [DEFAULT expr]
-        start = code[i + 1][0]
-        tokens = tokenize(sql)
-        rest = tokens[start:]
+        rest = tokens[code[i + 1][0]:]
         default = None
         depth = 0
         for j, t in enumerate(rest):
@@ -4146,10 +4104,10 @@ def _parse_alter(sql: str):
                 default = "".join(x.text for x in rest[j + 1:]).strip()
                 rest = rest[:j]
                 break
-        type_text = "".join(t.text for t in rest).strip().rstrip(";").strip()
+        type_text = "".join(t.text for t in rest).strip()
         if not type_text:
             return None
-        return name, if_exists, "add_column", {
+        return "add_column", {
             "col": col, "type": type_text, "default": default,
             "if_not_exists": if_not,
         }
@@ -4164,7 +4122,7 @@ def _parse_alter(sql: str):
         col = _name_at(i)
         if col is None:
             return None
-        return name, if_exists, "drop_column", {
+        return "drop_column", {
             "col": col, "if_exists": col_if_exists,
         }
     if verb == "ALTER":
@@ -4182,14 +4140,10 @@ def _parse_alter(sql: str):
             return None
         if i + 1 >= n:
             return None
-        start = code[i + 1][0]
-        tokens = tokenize(sql)
-        type_text = (
-            "".join(t.text for t in tokens[start:]).strip().rstrip(";").strip()
-        )
+        type_text = "".join(t.text for t in tokens[code[i + 1][0]:]).strip()
         if not type_text:
             return None
-        return name, if_exists, "set_type", {"col": col, "type": type_text}
+        return "set_type", {"col": col, "type": type_text}
     return None
 
 
@@ -4440,45 +4394,27 @@ _AGG_FN_NAMES = {
 }
 
 
-def _parse_macro(sql: str):
-    """(name, [params], body_text) for ``CREATE [OR REPLACE] MACRO
-    name(p1, p2) AS expr``; None otherwise."""
-    tokens = tokenize(sql)
-    code = _code(sql)
-    n = len(code)
-    i = 0
-    if i >= n or code[i][1].upper != "CREATE":
+def _parse_macro(tail: str):
+    """(params, body_text) for a macro head's tail ``(p1, p2) AS
+    expr``; None otherwise."""
+    tokens = tokenize(tail)
+    code = [i for i, t in enumerate(tokens) if t.kind not in ("ws", "comment")]
+    if not code or tokens[code[0]].text != "(":
         return None
-    i += 1
-    if i + 1 < n and code[i][1].is_kw("OR") and code[i + 1][1].is_kw("REPLACE"):
-        i += 2
-    if i >= n or not code[i][1].is_kw("MACRO", "FUNCTION"):
-        return None
-    i += 1
-    if i >= n or code[i][1].kind not in ("word", "bident", "qident"):
-        return None
-    name = unquote_name(code[i][1])
-    i += 1
-    if i >= n or code[i][1].text != "(":
-        return None
-    close_raw = _matching_paren(tokens, code[i][0])
+    close = _matching_paren(tokens, code[0])
     params = [
-        p.strip().strip('`"')
-        for p in _split_csv_tokens(tokens[code[i][0] + 1: close_raw])
+        p.strip().strip('`"') for p in _split_csv_tokens(tokens[code[0] + 1: close])
     ]
-    while i < n and code[i][0] <= close_raw:
-        i += 1
-    if i >= n or not code[i][1].is_kw("AS"):
+    after = [i for i in code if i > close]
+    if not after or not tokens[after[0]].is_kw("AS"):
         return None
-    body = "".join(t.text for t in tokens[code[i][0] + 1:]).strip().rstrip(";")
     # table macro: AS TABLE <select> — the inline expansion already
     # parenthesizes, and a parenthesized SELECT is a valid derived
     # table, so only the TABLE keyword needs stripping
-    if body.upper().startswith("TABLE"):
-        body = body[5:].strip()
-    if not body:
-        return None
-    return name, params, body
+    if len(after) > 1 and tokens[after[1]].is_kw("TABLE"):
+        after = after[1:]
+    body = "".join(t.text for t in tokens[after[0] + 1:]).strip()
+    return (params, body) if body else None
 
 
 def _pivot_value_literal(v) -> str:
@@ -4699,32 +4635,6 @@ def _parse_copy(sql: str):
             elif u == "FORCE_QUOTE":
                 opts["force_quote_all"] = True
     return source, path, opts
-
-
-def _parse_drop(sql: str) -> Optional[tuple[str, bool]]:
-    """(name, if_exists) for ``DROP TABLE|VIEW [IF EXISTS] name``, else
-    None."""
-    code = _code(sql)
-    if not code or code[0][1].upper != "DROP":
-        return None
-    i = 1
-    if i < len(code) and code[i][1].upper in ("TABLE", "VIEW"):
-        i += 1
-    else:
-        return None
-    if_exists = False
-    if (
-        i + 1 < len(code)
-        and code[i][1].upper == "IF"
-        and code[i + 1][1].upper == "EXISTS"
-    ):
-        if_exists = True
-        i += 2
-    if i >= len(code):
-        return None
-    tok = code[i][1]
-    name = unquote_name(tok) if tok.kind != "string" else tok.text[1:-1]
-    return name, if_exists
 
 
 def _delete_using_where(sql: str) -> tuple[Optional[str], Optional[str]]:

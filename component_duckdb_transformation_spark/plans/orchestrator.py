@@ -27,7 +27,6 @@ Spark job group (the analogue of the reference's future cancellation).
 from __future__ import annotations
 
 import logging
-import re
 import threading
 import time
 from collections import defaultdict
@@ -185,21 +184,11 @@ def build_queries(blocks: Sequence[ConfigBlock]) -> List[Query]:
     return queries
 
 
-_CATALOG_DDL_RE = re.compile(
-    r"^\s*(?:CREATE\s+(?:OR\s+REPLACE\s+)?|DROP\s+)"
-    r"(?:TYPE|SEQUENCE|MACRO|FUNCTION)\b",
-    re.IGNORECASE,
-)
-
-
 def _has_catalog_ddl(q: Query) -> bool:
     """True when any statement in the query is session-catalog DDL
     (types, sequences, macros) whose effects the table-name dependency
     extractor cannot model."""
-    stmts = q.statements or []
-    if stmts:
-        return any(_CATALOG_DDL_RE.match(st.sql or "") for st in stmts)
-    return bool(_CATALOG_DDL_RE.match(q.sql or ""))
+    return any(st.head.is_catalog_ddl for st in q.statements or ())
 
 
 def _batches_for_block(block_queries: List[Query], producers: dict[str, Query]) -> List[Batch]:

@@ -20,7 +20,6 @@ names keep case.
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, field
 from enum import Enum
 from typing import List, Optional, Sequence, Set
@@ -63,6 +62,39 @@ class StatementType(str, Enum):
         )
 
 
+#: object kinds a CREATE/DROP head names; DuckDB's FUNCTION is a MACRO
+_KIND_WORDS = {
+    "TABLE": "table", "VIEW": "view", "MACRO": "macro", "FUNCTION": "macro",
+    "TYPE": "type", "SEQUENCE": "sequence",
+}
+#: session-catalog objects: no table-level outputs the scheduler can see
+_CATALOG_KINDS = ("macro", "type", "sequence")
+#: statements whose subject is a relation named right after the verb
+_SUBJECT_VERBS = ("SUMMARIZE", "DESCRIBE", "SHOW")
+_NOT_A_SUBJECT = ("TABLES", "SELECT", "WITH", "FROM", "VALUES", "TABLE")
+
+
+@dataclass(frozen=True)
+class StatementHead:
+    """What a statement is and what it names, read once from its
+    leading keywords (reference src/sql_parser.py:26-46 asks sqlglot
+    the same question)."""
+
+    verb: str = ""  # CREATE, DROP, INSERT, ...; SELECT for SELECT/WITH queries
+    kind: str = ""  # table | view | macro | type | sequence | "" (none)
+    name: Optional[str] = None  # the target or subject, canonicalized
+    or_replace: bool = False  # CREATE OR REPLACE / INSERT OR REPLACE
+    or_ignore: bool = False  # INSERT OR IGNORE
+    temp: bool = False
+    if_exists: bool = False  # IF EXISTS (DROP, ALTER) / IF NOT EXISTS (CREATE)
+    size: int = 0  # code tokens the head spans
+
+    @property
+    def is_catalog_ddl(self) -> bool:
+        """CREATE or DROP of a macro, type or sequence."""
+        return self.verb in ("CREATE", "DROP") and self.kind in _CATALOG_KINDS
+
+
 @dataclass
 class ParsedStatement:
     sql: str
@@ -74,6 +106,20 @@ class ParsedStatement:
     # the export layer can re-apply ordering (Spark temp views do not
     # persist order; see SURVEY §7 hard-part 2)
     has_order_by: bool = False
+    head: StatementHead = field(default_factory=StatementHead)
+
+    @property
+    def tail(self) -> str:
+        """The text after the head: an ALTER's action, a macro's
+        parameters and body, a type's ENUM list, a sequence's options,
+        a DESCRIBE'd query. Read from ``sql`` as it is now, so it
+        follows the executor's rewrites of the body."""
+        tokens = tokenize(self.sql)
+        code = [i for i, t in enumerate(tokens) if t.kind not in ("ws", "comment")]
+        if self.head.size >= len(code):
+            return ""
+        tail = "".join(t.text for t in tokens[code[self.head.size]:])
+        return tail.strip().rstrip(";").rstrip()
 
 
 def parse_script(script: str) -> List[ParsedStatement]:
@@ -84,9 +130,10 @@ def parse_script(script: str) -> List[ParsedStatement]:
 def parse_statement(sql: str) -> ParsedStatement:
     tokens = tokenize(sql)
     code = list(code_tokens(tokens))
-    stype = _classify(code)
+    head = _parse_head(code)
+    stype = _statement_type(head)
     ctes = _collect_cte_aliases(code)
-    outputs = _collect_outputs(code, stype)
+    outputs = _collect_outputs(code, head, stype)
     deps = _collect_dependencies(code)
     deps -= ctes
     # Reference semantics (src/sql_parser.py:104-124): CREATE outputs and
@@ -95,38 +142,20 @@ def parse_statement(sql: str) -> ParsedStatement:
     # the scheduler orders them after the table's producer.
     if stype.is_create or stype == StatementType.INSERT:
         deps -= outputs
-    elif stype in (
-        StatementType.UPDATE,
-        StatementType.DELETE,
-        StatementType.DROP,
-        StatementType.ALTER,
-        StatementType.MERGE,
-    ):
+    elif stype.mutates:
         # the target must exist first: order after its producer
         deps |= outputs
-    elif stype == StatementType.OTHER and code:
+    elif head.verb in _SUBJECT_VERBS and head.name:
         # SUMMARIZE/DESCRIBE/SHOW read their subject table: order after
         # its producer (the subject is not FROM-introduced, so the
         # generic dependency scan misses it)
-        head = code[0][1].upper
-        if head in ("SUMMARIZE", "DESCRIBE", "SHOW") and len(code) > 1:
-            if not code[1][1].is_kw(
-                "TABLES", "SELECT", "WITH", "FROM", "VALUES", "TABLE"
-            ):
-                name, _ = _dotted_name(code, 1)
-                if name:
-                    deps.add(name)
-    # sequence statements: CREATE/DROP SEQUENCE writes the sequence
-    # name; nextval advances it (read-modify-write), so it is an output
-    # too — writer-serialization edges then order concurrent users
-    seq_m = re.match(
-        r"(?is)\s*(CREATE|DROP)\s+(?:OR\s+REPLACE\s+)?(?:TEMP\w*\s+)?"
-        r"SEQUENCE\s+(?:IF\s+(?:NOT\s+)?EXISTS\s+)?([\w`\"\.]+)", sql
-    )
-    if seq_m:
-        outputs = {seq_m.group(2).strip('`"').lower()}
+        deps.add(head.name)
+    if head.kind == "sequence":
+        # CREATE/DROP SEQUENCE writes the sequence name; nextval
+        # advances it (read-modify-write), so it is an output too —
+        # writer-serialization edges then order concurrent users
+        outputs = {head.name.lower()} if head.name else set()
         deps = set()
-        stype = StatementType.OTHER
     else:
         # token-shaped scan: a string literal containing the pattern
         # (e.g. VALUES ('uses nextval(''s'')')) must not add phantom
@@ -150,7 +179,7 @@ def parse_statement(sql: str) -> ParsedStatement:
                 target.add(seq_name.strip('`"').lower())
         if stype in (
             StatementType.INSERT, StatementType.UPDATE, StatementType.DELETE
-        ) and re.search(r"(?i)\breturning\b", sql):
+        ) and any(t.is_kw("RETURNING") for _, t in code):
             # INSERT/UPDATE/DELETE ... RETURNING registers the
             # `returning` view (added after the mutation branch above
             # folded outputs into deps, so no self-dependency appears)
@@ -163,50 +192,109 @@ def parse_statement(sql: str) -> ParsedStatement:
         dependencies=deps,
         cte_aliases=ctes,
         has_order_by=has_order,
+        head=head,
     )
 
 
-def _classify(code: Sequence[tuple[int, Token]]) -> StatementType:
-    if not code:
-        return StatementType.OTHER
-    words = [t for _, t in code]
-    first = words[0].upper
-    if first == "CREATE":
-        uppers = [w.upper for w in words[1:8]]
-        if "VIEW" in uppers:
-            return StatementType.CREATE_VIEW
-        if "TABLE" in uppers:
-            return StatementType.CREATE_TABLE
-        return StatementType.OTHER
-    if first == "INSERT":
-        return StatementType.INSERT
-    if first == "UPDATE":
-        return StatementType.UPDATE
-    if first == "DELETE":
-        return StatementType.DELETE
-    if first == "DROP":
-        return StatementType.DROP
-    if first == "ALTER":
-        return StatementType.ALTER
-    if first == "MERGE":
-        return StatementType.MERGE
-    if first in ("SELECT", "WITH"):
+def _parse_head(code: Sequence[tuple[int, Token]], i: int = 0) -> StatementHead:
+    """The head of the statement starting at code index ``i``: verb,
+    object kind, target name and the OR REPLACE / TEMP / IF [NOT]
+    EXISTS flags. Only leading keywords are read, so words in literals,
+    comments and bodies never change what a statement is."""
+    n = len(code)
+    if i >= n:
+        return StatementHead()
+    verb = code[i][1].upper
+    if verb in ("SELECT", "WITH"):
         # WITH ... INSERT / WITH ... CREATE TABLE|VIEW are valid in
         # DuckDB (the reference's sqlglot classifies them by the inner
         # statement; its own unit fixtures use the CREATE form)
-        for w in words:
-            if w.is_kw("INSERT"):
-                return StatementType.INSERT
-        if first == "WITH":
-            for j, w in enumerate(words):
-                if w.is_kw("CREATE"):
-                    uppers = [x.upper for x in words[j + 1 : j + 8]]
-                    if "VIEW" in uppers:
-                        return StatementType.CREATE_VIEW
-                    if "TABLE" in uppers:
-                        return StatementType.CREATE_TABLE
-        return StatementType.SELECT
-    return StatementType.OTHER
+        for j in range(i + 1, n):
+            tok = code[j][1]
+            if tok.is_kw("INSERT") or (verb == "WITH" and tok.is_kw("CREATE")):
+                return _parse_head(code, j)
+        return StatementHead("SELECT", size=i + 1)
+    i += 1
+
+    def kw(*words: str) -> bool:
+        nonlocal i
+        if i + len(words) <= n and all(
+            code[i + k][1].is_kw(w) for k, w in enumerate(words)
+        ):
+            i += len(words)
+            return True
+        return False
+
+    flags: dict = {}
+    kind = ""
+    if verb in ("CREATE", "DROP"):
+        if verb == "CREATE":
+            flags["or_replace"] = kw("OR", "REPLACE")
+            flags["temp"] = kw("TEMP") or kw("TEMPORARY")
+        kind = _KIND_WORDS.get(code[i][1].upper, "") if i < n else ""
+        if not kind:
+            return StatementHead(verb, size=i, **flags)
+        i += 1
+        flags["if_exists"] = kw("IF", "NOT", "EXISTS") or kw("IF", "EXISTS")
+    elif verb in ("ALTER", "TRUNCATE"):
+        # TRUNCATE [TABLE] t; ALTER TABLE|VIEW [IF EXISTS] t <action>
+        kind = "table" if kw("TABLE") or verb == "TRUNCATE" else ""
+        if not kind and kw("VIEW"):
+            kind = "view"
+        flags["if_exists"] = kw("IF", "EXISTS")
+    elif verb == "INSERT":
+        flags["or_replace"] = kw("OR", "REPLACE")
+        flags["or_ignore"] = kw("OR", "IGNORE")
+        kw("INTO")
+    elif verb == "DELETE":
+        kw("FROM")
+    elif verb == "MERGE":
+        kw("INTO")
+    elif verb in _SUBJECT_VERBS:
+        if i < n and code[i][1].is_kw(*_NOT_A_SUBJECT):
+            return StatementHead(verb, size=i)
+    elif verb != "UPDATE":
+        return StatementHead(verb, size=i)
+    name, i = _head_name(code, i)
+    return StatementHead(verb, kind, name, size=i, **flags)
+
+
+def _head_name(code: Sequence[tuple[int, Token]], i: int) -> tuple[Optional[str], int]:
+    """A possibly-dotted name at code index ``i`` (a name followed by
+    ``(`` is still a name here: ``CREATE TABLE t (a INT)``,
+    ``CREATE MACRO m(x)``); (None, i) when no name is there."""
+    parts: List[str] = []
+    while i < len(code) and code[i][1].kind in _NAME_KINDS:
+        parts.append(unquote_name(code[i][1]))
+        i += 1
+        if not (i + 1 < len(code) and code[i][1].text == "." and code[i][1].kind == "op"):
+            break
+        i += 1
+    return (".".join(parts) or None), i
+
+
+_VERB_TYPES = {
+    "INSERT": StatementType.INSERT,
+    "UPDATE": StatementType.UPDATE,
+    "DELETE": StatementType.DELETE,
+    # TRUNCATE t empties t: scheduled like DELETE FROM t
+    "TRUNCATE": StatementType.DELETE,
+    "ALTER": StatementType.ALTER,
+    "MERGE": StatementType.MERGE,
+    "SELECT": StatementType.SELECT,
+}
+
+
+def _statement_type(head: StatementHead) -> StatementType:
+    """The scheduling class of a statement, from its head."""
+    if head.verb == "CREATE":
+        return {
+            "table": StatementType.CREATE_TABLE,
+            "view": StatementType.CREATE_VIEW,
+        }.get(head.kind, StatementType.OTHER)
+    if head.verb == "DROP":
+        return StatementType.OTHER if head.is_catalog_ddl else StatementType.DROP
+    return _VERB_TYPES.get(head.verb, StatementType.OTHER)
 
 
 def _dotted_name(code: Sequence[tuple[int, Token]], pos: int) -> tuple[Optional[str], int]:
@@ -294,93 +382,36 @@ def _skip_parens(code: Sequence[tuple[int, Token]], pos: int) -> int:
     return i
 
 
-def _collect_outputs(code: Sequence[tuple[int, Token]], stype: StatementType) -> Set[str]:
+def _collect_outputs(
+    code: Sequence[tuple[int, Token]], head: StatementHead, stype: StatementType
+) -> Set[str]:
     outputs: Set[str] = set()
     n = len(code)
-    if stype.is_create:
-        # CREATE [OR REPLACE] [TEMP|TEMPORARY] TABLE|VIEW [IF NOT EXISTS] name
-        i = 1
-        while i < n and not code[i][1].is_kw("TABLE", "VIEW"):
-            i += 1
-        i += 1
-        while i < n and code[i][1].is_kw("IF", "NOT", "EXISTS"):
-            i += 1
-        name, _ = _dotted_name(code, i)
-        if name is None and i < n:
-            # CTAS target may still be a table-function-looking `name (`
-            # when followed by a column list: CREATE TABLE t (a int, ...)
-            tok = code[i][1]
-            if tok.kind in _NAME_KINDS:
-                name = unquote_name(tok)
-        if name:
-            outputs.add(name)
-    elif stype == StatementType.INSERT:
-        for i, (_, tok) in enumerate(code):
-            if tok.is_kw("INTO") and i + 1 < n:
-                name, _ = _dotted_name(code, i + 1)
-                if name is None and code[i + 1][1].kind in _NAME_KINDS:
-                    name = unquote_name(code[i + 1][1])
-                if name:
-                    outputs.add(name)
-                break
-    elif stype == StatementType.UPDATE:
-        name, _ = _dotted_name(code, 1)
-        if name:
-            outputs.add(name)
-    elif stype == StatementType.MERGE:
-        for i, (_, tok) in enumerate(code):
-            if tok.is_kw("INTO") and i + 1 < n:
-                name, _ = _dotted_name(code, i + 1)
-                if name:
-                    outputs.add(name)
-                break
-    elif stype == StatementType.ALTER:
-        # ALTER TABLE name <action>; RENAME TO also writes the new name
-        i = 1
-        while i < n and code[i][1].is_kw("TABLE", "IF", "EXISTS"):
-            i += 1
-        name, after = _dotted_name(code, i)
-        if name:
-            outputs.add(name)
-            if (
-                after + 1 < n
-                and code[after][1].is_kw("RENAME")
-                and code[after + 1][1].is_kw("TO")
-                and after + 2 < n
-            ):
-                new_name, _ = _dotted_name(code, after + 2)
-                if new_name:
-                    outputs.add(new_name)
-    elif stype == StatementType.DROP:
-        # DROP TABLE|VIEW [IF EXISTS] name
-        i = 1
-        while i < n and code[i][1].is_kw("TABLE", "VIEW", "IF", "EXISTS"):
-            i += 1
-        name, _ = _dotted_name(code, i)
-        if name is None and i < n and code[i][1].kind in _NAME_KINDS:
-            name = unquote_name(code[i][1])
-        if name:
-            outputs.add(name)
-    elif stype == StatementType.DELETE:
-        for i, (_, tok) in enumerate(code):
-            if tok.is_kw("FROM") and i + 1 < n:
-                name, _ = _dotted_name(code, i + 1)
-                if name:
-                    outputs.add(name)
-                break
-    elif stype == StatementType.OTHER and n:
+    if stype != StatementType.OTHER and stype != StatementType.SELECT:
+        if head.name:
+            outputs.add(head.name)
+        # ALTER TABLE name RENAME TO new also writes the new name
+        at = head.size
+        if (
+            stype == StatementType.ALTER
+            and at + 2 < n
+            and code[at][1].is_kw("RENAME")
+            and code[at + 1][1].is_kw("TO")
+        ):
+            new_name, _ = _dotted_name(code, at + 2)
+            if new_name:
+                outputs.add(new_name)
+    elif head.verb in _SUBJECT_VERBS:
         # schema/profile statements register result views the scheduler
         # must sequence like any other producer (executor registers
         # them: SUMMARIZE -> `summarize`, DESCRIBE / SHOW t ->
         # `describe`, SHOW TABLES -> `show_tables`)
-        head = code[0][1].upper
-        if head == "SUMMARIZE":
+        if head.verb == "SUMMARIZE":
             outputs.add("summarize")
-        elif head == "DESCRIBE":
+        elif head.verb == "SHOW" and n > 1 and code[1][1].is_kw("TABLES"):
+            outputs.add("show_tables")
+        else:
             outputs.add("describe")
-        elif head == "SHOW":
-            nxt = code[1][1].upper if n > 1 else ""
-            outputs.add("show_tables" if nxt == "TABLES" else "describe")
     return outputs
 
 

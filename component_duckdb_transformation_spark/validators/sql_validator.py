@@ -3,8 +3,10 @@
 
 The reference parses with sqlglot and runs 8 heuristic checks. Here the
 parse check uses the engine's own tokenizer/classifier plus — when a
-SparkSession is supplied — Spark's real parser on the *translated* SQL
-(our extra stage: validates what will actually execute). The dialect
+SparkSession is supplied — Spark's real parser on the *translated* text
+the executor hands to ``spark.sql`` (``executor.spark_query_text``; our
+extra stage: validates what will actually execute). Statements the
+executor parses itself get the tokenizer-level check only. The dialect
 advice lints are re-targeted at Spark where semantics differ.
 """
 
@@ -26,20 +28,20 @@ from ..functions.dialect import (
     replace_first_composition,
     translate,
 )
-from ..plans.executor import _body_after_as
+from ..plans.executor import spark_query_text
 from ..plans.orchestrator import iterate_blocks, query_name
 from ..plans.sql_parser import parse_script
 from ..plans.sql_tokens import tokenize
 
 LOG = logging.getLogger(__name__)
 
-# statement heads the EXECUTOR handles without Spark parsing the raw
-# text: schema-aware expansions (PIVOT value discovery, COLUMNS),
-# engine no-ops, and the COPY sink
-_EXECUTOR_HANDLED_HEADS = {
-    "PIVOT", "COPY", "PRAGMA", "CHECKPOINT", "VACUUM", "ANALYZE", "SET",
-    "SUMMARIZE", "DESCRIBE", "SHOW",
-}
+# query shapes the executor expands on the live session before Spark
+# sees them (PIVOT value discovery, UNION BY NAME column matching): the
+# raw text is not Spark-parseable by design
+_SESSION_EXPANDED = _re.compile(
+    r"\bPIVOT\s+[^\s(]|\bUNION\s+(ALL\s+|DISTINCT\s+)?BY\s+NAME\b",
+    _re.IGNORECASE,
+)
 
 
 def _three_arg_regexp_replace(sql: str) -> bool:
@@ -222,36 +224,10 @@ class SQLValidator:
             return "Empty or invalid SQL query"
         if self.spark is not None:
             for st in statements:
-                head = st.sql.lstrip().split(None, 1)
-                first = head[0].upper().rstrip(";") if head else ""
-                if first in _EXECUTOR_HANDLED_HEADS or _re.search(
-                    # statement-head anchored (like the executor's own
-                    # routing): the word MACRO in a literal or comment
-                    # must not suppress parse validation
-                    r"\bPIVOT\s+[^\s(]"
-                    r"|^\s*CREATE\s+(OR\s+REPLACE\s+)?(TEMP\w*\s+)?"
-                    r"(MACRO|FUNCTION)\b"
-                    r"|^\s*DROP\s+(MACRO|FUNCTION)\b"
-                    # UNION BY NAME: executor expands schema-aware
-                    r"|\bUNION\s+(ALL\s+|DISTINCT\s+)?BY\s+NAME\b"
-                    # constraint-aware INSERT forms: the executor lowers
-                    # these onto key joins / MERGE itself
-                    r"|^\s*INSERT\s+OR\s+(REPLACE|IGNORE)\b"
-                    r"|\bON\s+CONFLICT\b",
-                    st.sql,
-                    _re.IGNORECASE,
-                ):
-                    # statement shapes the executor interprets itself
-                    # (schema-aware expansion / native handling; incl.
-                    # CREATE ... AS PIVOT tbl ON ...) — the raw text is
-                    # not Spark-parseable by design
-                    continue
-                # the text the executor sends: a CREATE TABLE/VIEW ... AS
-                # runs only its body (which is where QUALIFY lowers)
-                sql = st.sql
-                if st.statement_type.is_create:
-                    sql = _body_after_as(st.sql, allow_missing=True) or sql
                 try:
+                    sql = spark_query_text(st)
+                    if sql is None or _SESSION_EXPANDED.search(sql):
+                        continue
                     # Spark's parser on the translated text — parse only,
                     # no analysis/execution (sessionState is JVM-only in
                     # the Spark 4 Python API, hence the py4j handle)

@@ -181,3 +181,103 @@ def test_views_are_records_without_path(engines):
         assert spark_err is not None and duck_err is not None, sql
     _ok(engines, "DROP VIEW vo", "DROP TABLE base")
     assert ex.store.tables == {}
+
+
+@pytest.mark.parametrize(
+    "statements, want",
+    [
+        (["CREATE TABLE hw AS SELECT 'macro' AS kind"], "macro"),
+        (
+            [
+                "CREATE TABLE hw AS SELECT 1 AS a",
+                "CREATE OR REPLACE TABLE hw AS SELECT 'if not exists' AS s",
+            ],
+            "if not exists",
+        ),
+        (
+            [
+                "CREATE VIEW hw AS SELECT 1 AS a",
+                "CREATE OR REPLACE VIEW hw AS SELECT 'if not exists' AS s",
+            ],
+            "if not exists",
+        ),
+    ],
+)
+def test_head_words_in_literals_do_not_route(engines, statements, want):
+    """What a statement is comes from its head: a string literal that
+    spells MACRO or IF NOT EXISTS changes nothing."""
+    _ok(engines, *statements)
+    spark_rows, duck_rows = _rows(engines, "SELECT * FROM hw")
+    assert spark_rows == duck_rows == [(want,)]
+
+
+def test_temp_macro_expands(engines):
+    ex, _ = engines
+    _ok(
+        engines,
+        "CREATE TEMP MACRO add1(x) AS x + 1",
+        # a body that merely starts with the letters TABLE is scalar
+        "CREATE MACRO tenfold(table_x) AS table_x * 10",
+        "CREATE TABLE m3 AS SELECT add1(2) AS v, tenfold(2) AS w",
+    )
+    assert {"add1", "tenfold"} <= set(ex._macros)
+    spark_rows, duck_rows = _rows(engines, "SELECT * FROM m3")
+    assert spark_rows == duck_rows == [(3, 20)]
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "DROP TABLE dv",
+        "DROP TABLE IF EXISTS dv",
+        "DROP VIEW dt",
+        "DROP VIEW IF EXISTS dt",
+    ],
+)
+def test_drop_of_the_wrong_kind_errors(engines, sql):
+    ex, _ = engines
+    _ok(
+        engines,
+        "CREATE VIEW dv AS SELECT 1 AS k",
+        "CREATE TABLE dt AS SELECT 2 AS k",
+    )
+    spark_err, duck_err = _both(engines, sql)
+    assert duck_err is not None
+    assert spark_err is not None and "trying to replace with type" in spark_err
+    assert ex.store.tables["dv"].path is None
+    assert ex.store.tables["dt"].path is not None
+    for name, want in (("dv", 1), ("dt", 2)):
+        spark_rows, duck_rows = _rows(engines, f"SELECT * FROM {name}")
+        assert spark_rows == duck_rows == [(want,)]
+
+
+def test_drop_unknown_macro_errors(engines):
+    ex, _ = engines
+    _ok(engines, "CREATE MACRO keep1(x) AS x")
+    spark_err, duck_err = _both(engines, "DROP MACRO nomac")
+    assert duck_err is not None
+    assert spark_err is not None and "nomac does not exist" in spark_err
+    _ok(engines, "DROP MACRO IF EXISTS nomac", "CREATE TABLE km AS SELECT keep1(4) AS v")
+    assert set(ex._macros) == {"keep1"}
+    spark_rows, duck_rows = _rows(engines, "SELECT * FROM km")
+    assert spark_rows == duck_rows == [(4,)]
+
+
+@pytest.mark.parametrize("kind", ["TABLE", "VIEW"])
+def test_plain_recreate_errors(engines, kind):
+    ex, _ = engines
+    _ok(engines, f"CREATE {kind} rc AS SELECT 1 AS a")
+    spark_err, duck_err = _both(engines, f"CREATE {kind} rc AS SELECT 2 AS a")
+    assert duck_err is not None
+    assert spark_err is not None and "already exists" in spark_err
+    assert (ex.store.tables["rc"].path is None) == (kind == "VIEW")
+    spark_rows, duck_rows = _rows(engines, "SELECT * FROM rc")
+    assert spark_rows == duck_rows == [(1,)]
+    # OR REPLACE and IF NOT EXISTS still do what they say
+    _ok(
+        engines,
+        f"CREATE {kind} IF NOT EXISTS rc AS SELECT 3 AS a",
+        f"CREATE OR REPLACE {kind} rc AS SELECT 4 AS a",
+    )
+    spark_rows, duck_rows = _rows(engines, "SELECT * FROM rc")
+    assert spark_rows == duck_rows == [(4,)]

@@ -198,6 +198,34 @@ def test_catalog_ddl_barrier_serializes_block():
     assert names == [[["p_0"], ["p_1"], ["p_2"], ["p_3"]]]
 
 
+def test_truncate_is_a_writer():
+    blocks = [Block(name="b", codes=[Code(name="c", script=[
+        "CREATE TABLE t AS SELECT 1 AS x",
+        "TRUNCATE t",
+        "INSERT INTO t SELECT 2",
+    ])])]
+    assert _batch_names(_plan(blocks)) == [[["c_0"], ["c_1"], ["c_2"]]]
+
+
+def test_temp_macro_is_a_catalog_ddl_barrier():
+    blocks = [Block(name="b", codes=[Code(name="p", script=[
+        "CREATE TABLE a AS SELECT 1 AS x",
+        "CREATE TEMP MACRO add1(x) AS x + 1",
+        "CREATE TABLE b AS SELECT add1(2) AS y",
+    ])])]
+    assert _batch_names(_plan(blocks)) == [[["p_0"], ["p_1"], ["p_2"]]]
+
+
+def test_table_macro_is_not_a_table_producer():
+    blocks = [Block(name="b", codes=[Code(name="p", script=[
+        "CREATE MACRO m(x) AS TABLE SELECT x AS y",
+        "CREATE TABLE c AS SELECT * FROM m(5)",
+    ])])]
+    queries = build_queries(blocks)
+    assert queries[0].outputs == set()
+    assert _batch_names(_plan(blocks)) == [[["p_0"], ["p_1"]]]
+
+
 def test_catalog_ddl_barrier_leaves_plain_blocks_parallel():
     blocks = [Block(name="b", codes=[Code(name="p", script=[
         "CREATE TABLE a AS SELECT 1 AS x",

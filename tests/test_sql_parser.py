@@ -113,3 +113,23 @@ def test_from_arg_function_nested_in_where():
         "AND EXISTS (SELECT 1 FROM orders o WHERE o.id = e.id)"
     )[0]
     assert st.dependencies == {"events", "orders"}
+
+
+def test_head_classifies_catalog_ddl():
+    # a table macro's body is not a CREATE TABLE
+    st = parse_statement("CREATE MACRO m(x) AS TABLE SELECT x AS y")
+    assert st.statement_type == StatementType.OTHER
+    assert st.outputs == set()
+    assert (st.head.verb, st.head.kind, st.head.name) == ("CREATE", "macro", "m")
+    assert st.head.is_catalog_ddl
+    st = parse_statement("CREATE TEMP MACRO add1(x) AS x + 1")
+    assert st.head.temp and st.head.is_catalog_ddl
+    # head words inside a literal do not change what a statement is
+    st = parse_statement("CREATE TABLE k AS SELECT 'macro' AS kind")
+    assert st.statement_type == StatementType.CREATE_TABLE
+    assert st.outputs == {"k"} and not st.head.is_catalog_ddl
+    st = parse_statement("CREATE OR REPLACE TABLE t2 AS SELECT 'if not exists' AS s")
+    assert st.head.or_replace and not st.head.if_exists
+    st = parse_statement("CREATE SEQUENCE IF NOT EXISTS \"Sq\" START 3")
+    assert st.outputs == {"sq"} and st.head.if_exists
+    assert st.tail == "START 3"

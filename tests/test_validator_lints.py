@@ -124,6 +124,16 @@ def test_validator_accepts_executor_handled_statements(spark):
         "CREATE TABLE p AS PIVOT src ON k USING count(*) GROUP BY g;",
         "COPY p TO '/tmp/x.csv' (HEADER);",
         "MERGE INTO p USING s ON p.id = s.id WHEN MATCHED THEN DELETE;",
+        # statements the executor parses with its own code: the Spark
+        # parser never sees their raw text
+        "CREATE TYPE mood AS ENUM ('sad', 'ok', 'happy');",
+        "CREATE SEQUENCE sid START 1000 INCREMENT 10;",
+        "CREATE TABLE e (k BIGINT PRIMARY KEY, m mood, s VARCHAR);",
+        "ALTER TABLE e ADD COLUMN note VARCHAR DEFAULT '?';",
+        "UPDATE e SET s = n.n_name FROM nation n WHERE e.k = n.n_nationkey;",
+        "UPDATE e SET m = 'ok' WHERE k % 50 = 0 RETURNING k;",
+        "TRUNCATE e;",
+        "CREATE TEMP MACRO add1(x) AS x + 1;",
     ])])]
     res = v.validate_queries(blocks)
     assert "Syntax error" not in res.message, res.message
@@ -147,10 +157,15 @@ def test_validator_parses_ctas_body_with_qualify(spark):
         "ORDER BY sum(o.net) DESC, c.c_custkey) <= 10",
     ])])])
     assert ok.type.value == "success", ok.message
-    # a real syntax error reports Spark's message, not a blank line
-    bad = v.validate_queries([Block(name="b", codes=[Code(name="c", script=[
+    # a real syntax error reports Spark's message, not a blank line;
+    # an INSERT's source query is parsed too
+    for sql in (
         "CREATE TABLE t AS SELECT a FROM x WHERE a = = 1",
-    ])])])
-    assert bad.type.value == "danger"
-    err = bad.message.split("Syntax error:", 1)[1].splitlines()[0]
-    assert err.strip()
+        "INSERT INTO t SELECT a FROM x WHERE a = = 1",
+    ):
+        bad = v.validate_queries([Block(name="b", codes=[Code(name="c", script=[
+            sql,
+        ])])])
+        assert bad.type.value == "danger", sql
+        err = bad.message.split("Syntax error:", 1)[1].splitlines()[0]
+        assert err.strip(), sql

@@ -320,13 +320,22 @@ def gen_ops(g: random.Random, n_ops: int) -> list:
     return ops
 
 
+#: statement-head words a created body's string literal spells
+_HEAD_WORDS = ("macro", "if not exists", "drop table", "create sequence")
+
+
 def _catalog_ops(g: random.Random, has_t2, has_t3, has_enum, has_t7) -> list:
     """Catalog statements (every relation is one record): RENAME to a
     fresh name on a PRIMARY KEY, ENUM or TIME table, use it there and
     (mostly) rename it back; RENAME onto an existing table; DROP and
-    re-create with another body; CREATE OR REPLACE VIEW over a table.
-    The error cases must fail on both engines and change nothing."""
-    pick = g.randrange(4)
+    re-create with another body; CREATE OR REPLACE VIEW over a table;
+    CTAS bodies whose string literals spell head words; DROP TABLE of a
+    view and DROP VIEW of a table; a plain re-CREATE of an existing
+    name. The error cases must fail on both engines and change
+    nothing. Most created bodies carry a string literal spelling a
+    statement-head word: what a statement is comes from its head."""
+    pick = g.randrange(7)
+    w = f"'{g.choice(_HEAD_WORDS)}' AS w"
     keyed = [t for t, have in (("t3", has_t3), ("t4", has_enum), ("t7", has_t7))
              if have]
     if pick == 0 and keyed:
@@ -369,12 +378,37 @@ def _catalog_ops(g: random.Random, has_t2, has_t3, has_enum, has_t7) -> list:
                   f"WHERE o_orderkey % {m} = 0",
         }[t]
         return [f"DROP TABLE {t}", f"CREATE TABLE {t} AS {body}"]
+    if pick == 4:
+        t = g.choice(["t15", "t16"])
+        replace = "OR REPLACE " if g.random() < 0.7 else ""
+        return [
+            f"CREATE {replace}TABLE {t} AS SELECT k, {w} FROM t1 "
+            f"WHERE k % {g.choice([2, 3, 5])} = 0"
+        ]
+    if pick == 5:
+        guard = "IF EXISTS " if g.random() < 0.5 else ""
+        if g.random() < 0.5:
+            return [
+                f"CREATE OR REPLACE VIEW v1 AS SELECT k, s, {w} FROM t1 "
+                "WHERE k % 2 = 0",
+                f"DROP TABLE {guard}v1",
+            ]
+        return [f"DROP VIEW {guard}{g.choice(existing)}"]
+    if pick == 6:
+        # a plain CREATE over an existing table or view
+        if g.random() < 0.5:
+            return [f"CREATE TABLE {g.choice(existing)} AS SELECT 1 AS k, {w}"]
+        return [
+            f"CREATE OR REPLACE VIEW v1 AS SELECT k, {w} FROM t1 WHERE k % 3 = 0",
+            f"CREATE VIEW v1 AS SELECT k, {w} FROM t1",
+        ]
     if g.random() < 0.5:
-        return [f"CREATE OR REPLACE VIEW {g.choice(existing)} AS SELECT 1 AS k"]
+        return [f"CREATE OR REPLACE VIEW {g.choice(existing)} AS SELECT 1 AS k, {w}"]
     return [
-        "CREATE OR REPLACE VIEW v1 AS SELECT k, s FROM t1 "
+        f"CREATE OR REPLACE VIEW v1 AS SELECT k, s, {w} FROM t1 "
         f"WHERE k % {g.choice([2, 3])} = 0 ORDER BY k",
-        "CREATE OR REPLACE TABLE t14 AS SELECT s, count(*) AS n FROM v1 GROUP BY s",
+        f"CREATE OR REPLACE TABLE t14 AS SELECT s, count(*) AS n, {w} FROM v1 "
+        "GROUP BY s",
     ]
 
 

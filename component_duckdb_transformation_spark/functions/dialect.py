@@ -636,79 +636,10 @@ def _derive_alias_static_hints(tokens: List[Token]) -> Dict[str, str]:
     return out
 
 
-#: session-catalog probing for hint-less translate() calls (r13). The
-#: test suite disables it globally (conftest autouse fixture): temp
-#: views leak across tests in one SparkSession, so a translation-shape
-#: assertion would otherwise depend on which tests ran before it.
-_AUTO_CATALOG_HINTS: ContextVar[bool] = ContextVar(
-    "auto_catalog_hints", default=True
-)
-
-
-@contextlib.contextmanager
-def auto_catalog_hints(enabled: bool):
-    """Enable/disable the active-session catalog probe for hint-less
-    ``translate()`` calls within the block."""
-    token = _AUTO_CATALOG_HINTS.set(enabled)
-    try:
-        yield
-    finally:
-        _AUTO_CATALOG_HINTS.reset(token)
-
-
-def _session_catalog_hints(sql: str):
-    """``(hints, shadowed)`` resolved from the ACTIVE SparkSession's
-    catalog for a hint-less ``translate()`` call (r13): the statement's
-    dependency tables are schema-probed exactly as the executor does
-    (``statement_type_hints``), so raw entry points get the same
-    typed dispatch (len/brackets/``||``/DECIMAL quantiles) as executor
-    statements. None when no session is reachable, no dependency
-    resolves, or anything at all goes wrong — the sessionless path
-    stays the documented no-static-type corner."""
-    try:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-    except Exception:  # noqa: BLE001 — no pyspark runtime reachable
-        return None
-    if spark is None:
-        return None
-    try:
-        from ..plans.executor import statement_type_hints
-        from ..plans.sql_parser import parse_statement
-
-        deps = parse_statement(sql).dependencies
-        if not deps:
-            return None
-        shadowed: set = set()
-        hints = statement_type_hints(
-            spark, sql, deps, shadowed_out=shadowed
-        )
-        if not hints and not shadowed:
-            return None
-        return hints, shadowed
-    except Exception:  # noqa: BLE001 — probe must never break translate
-        return None
-
-
 def translate(sql: str) -> str:
-    """Translate one DuckDB-dialect statement to Spark SQL."""
+    """Translate one DuckDB-dialect statement to Spark SQL: a pure
+    function of the text and the hints ``column_type_hints`` publishes."""
     tokens = tokenize(sql)
-    if not _TYPE_HINTS.get() and _AUTO_CATALOG_HINTS.get():
-        probe = _session_catalog_hints(sql)
-        if probe is not None:
-            hints, shadowed = probe
-            t1 = _TYPE_HINTS.set(hints)
-            t2 = _HINT_SHADOWED.set(frozenset(shadowed))
-            try:
-                return _translate_with_alias_hints(tokens)
-            finally:
-                _HINT_SHADOWED.reset(t2)
-                _TYPE_HINTS.reset(t1)
-    return _translate_with_alias_hints(tokens)
-
-
-def _translate_with_alias_hints(tokens: List[Token]) -> str:
     # In-statement alias typing (r10): `SELECT <statically-typed expr>
     # AS d` publishes d's type for the REST of this statement, so
     # downstream round/ceil/`||`/rendering templates dispatch on the
@@ -758,7 +689,6 @@ def _translate_tokens_inner(tokens: List[Token]) -> str:
     tokens = _rewrite_operator_fn_aliases(tokens)
     tokens = _rewrite_polymorphic_len(tokens)
     tokens = _rewrite_collations(tokens)
-    tokens = _rewrite_star_replace(tokens)
     tokens = _rewrite_similar_to(tokens)
     tokens = _rewrite_glob(tokens)
     tokens = _rewrite_asof_join(tokens)
@@ -3506,13 +3436,6 @@ _WIN_OS_SITE_COUNTER = _itertools.count(1)  # thread-safe in CPython
 _WIN_OS_GEN_COUNTER = _itertools.count(1)
 _WIN_OS_GEN: ContextVar[int] = ContextVar("win_os_gen", default=0)
 
-#: bounded trailing ROWS frames stream at EVERY width — measured at
-#: sf0.1: the compiled treap beats the interpreted fold even at frame 4
-#: (wmad_b 0.88 -> 0.53 s, wqc 0.62 -> 0.34 s), because the fold's cost
-#: is dominated by per-row frame materialization + lambda machinery,
-#: not the sort. Kept as a knob for A/B.
-_WIN_OS_PREC_MIN = 0
-
 #: FOLLOWING-bounded ROWS frames stream via the lead-shifted input
 #: (see DuckWinOS.java): the b-row lookahead costs one lead() window
 #: column plus b+1 seed leads evaluated only through the rn=1 CASE arm
@@ -4013,8 +3936,6 @@ def _qcont_streaming_or_none(
         return None
     parsed = _resolved_spec(spec, shared_prefix)
     if parsed is None:
-        return None
-    if parsed[1] == "rows_prec" and int(str(parsed[2]).split("_")[0]) < _WIN_OS_PREC_MIN:
         return None
     ch = _parse_literal_decimal_chain(core)
     if ch is not None and not ch[3] and ch[1] <= 15:
@@ -6946,10 +6867,7 @@ def _rewrite_mad_window_inplace(
                         repl = None
                         if shared_prefix is not None:
                             parsed = _resolved_spec(spec, shared_prefix)
-                            if parsed is not None and (
-                                parsed[1] != "rows_prec"
-                                or int(str(parsed[2]).split("_")[0]) >= _WIN_OS_PREC_MIN
-                            ):
+                            if parsed is not None:
                                 mmode, mcore, mwrap = _mad_mode_and_wrap(
                                     core, temporal
                                 )
@@ -14550,132 +14468,6 @@ def _rewrite_call_shims(
     return out
 
 
-def expand_columns_macro(sql: str, schema_lookup) -> str:
-    """Expand DuckDB's ``COLUMNS(...)`` dynamic projection using the
-    actual table schema, BEFORE translation (the translator itself is
-    schema-free, so this takes a ``schema_lookup(table) -> [col] | None``
-    callback — the executor passes one backed by the live session).
-
-    Matches DuckDB semantics: ``COLUMNS('regex')`` keeps columns whose
-    name CONTAINS a regex match (``re.search``), ``COLUMNS(*)`` keeps
-    all; an enclosing expression is replicated once per matched column
-    and the result keeps the plain column name (``min(COLUMNS('x'))``
-    yields columns named after the inputs). Supported shape: select
-    items over a single-table FROM; anything else is returned unchanged
-    (multi-table FROM, aliased COLUMNS items, unknown tables)."""
-    if "columns" not in sql.lower():
-        return sql
-    tokens = _expand_columns_tokens(tokenize(sql), schema_lookup)
-    return "".join(t.text for t in tokens)
-
-
-def _expand_columns_tokens(tokens: List[Token], lookup) -> List[Token]:
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "op" and tok.text == "(":
-            close = _matching_paren(tokens, i)
-            if close > i:
-                out.append(tok)
-                out.extend(_expand_columns_tokens(tokens[i + 1 : close], lookup))
-                out.append(tokens[close])
-                i = close + 1
-                continue
-        out.append(tok)
-        i += 1
-    return _expand_columns_scope(out, lookup)
-
-
-def _expand_columns_scope(tokens: List[Token], lookup) -> List[Token]:
-    import re as _re
-
-    n = len(tokens)
-    # first depth-0 SELECT: handles bare SELECT and CREATE ... AS SELECT
-    first = None
-    depth = 0
-    for j in range(n):
-        t = tokens[j]
-        if t.kind == "op" and t.text == "(":
-            depth += 1
-        elif t.kind == "op" and t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.is_kw("SELECT"):
-            first = j
-            break
-    if first is None:
-        return tokens
-    depth = 0
-    from_idx = None
-    for j in range(first + 1, n):
-        t = tokens[j]
-        if t.kind == "op" and t.text == "(":
-            depth += 1
-        elif t.kind == "op" and t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.is_kw("FROM") and from_idx is None:
-            from_idx = j
-    if from_idx is None:
-        return tokens
-    # single-table FROM only
-    t_idx = _next_code(tokens, from_idx)
-    if t_idx >= n or tokens[t_idx].kind not in ("word", "bident", "qident"):
-        return tokens
-    table = tokens[t_idx].text.strip('`"')
-    after = _next_code(tokens, t_idx)
-    if after < n and (
-        (tokens[after].kind == "op" and tokens[after].text == ",")
-        or tokens[after].is_kw("JOIN", "INNER", "LEFT", "RIGHT", "FULL", "CROSS")
-    ):
-        return tokens
-    sel_start = _next_code(tokens, first)
-    if sel_start < n and tokens[sel_start].is_kw("DISTINCT"):
-        sel_start = _next_code(tokens, sel_start)
-    items = _split_top_commas(tokens, sel_start, from_idx)
-    if not any(
-        t.kind == "word" and t.text.lower() == "columns"
-        for s, e in items
-        for t in tokens[s:e]
-    ):
-        return tokens
-    cols_of_table = lookup(table)
-    if not cols_of_table:
-        return tokens
-
-    new_items: List[str] = []
-    for s, e in items:
-        item = tokens[s:e]
-        call = _find_columns_call(item)
-        if call is None:
-            new_items.append(_sql(tokens, s, e))
-            continue
-        c_start, c_end, arg = call
-        if _top_level_positions(item, 0, len(item), lambda t: t.is_kw("AS")):
-            return tokens  # aliased COLUMNS item: unsupported, bail out
-        if arg == "*":
-            matched = list(cols_of_table)
-        else:
-            try:
-                rx = _re.compile(arg)
-            except _re.error:
-                return tokens
-            matched = [c for c in cols_of_table if rx.search(c)]
-        if not matched:
-            return tokens
-        call_text = "".join(t.text for t in item[c_start:c_end])
-        item_text = "".join(t.text for t in item).strip()
-        standalone = item_text == call_text.strip()
-        for col in matched:
-            if standalone:
-                new_items.append(col)
-            else:
-                new_items.append(item_text.replace(call_text, col) + f" AS {col}")
-    head = "".join(t.text for t in tokens[:sel_start])
-    tail = "".join(t.text for t in tokens[from_idx:])
-    return _toks(head + ", ".join(new_items) + " " + tail)
-
-
 def _find_columns_call(item: List[Token]):
     """(start, end_exclusive, arg) of the first COLUMNS(...) call in a
     select item; arg is the regex text or '*'. None when absent or not
@@ -14718,49 +14510,79 @@ def _find_columns_call(item: List[Token]):
     return None
 
 
-class _UbnUnresolvable(Exception):
-    """A UNION BY NAME branch whose schema could not be resolved."""
+#: a ``* [EXCLUDE (...)] REPLACE (`` select item (regex source)
+STAR_REPLACE_PATTERN = r"\*\s*(?:(?:EXCLUDE|EXCEPT)\s*\([^()]*\)\s*)?REPLACE\s*\("
+
+#: a COLUMNS(...) call, a star-REPLACE item or a UNION BY NAME: the
+#: only shapes ``expand_scopes`` rewrites
+_SCOPE_EXPANDED = re.compile(
+    rf"\bcolumns\s*\(|{STAR_REPLACE_PATTERN}|\bUNION\b[\s\S]*?\bBY\s+NAME\b",
+    re.IGNORECASE,
+)
+
+#: depth-0 keywords that end a SELECT branch's FROM clause
+_FROM_CLAUSE_ENDS = (
+    "WHERE", "GROUP", "HAVING", "QUALIFY", "WINDOW", "ORDER", "LIMIT", "OFFSET",
+)
 
 
-def expand_union_by_name(sql: str, resolve_columns) -> str:
-    """Expand DuckDB ``UNION [ALL] BY NAME`` into a column-aligned
-    plain ``UNION [ALL]``, BEFORE translation (Spark has no BY NAME
-    set-op syntax; unionByName is DataFrame-only). Alignment needs the
-    branch schemas, so this takes a ``resolve_columns(duckdb_sql) ->
-    [col] | None`` callback — the executor passes one backed by the
-    live session (lazy analysis, no job). Semantics match DuckDB:
-    result columns are the union of branch columns in first-appearance
-    order (case-insensitive matching, first spelling wins), missing
-    columns fill NULL, plain UNION still deduplicates after alignment,
-    chains fold left-associatively, a trailing ORDER BY/LIMIT applies
-    to the whole union, and WITH clauses stay visible to every branch.
-    Unresolvable branches (or BY NAME mixed with INTERSECT, whose
-    tighter precedence the textual fold can't honor) leave the
-    statement unchanged — it then fails loudly at parse."""
-    import re as _re
+class _Unresolvable(Exception):
+    """A scope that cannot be expanded: its columns did not resolve to
+    unique names, or an item names no expansion DuckDB would accept."""
 
-    if not _re.search(r"\bUNION\b[\s\S]*?\bBY\s+NAME\b", sql, _re.I):
+
+def expand_scopes(sql: str, resolve_columns) -> str:
+    """Expand the DuckDB projections whose columns depend on a schema,
+    BEFORE translation, in one walk over the statement's query scopes
+    (WITH bodies, subqueries, set-op branches):
+
+    - ``COLUMNS('regex' | * | x -> x [I]LIKE 'pat')`` select items
+      expand to the columns of ``SELECT * FROM <the branch's FROM
+      clause>`` whose name contains a regex match; an enclosing
+      expression is replicated once per column and keeps the column's
+      name (``min(COLUMNS('x'))`` yields columns named after the inputs);
+    - ``[alias.]* [EXCLUDE (cols)] REPLACE (expr AS col, ...)`` items
+      expand to the columns of ``SELECT [alias.]* FROM <FROM clause>``,
+      each replaced column in its own position (``alias.col`` items for
+      an ``alias.*``);
+    - ``UNION [ALL] BY NAME`` becomes a column-aligned plain ``UNION
+      [ALL]`` (Spark has no BY NAME set-op syntax): the result columns
+      are the union of the branch columns in first-appearance order
+      (case-insensitive matching, first spelling wins), missing columns
+      fill NULL, plain UNION still deduplicates after alignment, chains
+      fold left-associatively and a trailing ORDER BY/LIMIT applies to
+      the whole union.
+
+    Columns come from ``resolve_columns(duckdb_sql) -> [col] | None``
+    with the scope's WITH definitions in view; the executor passes one
+    backed by the live session (lazy analysis, no job). A scope calls
+    it once per distinct query it needs and never without such an
+    item. When a resolution fails or yields names that are not unique
+    case-insensitively (or BY NAME mixes with INTERSECT, whose tighter
+    precedence the textual fold can't honor), the statement is returned
+    unchanged and fails loudly at parse."""
+    if not _SCOPE_EXPANDED.search(sql):
         return sql
     try:
-        tokens = _expand_ubn_scope(tokenize(sql), resolve_columns, [], False)
-    except _UbnUnresolvable:
+        tokens = _expand_scope(tokenize(sql), resolve_columns, [], False)
+    except _Unresolvable:
         return sql
     return "".join(t.text for t in tokens)
 
 
-def _ubn_wrap(ctes: List[str], recursive: bool, text: str) -> str:
+def _with_ctes(ctes: List[str], recursive: bool, text: str) -> str:
     if not ctes:
         return text
     kw = "WITH RECURSIVE " if recursive else "WITH "
     return kw + ", ".join(ctes) + " " + text
 
 
-def _expand_ubn_scope(
+def _expand_scope(
     tokens: List[Token], resolve, ctes: List[str], recursive: bool
 ) -> List[Token]:
-    """Recursively expand BY NAME unions in one query scope. ``ctes``
-    carries enclosing WITH definitions (as ``name AS (body)`` texts) so
-    branch schemas resolve with their CTEs in scope."""
+    """Recursively expand one query scope (see ``expand_scopes``).
+    ``ctes`` carries enclosing WITH definitions (as ``name AS (body)``
+    texts) so branch columns resolve with their CTEs in scope."""
     n = len(tokens)
     # --- split off this scope's statement + WITH prefix (if any)
     with_defs: List[str] = []
@@ -14803,7 +14625,7 @@ def _expand_ubn_scope(
             if not (j < n and tokens[j].kind == "op" and tokens[j].text == "("):
                 break
             body_close = _matching_paren(tokens, j)
-            inner = _expand_ubn_scope(
+            inner = _expand_scope(
                 tokens[j + 1 : body_close],
                 resolve,
                 ctes + with_defs,
@@ -14845,7 +14667,7 @@ def _expand_ubn_scope(
             if close > i:
                 out.append(t)
                 out.extend(
-                    _expand_ubn_scope(
+                    _expand_scope(
                         body[i + 1 : close], resolve, scope_ctes, scope_recursive
                     )
                 )
@@ -14888,22 +14710,28 @@ def _expand_ubn_scope(
             k = end
             continue
         k += 1
-    if not any(op[4] for op in ops):
-        return prefix_toks + out
-    if any(op[2] in ("INTERSECT", "MINUS") for op in ops):
-        raise _UbnUnresolvable()  # precedence-unsafe mix
+    resolved: Dict[str, List[str]] = {}
 
     def _res(text: str) -> List[str]:
-        cols = resolve(_ubn_wrap(scope_ctes, scope_recursive, text))
-        if cols is None:
-            raise _UbnUnresolvable()
-        return list(cols)
+        text = _with_ctes(scope_ctes, scope_recursive, text)
+        if text not in resolved:
+            cols = resolve(text)
+            if cols is None or len({c.lower() for c in cols}) < len(cols):
+                raise _Unresolvable()
+            resolved[text] = list(cols)
+        return resolved[text]
 
-    # --- branch texts and trailing ORDER BY/LIMIT/OFFSET
+    # --- set-op branches (even pieces) and operators (odd pieces)
     bounds = [0] + [b for op in ops for b in (op[0], op[1])] + [no]
-    branches = []
-    for bi in range(0, len(bounds) - 1, 2):
-        branches.append(out[bounds[bi] : bounds[bi + 1]])
+    pieces = [out[bounds[p] : bounds[p + 1]] for p in range(len(bounds) - 1)]
+    for p in range(0, len(pieces), 2):
+        pieces[p] = _expand_items(pieces[p], _res)
+    if not any(op[4] for op in ops):
+        return prefix_toks + [t for piece in pieces for t in piece]
+    if any(op[2] in ("INTERSECT", "MINUS") for op in ops):
+        raise _Unresolvable()  # precedence-unsafe mix
+    # --- trailing ORDER BY/LIMIT/OFFSET of the last branch
+    branches = pieces[0::2]
     last = branches[-1]
     tail: List[Token] = []
     depth = 0
@@ -14919,10 +14747,10 @@ def _expand_ubn_scope(
     texts = ["".join(t.text for t in b).strip() for b in branches]
     # --- left-associative fold
     cur = texts[0]
-    for oi, (start, end, kind, all_flag, by_name) in enumerate(ops):
+    for oi, (_, _, _, all_flag, by_name) in enumerate(ops):
         nxt = texts[oi + 1]
         if not by_name:
-            op_text = "".join(t.text for t in out[start:end])
+            op_text = "".join(t.text for t in pieces[2 * oi + 1])
             cur = f"{cur} {op_text} {nxt}"
             continue
         cl, cr = _res(cur), _res(nxt)
@@ -14947,69 +14775,145 @@ def _expand_ubn_scope(
     tail_text = "".join(t.text for t in tail)
     return prefix_toks + _toks(cur + (" " + tail_text if tail_text else ""))
 
-
-def _rewrite_star_replace(tokens: List[Token]) -> List[Token]:
-    """DuckDB ``SELECT * [EXCLUDE (cols)] REPLACE (expr AS col, ...)`` ->
-    ``* EXCEPT (cols..., col...), expr AS col, ...`` (replaced columns
-    move to the end of the projection; the column SET is identical).
-    An EXCLUDE without REPLACE is left for the plain EXCLUDE->EXCEPT
-    rename. A ``* REPLACE(s, 'a', 'b')`` string-function call never
-    matches: the rewrite requires every REPLACE item to carry a
-    top-level AS."""
-    out: List[Token] = []
-    i = 0
+def _expand_items(tokens: List[Token], res) -> List[Token]:
+    """One SELECT branch with its COLUMNS(...) and star-REPLACE select
+    items expanded against the branch's FROM clause (``res(query) ->
+    [col]`` resolves a query's columns in the branch's scope)."""
     n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "op" and tok.text == "*":
-            excl_cols: List[str] = []
-            k = _next_code(tokens, i)
-            if (
-                k < n
-                and tokens[k].kind == "word"
-                and tokens[k].upper in ("EXCLUDE", "EXCEPT")
-            ):
-                p = _next_code(tokens, k)
-                if p < n and tokens[p].text == "(":
-                    c = _matching_paren(tokens, p)
-                    excl_inner = tokens[p + 1 : c]
-                    excl_cols = [
-                        _sql(excl_inner, s, e)
-                        for s, e in _split_top_commas(
-                            excl_inner, 0, len(excl_inner)
-                        )
-                    ]
-                    k = _next_code(tokens, c)
-            if k < n and tokens[k].kind == "word" and tokens[k].upper == "REPLACE":
-                p_open = _next_code(tokens, k)
-                if p_open < n and tokens[p_open].text == "(":
-                    close = _matching_paren(tokens, p_open)
-                    inner = tokens[p_open + 1 : close]
-                    names: List[str] = []
-                    items: List[str] = []
-                    ok = True
-                    for s, e in _split_top_commas(inner, 0, len(inner)):
-                        as_pos = _top_level_positions(
-                            inner, s, e, lambda t: t.is_kw("AS")
-                        )
-                        if not as_pos:
-                            ok = False
-                            break
-                        a = as_pos[-1]
-                        items.append(_sql(inner, s, e))
-                        names.append(_sql(inner, a + 1, e))
-                    if ok and names:
-                        out.extend(
-                            _toks(
-                                f"* EXCEPT ({', '.join(excl_cols + names)}), "
-                                f"{', '.join(items)}"
-                            )
-                        )
-                        i = close + 1
-                        continue
-        out.append(tok)
-        i += 1
-    return out
+    start = _next_code(tokens, -1)
+    if not (start < n and tokens[start].is_kw("SELECT")):
+        return tokens
+    start = _next_code(tokens, start)
+    if start < n and tokens[start].is_kw("ALL", "DISTINCT"):
+        start = _next_code(tokens, start)
+        if start < n and tokens[start].is_kw("ON"):
+            start = _next_code(
+                tokens, _matching_paren(tokens, _next_code(tokens, start))
+            )
+    # the depth-0 FROM (not the one of IS [NOT] DISTINCT FROM)
+    frm = None
+    depth = 0
+    prev = None
+    for j in range(start, n):
+        t = tokens[j]
+        if t.kind in ("ws", "comment"):
+            continue
+        if t.kind == "op" and t.text in ("(", "["):
+            depth += 1
+        elif t.kind == "op" and t.text in (")", "]"):
+            depth -= 1
+        elif depth == 0 and t.is_kw("FROM") and not (prev and prev.is_kw("DISTINCT")):
+            frm = j
+            break
+        prev = t
+    if frm is None:
+        return tokens
+    ends = _top_level_positions(
+        tokens, frm, n, lambda t: t.is_kw(*_FROM_CLAUSE_ENDS)
+    )
+    from_text = _sql(tokens, frm, ends[0] if ends else n)
+    texts: List[str] = []
+    changed = False
+    for s, e in _split_top_commas(tokens, start, frm):
+        new = _expand_item(
+            tokens[s:e], lambda star: res(f"SELECT {star} {from_text}")
+        )
+        changed = changed or new is not None
+        texts.append(_sql(tokens, s, e) if new is None else ", ".join(new))
+    if not changed:
+        return tokens
+    return tokens[:start] + _toks(", ".join(texts) + " ") + tokens[frm:]
+
+
+def _expand_item(item: List[Token], cols_of) -> Optional[List[str]]:
+    """The select items a COLUMNS(...) or ``[alias.]* [EXCLUDE (...)]
+    REPLACE (...)`` item expands to; None for any other item.
+    ``cols_of(star)`` resolves ``SELECT <star> FROM <the FROM clause>``."""
+    code = [j for j, t in enumerate(item) if t.kind not in ("ws", "comment")]
+    if not code:
+        return None
+    first = item[code[0]]
+    if first.kind == "op" and first.text == "*":
+        return _star_replace_item(item, code[0], "", cols_of)
+    if (
+        len(code) >= 3
+        and first.kind in ("word", "bident", "qident")
+        and item[code[1]].kind == "op" and item[code[1]].text == "."
+        and item[code[2]].kind == "op" and item[code[2]].text == "*"
+    ):
+        return _star_replace_item(item, code[2], first.text + ".", cols_of)
+    call = _find_columns_call(item)
+    if call is None:
+        return None
+    c_start, c_end, arg = call
+    if _top_level_positions(item, 0, len(item), lambda t: t.is_kw("AS")):
+        raise _Unresolvable()  # an aliased COLUMNS item names no column
+    cols = cols_of("*")
+    if arg == "*":
+        matched = cols
+    else:
+        try:
+            rx = re.compile(arg)
+        except re.error:
+            raise _Unresolvable() from None
+        matched = [c for c in cols if rx.search(c)]
+    if not matched:
+        raise _Unresolvable()
+    call_text = "".join(t.text for t in item[c_start:c_end])
+    item_text = "".join(t.text for t in item).strip()
+    if item_text == call_text.strip():
+        return [_bt(c) for c in matched]
+    return [f"{item_text.replace(call_text, _bt(c))} AS {_bt(c)}" for c in matched]
+
+
+def _star_replace_item(
+    item: List[Token], star: int, qual: str, cols_of
+) -> Optional[List[str]]:
+    """``qual* [EXCLUDE (cols)] REPLACE (expr AS col, ...)`` (the star at
+    ``item[star]``, ``qual`` is ``alias.`` or empty) as one item per
+    column of ``SELECT qual* FROM ...``; None without a REPLACE list
+    (a plain or EXCLUDE-only star is the translator's)."""
+    n = len(item)
+    excl: set = set()
+    j = _next_code(item, star)
+    if j < n and item[j].is_kw("EXCLUDE", "EXCEPT"):
+        p = _next_code(item, j)
+        if not (p < n and item[p].kind == "op" and item[p].text == "("):
+            return None
+        close = _matching_paren(item, p)
+        for s, e in _split_top_commas(item, p + 1, close):
+            name = [t for t in item[s:e] if t.kind not in ("ws", "comment")]
+            if len(name) != 1:
+                raise _Unresolvable()
+            excl.add(unquote_name(name[0]).lower())
+        j = _next_code(item, close)
+    if not (j < n and item[j].is_kw("REPLACE")):
+        return None
+    p = _next_code(item, j)
+    if not (p < n and item[p].kind == "op" and item[p].text == "("):
+        return None
+    close = _matching_paren(item, p)
+    if _next_code(item, close) < n:
+        raise _Unresolvable()
+    repl: Dict[str, str] = {}
+    for s, e in _split_top_commas(item, p + 1, close):
+        as_pos = _top_level_positions(item, s, e, lambda t: t.is_kw("AS"))
+        name = [
+            t for t in item[as_pos[-1] + 1 : e] if t.kind not in ("ws", "comment")
+        ] if as_pos else []
+        if len(name) != 1 or name[0].kind not in ("word", "bident", "qident"):
+            raise _Unresolvable()
+        repl[unquote_name(name[0]).lower()] = _sql(item, s, as_pos[-1])
+    cols = cols_of(qual + "*")
+    low = {c.lower() for c in cols}
+    if not (repl.keys() <= low and excl <= low):
+        raise _Unresolvable()
+    return [
+        f"({repl[c.lower()]}) AS {_bt(c)}" if c.lower() in repl else qual + _bt(c)
+        for c in cols
+        if c.lower() not in excl
+    ]
+
 
 
 def _rewrite_statement_unpivot(tokens: List[Token]) -> List[Token]:

@@ -24,6 +24,7 @@ All SQL passes through functions.dialect.translate first.
 
 from __future__ import annotations
 
+import contextlib
 import dataclasses
 import logging
 import os
@@ -45,8 +46,7 @@ from ..functions.dialect import (
     _split_top_commas,
     _split_top_level_args,
     column_type_hints,
-    expand_columns_macro,
-    expand_union_by_name,
+    expand_scopes,
     translate,
 )
 from .orchestrator import Query
@@ -903,185 +903,6 @@ class SparkStatementExecutor:
                 f"Conversion Error: Could not convert string '{val}' "
                 f"to ENUM {ename}"
             )
-
-    def _expand_star_replace(self, sql: str) -> str:
-        """Schema-aware ``SELECT * [EXCLUDE (...)] REPLACE (expr AS c)``
-        expansion preserving DuckDB's column ORDER (the replaced column
-        stays in its original position). The dialect's schema-free
-        fallback (`_rewrite_star_replace`) moves replaced columns to
-        the END of the projection — identical column SET, wrong order
-        for positional consumers (INSERT by position, UNION, CSV
-        export). Applies when the star's scope is a single known
-        table/view at depth-0 FROM (optionally aliased); other shapes
-        keep the fallback."""
-        tokens = tokenize(sql)
-        n = len(tokens)
-        # single-table FROM resolution
-        from_tbl = from_alias = None
-        depth = 0
-        k = 0
-        while k < n:
-            t = tokens[k]
-            if t.kind == "op" and t.text in ("(", "["):
-                depth += 1
-            elif t.kind == "op" and t.text in (")", "]"):
-                depth -= 1
-            elif depth == 0 and t.is_kw("FROM"):
-                j = _next_code_idx(tokens, k)
-                if j < n and tokens[j].kind in ("word", "bident", "qident"):
-                    from_tbl = unquote_name(tokens[j])
-                    from_alias = from_tbl
-                    j2 = _next_code_idx(tokens, j)
-                    if j2 < n and tokens[j2].is_kw("AS"):
-                        j3 = _next_code_idx(tokens, j2)
-                        if j3 < n and tokens[j3].kind in (
-                            "word", "bident", "qident"
-                        ):
-                            from_alias = unquote_name(tokens[j3])
-                            j2 = _next_code_idx(tokens, j3)
-                    elif j2 < n and tokens[j2].kind in (
-                        "word", "bident", "qident"
-                    ) and tokens[j2].upper not in (
-                        "WHERE", "GROUP", "ORDER", "LIMIT", "HAVING",
-                        "UNION", "EXCEPT", "INTERSECT", "QUALIFY",
-                        "WINDOW", "OFFSET", "JOIN", "INNER", "LEFT",
-                        "RIGHT", "FULL", "CROSS", "ON", "USING",
-                    ):
-                        from_alias = unquote_name(tokens[j2])
-                        j2 = _next_code_idx(tokens, j2)
-                    if j2 < n and (
-                        tokens[j2].is_kw(
-                            "JOIN", "INNER", "LEFT", "RIGHT", "FULL",
-                            "CROSS", "ASOF", "POSITIONAL",
-                        )
-                        or (tokens[j2].kind == "op" and tokens[j2].text == ",")
-                    ):
-                        from_tbl = None  # multi-table scope: fallback
-                break
-            k += 1
-        if from_tbl is None:
-            return sql
-        cols = self._table_columns(from_tbl)
-        if not cols:
-            return sql
-        out: List[Token] = []
-        i = 0
-        changed = False
-        depth2 = 0
-        while i < n:
-            tok = tokens[i]
-            # only depth-0 stars belong to the resolved FROM scope — a
-            # star inside a nested subquery/CTE body has its own FROM
-            # and is left to the dialect fallback
-            if tok.kind == "op" and tok.text in ("(", "["):
-                depth2 += 1
-            elif tok.kind == "op" and tok.text in (")", "]"):
-                depth2 -= 1
-            if depth2 > 0:
-                out.append(tok)
-                i += 1
-                continue
-            star_lo = i
-            if (
-                tok.kind in ("word", "bident", "qident")
-                and unquote_name(tok).lower() == from_alias.lower()
-            ):
-                d = _next_code_idx(tokens, i)
-                s2 = _next_code_idx(tokens, d) if d < n else n
-                if not (
-                    d < n
-                    and tokens[d].kind == "op" and tokens[d].text == "."
-                    and s2 < n
-                    and tokens[s2].kind == "op" and tokens[s2].text == "*"
-                ):
-                    out.append(tok)
-                    i += 1
-                    continue
-                star = s2
-            elif tok.kind == "op" and tok.text == "*":
-                star = i
-            else:
-                out.append(tok)
-                i += 1
-                continue
-            # optional EXCLUDE/EXCEPT (cols)
-            excl: set = set()
-            k2 = _next_code_idx(tokens, star)
-            if (
-                k2 < n
-                and tokens[k2].kind == "word"
-                and tokens[k2].upper in ("EXCLUDE", "EXCEPT")
-            ):
-                p = _next_code_idx(tokens, k2)
-                if p < n and tokens[p].text == "(":
-                    c = _matching_paren(tokens, p)
-                    for part in _split_top_level_args(tokens, p, c):
-                        code = [
-                            x for x in part
-                            if x.kind not in ("ws", "comment")
-                        ]
-                        if len(code) == 1:
-                            excl.add(unquote_name(code[0]).lower())
-                    k2 = _next_code_idx(tokens, c)
-            if not (
-                k2 < n
-                and tokens[k2].kind == "word"
-                and tokens[k2].upper == "REPLACE"
-            ):
-                out.append(tok)
-                i += 1
-                continue
-            p_open = _next_code_idx(tokens, k2)
-            if not (p_open < n and tokens[p_open].text == "("):
-                out.append(tok)
-                i += 1
-                continue
-            close = _matching_paren(tokens, p_open)
-            repl: Dict[str, str] = {}
-            ok = True
-            for part in _split_top_level_args(tokens, p_open, close):
-                code = [
-                    (ci, x) for ci, x in enumerate(part)
-                    if x.kind not in ("ws", "comment")
-                ]
-                as_pos = None
-                d2 = 0
-                for ci, x in code:
-                    if x.kind == "op" and x.text in ("(", "["):
-                        d2 += 1
-                    elif x.kind == "op" and x.text in (")", "]"):
-                        d2 -= 1
-                    elif d2 == 0 and x.is_kw("AS"):
-                        as_pos = ci
-                if (
-                    as_pos is None
-                    or code[-1][0] <= as_pos
-                    or code[-1][1].kind not in ("word", "bident", "qident")
-                ):
-                    ok = False
-                    break
-                name = unquote_name(code[-1][1]).lower()
-                expr = "".join(x.text for x in part[:as_pos]).strip()
-                repl[name] = expr
-            if not ok or not set(repl) <= {c.lower() for c in cols}:
-                out.append(tok)
-                i += 1
-                continue
-            items = []
-            for c in cols:
-                cl = c.lower()
-                if cl in excl:
-                    continue
-                if cl in repl:
-                    items.append(f"({repl[cl]}) AS {_bt(c)}")
-                else:
-                    items.append(f"{_bt(from_alias)}.{_bt(c)}")
-            out.extend(tokenize(", ".join(items)))
-            changed = True
-            i = close + 1
-            continue
-        # unreachable: loop always advances via continue/append
-        return "".join(t.text for t in out) if changed else sql
 
     def _bind_enum_ordinals(self, sql: str, deps) -> str:
         """DuckDB orders ENUM values by declaration position, not
@@ -2150,15 +1971,15 @@ class SparkStatementExecutor:
         return self._expand_macros(expanded, depth + 1) if changed else expanded
 
     def _table_columns(self, name: str) -> Optional[List[str]]:
-        """Schema lookup for COLUMNS() expansion; None when unknown."""
+        """``name``'s column names; None when unknown."""
         try:
             return self.spark.table(_bt(name)).columns
         except Exception:  # noqa: BLE001 — unknown table: leave unexpanded
             return None
 
     def _resolve_query_columns(self, sql: str) -> Optional[List[str]]:
-        """Column names of a DuckDB-dialect query for UNION BY NAME
-        alignment — lazy analysis only, no job runs."""
+        """Column names of a DuckDB-dialect query (``expand_scopes``'s
+        resolver) — lazy analysis only, no job runs."""
         try:
             return self.spark.sql(translate(sql)).columns
         except Exception:  # noqa: BLE001 — unresolvable: leave unexpanded
@@ -2188,26 +2009,19 @@ class SparkStatementExecutor:
             sc.setLocalProperty("spark.scheduler.pool", None)
 
     # -- routing ----------------------------------------------------------
-    def _statement_type_hints(self, st: ParsedStatement):
-        shadowed: set = set()
+    def _execute_statement(self, st: ParsedStatement) -> None:
         time_columns = {
             dep.lower(): self._catalog(dep).time_columns
             for dep in st.dependencies
         }
-        hints = statement_type_hints(
-            self.spark,
-            st.sql,
-            st.dependencies,
-            time_columns,
-            self._hint_schema_cache,
-            shadowed_out=shadowed,
-        )
-        return hints, shadowed
-
-    def _execute_statement(self, st: ParsedStatement) -> None:
         try:
-            hints, shadowed = self._statement_type_hints(st)
-            with column_type_hints(hints, shadowed):
+            with published_hints(
+                self.spark,
+                st.sql,
+                st.dependencies,
+                time_columns,
+                self._hint_schema_cache,
+            ):
                 self._execute_statement_hinted(st)
         finally:
             # any non-SELECT statement may have changed the schemas it
@@ -2229,25 +2043,12 @@ class SparkStatementExecutor:
             expanded = self._expand_macros(st.sql)
             if expanded != st.sql:
                 st = dataclasses.replace(st, sql=expanded)
-        if "columns" in st.sql.lower():
-            # schema-aware COLUMNS() expansion: upstream tables exist by
-            # the time the statement runs, so the live session resolves
-            # the projection the schema-free translator can't
-            expanded = expand_columns_macro(st.sql, self._table_columns)
-            if expanded != st.sql:
-                st = dataclasses.replace(st, sql=expanded)
-        if "replace" in st.sql.lower() and "*" in st.sql:
-            # schema-aware star-REPLACE expansion preserving DuckDB's
-            # column order (dialect fallback appends replaced cols)
-            expanded = self._expand_star_replace(st.sql)
-            if expanded != st.sql:
-                st = dataclasses.replace(st, sql=expanded)
-        if "union" in st.sql.lower():
-            # schema-aware UNION BY NAME expansion (same live-session
-            # resolution as COLUMNS(); the translator is schema-free)
-            expanded = expand_union_by_name(st.sql, self._resolve_query_columns)
-            if expanded != st.sql:
-                st = dataclasses.replace(st, sql=expanded)
+        # COLUMNS(), star-REPLACE and UNION BY NAME: upstream tables
+        # exist by the time the statement runs, so the live session
+        # resolves the columns the schema-free translator can't
+        expanded = expand_scopes(st.sql, self._resolve_query_columns)
+        if expanded != st.sql:
+            st = dataclasses.replace(st, sql=expanded)
         if "read_" in st.sql.lower():
             # file-reading table functions (read_csv/read_json...):
             # bind each literal-path call to a temp view on the live
@@ -3515,6 +3316,26 @@ _HINT_NONALIAS_KWS = frozenset({
 # words are plain words now (absent from the non-alias set above), so
 # they end expressions without needing an exemption
 _HINT_EXPR_END_KWS = frozenset({"END", "NULL", "TRUE", "FALSE"})
+
+
+@contextlib.contextmanager
+def published_hints(
+    spark: SparkSession,
+    sql: str,
+    dependencies,
+    time_columns: Optional[Dict[str, set]] = None,
+    schema_cache: Optional[Dict[str, list]] = None,
+):
+    """Publish ``sql``'s ``statement_type_hints`` (and the dependency
+    columns they shadow) to every ``translate()`` call in the block —
+    the one way schema types reach the translator."""
+    shadowed: set = set()
+    hints = statement_type_hints(
+        spark, sql, dependencies, time_columns, schema_cache,
+        shadowed_out=shadowed,
+    )
+    with column_type_hints(hints, shadowed):
+        yield
 
 
 def statement_type_hints(

@@ -70,13 +70,10 @@ def build_spark_session(
         # on a cluster where stages shuffle far more than 4 MB/partition
         # it is inert, while locally it keeps mid-size joins from being
         # squashed to 1 task (measured 3-4x on the dedup self-joins).
-        # Override via SPARK_GRAFT_ADVISORY_PARTITION for deployments
-        # that want larger skew-split chunks.
+        # Deployments that want larger skew-split chunks pass their own
+        # size in ``extra_conf``.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "4m"),
-        )
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Concurrent DAG batches (plans.orchestrator) submit jobs from
         # multiple threads; FAIR scheduling keeps one long query from
@@ -88,7 +85,7 @@ def build_spark_session(
         # Tolerate TIMESTAMP(NANOS) parquet (read as BIGINT; converted to
         # us TIMESTAMP_NTZ by sources.parquet_io.read_parquet)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", os.environ.get("CDTS_SPARK_UI", "false"))
+        .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
     if master.startswith("local"):

@@ -21,6 +21,7 @@ from pyspark.sql import SparkSession
 from ..actions.results import MessageType, ValidationResult
 from ..configuration import Block
 from ..functions.dialect import (
+    STAR_REPLACE_PATTERN,
     _matching_paren,
     _next_code,
     _pattern_composable,
@@ -36,10 +37,12 @@ from ..plans.sql_tokens import tokenize
 LOG = logging.getLogger(__name__)
 
 # query shapes the executor expands on the live session before Spark
-# sees them (PIVOT value discovery, UNION BY NAME column matching): the
-# raw text is not Spark-parseable by design
+# sees them (PIVOT value discovery, UNION BY NAME column matching,
+# ``* [EXCLUDE (...)] REPLACE (...)`` star expansion): the raw text is
+# not Spark-parseable by design
 _SESSION_EXPANDED = _re.compile(
-    r"\bPIVOT\s+[^\s(]|\bUNION\s+(ALL\s+|DISTINCT\s+)?BY\s+NAME\b",
+    r"\bPIVOT\s+[^\s(]|\bUNION\s+(ALL\s+|DISTINCT\s+)?BY\s+NAME\b"
+    rf"|{STAR_REPLACE_PATTERN}",
     _re.IGNORECASE,
 )
 

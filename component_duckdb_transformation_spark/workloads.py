@@ -28,7 +28,7 @@ from typing import Callable, Dict, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.dialect import expand_union_by_name, translate
+from .functions.dialect import expand_scopes, translate
 from .operators import dedup, multimodal, sampling, similarity, temporal, text_analysis
 from .operators.asof import asof_join
 from .sources.parquet_io import read_parquet
@@ -97,6 +97,9 @@ class Workload:
     # their state stores): these must not run concurrently with anything
     # else — bench.py chains them instead of pooling them.
     serial: bool = False
+    # the DuckDB-dialect text a SQL-text workload translates (None for
+    # DataFrame-built workloads)
+    sql: Optional[str] = None
 
 
 WORKLOADS: Dict[str, Workload] = {}
@@ -110,8 +113,7 @@ def _add_sql(
     fan_from: str | None = None,
 ) -> None:
     def make(spark: SparkSession, sf_dir: str, _sql=sql) -> DataFrame:
-        from .functions.dialect import column_type_hints
-        from .plans.executor import statement_type_hints
+        from .plans.executor import published_hints
         from .plans.sql_parser import parse_statement
 
         register_tables(spark, sf_dir)
@@ -137,15 +139,12 @@ def _add_sql(
         # same schema-aware dispatch a statement gets through the
         # executor: dependency-table column types published to the
         # translator (len/brackets/|| by type)
-        shadowed: set = set()
-        hints = statement_type_hints(
-            spark, _sql, parse_statement(_sql).dependencies,
-            shadowed_out=shadowed,
-        )
-        with column_type_hints(hints, shadowed):
+        with published_hints(spark, _sql, parse_statement(_sql).dependencies):
             return spark.sql(translate(_sql))
 
-    WORKLOADS[name] = Workload(name, make, oracle if oracle is not None else sql, description)
+    WORKLOADS[name] = Workload(
+        name, make, oracle if oracle is not None else sql, description, sql=sql
+    )
 
 
 def _add_df(
@@ -872,23 +871,26 @@ _UBN_SQL = """
 """
 
 
-def _union_by_name_builder(spark: SparkSession, sf: str) -> DataFrame:
-    """UNION ALL BY NAME: schema-aware alignment (NULL fills, first-
-    appearance column order) via live-session resolution — the same
-    path the statement executor uses."""
+def _session_expanded(sql: str) -> Callable[[SparkSession, str], DataFrame]:
+    """A builder running ``sql`` after ``expand_scopes`` against the
+    live session's columns — the same path the statement executor uses
+    (UNION BY NAME alignment, COLUMNS() projection)."""
 
-    def _resolve(q: str):
-        try:
-            return spark.sql(translate(q)).columns
-        except Exception:  # noqa: BLE001
-            return None
+    def build(spark: SparkSession, sf: str) -> DataFrame:
+        def _resolve(q: str):
+            try:
+                return spark.sql(translate(q)).columns
+            except Exception:  # noqa: BLE001
+                return None
 
-    return spark.sql(translate(expand_union_by_name(_UBN_SQL, _resolve)))
+        return spark.sql(translate(expand_scopes(sql, _resolve)))
+
+    return build
 
 
 _add_df(
     "q55_union_by_name",
-    _union_by_name_builder,
+    _session_expanded(_UBN_SQL),
     _UBN_SQL,
     "UNION ALL BY NAME expanded schema-aware (executor path); oracle "
     "runs DuckDB's native BY NAME union",
@@ -3661,18 +3663,9 @@ _COLUMNS_MACRO_SQL = """
 """
 
 
-def _columns_macro_builder(spark: SparkSession, sf: str) -> DataFrame:
-    from .functions.dialect import expand_columns_macro
-
-    expanded = expand_columns_macro(
-        _COLUMNS_MACRO_SQL, lambda t: spark.table(t).columns
-    )
-    return spark.sql(translate(expanded))
-
-
 _add_df(
     "q44_columns_macro",
-    _columns_macro_builder,
+    _session_expanded(_COLUMNS_MACRO_SQL),
     oracle=_COLUMNS_MACRO_SQL,
     description="COLUMNS('regex') dynamic projection: schema-aware "
     "expansion replicates the enclosing aggregate per matched column "

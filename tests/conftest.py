@@ -27,17 +27,3 @@ def table_store(spark, tmp_path):
     from component_duckdb_transformation_spark.plans.executor import TableStore
 
     return TableStore(spark, str(tmp_path / "warehouse"))
-
-
-@pytest.fixture(autouse=True)
-def _no_auto_catalog_hints():
-    """Temp views leak across tests in the shared SparkSession; the
-    r13 session-catalog probe for hint-less translate() calls would
-    make translation-shape assertions depend on test ORDER. Disabled
-    globally; probe tests re-enable it explicitly."""
-    from component_duckdb_transformation_spark.functions.dialect import (
-        auto_catalog_hints,
-    )
-
-    with auto_catalog_hints(False):
-        yield

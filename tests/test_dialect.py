@@ -327,11 +327,8 @@ def test_distinct_on_in_subquery():
 
 
 def test_star_replace_rewrite():
-    out = translate("SELECT * REPLACE (a * 2 AS a) FROM t").replace("  ", " ")
-    assert "EXCEPT (a)" in out and "a * 2 AS a" in out
-    out2 = translate("SELECT * REPLACE (x + 1 AS x, lower(y) AS y) FROM t")
-    assert "EXCEPT (x, y)" in out2
-    # plain REPLACE function call untouched
+    # star-REPLACE items expand on the live session (expand_scopes,
+    # tests/test_scope_expansion.py); a plain REPLACE call is untouched
     assert translate("SELECT replace(s, 'a', 'b') FROM t") == "SELECT replace(s, 'a', 'b') FROM t"
 
 
@@ -838,9 +835,13 @@ def test_distinct_on_keeps_surviving_order_by():
 
 def test_exclude_replace_qualify_composition(spark):
     """DuckDB * EXCLUDE ... REPLACE ... under QUALIFY inside a CTE —
-    the three rewrites must compose (EXCLUDE folds into the REPLACE
-    EXCEPT list; QUALIFY wraps the result)."""
+    the scope walk expands the star against the CTE's columns and the
+    translator's QUALIFY rewrite wraps the result."""
     import duckdb
+
+    from component_duckdb_transformation_spark.functions.dialect import (
+        expand_scopes,
+    )
 
     sql = (
         "WITH base AS (SELECT * FROM (VALUES (1, 10, 'x'), (1, 20, 'y'), "
@@ -850,7 +851,8 @@ def test_exclude_replace_qualify_composition(spark):
         "ORDER BY k"
     )
     expected = duckdb.sql(sql).fetchall()
-    got = [tuple(r) for r in spark.sql(translate(sql)).collect()]
+    expanded = expand_scopes(sql, lambda q: spark.sql(translate(q)).columns)
+    got = [tuple(r) for r in spark.sql(translate(expanded)).collect()]
     assert got == expected == [(1, 40), (2, 60)]
 
 
@@ -1118,13 +1120,13 @@ def test_asof_join_select_star_schema(spark):
 
 
 def test_union_by_name_expansion(spark):
-    """expand_union_by_name differential battery vs DuckDB: chained,
+    """expand_scopes' UNION BY NAME differential battery vs DuckDB: chained,
     case-insensitive merge, nested subquery, mixed positional+BY NAME,
     trailing ORDER/LIMIT, WITH scoping."""
     import duckdb
 
     from component_duckdb_transformation_spark.functions.dialect import (
-        expand_union_by_name,
+        expand_scopes,
     )
 
     con = duckdb.connect()
@@ -1152,7 +1154,7 @@ def test_union_by_name_expansion(spark):
         "SELECT 1 a, 2 b UNION ALL BY NAME SELECT 3 b, 4 c LIMIT 2",
     ]
     for c in cases:
-        exp = expand_union_by_name(c, res)
+        exp = expand_scopes(c, res)
         assert exp != c, c  # expansion must trigger
         sdf = spark.sql(translate(exp))
         cur = con.execute(c)
@@ -1160,7 +1162,7 @@ def test_union_by_name_expansion(spark):
         assert key(tuple(r) for r in sdf.collect()) == key(cur.fetchall()), c
     # no BY NAME -> untouched
     plain = "SELECT 1 a UNION ALL SELECT 2"
-    assert expand_union_by_name(plain, res) == plain
+    assert expand_scopes(plain, res) == plain
 
 
 def test_polymorphic_len_on_list_expressions(spark):

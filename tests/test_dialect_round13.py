@@ -593,15 +593,15 @@ def test_wide_decimal_quantiles_fuzz(spark, seed):
 
 
 # ---------------------------------------------------------------------------
-# session-catalog probe: hint-less translate() resolves dependency
-# schemas from the ACTIVE session exactly like the executor
+# published hints: the executor's publisher resolves dependency schemas
+# from the session; translate() itself never reads the session
 
 
 def test_session_catalog_probe(spark):
     import duckdb as ddb
 
-    from component_duckdb_transformation_spark.functions.dialect import (
-        auto_catalog_hints,
+    from component_duckdb_transformation_spark.plans.executor import (
+        published_hints,
     )
 
     con = ddb.connect()
@@ -614,18 +614,20 @@ def test_session_catalog_probe(spark):
 
     pq = os.path.join(tempfile.mkdtemp(), "probe13.parquet")
     con.execute(f"COPY pt TO '{pq}' (FORMAT PARQUET)")
-    spark.read.parquet(pq).createOrReplaceTempView("pt")
     q = "SELECT median(d) AS m, quantile_cont(d, 0.3) AS q, mad(d) AS md FROM pt"
-    with auto_catalog_hints(True):
+    spark.catalog.dropTempView("pt")
+    unhinted = translate(q)
+    spark.read.parquet(pq).createOrReplaceTempView("pt")
+    # a plain translate() is a function of the text alone
+    assert translate(q) == unhinted
+    assert "DECIMAL(9,2)" not in unhinted
+    with published_hints(spark, q, ["pt"]):
         tq = translate(q)
-    # decimal dispatch engaged without explicit hints
+    # decimal dispatch engaged by the published dependency schema
     assert "DECIMAL(9,2)" in tq
     got = [tuple(str(x) for x in r) for r in spark.sql(tq).collect()]
     want = [tuple(str(x) for x in r) for r in con.execute(q).fetchall()]
     assert got == want
-    # suite-default: probing disabled, unhinted translation unchanged
-    tq2 = translate(q)
-    assert "DECIMAL(9,2)" not in tq2
 
 
 # ---------------------------------------------------------------------------

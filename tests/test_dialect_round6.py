@@ -353,20 +353,17 @@ def test_any_all_quantifiers(spark):
 
 def test_columns_lambda_like(spark):
     # lambda COLUMNS filter lowers onto the regex path (expansion is
-    # schema-aware in the executor; here via expand_columns_macro)
+    # schema-aware in the executor; here via expand_scopes)
     from component_duckdb_transformation_spark.functions.dialect import (
-        expand_columns_macro,
+        expand_scopes,
     )
 
-    out = expand_columns_macro(
-        "SELECT columns(x -> x LIKE 'l%') FROM src",
-        lambda name: ["lx", "ly", "m"] if name == "src" else None,
-    )
+    def res(q):
+        return ["lx", "ly", "m"] if q == "SELECT * FROM src" else None
+
+    out = expand_scopes("SELECT columns(x -> x LIKE 'l%') FROM src", res)
     assert "lx" in out and "ly" in out and " m" not in out
-    out_i = expand_columns_macro(
-        "SELECT columns(x -> x ILIKE 'L%') FROM src",
-        lambda name: ["lx", "ly", "m"] if name == "src" else None,
-    )
+    out_i = expand_scopes("SELECT columns(x -> x ILIKE 'L%') FROM src", res)
     assert "lx" in out_i and "ly" in out_i
 
 

@@ -8,6 +8,8 @@ oracle the driver uses)."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 
@@ -719,7 +721,11 @@ def test_translate_size_stays_bounded():
     import re
 
     src = open(
-        "/root/repo/component_duckdb_transformation_spark/workloads.py"
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "component_duckdb_transformation_spark",
+            "workloads.py",
+        )
     ).read()
     limits = {
         "q60_window_frame_exclude": 16_000,   # now ~11 KB

@@ -12,16 +12,22 @@ with ``python -m pytest -m slow -q``.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
 import pytest
 
 
+_TOOL = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools", "diff_check.py"
+)
+
+
 @pytest.mark.slow
 def test_full_diff_sf01():
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tools/diff_check.py", "--sf", "0.1"],
+        [sys.executable, _TOOL, "--sf", "0.1"],
         capture_output=True,
         text=True,
         timeout=3600,

@@ -19,13 +19,19 @@ not rounding window aggregates.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
 
+_TOOL = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools", "fuzz_diff.py"
+)
+
+
 def test_fuzz_diff_default_seed():
     proc = subprocess.run(
-        [sys.executable, "/root/repo/tools/fuzz_diff.py", "--n", "150"],
+        [sys.executable, _TOOL, "--n", "150"],
         capture_output=True,
         text=True,
         timeout=1200,

@@ -5,14 +5,20 @@ Two sequences at sf0.001 keep it fast; longer sweeps run ad hoc."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
+
+
+_TOOL = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools", "fuzz_executor.py"
+)
 
 
 def test_fuzz_executor_default_seed():
     proc = subprocess.run(
         [
-            sys.executable, "/root/repo/tools/fuzz_executor.py",
+            sys.executable, _TOOL,
             "--n", "2", "--ops", "8", "--sf-dir", "/root/testdata/sf0.001",
         ],
         capture_output=True,

@@ -1,0 +1,103 @@
+"""COLUMNS(), ``* REPLACE`` and UNION BY NAME expand in the executor's one
+scope walk over any FROM shape (joins, subqueries, CTEs, ``alias.*``),
+compared with DuckDB in rows and in column order."""
+
+from __future__ import annotations
+
+import duckdb
+import pytest
+
+from component_duckdb_transformation_spark.configuration import Block, Code
+from component_duckdb_transformation_spark.plans.executor import (
+    SparkStatementExecutor,
+    TableStore,
+)
+from component_duckdb_transformation_spark.plans.sql_parser import parse_script
+from component_duckdb_transformation_spark.validators.sql_validator import (
+    SQLValidator,
+)
+
+_SETUP = [
+    "CREATE TABLE se_t1 AS SELECT * FROM "
+    "(VALUES (1, 10, 'x'), (2, 20, 'y'), (3, 30, 'z')) v(k, a, s)",
+    "CREATE TABLE se_t2 AS SELECT * FROM (VALUES (1, 100), (2, 200)) v(k, b)",
+    "CREATE TABLE se_t3 AS SELECT * FROM "
+    "(VALUES (1, 'AB', 5), (2, 'Cd', 6)) v(x, y, z)",
+]
+
+_CASES = [
+    # join USING: the replaced column keeps its position
+    "SELECT * REPLACE (a * 10 AS a) FROM se_t1 JOIN se_t2 USING (k)",
+    # FROM subquery
+    "SELECT * REPLACE (a * 10 AS a) FROM (SELECT * FROM se_t1) q",
+    # CTE
+    "WITH c AS (SELECT * FROM se_t1) SELECT * REPLACE (a + 1 AS a) FROM c",
+    # alias.* over a join emits alias.col items
+    "SELECT x.* REPLACE (a * 10 AS a), y.b FROM se_t1 x "
+    "JOIN se_t2 y ON x.k = y.k",
+    # COLUMNS() over a join and over a subquery
+    "SELECT max(COLUMNS('a|b')) FROM se_t1 JOIN se_t2 USING (k)",
+    "SELECT COLUMNS('a|s') FROM (SELECT * FROM se_t1) q",
+    # single-table REPLACE lists
+    "SELECT * REPLACE (a * 2 AS a) FROM se_t1",
+    "SELECT * REPLACE (x + 1 AS x, lower(y) AS y) FROM se_t3",
+    # EXCLUDE ... REPLACE under QUALIFY inside a CTE
+    "WITH base AS (SELECT * FROM (VALUES (1, 10, 'x'), (1, 20, 'y'), "
+    "(2, 30, 'z'), (2, 5, 'w')) t(k, v, s)) "
+    "SELECT * EXCLUDE (s) REPLACE (v * 2 AS v) FROM base "
+    "QUALIFY row_number() OVER (PARTITION BY k ORDER BY v DESC) = 1",
+]
+
+
+def _run(ex, sql):
+    for st in parse_script(sql):
+        ex._execute_statement(st)
+
+
+@pytest.fixture(scope="module")
+def scope_env(spark, tmp_path_factory):
+    ex = SparkStatementExecutor(
+        spark, TableStore(spark, str(tmp_path_factory.mktemp("scope_store")))
+    )
+    con = duckdb.connect()
+    for sql in _SETUP:
+        _run(ex, sql)
+        con.execute(sql)
+    return ex, con
+
+
+def _key(row):
+    return tuple((v is None, str(v)) for v in row)
+
+
+@pytest.mark.parametrize("idx", range(len(_CASES)))
+def test_scope_expansion_matches_duckdb(spark, scope_env, idx):
+    ex, con = scope_env
+    name = f"se_out{idx}"
+    sql = f"CREATE OR REPLACE TABLE {name} AS {_CASES[idx]}"
+    _run(ex, sql)
+    con.execute(sql)
+    cur = con.execute(f"SELECT * FROM {name}")
+    want_cols = [d[0] for d in cur.description]
+    want = sorted((tuple(r) for r in cur.fetchall()), key=_key)
+    got_df = spark.table(name)
+    assert got_df.columns == want_cols
+    assert sorted((tuple(r) for r in got_df.collect()), key=_key) == want
+
+
+def test_unresolvable_scope_is_an_error(scope_env):
+    ex, _ = scope_env
+    # duplicate column names (k from both sides): no unique expansion
+    with pytest.raises(Exception):
+        _run(
+            ex,
+            "CREATE OR REPLACE TABLE se_bad AS SELECT * REPLACE (a + 1 AS a) "
+            "FROM se_t1 x JOIN se_t2 y ON x.k = y.k",
+        )
+
+
+def test_startup_check_skips_star_replace(spark):
+    script = "CREATE TABLE r AS SELECT * EXCLUDE (s) REPLACE (a * 2 AS a) FROM t"
+    blocks = [Block(name="b", codes=[Code(name="c", script=[script])])]
+    result = SQLValidator(spark).validate_queries(blocks)
+    assert "syntactically valid" in result.message, result.message

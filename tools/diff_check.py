@@ -11,6 +11,7 @@ the sf0.01 gate exercises.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
@@ -79,7 +80,7 @@ def main() -> int:
     elif args and "/" in args[0]:
         sf_dir = args.pop(0)
     only = set(args)
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from component_duckdb_transformation_spark.session import build_spark_session
     from component_duckdb_transformation_spark.workloads import TABLES, WORKLOADS
 

@@ -20,6 +20,7 @@ Usage: python tools/fn_parity_sweep.py [--only name1,name2]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
@@ -238,7 +239,7 @@ def main() -> int:
     if "--only" in sys.argv:
         only = set(sys.argv[sys.argv.index("--only") + 1].split(","))
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from component_duckdb_transformation_spark.functions.dialect import translate
     from component_duckdb_transformation_spark.session import build_spark_session
 

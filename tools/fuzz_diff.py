@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import random
 import re
+import os
 import sys
 from typing import List
 
@@ -517,7 +518,8 @@ def r10b_item(g: random.Random) -> str:
 
 
 #: DECIMAL/INT columns added to the fuzz lineitem view on BOTH engines
-#: (main registers the casts and publishes the matching hints) — the
+#: with these types (main registers the casts; the executor's publisher
+#: reads the types back from the view for each statement) — the
 #: hint-dispatched surfaces (decimal round/ceil/floor/trunc, the
 #: negative-scale width clamp, decimal rendering in || / concat) were
 #: previously covered only by hand batteries
@@ -1252,8 +1254,10 @@ def main() -> int:
               f"(seed {seed}, {k} sharded chunks)")
         return 1 if total else 0
 
-    sys.path.insert(0, "/root/repo")
-    from component_duckdb_transformation_spark.functions.dialect import translate
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from component_duckdb_transformation_spark.functions import dialect
+    from component_duckdb_transformation_spark.plans.executor import published_hints
+    from component_duckdb_transformation_spark.plans.sql_parser import parse_statement
     from component_duckdb_transformation_spark.session import build_spark_session
     from component_duckdb_transformation_spark.sources.parquet_io import read_parquet
 
@@ -1274,14 +1278,9 @@ def main() -> int:
             f"FROM read_parquet('{sf_dir}/{table}.parquet')"
         )
 
-    # augment lineitem with real DECIMAL columns on BOTH engines and
-    # publish the matching hints for the whole run (names are unique,
-    # so non-decimal draws are unaffected) — exercises the
-    # hint-dispatched decimal surfaces (see hinted_decimal_item)
-    from component_duckdb_transformation_spark.functions.dialect import (
-        column_type_hints,
-    )
-
+    # augment lineitem with real DECIMAL columns on BOTH engines —
+    # exercises the hint-dispatched decimal surfaces (see
+    # hinted_decimal_item)
     dec_casts = (
         "CAST(l_quantity AS DECIMAL(12,2)) AS dq, "
         "CAST(l_tax AS DECIMAL(8,4)) AS dt, "
@@ -1301,22 +1300,14 @@ def main() -> int:
         f"CREATE OR REPLACE VIEW lineitem AS SELECT *, {dec_casts} "
         f"FROM read_parquet('{sf_dir}/lineitem.parquet')"
     )
-    # publish the table's NATURAL schema hints too (r12): the executor
-    # path always carries dependency schemas, so the production typing
-    # of mixed int/decimal CASE operands etc. is hint-aware — the raw
-    # hint-less entry stays the documented corner, not the fuzz target
-    base_hints = {
-        "l_orderkey": "bigint", "l_partkey": "bigint",
-        "l_suppkey": "bigint", "l_linenumber": "int",
-        "l_quantity": "double", "l_extendedprice": "double",
-        "l_discount": "double", "l_tax": "double",
-        "l_returnflag": "varchar", "l_linestatus": "varchar",
-        "l_shipdate": "timestamp",
-    }
-    hint_ctx = column_type_hints(
-        {**base_hints, **dict(HINTED_DEC_COLS), **dict(WIDE_DEC_COLS)}
-    )
-    hint_ctx.__enter__()
+    # every statement translates as the executor translates it: its
+    # dependency tables' column types published to the translator
+    schema_cache: dict = {}
+
+    def translate(sql: str) -> str:
+        deps = parse_statement(sql).dependencies
+        with published_hints(spark, sql, deps, schema_cache=schema_cache):
+            return dialect.translate(sql)
 
     g = random.Random(seed)
     scalar_n = n * 3 // 5

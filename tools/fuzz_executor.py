@@ -18,6 +18,7 @@ Exit code = number of mismatching sequences.
 from __future__ import annotations
 
 import random
+import os
 import sys
 import tempfile
 
@@ -482,7 +483,7 @@ def main() -> int:
     seed = int(opt("--seed", "626"))
     sf_dir = opt("--sf-dir", "/root/testdata/sf0.01")
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from component_duckdb_transformation_spark.plans.executor import (
         SparkStatementExecutor,
         TableStore,

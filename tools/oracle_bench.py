@@ -27,7 +27,7 @@ def main() -> int:
     if args and "/" in args[0]:
         sf_dir = args.pop(0)
     only = set(args)
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from component_duckdb_transformation_spark.workloads import TABLES, WORKLOADS
 
     con = duckdb.connect()

@@ -46,7 +46,7 @@ from __future__ import annotations
 import contextlib
 import re
 from contextvars import ContextVar
-from typing import Dict, List, Optional
+from typing import Dict, List, NamedTuple, Optional
 
 from .. import engine_version_string
 from ..plans.sql_tokens import Token, _bt, tokenize, unquote_name
@@ -718,17 +718,23 @@ def _translate_tokens_inner(tokens: List[Token]) -> str:
     tokens = _rewrite_date_interval_add(tokens)
     tokens = _rewrite_filter_shorthand(tokens)
     tokens = _rewrite_simple(tokens)
-    tokens = _rewrite_distinct_on_recursive(tokens)
-    tokens = _rewrite_qualify_recursive(tokens)
+    tokens = _innermost_first(tokens, _rewrite_distinct_on, {"distinct"})
+    tokens = _innermost_first(tokens, _rewrite_qualify, {"qualify"})
     tokens = _rewrite_order_null_ordering(tokens)
-    tokens = _rewrite_mad_groupby_recursive(tokens)
-    tokens = _rewrite_entropy_groupby_recursive(tokens)
-    tokens = _rewrite_mad_window_recursive(tokens)
+    tokens = _innermost_first(
+        tokens, lambda t: _rewrite_aggfn_groupby(t, _MAD_SPEC), {"mad"}
+    )
+    tokens = _innermost_first(
+        tokens, lambda t: _rewrite_aggfn_groupby(t, _ENTROPY_SPEC), {"entropy"}
+    )
+    tokens = _innermost_first(tokens, _rewrite_mad_window, {"mad"})
     tokens = _rewrite_mad_window_inplace(tokens)
     tokens = _rewrite_mad_fallback_template(tokens)
     tokens = _rewrite_product_entropy(tokens)
     tokens = _rewrite_ent_window_streaming(tokens)
-    tokens = _rewrite_entropy_window_running_recursive(tokens)
+    tokens = _innermost_first(
+        tokens, _rewrite_entropy_window_running, {"entropy"}
+    )
     tokens = _rewrite_agg_window_frames(tokens)
     tokens = _rewrite_fuse_percentile_cont(tokens)
     # brace-map sentinel back to Spark's variadic map (see
@@ -3370,31 +3376,19 @@ def _mad_mode_and_wrap(core: str, temporal: bool = False):
     corner)."""
     if temporal or _mad_integer_domain(core):
         return 1, core, None
-    ch = _parse_literal_decimal_chain(core)
-    if ch is not None and not ch[3] and ch[1] <= 15:
-        w, s = ch[1], ch[2]
-        p = 10 ** s
-
-        def wrap(body: str) -> str:
-            return (
-                f"CAST(CAST(({body}) AS BIGINT)"
-                f" / CAST({p} AS DECIMAL({s + 1}, 0))"
-                f" AS DECIMAL({w},{s}))"
-            )
-
-        return 2, f"({core}) * {p}", wrap
+    dom = _arg_domain(core)
+    if dom.kind == "dec":
+        return 2, dom.unscaled, lambda body: dom.cast_back(f"({body})")
     return 0, core, None
 
 
 def _mad_template(arg_sql: str) -> str:
     """Fallback ``mad(x)`` = median(abs(x - median(x))) as a pure
-    built-in collect_list template for the shapes the statement
-    restructure can't lift: unlike the grouped-agg pandas UDF (which
-    Spark refuses to plan alongside built-in aggregates in the same
-    Aggregate), this mixes freely and stays JVM-side. O(n) group
-    memory, same documented bound as the entropy/histogram
-    templates — the restructured two-phase plan remains the scale
-    path."""
+    built-in collect_list template folded by the compiled
+    ``__duck_mad_j`` core, for the shapes the grouped two-phase plan
+    can't lift: it mixes freely with other aggregates and stays
+    JVM-side. O(n) group memory, with the loud ``_TEMPLATE_GROUP_LIMIT``
+    guard — the two-phase plan remains the bounded-memory path."""
     core, is_distinct = _split_distinct_prefix(arg_sql)
     mode, core2, wrap = _mad_mode_and_wrap(core)
     # DISTINCT dedupes INSIDE the aggregate, bounding the buffer at the
@@ -3449,55 +3443,109 @@ def _win_os_next_site() -> int:
     return next(_WIN_OS_SITE_COUNTER)
 
 
-def _spec_prefix_frame(spec: str):
-    """Split a window spec into its (PARTITION BY .. ORDER BY ..) prefix
-    and frame clause; classify the frame. Returns
-    ``(prefix_sql, kind, prec)`` with kind in ``rows_run`` / ``range_run``
-    / ``rows_prec`` (prec = N), or None when the frame is any other
-    shape (FOLLOWING bounds, GROUPS, expressions) or the spec has no
-    ORDER BY (full partition — earlier lowerings own that)."""
-    toks = _toks(spec)
+class _WinSpec(NamedTuple):
+    """One parsed window spec. ``text`` is the spec with a trailing
+    ``EXCLUDE NO OTHERS`` dropped (the default, so inert); ``partition``
+    is the text before the ORDER BY, ``order`` the ORDER BY list,
+    ``prefix`` both together (the text before the frame) and ``key`` the
+    prefix normalised for comparison; ``frame`` is the frame clause plus
+    any other EXCLUDE clause, upper-cased and single-spaced."""
+
+    text: str
+    partition: str
+    order: str
+    prefix: str
+    key: str
+    frame: str
+    has_order: bool
+
+    @property
+    def exclude(self) -> bool:
+        return "EXCLUDE" in self.frame.split()
+
+    @property
+    def full(self) -> bool:
+        """The frame is the whole partition: no ORDER BY, or an explicit
+        UNBOUNDED PRECEDING .. UNBOUNDED FOLLOWING frame, and no
+        EXCLUDE clause."""
+        if self.exclude:
+            return False
+        return not self.has_order or self.frame in _FULL_FRAMES
+
+
+_FULL_FRAMES = frozenset(
+    f"{unit} BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
+    for unit in ("ROWS", "RANGE", "GROUPS")
+)
+
+
+def _parse_spec(toks: List[Token]) -> _WinSpec:
+    """Parse the tokens between an OVER's parentheses (or a WINDOW
+    definition's) into a ``_WinSpec``."""
     depth = 0
+    order_at = None
     cut = len(toks)
-    for i, t in enumerate(toks):
-        if t.kind == "op" and t.text == "(":
+    for k, t in enumerate(toks):
+        if t.kind == "op" and t.text in ("(", "["):
             depth += 1
-        elif t.kind == "op" and t.text == ")":
+        elif t.kind == "op" and t.text in (")", "]"):
             depth -= 1
-        elif depth == 0 and t.kind == "word" and t.upper in (
-            "ROWS", "RANGE", "GROUPS",
-        ):
-            cut = i
-            break
-    prefix = "".join(t.text for t in toks[:cut]).strip()
-    frame = " ".join(
-        t.text for t in toks[cut:] if t.kind not in ("ws", "comment")
-    ).upper()
-    code = [t for t in toks[:cut] if t.kind not in ("ws", "comment")]
-    has_order = any(
-        t.kind == "word" and t.upper == "ORDER"
-        and i + 1 < len(code) and code[i + 1].upper == "BY"
-        for i, t in enumerate(code)
+        elif depth == 0 and t.kind == "word":
+            if t.upper in ("ROWS", "RANGE", "GROUPS", "EXCLUDE"):
+                cut = k
+                break
+            if t.upper == "ORDER" and order_at is None:
+                by = _next_code(toks, k)
+                if by < len(toks) and toks[by].is_kw("BY"):
+                    order_at = k
+    head = [t for t in toks[:cut] if t.kind not in ("ws", "comment")]
+    tail = [t for t in toks[cut:] if t.kind not in ("ws", "comment")]
+    frame = " ".join(t.text for t in tail).upper()
+    end = len(toks)
+    if frame.endswith("EXCLUDE NO OTHERS"):
+        frame = frame[: -len("EXCLUDE NO OTHERS")].strip()
+        end = max(k for k, t in enumerate(toks) if t.is_kw("EXCLUDE"))
+    split = cut if order_at is None else order_at
+    return _WinSpec(
+        text=_sql(toks, 0, end),
+        partition=_sql(toks, 0, split),
+        order=_sql(toks, split, cut),
+        prefix=_sql(toks, 0, cut),
+        key=" ".join(
+            t.text.lower() if t.kind == "word" else t.text for t in head
+        ),
+        frame=frame,
+        has_order=order_at is not None,
     )
-    if not has_order:
+
+
+def _frame_kind(spec: _WinSpec):
+    """Classify a spec's frame for the streaming core: ``(kind, prec,
+    rev)`` with kind in ``rows_run`` / ``range_run`` / ``rows_prec``
+    (prec = N) / ``rows_folw``, or None when the frame is any other
+    shape (GROUPS, expressions, EXCLUDE, lookaheads past
+    ``_WIN_OS_FOLW_MAX``) or the spec has no ORDER BY (full partition —
+    earlier lowerings own that)."""
+    if not spec.has_order:
         return None
+    frame = spec.frame
     if frame == "":
-        return (prefix, "range_run", 0, False)
+        return ("range_run", 0, False)
     if frame in (
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW",
         "ROWS UNBOUNDED PRECEDING",
     ):
-        return (prefix, "rows_run", 0, False)
+        return ("rows_run", 0, False)
     if frame in (
         "RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW",
         "RANGE UNBOUNDED PRECEDING",
     ):
-        return (prefix, "range_run", 0, False)
+        return ("range_run", 0, False)
     m = re.fullmatch(
         r"ROWS BETWEEN (\d+) PRECEDING AND CURRENT ROW", frame
     ) or re.fullmatch(r"ROWS (\d+) PRECEDING", frame)
     if m:
-        return (prefix, "rows_prec", m.group(1), False)
+        return ("rows_prec", m.group(1), False)
     # trailing frame ending BEFORE the current row: [i-a, i-b] — every
     # needed value is already seen, so it streams with a b-row
     # delayed insert (r12)
@@ -3505,7 +3553,7 @@ def _spec_prefix_frame(spec: str):
         r"ROWS BETWEEN (\d+) PRECEDING AND (\d+) PRECEDING", frame
     )
     if m and int(m.group(1)) >= int(m.group(2)) >= 1:
-        return (prefix, "rows_prec", f"{m.group(1)}_{m.group(2)}", False)
+        return ("rows_prec", f"{m.group(1)}_{m.group(2)}", False)
     # FOLLOWING-bounded frames (r13): [i-a, i+b] streams on the same
     # trailing machinery with a lead(x, b)-shifted input — the row-i
     # trailing multiset of width a+b+1 IS the frame; b+1 seed leads at
@@ -3514,44 +3562,38 @@ def _spec_prefix_frame(spec: str):
         r"ROWS BETWEEN (\d+) PRECEDING AND (\d+) FOLLOWING", frame
     )
     if m and 1 <= int(m.group(2)) <= _WIN_OS_FOLW_MAX:
-        return (prefix, "rows_folw", f"{m.group(1)}_f{m.group(2)}", False)
+        return ("rows_folw", f"{m.group(1)}_f{m.group(2)}", False)
     if m and int(m.group(2)) == 0:
-        return (prefix, "rows_prec", m.group(1), False)
+        return ("rows_prec", m.group(1), False)
     m = re.fullmatch(
         r"ROWS BETWEEN CURRENT ROW AND (\d+) FOLLOWING", frame
     )
     if m and 1 <= int(m.group(1)) <= _WIN_OS_FOLW_MAX:
-        return (prefix, "rows_folw", f"0_f{m.group(1)}", False)
+        return ("rows_folw", f"0_f{m.group(1)}", False)
     if m and int(m.group(1)) == 0:
-        return (prefix, "rows_prec", "0", False)
+        return ("rows_prec", "0", False)
     m = re.fullmatch(
         r"ROWS BETWEEN UNBOUNDED PRECEDING AND (\d+) FOLLOWING", frame
     )
     if m and 1 <= int(m.group(1)) <= _WIN_OS_FOLW_MAX:
-        return (prefix, "rows_folw", f"u_f{m.group(1)}", False)
+        return ("rows_folw", f"u_f{m.group(1)}", False)
     if m and int(m.group(1)) == 0:
-        return (prefix, "rows_run", 0, False)
+        return ("rows_run", 0, False)
     # SUFFIX frames [i-a, n] (r13): the mirror image of the lookahead
     # shapes over the REVERSED order — [a PRECEDING, UNBOUNDED
     # FOLLOWING] ascending IS [UNBOUNDED PRECEDING, a FOLLOWING]
     # descending. Marked rev=True; _resolved_spec flips the ORDER BY
     # (only when the statement's sole window is this site — any other
     # window would pin the feeding WindowExec to the forward order)
-    m = re.fullmatch(
-        r"ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING", frame
-    )
-    if m:
-        return (prefix, "rows_run", 0, True)
+    if frame == "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING":
+        return ("rows_run", 0, True)
     m = re.fullmatch(
         r"ROWS BETWEEN (\d+) PRECEDING AND UNBOUNDED FOLLOWING", frame
     )
     if m and int(m.group(1)) <= _WIN_OS_FOLW_MAX:
-        return (prefix, "rows_folw", f"u_f{m.group(1)}", True)
-    m = re.fullmatch(
-        r"RANGE BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING", frame
-    )
-    if m:
-        return (prefix, "range_run", 0, True)
+        return ("rows_folw", f"u_f{m.group(1)}", True)
+    if frame == "RANGE BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING":
+        return ("range_run", 0, True)
     return None
 
 
@@ -3563,38 +3605,18 @@ def _shared_window_prefix(tokens: List[Token]):
     the static gate for the streaming order-statistics lowering; the
     count gates the REVERSED-order suffix-frame lowering (safe only
     when the statement's sole window is the site being rewritten)."""
-    prefixes = set()
+    keys = set()
     count = 0
-    n = len(tokens)
     for i, t in enumerate(tokens):
-        if not (t.kind == "word" and t.upper == "OVER"):
+        if not t.is_kw("OVER"):
             continue
         j = _next_code(tokens, i)
-        if not (j < n and tokens[j].kind == "op" and tokens[j].text == "("):
+        if not (j < len(tokens) and tokens[j].kind == "op" and tokens[j].text == "("):
             return None  # named window: resolution unknown
-        close = _matching_paren(tokens, j)
-        spec_toks = tokens[j + 1 : close]
-        depth = 0
-        cut = len(spec_toks)
-        for k, t2 in enumerate(spec_toks):
-            if t2.kind == "op" and t2.text == "(":
-                depth += 1
-            elif t2.kind == "op" and t2.text == ")":
-                depth -= 1
-            elif depth == 0 and t2.kind == "word" and t2.upper in (
-                "ROWS", "RANGE", "GROUPS",
-            ):
-                cut = k
-                break
-        norm = " ".join(
-            (t2.text.lower() if t2.kind == "word" else t2.text)
-            for t2 in spec_toks[:cut]
-            if t2.kind not in ("ws", "comment")
-        )
-        prefixes.add(norm)
+        keys.add(_parse_spec(tokens[j + 1 : _matching_paren(tokens, j)]).key)
         count += 1
-    if len(prefixes) == 1:
-        return prefixes.pop(), count
+    if len(keys) == 1:
+        return keys.pop(), count
     return None
 
 
@@ -3701,20 +3723,20 @@ def _reverse_prefix_sql(prefix: str):
     return f"{head}{sep}ORDER BY " + ", ".join(out)
 
 
-def _resolved_spec(spec: str, shared_prefix):
+def _resolved_spec(spec: _WinSpec, shared_prefix):
     """``(prefix, kind, prec)`` ready for streaming emission, or None.
-    Suffix frames (rev-marked by _spec_prefix_frame) resolve onto the
+    Suffix frames (rev-marked by _frame_kind) resolve onto the
     REVERSED prefix — only when the statement's single window is this
     site (shared_prefix carries the statement's OVER count)."""
-    parsed = _spec_prefix_frame(spec)
+    parsed = _frame_kind(spec)
     if parsed is None:
         return None
-    prefix, kind, prec, rev = parsed
+    kind, prec, rev = parsed
     if not rev:
-        return prefix, kind, prec
+        return spec.prefix, kind, prec
     if not isinstance(shared_prefix, tuple) or shared_prefix[1] != 1:
         return None
-    rp = _reverse_prefix_sql(prefix)
+    rp = _reverse_prefix_sql(spec.prefix)
     if rp is None:
         return None
     return rp, kind, prec
@@ -3921,73 +3943,54 @@ def _quantile_cont_agg_sql(a: str, b: str, filter_sql: str = "") -> str:
     return f"percentile({a}, {b}){filter_sql}"
 
 
-def _qcont_streaming_or_none(
-    core: str, q_sql: str, spec: str, distinct: bool, shared_prefix
-):
-    """Streaming quantile_cont call site when the gate + frame shape +
-    literal quantile allow it, else None (fold)."""
-    if shared_prefix is None:
-        return None
-    try:
-        qf = float(q_sql)
-    except (TypeError, ValueError):
-        return None
-    if not 0.0 <= qf <= 1.0:
-        return None
-    parsed = _resolved_spec(spec, shared_prefix)
-    if parsed is None:
-        return None
-    ch = _parse_literal_decimal_chain(core)
-    if ch is not None and not ch[3] and ch[1] <= 15:
-        # DuckDB quantizes WINDOWED decimal quantiles per frame too
-        # (probed: quantile_cont(DECIMAL(7,2), 0.3) OVER w gives 2.97
-        # where the double interpolation says 2.974) — same
-        # unscaled-interpolate + truncate-toward-zero rule as the
-        # aggregate form; since r13 the result ALSO keeps the
-        # DECIMAL(w,s) type (the double-typed result was the
-        # documented windowed-decimal corner)
-        p = 10 ** ch[2]
-        body = _win_os_streaming_sql(
-            "qlerp", f"({core}) * {p}", parsed[0], parsed[1], parsed[2],
-            False, distinct, q_sql=repr(qf),
-        )
+class _ArgDomain(NamedTuple):
+    """The DuckDB argument domain of a window/ordered aggregate, as far
+    as translation can see it statically (``_arg_domain``)."""
+
+    kind: str  # dec | wide_dec | int | int_chain | float | double | any
+    core: str
+    w: int = 0
+    s: int = 0
+    spark_type: str = ""  # kind int: TINYINT .. BIGINT
+
+    @property
+    def unscaled(self) -> str:
+        """The DECIMAL argument as its unscaled integer value."""
+        return f"({self.core}) * {10 ** self.s}"
+
+    def cast_back(self, body: str) -> str:
+        """An unscaled-domain answer truncated toward zero back to
+        DECIMAL(w,s), the input's type, as DuckDB returns it."""
         return (
             f"CAST(CAST({body} AS BIGINT)"
-            f" / CAST({p} AS DECIMAL({ch[2] + 1}, 0))"
-            f" AS DECIMAL({ch[1]},{ch[2]}))"
+            f" / CAST({10 ** self.s} AS DECIMAL({self.s + 1}, 0))"
+            f" AS DECIMAL({self.w},{self.s}))"
         )
-    if ch is not None and not ch[3] and 15 < ch[1] <= 38:
-        return None  # wide decimals: the caller's DuckQDec frame fold
-    return _win_os_streaming_sql(
-        "qcont", core, parsed[0], parsed[1], parsed[2],
-        False, distinct, q_sql=repr(qf),
-    )
 
 
-def _qdec_window_fold_or_none(
-    op: str, core: str, q_sql: str, spec: str, distinct: bool
-):
-    """Windowed DECIMAL quantile via the exact DuckQDec fold over the
-    materialized frame (r13): any width up to 38, exact sort +
-    backing-typed interpolation + DECIMAL(w,s) result — the path for
-    decimal shapes the streaming core does not take (wide widths,
-    closed shared-prefix gates, non-streamable frames)."""
+def _arg_domain(core: str) -> _ArgDomain:
+    """Sort an aggregate argument into the domains the exact cores tell
+    apart: ``dec`` — a statically DECIMAL(w,s) chain with w <= 15, whose
+    unscaled values sit below 2^53 so a double-domain core computes on
+    them exactly and casts back (DuckDB keeps the DECIMAL type and
+    truncates); ``wide_dec`` — 15 < w <= 38; ``int`` — a static integral
+    expression (``spark_type``); ``float`` / ``double`` — a column
+    hinted so; ``int_chain`` — another integer chain of width <= 15;
+    ``any`` — nothing static is known."""
     ch = _parse_literal_decimal_chain(core)
-    if ch is None or ch[3] or ch[1] > 38:
-        return None
-    try:
-        float(q_sql)
-    except (TypeError, ValueError):
-        return None
-    w, s = ch[1], ch[2]
-    collected = f"collect_list({core}) OVER ({spec})"
-    if distinct:
-        collected = f"array_distinct({collected})"
-    return (
-        f"CAST(__duck_qdec(CAST({collected} AS ARRAY<DECIMAL(38,{s})>),"
-        f" CAST(({q_sql}) AS DOUBLE), '{op}#{s}#{w}')"
-        f" AS DECIMAL({w},{s}))"
-    )
+    if ch is not None and not ch[3] and ch[1] <= 38:
+        return _ArgDomain(
+            "dec" if ch[1] <= 15 else "wide_dec", core, ch[1], ch[2]
+        )
+    ity = _static_int_expr_spark_type(core)
+    if ity is not None:
+        return _ArgDomain("int", core, spark_type=ity)
+    fty = _static_float_col_type(core)
+    if fty is not None:
+        return _ArgDomain(fty, core)
+    if ch is not None and ch[1] <= 15:
+        return _ArgDomain("int_chain", core)
+    return _ArgDomain("any", core)
 
 
 _INT_SPARK_ORDER = ("tinyint", "smallint", "int", "bigint")
@@ -4045,125 +4048,110 @@ def _static_float_col_type(expr_sql: str):
     return h if h in ("double", "float") else None
 
 
-def _qdisc_streaming_or_none(
-    core: str, q_sql: str, spec: str, distinct: bool, shared_prefix
+def _streaming_or_none(
+    op: str,
+    core: str,
+    spec: _WinSpec,
+    shared_prefix,
+    distinct: bool,
+    q_sql: Optional[str] = None,
+    temporal: bool = False,
 ):
-    """Streaming quantile_disc call site (treap select at
-    max(1, ceil(q*n))) when the gate + frame shape + literal quantile
-    + a statically known exact-in-double argument type allow it, else
-    None (fold). The answer is cast back to the argument's type, so
-    the schema matches the element-preserving fold."""
+    """One window call site on the streaming cores, or None (the fold
+    takes it): the statement-level gate (``shared_prefix``), a
+    streamable frame, a literal quantile in [0, 1] for ``qcont`` /
+    ``qdisc``, and an argument domain the core answers exactly.
+    ``op``: ``mad`` (any domain; DECIMAL(w<=15) in the unscaled
+    truncating domain, the temporal shim in integer micros),
+    ``qcont`` (DECIMAL interpolates unscaled and keeps its type —
+    probed: quantile_cont(DECIMAL(7,2), 0.3) OVER w gives 2.97 where the
+    double interpolation says 2.974; wide decimals take the DuckQDec
+    frame fold), ``qdisc`` (treap select at max(1, ceil(q*n)), cast
+    back to the argument's static type), ``ent`` (incremental
+    value-count multiset, answers in the fold's first-occurrence order)
+    and ``hist`` (DuckWinHist: key-ascending counts, the double-keyed
+    map cast back to the argument's type). DISTINCT riders count every
+    live distinct value once, like the fold's array_distinct."""
     if shared_prefix is None:
         return None
-    try:
-        qf = float(q_sql)
-    except (TypeError, ValueError):
-        return None
-    if not 0.0 <= qf <= 1.0:
-        return None
+    if q_sql is not None:
+        try:
+            qf = float(q_sql)
+        except (TypeError, ValueError):
+            return None
+        if not 0.0 <= qf <= 1.0:
+            return None
+        q_sql = repr(qf)
     parsed = _resolved_spec(spec, shared_prefix)
     if parsed is None:
         return None
-    ch = _parse_literal_decimal_chain(core)
-    if ch is not None and not ch[3] and ch[1] <= 15:
-        p = 10 ** ch[2]
-        body = _win_os_streaming_sql(
-            "qdisc", f"({core}) * {p}", parsed[0], parsed[1], parsed[2],
-            False, distinct, q_sql=repr(qf),
-        )
-        return (
-            f"CAST(CAST({body} AS BIGINT)"
-            f" / CAST({p} AS DECIMAL({ch[2] + 1}, 0))"
-            f" AS DECIMAL({ch[1]},{ch[2]}))"
-        )
-    ity = _static_int_expr_spark_type(core)
-    if ity is not None:
-        body = _win_os_streaming_sql(
-            "qdisc", core, parsed[0], parsed[1], parsed[2],
-            False, distinct, q_sql=repr(qf),
-        )
-        return f"CAST({body} AS {ity})"
-    fty = _static_float_col_type(core)
-    if fty is not None:
-        body = _win_os_streaming_sql(
-            "qdisc", core, parsed[0], parsed[1], parsed[2],
-            False, distinct, q_sql=repr(qf),
-        )
-        return body if fty == "double" else f"CAST({body} AS FLOAT)"
-    return None
 
-
-def _ent_streaming_or_none(
-    core: str, spec: str, shared_prefix, distinct: bool = False
-):
-    """Streaming windowed entropy (incremental value-count multiset,
-    answers in the fold's first-occurrence order; DISTINCT riders count
-    every live distinct value once, like the fold's array_distinct) for
-    statically exact-in-double argument types; None -> fold."""
-    if shared_prefix is None:
-        return None
-    parsed = _resolved_spec(spec, shared_prefix)
-    if parsed is None:
-        return None
-    ch = _parse_literal_decimal_chain(core)
-    ok = (
-        (ch is not None and ch[1] <= 15)
-        or _static_int_expr_spark_type(core) is not None
-        or _static_float_col_type(core) is not None
-    )
-    if not ok:
-        return None
-    return _win_os_streaming_sql(
-        "ent", core, parsed[0], parsed[1], parsed[2], False, distinct
-    )
-
-
-def _hist_streaming_or_none(
-    core: str, spec: str, shared_prefix, distinct: bool = False
-):
-    """Streaming windowed histogram() (DuckWinHist: incremental counts,
-    key-ascending map per row; DISTINCT riders report 1 per live key,
-    like the fold's array_distinct) for statically typed arguments;
-    the double-keyed map is cast back to the argument's type. None ->
-    fold."""
-    if shared_prefix is None:
-        return None
-    parsed = _resolved_spec(spec, shared_prefix)
-    if parsed is None:
-        return None
-    ity = _static_int_expr_spark_type(core)
-    if ity is not None:
-        body = _win_os_streaming_sql(
-            "hist", core, parsed[0], parsed[1], parsed[2],
-            False, distinct, fn_name="__duck_win_hist",
+    def emit(mode: str, arg: str, intdom=False, fn_name="__duck_win_os"):
+        return _win_os_streaming_sql(
+            mode, arg, *parsed, intdom, distinct, q_sql=q_sql or "0",
+            fn_name=fn_name,
         )
-        return f"CAST({body} AS MAP<{ity},BIGINT>)"
-    ch = _parse_literal_decimal_chain(core)
-    if ch is not None and not ch[3] and ch[1] <= 15:
-        p = 10 ** ch[2]
-        w, s = ch[1], ch[2]
-        body = _win_os_streaming_sql(
-            "hist", f"({core}) * {p}", parsed[0], parsed[1], parsed[2],
-            False, distinct, fn_name="__duck_win_hist",
-        )
+
+    if op == "mad":
+        mode, core2, wrap = _mad_mode_and_wrap(core, temporal)
+        body = emit("mad", core2, mode)
+        if wrap is not None:
+            body = wrap(body)
+        if temporal:
+            body = f"make_dt_interval(0, 0, 0, {body} / 1000000.0D)"
+        return body
+    dom = _arg_domain(core)
+    if op == "ent":
+        return None if dom.kind in ("any", "wide_dec") else emit("ent", core)
+    if op == "qcont":
+        if dom.kind == "dec":
+            return dom.cast_back(emit("qlerp", dom.unscaled))
+        return None if dom.kind == "wide_dec" else emit("qcont", core)
+    if op == "qdisc":
+        if dom.kind == "dec":
+            return dom.cast_back(emit("qdisc", dom.unscaled))
+        body = emit("qdisc", core) if dom.kind in ("int", "float", "double") else None
+        if dom.kind == "int":
+            return f"CAST({body} AS {dom.spark_type})"
+        return f"CAST({body} AS FLOAT)" if dom.kind == "float" else body
+    # hist
+    if dom.kind == "dec":
+        body = emit("hist", dom.unscaled, fn_name="__duck_win_hist")
         return (
             f"transform_keys({body}, (__hk, __hv) ->"
-            f" CAST(CAST(__hk AS BIGINT)"
-            f" / CAST({p} AS DECIMAL({s + 1}, 0))"
-            f" AS DECIMAL({w},{s})))"
+            f" {dom.cast_back('__hk')})"
         )
-    fty = _static_float_col_type(core)
-    if fty is not None:
-        body = _win_os_streaming_sql(
-            "hist", core, parsed[0], parsed[1], parsed[2],
-            False, distinct, fn_name="__duck_win_hist",
-        )
-        return (
-            body
-            if fty == "double"
-            else f"CAST({body} AS MAP<FLOAT,BIGINT>)"
-        )
-    return None
+    if dom.kind not in ("int", "float", "double"):
+        return None
+    body = emit("hist", core, fn_name="__duck_win_hist")
+    if dom.kind == "int":
+        return f"CAST({body} AS MAP<{dom.spark_type},BIGINT>)"
+    return f"CAST({body} AS MAP<FLOAT,BIGINT>)" if dom.kind == "float" else body
+
+
+def _qdec_window_fold_or_none(
+    op: str, core: str, q_sql: str, spec: str, distinct: bool
+):
+    """Windowed DECIMAL quantile via the exact DuckQDec fold over the
+    materialized frame (r13): any width up to 38, exact sort +
+    backing-typed interpolation + DECIMAL(w,s) result — the path for
+    decimal shapes the streaming core does not take (wide widths,
+    closed shared-prefix gates, non-streamable frames)."""
+    dom = _arg_domain(core)
+    if dom.kind not in ("dec", "wide_dec"):
+        return None
+    try:
+        float(q_sql)
+    except (TypeError, ValueError):
+        return None
+    collected = f"collect_list({core}) OVER ({spec})"
+    if distinct:
+        collected = f"array_distinct({collected})"
+    return (
+        f"CAST(__duck_qdec(CAST({collected} AS ARRAY<DECIMAL(38,{dom.s})>),"
+        f" CAST(({q_sql}) AS DOUBLE), '{op}#{dom.s}#{dom.w}')"
+        f" AS DECIMAL({dom.w},{dom.s}))"
+    )
 
 
 def _mad_window_template(
@@ -4172,8 +4160,8 @@ def _mad_window_template(
     """``mad(x) OVER w`` for ANY frame as a pure in-place expression:
     the frame is materialized per row via ``collect_list(x) OVER w``
     (NULLs dropped by collect_list, matching mad's NULL handling) and
-    folded by the sorted-array median machinery — all JVM-side, no
-    pandas UDAF, no statement restructure. Cost is O(frame) per row:
+    folded by the compiled ``__duck_mad_j`` core — all JVM-side, no
+    statement restructure. Cost is O(frame) per row:
     bounded frames are cheap; a full-partition frame (only reached when
     the window restructure bailed) carries the partition once per
     partition (Spark evaluates an unchanging frame once). DISTINCT
@@ -4905,11 +4893,14 @@ def _entropy_window_sql(arg: str, pspec: str) -> str:
     )
 
 
-def _rewrite_product_entropy(tokens: List[Token]) -> List[Token]:
+def _rewrite_product_entropy(tokens: List[Token], windows=None) -> List[Token]:
     """DuckDB ``product(x)`` / ``entropy(x)`` aggregates -> Spark
     compositions (templates above). Runs LAST in the pipeline: the
     emitted tokens are pure Spark SQL and must not pass through the
-    DuckDB-oriented rewrites (e.g. bracket or rename passes)."""
+    DuckDB-oriented rewrites (e.g. bracket or rename passes). Named
+    windows resolve against the statement's WINDOW definitions."""
+    if windows is None:
+        windows = _lazy_windows(tokens)
     out: List[Token] = []
     i = 0
     n = len(tokens)
@@ -4924,8 +4915,8 @@ def _rewrite_product_entropy(tokens: List[Token]) -> List[Token]:
                 args = _split_top_level_args(tokens, p_open, close)
                 inner = _strip_product_call(args[0]) if len(args) == 2 else None
                 if inner is not None:
-                    arg = _rewrite_product_entropy(inner)
-                    scale = _rewrite_product_entropy(args[1])
+                    arg = _rewrite_product_entropy(inner, windows)
+                    scale = _rewrite_product_entropy(args[1], windows)
                     out.extend(
                         _splice_template(
                             _ROUND_PRODUCT_TEMPLATE,
@@ -4949,51 +4940,28 @@ def _rewrite_product_entropy(tokens: List[Token]) -> List[Token]:
                         # window form: product composes for ANY frame;
                         # entropy for full-partition frames (per-value
                         # counts need the (keys, value) partition trick)
-                        sp_open = _next_code(tokens, after)
+                        spec, end = _over_spec(tokens, after, windows)
                         repl = None
-                        if (
-                            sp_open < n
-                            and tokens[sp_open].kind == "op"
-                            and tokens[sp_open].text == "("
-                        ):
-                            sp_close = _matching_paren(tokens, sp_open)
-                            spec = _sql(tokens, sp_open + 1, sp_close)
+                        if spec is not None:
                             arg_s = "".join(
                                 t.text
-                                for t in _rewrite_product_entropy(args[0])
+                                for t in _rewrite_product_entropy(args[0], windows)
                             )
                             low2 = tok.text.lower()
                             if low2 == "product":
-                                repl = _product_window_sql(arg_s, spec)
+                                repl = _product_window_sql(arg_s, spec.text)
                             elif (
                                 low2 == "entropy"
-                                and _window_spec_full_partition(spec)
+                                and spec.full
                                 # DISTINCT args can't restructure onto
                                 # per-count built-ins; left for the
                                 # frame-materialization fold (r10)
                                 and not _DISTINCT_PREFIX_RE.match(arg_s)
                             ):
-                                d2 = 0
-                                p_end = sp_close
-                                for kk in range(sp_open + 1, sp_close):
-                                    tk = tokens[kk]
-                                    if tk.kind == "op" and tk.text in ("(", "["):
-                                        d2 += 1
-                                    elif tk.kind == "op" and tk.text in (")", "]"):
-                                        d2 -= 1
-                                    elif (
-                                        d2 == 0
-                                        and tk.kind == "word"
-                                        and tk.upper in ("ORDER", "ROWS", "RANGE", "GROUPS")
-                                    ):
-                                        p_end = kk
-                                        break
-                                repl = _entropy_window_sql(
-                                    arg_s, _sql(tokens, sp_open + 1, p_end)
-                                )
+                                repl = _entropy_window_sql(arg_s, spec.partition)
                         if repl is not None:
                             out.extend(_toks(repl))
-                            i = sp_close + 1
+                            i = end
                             continue
                         # unsupported window shape: leave the call
                         # untouched (loud unresolved-function error,
@@ -5001,7 +4969,7 @@ def _rewrite_product_entropy(tokens: List[Token]) -> List[Token]:
                         out.append(tok)
                         i += 1
                         continue
-                    arg = _rewrite_product_entropy(args[0])
+                    arg = _rewrite_product_entropy(args[0], windows)
                     tmpl = {
                         "product": _PRODUCT_TEMPLATE,
                         "entropy": _entropy_template(),
@@ -5324,8 +5292,9 @@ def _rewrite_aggfn_groupby(tokens: List[Token], spec: dict) -> List[Token]:
     into hidden select items first (``_hoist_agg_having_order``).
     Shapes the restructure can't express (nested in another aggregate
     or a window, grouping by non-column expressions, DISTINCT, ...)
-    keep the fallback applied later in the pipeline (entropy:
-    collect_list template; mad: grouped-agg pandas UDF)."""
+    keep the collect_list template applied later in the pipeline
+    (entropy: ``_rewrite_product_entropy``; mad:
+    ``_rewrite_mad_fallback_template``)."""
     fname = spec["name"]
     context = spec["context"]
     tag = spec.get("tag", "")
@@ -5711,8 +5680,8 @@ def _mad_make_sub(arg, j, keys, from_text, where_body, tag="m"):
     """mad(x) = median(abs(x - median(x))) per group: a grouped median
     subquery joined back to the raw values, then a second grouped
     median — both built-in percentile aggregates with map-side
-    partials, no per-group column materialization (the pandas-UDF
-    fallback gathers one group's column per task)."""
+    partials, no per-group column materialization (the collect_list
+    template fallback gathers one group's values in one buffer)."""
     m = len(keys)
     arg, is_distinct = _split_distinct_prefix(arg)
     where = f" WHERE {where_body}" if where_body else ""
@@ -5788,62 +5757,15 @@ def _mad_make_sub(arg, j, keys, from_text, where_body, tag="m"):
 _MAD_SPEC = {
     "name": "mad",
     "tag": "m",
-    # make_dt_interval guards the temporal overload (already lowered to
-    # the pandas UDF by the call-shims pass before this runs)
+    # make_dt_interval guards the temporal overload (the call-shims
+    # pass wraps its epoch-micros mad in make_dt_interval before this
+    # runs)
     "context": _ENTROPY_AGG_CONTEXT | {"make_dt_interval"},
     "make_sub": _mad_make_sub,
     # all-NULL group -> NULL, like DuckDB (no coalesce)
     "ref": lambda j: f"__em{j}.__evm_{j}",
     "validate": lambda arg: not _static_temporal_sql(arg),
 }
-
-
-def _rewrite_aggfn_groupby_recursive(
-    tokens: List[Token], spec: dict
-) -> List[Token]:
-    """Apply a scale-safe aggregate restructure inside every
-    parenthesized scope, innermost-first, then at the top level."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "op" and tok.text == "(":
-            close = _matching_paren(tokens, i)
-            if close > i:
-                out.append(tok)
-                out.extend(
-                    _rewrite_aggfn_groupby_recursive(
-                        tokens[i + 1 : close], spec
-                    )
-                )
-                out.append(tokens[close])
-                i = close + 1
-                continue
-        out.append(tok)
-        i += 1
-    return _rewrite_aggfn_groupby(out, spec)
-
-
-def _window_spec_full_partition(spec_sql: str) -> bool:
-    """True when an OVER (...) spec's frame is the whole partition:
-    no ORDER BY (frame defaults to the entire partition), or an
-    explicit UNBOUNDED PRECEDING .. UNBOUNDED FOLLOWING frame with no
-    effective EXCLUDE clause."""
-    u = re.sub(r"\s+", " ", spec_sql).strip().upper()
-    if "EXCLUDE" in u:
-        if not re.search(r"EXCLUDE NO OTHERS$", u):
-            return False
-        u = re.sub(r"EXCLUDE NO OTHERS$", "", u).strip()
-    if not re.search(r"\bORDER BY\b", u):
-        return True
-    return bool(
-        re.search(
-            r"\b(ROWS|RANGE|GROUPS) BETWEEN UNBOUNDED PRECEDING"
-            r" AND UNBOUNDED FOLLOWING$",
-            u,
-        )
-    )
 
 
 # Aggregate names whose presence as a NON-window call in a select list
@@ -5869,79 +5791,34 @@ _MADW_TEMPORAL_RE = re.compile(
 )
 
 
-def _rewrite_mad_window(tokens: List[Token]) -> List[Token]:
-    """Lower ``mad(x) OVER w`` with a FULL-PARTITION frame off the
-    grouped-agg pandas UDAF onto built-in window medians: the frame
-    median is partition-constant, so
-
-        mad(x) OVER w  ==  median(abs(x - median(x) OVER w)) OVER w
-
-    Window functions cannot nest, so the statement is restructured:
-    the FROM(+WHERE) is wrapped in a subquery that projects
-    ``__wmv{i}`` (the cast argument) and ``__wmed{i}`` (the inner
-    window median), and the outer scope computes the deviation median.
-    This also FIXES the hinted temporal form, which previously emitted
-    invalid SQL (``make_dt_interval(...) OVER w`` — OVER attached to a
-    non-window expression); DuckDB's integer-micros rounding
-    (``_mad_round_sql``) is applied to both medians there.
-
-    Conservative bails (those shapes keep the pandas UDAF, or in the
-    temporal case fail loudly as before): GROUP BY / HAVING / WINDOW /
-    QUALIFY clauses, no FROM, set operations handled per branch,
-    qualified (dotted) references outside the FROM region (the
-    subquery wrap would unbind them), non-window aggregate calls
-    (global-aggregate inputs), and bounded/running frames (a pandas
-    UDAF over a moving frame is genuinely the right tool)."""
+def _from_wrap(tokens: List[Token], word: str, classify, lower, alias: str):
+    """Restructure one SELECT whose window calls cannot lower in place:
+    the FROM(+WHERE) becomes a subquery projecting every source column
+    plus the helper columns each candidate call needs, and the outer
+    scope computes the call from them (window functions cannot nest).
+    ``classify(tokens, i)`` judges the word at ``i`` in the select list
+    and the ORDER BY/LIMIT tail: None (scan on), ``"bail"`` (leave the
+    statement), or ``(next index, candidate or None)`` with candidate
+    ``(start, end, ...)``; ``lower(k, candidate)`` returns ``(helper
+    select items, helper names, outer expression)``. Only select-list
+    candidates lower: Spark rejects window functions inside ORDER BY
+    outright (both before and after this rewrite), so the tail is
+    scanned only for bails. Shared bails: GROUP BY / HAVING / WINDOW /
+    QUALIFY clauses, no FROM, qualified (dotted) references outside the
+    FROM region and subqueries (the wrap would unbind them). Set
+    operations restructure per branch; a WITH statement descends to its
+    main SELECT. Statements without ``word`` and OVER pass through."""
     n = len(tokens)
-    if not any(t.kind == "word" and t.text.lower() == "mad" for t in tokens):
+    if not any(t.kind == "word" and t.text.lower() == word for t in tokens):
         return tokens
     if not any(t.kind == "word" and t.upper == "OVER" for t in tokens):
         return tokens
     first = _next_code(tokens, -1)
-    if first >= n or tokens[first].kind != "word":
+    if first >= n or tokens[first].upper not in ("WITH", "SELECT"):
         return tokens
-    if tokens[first].upper == "WITH":
-        depth = 0
-        for j in range(first + 1, n):
-            t = tokens[j]
-            if t.kind == "op" and t.text in ("(", "["):
-                depth += 1
-            elif t.kind == "op" and t.text in (")", "]"):
-                depth -= 1
-            elif depth == 0 and t.kind == "word" and t.upper == "SELECT":
-                return tokens[:j] + _rewrite_mad_window(tokens[j:])
-        return tokens
-    if tokens[first].upper != "SELECT":
-        return tokens
-
-    # set operations: restructure each branch independently
-    depth = 0
-    for j in range(first + 1, n):
-        t = tokens[j]
-        if t.kind == "op" and t.text in ("(", "["):
-            depth += 1
-        elif t.kind == "op" and t.text in (")", "]"):
-            depth -= 1
-        elif (
-            depth == 0
-            and t.kind == "word"
-            and t.upper in ("UNION", "EXCEPT", "INTERSECT")
-        ):
-            k = _next_code(tokens, j)
-            if k < n and tokens[k].upper in ("ALL", "DISTINCT"):
-                k = _next_code(tokens, k)
-            if k < n and tokens[k].upper == "BY":  # UNION BY NAME
-                k = _next_code(tokens, k)
-                k = _next_code(tokens, k)
-            return (
-                _rewrite_mad_window(tokens[:j])
-                + tokens[j:k]
-                + _rewrite_mad_window(tokens[k:])
-            )
-
-    # depth-0 clause indices
-    from_idx = where_idx = None
+    from_idx = setop = None
     tail_idx = n
+    bail = False
     depth = 0
     for j in range(first + 1, n):
         t = tokens[j]
@@ -5951,208 +5828,91 @@ def _rewrite_mad_window(tokens: List[Token]) -> List[Token]:
             depth -= 1
         elif depth == 0 and t.kind == "word":
             u = t.upper
-            if u == "FROM" and from_idx is None:
+            if tokens[first].upper == "WITH":
+                if u == "SELECT":
+                    return tokens[:j] + _from_wrap(
+                        tokens[j:], word, classify, lower, alias
+                    )
+            elif u in ("UNION", "EXCEPT", "INTERSECT"):
+                setop = j
+                break
+            elif tail_idx < n:
+                continue
+            elif u == "FROM" and from_idx is None:
                 from_idx = j
-            elif u == "WHERE" and from_idx is not None and where_idx is None:
-                where_idx = j
             elif u in ("GROUP", "HAVING", "WINDOW", "QUALIFY"):
                 p = j - 1
                 while p >= 0 and tokens[p].kind in ("ws", "comment"):
                     p -= 1
-                if not (
-                    u == "GROUP" and p >= 0 and tokens[p].upper == "WITHIN"
-                ):
-                    return tokens
+                if not (u == "GROUP" and p >= 0 and tokens[p].upper == "WITHIN"):
+                    bail = True
             elif u in ("ORDER", "LIMIT", "OFFSET") and from_idx is not None:
                 tail_idx = j
-                break
-    if from_idx is None or from_idx >= tail_idx:
+    if setop is not None:
+        k = _next_code(tokens, setop)
+        if k < n and tokens[k].upper in ("ALL", "DISTINCT"):
+            k = _next_code(tokens, k)
+        if k < n and tokens[k].upper == "BY":  # UNION BY NAME
+            k = _next_code(tokens, _next_code(tokens, k))
+        return (
+            _from_wrap(tokens[:setop], word, classify, lower, alias)
+            + tokens[setop:k]
+            + _from_wrap(tokens[k:], word, classify, lower, alias)
+        )
+    if tokens[first].upper == "WITH" or bail or from_idx is None:
         return tokens
-
     sel_start = _next_code(tokens, first)
     distinct = ""
     if sel_start < n and tokens[sel_start].upper in ("DISTINCT", "ALL"):
         distinct = tokens[sel_start].upper + " "
         sel_start = _next_code(tokens, sel_start)
 
-    def scan_region(lo: int, hi: int):
-        """Yield (start, end_excl, arg_sql, spec_sql, temporal) for
-        each mad-OVER call; also flag bails. Subquery parens are
-        skipped (their scopes were already processed innermost-first)."""
-        cands, bail = [], False
+    def scan(lo: int, hi: int):
+        """Candidates in [lo, hi), or None on a bail. Subquery parens
+        are skipped (their scopes were processed innermost-first)."""
+        cands = []
         i = lo
         while i < hi:
             t = tokens[i]
             if t.kind == "op" and t.text == "(":
                 k = _next_code(tokens, i)
                 if k < n and tokens[k].kind == "word" and tokens[k].upper in (
-                    "SELECT",
-                    "WITH",
-                    "FROM",
+                    "SELECT", "WITH", "FROM",
                 ):
                     i = _matching_paren(tokens, i) + 1
                     continue
-                i += 1
-                continue
-            if t.kind == "op" and t.text == ".":
+            elif t.kind == "op" and t.text == ".":
                 # engine-emitted lambda-var dots (__rb.x and friends)
                 # are scope-free under the wrap (r10c, see
                 # _lambda_var_dot) — only table-qualified refs bail
                 if not _lambda_var_dot(tokens, i):
-                    bail = True
-                i += 1
-                continue
-            if t.kind == "word":
-                low = t.text.lower()
-                if low in ("mad", "make_dt_interval"):
-                    p_open = _next_code(tokens, i)
-                    if (
-                        p_open < hi
-                        and tokens[p_open].kind == "op"
-                        and tokens[p_open].text == "("
-                    ):
-                        close = _matching_paren(tokens, p_open)
-                        after = _next_code(tokens, close)
-                        if after < hi and tokens[after].is_kw("OVER"):
-                            sp_open = _next_code(tokens, after)
-                            if (
-                                sp_open < hi
-                                and tokens[sp_open].kind == "op"
-                                and tokens[sp_open].text == "("
-                            ):
-                                sp_close = _matching_paren(tokens, sp_open)
-                                body = _sql(tokens, p_open + 1, close)
-                                temporal = False
-                                arg = body
-                                if low == "make_dt_interval":
-                                    m = _MADW_TEMPORAL_RE.match(body)
-                                    if not m:
-                                        i += 1
-                                        continue
-                                    arg, temporal = m.group(1), True
-                                spec = _sql(tokens, sp_open + 1, sp_close)
-                                # Spark's median window aggregate
-                                # rejects ORDER BY / explicit frames;
-                                # for a full-partition frame they are
-                                # semantically inert, so the medians
-                                # use the PARTITION BY clause alone
-                                d2 = 0
-                                p_end = sp_close
-                                for kk in range(sp_open + 1, sp_close):
-                                    tk = tokens[kk]
-                                    if tk.kind == "op" and tk.text in ("(", "["):
-                                        d2 += 1
-                                    elif tk.kind == "op" and tk.text in (")", "]"):
-                                        d2 -= 1
-                                    elif (
-                                        d2 == 0
-                                        and tk.kind == "word"
-                                        and tk.upper in ("ORDER", "ROWS", "RANGE", "GROUPS")
-                                    ):
-                                        p_end = kk
-                                        break
-                                pspec = _sql(tokens, sp_open + 1, p_end)
-                                full = (
-                                    _window_spec_full_partition(spec)
-                                    # DISTINCT window aggregates can't
-                                    # lower to median(): keep the old
-                                    # path (loud on both engines)
-                                    and not _DISTINCT_PREFIX_RE.match(arg)
-                                )
-                                # the spec text survives in the OUTER
-                                # scope (and a non-lowered call entirely
-                                # so); dotted names there would unbind
-                                # under the subquery wrap
-                                dot_lo = sp_open + 1 if full else i
-                                if any(
-                                    tokens[k].kind == "op"
-                                    and tokens[k].text == "."
-                                    and not _lambda_var_dot(tokens, k)
-                                    for k in range(dot_lo, sp_close)
-                                ):
-                                    bail = True
-                                elif full:
-                                    cands.append(
-                                        (i, sp_close + 1, arg, pspec, temporal)
-                                    )
-                                i = sp_close + 1
-                                continue
-                if low in _MADW_AGG_NAMES:
-                    p_open = _next_code(tokens, i)
-                    if (
-                        p_open < n
-                        and tokens[p_open].kind == "op"
-                        and tokens[p_open].text == "("
-                    ):
-                        close = _matching_paren(tokens, p_open)
-                        after = _next_code(tokens, close)
-                        if not (after < n and tokens[after].is_kw("OVER")):
-                            bail = True
-                        # scan inside the call for nested candidates/dots
-                        i += 1
-                        continue
-            i += 1
-        return cands, bail
-
-    # candidates only in the select list: Spark rejects window
-    # functions inside ORDER BY outright (both before and after this
-    # rewrite), so the tail is scanned only for bail conditions
-    c1, b1 = scan_region(sel_start, from_idx)
-    _, b2 = scan_region(tail_idx, n)
-    cands = c1
-    if not cands:
-        return tokens
-    if b1 or b2:
-        return tokens
-
-    helpers = []
-    outer_by_start: Dict[int, str] = {}
-    helper_names = []
-    for idx, (start, end, arg, spec, temporal) in enumerate(cands):
-        mv, md = f"__wmv{idx}", f"__wmed{idx}"
-        helper_names += [mv, md]
-        med = f"median(({arg})) OVER ({spec})"
-        dev = f"median(abs({mv} - {md})) OVER ({spec})"
-        if temporal or _mad_integer_domain(arg):
-            med = _mad_round_sql(med)
-            dev = _mad_round_sql(dev)
-        helpers.append(f"({arg}) AS {mv}, {med} AS {md}")
-        if temporal:
-            dev = f"make_dt_interval(0, 0, 0, {dev} / 1000000.0D)"
-        outer_by_start[start] = dev
-
-    def rebuild(lo: int, hi: int) -> str:
-        parts = []
-        i = lo
-        ends = {s: e for s, e, *_ in cands}
-        while i < hi:
-            if i in outer_by_start:
-                parts.append(outer_by_start[i])
-                i = ends[i]
-                continue
-            t = tokens[i]
-            if (
-                t.kind == "op"
-                and t.text == "*"
-                and lo == sel_start
-            ):
-                p = i - 1
-                while p >= 0 and tokens[p].kind in ("ws", "comment"):
-                    p -= 1
-                if p < lo or (
-                    tokens[p].kind == "word"
-                    and tokens[p].upper in ("SELECT", "DISTINCT", "ALL")
-                ) or (tokens[p].kind == "op" and tokens[p].text == ","):
-                    parts.append(f"* EXCEPT ({', '.join(helper_names)})")
-                    i += 1
+                    return None
+            elif t.kind == "word":
+                verdict = classify(tokens, i)
+                if verdict == "bail":
+                    return None
+                if verdict is not None:
+                    i, cand = verdict
+                    if cand is not None:
+                        cands.append(cand)
                     continue
-            parts.append(t.text)
             i += 1
-        return "".join(parts)
+        return cands
 
+    cands = scan(sel_start, from_idx)
+    if not cands or scan(tail_idx, n) is None:
+        return tokens
+    helpers: List[str] = []
+    helper_names: List[str] = []
+    outer_by_start: Dict[int, str] = {}
+    for k, cand in enumerate(cands):
+        helper, names, outer = lower(k, cand)
+        helpers.append(helper)
+        helper_names += names
+        outer_by_start[cand[0]] = outer
     outer_sel, moved_items = _relocate_nonwindow_items(
         tokens, sel_start, from_idx,
-        outer_by_start, {s: e for s, e, *_ in cands}, helper_names,
+        outer_by_start, {c[0]: c[1] for c in cands}, helper_names,
     )
     inner_sql = (
         "SELECT *, "
@@ -6160,16 +5920,167 @@ def _rewrite_mad_window(tokens: List[Token]) -> List[Token]:
         + " "
         + _sql(tokens, from_idx, tail_idx)
     )
-    out_sql = (
-        "SELECT "
-        + distinct
-        + outer_sel
-        + f" FROM ({inner_sql}) __madw"
-    )
-    tail = rebuild(tail_idx, n)
+    out_sql = "SELECT " + distinct + outer_sel + f" FROM ({inner_sql}) {alias}"
+    tail = "".join(t.text for t in tokens[tail_idx:])
     if tail.strip():
         out_sql += " " + tail
     return _toks(out_sql)
+
+
+def _has_dot(tokens: List[Token], lo: int, hi: int) -> bool:
+    """A table-qualified (non lambda-variable) dot in ``tokens[lo:hi]``."""
+    return any(
+        tokens[k].kind == "op" and tokens[k].text == "."
+        and not _lambda_var_dot(tokens, k)
+        for k in range(lo, hi)
+    )
+
+
+def _madw_classify(tokens: List[Token], i: int):
+    """``_from_wrap`` candidate test for ``mad(x) OVER w`` with a
+    FULL-PARTITION frame (and the hinted temporal
+    ``make_dt_interval(0,0,0, mad(x)/1e6) OVER w``); a non-window
+    aggregate call (a global-aggregate query, which the wrap would
+    re-stage over raw rows) bails."""
+    low = tokens[i].text.lower()
+    if low in ("mad", "make_dt_interval"):
+        call = _call_site(tokens, i)
+        if call is not None and call.spec is not None:
+            arg = _sql(tokens, call.p_open + 1, call.close)
+            temporal = low == "make_dt_interval"
+            if temporal:
+                m = _MADW_TEMPORAL_RE.match(arg)
+                if not m:
+                    return None
+                arg = m.group(1)
+            # DISTINCT window aggregates can't lower to median(): keep
+            # the in-place fold
+            full = call.spec.full and not _DISTINCT_PREFIX_RE.match(arg)
+            # the spec text survives in the OUTER scope (and a
+            # non-lowered call entirely so); dotted names there would
+            # unbind under the subquery wrap
+            if _has_dot(tokens, call.close if full else i, call.end):
+                return "bail"
+            cand = (i, call.end, arg, call.spec.partition, temporal)
+            return call.end, cand if full else None
+    if low in _MADW_AGG_NAMES:
+        p_open = _next_code(tokens, i)
+        if p_open < len(tokens) and tokens[p_open].text == "(":
+            after = _next_code(tokens, _matching_paren(tokens, p_open))
+            if not (after < len(tokens) and tokens[after].is_kw("OVER")):
+                return "bail"
+    return None
+
+
+def _madw_lower(k: int, cand):
+    """The frame median is partition-constant, so
+    ``mad(x) OVER w == median(abs(x - median(x) OVER w)) OVER w``: the
+    wrap projects the argument and its window median, the outer scope
+    the deviation median. Spark's median window aggregate rejects ORDER
+    BY / explicit frames; for a full-partition frame they are inert, so
+    both medians use the PARTITION BY clause alone. The temporal form
+    and the epoch-micros shim round both medians to DuckDB's integer
+    micros (``_mad_round_sql``)."""
+    _start, _end, arg, pspec, temporal = cand
+    mv, md = f"__wmv{k}", f"__wmed{k}"
+    med = f"median(({arg})) OVER ({pspec})"
+    dev = f"median(abs({mv} - {md})) OVER ({pspec})"
+    if temporal or _mad_integer_domain(arg):
+        med = _mad_round_sql(med)
+        dev = _mad_round_sql(dev)
+    if temporal:
+        dev = f"make_dt_interval(0, 0, 0, {dev} / 1000000.0D)"
+    return f"({arg}) AS {mv}, {med} AS {md}", [mv, md], dev
+
+
+def _rewrite_mad_window(tokens: List[Token]) -> List[Token]:
+    """Lower ``mad(x) OVER w`` with a FULL-PARTITION frame onto built-in
+    window medians through the SELECT-scope FROM-wrap (``_from_wrap``,
+    ``_madw_classify``, ``_madw_lower``): O(n log n) where the in-place
+    fold is O(n·frame). Shapes the wrap bails on keep the in-place
+    lowering (``_rewrite_mad_window_inplace``)."""
+    return _from_wrap(tokens, "mad", _madw_classify, _madw_lower, "__madw")
+
+
+def _entw_classify(tokens: List[Token], i: int):
+    """``_from_wrap`` candidate test for ``entropy(x) OVER (...
+    ORDER BY ...)`` with a RUNNING RANGE frame (the ORDER-BY default,
+    or the explicit spelling); DISTINCT arguments keep the deduped
+    fold."""
+    if tokens[i].text.lower() != "entropy":
+        return None
+    call = _call_site(tokens, i)
+    if call is None or call.spec is None:
+        return None
+    spec = call.spec
+    arg = _sql(tokens, call.p_open + 1, call.close)
+    if _has_dot(tokens, i, call.end):
+        # the spec (and a call that is not a candidate, whole) stays in
+        # the outer scope, where a dotted name would unbind
+        return "bail"
+    if (
+        spec.has_order
+        and spec.frame in ("", "RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")
+        and not _DISTINCT_PREFIX_RE.match(arg)
+    ):
+        return call.end, (i, call.end, arg, spec)
+    return call.end, None
+
+
+def _entw_lower(k: int, cand):
+    """O(n log n) telescoping decomposition of a running entropy
+    instead of the O(n^2) collect_list frame fold (r10c — the fold
+    built an O(i) prefix array + histogram per row; 20 s at sf0.1 vs
+    DuckDB's segment-tree 0.2 s):
+
+        S_i = sum over frame rows j of
+                k_j*log2(k_j) - (k_j-1)*log2(k_j-1)
+        entropy_i = log2(n_i) - S_i / n_i
+
+    where k_j = ROW_NUMBER() OVER (PARTITION BY <keys>, x ORDER BY
+    <order>) — the occurrence index of row j's value. The per-value
+    deltas telescope to c*log2(c) for EVERY tie order because the
+    RANGE frame includes whole peer groups (this is exactly why
+    explicit ROWS running frames are excluded: a ROWS frame can cut a
+    peer group mid-value and the row_number tie order need not agree
+    with the frame's). S accumulates in DECIMAL(38,18) so the prefix
+    sum itself adds no float error; the residual piece-rounding error
+    is ~1e-14 absolute, inside the fold's own cross-engine noise.
+    NULLs contribute delta 0 and are excluded from n (DuckDB entropy
+    ignores NULLs); an all-NULL prefix renders 0.0 like the fold."""
+    _start, _end, arg, spec = cand
+    ev, ek = f"__wev{k}", f"__wek{k}"
+    inner_part = (
+        f"{spec.partition}, ({arg})" if spec.partition
+        else f"PARTITION BY ({arg})"
+    )
+    helper = (
+        f"({arg}) AS {ev}, ROW_NUMBER() OVER "
+        f"({inner_part} {spec.order}) AS {ek}"
+    )
+    nn = f"COUNT({ev}) OVER ({spec.text})"
+    delta = (
+        f"(CASE WHEN {ev} IS NULL OR {ek} <= 1 THEN "
+        f"CAST(0 AS DECIMAL(38, 18)) ELSE CAST("
+        f"{ek} * log2(CAST({ek} AS DOUBLE)) - "
+        f"({ek} - 1) * log2(CAST({ek} - 1 AS DOUBLE)) "
+        f"AS DECIMAL(38, 18)) END)"
+    )
+    s_sum = f"SUM({delta}) OVER ({spec.text})"
+    outer = (
+        f"(CASE WHEN {nn} = 0 THEN 0.0D ELSE "
+        f"log2(CAST({nn} AS DOUBLE)) - CAST({s_sum} AS DOUBLE) "
+        f"/ {nn} END)"
+    )
+    return helper, [ev, ek], outer
+
+
+def _rewrite_entropy_window_running(tokens: List[Token]) -> List[Token]:
+    """Lower running-RANGE ``entropy(x) OVER w`` through the SELECT-scope
+    FROM-wrap (``_from_wrap``, ``_entw_classify``, ``_entw_lower``)."""
+    return _from_wrap(
+        tokens, "entropy", _entw_classify, _entw_lower, "__entw"
+    )
 
 
 def _relocate_nonwindow_items(
@@ -6363,410 +6274,15 @@ def _lambda_var_dot(tokens: List[Token], k: int) -> bool:
     )
 
 
-_ENTROPY_RUN_FRAME_RE = re.compile(
-    r"(?is)^\s*RANGE\s+BETWEEN\s+UNBOUNDED\s+PRECEDING\s+AND\s+"
-    r"CURRENT\s+ROW\s*$"
-)
-
-
-def _rewrite_entropy_window_running(tokens: List[Token]) -> List[Token]:
-    """Lower ``entropy(x) OVER (... ORDER BY ...)`` with a RUNNING
-    RANGE frame (the ORDER-BY default, or the explicit spelling) onto
-    an O(n log n) telescoping decomposition instead of the O(n^2)
-    collect_list frame fold (r10c — the fold built an O(i) prefix
-    array + histogram per row; 20 s at sf0.1 vs DuckDB's segment-tree
-    0.2 s):
-
-        S_i = sum over frame rows j of
-                k_j*log2(k_j) - (k_j-1)*log2(k_j-1)
-        entropy_i = log2(n_i) - S_i / n_i
-
-    where k_j = ROW_NUMBER() OVER (PARTITION BY <keys>, x ORDER BY
-    <order>) — the occurrence index of row j's value. The per-value
-    deltas telescope to c*log2(c) for EVERY tie order because the
-    RANGE frame includes whole peer groups (this is exactly why
-    explicit ROWS running frames are excluded: a ROWS frame can cut a
-    peer group mid-value and the row_number tie order need not agree
-    with the frame's). S accumulates in DECIMAL(38,18) so the prefix
-    sum itself adds no float error; the residual piece-rounding error
-    is ~1e-14 absolute, inside the fold's own cross-engine noise.
-    NULLs contribute delta 0 and are excluded from n (DuckDB entropy
-    ignores NULLs); an all-NULL prefix renders 0.0 like the fold.
-    Same conservative bails as the mad restructure (GROUP BY/HAVING/
-    WINDOW/QUALIFY, set-ops per branch, dots near the wrap, DISTINCT
-    args keep the deduped fold)."""
-    n = len(tokens)
-    if not any(
-        t.kind == "word" and t.text.lower() == "entropy" for t in tokens
+def _innermost_first(tokens: List[Token], rewrite, words=None) -> List[Token]:
+    """Apply ``rewrite`` inside every parenthesized scope, innermost
+    first, then at the top level. With ``words``, a statement naming
+    none of them is returned as is (``rewrite`` must leave any scope
+    without them unchanged)."""
+    if words is not None and not any(
+        t.kind == "word" and t.text.lower() in words for t in tokens
     ):
         return tokens
-    if not any(t.kind == "word" and t.upper == "OVER" for t in tokens):
-        return tokens
-    first = _next_code(tokens, -1)
-    if first >= n or tokens[first].kind != "word":
-        return tokens
-    if tokens[first].upper == "WITH":
-        depth = 0
-        for j in range(first + 1, n):
-            t = tokens[j]
-            if t.kind == "op" and t.text in ("(", "["):
-                depth += 1
-            elif t.kind == "op" and t.text in (")", "]"):
-                depth -= 1
-            elif depth == 0 and t.kind == "word" and t.upper == "SELECT":
-                return tokens[:j] + _rewrite_entropy_window_running(
-                    tokens[j:]
-                )
-        return tokens
-    if tokens[first].upper != "SELECT":
-        return tokens
-    depth = 0
-    for j in range(first + 1, n):
-        t = tokens[j]
-        if t.kind == "op" and t.text in ("(", "["):
-            depth += 1
-        elif t.kind == "op" and t.text in (")", "]"):
-            depth -= 1
-        elif (
-            depth == 0
-            and t.kind == "word"
-            and t.upper in ("UNION", "EXCEPT", "INTERSECT")
-        ):
-            k = _next_code(tokens, j)
-            if k < n and tokens[k].upper in ("ALL", "DISTINCT"):
-                k = _next_code(tokens, k)
-            if k < n and tokens[k].upper == "BY":
-                k = _next_code(tokens, k)
-                k = _next_code(tokens, k)
-            return (
-                _rewrite_entropy_window_running(tokens[:j])
-                + tokens[j:k]
-                + _rewrite_entropy_window_running(tokens[k:])
-            )
-
-    from_idx = None
-    tail_idx = n
-    depth = 0
-    for j in range(first + 1, n):
-        t = tokens[j]
-        if t.kind == "op" and t.text in ("(", "["):
-            depth += 1
-        elif t.kind == "op" and t.text in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t.kind == "word":
-            u = t.upper
-            if u == "FROM" and from_idx is None:
-                from_idx = j
-            elif u in ("GROUP", "HAVING", "WINDOW", "QUALIFY"):
-                p = j - 1
-                while p >= 0 and tokens[p].kind in ("ws", "comment"):
-                    p -= 1
-                if not (
-                    u == "GROUP" and p >= 0 and tokens[p].upper == "WITHIN"
-                ):
-                    return tokens
-            elif u in ("ORDER", "LIMIT", "OFFSET") and from_idx is not None:
-                tail_idx = j
-                break
-    if from_idx is None or from_idx >= tail_idx:
-        return tokens
-
-    sel_start = _next_code(tokens, first)
-    distinct = ""
-    if sel_start < n and tokens[sel_start].upper in ("DISTINCT", "ALL"):
-        distinct = tokens[sel_start].upper + " "
-        sel_start = _next_code(tokens, sel_start)
-
-    cands = []
-    i = sel_start
-    while i < from_idx:
-        t = tokens[i]
-        if t.kind == "op" and t.text == "(":
-            k = _next_code(tokens, i)
-            if k < n and tokens[k].kind == "word" and tokens[k].upper in (
-                "SELECT", "WITH", "FROM",
-            ):
-                i = _matching_paren(tokens, i) + 1
-                continue
-            i += 1
-            continue
-        if t.kind == "word" and t.text.lower() == "entropy":
-            p_open = _next_code(tokens, i)
-            if (
-                p_open < from_idx
-                and tokens[p_open].kind == "op"
-                and tokens[p_open].text == "("
-            ):
-                close = _matching_paren(tokens, p_open)
-                after = _next_code(tokens, close)
-                if after < from_idx and tokens[after].is_kw("OVER"):
-                    sp_open = _next_code(tokens, after)
-                    if (
-                        sp_open < from_idx
-                        and tokens[sp_open].kind == "op"
-                        and tokens[sp_open].text == "("
-                    ):
-                        sp_close = _matching_paren(tokens, sp_open)
-                        arg = _sql(tokens, p_open + 1, close).strip()
-                        spec = _sql(tokens, sp_open + 1, sp_close)
-                        # spec anatomy at depth 0: [PARTITION BY ...]
-                        # ORDER BY ... [frame]; running = ORDER BY
-                        # present, frame absent or the explicit
-                        # RANGE UNBOUNDED..CURRENT spelling
-                        d2 = 0
-                        order_at = frame_at = None
-                        for kk in range(sp_open + 1, sp_close):
-                            tk = tokens[kk]
-                            if tk.kind == "op" and tk.text in ("(", "["):
-                                d2 += 1
-                            elif tk.kind == "op" and tk.text in (")", "]"):
-                                d2 -= 1
-                            elif d2 == 0 and tk.kind == "word":
-                                if tk.upper == "ORDER" and order_at is None:
-                                    order_at = kk
-                                elif tk.upper in ("ROWS", "RANGE", "GROUPS"):
-                                    frame_at = kk
-                                    break
-                        frame_ok = frame_at is None or (
-                            tokens[frame_at].upper == "RANGE"
-                            and _ENTROPY_RUN_FRAME_RE.match(
-                                _sql(tokens, frame_at, sp_close)
-                            )
-                        )
-                        has_dot = any(
-                            tokens[k].kind == "op"
-                            and tokens[k].text == "."
-                            and not _lambda_var_dot(tokens, k)
-                            for k in range(i, sp_close)
-                        )
-                        if (
-                            order_at is not None
-                            and frame_ok
-                            and not has_dot
-                            and not _DISTINCT_PREFIX_RE.match(arg)
-                        ):
-                            ppart = _sql(
-                                tokens, sp_open + 1, order_at
-                            ).strip()
-                            okeys = _sql(
-                                tokens, order_at,
-                                frame_at if frame_at is not None
-                                else sp_close,
-                            ).strip()
-                            cands.append(
-                                (i, sp_close + 1, arg, spec, ppart, okeys)
-                            )
-                            i = sp_close + 1
-                            continue
-                        i = sp_close + 1
-                        continue
-        if (
-            t.kind == "op"
-            and t.text == "."
-            and not _lambda_var_dot(tokens, i)
-        ):
-            # a table-qualified reference would unbind under the
-            # subquery wrap; engine-emitted lambda/struct vars
-            # (__rb.x and friends — every bound template uses a
-            # __-prefixed param) are scope-free and safe
-            return tokens
-        i += 1
-
-    if not cands:
-        return tokens
-    # bail on dots in the tail (wrap safety, same policy)
-    for k in range(tail_idx, n):
-        if (
-            tokens[k].kind == "op"
-            and tokens[k].text == "."
-            and not _lambda_var_dot(tokens, k)
-        ):
-            return tokens
-
-    helpers = []
-    helper_names = []
-    outer_by_start: Dict[int, str] = {}
-    for idx, (start, end, arg, spec, ppart, okeys) in enumerate(cands):
-        ev, ek = f"__wev{idx}", f"__wek{idx}"
-        helper_names += [ev, ek]
-        inner_part = (
-            f"{ppart}, ({arg})" if ppart else f"PARTITION BY ({arg})"
-        )
-        helpers.append(
-            f"({arg}) AS {ev}, ROW_NUMBER() OVER "
-            f"({inner_part} {okeys}) AS {ek}"
-        )
-        nn = f"COUNT({ev}) OVER ({spec})"
-        delta = (
-            f"(CASE WHEN {ev} IS NULL OR {ek} <= 1 THEN "
-            f"CAST(0 AS DECIMAL(38, 18)) ELSE CAST("
-            f"{ek} * log2(CAST({ek} AS DOUBLE)) - "
-            f"({ek} - 1) * log2(CAST({ek} - 1 AS DOUBLE)) "
-            f"AS DECIMAL(38, 18)) END)"
-        )
-        s_sum = f"SUM({delta}) OVER ({spec})"
-        outer_by_start[start] = (
-            f"(CASE WHEN {nn} = 0 THEN 0.0D ELSE "
-            f"log2(CAST({nn} AS DOUBLE)) - CAST({s_sum} AS DOUBLE) "
-            f"/ {nn} END)"
-        )
-
-    ends = {s: e for s, e, *_ in cands}
-
-    def rebuild(lo: int, hi: int) -> str:
-        parts = []
-        i2 = lo
-        while i2 < hi:
-            if i2 in outer_by_start:
-                parts.append(outer_by_start[i2])
-                i2 = ends[i2]
-                continue
-            t2 = tokens[i2]
-            if t2.kind == "op" and t2.text == "*" and lo == sel_start:
-                p = i2 - 1
-                while p >= 0 and tokens[p].kind in ("ws", "comment"):
-                    p -= 1
-                if p < lo or (
-                    tokens[p].kind == "word"
-                    and tokens[p].upper in ("SELECT", "DISTINCT", "ALL")
-                ) or (tokens[p].kind == "op" and tokens[p].text == ","):
-                    parts.append(
-                        f"* EXCEPT ({', '.join(helper_names)})"
-                    )
-                    i2 += 1
-                    continue
-            parts.append(t2.text)
-            i2 += 1
-        return "".join(parts)
-
-    outer_sel, moved_items = _relocate_nonwindow_items(
-        tokens, sel_start, from_idx, outer_by_start, ends, helper_names,
-    )
-    inner_sql = (
-        "SELECT *, "
-        + ", ".join(helpers + moved_items)
-        + " "
-        + _sql(tokens, from_idx, tail_idx)
-    )
-    out_sql = (
-        "SELECT "
-        + distinct
-        + outer_sel
-        + f" FROM ({inner_sql}) __entw"
-    )
-    tail = rebuild(tail_idx, n)
-    if tail.strip():
-        out_sql += " " + tail
-    return _toks(out_sql)
-
-
-def _rewrite_ent_window_streaming(
-    tokens: List[Token], shared_prefix=("__compute__",)
-) -> List[Token]:
-    """Lower ``entropy(x) OVER (spec)`` onto the streaming count-map
-    core EARLY — before the running-RANGE telescoping restructure. A
-    streamed site keeps the statement's shared (PARTITION BY, ORDER BY)
-    prefix intact, where the telescoping rewrite introduces a
-    ``PARTITION BY <keys>, x`` spec that closes the shared-prefix gate
-    for every LATER streaming site (r13: q67's quantile_disc/histogram
-    frames all fell back to folds because its running entropy
-    telescoped first). Non-streamable shapes (no static type, mixed
-    prefixes, DISTINCT, full partitions) pass through untouched for the
-    telescoping/fold passes that follow."""
-    if shared_prefix == ("__compute__",):
-        if not any(
-            t.kind == "word" and t.text.lower() == "entropy"
-            for t in tokens
-        ):
-            return tokens
-        if not any(t.kind == "word" and t.upper == "OVER" for t in tokens):
-            return tokens
-        shared_prefix = _shared_window_prefix(tokens)
-        if shared_prefix is None:
-            return tokens
-    n = len(tokens)
-    out: List[Token] = []
-    i = 0
-    while i < n:
-        t = tokens[i]
-        if t.kind == "word" and t.text.lower() == "entropy":
-            p = len(out) - 1
-            while p >= 0 and out[p].kind in ("ws", "comment"):
-                p -= 1
-            dotted = p >= 0 and out[p].kind == "op" and out[p].text == "."
-            p_open = _next_code(tokens, i)
-            if (
-                not dotted
-                and p_open < n
-                and tokens[p_open].kind == "op"
-                and tokens[p_open].text == "("
-            ):
-                close = _matching_paren(tokens, p_open)
-                after = _next_code(tokens, close)
-                if after < n and tokens[after].is_kw("OVER"):
-                    sp_open = _next_code(tokens, after)
-                    if (
-                        sp_open < n
-                        and tokens[sp_open].kind == "op"
-                        and tokens[sp_open].text == "("
-                    ):
-                        sp_close = _matching_paren(tokens, sp_open)
-                        inner = _rewrite_ent_window_streaming(
-                            tokens[p_open + 1 : close], shared_prefix
-                        )
-                        arg = "".join(tk.text for tk in inner)
-                        core, is_distinct = _split_distinct_prefix(arg)
-                        spec = _sql(tokens, sp_open + 1, sp_close)
-                        u = re.sub(r"\s+", " ", spec).strip().upper()
-                        if "EXCLUDE" in u and not u.endswith(
-                            "EXCLUDE NO OTHERS"
-                        ):
-                            out.append(t)
-                            i += 1
-                            continue
-                        spec2 = re.sub(
-                            r"(?is)EXCLUDE\s+NO\s+OTHERS\s*$", "", spec
-                        )
-                        repl = None
-                        if not _window_spec_full_partition(spec2):
-                            repl = _ent_streaming_or_none(
-                                core, spec2, shared_prefix, is_distinct
-                            )
-                        if repl is not None:
-                            out.extend(_toks(repl))
-                            i = sp_close + 1
-                            continue
-        out.append(t)
-        i += 1
-    return out
-
-
-def _rewrite_entropy_window_running_recursive(
-    tokens: List[Token],
-) -> List[Token]:
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        t = tokens[i]
-        if t.kind == "op" and t.text == "(":
-            close = _matching_paren(tokens, i)
-            inner = _rewrite_entropy_window_running_recursive(
-                tokens[i + 1 : close]
-            )
-            out.append(t)
-            out.extend(inner)
-            out.append(tokens[close])
-            i = close + 1
-            continue
-        out.append(t)
-        i += 1
-    return _rewrite_entropy_window_running(out)
-
-
-def _rewrite_mad_window_recursive(tokens: List[Token]) -> List[Token]:
-    """Apply the window-mad lowering inside every parenthesized scope,
-    innermost-first, then at the top level."""
     out: List[Token] = []
     i = 0
     n = len(tokens)
@@ -6776,165 +6292,269 @@ def _rewrite_mad_window_recursive(tokens: List[Token]) -> List[Token]:
             close = _matching_paren(tokens, i)
             if close > i:
                 out.append(tok)
-                out.extend(
-                    _rewrite_mad_window_recursive(tokens[i + 1 : close])
-                )
+                out.extend(_innermost_first(tokens[i + 1 : close], rewrite))
                 out.append(tokens[close])
                 i = close + 1
                 continue
         out.append(tok)
         i += 1
-    return _rewrite_mad_window(out)
+    return rewrite(out)
 
 
-def _rewrite_mad_window_inplace(
-    tokens: List[Token], shared_prefix=("__compute__",)
-) -> List[Token]:
+def _named_windows(tokens: List[Token]) -> dict:
+    """``lowercase name -> spec tokens`` for every ``WINDOW name AS
+    (spec)`` definition in the statement, in any scope. A name defined
+    twice with different specs, or defined on top of another named
+    window, maps to None (left unresolved)."""
+    out: dict = {}
+    n = len(tokens)
+    for i, t in enumerate(tokens):
+        if not t.is_kw("WINDOW"):
+            continue
+        j = i
+        while True:  # name AS (spec) [, name AS (spec) ...]
+            nm = _next_code(tokens, j)
+            as_kw = _next_code(tokens, nm)
+            op = _next_code(tokens, as_kw)
+            if not (
+                op < n
+                and tokens[nm].kind in ("word", "bident", "qident")
+                and tokens[as_kw].is_kw("AS")
+                and tokens[op].text == "("
+            ):
+                break
+            close = _matching_paren(tokens, op)
+            body = tokens[op + 1 : close]
+            head = body[_next_code(body, -1) :][:1]
+            plain = not head or head[0].is_kw(
+                "PARTITION", "ORDER", "ROWS", "RANGE", "GROUPS"
+            )
+            key = unquote_name(tokens[nm]).lower()
+            same = key not in out or (
+                out[key] is not None
+                and _sql(out[key], 0, len(out[key])) == _sql(body, 0, len(body))
+            )
+            out[key] = body if plain and same else None
+            j = _next_code(tokens, close)
+            if not (j < n and tokens[j].text == ","):
+                break
+    return out
+
+
+# ordered-set aggregates whose calls carry a WITHIN GROUP key
+_WITHIN_GROUP_FNS = frozenset({"percentile_cont", "percentile_disc"})
+
+
+class _CallSite(NamedTuple):
+    """One ``fn(args) [WITHIN GROUP (ORDER BY key)] [OVER (spec) | OVER
+    name]`` call site (``_call_site``). ``within`` is ``(key text,
+    DISTINCT)`` for an ascending WITHIN GROUP key, else None; ``spec``
+    is None without OVER or for an unresolved window name; ``end`` is
+    the index past the call."""
+
+    tokens: List[Token]
+    name: str
+    start: int
+    p_open: int
+    close: int
+    within: Optional[tuple]
+    over: bool
+    spec: Optional[_WinSpec]
+    end: int
+
+    def arg_tokens(self) -> List[Token]:
+        return self.tokens[self.p_open + 1 : self.close]
+
+
+def _call_site(tokens: List[Token], i: int, windows=None):
+    """The call site whose (undotted) function name is ``tokens[i]``,
+    or None. ``windows`` (a callable returning ``_named_windows`` of the
+    whole statement) resolves ``OVER name``; without it a named window
+    stays unresolved."""
+    n = len(tokens)
+    p = i - 1
+    while p >= 0 and tokens[p].kind in ("ws", "comment"):
+        p -= 1
+    if p >= 0 and tokens[p].kind == "op" and tokens[p].text == ".":
+        return None
+    p_open = _next_code(tokens, i)
+    if not (p_open < n and tokens[p_open].kind == "op" and tokens[p_open].text == "("):
+        return None
+    name = tokens[i].text.lower()
+    close = _matching_paren(tokens, p_open)
+    end = close + 1
+    after = _next_code(tokens, close)
+    within = None
+    if after < n and tokens[after].is_kw("WITHIN"):
+        g_kw = _next_code(tokens, after)
+        g_open = _next_code(tokens, g_kw)
+        if not (
+            name in _WITHIN_GROUP_FNS
+            and g_open < n
+            and tokens[g_kw].is_kw("GROUP")
+            and tokens[g_open].text == "("
+        ):
+            return None
+        g_close = _matching_paren(tokens, g_open)
+        code = [
+            t for t in tokens[g_open + 1 : g_close]
+            if t.kind not in ("ws", "comment")
+        ]
+        if len(code) >= 3 and code[0].is_kw("ORDER") and code[1].is_kw("BY"):
+            key = code[2:]
+            distinct = bool(key) and key[0].is_kw("DISTINCT")
+            key = key[1:] if distinct else key
+            desc = False
+            while key and key[-1].is_kw("ASC", "DESC", "NULLS", "FIRST", "LAST"):
+                desc = desc or key[-1].is_kw("DESC")
+                key.pop()
+            if key and not desc:
+                within = ("".join(t.text for t in key).strip(), distinct)
+        end = g_close + 1
+        after = _next_code(tokens, g_close)
+    if not (after < n and tokens[after].is_kw("OVER")):
+        return _CallSite(tokens, name, i, p_open, close, within, False, None, end)
+    spec, end = _over_spec(tokens, after, windows)
+    return _CallSite(tokens, name, i, p_open, close, within, True, spec, end)
+
+
+def _over_spec(tokens: List[Token], k: int, windows=None):
+    """``(spec, end)`` for the OVER at ``tokens[k]``: the parsed inline
+    spec, or a window name resolved through ``windows`` (a callable
+    returning ``_named_windows``); spec None when unresolved. ``end`` is
+    the index past the spec."""
+    n = len(tokens)
+    sp = _next_code(tokens, k)
+    if sp < n and tokens[sp].kind == "op" and tokens[sp].text == "(":
+        end = _matching_paren(tokens, sp) + 1
+        return _parse_spec(tokens[sp + 1 : end - 1]), end
+    body = None
+    if sp < n and windows is not None and tokens[sp].kind in (
+        "word", "bident", "qident",
+    ):
+        body = windows().get(unquote_name(tokens[sp]).lower())
+    return (_parse_spec(body) if body is not None else None), sp + 1
+
+
+def _lazy_windows(tokens: List[Token]):
+    """A callable computing ``_named_windows(tokens)`` once, on first
+    use."""
+    cache: list = []
+
+    def windows() -> dict:
+        if not cache:
+            cache.append(_named_windows(tokens))
+        return cache[0]
+
+    return windows
+
+
+def _lower_calls(tokens: List[Token], names, lower) -> List[Token]:
+    """Replace every call site of ``names`` by ``lower(call, walk)``
+    (SQL text, or None to keep the call and scan on into its
+    arguments). ``walk`` applies the same lowering to a token run, for
+    a lowering that rewrites its own arguments first. Named windows
+    resolve against the statement's WINDOW definitions."""
+    windows = _lazy_windows(tokens)
+
+    def walk(toks: List[Token]) -> List[Token]:
+        out: List[Token] = []
+        i = 0
+        n = len(toks)
+        while i < n:
+            t = toks[i]
+            if t.kind == "word" and t.text.lower() in names:
+                call = _call_site(toks, i, windows)
+                repl = lower(call, walk) if call is not None else None
+                if repl is not None:
+                    out.extend(_toks(repl))
+                    i = call.end
+                    continue
+            out.append(t)
+            i += 1
+        return out
+
+    return walk(tokens)
+def _rewrite_mad_window_inplace(tokens: List[Token]) -> List[Token]:
     """Lower every ``mad(x) OVER (spec)`` the full-partition restructure
     left behind — bounded ROWS/RANGE and running frames, plus
     full-partition shapes inside statements the restructure bailed on
-    (GROUP BY, dotted refs, global aggregates) — IN PLACE via
-    ``_mad_window_template``: no statement restructure, works in any
-    scope, and removes the last pandas (WindowInPandas) crossing in the
-    window path. Also lowers the hinted temporal form
-    ``make_dt_interval(0,0,0, mad(x)/1e6) OVER (spec)``, which
-    previously failed at Spark parse for bounded frames, and
-    ``mad(DISTINCT x) OVER w`` (DuckDB dedupes the frame; lowered via
-    array_distinct over the materialized frame — Spark itself rejects
-    DISTINCT window aggregates outright). Pass-through (loud): EXCLUDE
-    modes other than NO OTHERS and named-window references
-    (``OVER w``).
+    (GROUP BY, dotted refs, global aggregates, named windows) — IN
+    PLACE: no statement restructure, works in any scope. Also lowers
+    the hinted temporal form ``make_dt_interval(0,0,0, mad(x)/1e6) OVER
+    (spec)`` and ``mad(DISTINCT x) OVER w`` (DuckDB dedupes the frame;
+    Spark rejects DISTINCT window aggregates outright). RUNNING and long
+    bounded trailing frames take the streaming order-statistics core
+    when the statement-level gate allows it, every other frame the
+    O(frame)-per-row fold (``_mad_window_template``). Pass-through
+    (loud): EXCLUDE modes other than NO OTHERS."""
+    if not any(
+        t.kind == "word" and t.text.lower() in ("mad", "make_dt_interval")
+        for t in tokens
+    ):
+        return tokens
+    shared_prefix = _shared_window_prefix(tokens)
 
-    RUNNING and long bounded trailing frames take the streaming
-    order-statistics core (`_win_os_streaming_sql`) instead of the
-    O(frame)-per-row fold when the statement-level gate allows it —
-    ``shared_prefix`` (computed once at the top-level call, passed down
-    recursion) is the single (PARTITION BY, ORDER BY) prefix every
-    window in the statement shares, or None."""
-    if shared_prefix == ("__compute__",):
-        shared_prefix = _shared_window_prefix(tokens)
-    n = len(tokens)
-    out: List[Token] = []
-    i = 0
-    while i < n:
-        t = tokens[i]
-        if t.kind == "word" and t.text.lower() in ("mad", "make_dt_interval"):
-            p = len(out) - 1
-            while p >= 0 and out[p].kind in ("ws", "comment"):
-                p -= 1
-            dotted = p >= 0 and out[p].kind == "op" and out[p].text == "."
-            p_open = _next_code(tokens, i)
-            if (
-                not dotted
-                and p_open < n
-                and tokens[p_open].kind == "op"
-                and tokens[p_open].text == "("
-            ):
-                close = _matching_paren(tokens, p_open)
-                after = _next_code(tokens, close)
-                if after < n and tokens[after].is_kw("OVER"):
-                    sp_open = _next_code(tokens, after)
-                    if (
-                        sp_open < n
-                        and tokens[sp_open].kind == "op"
-                        and tokens[sp_open].text == "("
-                    ):
-                        sp_close = _matching_paren(tokens, sp_open)
-                        inner = _rewrite_mad_window_inplace(
-                            tokens[p_open + 1 : close], shared_prefix
-                        )
-                        body = "".join(tk.text for tk in inner)
-                        temporal = False
-                        arg = body
-                        if t.text.lower() == "make_dt_interval":
-                            m = _MADW_TEMPORAL_RE.match(body)
-                            if not m:
-                                out.append(t)
-                                i += 1
-                                continue
-                            arg, temporal = m.group(1), True
-                        core, is_distinct = _split_distinct_prefix(arg)
-                        spec = _sql(tokens, sp_open + 1, sp_close)
-                        u = re.sub(r"\s+", " ", spec).strip().upper()
-                        if "EXCLUDE" in u:
-                            if not u.endswith("EXCLUDE NO OTHERS"):
-                                out.append(t)
-                                i += 1
-                                continue
-                            spec = re.sub(
-                                r"(?is)EXCLUDE\s+NO\s+OTHERS\s*$", "", spec
-                            )
-                        repl = None
-                        if shared_prefix is not None:
-                            parsed = _resolved_spec(spec, shared_prefix)
-                            if parsed is not None:
-                                mmode, mcore, mwrap = _mad_mode_and_wrap(
-                                    core, temporal
-                                )
-                                repl = _win_os_streaming_sql(
-                                    "mad",
-                                    mcore,
-                                    parsed[0],
-                                    parsed[1],
-                                    parsed[2],
-                                    mmode,
-                                    is_distinct,
-                                )
-                                if mwrap is not None:
-                                    repl = mwrap(repl)
-                                if temporal:
-                                    repl = (
-                                        "make_dt_interval(0, 0, 0, "
-                                        f"{repl} / 1000000.0D)"
-                                    )
-                        if repl is None:
-                            repl = _mad_window_template(
-                                core, spec, temporal, is_distinct
-                            )
-                        out.extend(_toks(repl))
-                        i = sp_close + 1
-                        continue
-        out.append(t)
-        i += 1
-    return out
+    def lower(call: _CallSite, walk):
+        if call.spec is None or call.spec.exclude:
+            return None
+        arg = "".join(t.text for t in walk(call.arg_tokens()))
+        temporal = call.name == "make_dt_interval"
+        if temporal:
+            m = _MADW_TEMPORAL_RE.match(arg)
+            if not m:
+                return None
+            arg = m.group(1)
+        core, distinct = _split_distinct_prefix(arg)
+        return _streaming_or_none(
+            "mad", core, call.spec, shared_prefix, distinct, temporal=temporal
+        ) or _mad_window_template(core, call.spec.text, temporal, distinct)
+
+    return _lower_calls(tokens, ("mad", "make_dt_interval"), lower)
 
 
 def _rewrite_mad_fallback_template(tokens: List[Token]) -> List[Token]:
-    """Lower every ``mad(...)`` call the statement restructure could
-    NOT lift to the pure built-in collect_list template
-    (``_mad_template``): unlike the grouped-agg pandas UDF — which
-    Spark refuses to plan alongside built-in aggregates in the same
-    Aggregate — it mixes freely and stays JVM-side. Window calls
-    (OVER follows) keep the pandas UDF: the template's outer
-    element_at is not window-able, and a pandas UDAF over a window IS
-    plannable. Runs AFTER the restructure passes, so only genuine
+    """Lower every non-window ``mad(...)`` call the grouped two-phase
+    plan could NOT lift to the pure built-in collect_list template
+    (``_mad_template``), which mixes freely with other aggregates and
+    stays JVM-side. Runs AFTER the restructure passes, so only genuine
     fallback shapes (DISTINCT selects, nested scopes the restructure
-    bailed on) reach it."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "word" and tok.text.lower() == "mad":
-            p_open = _next_code(tokens, i)
-            if (
-                p_open < n
-                and tokens[p_open].kind == "op"
-                and tokens[p_open].text == "("
-            ):
-                close = _matching_paren(tokens, p_open)
-                after = _next_code(tokens, close)
-                if not (after < n and tokens[after].is_kw("OVER")):
-                    inner = _rewrite_mad_fallback_template(
-                        tokens[p_open + 1 : close]
-                    )
-                    arg = "".join(t.text for t in inner)
-                    out.extend(_toks(_mad_template(arg)))
-                    i = close + 1
-                    continue
-        out.append(tok)
-        i += 1
-    return out
+    bailed on) reach it; window calls belong to the passes before."""
+
+    def lower(call: _CallSite, walk):
+        if call.over:
+            return None
+        return _mad_template("".join(t.text for t in walk(call.arg_tokens())))
+
+    return _lower_calls(tokens, ("mad",), lower)
+
+
+def _rewrite_ent_window_streaming(tokens: List[Token]) -> List[Token]:
+    """Lower ``entropy(x) OVER (spec)`` onto the streaming count-map
+    core EARLY — before the running-RANGE telescoping restructure. A
+    streamed site keeps the statement's shared (PARTITION BY, ORDER BY)
+    prefix intact, where the telescoping rewrite introduces a
+    ``PARTITION BY <keys>, x`` spec that closes the shared-prefix gate
+    for every LATER streaming site (r13: q67's quantile_disc/histogram
+    frames all fell back to folds because its running entropy
+    telescoped first). Non-streamable shapes (no static type, mixed
+    prefixes, full partitions) pass through untouched for the
+    telescoping/fold passes that follow."""
+    if not any(t.kind == "word" and t.text.lower() == "entropy" for t in tokens):
+        return tokens
+    shared_prefix = _shared_window_prefix(tokens)
+    if shared_prefix is None:
+        return tokens
+
+    def lower(call: _CallSite, walk):
+        spec = call.spec
+        if spec is None or spec.full or spec.exclude:
+            return None
+        arg = "".join(t.text for t in walk(call.arg_tokens()))
+        core, distinct = _split_distinct_prefix(arg)
+        return _streaming_or_none("ent", core, spec, shared_prefix, distinct)
+
+    return _lower_calls(tokens, ("entropy",), lower)
 
 
 # window-aggregate names the late frame-materialization pass lowers
@@ -6950,13 +6570,11 @@ _AGGW_FOLD_FNS = frozenset(
 )
 
 
-def _rewrite_agg_window_frames(
-    tokens: List[Token], shared_prefix=("__compute__",)
-) -> List[Token]:
+def _rewrite_agg_window_frames(tokens: List[Token]) -> List[Token]:
     """DuckDB allows EVERY aggregate as a window function over any
     frame; Spark rejects several shapes outright. Lower the leftovers
-    onto collect_list frame-materialization folds, in place (r10,
-    same machinery as the window-mad lowering):
+    onto the streaming cores or collect_list frame-materialization
+    folds, in place (r10, same machinery as the window-mad lowering):
 
     - ``entropy(x) OVER w`` with a non-full-partition frame (full
       partitions restructure onto built-in aggregates earlier);
@@ -6968,12 +6586,13 @@ def _rewrite_agg_window_frames(
       superset) — whenever the spec has an ORDER BY or a frame: Spark
       raises INVALID_WINDOW_SPEC_FOR_AGGREGATION_FUNC on those; DESC
       within-group orderings pass through (still loud). Windowed
-      ``mode()`` stays native — see the note above _AGGW_FOLD_FNS.
+      ``mode()`` stays native — see the note above _AGGW_FOLD_FNS;
+    - ``percentile(DISTINCT x, q) OVER w`` (quantile_cont(DISTINCT ..)),
+      and running/bounded ``percentile(x, q)`` onto the streaming core.
 
     DISTINCT arguments dedupe the materialized frame (array_distinct).
     Runs LAST so no later pass touches the emitted folds and every
     argument/spec is already translated."""
-    n = len(tokens)
     if not any(
         t.kind == "word" and t.text.lower() in _AGGW_FOLD_FNS
         for t in tokens
@@ -6981,277 +6600,112 @@ def _rewrite_agg_window_frames(
         return tokens
     if not any(t.kind == "word" and t.upper == "OVER" for t in tokens):
         return tokens
-    if shared_prefix == ("__compute__",):
-        shared_prefix = _shared_window_prefix(tokens)
-    out: List[Token] = []
-    i = 0
-    while i < n:
-        t = tokens[i]
-        if t.kind == "word" and t.text.lower() in _AGGW_FOLD_FNS:
-            low = t.text.lower()
-            p = len(out) - 1
-            while p >= 0 and out[p].kind in ("ws", "comment"):
-                p -= 1
-            dotted = p >= 0 and out[p].kind == "op" and out[p].text == "."
-            p_open = _next_code(tokens, i)
-            if (
-                not dotted
-                and p_open < n
-                and tokens[p_open].kind == "op"
-                and tokens[p_open].text == "("
-            ):
-                close = _matching_paren(tokens, p_open)
-                after = _next_code(tokens, close)
-                wg_x = None
-                wg_distinct = False
-                if low in ("percentile_disc", "percentile_cont"):
-                    # ... WITHIN GROUP ( ORDER BY x [dir] ) rider
-                    if after < n and tokens[after].is_kw("WITHIN"):
-                        g_kw = _next_code(tokens, after)
-                        g_open = _next_code(tokens, g_kw)
-                        if (
-                            g_kw < n
-                            and tokens[g_kw].is_kw("GROUP")
-                            and g_open < n
-                            and tokens[g_open].kind == "op"
-                            and tokens[g_open].text == "("
-                        ):
-                            g_close = _matching_paren(tokens, g_open)
-                            gcode = [
-                                tk
-                                for tk in tokens[g_open + 1 : g_close]
-                                if tk.kind not in ("ws", "comment")
-                            ]
-                            if (
-                                len(gcode) >= 3
-                                and gcode[0].is_kw("ORDER")
-                                and gcode[1].is_kw("BY")
-                            ):
-                                body = gcode[2:]
-                                wg_distinct = False
-                                if body and body[0].is_kw("DISTINCT"):
-                                    # quantile_disc(DISTINCT x, q)'s
-                                    # shimmed spelling: dedupe the frame
-                                    wg_distinct = True
-                                    body = body[1:]
-                                desc = False
-                                while body and body[-1].kind == "word" and (
-                                    body[-1].upper
-                                    in ("ASC", "DESC", "NULLS", "FIRST", "LAST")
-                                ):
-                                    if body[-1].upper == "DESC":
-                                        desc = True
-                                    body.pop()
-                                if body and not desc:
-                                    wg_x = "".join(
-                                        tk.text for tk in body
-                                    ).strip()
-                                    after = _next_code(tokens, g_close)
-                if after < n and tokens[after].is_kw("OVER"):
-                    sp_open = _next_code(tokens, after)
-                    if (
-                        sp_open < n
-                        and tokens[sp_open].kind == "op"
-                        and tokens[sp_open].text == "("
-                    ):
-                        sp_close = _matching_paren(tokens, sp_open)
-                        spec = _sql(tokens, sp_open + 1, sp_close)
-                        u = re.sub(r"\s+", " ", spec).strip().upper()
-                        bail = False
-                        if "EXCLUDE" in u:
-                            if u.endswith("EXCLUDE NO OTHERS"):
-                                spec = re.sub(
-                                    r"(?is)EXCLUDE\s+NO\s+OTHERS\s*$",
-                                    "",
-                                    spec,
-                                )
-                                u = u[: -len("EXCLUDE NO OTHERS")].strip()
-                            else:
-                                bail = True
-                        full = _window_spec_full_partition(spec)
-                        has_order = bool(re.search(r"\bORDER BY\b", u))
-                        args = _split_top_level_args(tokens, p_open, close)
-                        repl = None
-                        if not bail and low in (
-                            "percentile_disc",
-                            "percentile_cont",
-                        ):
-                            # Spark rejects ANY explicit ORDER BY/frame
-                            # on WITHIN GROUP window aggregates — even a
-                            # semantically-inert unbounded one — so only
-                            # a pure PARTITION BY spec stays native; a
-                            # DISTINCT rider can never stay native
-                            # (ORDER BY DISTINCT x is a parse error —
-                            # r10c fuzz find on the full-partition
-                            # quantile_disc(DISTINCT x, q) shape)
-                            if (
-                                wg_x is not None
-                                and (has_order or not full or wg_distinct)
-                                and len(args) == 1
-                            ):
-                                q_sql = "".join(
-                                    tk.text for tk in args[0]
-                                ).strip()
-                                try:
-                                    qf = float(q_sql)
-                                except ValueError:
-                                    qf = None
-                                if qf in (0.0, 1.0):
-                                    # quantile at the extremes IS
-                                    # min/max (index rule max(1,
-                                    # ceil(q*n)); interpolation is
-                                    # inert at the ends) — native
-                                    # O(n) window, no frame
-                                    # materialization (r10c: the fold
-                                    # built an O(n) prefix array per
-                                    # row on running frames).
-                                    # DISTINCT can't change extremes.
-                                    ext = "min" if qf == 0.0 else "max"
-                                    repl = f"{ext}({wg_x}) OVER ({spec})"
-                                    ch_x = _parse_literal_decimal_chain(
-                                        wg_x
-                                    )
-                                    if low == "percentile_cont" and not (
-                                        ch_x is not None and not ch_x[3]
-                                    ):
-                                        # decimal extremes keep their
-                                        # DECIMAL(w,s) type (r13);
-                                        # everything else renders the
-                                        # interpolation's DOUBLE
-                                        repl = (
-                                            f"CAST({repl} AS DOUBLE)"
-                                        )
-                                else:
-                                    if low == "percentile_cont":
-                                        repl = _qcont_streaming_or_none(
-                                            wg_x,
-                                            q_sql,
-                                            spec,
-                                            wg_distinct,
-                                            shared_prefix,
-                                        )
-                                        if repl is None:
-                                            repl = _qdec_window_fold_or_none(
-                                                "qcont",
-                                                wg_x,
-                                                q_sql,
-                                                spec,
-                                                wg_distinct,
-                                            )
-                                    else:
-                                        repl = _qdisc_streaming_or_none(
-                                            wg_x,
-                                            q_sql,
-                                            spec,
-                                            wg_distinct,
-                                            shared_prefix,
-                                        )
-                                    if repl is None:
-                                        collected = (
-                                            f"collect_list({wg_x}) "
-                                            f"OVER ({spec})"
-                                        )
-                                        if wg_distinct:
-                                            collected = (
-                                                f"array_distinct({collected})"
-                                            )
-                                        repl = (
-                                            _quantile_disc_fold_sql(
-                                                collected, q_sql
-                                            )
-                                            if low == "percentile_disc"
-                                            else _quantile_cont_fold_sql(
-                                                collected, q_sql
-                                            )
-                                        )
-                        elif (
-                            not bail and low == "percentile"
-                            and len(args) == 2
-                        ):
-                            # quantile_cont(DISTINCT x, q)'s shimmed
-                            # spelling: Spark rejects DISTINCT window
-                            # functions for EVERY spec — fold over the
-                            # deduped frame (non-DISTINCT percentile
-                            # windows natively; leave it)
-                            arg_sql = "".join(
-                                tk.text for tk in args[0]
-                            ).strip()
-                            core, is_distinct = _split_distinct_prefix(
-                                arg_sql
-                            )
-                            q_sql = "".join(
-                                tk.text for tk in args[1]
-                            ).strip()
-                            # non-DISTINCT windowed percentile DOES
-                            # plan natively, but Spark re-sorts the
-                            # frame buffer on EVERY row's evaluate —
-                            # O(n * frame) on running frames (measured
-                            # 5x slower than the streaming core at
-                            # sf0.1, quadratic at scale) — so the
-                            # streaming core takes those shapes too
-                            repl = _qcont_streaming_or_none(
-                                core, q_sql, spec, is_distinct,
-                                shared_prefix,
-                            )
-                            if repl is None:
-                                repl = _qdec_window_fold_or_none(
-                                    "qcont", core, q_sql, spec,
-                                    is_distinct,
-                                )
-                            if repl is None and is_distinct:
-                                repl = _quantile_cont_fold_sql(
-                                    f"array_distinct(collect_list({core})"
-                                    f" OVER ({spec}))",
-                                    q_sql,
-                                )
-                        elif not bail and len(args) == 1:
-                            arg0 = _rewrite_agg_window_frames(
-                                list(args[0]), shared_prefix
-                            )
-                            arg_sql = "".join(tk.text for tk in arg0).strip()
-                            core, is_distinct = _split_distinct_prefix(
-                                arg_sql
-                            )
-                            collected = f"collect_list({core}) OVER ({spec})"
-                            if is_distinct:
-                                collected = f"array_distinct({collected})"
-                            if low == "histogram":
-                                repl = _hist_streaming_or_none(
-                                    core, spec, shared_prefix,
-                                    is_distinct,
-                                )
-                                if repl is None:
-                                    repl = _histogram_fold_sql(collected)
-                            elif low == "entropy" and (
-                                not full or is_distinct
-                            ):
-                                # DISTINCT full-partition entropy has no
-                                # earlier lowering (unresolved routine
-                                # pre-r10) — streaming or the fold
-                                # covers it
-                                if not full:
-                                    repl = _ent_streaming_or_none(
-                                        core, spec, shared_prefix,
-                                        is_distinct,
-                                    )
-                                if repl is None:
-                                    repl = _entropy_fold_sql(collected)
-                        if repl is not None:
-                            out.extend(_toks(repl))
-                            i = sp_close + 1
-                            continue
-        out.append(t)
-        i += 1
-    return out
+    shared_prefix = _shared_window_prefix(tokens)
 
+    def lower(call: _CallSite, walk):
+        spec = call.spec
+        if spec is None or spec.exclude:
+            return None
+        low = call.name
+        args = _split_top_level_args(call.tokens, call.p_open, call.close)
+        if low in _WITHIN_GROUP_FNS:
+            # Spark rejects ANY explicit ORDER BY/frame on WITHIN GROUP
+            # window aggregates — even a semantically-inert unbounded
+            # one — so only a pure PARTITION BY spec stays native; a
+            # DISTINCT rider can never stay native (ORDER BY DISTINCT x
+            # is a parse error — r10c fuzz find on the full-partition
+            # quantile_disc(DISTINCT x, q) shape)
+            if call.within is None or len(args) != 1:
+                return None
+            x, distinct = call.within
+            if not (spec.has_order or not spec.full or distinct):
+                return None
+            q_sql = "".join(tk.text for tk in args[0]).strip()
+            try:
+                qf = float(q_sql)
+            except ValueError:
+                qf = None
+            if qf in (0.0, 1.0):
+                # quantile at the extremes IS min/max (index rule
+                # max(1, ceil(q*n)); interpolation is inert at the
+                # ends) — native O(n) window, no frame materialization
+                # (r10c: the fold built an O(n) prefix array per row on
+                # running frames). DISTINCT can't change extremes.
+                # Decimal extremes keep their DECIMAL(w,s) type (r13);
+                # everything else renders the interpolation's DOUBLE.
+                ext = "min" if qf == 0.0 else "max"
+                repl = f"{ext}({x}) OVER ({spec.text})"
+                if low == "percentile_cont" and _arg_domain(x).kind not in (
+                    "dec", "wide_dec",
+                ):
+                    repl = f"CAST({repl} AS DOUBLE)"
+                return repl
+            if low == "percentile_cont":
+                repl = _streaming_or_none(
+                    "qcont", x, spec, shared_prefix, distinct, q_sql
+                ) or _qdec_window_fold_or_none(
+                    "qcont", x, q_sql, spec.text, distinct
+                )
+            else:
+                repl = _streaming_or_none(
+                    "qdisc", x, spec, shared_prefix, distinct, q_sql
+                )
+            if repl is not None:
+                return repl
+            collected = f"collect_list({x}) OVER ({spec.text})"
+            if distinct:
+                collected = f"array_distinct({collected})"
+            if low == "percentile_disc":
+                return _quantile_disc_fold_sql(collected, q_sql)
+            return _quantile_cont_fold_sql(collected, q_sql)
+        if low == "percentile":
+            # quantile_cont(x, q)'s shimmed spelling. Non-DISTINCT
+            # windowed percentile DOES plan natively, but Spark re-sorts
+            # the frame buffer on EVERY row's evaluate — O(n * frame) on
+            # running frames (measured 5x slower than the streaming core
+            # at sf0.1, quadratic at scale) — so the streaming core
+            # takes those shapes too; DISTINCT (rejected by Spark for
+            # every spec) folds over the deduped frame
+            if len(args) != 2:
+                return None
+            core, distinct = _split_distinct_prefix(
+                "".join(tk.text for tk in args[0]).strip()
+            )
+            q_sql = "".join(tk.text for tk in args[1]).strip()
+            repl = _streaming_or_none(
+                "qcont", core, spec, shared_prefix, distinct, q_sql
+            ) or _qdec_window_fold_or_none(
+                "qcont", core, q_sql, spec.text, distinct
+            )
+            if repl is None and distinct:
+                repl = _quantile_cont_fold_sql(
+                    f"array_distinct(collect_list({core})"
+                    f" OVER ({spec.text}))",
+                    q_sql,
+                )
+            return repl
+        if len(args) != 1 or low not in ("histogram", "entropy"):
+            return None
+        core, distinct = _split_distinct_prefix(
+            "".join(tk.text for tk in walk(list(args[0]))).strip()
+        )
+        collected = f"collect_list({core}) OVER ({spec.text})"
+        if distinct:
+            collected = f"array_distinct({collected})"
+        if low == "histogram":
+            return _streaming_or_none(
+                "hist", core, spec, shared_prefix, distinct
+            ) or _histogram_fold_sql(collected)
+        if spec.full and not distinct:
+            return None  # the full-partition lowering owns it
+        # DISTINCT full-partition entropy has no earlier lowering —
+        # the fold covers it
+        repl = None
+        if not spec.full:
+            repl = _streaming_or_none("ent", core, spec, shared_prefix, distinct)
+        return repl or _entropy_fold_sql(collected)
 
-def _rewrite_entropy_groupby_recursive(tokens: List[Token]) -> List[Token]:
-    return _rewrite_aggfn_groupby_recursive(tokens, _ENTROPY_SPEC)
-
-
-def _rewrite_mad_groupby_recursive(tokens: List[Token]) -> List[Token]:
-    return _rewrite_aggfn_groupby_recursive(tokens, _MAD_SPEC)
-
+    return _lower_calls(tokens, _AGGW_FOLD_FNS, lower)
 
 
 _RE2_VALID_CACHE: dict = {}
@@ -10093,7 +9547,7 @@ _BIND_THRESHOLD = 160
 # ceil/floor/trunc keep their lambda-free repeated-operand form there.
 _PY_UDF_FNS = frozenset({
     "age", "icu_sort_key", "__yyjson_norm", "__re2_valid",
-    "current_setting", "mad", "__duck_round", "__duck_fint",
+    "current_setting", "__duck_round", "__duck_fint",
     "__duck_printf",
     "length_grapheme", "left_grapheme", "right_grapheme",
     "substring_grapheme", "json_contains", "json_structure",
@@ -10116,6 +9570,54 @@ def _py_udf_arg_spans(tokens: List[Token]) -> set:
                 if close > nk:
                     spans.update(range(nk, close + 1))
     return spans
+
+
+_FMTLIB_PH_RE = re.compile(r"\{([^{}]*)\}")
+
+
+def _fmtlib_placeholder(body: str):
+    """The printf rendering of one fmtlib placeholder ``{body}`` that
+    the ``format`` shim translates — ``{}`` and
+    ``{:[width][.prec][dfsxoe]}`` — as ``(spec, typ, bare_width,
+    explicit_type)``; None for the forms it leaves unrewritten
+    (positional ``{n}``, fill/align ``{:>8}``, locale ``{:,}``).
+    ``bare_width`` is set for ``{:N}`` with no explicit type/precision:
+    fmtlib then left-aligns strings/bools but right-aligns numbers, so
+    alignment is decided at runtime on the argument's type (``%Ns``
+    would right-align everything)."""
+    if body == "":
+        return ("%s", "s", None, False)
+    if not body.startswith(":"):
+        return None
+    sm = re.fullmatch(r"(\d*)(?:\.(\d+))?([dfsxoe])?", body[1:])
+    if sm is None:
+        return None
+    width, prec, typ = sm.groups()
+    if width and not prec and not typ:
+        return ("%s", "s", int(width), False)
+    if prec and not typ:
+        # typeless precision {:W.P}: fmt's 'general' presentation —
+        # runtime type dispatch in the slot (r10c)
+        return ("%s", "q", (width or "", prec), False)
+    expl = typ is not None
+    typ = typ or ("f" if prec else "s")
+    return (
+        "%" + (width or "") + (f".{prec}" if prec else "") + typ,
+        typ,
+        None,
+        expl,
+    )
+
+
+def fmtlib_format_ok(fmt: str) -> bool:
+    """True when the ``format`` shim translates every placeholder of
+    the fmtlib format string ``fmt`` (``{{``/``}}`` are literal braces;
+    a stray brace is a DuckDB format error)."""
+    esc = fmt.replace("{{", "").replace("}}", "")
+    if any(_fmtlib_placeholder(m.group(1)) is None for m in _FMTLIB_PH_RE.finditer(esc)):
+        return False
+    rest = _FMTLIB_PH_RE.sub("", esc)
+    return "{" not in rest and "}" not in rest
 
 
 def _fmtlib_repr_sql(sexpr: str) -> str:
@@ -10781,25 +10283,6 @@ def _rewrite_date_interval_add(tokens: List[Token]) -> List[Token]:
 _QUALIFY_TERMINATORS = {"ORDER", "LIMIT", "UNION", "EXCEPT", "INTERSECT", "OFFSET"}
 
 
-def _rewrite_distinct_on_recursive(tokens: List[Token]) -> List[Token]:
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "op" and tok.text == "(":
-            close = _matching_paren(tokens, i)
-            if close > i:
-                out.append(tok)
-                out.extend(_rewrite_distinct_on_recursive(tokens[i + 1 : close]))
-                out.append(tokens[close])
-                i = close + 1
-                continue
-        out.append(tok)
-        i += 1
-    return _rewrite_distinct_on(out)
-
-
 def _split_csv_text(text: str) -> List[str]:
     """Split SQL text on top-level commas."""
     parts: List[str] = []
@@ -10988,28 +10471,6 @@ def _rewrite_distinct_on(tokens: List[Token]) -> List[Token]:
     if limit_idx is not None:
         rewritten += " " + "".join(t.text for t in tokens[limit_idx:]).strip()
     return _toks(rewritten)
-
-
-def _rewrite_qualify_recursive(tokens: List[Token]) -> List[Token]:
-    """Apply the QUALIFY rewrite inside every parenthesized group
-    (subqueries, CTE bodies, derived tables), innermost-first, then at
-    the top level."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "op" and tok.text == "(":
-            close = _matching_paren(tokens, i)
-            if close > i:
-                out.append(tok)
-                out.extend(_rewrite_qualify_recursive(tokens[i + 1: close]))
-                out.append(tokens[close])
-                i = close + 1
-                continue
-        out.append(tok)
-        i += 1
-    return _rewrite_qualify(out)
 
 
 def _rewrite_qualify(tokens: List[Token]) -> List[Token]:
@@ -12153,10 +11614,10 @@ def _rewrite_call_shims(
                     # median absolute deviation: numerics cast to
                     # DOUBLE; temporals route through epoch micros and
                     # come back as a day-time interval (DuckDB returns
-                    # INTERVAL there). The call name survives so the
-                    # later statement restructure can lift it; calls
-                    # the restructure can't lift are lowered by the
-                    # trailing _rewrite_mad_fallback_template pass.
+                    # INTERVAL there). The call name survives for the
+                    # window and grouped lowerings that follow; any
+                    # other call is lowered by the trailing
+                    # _rewrite_mad_fallback_template pass.
                     a = _sql(inner, *args[0])
                     # DISTINCT qualifier hoists OUTSIDE the cast so the
                     # restructure/template can dedupe before the medians
@@ -12171,12 +11632,7 @@ def _rewrite_call_shims(
                             )
                         )
                     else:
-                        ch_m = _parse_literal_decimal_chain(a)
-                        if (
-                            ch_m is not None
-                            and not ch_m[3]
-                            and ch_m[1] <= 15
-                        ):
+                        if _arg_domain(a).kind == "dec":
                             # statically-DECIMAL chain: keep the raw
                             # arg so the restructure/template/streaming
                             # passes can detect the truncating
@@ -13358,53 +12814,13 @@ def _rewrite_call_shims(
                             .replace("}}", "\x01")
                         )
 
-                        def _ph(m):
-                            # returns (spec, typ, bare_width) —
-                            # bare_width set for {:N} with no explicit
-                            # type/precision: fmtlib then left-aligns
-                            # strings/bools but right-aligns numbers,
-                            # so alignment must be decided at runtime
-                            # on the argument's type (%Ns would
-                            # right-align everything)
-                            body = m.group(1)
-                            if body == "":
-                                return ("%s", "s", None, False)
-                            if not body.startswith(":"):
-                                return None
-                            sm = re.fullmatch(
-                                r"(\d*)(?:\.(\d+))?([dfsxoe])?", body[1:]
-                            )
-                            if sm is None:
-                                return None
-                            width, prec, typ = sm.groups()
-                            if width and not prec and not typ:
-                                return ("%s", "s", int(width), False)
-                            if prec and not typ:
-                                # typeless precision {:W.P}: fmt's
-                                # 'general' presentation — runtime
-                                # type dispatch in the slot (r10c)
-                                return (
-                                    "%s", "q", (width or "", prec), False
-                                )
-                            expl = typ is not None
-                            typ = typ or ("f" if prec else "s")
-                            return (
-                                "%"
-                                + (width or "")
-                                + (f".{prec}" if prec else "")
-                                + typ,
-                                typ,
-                                None,
-                                expl,
-                            )
-
                         parts_out = []
                         typs = []
                         bare_widths = []
                         pos = 0
                         fmt_ok = True
-                        for m in re.finditer(r"\{([^{}]*)\}", esc):
-                            rep = _ph(m)
+                        for m in _FMTLIB_PH_RE.finditer(esc):
+                            rep = _fmtlib_placeholder(m.group(1))
                             if rep is None:
                                 fmt_ok = False
                                 break
@@ -14716,7 +14132,7 @@ def _expand_scope(
         text = _with_ctes(scope_ctes, scope_recursive, text)
         if text not in resolved:
             cols = resolve(text)
-            if cols is None or len({c.lower() for c in cols}) < len(cols):
+            if cols is None:
                 raise _Unresolvable()
             resolved[text] = list(cols)
         return resolved[text]
@@ -14754,6 +14170,8 @@ def _expand_scope(
             cur = f"{cur} {op_text} {nxt}"
             continue
         cl, cr = _res(cur), _res(nxt)
+        if any(len({c.lower() for c in x}) < len(x) for x in (cl, cr)):
+            raise _Unresolvable()  # BY NAME over duplicate names
         low_l = [c.lower() for c in cl]
         merged = list(cl) + [c for c in cr if c.lower() not in low_l]
         low_r = {c.lower(): c for c in cr}
@@ -14811,13 +14229,34 @@ def _expand_items(tokens: List[Token], res) -> List[Token]:
     ends = _top_level_positions(
         tokens, frm, n, lambda t: t.is_kw(*_FROM_CLAUSE_ENDS)
     )
-    from_text = _sql(tokens, frm, ends[0] if ends else n)
+    from_end = ends[0] if ends else n
+    from_text = _sql(tokens, frm, from_end)
+
+    def cols_of(star: str) -> List[tuple]:
+        """``(reference, name)`` per column of ``SELECT star FROM ..``:
+        a name the FROM yields twice is referenced as ``alias.col``."""
+        cols = res(f"SELECT {star} {from_text}")
+        low = [c.lower() for c in cols]
+        dup = {c for c in low if low.count(c) > 1}
+        if not dup:
+            return [(_bt(c), c) for c in cols]
+        quals: List[str] = []
+        names: List[str] = []
+        for alias in _from_aliases(tokens, frm, from_end):
+            part = res(f"SELECT {alias}.* {from_text}")
+            quals += [alias] * len(part)
+            names += [c.lower() for c in part]
+        if names != low:
+            raise _Unresolvable()  # e.g. USING / NATURAL joins
+        return [
+            (f"{q}.{_bt(c)}" if c.lower() in dup else _bt(c), c)
+            for q, c in zip(quals, cols)
+        ]
+
     texts: List[str] = []
     changed = False
     for s, e in _split_top_commas(tokens, start, frm):
-        new = _expand_item(
-            tokens[s:e], lambda star: res(f"SELECT {star} {from_text}")
-        )
+        new = _expand_item(tokens[s:e], cols_of)
         changed = changed or new is not None
         texts.append(_sql(tokens, s, e) if new is None else ", ".join(new))
     if not changed:
@@ -14828,7 +14267,8 @@ def _expand_items(tokens: List[Token], res) -> List[Token]:
 def _expand_item(item: List[Token], cols_of) -> Optional[List[str]]:
     """The select items a COLUMNS(...) or ``[alias.]* [EXCLUDE (...)]
     REPLACE (...)`` item expands to; None for any other item.
-    ``cols_of(star)`` resolves ``SELECT <star> FROM <the FROM clause>``."""
+    ``cols_of(star)`` resolves ``SELECT <star> FROM <the FROM clause>``
+    to ``(reference, name)`` pairs."""
     code = [j for j, t in enumerate(item) if t.kind not in ("ws", "comment")]
     if not code:
         return None
@@ -14856,14 +14296,14 @@ def _expand_item(item: List[Token], cols_of) -> Optional[List[str]]:
             rx = re.compile(arg)
         except re.error:
             raise _Unresolvable() from None
-        matched = [c for c in cols if rx.search(c)]
+        matched = [(ref, c) for ref, c in cols if rx.search(c)]
     if not matched:
         raise _Unresolvable()
     call_text = "".join(t.text for t in item[c_start:c_end])
     item_text = "".join(t.text for t in item).strip()
     if item_text == call_text.strip():
-        return [_bt(c) for c in matched]
-    return [f"{item_text.replace(call_text, _bt(c))} AS {_bt(c)}" for c in matched]
+        return [ref for ref, _ in matched]
+    return [f"{item_text.replace(call_text, ref)} AS {_bt(c)}" for ref, c in matched]
 
 
 def _star_replace_item(
@@ -14905,15 +14345,63 @@ def _star_replace_item(
             raise _Unresolvable()
         repl[unquote_name(name[0]).lower()] = _sql(item, s, as_pos[-1])
     cols = cols_of(qual + "*")
-    low = {c.lower() for c in cols}
-    if not (repl.keys() <= low and excl <= low):
+    low = [c.lower() for _, c in cols]
+    if not (repl.keys() <= set(low) and excl <= set(low)):
         raise _Unresolvable()
+    if any(low.count(c) > 1 for c in repl):
+        raise _Unresolvable()  # replacing an ambiguous name
     return [
-        f"({repl[c.lower()]}) AS {_bt(c)}" if c.lower() in repl else qual + _bt(c)
-        for c in cols
+        f"({repl[c.lower()]}) AS {_bt(c)}" if c.lower() in repl else qual + ref
+        for ref, c in cols
         if c.lower() not in excl
     ]
 
+
+# words that end a FROM item's table reference
+_FROM_ITEM_ENDS = frozenset({
+    "ON", "USING", "JOIN", "LEFT", "RIGHT", "INNER", "FULL", "CROSS",
+    "OUTER", "NATURAL", "SEMI", "ANTI", "ASOF", "POSITIONAL", "LATERAL",
+})
+
+
+def _from_aliases(tokens: List[Token], frm: int, hi: int) -> List[str]:
+    """The name each FROM item in ``tokens[frm:hi]`` (``frm`` at FROM)
+    is referenced by — its alias, else its table name — in order; empty
+    when an item has no nameable reference."""
+    out: List[str] = []
+    k = _next_code(tokens, frm)
+    while k < hi:
+        t = tokens[k]
+        name = None
+        if t.kind == "op" and t.text == "(":
+            k = _next_code(tokens, _matching_paren(tokens, k))
+        elif t.kind in ("word", "bident", "qident") and not t.is_kw(*_FROM_ITEM_ENDS):
+            name = t.text
+            k = _next_code(tokens, k)
+            while k + 1 < hi and tokens[k].text == "." :
+                k = _next_code(tokens, k)
+                name = tokens[k].text
+                k = _next_code(tokens, k)
+        else:
+            return []
+        if k < hi and tokens[k].is_kw("AS"):
+            k = _next_code(tokens, k)
+        if (
+            k < hi
+            and tokens[k].kind in ("word", "bident", "qident")
+            and not tokens[k].is_kw(*_FROM_ITEM_ENDS)
+        ):
+            name = tokens[k].text
+            k = _next_code(tokens, k)
+        if name is None:
+            return []
+        out.append(name)
+        while k < hi and not (tokens[k].text == "," or tokens[k].is_kw("JOIN")):
+            if tokens[k].kind == "op" and tokens[k].text == "(":
+                k = _matching_paren(tokens, k)
+            k = _next_code(tokens, k)
+        k = _next_code(tokens, k)
+    return out
 
 
 def _rewrite_statement_unpivot(tokens: List[Token]) -> List[Token]:

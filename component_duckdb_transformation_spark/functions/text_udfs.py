@@ -984,18 +984,6 @@ def _build_text_udfs() -> dict:
 
         return _memo_map(one, j)
 
-    @pandas_udf("double")
-    def _mad_udf(v: pd.Series) -> float:
-        # median absolute deviation: median(|x - median(x)|). Two passes
-        # over the group's values — not expressible as a single built-in
-        # aggregate, so a grouped-agg pandas UDF (Arrow-batched; state
-        # is one group's column, bounded like any percentile)
-        v = v.dropna()
-        if v.empty:
-            return None
-        m = v.median()
-        return float((v - m).abs().median())
-
     @pandas_udf("string")
     def _icu_sort_key_udf(s: pd.Series, loc: pd.Series) -> pd.Series:
         """DuckDB ``icu_sort_key(s, collation)`` parity. ICU collation
@@ -1207,7 +1195,6 @@ def _build_text_udfs() -> dict:
         "__duck_round": _duck_round_str_udf,
         "__duck_printf": _duck_printf_udf,
         "__duck_fint": _duck_fint_udf,
-        "mad": _mad_udf,
         "length_grapheme": _length_grapheme_udf,
         "left_grapheme": _left_grapheme_udf,
         "right_grapheme": _right_grapheme_udf,

@@ -26,6 +26,7 @@ from ..functions.dialect import (
     _next_code,
     _pattern_composable,
     _split_top_level_args,
+    fmtlib_format_ok,
     replace_first_composition,
     translate,
 )
@@ -203,9 +204,8 @@ def _untranslatable_functions(sql: str) -> set[str]:
             if len(lit) != 1 or lit[0].kind != "string":
                 found.add(low)
             elif low == "format":
-                fmt = lit[0].text[1:-1]
-                if "{" in fmt.replace("{}", "") or "}" in fmt.replace("{}", ""):
-                    found.add(low)  # {:spec}/{n} forms not shimmed
+                if not fmtlib_format_ok(lit[0].text[1:-1]):
+                    found.add(low)  # {n}, fill/align and {:,} not shimmed
             elif lit[0].text[1:-1].lower() not in _LIST_AGGR_SUPPORTED:
                 found.add(low)
     return found

@@ -893,7 +893,7 @@ def test_unsupported_lint_narrowed():
     )
     # unshimmable shapes still do
     assert _untranslatable_functions("SELECT list_aggregate(l, 'median') FROM t")
-    assert _untranslatable_functions("SELECT format('{:d}', x) FROM t")
+    assert _untranslatable_functions("SELECT format('{:>8}', x) FROM t")
     assert _untranslatable_functions("SELECT format(f, x) FROM t")
     # icu_sort_key is a registered collation-library UDF now (r8)
     assert not _untranslatable_functions(

@@ -8,6 +8,10 @@ import duckdb
 import pytest
 
 from component_duckdb_transformation_spark.configuration import Block, Code
+from component_duckdb_transformation_spark.functions.dialect import (
+    expand_scopes,
+    translate,
+)
 from component_duckdb_transformation_spark.plans.executor import (
     SparkStatementExecutor,
     TableStore,
@@ -38,6 +42,8 @@ _CASES = [
     # COLUMNS() over a join and over a subquery
     "SELECT max(COLUMNS('a|b')) FROM se_t1 JOIN se_t2 USING (k)",
     "SELECT COLUMNS('a|s') FROM (SELECT * FROM se_t1) q",
+    # COLUMNS() over a join whose whole star repeats a name (k)
+    "SELECT COLUMNS('a') FROM se_t1 x JOIN se_t2 y ON x.k = y.k",
     # single-table REPLACE lists
     "SELECT * REPLACE (a * 2 AS a) FROM se_t1",
     "SELECT * REPLACE (x + 1 AS x, lower(y) AS y) FROM se_t3",
@@ -85,9 +91,27 @@ def test_scope_expansion_matches_duckdb(spark, scope_env, idx):
     assert sorted((tuple(r) for r in got_df.collect()), key=_key) == want
 
 
+@pytest.mark.parametrize(
+    "q",
+    [
+        "SELECT COLUMNS('a') FROM se_t1 x JOIN se_t2 y ON x.k = y.k",
+        # the repeated name is emitted qualified: x.k, ..., y.k
+        "SELECT * REPLACE (a + 1 AS a) FROM se_t1 x JOIN se_t2 y ON x.k = y.k",
+    ],
+)
+def test_join_with_repeated_names_matches_duckdb(spark, scope_env, q):
+    ex, con = scope_env
+    got = spark.sql(translate(expand_scopes(q, ex._resolve_query_columns)))
+    cur = con.execute(q)
+    assert got.columns == [d[0] for d in cur.description]
+    want = sorted((tuple(r) for r in cur.fetchall()), key=_key)
+    assert sorted((tuple(r) for r in got.collect()), key=_key) == want
+
+
 def test_unresolvable_scope_is_an_error(scope_env):
     ex, _ = scope_env
-    # duplicate column names (k from both sides): no unique expansion
+    # the expansion names k twice (x.k, y.k): the CTAS fails on the
+    # duplicate output name, where DuckDB renames the second to k_1
     with pytest.raises(Exception):
         _run(
             ex,

@@ -111,6 +111,20 @@ def test_unsupported_function_lint():
         for e in check_common_sql_errors("SELECT list_transform(l, x -> x) FROM t")
     )
 
+    # format(): placeholders the format shim translates pass; positional,
+    # fill/align and locale forms (and stray braces) are flagged
+    from component_duckdb_transformation_spark.validators.sql_validator import (
+        _untranslatable_functions,
+    )
+
+    for fmt in ("{}", "{:30}", "{:14}", "{:.2f}", "{:8.3}", "{:d}", "{:x}",
+                "a {{literal}} {}"):
+        q = f"SELECT format('{fmt}', a) FROM t"
+        assert not _untranslatable_functions(q), fmt
+    for fmt in ("{0}", "{:>8}", "{:,}", "{name}", "open {"):
+        q = f"SELECT format('{fmt}', a) FROM t"
+        assert _untranslatable_functions(q) == {"format"}, fmt
+
 
 def test_validator_accepts_executor_handled_statements(spark):
     from component_duckdb_transformation_spark.configuration import Block, Code

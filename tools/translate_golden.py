@@ -2,11 +2,18 @@
 
 The corpus is the Spark-side text of every SQL-text workload in
 ``workloads.WORKLOADS``, every query in ``perfbench/q_surface.json``,
-and a battery of window/ordered-aggregate texts (``battery:`` keys):
-the texts in ``tools/translate_battery.json`` (taken from the dialect
-tests) and a generated matrix of aggregate x argument x window spec x
-statement shape. Workload and q_surface texts translate with no type
-hints; each battery text carries the name of the hint set it is
+and a battery (``battery:`` keys): a generated matrix of window and
+ordered aggregates x argument x window spec x statement shape, and the
+texts frozen in ``tools/translate_battery.json``. Those are window
+texts from the dialect tests; one call per DuckDB 1.0.0 catalog
+overload built with ``tools/fn_parity_sweep.py``'s ``canned_call``,
+``EXCLUDE`` and ``ARG_OVERRIDES`` rules (scalars as ``SELECT <call> AS
+v``, aggregates over a two-row VALUES list); every literal passed to
+``translate(`` in ``tests/test_dialect*.py`` and
+``tests/test_fn_parity.py``; and hand-written call shapes (dotted
+names, comments before ``(``, calls nested in Python-UDF arguments,
+``IGNORE NULLS`` inside the parentheses, ``FROM range(..)``).
+Workload and q_surface texts translate with no type hints; each battery text carries the name of the hint set it is
 translated under (published through ``dialect.column_type_hints``).
 The per-call window ids (``#w<n>``, ``#g<n>``) are normalised and the
 text is hashed. A change to the dialect layer that is meant to keep

@@ -5945,7 +5945,7 @@ def _madw_classify(tokens: List[Token], i: int):
     low = tokens[i].text.lower()
     if low in ("mad", "make_dt_interval"):
         call = _call_site(tokens, i)
-        if call is not None and call.spec is not None:
+        if call is not None and call.plain and call.spec is not None:
             arg = _sql(tokens, call.p_open + 1, call.close)
             temporal = low == "make_dt_interval"
             if temporal:
@@ -6010,7 +6010,7 @@ def _entw_classify(tokens: List[Token], i: int):
     if tokens[i].text.lower() != "entropy":
         return None
     call = _call_site(tokens, i)
-    if call is None or call.spec is None:
+    if call is None or not call.plain or call.spec is None:
         return None
     spec = call.spec
     arg = _sql(tokens, call.p_open + 1, call.close)
@@ -6350,7 +6350,13 @@ class _CallSite(NamedTuple):
     name]`` call site (``_call_site``). ``within`` is ``(key text,
     DISTINCT)`` for an ascending WITHIN GROUP key, else None; ``spec``
     is None without OVER or for an unresolved window name; ``end`` is
-    the index past the call."""
+    the index past the call. ``prev`` is the code token before the
+    name; ``plain`` is False for a dotted name and for a WITHIN GROUP
+    on a name outside ``_WITHIN_GROUP_FNS`` (the call then ends at its
+    ``)``); ``in_py_udf`` is True inside a Python UDF's arguments (see
+    ``_PY_UDF_FNS``). A call shim (``_lower_shim``) sees its arguments
+    already lowered: ``inner``, their top-level ``spans`` in it and
+    their texts ``args``."""
 
     tokens: List[Token]
     name: str
@@ -6361,30 +6367,47 @@ class _CallSite(NamedTuple):
     over: bool
     spec: Optional[_WinSpec]
     end: int
+    prev: Optional[Token] = None
+    plain: bool = True
+    in_py_udf: bool = False
+    inner: Optional[List[Token]] = None
+    spans: Optional[list] = None
+    args: Optional[tuple] = None
 
     def arg_tokens(self) -> List[Token]:
         return self.tokens[self.p_open + 1 : self.close]
 
+    def arg_toks(self, k: int) -> List[Token]:
+        """The lowered tokens of argument ``k``."""
+        return self.inner[self.spans[k][0] : self.spans[k][1]]
 
-def _call_site(tokens: List[Token], i: int, windows=None):
-    """The call site whose (undotted) function name is ``tokens[i]``,
-    or None. ``windows`` (a callable returning ``_named_windows`` of the
-    whole statement) resolves ``OVER name``; without it a named window
-    stays unresolved."""
+    def code(self, k: int) -> List[Token]:
+        """The lowered code tokens (no whitespace or comments) of
+        argument ``k``."""
+        return [t for t in self.arg_toks(k) if t.kind not in ("ws", "comment")]
+
+
+def _call_site(tokens: List[Token], i: int, windows=None, in_py_udf=False):
+    """The call site whose function name is ``tokens[i]``, or None when
+    no ``(`` follows it. ``windows`` (a callable returning
+    ``_named_windows`` of the whole statement) resolves ``OVER name``;
+    without it a named window stays unresolved."""
     n = len(tokens)
     p = i - 1
     while p >= 0 and tokens[p].kind in ("ws", "comment"):
         p -= 1
-    if p >= 0 and tokens[p].kind == "op" and tokens[p].text == ".":
-        return None
+    prev = tokens[p] if p >= 0 else None
+    plain = not (prev is not None and prev.kind == "op" and prev.text == ".")
     p_open = _next_code(tokens, i)
     if not (p_open < n and tokens[p_open].kind == "op" and tokens[p_open].text == "("):
         return None
     name = tokens[i].text.lower()
     close = _matching_paren(tokens, p_open)
-    end = close + 1
+    site = _CallSite(
+        tokens, name, i, p_open, close, None, False, None, close + 1, prev,
+        plain, in_py_udf,
+    )
     after = _next_code(tokens, close)
-    within = None
     if after < n and tokens[after].is_kw("WITHIN"):
         g_kw = _next_code(tokens, after)
         g_open = _next_code(tokens, g_kw)
@@ -6394,7 +6417,7 @@ def _call_site(tokens: List[Token], i: int, windows=None):
             and tokens[g_kw].is_kw("GROUP")
             and tokens[g_open].text == "("
         ):
-            return None
+            return site._replace(plain=False)
         g_close = _matching_paren(tokens, g_open)
         code = [
             t for t in tokens[g_open + 1 : g_close]
@@ -6409,13 +6432,15 @@ def _call_site(tokens: List[Token], i: int, windows=None):
                 desc = desc or key[-1].is_kw("DESC")
                 key.pop()
             if key and not desc:
-                within = ("".join(t.text for t in key).strip(), distinct)
-        end = g_close + 1
+                site = site._replace(
+                    within=("".join(t.text for t in key).strip(), distinct)
+                )
+        site = site._replace(end=g_close + 1)
         after = _next_code(tokens, g_close)
     if not (after < n and tokens[after].is_kw("OVER")):
-        return _CallSite(tokens, name, i, p_open, close, within, False, None, end)
+        return site
     spec, end = _over_spec(tokens, after, windows)
-    return _CallSite(tokens, name, i, p_open, close, within, True, spec, end)
+    return site._replace(over=True, spec=spec, end=end)
 
 
 def _over_spec(tokens: List[Token], k: int, windows=None):
@@ -6449,32 +6474,60 @@ def _lazy_windows(tokens: List[Token]):
     return windows
 
 
-def _lower_calls(tokens: List[Token], names, lower) -> List[Token]:
-    """Replace every call site of ``names`` by ``lower(call, walk)``
-    (SQL text, or None to keep the call and scan on into its
-    arguments). ``walk`` applies the same lowering to a token run, for
-    a lowering that rewrites its own arguments first. Named windows
-    resolve against the statement's WINDOW definitions."""
+def _lower_calls(tokens: List[Token], names, lower, words=None) -> List[Token]:
+    """Replace every call site of ``names`` (of every function when
+    None) by ``lower(call, walk)``: SQL text or a token list, optionally
+    as ``(replacement, end)`` to end at another index than
+    ``call.end``; None keeps the call and lowers inside its arguments.
+    ``walk(toks, in_py_udf)`` applies the same lowering to a token run,
+    for a lowering that rewrites its own arguments first. A Python
+    UDF's arguments are walked with ``in_py_udf`` set, which each call
+    site inside them carries. Named windows resolve against the
+    statement's WINDOW definitions. With ``words``, a statement naming
+    none of them is returned as is."""
+    if words is not None and not any(
+        t.kind == "word" and t.text.lower() in words for t in tokens
+    ):
+        return tokens
     windows = _lazy_windows(tokens)
 
-    def walk(toks: List[Token]) -> List[Token]:
+    def walk(toks: List[Token], in_py_udf: bool = False) -> List[Token]:
         out: List[Token] = []
         i = 0
         n = len(toks)
         while i < n:
             t = toks[i]
-            if t.kind == "word" and t.text.lower() in names:
-                call = _call_site(toks, i, windows)
-                repl = lower(call, walk) if call is not None else None
-                if repl is not None:
-                    out.extend(_toks(repl))
-                    i = call.end
+            if t.kind == "word":
+                low = t.text.lower()
+                hit = names is None or low in names
+                call = (
+                    _call_site(toks, i, windows, in_py_udf)
+                    if hit or low in _PY_UDF_FNS
+                    else None
+                )
+                if call is not None:
+                    repl = lower(call, walk) if hit else None
+                    if repl is not None:
+                        repl, end = (
+                            repl if isinstance(repl, tuple) else (repl, call.end)
+                        )
+                        out.extend(_toks(repl) if isinstance(repl, str) else repl)
+                    else:
+                        out.extend(toks[i : call.p_open + 1])
+                        out.extend(walk(
+                            call.arg_tokens(), in_py_udf or low in _PY_UDF_FNS
+                        ))
+                        out.append(toks[call.close])
+                        end = call.close + 1
+                    i = end
                     continue
             out.append(t)
             i += 1
         return out
 
     return walk(tokens)
+
+
 def _rewrite_mad_window_inplace(tokens: List[Token]) -> List[Token]:
     """Lower every ``mad(x) OVER (spec)`` the full-partition restructure
     left behind — bounded ROWS/RANGE and running frames, plus
@@ -6496,7 +6549,7 @@ def _rewrite_mad_window_inplace(tokens: List[Token]) -> List[Token]:
     shared_prefix = _shared_window_prefix(tokens)
 
     def lower(call: _CallSite, walk):
-        if call.spec is None or call.spec.exclude:
+        if not call.plain or call.spec is None or call.spec.exclude:
             return None
         arg = "".join(t.text for t in walk(call.arg_tokens()))
         temporal = call.name == "make_dt_interval"
@@ -6522,7 +6575,7 @@ def _rewrite_mad_fallback_template(tokens: List[Token]) -> List[Token]:
     bailed on) reach it; window calls belong to the passes before."""
 
     def lower(call: _CallSite, walk):
-        if call.over:
+        if not call.plain or call.over:
             return None
         return _mad_template("".join(t.text for t in walk(call.arg_tokens())))
 
@@ -6548,7 +6601,7 @@ def _rewrite_ent_window_streaming(tokens: List[Token]) -> List[Token]:
 
     def lower(call: _CallSite, walk):
         spec = call.spec
-        if spec is None or spec.full or spec.exclude:
+        if not call.plain or spec is None or spec.full or spec.exclude:
             return None
         arg = "".join(t.text for t in walk(call.arg_tokens()))
         core, distinct = _split_distinct_prefix(arg)
@@ -6604,7 +6657,7 @@ def _rewrite_agg_window_frames(tokens: List[Token]) -> List[Token]:
 
     def lower(call: _CallSite, walk):
         spec = call.spec
-        if spec is None or spec.exclude:
+        if not call.plain or spec is None or spec.exclude:
             return None
         low = call.name
         args = _split_top_level_args(call.tokens, call.p_open, call.close)

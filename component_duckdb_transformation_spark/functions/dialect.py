@@ -11104,2837 +11104,2708 @@ def _signed_plain_number_arg(tokens: List[Token], span):
     return None
 
 
-def _rewrite_call_shims(
-    tokens: List[Token], in_py_udf: bool = False
-) -> List[Token]:
-    """Argument-aware function shims (beyond plain renames):
+# call shims in lowering order: (lowercase names, handler); a handler
+# registered for no names runs for every function
+_SHIMS: list = []
 
-    - ``string_agg(x, sep ORDER BY y)`` -> ``listagg(x, sep) WITHIN GROUP
-      (ORDER BY y)`` (Spark 4 supports listagg WITHIN GROUP)
-    - ``array_agg(x ORDER BY x)`` / ``list(x ORDER BY x)`` (same expr)
-      -> ``sort_array(collect_list(x))`` (DESC -> descending sort)
-    - 2-arg ``regexp_extract(s, p)`` -> group 0 (DuckDB returns the full
-      match; Spark's default group 1 silently returns '')
-    - ``date_add(d, INTERVAL ...)`` -> ``(d + INTERVAL ...)``
-    - ``dayname``/``monthname`` -> date_format EEEE/MMMM
-    - ``isodow(x)`` -> ``(weekday(x) + 1)``
-    - ``list_unique(x)`` -> ``size(array_distinct(x))``
-    - ``to_base(n, b)`` -> ``conv(n, 10, b)``
-    - ``regexp_full_match(s, p)`` -> ``(regexp_extract(s, p, 0) = s)``
-    """
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    __in_values = _values_spans(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "word":
-            low = tok.text.lower()
-            p_open = _next_code(tokens, i)
-            if p_open < n and tokens[p_open].kind == "op" and tokens[p_open].text == "(":
-                close = _matching_paren(tokens, p_open)
-                # inside Python-UDF argument lists the lambda-bound
-                # emissions are forbidden (see _PY_UDF_FNS): the flag
-                # propagates through this recursion
-                inner = _rewrite_call_shims(
-                    tokens[p_open + 1 : close],
-                    in_py_udf or low in _PY_UDF_FNS,
+
+def _shim(*names):
+    """Register the decorated call shim for ``names`` after every shim
+    registered before it. A shim takes one ``_CallSite`` whose
+    arguments are already lowered and returns SQL text (or tokens,
+    optionally as ``(replacement, end)``), or None to fall through."""
+
+    def register(fn):
+        _SHIMS.append((names, fn))
+        return fn
+
+    return register
+
+
+def _order_at(c: _CallSite):
+    """Index of the top-level ORDER keyword in ``c.inner``, or None."""
+    pos = _top_level_positions(c.inner, 0, len(c.inner), lambda t: t.is_kw("ORDER"))
+    return pos[0] if pos else None
+
+
+@_shim("first", "last")
+def _shim_first(c):
+    if _order_at(c) is not None:
+        # ordered first/last ARE min_by/max_by
+        ob = _order_at(c)
+        head = _sql(c.inner, 0, ob)
+        order_expr = _sql(c.inner, ob, len(c.inner))[len("ORDER"):].strip()
+        if order_expr.upper().startswith("BY"):
+            order_expr = order_expr[2:].strip()
+            desc = order_expr.upper().endswith(" DESC")
+            key = (
+                order_expr[:-5].strip()
+                if desc
+                else (
+                    order_expr[:-4].strip()
+                    if order_expr.upper().endswith(" ASC")
+                    else order_expr
                 )
-                ilo, ihi = 0, len(inner)
-
-                def order_split():
-                    pos = _top_level_positions(
-                        inner, ilo, ihi, lambda t: t.is_kw("ORDER")
-                    )
-                    return pos[0] if pos else None
-
-                if low in ("first", "last") and order_split() is not None:
-                    # ordered first/last ARE min_by/max_by
-                    ob = order_split()
-                    head = _sql(inner, 0, ob)
-                    order_expr = _sql(inner, ob, ihi)[len("ORDER"):].strip()
-                    if order_expr.upper().startswith("BY"):
-                        order_expr = order_expr[2:].strip()
-                        desc = order_expr.upper().endswith(" DESC")
-                        key = (
-                            order_expr[:-5].strip()
-                            if desc
-                            else (
-                                order_expr[:-4].strip()
-                                if order_expr.upper().endswith(" ASC")
-                                else order_expr
-                            )
-                        )
-                        if "," not in key:
-                            lo_first = low == "first"
-                            fn = (
-                                "min_by"
-                                if lo_first != desc
-                                else "max_by"
-                            )
-                            out.extend(_toks(f"{fn}({head}, {key})"))
-                            i = close + 1
-                            continue
-                if low in (
-                    "sum", "avg", "mean", "min", "max", "count",
-                    "bool_and", "bool_or", "bit_and", "bit_or", "bit_xor",
-                    "stddev", "stddev_samp", "stddev_pop", "variance",
-                    "var_samp", "var_pop", "median", "product", "entropy",
-                ):
-                    # order-insensitive aggregates: DuckDB tolerates an
-                    # in-aggregate ORDER BY; drop it
-                    ob = order_split()
-                    if ob is not None:
-                        head = _sql(inner, 0, ob)
-                        out.append(Token("word", low))
-                        out.append(Token("op", "("))
-                        out.extend(_toks(head))
-                        out.append(Token("op", ")"))
-                        i = close + 1
-                        continue
-                if low in (
-                    "string_agg", "group_concat", "array_agg", "list",
-                    "collect_list",
-                ):
-                    ob = order_split()
-                    if ob is not None:
-                        head = _sql(inner, 0, ob)
-                        tail = _sql(inner, ob, ihi)  # "ORDER BY ..."
-                        if low in ("string_agg", "group_concat"):
-                            # DuckDB's default separator is ',' (Spark
-                            # listagg defaults to '')
-                            if len(_split_top_commas(inner, 0, ob)) == 1:
-                                head = f"{head}, ','"
-                            out.extend(
-                                _toks(f"listagg({head}) WITHIN GROUP ({tail})")
-                            )
-                            i = close + 1
-                            continue
-                        # array_agg/list: only the sort-by-self form
-                        # maps (optionally DISTINCT). NULL elements are
-                        # KEPT like DuckDB (collect_list drops them, so
-                        # rows are collected as structs and unwrapped —
-                        # the per-element lambda cost is group-sized);
-                        # NULLs sort LAST in DuckDB for ASC and DESC
-                        order_expr = tail[len("ORDER") :].strip()
-                        assert order_expr.upper().startswith("BY")
-                        order_expr = order_expr[2:].strip()
-                        desc = order_expr.upper().endswith(" DESC")
-                        core = (
-                            order_expr[:-5].strip()
-                            if desc
-                            else (
-                                order_expr[:-4].strip()
-                                if order_expr.upper().endswith(" ASC")
-                                else order_expr
-                            )
-                        )
-                        hdist = re.match(r"(?is)^\s*DISTINCT\b", head)
-                        hcore = (
-                            head[hdist.end():].strip() if hdist else head
-                        )
-                        if core.replace(" ", "") == hcore.replace(" ", ""):
-                            arr = (
-                                f"transform(collect_list("
-                                f"struct(({hcore}) AS __v)), __s -> __s.__v)"
-                            )
-                            if hdist:
-                                arr = f"array_distinct({arr})"
-                            if desc:
-                                expr = (
-                                    f"array_sort({arr}, (__l, __r) -> "
-                                    "CASE WHEN __l IS NULL AND __r IS "
-                                    "NULL THEN 0 WHEN __l IS NULL THEN 1 "
-                                    "WHEN __r IS NULL THEN -1 "
-                                    "WHEN __l < __r THEN 1 "
-                                    "WHEN __l > __r THEN -1 ELSE 0 END)"
-                                )
-                            else:
-                                expr = f"array_sort({arr})"
-                            out.extend(_toks(expr))
-                            i = close + 1
-                            continue
-                args = _split_top_commas(inner, ilo, ihi)
-                if low == "regexp_extract" and len(args) == 2:
-                    a, b = (_sql(inner, s, e) for s, e in args)
-                    out.extend(_toks(f"regexp_extract({a}, {b}, 0)"))
-                    i = close + 1
-                    continue
-                if (
-                    low in ("list_sort", "array_sort", "list_reverse_sort")
-                    and (
-                        (low == "list_reverse_sort" and len(args) in (1, 2))
-                        or (low != "list_reverse_sort" and len(args) in (2, 3))
-                    )
-                ):
-                    # DuckDB order/null-order literals (measured: the
-                    # DEFAULT null order is NULLS LAST for ASC and
-                    # DESC alike). Literal directions only — a dynamic
-                    # direction column fails loudly at analysis.
-                    l_ = _sql(inner, *args[0])
-                    lits = []
-                    litok = True
-                    for sp in args[1:]:
-                        code = [
-                            t
-                            for t in inner[sp[0]: sp[1]]
-                            if t.kind not in ("ws", "comment")
-                        ]
-                        if len(code) == 1 and code[0].kind == "string":
-                            lits.append(
-                                code[0].text[1:-1].strip().upper()
-                            )
-                        else:
-                            litok = False
-                    if litok:
-                        if low == "list_reverse_sort":
-                            order = "DESC"
-                            nulls = lits[0] if lits else "NULLS LAST"
-                        else:
-                            order = lits[0] if lits else "ASC"
-                            nulls = (
-                                lits[1] if len(lits) > 1 else "NULLS LAST"
-                            )
-                        # Spark: array_sort = ASC NULLS LAST;
-                        # sort_array(asc) = ASC NULLS FIRST;
-                        # sort_array(desc) = DESC NULLS LAST (measured)
-                        nf = nulls == "NULLS FIRST"
-                        if order == "DESC":
-                            expr = (
-                                f"reverse(array_sort(({l_})))"
-                                if nf
-                                else f"sort_array(({l_}), false)"
-                            )
-                        else:
-                            expr = (
-                                f"sort_array(({l_}), true)"
-                                if nf
-                                else f"array_sort(({l_}))"
-                            )
-                        out.extend(_toks(expr))
-                        i = close + 1
-                        continue
-                if low in ("list_resize", "array_resize") and len(args) in (2, 3):
-                    # pad with NULL (2-arg) or the given value (3-arg)
-                    # BEYOND the original length; existing NULL elements
-                    # survive (DuckDB: list_resize([1,NULL,3],5,9) =
-                    # [1,NULL,3,9,9])
-                    x_, n_ = (_sql(inner, s, e) for s, e in args[:2])
-                    pad_ = _sql(inner, *args[2]) if len(args) == 3 else "NULL"
-                    out.extend(
-                        _toks(
-                            f"(CASE WHEN ({x_}) IS NULL THEN NULL "
-                            # DuckDB: NULL size behaves as 0 (verified)
-                            f"WHEN ({n_}) IS NULL OR ({n_}) <= 0 "
-                            f"THEN slice(({x_}), 1, 0) "
-                            f"ELSE transform(sequence(1, CAST(({n_}) AS INT)), "
-                            f"__i -> IF(__i <= size(({x_})), "
-                            f"try_element_at(({x_}), __i), ({pad_}))) END)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "parse_path" and len(args) in (1, 2):
-                    # components list; a leading separator is its own
-                    # root element (DuckDB: parse_path('/a/b') =
-                    # ['/', 'a', 'b']). 'system' = '/' on this engine
-                    # (POSIX containers)
-                    p_ = _sql(inner, *args[0])
-                    if len(args) == 2:
-                        sep_ = _sql(inner, *args[1])
-                        cls = (
-                            f"(CASE WHEN lower(({sep_})) IN "
-                            f"('forward_slash', 'system') THEN '[/]' "
-                            f"WHEN lower(({sep_})) = 'backslash' "
-                            r"THEN '[\\\\]' "
-                            r"ELSE '[/\\\\]' END)"
-                        )
-                    else:
-                        cls = r"'[/\\\\]'"
-                    out.extend(
-                        _toks(
-                            f"(CASE WHEN ({p_}) IS NULL THEN NULL ELSE "
-                            f"concat(IF(substr(({p_}), 1, 1) RLIKE "
-                            f"concat('^', {cls}, '$'), "
-                            f"array(substr(({p_}), 1, 1)), "
-                            f"CAST(array() AS ARRAY<STRING>)), "
-                            f"filter(split(({p_}), {cls}), "
-                            f"__x -> __x <> '')) END)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if (
-                    low in ("array_extract", "list_element", "list_extract")
-                    and len(args) == 2
-                ):
-                    # DuckDB overloads these over VARCHAR: 1-based char
-                    # pick, negative from the end, 0/out-of-bounds ''.
-                    # Spark's element_at rejects strings at ANALYSIS, so
-                    # the dispatch is static: string-literal subjects
-                    # take the substr path; everything else stays on the
-                    # list path (try_element_at via _FN_RENAMES)
-                    c0 = [
-                        t
-                        for t in inner[args[0][0]: args[0][1]]
-                        if t.kind not in ("ws", "comment")
-                    ]
-                    if len(c0) == 1 and c0[0].kind == "string":
-                        s_, ix = (_sql(inner, s, e) for s, e in args)
-                        out.extend(
-                            _toks(
-                                f"(CASE WHEN CAST(({ix}) AS BIGINT) = 0 "
-                                f"THEN '' ELSE substr(({s_}), "
-                                f"CAST(({ix}) AS INT), 1) END)"
-                            )
-                        )
-                        i = close + 1
-                        continue
-                    # list path: Spark's element_at requires an INT
-                    # index for arrays (no BIGINT coercion); these are
-                    # DuckDB's LIST accessors, so the cast is always
-                    # safe (maps go through map_extract / brackets)
-                    s_, ix = (_sql(inner, s, e) for s, e in args)
-                    out.extend(
-                        _toks(
-                            f"try_element_at(({s_}), CAST(({ix}) AS INT))"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "octet_length" and len(args) == 1:
-                    # BIT values are '0'/'1' strings in this engine;
-                    # octet_length over a syntactically-known bitstring
-                    # is its byte count, ceil(bits/8). Detection reads
-                    # the PRE-rewrite tokens (the bitstring call itself
-                    # is already expanded inside ``inner``)
-                    c0 = [
-                        t
-                        for t in tokens[p_open + 1: close]
-                        if t.kind not in ("ws", "comment")
-                    ]
-                    if (
-                        c0
-                        and c0[0].kind == "word"
-                        and c0[0].text.lower() in ("bitstring", "bitstring_agg")
-                    ):
-                        a = _sql(inner, *args[0])
-                        out.extend(
-                            _toks(
-                                f"CAST(ceil(length({a}) / 8.0) AS BIGINT)"
-                            )
-                        )
-                        i = close + 1
-                        continue
-                if low == "make_time" and len(args) == 3:
-                    # TIME is represented as an epoch-day timestamp
-                    # (see _rewrite_time_literals)
-                    h_, m_, s_ = (_sql(inner, s, e) for s, e in args)
-                    out.extend(
-                        _toks(
-                            f"make_timestamp(1970, 1, 1, "
-                            f"CAST(({h_}) AS INT), CAST(({m_}) AS INT), "
-                            f"({s_}))"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "bitstring_agg" and len(args) in (1, 3):
-                    # bit per position over [min, max] (leftmost = min);
-                    # the 1-arg form derives the bounds from the same
-                    # aggregation (DuckDB needs column stats there).
-                    # Divergence: values outside explicit bounds error
-                    # in DuckDB, here they are ignored
-                    x_ = _sql(inner, *args[0])
-                    if len(args) == 3:
-                        mn = f"CAST(({_sql(inner, *args[1])}) AS BIGINT)"
-                        mx = f"CAST(({_sql(inner, *args[2])}) AS BIGINT)"
-                    else:
-                        mn = f"min(CAST(({x_}) AS BIGINT))"
-                        mx = f"max(CAST(({x_}) AS BIGINT))"
-                    out.extend(
-                        _toks(
-                            f"array_join(transform(sequence({mn}, {mx}), "
-                            f"__p -> CASE WHEN array_contains("
-                            f"collect_set(CAST(({x_}) AS BIGINT)), __p) "
-                            f"THEN '1' ELSE '0' END), '')"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "struct_insert" and len(args) >= 2:
-                    # name := value field append -> named_struct splice.
-                    # Needs a named_struct-shaped base (brace literals /
-                    # struct_pack are already rewritten by this point);
-                    # a dynamic struct column base needs the schema and
-                    # falls through to a loud Spark error (COVERAGE.md)
-                    def _named_pairs(arg_spans):
-                        pairs = []
-                        for s_, e_ in arg_spans:
-                            code = [
-                                (j, t)
-                                for j, t in enumerate(inner[s_:e_])
-                                if t.kind not in ("ws", "comment")
-                            ]
-                            if (
-                                len(code) >= 3
-                                and code[0][1].kind
-                                in ("word", "bident", "qident")
-                                and code[1][1].kind == "op"
-                                and code[1][1].text == ":"
-                                and code[2][1].kind == "op"
-                                and code[2][1].text == "="
-                            ):
-                                name = unquote_name(code[0][1])
-                                val = _sql(
-                                    inner, s_ + code[2][0] + 1, e_
-                                )
-                                pairs.append((name, val))
-                            else:
-                                return None
-                        return pairs
-                    base_sql = _sql(inner, *args[0]).strip()
-                    pairs = _named_pairs(args[1:])
-                    if (
-                        pairs
-                        and base_sql.startswith("named_struct(")
-                        and base_sql.endswith(")")
-                    ):
-                        base_inner = base_sql[len("named_struct("):-1]
-                        added = ", ".join(
-                            f"'{n}', ({v})" for n, v in pairs
-                        )
-                        sep = ", " if base_inner.strip() else ""
-                        out.extend(
-                            _toks(
-                                f"named_struct({base_inner}{sep}"
-                                f"{added})"
-                            )
-                        )
-                        i = close + 1
-                        continue
-                    if pairs:
-                        # a STRUCT-hinted plain column base: the
-                        # published schema names its fields, so the
-                        # splice works on dynamic columns too (an
-                        # existing-name collision falls through to the
-                        # loud unresolved-function error, like DuckDB's
-                        # duplicate-entry error)
-                        s_hint = _hinted_primary_type(
-                            inner[args[0][0]: args[0][1]]
-                        )
-                        flds = (
-                            _struct_hint_fields(s_hint)
-                            if s_hint is not None
-                            else None
-                        )
-                        new_lower = {n.lower() for n, _ in pairs}
-                        if flds is not None and not (
-                            new_lower & {f.lower() for f in flds}
-                        ):
-                            spread = ", ".join(
-                                f"'{f}', ({base_sql}).`{f}`"
-                                for f in flds
-                            )
-                            added = ", ".join(
-                                f"'{n}', ({v})" for n, v in pairs
-                            )
-                            out.extend(
-                                _toks(
-                                    f"named_struct({spread}, {added})"
-                                )
-                            )
-                            i = close + 1
-                            continue
-                if low in ("count", "sum", "avg", "median") or low == "bit_count":
-                    # window-context rewrites that must consume the
-                    # trailing OVER clause
-                    after = _next_code(tokens, close)
-                    has_over = (
-                        after < n and tokens[after].is_kw("OVER")
-                    )
-                    over_close = None
-                    if has_over:
-                        op_ = _next_code(tokens, after)
-                        if (
-                            op_ < n
-                            and tokens[op_].kind == "op"
-                            and tokens[op_].text == "("
-                        ):
-                            over_close = _matching_paren(tokens, op_)
-                    if has_over and over_close is not None:
-                        over_sql = "".join(
-                            t.text
-                            for t in tokens[after: over_close + 1]
-                        )
-                        icode = [
-                            t
-                            for t in inner
-                            if t.kind not in ("ws", "comment")
-                        ]
-                        if (
-                            low == "count"
-                            and icode
-                            and icode[0].is_kw("DISTINCT")
-                        ):
-                            # Spark has no DISTINCT window aggregates;
-                            # a windowed collect_set IS the distinct
-                            # multiset (NULLs excluded, like COUNT)
-                            e = _sql(inner, 0, ihi).strip()
-                            if e.upper().startswith("DISTINCT"):
-                                e = e[len("DISTINCT"):].strip()
-                            out.extend(
-                                _toks(
-                                    f"size(collect_set({e}) {over_sql})"
-                                )
-                            )
-                            i = over_close + 1
-                            continue
-                        if low == "median" and re.search(
-                            r"(?i)\b(ORDER|ROWS|RANGE)\b", over_sql
-                        ):
-                            # Spark's percentile rejects ordered/framed
-                            # windows; compose the exact median from a
-                            # windowed collect_list (identical window
-                            # expressions share one Window operator)
-                            e = _sql(inner, 0, ihi)
-                            ch_mw = _parse_literal_decimal_chain(e)
-                            if (
-                                ch_mw is not None
-                                and not ch_mw[3]
-                                and ch_mw[1] <= 38
-                            ):
-                                # DECIMAL median is DuckDB's DISCRETE
-                                # lower-middle (type-preserving), not
-                                # the interpolating fold — reroute to
-                                # the quantile_disc spelling; the late
-                                # frame pass streams or folds it with
-                                # the DECIMAL(w,s) result (r13)
-                                out.extend(
-                                    _toks(
-                                        "percentile_disc(0.5)"
-                                        " WITHIN GROUP (ORDER BY"
-                                        f" {e}) {over_sql}"
-                                    )
-                                )
-                                i = over_close + 1
-                                continue
-                            lst = (
-                                f"sort_array(filter(collect_list({e}) "
-                                f"{over_sql}, __v -> __v IS NOT NULL))"
-                            )
-                            out.extend(
-                                _toks(
-                                    f"(CASE WHEN size({lst}) = 0 THEN "
-                                    f"CAST(NULL AS DOUBLE) ELSE "
-                                    f"(CAST(get({lst}, CAST((size({lst}) - 1) / 2 AS INT)) AS DOUBLE) + "
-                                    f"CAST(get({lst}, CAST(size({lst}) / 2 AS INT)) AS DOUBLE)) / 2 END)"
-                                )
-                            )
-                            i = over_close + 1
-                            continue
-                if low == "array_length" and len(args) == 2:
-                    # 2-arg form takes a dimension; lists have exactly
-                    # one (DuckDB errors on any other value)
-                    a, d_ = (_sql(inner, s, e) for s, e in args)
-                    out.extend(
-                        _toks(
-                            f"(CASE WHEN ({d_}) = 1 THEN size(({a})) "
-                            f"ELSE CAST(raise_error('array_length: "
-                            f"list has exactly one dimension') AS INT) "
-                            f"END)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low in ("list_where", "array_where") and len(args) == 2:
-                    # mask selection keeping NULL ELEMENTS where the
-                    # mask is true (list_where([1,NULL,3],[t,t,f]) =
-                    # [1,NULL]) — a struct zip so NULL values survive
-                    # the filter; zip_with pads a shorter mask with
-                    # NULL = drop (DuckDB errors on length mismatch)
-                    l_, m_ = (_sql(inner, s, e) for s, e in args)
-                    out.extend(
-                        _toks(
-                            f"transform(filter(zip_with(({l_}), ({m_}), "
-                            f"(__x, __m) -> struct(__x AS v, __m AS keep)), "
-                            f"__s -> __s.keep), __s -> __s.v)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "mad" and len(args) == 1:
-                    # median absolute deviation: numerics cast to
-                    # DOUBLE; temporals route through epoch micros and
-                    # come back as a day-time interval (DuckDB returns
-                    # INTERVAL there). The call name survives for the
-                    # window and grouped lowerings that follow; any
-                    # other call is lowered by the trailing
-                    # _rewrite_mad_fallback_template pass.
-                    a = _sql(inner, *args[0])
-                    # DISTINCT qualifier hoists OUTSIDE the cast so the
-                    # restructure/template can dedupe before the medians
-                    a, mad_distinct = _split_distinct_prefix(a)
-                    dq = "DISTINCT " if mad_distinct else ""
-                    if _static_temporal_sql(a):
-                        out.extend(
-                            _toks(
-                                f"make_dt_interval(0, 0, 0, "
-                                f"mad({dq}CAST(unix_micros(CAST(({a}) AS "
-                                f"TIMESTAMP_LTZ)) AS DOUBLE)) / 1000000.0D)"
-                            )
-                        )
-                    else:
-                        if _arg_domain(a).kind == "dec":
-                            # statically-DECIMAL chain: keep the raw
-                            # arg so the restructure/template/streaming
-                            # passes can detect the truncating
-                            # unscaled-integer domain and the
-                            # DECIMAL(w,s) result type (r13;
-                            # _mad_mode_and_wrap) — they add their own
-                            # double casts over the unscaled values
-                            out.extend(_toks(f"mad({dq}({a}))"))
-                        else:
-                            out.extend(
-                                _toks(f"mad({dq}CAST(({a}) AS DOUBLE))")
-                            )
-                    i = close + 1
-                    continue
-                if low == "substring_grapheme" and len(args) == 2:
-                    # default length = to end of string (UDF is 3-arg)
-                    a, b = (_sql(inner, s, e) for s, e in args)
-                    out.extend(
-                        _toks(
-                            f"substring_grapheme({a}, {b}, 2147483647)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if (
-                    low in ("decade", "century", "millennium")
-                    and len(args) == 1
-                ):
-                    # interval overload: years-derived bucket of a
-                    # literal INTERVAL n UNIT (day-time units hold no
-                    # years: decade(INTERVAL 3 DAY) = 0)
-                    c0 = [
-                        t
-                        for t in inner[args[0][0]: args[0][1]]
-                        if t.kind not in ("ws", "comment")
-                    ]
-                    if (
-                        len(c0) == 3
-                        and c0[0].is_kw("INTERVAL")
-                        and c0[1].kind in ("number", "word")
-                        and c0[1].text.isdigit()
-                        and c0[2].kind == "word"
-                    ):
-                        months_per = {
-                            "year": 12, "years": 12,
-                            "month": 1, "months": 1,
-                            "quarter": 3, "quarters": 3,
-                            "decade": 120, "decades": 120,
-                            "century": 1200, "centuries": 1200,
-                            "millennium": 12000, "millennia": 12000,
-                        }.get(c0[2].text.lower(), 0)
-                        years = (int(c0[1].text) * months_per) // 12
-                        div = {
-                            "decade": 10, "century": 100,
-                            "millennium": 1000,
-                        }[low]
-                        out.extend(
-                            _toks(f"CAST({years // div} AS BIGINT)")
-                        )
-                        i = close + 1
-                        continue
-                if low == "timezone" and len(args) == 2:
-                    # timezone(tz, ts): interpret the (naive) timestamp
-                    # as tz-local and give the UTC instant — DuckDB's
-                    # TIMESTAMPTZ rendered in this engine's UTC session
-                    tz, ts = (_sql(inner, s, e) for s, e in args)
-                    out.extend(_toks(f"to_utc_timestamp({ts}, {tz})"))
-                    i = close + 1
-                    continue
-                if low == "timezone" and len(args) == 1:
-                    # 1-arg form: the session's UTC offset in seconds
-                    # (this engine's session timezone is UTC by design)
-                    out.extend(_toks("CAST(0 AS BIGINT)"))
-                    i = close + 1
-                    continue
-                if low == "json_type" and len(args) == 1:
-                    # leaf/container type names, matching DuckDB's set
-                    # (verified: OBJECT/ARRAY/VARCHAR/BOOLEAN/NULL/
-                    # BIGINT for -n, UBIGINT for +n, DOUBLE otherwise)
-                    a = _sql(inner, *args[0])
-                    t = f"trim(({a}))"
-                    num = r"'^-?[0-9]+(\\.[0-9]+)?([eE][+-]?[0-9]+)?$'"
-                    out.extend(
-                        _toks(
-                            f"(CASE WHEN ({a}) IS NULL THEN "
-                            f"CAST(NULL AS STRING) "
-                            f"WHEN {t} LIKE '{{%' THEN 'OBJECT' "
-                            f"WHEN {t} LIKE '[%' THEN 'ARRAY' "
-                            f"WHEN {t} LIKE '\"%' THEN 'VARCHAR' "
-                            f"WHEN {t} IN ('true', 'false') THEN 'BOOLEAN' "
-                            f"WHEN {t} = 'null' THEN 'NULL' "
-                            f"WHEN {t} RLIKE '^-[0-9]+$' THEN 'BIGINT' "
-                            f"WHEN {t} RLIKE '^[0-9]+$' THEN 'UBIGINT' "
-                            f"WHEN {t} RLIKE {num} THEN 'DOUBLE' "
-                            f"ELSE CAST(raise_error(concat("
-                            f"'json_type: malformed JSON: ', {t})) "
-                            f"AS STRING) END)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "bar" and len(args) in (3, 4):
-                    # DuckDB bar(): full blocks + floor-to-eighth partial,
-                    # then right-pad with spaces to `width` BYTES (each
-                    # block char is 3 bytes of UTF-8 — reproducing
-                    # DuckDB's byte-based padding exactly)
-                    x, lo_a, hi_a = (_sql(inner, s, e) for s, e in args[:3])
-                    width = _sql(inner, *args[3]) if len(args) == 4 else "80"
-                    # zero-width range: DuckDB renders full for x > max,
-                    # empty otherwise (verified) — the nullif'd division
-                    # would raise DIVIDE_BY_ZERO under ANSI
-                    frac = (
-                        f"coalesce((CAST(({x}) AS DOUBLE) - "
-                        f"CAST(({lo_a}) AS DOUBLE)) / "
-                        f"nullif(CAST(({hi_a}) AS DOUBLE) - "
-                        f"CAST(({lo_a}) AS DOUBLE), 0), "
-                        f"CASE WHEN CAST(({x}) AS DOUBLE) > "
-                        f"CAST(({lo_a}) AS DOUBLE) THEN CAST(1 AS DOUBLE) "
-                        f"ELSE CAST(0 AS DOUBLE) END)"
-                    )
-                    units = (
-                        f"(least(greatest({frac}, CAST(0 AS DOUBLE)), "
-                        f"CAST(1 AS DOUBLE)) * ({width}))"
-                    )
-                    full = f"CAST(floor({units}) AS INT)"
-                    rem8 = f"CAST(floor(({units} - floor({units})) * 8) AS INT)"
-                    nchars = f"({full} + (CASE WHEN {rem8} >= 1 THEN 1 ELSE 0 END))"
-                    out.extend(
-                        _toks(
-                            f"concat(repeat('█', {full}), "
-                            f"CASE WHEN {rem8} BETWEEN 1 AND 7 THEN "
-                            "element_at(array('▏','▎','▍','▌','▋','▊','▉'), "
-                            f"{rem8}) ELSE '' END, "
-                            f"repeat(' ', greatest(0, CAST(({width}) AS INT)"
-                            f" - 3 * {nchars})))"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low in (
-                    "arg_max", "arg_min", "argmax", "argmin",
-                ) and len(args) == 2:
-                    # DuckDB skips rows whose VALUE argument is NULL
-                    # (verified: arg_max over ('a',1),(NULL,5) = 'a');
-                    # Spark max_by returns the NULL — mask the ordering
-                    # key so those rows never win
-                    a, b = (_sql(inner, s, e) for s, e in args)
-                    fn2 = "max_by" if "max" in low else "min_by"
-                    out.extend(
-                        _toks(
-                            f"{fn2}(({a}), CASE WHEN ({a}) IS NOT NULL "
-                            f"THEN ({b}) END)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "generate_series" and len(args) == 1:
-                    # 1-arg form: 0..n inclusive
-                    a = _sql(inner, *args[0])
-                    out.extend(_toks(f"sequence(0, ({a}))"))
-                    i = close + 1
-                    continue
-                if low in ("greatest", "least") and len(args) == 1:
-                    # 1-arg identity (Spark requires >= 2 args)
-                    a = _sql(inner, *args[0])
-                    out.extend(_toks(f"(({a}))"))
-                    i = close + 1
-                    continue
-                if low == "array_reverse_sort" and len(args) == 1:
-                    a = _sql(inner, *args[0])
-                    out.extend(_toks(f"sort_array(({a}), false)"))
-                    i = close + 1
-                    continue
-                if low == "regexp_escape" and len(args) == 1:
-                    # DuckDB uses RE2 QuoteMeta: backslash before every
-                    # non-[A-Za-z0-9_] character
-                    a = _sql(inner, *args[0])
-                    out.extend(
-                        _toks(
-                            f"regexp_replace(({a}), "
-                            f"'([^A-Za-z0-9_])', '\\\\\\\\$1')"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low in (
-                    "parse_filename", "parse_dirpath", "parse_dirname",
-                ) and len(args) in (1, 2):
-                    p_ = _sql(inner, *args[0])
-                    sep = "[/\\\\\\\\]"  # SQL literal -> regex [/\\]
-                    if low == "parse_dirpath":
-                        repl = (
-                            f"regexp_extract(({p_}), '^(.*){sep}', 1)"
-                        )
-                    elif low == "parse_dirname":
-                        repl = (
-                            f"regexp_extract(({p_}), "
-                            f"'^([^/\\\\\\\\]*){sep}', 1)"
-                        )
-                    else:
-                        plain = (
-                            f"regexp_extract(({p_}), "
-                            f"'([^/\\\\\\\\]*)$', 1)"
-                        )
-                        if len(args) == 2:
-                            trim = (
-                                f"regexp_extract(({p_}), "
-                                f"'([^/\\\\\\\\.]*)(\\\\.[^/\\\\\\\\]*)?$'"
-                                f", 1)"
-                            )
-                            b = _sql(inner, *args[1])
-                            repl = (
-                                f"(CASE WHEN ({b}) THEN {trim} "
-                                f"ELSE {plain} END)"
-                            )
-                        else:
-                            repl = plain
-                    out.extend(_toks(repl))
-                    i = close + 1
-                    continue
-                if low in (
-                    "md5_number_lower", "md5_number_upper"
-                ) and len(args) == 1:
-                    # little-endian uint64 of md5 bytes 8..15 (lower) /
-                    # 0..7 (upper), verified against DuckDB
-                    a = _sql(inner, *args[0])
-                    h = f"md5(({a}))"
-                    start = 17 if low == "md5_number_lower" else 1
-                    pairs = ", ".join(
-                        f"substr({h}, {start + 2 * i}, 2)"
-                        for i in reversed(range(8))
-                    )
-                    out.extend(
-                        _toks(
-                            f"CAST(conv(concat({pairs}), 16, 10) "
-                            f"AS DECIMAL(20, 0))"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "struct_extract" and len(args) == 2:
-                    # literal field name -> dot access (Spark has no
-                    # struct_extract function)
-                    s_, f_code = _sql(inner, *args[0]), [
-                        t
-                        for t in inner[args[1][0]: args[1][1]]
-                        if t.kind not in ("ws", "comment")
-                    ]
-                    if len(f_code) == 1 and f_code[0].kind == "string":
-                        fname2 = f_code[0].text[1:-1]
-                        out.extend(_toks(f"(({s_}).`{fname2}`)"))
-                        i = close + 1
-                        continue
-                if low == "map_extract" and len(args) == 2:
-                    # DuckDB returns a LIST: [value] on hit, [] on miss
-                    m_, k_ = (_sql(inner, s, e) for s, e in args)
-                    out.extend(
-                        _toks(
-                            f"filter(array(try_element_at(({m_}), ({k_}))), "
-                            f"xx -> xx IS NOT NULL)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low in ("count", "count_star") and ihi == ilo:
-                    # DuckDB count() / count_star() = count(*)
-                    out.extend(_toks("count(*)"))
-                    i = close + 1
-                    continue
-                if low in ("dayofweek", "weekday") and len(args) == 1:
-                    # DuckDB: Sunday=0..Saturday=6 (both are aliases);
-                    # Spark dayofweek: Sunday=1
-                    a = _sql(inner, *args[0])
-                    out.extend(_toks(f"(dayofweek(({a})) - 1)"))
-                    i = close + 1
-                    continue
-                if low in (
-                    "century", "decade", "millennium", "era", "isoyear",
-                    "julian", "microsecond", "millisecond",
-                    "timezone_hour", "timezone_minute", "epoch_ns",
-                ) and len(args) == 1:
-                    a = _sql(inner, *args[0])
-                    part_shims = {
-                        "century": f"CAST(ceil(year(({a})) / 100.0) AS BIGINT)",
-                        "decade": f"CAST(floor(year(({a})) / 10.0) AS BIGINT)",
-                        "millennium": (
-                            f"CAST(ceil(year(({a})) / 1000.0) AS BIGINT)"
-                        ),
-                        "era": (
-                            f"(CASE WHEN year(({a})) > 0 THEN 1 ELSE 0 END)"
-                        ),
-                        # the Thursday of x's ISO week determines the
-                        # year. This emission is FINAL Spark SQL (call
-                        # shims do not reprocess their own output), so
-                        # ``weekday`` is Spark's Monday=0 builtin and
-                        # 3 - weekday is the Thursday offset directly
-                        "isoyear": (
-                            f"CAST(year(date_add(CAST(({a}) AS DATE), "
-                            f"3 - weekday(({a})))) AS BIGINT)"
-                        ),
-                        # verified: julian(DATE '2024-03-05') = 2460375.0
-                        # = unix_days + 2440588
-                        "julian": (
-                            f"(CAST(CAST(({a}) AS TIMESTAMP_LTZ) AS DOUBLE) "
-                            f"/ 86400.0D + 2440588.0D)"
-                        ),
-                        # DuckDB: sub-MINUTE micro/milliseconds (incl.
-                        # the seconds), e.g. 15123456 for :15.123456
-                        "microsecond": (
-                            f"CAST(unix_micros(CAST(({a}) AS TIMESTAMP_LTZ))"
-                            f" % 60000000 AS BIGINT)"
-                        ),
-                        "millisecond": (
-                            f"CAST(unix_micros(CAST(({a}) AS TIMESTAMP_LTZ))"
-                            f" % 60000000 DIV 1000 AS BIGINT)"
-                        ),
-                        # session timezone is UTC by engine design
-                        "timezone_hour": "CAST(0 AS BIGINT)",
-                        "timezone_minute": "CAST(0 AS BIGINT)",
-                        "epoch_ns": (
-                            f"(unix_micros(CAST(({a}) AS TIMESTAMP_LTZ)) * 1000)"
-                        ),
-                    }
-                    out.extend(_toks(part_shims[low]))
-                    i = close + 1
-                    continue
-                if (
-                    low in ("make_timestamp", "make_timestamptz")
-                    and len(args) == 1
-                ):
-                    # 1-arg form: microseconds since epoch
-                    a = _sql(inner, *args[0])
-                    out.extend(
-                        _toks(f"timestamp_micros(CAST(({a}) AS BIGINT))")
-                    )
-                    i = close + 1
-                    continue
-                if low == "to_timestamp" and len(args) == 1:
-                    # DuckDB to_timestamp(DOUBLE): seconds since epoch
-                    a = _sql(inner, *args[0])
-                    out.extend(
-                        _toks(f"timestamp_seconds(CAST(({a}) AS DOUBLE))")
-                    )
-                    i = close + 1
-                    continue
-                if (
-                    low in ("ceil", "ceiling", "floor")
-                    and len(args) == 1
-                    and not _plain_decimal_literal_arg(inner, args[0])
-                    and _static_numeric_type(
-                        inner[args[0][0]: args[0][1]]
-                    ) not in ("decimal", "decimal0")
-                    and i not in __in_values
-                ):
-                    # DuckDB types ceil/floor of int/bigint/double as
-                    # DOUBLE (ceil(5) = 5.0, ceil(1e300) = 1e300);
-                    # Spark returns BIGINT, which renders differently
-                    # ('5' vs '5.0' through format()/VARCHAR casts) and
-                    # overflows past 2^63. Values at |x| >= 2^53 are
-                    # already integral doubles — returned as-is, which
-                    # also covers inf and avoids the BIGINT hop; the
-                    # zero-window branch keeps IEEE -0.0 (ceil(-0.5) =
-                    # -0.0 like DuckDB). Decimal LITERALS, fractional-
-                    # literal arithmetic CHAINS (r9b, fuzz-found via
-                    # round's twin), and plain column refs with a
-                    # published DECIMAL schema hint keep Spark's native
-                    # DECIMAL(p,0) ceil, which
-                    # already matches DuckDB; an UNHINTED decimal
-                    # column reference can't be seen lexically and
-                    # takes the DOUBLE path (documented corner: its
-                    # VARCHAR cast gains '.0').
-                    a = _sql(inner, *args[0])
-                    fn = "floor" if low == "floor" else "ceiling"
-                    if (
-                        in_py_udf
-                        and len(a) > _BIND_THRESHOLD
-                        and _render_static_type(
-                            [
-                                t
-                                for t in inner[args[0][0] : args[0][1]]
-                                if t.kind not in ("ws", "comment")
-                            ]
-                        ) == "double"
-                    ):
-                        # long statically-DOUBLE operand inside a
-                        # Python-UDF span: the repeated CASE mentions
-                        # it ~7x per nesting level — route through the
-                        # __duck_fint twin (operand once, repr
-                        # transport)
-                        mode = "floor" if fn == "floor" else "ceil"
-                        out.extend(_toks(
-                            f"CAST(__duck_fint(CAST(({a}) AS"
-                            f" STRING), '{mode}') AS DOUBLE)"
-                        ))
-                        i = close + 1
-                        continue
-                    if len(a) <= _BIND_THRESHOLD or in_py_udf:
-                        # short operand: direct CASE stays inside
-                        # whole-stage codegen (subexpression
-                        # elimination dedupes the repeated cast)
-                        cx = f"CAST(({a}) AS DOUBLE)"
-                        if fn == "floor":
-                            zwin = f"({cx} >= 0.0 AND {cx} < 1.0)"
-                        else:
-                            zwin = f"({cx} > -1.0 AND {cx} <= 0.0)"
-                        out.extend(
-                            _toks(
-                                f"(CASE WHEN isnan({cx}) OR abs({cx})"
-                                f" >= 9007199254740992.0 THEN {cx} "
-                                f"WHEN {zwin} THEN {cx} * 0.0 "
-                                f"ELSE CAST({fn}({cx}) AS DOUBLE) END)"
-                            )
-                        )
-                        i = close + 1
-                        continue
-                    if fn == "floor":
-                        zwin = "(__cl >= 0.0 AND __cl < 1.0)"
-                    else:
-                        zwin = "(__cl > -1.0 AND __cl <= 0.0)"
-                    # long operand lambda-bound once: nested numeric
-                    # rewrites stay linear in plan size
-                    out.extend(
-                        _toks(
-                            f"(element_at(transform(array(CAST(({a}) "
-                            f"AS DOUBLE)), __cl -> "
-                            f"CASE WHEN isnan(__cl) OR abs(__cl) >= "
-                            f"9007199254740992.0 THEN __cl "
-                            f"WHEN {zwin} THEN __cl * 0.0 "
-                            f"ELSE CAST({fn}(__cl) AS DOUBLE) END), 1))"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "trunc" and len(args) == 1:
-                    # 1-arg numeric trunc-toward-zero (Spark trunc is
-                    # date-only); DOUBLE keeps DOUBLE type like DuckDB.
-                    # DuckDB is type-PRESERVING here (trunc(5) = 5 INT,
-                    # trunc(-4.7) = -4 DECIMAL(2,0), trunc(x::DOUBLE)
-                    # DOUBLE): numeric literals dispatch statically —
-                    # integers are identity, decimals truncate at
-                    # translate time with DuckDB's DECIMAL(p,0) typing
-                    # (p = digit count of the literal). Non-literal
-                    # int/decimal-typed expressions can't be seen
-                    # lexically and take the DOUBLE path (same
-                    # documented corner as ceil/floor).
-                    lit = _signed_plain_number_arg(inner, args[0])
-                    if lit is not None:
-                        sign, text = lit
-                        if "." not in text:
-                            out.extend(_toks(f"({sign}{text})"))
-                        else:
-                            p = len(text) - 1  # all digits, dot dropped
-                            ip = text.split(".", 1)[0] or "0"
-                            out.extend(
-                                _toks(
-                                    f"CAST({sign}{ip} AS DECIMAL({p},0))"
-                                )
-                            )
-                        i = close + 1
-                        continue
-                    chain = _static_numeric_type(
-                        inner[args[0][0]: args[0][1]]
-                    )
-                    if chain == "int":
-                        # integer chain: trunc is the identity and
-                        # DuckDB is type-preserving (trunc(7 + 3)
-                        # renders '10', not the template's '10.0')
-                        a = _sql(inner, *args[0])
-                        out.extend(_toks(f"({a})"))
-                        i = close + 1
-                        continue
-                    if chain in ("decimal", "decimal0"):
-                        # statically DECIMAL operand (r9b): floor/
-                        # ceiling on a decimal is DECIMAL(p,0) in both
-                        # engines — emit the core WITHOUT the typeof
-                        # CASE, whose DOUBLE branch would coerce the
-                        # result and lose the rendering ('100' vs
-                        # '100.0')
-                        a = _sql(inner, *args[0])
-                        out.extend(
-                            _toks(
-                                f"(CASE WHEN ({a}) >= 0 THEN "
-                                f"floor(({a})) ELSE ceiling(({a})) END)"
-                            )
-                        )
-                        i = close + 1
-                        continue
-                    a = _sql(inner, *args[0])
-                    if (
-                        in_py_udf
-                        and len(a) > _BIND_THRESHOLD
-                        and _render_static_type(
-                            [
-                                t
-                                for t in inner[args[0][0] : args[0][1]]
-                                if t.kind not in ("ws", "comment")
-                            ]
-                        ) == "double"
-                    ):
-                        # span escape, same as ceil/floor above (~8
-                        # mentions otherwise)
-                        out.extend(_toks(
-                            f"CAST(__duck_fint(CAST(({a}) AS"
-                            f" STRING), 'trunc') AS DOUBLE)"
-                        ))
-                        i = close + 1
-                        continue
-                    # DOUBLE-branch guards (r10b, pre-existing bug):
-                    # floor/ceiling return BIGINT, which a |x| >= 2^53
-                    # double overflows (trunc(1e300) clamped to 2^63,
-                    # inf/nan -> garbage); those magnitudes are already
-                    # integral and pass through like DuckDB, and the
-                    # |x| < 1 window keeps the IEEE sign of zero
-                    # (trunc(-0.4) = -0.0)
-                    if len(a) <= _BIND_THRESHOLD or in_py_udf:
-                        cx = f"CAST(({a}) AS DOUBLE)"
-                        core = (
-                            f"(CASE WHEN ({a}) >= 0 THEN floor(({a})) "
-                            f"ELSE ceiling(({a})) END)"
-                        )
-                        gcore = (
-                            f"(CASE WHEN isnan({cx}) OR abs({cx}) >= "
-                            f"9007199254740992.0 THEN {cx} "
-                            f"WHEN {cx} > -1.0 AND {cx} < 1.0 "
-                            f"THEN {cx} * 0.0 "
-                            f"ELSE CAST((CASE WHEN {cx} >= 0 THEN "
-                            f"floor({cx}) ELSE ceiling({cx}) END) "
-                            f"AS DOUBLE) END)"
-                        )
-                        out.extend(
-                            _toks(
-                                f"(CASE WHEN typeof({a}) IN "
-                                f"('double', 'float')"
-                                f" THEN {gcore} "
-                                f"ELSE {core} END)"
-                            )
-                        )
-                    else:
-                        # long operand bound once (the repeated-operand
-                        # form is ~8 mentions); the mixed-branch CASE
-                        # coerces to DOUBLE anyway, so forcing double
-                        # here is type-identical
-                        out.extend(
-                            _toks(
-                                f"(element_at(transform(array("
-                                f"CAST(({a}) AS DOUBLE)), __tr -> "
-                                "CASE WHEN isnan(__tr) OR abs(__tr) >= "
-                                "9007199254740992.0 THEN __tr "
-                                "WHEN __tr > -1.0 AND __tr < 1.0 "
-                                "THEN __tr * 0.0 "
-                                "WHEN __tr >= 0 THEN "
-                                "CAST(floor(__tr) AS DOUBLE) "
-                                "ELSE CAST(ceiling(__tr) AS DOUBLE) "
-                                "END), 1))"
-                            )
-                        )
-                    i = close + 1
-                    continue
-                if low == "sem" and len(args) == 1:
-                    # standard error of the mean; DuckDB uses the
-                    # POPULATION stddev over sqrt(n) (verified)
-                    a = _sql(inner, *args[0])
-                    out.extend(
-                        _toks(
-                            f"(stddev_pop(({a})) / "
-                            f"nullif(sqrt(CAST(count(({a})) AS DOUBLE)), 0))"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "signbit" and len(args) == 1:
-                    # DuckDB signbit(-0.0) is false (verified), so a
-                    # plain comparison is exact
-                    a = _sql(inner, *args[0])
-                    out.extend(_toks(f"(({a}) < 0)"))
-                    i = close + 1
-                    continue
-                if low == "regexp_extract_all" and len(args) == 2:
-                    # DuckDB's 2-arg form returns full matches (group 0);
-                    # Spark requires the index
-                    a, b = (_sql(inner, s, e) for s, e in args)
-                    out.extend(_toks(f"regexp_extract_all(({a}), ({b}), 0)"))
-                    i = close + 1
-                    continue
-                if low == "json_valid" and len(args) == 1:
-                    a = _sql(inner, *args[0])
-                    out.extend(
-                        _toks(
-                            f"(CASE WHEN ({a}) IS NULL THEN "
-                            f"CAST(NULL AS BOOLEAN) "
-                            f"ELSE get_json_object(({a}), '$') IS NOT NULL "
-                            f"END)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "json_array_length" and len(args) == 1:
-                    # DuckDB returns 0 for non-array JSON; Spark NULL
-                    a = _sql(inner, *args[0])
-                    out.extend(
-                        _toks(
-                            f"(CASE WHEN ({a}) IS NULL THEN "
-                            f"CAST(NULL AS BIGINT) ELSE "
-                            f"CAST(coalesce(json_array_length(({a})), 0) "
-                            f"AS BIGINT) END)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "json_array":
-                    # constructor: compact rendering matches DuckDB for
-                    # uniform element types (mixed types unify in Spark
-                    # arrays — documented)
-                    if ihi == ilo:
-                        out.extend(_toks("'[]'"))
-                    else:
-                        rendered = ", ".join(
-                            _sql(inner, s, e) for s, e in args
-                        )
-                        out.extend(_toks(f"to_json(array({rendered}))"))
-                    i = close + 1
-                    continue
-                if low == "json_object":
-                    if ihi == ilo:
-                        out.extend(_toks("'{}'"))
-                    else:
-                        rendered = ", ".join(
-                            _sql(inner, s, e) for s, e in args
-                        )
-                        out.extend(_toks(f"to_json(map({rendered}))"))
-                    i = close + 1
-                    continue
-                if low in (
-                    "list_dot_product", "list_inner_product",
-                    "list_negative_dot_product", "list_negative_inner_product",
-                    "list_cosine_similarity", "list_cosine_distance",
-                    "list_distance",
-                ) and len(args) == 2:
-                    a, b = (_sql(inner, s, e) for s, e in args)
-
-                    def _dot(u: str, v: str) -> str:
-                        return (
-                            f"aggregate(zip_with(({u}), ({v}), "
-                            f"(xx, yy) -> CAST(xx AS DOUBLE) * yy), "
-                            f"CAST(0 AS DOUBLE), (acc, vv) -> acc + vv)"
-                        )
-
-                    if low in ("list_dot_product", "list_inner_product"):
-                        repl = _dot(a, b)
-                    elif low in (
-                        "list_negative_dot_product",
-                        "list_negative_inner_product",
-                    ):
-                        repl = f"-({_dot(a, b)})"
-                    elif low == "list_distance":
-                        repl = (
-                            f"sqrt(aggregate(zip_with(({a}), ({b}), "
-                            f"(xx, yy) -> (CAST(xx AS DOUBLE) - yy) * "
-                            f"(CAST(xx AS DOUBLE) - yy)), "
-                            f"CAST(0 AS DOUBLE), (acc, vv) -> acc + vv))"
-                        )
-                    else:
-                        cos = (
-                            f"({_dot(a, b)} / nullif(sqrt({_dot(a, a)}) * "
-                            f"sqrt({_dot(b, b)}), 0))"
-                        )
-                        repl = (
-                            cos
-                            if low == "list_cosine_similarity"
-                            else f"(1.0D - {cos})"
-                        )
-                    out.extend(_toks(repl))
-                    i = close + 1
-                    continue
-                if low in ("list_select", "array_select") and len(args) == 2:
-                    # 1-based index list selection
-                    l_, idx = (_sql(inner, s, e) for s, e in args)
-                    out.extend(
-                        _toks(
-                            f"transform(({idx}), ii -> "
-                            f"element_at(({l_}), CAST(ii AS INT)))"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low in (
-                    "grade_up", "list_grade_up", "array_grade_up"
-                ) and len(args) == 1:
-                    # 1-based indexes that would sort the list ascending
-                    # (verified: grade_up([30,10,20]) = [2,3,1]); stable
-                    # by original position via the (value, index) sort
-                    a = _sql(inner, *args[0])
-                    out.extend(
-                        _toks(
-                            f"transform(array_sort(zip_with(({a}), "
-                            f"sequence(1, size(({a}))), "
-                            f"(vv, ii) -> named_struct('v', vv, 'i', ii))), "
-                            f"ss -> ss.i)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "get_bit" and len(args) == 2:
-                    # STRING-typed bitstrings (no BIT type in Spark);
-                    # DuckDB indexes bits 0-based from the left
-                    b_, ix = (_sql(inner, s, e) for s, e in args)
-                    out.extend(
-                        _toks(
-                            f"CAST(substr(({b_}), CAST(({ix}) AS INT) + 1, 1)"
-                            f" AS INT)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "set_bit" and len(args) == 3:
-                    b_, ix, v_ = (_sql(inner, s, e) for s, e in args)
-                    out.extend(
-                        _toks(
-                            f"concat(substr(({b_}), 1, CAST(({ix}) AS INT)), "
-                            f"CAST(({v_}) AS STRING), "
-                            f"substr(({b_}), CAST(({ix}) AS INT) + 2))"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "bit_position" and len(args) == 2:
-                    # bit_position(needle, haystack): 1-based, 0 if absent
-                    sub, b_ = (_sql(inner, s, e) for s, e in args)
-                    out.extend(_toks(f"instr(({b_}), ({sub}))"))
-                    i = close + 1
-                    continue
-                if low in (
-                    "to_years", "to_months", "to_quarters", "to_decades",
-                    "to_centuries", "to_millennia", "to_weeks", "to_days",
-                    "to_hours", "to_minutes", "to_seconds",
-                    "to_milliseconds", "to_microseconds",
-                ) and len(args) == 1:
-                    a = _sql(inner, *args[0])
-                    ai = f"CAST(({a}) AS INT)"
-                    ad = f"CAST(({a}) AS DOUBLE)"
-                    iv = {
-                        "to_years": f"make_ym_interval({ai}, 0)",
-                        "to_months": f"make_ym_interval(0, {ai})",
-                        "to_quarters": f"make_ym_interval(0, {ai} * 3)",
-                        "to_decades": f"make_ym_interval({ai} * 10, 0)",
-                        "to_centuries": f"make_ym_interval({ai} * 100, 0)",
-                        "to_millennia": f"make_ym_interval({ai} * 1000, 0)",
-                        "to_weeks": f"make_dt_interval({ai} * 7)",
-                        "to_days": f"make_dt_interval({ai})",
-                        "to_hours": f"make_dt_interval(0, {ai})",
-                        "to_minutes": f"make_dt_interval(0, 0, {ai})",
-                        "to_seconds": f"make_dt_interval(0, 0, 0, {ad})",
-                        "to_milliseconds": (
-                            f"make_dt_interval(0, 0, 0, {ad} / 1000.0D)"
-                        ),
-                        "to_microseconds": (
-                            f"make_dt_interval(0, 0, 0, {ad} / 1000000.0D)"
-                        ),
-                    }
-                    out.extend(_toks(iv[low]))
-                    i = close + 1
-                    continue
-                if low in ("encode", "decode") and len(args) == 1:
-                    # DuckDB 1-arg encode(VARCHAR)->BLOB / decode(BLOB)
-                    # ->VARCHAR; Spark's are 2-arg with a charset
-                    a = _sql(inner, *args[0])
-                    out.extend(_toks(f"{low}(({a}), 'UTF-8')"))
-                    i = close + 1
-                    continue
-                if low in (
-                    "format_bytes", "formatreadablesize",
-                    "formatreadabledecimalsize",
-                ) and len(args) == 1:
-                    # DuckDB: size units with ONE decimal TRUNCATED
-                    # toward zero (format_bytes(1997) = '1.9 KiB',
-                    # verified — 1.9502 does NOT round up); below one
-                    # unit prints 'N byte[s]'; beyond the last unit
-                    # stays there ('1024.0 PiB'). CAST-to-STRING of the
-                    # 1-decimal double renders shortest form 'x.y'.
-                    # formatReadableSize is the binary (KiB) alias;
-                    # formatReadableDecimalSize is 1000-based kB/MB/...
-                    x = _sql(inner, *args[0])
-                    xd = f"CAST(({x}) AS DOUBLE)"
-                    if low == "formatreadabledecimalsize":
-                        base, logk = "1000", f"log10(abs({xd})) / 3"
-                        units = "' kB', ' MB', ' GB', ' TB', ' PB'"
-                    else:
-                        base, logk = "1024", f"log2(abs({xd})) / 10"
-                        units = "' KiB', ' MiB', ' GiB', ' TiB', ' PiB'"
-                    k = f"least(CAST(floor({logk}) AS INT), 5)"
-                    scaled = (
-                        f"{xd} / power(CAST({base} AS DOUBLE), {k}) * 10"
-                    )
-                    q = (
-                        f"(CAST((CASE WHEN {xd} >= 0 "
-                        f"THEN floor({scaled}) "
-                        f"ELSE ceiling({scaled}) END) AS DOUBLE) / 10)"
-                    )
-                    out.extend(
-                        _toks(
-                            f"(CASE WHEN ({x}) IS NULL THEN "
-                            f"CAST(NULL AS STRING) "
-                            f"WHEN abs(({x})) < {base} THEN "
-                            f"concat(CAST(({x}) AS STRING), "
-                            f"CASE WHEN abs(({x})) = 1 THEN ' byte' "
-                            f"ELSE ' bytes' END) "
-                            f"ELSE concat(CAST({q} AS STRING), "
-                            f"element_at(array({units}), {k})) END)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "bitstring" and len(args) == 2:
-                    # DuckDB bitstring(s, len) zero-pads left to len
-                    # (BIT type; string-compatible — '0...' compare is
-                    # TRUE in DuckDB); shorter len errors, as there
-                    s_, l_ = (_sql(inner, s, e) for s, e in args)
-                    out.extend(
-                        _toks(
-                            f"(CASE WHEN ({l_}) < length({s_}) THEN "
-                            f"CAST(raise_error('bitstring: Length must "
-                            f"be equal or larger than input string') "
-                            f"AS STRING) "
-                            f"ELSE lpad(({s_}), ({l_}), '0') END)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "date_add" and len(args) == 2:
-                    second = _sql(inner, *args[1])
-                    if second.upper().startswith("INTERVAL"):
-                        first = _sql(inner, *args[0])
-                        out.extend(_toks(f"CAST((({first}) + {second}) AS TIMESTAMP)"))
-                        i = close + 1
-                        continue
-                if low in ("dayname", "monthname") and len(args) == 1:
-                    fmt = "EEEE" if low == "dayname" else "MMMM"
-                    out.extend(
-                        _toks(f"date_format({_sql(inner, *args[0])}, '{fmt}')")
-                    )
-                    i = close + 1
-                    continue
-                if low == "age":
-                    # 1-arg age(x) = age(current_date::TIMESTAMP, x);
-                    # both args cast so DATE columns reach the UDF as
-                    # timestamps (the 2-arg UDF is session-registered)
-                    if len(args) == 1:
-                        out.extend(
-                            _toks(
-                                "age(CAST(current_date() AS TIMESTAMP), "
-                                f"CAST(({_sql(inner, *args[0])}) AS TIMESTAMP))"
-                            )
-                        )
-                    elif len(args) == 2:
-                        out.extend(
-                            _toks(
-                                f"age(CAST(({_sql(inner, *args[0])}) AS "
-                                "TIMESTAMP), "
-                                f"CAST(({_sql(inner, *args[1])}) AS "
-                                "TIMESTAMP))"
-                            )
-                        )
-                    else:
-                        out.extend(tokens[i : close + 1])
-                    i = close + 1
-                    continue
-                if low == "isodow" and len(args) == 1:
-                    out.extend(
-                        _toks(f"(weekday({_sql(inner, *args[0])}) + 1)")
-                    )
-                    i = close + 1
-                    continue
-                if low in ("list_unique", "array_unique") and len(args) == 1:
-                    out.extend(
-                        _toks(f"size(array_distinct({_sql(inner, *args[0])}))")
-                    )
-                    i = close + 1
-                    continue
-                if low == "map" and len(args) == 2:
-                    # DuckDB's 2-arg map() is ALWAYS the
-                    # (keys_list, values_list) form — rewrite
-                    # unconditionally (list-typed column args
-                    # included; a non-list arg fails analysis loudly,
-                    # exactly like DuckDB's binder). Single-entry
-                    # brace literals can't reach here: the brace
-                    # rewrite emits the __brace_map sentinel.
-                    a, b = (_sql(inner, s, e) for s, e in args)
-                    out.extend(_toks(f"map_from_arrays({a}, {b})"))
-                    i = close + 1
-                    continue
-                if low == "to_base" and len(args) == 2:
-                    a, b = (_sql(inner, s, e) for s, e in args)
-                    out.extend(_toks(f"conv({a}, 10, {b})"))
-                    i = close + 1
-                    continue
-                if low == "list_reduce" and len(args) == 2:
-                    # DuckDB has no init arg: seed with the first element
-                    l, lam = (_sql(inner, s, e) for s, e in args)
-                    out.extend(
-                        _toks(
-                            f"reduce(slice(({l}), 2, size(({l})) - 1), "
-                            f"get(({l}), 0), {lam})"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "read_parquet" and len(args) == 1:
-                    # table function over one literal path -> Spark's
-                    # direct-file query (reference in_tables_creator.py
-                    # uses the same DuckDB form internally)
-                    path_code = [
-                        t for t in inner[args[0][0]: args[0][1]]
-                        if t.kind not in ("ws", "comment")
-                    ]
-                    if len(path_code) == 1 and path_code[0].kind == "string":
-                        path = path_code[0].text[1:-1].replace("''", "'")
-                        out.extend(
-                            _toks("parquet.`" + path.replace("`", "``") + "`")
-                        )
-                        i = close + 1
-                        continue
-                if low == "jaccard" and len(args) == 2:
-                    # DuckDB: Jaccard similarity of the character SETS
-                    # (case-sensitive, duplicates ignored)
-                    a, b = (_sql(inner, s, e) for s, e in args)
-                    ca = f"array_distinct(split(({a}), ''))"
-                    cb = f"array_distinct(split(({b}), ''))"
-                    out.extend(
-                        _toks(
-                            f"(CAST(size(array_intersect({ca}, {cb})) AS DOUBLE)"
-                            f" / CAST(size(array_union({ca}, {cb})) AS DOUBLE))"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low in ("hamming", "mismatches") and len(args) == 2:
-                    # positional mismatch count; equal length enforced
-                    # like DuckDB's Invalid Input error
-                    a, b = (_sql(inner, s, e) for s, e in args)
-                    out.extend(
-                        _toks(
-                            f"(CASE WHEN length({a}) <> length({b}) THEN "
-                            f"CAST(raise_error('{low}: strings must be of "
-                            f"equal length') AS BIGINT) ELSE "
-                            f"CAST(size(filter(zip_with(split(({a}), ''), "
-                            f"split(({b}), ''), (__x, __y) -> __x <> __y), "
-                            f"__z -> __z)) AS BIGINT) END)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "regexp_split_to_table" and len(args) == 2:
-                    a, b = (_sql(inner, s, e) for s, e in args)
-                    out.extend(_toks(f"explode(split(({a}), ({b})))"))
-                    i = close + 1
-                    continue
-                if (
-                    low in ("string_agg", "listagg", "group_concat")
-                    and order_split() is None
-                    and len(args) in (1, 2)
-                    and args[0][1] > args[0][0]
-                ):
-                    # DuckDB string_agg/group_concat default to ','
-                    # (Spark listagg defaults to ''); group_concat is
-                    # a plain alias
-                    rendered = [_sql(inner, s, e) for s, e in args]
-                    sep = rendered[1] if len(rendered) == 2 else "','"
-                    out.extend(_toks(f"listagg({rendered[0]}, {sep})"))
-                    i = close + 1
-                    continue
-                if low in (
-                    "list_aggregate", "list_aggr",
-                    "aggregate", "array_aggregate", "array_aggr",
-                ) and len(args) >= 2:
-                    l = _sql(inner, *args[0])
-                    fname_code = [
-                        t for t in inner[args[1][0]: args[1][1]]
-                        if t.kind not in ("ws", "comment")
-                    ]
-                    if len(fname_code) == 1 and fname_code[0].kind == "string":
-                        fname = fname_code[0].text[1:-1].lower()
-                        repl = None
-                        # DuckDB list_aggregate follows SQL aggregate
-                        # semantics: NULL elements are skipped and an
-                        # empty/all-NULL list yields NULL (not 0, and no
-                        # division by zero for avg)
-                        nn = (
-                            f"filter(transform(({l}), v -> CAST(v AS "
-                            f"DOUBLE)), v -> v IS NOT NULL)"
-                        )
-                        nn_sum = (
-                            f"aggregate({nn}, CAST(0 AS DOUBLE), "
-                            f"(a, x) -> a + x)"
-                        )
-                        if fname == "sum":
-                            repl = (
-                                f"(CASE WHEN size({nn}) = 0 THEN "
-                                f"CAST(NULL AS DOUBLE) ELSE {nn_sum} END)"
-                            )
-                        elif fname in ("avg", "mean"):
-                            repl = (
-                                f"(CASE WHEN size({nn}) = 0 THEN "
-                                f"CAST(NULL AS DOUBLE) ELSE "
-                                f"{nn_sum} / size({nn}) END)"
-                            )
-                        elif fname == "min":
-                            repl = f"array_min(({l}))"
-                        elif fname == "max":
-                            repl = f"array_max(({l}))"
-                        elif fname == "count":
-                            repl = (
-                                f"CAST(size(filter(({l}), "
-                                f"v -> v IS NOT NULL)) AS BIGINT)"
-                            )
-                        elif fname == "first":
-                            repl = f"get(({l}), 0)"
-                        elif fname == "last":
-                            repl = f"get(({l}), size(({l})) - 1)"
-                        elif fname == "string_agg" and len(args) == 3:
-                            sep = _sql(inner, *args[2])
-                            repl = f"array_join(({l}), ({sep}))"
-                        if repl is not None:
-                            out.extend(_toks(repl))
-                            i = close + 1
-                            continue
-                if low == "printf" and len(args) >= 2:
-                    # DuckDB printf returns NULL when ANY argument is
-                    # NULL (r10b, pre-existing divergence: Spark's
-                    # printf renders NULL args as text). Float
-                    # directives additionally need a DOUBLE cast
-                    # (r10c, fuzz-found): DuckDB's fmt printf accepts
-                    # DECIMAL as float-family ('%.1f' on DECIMAL(5,4)
-                    # renders '5.6') while Spark's Java formatter
-                    # throws IllegalFormatConversionException on its
-                    # own Decimal. Integer directives stay uncasted —
-                    # both engines reject non-integer args loudly.
-                    # Args bind ONCE in an outer lambda struct so
-                    # volatile args (random(), nextval) cannot
-                    # disagree between the NULL guard and the render
-                    # (same rationale as the format() branch); inside
-                    # a Python-UDF argument span the binding would
-                    # defeat ExtractPythonUDFs, so that path keeps the
-                    # repeated-operand form.
-                    parts = [_sql(inner, s_, e_) for s_, e_ in args]
-                    fmt_code = [
-                        t for t in inner[args[0][0]: args[0][1]]
-                        if t.kind not in ("ws", "comment")
-                    ]
-                    # directive k -> 'twin' (fmt-exact Python render,
-                    # substituted as %s), 'double' (CAST AS DOUBLE:
-                    # exotic float flags — '#' point forcing, %a hex —
-                    # keep Java's close-enough render), or None
-                    # (pass-through). Twin-eligible: f/F/e/E/g/G with
-                    # flags in {-,+,space,0} and numeric width/prec.
-                    # Non-literal format strings, '*' widths and
-                    # '%n$' positionals keep the uncasted call.
-                    plan = None
-                    fmt_body = None
-                    if len(fmt_code) == 1 and fmt_code[0].kind == "string":
-                        fmt_body = fmt_code[0].text[1:-1]
-                        specs = list(re.finditer(
-                            r"%([-+ #0-9.$*']*)([a-zA-Z%])", fmt_body
-                        ))
-                        if not any(
-                            "*" in m_.group(1) or "$" in m_.group(1)
-                            for m_ in specs
-                        ):
-                            plan = []
-                            for m_ in specs:
-                                fl, sp = m_.groups()
-                                if sp == "%":
-                                    continue
-                                if sp in "fFeEgG" and re.fullmatch(
-                                    r"[-+ 0]*\d*(?:\.\d+)?", fl
-                                ):
-                                    plan.append(("twin", m_))
-                                elif sp in "fFeEgGaA":
-                                    plan.append(("double", m_))
-                                else:
-                                    plan.append((None, m_))
-                    bind = not in_py_udf
-                    refs = (
-                        [f"__pf.__g{k}" for k in range(len(parts))]
-                        if bind
-                        else parts
-                    )
-                    # rebuild the format string with twin directives
-                    # replaced by a bare %s (the twin renders width,
-                    # flags and precision itself)
-                    if plan is not None and fmt_body is not None:
-                        rebuilt = []
-                        pos_ = 0
-                        for kind_, m_ in plan:
-                            if kind_ == "twin":
-                                rebuilt.append(fmt_body[pos_: m_.start()])
-                                rebuilt.append("%s")
-                                pos_ = m_.end()
-                        rebuilt.append(fmt_body[pos_:])
-                        fmt_arg = "'" + "".join(rebuilt) + "'"
-                    else:
-                        fmt_arg = f"({refs[0]})"
-
-                    def _pf_slot(k: int, raw: str) -> str:
-                        # value expression for struct slot k (raw arg,
-                        # or the twin render of it — the twin is a
-                        # Python UDF, so it must sit OUTSIDE the
-                        # binding lambda's body; rendering in the slot
-                        # keeps it in the lambda's INPUT, which
-                        # ExtractPythonUDFs hoists cleanly)
-                        if plan is None or not (
-                            1 <= k <= len(plan)
-                        ):
-                            return f"({raw})"
-                        kind_, m_ = plan[k - 1]
-                        if kind_ == "twin":
-                            return (
-                                f"__duck_printf('%{m_.group(1)}"
-                                f"{m_.group(2)}', CAST(CAST(({raw}) "
-                                "AS DOUBLE) AS STRING))"
-                            )
-                        if kind_ == "double":
-                            return f"CAST(({raw}) AS DOUBLE)"
-                        return f"({raw})"
-
-                    if bind:
-                        slots = [
-                            _pf_slot(k, p) for k, p in enumerate(parts)
-                        ]
-                        call_args = [f"({r})" for r in refs[1:]]
-                        guards = " OR ".join(
-                            f"(({r}) IS NULL)" for r in refs
-                        )
-                        call = (
-                            f"(CASE WHEN {guards} THEN "
-                            f"CAST(NULL AS STRING) ELSE "
-                            f"printf({fmt_arg}, "
-                            f"{', '.join(call_args)}) END)"
-                        )
-                        struct = ", ".join(
-                            f"'__g{k}', {s_}"
-                            for k, s_ in enumerate(slots)
-                        )
-                        call = (
-                            "(element_at(transform(array("
-                            f"named_struct({struct})), "
-                            f"__pf -> {call}), 1))"
-                        )
-                    else:
-                        call_args = [
-                            _pf_slot(k, p)
-                            for k, p in enumerate(parts)
-                        ][1:]
-                        guards = " OR ".join(
-                            f"(({p}) IS NULL)" for p in parts
-                        )
-                        call = (
-                            f"(CASE WHEN {guards} THEN "
-                            f"CAST(NULL AS STRING) ELSE "
-                            f"printf({fmt_arg}, "
-                            f"{', '.join(call_args)}) END)"
-                        )
-                    out.extend(_toks(call))
-                    i = close + 1
-                    continue
-                if low == "format" and len(args) >= 1:
-                    fmt_code = [
-                        t for t in inner[args[0][0]: args[0][1]]
-                        if t.kind not in ("ws", "comment")
-                    ]
-                    if len(fmt_code) == 1 and fmt_code[0].kind == "string":
-                        fmt = fmt_code[0].text[1:-1]
-                        # fmtlib placeholders -> printf: {} and
-                        # {:[width][.prec][dfsxoe]} (positional {n},
-                        # fill/align, and locale {:,} forms are left
-                        # unrewritten -> loud analysis error)
-                        esc = (
-                            fmt.replace("%", "%%")
-                            .replace("{{", "\x00")
-                            .replace("}}", "\x01")
-                        )
-
-                        parts_out = []
-                        typs = []
-                        bare_widths = []
-                        pos = 0
-                        fmt_ok = True
-                        for m in _FMTLIB_PH_RE.finditer(esc):
-                            rep = _fmtlib_placeholder(m.group(1))
-                            if rep is None:
-                                fmt_ok = False
-                                break
-                            parts_out.append(esc[pos: m.start()])
-                            parts_out.append(rep[0])
-                            typs.append((rep[1], rep[3]))
-                            bare_widths.append(rep[2])
-                            pos = m.end()
-                        if fmt_ok:
-                            parts_out.append(esc[pos:])
-                            # Spark's %f/%e reject DECIMAL and %x/%o
-                            # non-integral args — cast per placeholder
-                            # (fmtlib coerces; positional alignment is
-                            # 1:1 since {n} refs were rejected above)
-                            arg_sqls = [
-                                _sql(inner, s, e) for s, e in args[1:]
-                            ]
-                            # bind every argument ONCE in an outer
-                            # lambda struct (volatile args — random(),
-                            # sequence values — must not evaluate twice
-                            # and disagree between the NULL guard and
-                            # the rendered value; expensive args must
-                            # not compute twice). Inside a Python-UDF
-                            # argument the binding would defeat
-                            # ExtractPythonUDFs, so that path keeps the
-                            # repeated-operand form.
-                            bind_args = bool(arg_sqls) and not in_py_udf
-                            arg_refs = (
-                                [
-                                    f"__fmt.__g{k}"
-                                    for k in range(len(arg_sqls))
-                                ]
-                                if bind_args
-                                else arg_sqls
-                            )
-                            casted = []
-                            slot_exprs = list(arg_sqls)
-                            for k_, (tp_, w_, a_) in enumerate(zip(
-                                typs, bare_widths, arg_refs
-                            )):
-                                t_, expl_ = tp_
-                                if t_ == "q":
-                                    # typeless {:W.P} (r10c): fmt's
-                                    # 'general' float presentation
-                                    # (probe-matrix-exact incl. the
-                                    # zeros-capped-at-P and tie-keep
-                                    # quirks) via the twin; strings/
-                                    # dates stringify + truncate to P
-                                    # chars, left-aligned; ints/bools
-                                    # raise like DuckDB (row-level
-                                    # where DuckDB raises at bind —
-                                    # zero-row inputs stay silent).
-                                    # typeof() is foldable, so
-                                    # Catalyst prunes the dead
-                                    # branches on typed columns.
-                                    width_, prec_ = w_
-                                    spec_ = (
-                                        "{:" + width_ + "." + prec_ + "}"
-                                    )
-                                    pP = int(prec_)
-                                    wN = int(width_ or 0)
-                                    raw = (
-                                        arg_sqls[k_] if bind_args else a_
-                                    )
-                                    tw_ = (
-                                        f"__duck_printf('{spec_}', "
-                                        f"CAST(({raw}) AS STRING))"
-                                    )
-                                    zfill = (
-                                        width_.startswith("0")
-                                        and len(width_) > 1
-                                    )
-                                    fill = "'0'" if zfill else "' '"
-                                    if in_py_udf:
-                                        tr0 = (
-                                            "substring(CAST(("
-                                            f"{raw}) AS STRING), 1, {pP})"
-                                        )
-                                        trunc = tr0
-                                        if wN:
-                                            trunc = (
-                                                f"(CASE WHEN length({tr0})"
-                                                f" >= {wN} THEN {tr0} "
-                                                f"ELSE rpad({tr0}, {wN}, "
-                                                f"{fill}) END)"
-                                            )
-                                        str_path = trunc
-                                    else:
-                                        tr0 = f"substring(__fq.v, 1, {pP})"
-                                        trunc = tr0
-                                        if wN:
-                                            trunc = (
-                                                f"(CASE WHEN length({tr0})"
-                                                f" >= {wN} THEN {tr0} "
-                                                f"ELSE rpad({tr0}, {wN}, "
-                                                f"{fill}) END)"
-                                            )
-                                        str_path = (
-                                            "(element_at(transform(array("
-                                            "named_struct('v', CAST(("
-                                            f"{raw}) AS STRING))), "
-                                            f"__fq -> {trunc}), 1))"
-                                        )
-                                    slot = (
-                                        f"(CASE WHEN typeof(({raw})) IN "
-                                        "('double', 'float') OR "
-                                        f"typeof(({raw})) LIKE 'decimal%'"
-                                        f" THEN {tw_} WHEN "
-                                        f"typeof(({raw})) IN ('tinyint',"
-                                        " 'smallint', 'int', 'bigint', "
-                                        "'boolean') THEN raise_error("
-                                        "'format: precision not allowed "
-                                        "for this argument type') "
-                                        f"ELSE {str_path} END)"
-                                    )
-                                    if bind_args:
-                                        slot_exprs[k_] = slot
-                                        casted.append(f"({a_})")
-                                    else:
-                                        casted.append(slot)
-                                    continue
-                                if (
-                                    expl_
-                                    and t_ in ("f", "e")
-                                    and w_ is None
-                                ):
-                                    # explicit {:.Nf}/{:.Ne}: route
-                                    # through the fmt-exact printf
-                                    # twin (r10c — Java's Formatter
-                                    # rounds the SHORTEST repr half-up
-                                    # where fmt rounds the exact
-                                    # value: {:.2f} of 1.005 is '1.00'
-                                    # in DuckDB, '1.01' off Java) and
-                                    # substitute a bare %s; the twin
-                                    # renders width/precision itself
-                                    # (fmt's {:8.2f} == printf %8.2f,
-                                    # incl. the zero-fill inf quirk).
-                                    # The twin is a Python UDF, so it
-                                    # renders in the struct SLOT
-                                    # (lambda input) in the bound
-                                    # form, never in the lambda body.
-                                    spec_ = parts_out[2 * k_ + 1]
-                                    parts_out[2 * k_ + 1] = "%s"
-                                    tw_ = (
-                                        f"__duck_printf('{spec_}', "
-                                        "CAST(CAST(("
-                                        + arg_sqls[k_]
-                                        + ") AS DOUBLE) AS STRING))"
-                                    )
-                                    if bind_args:
-                                        slot_exprs[k_] = tw_
-                                        casted.append(f"({a_})")
-                                    else:
-                                        casted.append(tw_)
-                                    continue
-                                # fmtlib receives DECIMAL/DOUBLE args
-                                # as doubles, so {}/{:N} render them
-                                # shortest-round-trip with fmtlib's
-                                # decimal/scientific cutoffs (8.6400
-                                # -> '8.64', 1e-4 -> '0.0001', 1e16 ->
-                                # '1e+16'), not Java's formatting. The
-                                # arg is lambda-bound ONCE (nested
-                                # args stay linear in plan size), and
-                                # the double hop goes THROUGH the
-                                # string repr: CAST(v AS DOUBLE)
-                                # directly fails ANALYSIS for
-                                # date/timestamp args even in the
-                                # unreached branch, while
-                                # string->double analyzes for every
-                                # type and is value-identical for
-                                # decimals/doubles (both correctly
-                                # rounded)
-                                if in_py_udf:
-                                    # inside a Python-UDF argument the
-                                    # __fa lambda binding defeats
-                                    # ExtractPythonUDFs (_PY_UDF_FNS):
-                                    # repeat the operand and chain the
-                                    # Python render twin. TRY_CAST —
-                                    # extraction hoists UDF args past
-                                    # the CASE guard, and a date arg's
-                                    # string->double cast would raise.
-                                    vsp = f"CAST(({a_}) AS STRING)"
-                                    dec_p = (
-                                        f"(CASE WHEN typeof(({a_})) "
-                                        "LIKE 'decimal%' OR "
-                                        f"typeof(({a_})) IN "
-                                        "('double', 'float') THEN "
-                                        "__duck_render(CAST(TRY_CAST("
-                                        f"{vsp} AS DOUBLE) AS STRING)"
-                                        ", 'double') "
-                                        f"ELSE {vsp} END)"
-                                    )
-                                    if w_ is not None:
-                                        num_t = (
-                                            f"typeof(({a_})) IN "
-                                            "('tinyint', 'smallint', "
-                                            "'int', 'bigint', 'float',"
-                                            " 'double') OR "
-                                            f"typeof(({a_})) LIKE "
-                                            "'decimal%'"
-                                        )
-                                        casted.append(
-                                            "(CASE WHEN length("
-                                            f"{dec_p}) >= {w_} THEN "
-                                            f"{dec_p} WHEN {num_t} "
-                                            f"THEN lpad({dec_p}, {w_},"
-                                            " ' ') ELSE rpad("
-                                            f"{dec_p}, {w_}, ' ') "
-                                            "END)"
-                                        )
-                                    elif t_ == "s":
-                                        casted.append(dec_p)
-                                    elif t_ in ("f", "e"):
-                                        casted.append(
-                                            f"CAST(({a_}) AS DOUBLE)"
-                                        )
-                                    elif t_ in ("x", "o", "d"):
-                                        casted.append(
-                                            f"CAST(({a_}) AS BIGINT)"
-                                        )
-                                    else:
-                                        casted.append(a_)
-                                    continue
-                                vs = "CAST(__fa.v AS STRING)"
-                                # inlined core, not the __duck_fmt_repr
-                                # SQL function: a SQL-function call
-                                # cannot appear inside the __fa lambda
-                                fdbl = _shortest_double_core_sql(
-                                    f"CAST(CAST({vs} AS DOUBLE) "
-                                    "AS STRING)",
-                                    -4, 15, yy=False,
-                                )
-                                dec_str = (
-                                    "(CASE WHEN typeof(__fa.v) LIKE"
-                                    " 'decimal%' OR typeof(__fa.v) IN"
-                                    " ('double', 'float')"
-                                    f" THEN {fdbl}"
-                                    f" ELSE {vs} END)"
-                                )
-                                bound_pre = (
-                                    "(element_at(transform(array("
-                                    f"named_struct('v', ({a_}))), "
-                                    "__fa -> "
-                                )
-                                if w_ is not None:
-                                    # {:N}: fmtlib pads to a MINIMUM
-                                    # width, RIGHT-aligning numeric
-                                    # args and left-aligning everything
-                                    # else (strings, booleans, dates/
-                                    # timestamps — DuckDB stringifies
-                                    # non-numeric args before fmt)
-                                    body = (
-                                        "element_at(transform(array("
-                                        f"{dec_str}), __fs -> "
-                                        f"CASE WHEN length(__fs) >= {w_}"
-                                        " THEN __fs"
-                                        " WHEN typeof(__fa.v) IN"
-                                        " ('tinyint', 'smallint',"
-                                        " 'int', 'bigint', 'float',"
-                                        " 'double')"
-                                        " OR typeof(__fa.v) LIKE"
-                                        " 'decimal%'"
-                                        f" THEN lpad(__fs, {w_}, ' ')"
-                                        f" ELSE rpad(__fs, {w_}, ' ')"
-                                        " END), 1)"
-                                    )
-                                    casted.append(
-                                        bound_pre + body + "), 1))"
-                                    )
-                                elif t_ == "s":
-                                    casted.append(
-                                        bound_pre + dec_str + "), 1))"
-                                    )
-                                elif t_ in ("f", "e"):
-                                    casted.append(
-                                        f"CAST(({a_}) AS DOUBLE)"
-                                    )
-                                elif t_ in ("x", "o", "d"):
-                                    casted.append(
-                                        f"CAST(({a_}) AS BIGINT)"
-                                    )
-                                else:
-                                    casted.append(a_)
-                            casted += arg_refs[len(typs):]
-                            spark_fmt = (
-                                "".join(parts_out)
-                                .replace("\x00", "{")
-                                .replace("\x01", "}")
-                            )
-                            rest = ", ".join(casted)
-                            tail = f", {rest}" if rest else ""
-                            call = f"format_string('{spark_fmt}'{tail})"
-                            if arg_sqls:
-                                # DuckDB format() is NULL on ANY null
-                                # argument; Java's format_string prints
-                                # 'null'. The guard tests the BOUND
-                                # values, so it cannot disagree with
-                                # what gets rendered.
-                                guard = " OR ".join(
-                                    f"(({a}) IS NULL)" for a in arg_refs
-                                )
-                                call = (
-                                    f"(CASE WHEN {guard} THEN "
-                                    f"CAST(NULL AS STRING) ELSE {call} "
-                                    "END)"
-                                )
-                            if bind_args:
-                                struct = ", ".join(
-                                    f"'__g{k}', ({a})"
-                                    for k, a in enumerate(slot_exprs)
-                                )
-                                call = (
-                                    "(element_at(transform(array("
-                                    f"named_struct({struct})), "
-                                    f"__fmt -> {call}), 1))"
-                                )
-                            out.extend(_toks(call))
-                            i = close + 1
-                            continue
-                if (
-                    low
-                    in (
-                        "json_extract",
-                        "json_extract_path",
-                        "json_extract_string",
-                        "json_extract_path_text",
-                    )
-                    and len(args) == 2
-                ):
-                    # text variants map to get_json_object; the
-                    # JSON-returning variants re-quote string leaves
-                    # via a variant type probe (see _json_get_sql)
-                    s_, p_ = (_sql(inner, st, e) for st, e in args)
-                    p_code = [
-                        t
-                        for t in inner[args[1][0]: args[1][1]]
-                        if t.kind not in ("ws", "comment")
-                    ]
-                    if len(p_code) == 1 and p_code[0].kind == "string":
-                        p_ = _encode_spark_string(
-                            _json_path_literal(
-                                _decode_spark_string(p_code[0])
-                            )
-                        ).text
-                    elif (
-                        len(p_code) == 1
-                        and p_code[0].kind in ("number", "word")
-                        and p_code[0].text.isdigit()
-                    ):
-                        # integer path = array index
-                        p_ = f"'$[{p_code[0].text}]'"
-                    elif (
-                        p_code
-                        and p_code[0].kind == "word"
-                        and p_code[0].text.lower() == "array"
-                    ):
-                        # DuckDB list-of-paths form: one extraction per
-                        # path, returned as a list (paths normalized to
-                        # $-style at runtime)
-                        norm = ("CASE WHEN substr(pp, 1, 1) = '$' "
-                                "THEN pp ELSE concat('$.', pp) END")
-                        if low in ("json_extract", "json_extract_path"):
-                            body = _json_get_sql(
-                                f"({s_})", norm, allow_udf=False,
-                                py_udf_ctx=in_py_udf,
-                            )
-                        else:
-                            body = f"get_json_object(({s_}), {norm})"
-                        out.extend(
-                            _toks(f"transform(({p_}), pp -> {body})")
-                        )
-                        i = close + 1
-                        continue
-                    if low in ("json_extract", "json_extract_path"):
-                        out.extend(_toks(_json_get_sql(
-                            f"({s_})", p_, py_udf_ctx=in_py_udf
-                        )))
-                    else:
-                        out.extend(_toks(f"get_json_object({s_}, {p_})"))
-                    i = close + 1
-                    continue
-                if low == "unicode" and len(args) == 1:
-                    # codepoint of the first char; '' is -1 in DuckDB
-                    a = _sql(inner, *args[0])
-                    out.extend(
-                        _toks(
-                            f"(CASE WHEN ({a}) = '' THEN -1 "
-                            f"ELSE ascii({a}) END)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "xor" and len(args) == 2:
-                    # DuckDB xor() function (its ^ is power); Spark ^ IS
-                    # xor — safe here because the power pass already ran
-                    a, b = (_sql(inner, s, e) for s, e in args)
-                    out.extend(_toks(f"(({a}) ^ ({b}))"))
-                    i = close + 1
-                    continue
-                if low == "even" and len(args) == 1:
-                    # round away from zero to the next even number
-                    a = _sql(inner, *args[0])
-                    out.extend(
-                        _toks(
-                            f"(sign(CAST(({a}) AS DOUBLE)) * "
-                            f"ceil(abs(CAST(({a}) AS DOUBLE)) / 2) * 2)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low in ("isnan", "isinf", "isfinite") and len(args) == 1:
-                    # DuckDB returns NULL for NULL input (Spark isnan
-                    # gives false); isinf/isfinite have no Spark builtin
-                    a = _sql(inner, *args[0])
-                    if low != "isnan" and _static_temporal_sql(a):
-                        # temporal overload: Spark has no infinite
-                        # dates/timestamps, so every non-NULL value is
-                        # finite (static dispatch — the numeric CAST
-                        # below would fail Spark analysis on temporals)
-                        lit = "TRUE" if low == "isfinite" else "FALSE"
-                        out.extend(
-                            _toks(
-                                f"(CASE WHEN ({a}) IS NULL THEN "
-                                f"CAST(NULL AS BOOLEAN) ELSE {lit} END)"
-                            )
-                        )
-                        i = close + 1
-                        continue
-                    d = f"CAST(({a}) AS DOUBLE)"
-                    inf = "CAST('Infinity' AS DOUBLE)"
-                    if low == "isnan":
-                        body = f"isnan({d})"
-                    elif low == "isinf":
-                        body = f"abs({d}) = {inf}"
-                    else:
-                        body = f"(NOT isnan({d}) AND abs({d}) <> {inf})"
-                    out.extend(
-                        _toks(
-                            f"(CASE WHEN ({a}) IS NULL "
-                            f"THEN CAST(NULL AS BOOLEAN) ELSE {body} END)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "sha256" and len(args) == 1:
-                    a = _sql(inner, *args[0])
-                    out.extend(_toks(f"sha2({a}, 256)"))
-                    i = close + 1
-                    continue
-                if low == "list_prepend" and len(args) == 2:
-                    # DuckDB: (element, list); Spark array_prepend:
-                    # (list, element)
-                    e_, l_ = (_sql(inner, s, e) for s, e in args)
-                    out.extend(_toks(f"array_prepend({l_}, {e_})"))
-                    i = close + 1
-                    continue
-                if (
-                    low in ("levenshtein", "editdist3")
-                    and len(args) == 2
-                ):
-                    # DuckDB levenshtein runs over UTF-8 BYTES; Spark's
-                    # builtin is codepoint-based. Identical for ASCII, so
-                    # dispatch: builtin when both sides are pure ASCII
-                    # (octet length == char length), byte-level pandas
-                    # UDF otherwise.
-                    a, b = (_sql(inner, s, e) for s, e in args)
-                    out.extend(
-                        _toks(
-                            f"(CASE WHEN octet_length({a}) = length({a}) "
-                            f"AND octet_length({b}) = length({b}) "
-                            f"THEN CAST(levenshtein({a}, {b}) AS BIGINT) "
-                            f"ELSE levenshtein_bytes({a}, {b}) END)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                prev_code_tok = next(
-                    (
-                        t
-                        for t in reversed(out)
-                        if t.kind not in ("ws", "comment")
-                    ),
-                    None,
+            )
+            if "," not in key:
+                lo_first = c.name == "first"
+                fn = (
+                    "min_by"
+                    if lo_first != desc
+                    else "max_by"
                 )
+                return f"{fn}({head}, {key})"
+
+
+@_shim(
+    "sum", "avg", "mean", "min", "max", "count", "bool_and", "bool_or",
+    "bit_and", "bit_or", "bit_xor", "stddev", "stddev_samp", "stddev_pop",
+    "variance", "var_samp", "var_pop", "median", "product", "entropy",
+)
+def _shim_sum(c):
+    # order-insensitive aggregates: DuckDB tolerates an
+    # in-aggregate ORDER BY; drop it
+    ob = _order_at(c)
+    if ob is not None:
+        return f"{c.name}({_sql(c.inner, 0, ob)})"
+
+
+@_shim("string_agg", "group_concat", "array_agg", "list", "collect_list")
+def _shim_string_agg(c):
+    ob = _order_at(c)
+    if ob is not None:
+        head = _sql(c.inner, 0, ob)
+        tail = _sql(c.inner, ob, len(c.inner))  # "ORDER BY ..."
+        if c.name in ("string_agg", "group_concat"):
+            # DuckDB's default separator is ',' (Spark
+            # listagg defaults to '')
+            if len(_split_top_commas(c.inner, 0, ob)) == 1:
+                head = f"{head}, ','"
+            return f"listagg({head}) WITHIN GROUP ({tail})"
+        # array_agg/list: only the sort-by-self form
+        # maps (optionally DISTINCT). NULL elements are
+        # KEPT like DuckDB (collect_list drops them, so
+        # rows are collected as structs and unwrapped —
+        # the per-element lambda cost is group-sized);
+        # NULLs sort LAST in DuckDB for ASC and DESC
+        order_expr = tail[len("ORDER") :].strip()
+        assert order_expr.upper().startswith("BY")
+        order_expr = order_expr[2:].strip()
+        desc = order_expr.upper().endswith(" DESC")
+        core = (
+            order_expr[:-5].strip()
+            if desc
+            else (
+                order_expr[:-4].strip()
+                if order_expr.upper().endswith(" ASC")
+                else order_expr
+            )
+        )
+        hdist = re.match(r"(?is)^\s*DISTINCT\b", head)
+        hcore = (
+            head[hdist.end():].strip() if hdist else head
+        )
+        if core.replace(" ", "") == hcore.replace(" ", ""):
+            arr = (
+                f"transform(collect_list("
+                f"struct(({hcore}) AS __v)), __s -> __s.__v)"
+            )
+            if hdist:
+                arr = f"array_distinct({arr})"
+            if desc:
+                expr = (
+                    f"array_sort({arr}, (__l, __r) -> "
+                    "CASE WHEN __l IS NULL AND __r IS "
+                    "NULL THEN 0 WHEN __l IS NULL THEN 1 "
+                    "WHEN __r IS NULL THEN -1 "
+                    "WHEN __l < __r THEN 1 "
+                    "WHEN __l > __r THEN -1 ELSE 0 END)"
+                )
+            else:
+                expr = f"array_sort({arr})"
+            return expr
+
+
+@_shim("regexp_extract")
+def _shim_regexp_extract(c):
+    if len(c.args) == 2:
+        a, b = c.args
+        return f"regexp_extract({a}, {b}, 0)"
+
+
+@_shim("list_sort", "array_sort", "list_reverse_sort")
+def _shim_list_sort(c):
+    if (
+        (c.name == "list_reverse_sort" and len(c.args) in (1, 2))
+        or (c.name != "list_reverse_sort" and len(c.args) in (2, 3))
+    ):
+        # DuckDB order/null-order literals (measured: the
+        # DEFAULT null order is NULLS LAST for ASC and
+        # DESC alike). Literal directions only — a dynamic
+        # direction column fails loudly at analysis.
+        l_ = c.args[0]
+        lits = []
+        litok = True
+        for sp in c.spans[1:]:
+            code = [
+                t
+                for t in c.inner[sp[0]: sp[1]]
+                if t.kind not in ("ws", "comment")
+            ]
+            if len(code) == 1 and code[0].kind == "string":
+                lits.append(
+                    code[0].text[1:-1].strip().upper()
+                )
+            else:
+                litok = False
+        if litok:
+            if c.name == "list_reverse_sort":
+                order = "DESC"
+                nulls = lits[0] if lits else "NULLS LAST"
+            else:
+                order = lits[0] if lits else "ASC"
+                nulls = (
+                    lits[1] if len(lits) > 1 else "NULLS LAST"
+                )
+            # Spark: array_sort = ASC NULLS LAST;
+            # sort_array(asc) = ASC NULLS FIRST;
+            # sort_array(desc) = DESC NULLS LAST (measured)
+            nf = nulls == "NULLS FIRST"
+            if order == "DESC":
+                expr = (
+                    f"reverse(array_sort(({l_})))"
+                    if nf
+                    else f"sort_array(({l_}), false)"
+                )
+            else:
+                expr = (
+                    f"sort_array(({l_}), true)"
+                    if nf
+                    else f"array_sort(({l_}))"
+                )
+            return expr
+
+
+@_shim("list_resize", "array_resize")
+def _shim_list_resize(c):
+    if len(c.args) in (2, 3):
+        # pad with NULL (2-arg) or the given value (3-arg)
+        # BEYOND the original length; existing NULL elements
+        # survive (DuckDB: list_resize([1,NULL,3],5,9) =
+        # [1,NULL,3,9,9])
+        x_, n_ = c.args[:2]
+        pad_ = c.args[2] if len(c.args) == 3 else "NULL"
+        return (
+            f"(CASE WHEN ({x_}) IS NULL THEN NULL "
+            # DuckDB: NULL size behaves as 0 (verified)
+            f"WHEN ({n_}) IS NULL OR ({n_}) <= 0 "
+            f"THEN slice(({x_}), 1, 0) "
+            f"ELSE transform(sequence(1, CAST(({n_}) AS INT)), "
+            f"__i -> IF(__i <= size(({x_})), "
+            f"try_element_at(({x_}), __i), ({pad_}))) END)"
+        )
+
+
+@_shim("parse_path")
+def _shim_parse_path(c):
+    if len(c.args) in (1, 2):
+        # components list; a leading separator is its own
+        # root element (DuckDB: parse_path('/a/b') =
+        # ['/', 'a', 'b']). 'system' = '/' on this engine
+        # (POSIX containers)
+        p_ = c.args[0]
+        if len(c.args) == 2:
+            sep_ = c.args[1]
+            cls = (
+                f"(CASE WHEN lower(({sep_})) IN "
+                f"('forward_slash', 'system') THEN '[/]' "
+                f"WHEN lower(({sep_})) = 'backslash' "
+                r"THEN '[\\\\]' "
+                r"ELSE '[/\\\\]' END)"
+            )
+        else:
+            cls = r"'[/\\\\]'"
+        return (
+            f"(CASE WHEN ({p_}) IS NULL THEN NULL ELSE "
+            f"concat(IF(substr(({p_}), 1, 1) RLIKE "
+            f"concat('^', {cls}, '$'), "
+            f"array(substr(({p_}), 1, 1)), "
+            f"CAST(array() AS ARRAY<STRING>)), "
+            f"filter(split(({p_}), {cls}), "
+            f"__x -> __x <> '')) END)"
+        )
+
+
+@_shim("array_extract", "list_element", "list_extract")
+def _shim_array_extract(c):
+    if len(c.args) == 2:
+        # DuckDB overloads these over VARCHAR: 1-based char
+        # pick, negative from the end, 0/out-of-bounds ''.
+        # Spark's element_at rejects strings at ANALYSIS, so
+        # the dispatch is static: string-literal subjects
+        # take the substr path; everything else stays on the
+        # list path (try_element_at via _FN_RENAMES)
+        c0 = c.code(0)
+        if len(c0) == 1 and c0[0].kind == "string":
+            s_, ix = c.args
+            return (
+                f"(CASE WHEN CAST(({ix}) AS BIGINT) = 0 "
+                f"THEN '' ELSE substr(({s_}), "
+                f"CAST(({ix}) AS INT), 1) END)"
+            )
+        # list path: Spark's element_at requires an INT
+        # index for arrays (no BIGINT coercion); these are
+        # DuckDB's LIST accessors, so the cast is always
+        # safe (maps go through map_extract / brackets)
+        s_, ix = c.args
+        return f"try_element_at(({s_}), CAST(({ix}) AS INT))"
+
+
+@_shim("octet_length")
+def _shim_octet_length(c):
+    if len(c.args) == 1:
+        # BIT values are '0'/'1' strings in this engine;
+        # octet_length over a syntactically-known bitstring
+        # is its byte count, ceil(bits/8). Detection reads
+        # the PRE-rewrite tokens (the bitstring call itself
+        # is already expanded inside ``inner``)
+        c0 = [
+            t
+            for t in c.tokens[c.p_open + 1: c.close]
+            if t.kind not in ("ws", "comment")
+        ]
+        if (
+            c0
+            and c0[0].kind == "word"
+            and c0[0].text.lower() in ("bitstring", "bitstring_agg")
+        ):
+            a = c.args[0]
+            return f"CAST(ceil(length({a}) / 8.0) AS BIGINT)"
+
+
+@_shim("make_time")
+def _shim_make_time(c):
+    if len(c.args) == 3:
+        # TIME is represented as an epoch-day timestamp
+        # (see _rewrite_time_literals)
+        h_, m_, s_ = c.args
+        return (
+            f"make_timestamp(1970, 1, 1, "
+            f"CAST(({h_}) AS INT), CAST(({m_}) AS INT), "
+            f"({s_}))"
+        )
+
+
+@_shim("bitstring_agg")
+def _shim_bitstring_agg(c):
+    if len(c.args) in (1, 3):
+        # bit per position over [min, max] (leftmost = min);
+        # the 1-arg form derives the bounds from the same
+        # aggregation (DuckDB needs column stats there).
+        # Divergence: values outside explicit bounds error
+        # in DuckDB, here they are ignored
+        x_ = c.args[0]
+        if len(c.args) == 3:
+            mn = f"CAST(({c.args[1]}) AS BIGINT)"
+            mx = f"CAST(({c.args[2]}) AS BIGINT)"
+        else:
+            mn = f"min(CAST(({x_}) AS BIGINT))"
+            mx = f"max(CAST(({x_}) AS BIGINT))"
+        return (
+            f"array_join(transform(sequence({mn}, {mx}), "
+            f"__p -> CASE WHEN array_contains("
+            f"collect_set(CAST(({x_}) AS BIGINT)), __p) "
+            f"THEN '1' ELSE '0' END), '')"
+        )
+
+
+@_shim("struct_insert")
+def _shim_struct_insert(c):
+    if len(c.args) >= 2:
+        # name := value field append -> named_struct splice.
+        # Needs a named_struct-shaped base (brace literals /
+        # struct_pack are already rewritten by this point);
+        # a dynamic struct column base needs the schema and
+        # falls through to a loud Spark error (COVERAGE.md)
+        def _named_pairs(arg_spans):
+            pairs = []
+            for s_, e_ in arg_spans:
+                code = [
+                    (j, t)
+                    for j, t in enumerate(c.inner[s_:e_])
+                    if t.kind not in ("ws", "comment")
+                ]
                 if (
-                    low == "range"
-                    and len(args) in (1, 2, 3)
-                    # table-function position (FROM range(...)) keeps
-                    # its name for the table-function handling
-                    and not (
-                        prev_code_tok is not None
-                        and prev_code_tok.kind == "word"
-                        and prev_code_tok.upper in ("FROM", "JOIN")
-                    )
+                    len(code) >= 3
+                    and code[0][1].kind
+                    in ("word", "bident", "qident")
+                    and code[1][1].kind == "op"
+                    and code[1][1].text == ":"
+                    and code[2][1].kind == "op"
+                    and code[2][1].text == "="
                 ):
-                    # scalar range(): EXCLUSIVE end (generate_series is
-                    # the inclusive one); empty when the window is empty
-                    # instead of Spark sequence()'s auto-negative step
-                    vals = [_sql(inner, s, e) for s, e in args]
-                    if len(vals) == 1:
-                        a, b, s_ = "0", vals[0], "1"
-                    elif len(vals) == 2:
-                        (a, b), s_ = vals, "1"
-                    else:
-                        a, b, s_ = vals
-                    empty = f"slice(sequence(({a}), ({a})), 1, 0)"
-                    out.extend(
-                        _toks(
-                            f"(CASE WHEN ({s_}) > 0 AND ({b}) > ({a}) "
-                            f"THEN sequence(({a}), ({b}) - 1, ({s_})) "
-                            f"WHEN ({s_}) < 0 AND ({b}) < ({a}) "
-                            f"THEN sequence(({a}), ({b}) + 1, ({s_})) "
-                            f"ELSE {empty} END)"
-                        )
+                    name = unquote_name(code[0][1])
+                    val = _sql(
+                        c.inner, s_ + code[2][0] + 1, e_
                     )
-                    i = close + 1
-                    continue
-                if low == "log" and len(args) == 1:
-                    # DuckDB single-arg log() is BASE-10; Spark's is ln
-                    a = _sql(inner, *args[0])
-                    out.extend(_toks(f"log10({a})"))
-                    i = close + 1
-                    continue
-                if low in ("trim", "ltrim", "rtrim") and len(args) == 2:
-                    # DuckDB: (source, trim_chars); Spark's 2-arg
-                    # ltrim/rtrim take (trim_chars, source) and 2-arg
-                    # trim does too — btrim has DuckDB's order
-                    a, b = (_sql(inner, s, e) for s, e in args)
-                    if low == "trim":
-                        out.extend(_toks(f"btrim({a}, {b})"))
-                    else:
-                        out.extend(_toks(f"{low}({b}, {a})"))
-                    i = close + 1
-                    continue
-                if low == "list_reverse_sort" and len(args) == 1:
-                    a = _sql(inner, *args[0])
-                    out.extend(_toks(f"sort_array({a}, false)"))
-                    i = close + 1
-                    continue
-                if low == "sign" and len(args) == 1:
-                    # DuckDB sign() is TINYINT; Spark returns double
-                    a = _sql(inner, *args[0])
-                    out.extend(_toks(f"CAST(sign({a}) AS TINYINT)"))
-                    i = close + 1
-                    continue
-                if low in ("avg", "mean") and len(args) == 1:
-                    # DuckDB avg() is ALWAYS DOUBLE; Spark's decimal avg
-                    # keeps scale+4 and truncates. Cast the argument
-                    # (after DISTINCT, if any) unless it is an interval.
-                    arg_sql = _sql(inner, *args[0]).strip()
-                    distinct = ""
-                    if arg_sql.upper().startswith("DISTINCT "):
-                        distinct, arg_sql = "DISTINCT ", arg_sql[9:]
-                    if "interval" not in arg_sql.lower():
-                        out.extend(
-                            _toks(
-                                f"avg({distinct}CAST(({arg_sql}) AS DOUBLE))"
-                            )
-                        )
-                        i = close + 1
+                    pairs.append((name, val))
+                else:
+                    return None
+            return pairs
+        base_sql = c.args[0].strip()
+        pairs = _named_pairs(c.spans[1:])
+        if (
+            pairs
+            and base_sql.startswith("named_struct(")
+            and base_sql.endswith(")")
+        ):
+            base_inner = base_sql[len("named_struct("):-1]
+            added = ", ".join(
+                f"'{n}', ({v})" for n, v in pairs
+            )
+            sep = ", " if base_inner.strip() else ""
+            return (
+                f"named_struct({base_inner}{sep}"
+                f"{added})"
+            )
+        if pairs:
+            # a STRUCT-hinted plain column base: the
+            # published schema names its fields, so the
+            # splice works on dynamic columns too (an
+            # existing-name collision falls through to the
+            # loud unresolved-function error, like DuckDB's
+            # duplicate-entry error)
+            s_hint = _hinted_primary_type(
+                c.arg_toks(0)
+            )
+            flds = (
+                _struct_hint_fields(s_hint)
+                if s_hint is not None
+                else None
+            )
+            new_lower = {n.lower() for n, _ in pairs}
+            if flds is not None and not (
+                new_lower & {f.lower() for f in flds}
+            ):
+                spread = ", ".join(
+                    f"'{f}', ({base_sql}).`{f}`"
+                    for f in flds
+                )
+                added = ", ".join(
+                    f"'{n}', ({v})" for n, v in pairs
+                )
+                return f"named_struct({spread}, {added})"
+
+
+@_shim("count", "median")
+def _shim_over_window(c):
+    # window-context rewrites that must consume the trailing OVER
+    # clause
+    after = _next_code(c.tokens, c.close)
+    op_ = _next_code(c.tokens, after)
+    if not (
+        op_ < len(c.tokens)
+        and c.tokens[after].is_kw("OVER")
+        and c.tokens[op_].kind == "op"
+        and c.tokens[op_].text == "("
+    ):
+        return None
+    over_close = _matching_paren(c.tokens, op_)
+    over_sql = "".join(t.text for t in c.tokens[after : over_close + 1])
+    icode = [t for t in c.inner if t.kind not in ("ws", "comment")]
+    if c.name == "count" and icode and icode[0].is_kw("DISTINCT"):
+        # Spark has no DISTINCT window aggregates; a windowed
+        # collect_set IS the distinct multiset (NULLs excluded, like
+        # COUNT)
+        e = _sql(c.inner, 0, len(c.inner)).strip()
+        if e.upper().startswith("DISTINCT"):
+            e = e[len("DISTINCT"):].strip()
+        return f"size(collect_set({e}) {over_sql})", over_close + 1
+    if c.name == "median" and re.search(
+        r"(?i)\b(ORDER|ROWS|RANGE)\b", over_sql
+    ):
+        # Spark's percentile rejects ordered/framed windows; compose
+        # the exact median from a windowed collect_list (identical
+        # window expressions share one Window operator)
+        e = _sql(c.inner, 0, len(c.inner))
+        ch_mw = _parse_literal_decimal_chain(e)
+        if ch_mw is not None and not ch_mw[3] and ch_mw[1] <= 38:
+            # DECIMAL median is DuckDB's DISCRETE lower-middle
+            # (type-preserving), not the interpolating fold — reroute
+            # to the quantile_disc spelling; the late frame pass
+            # streams or folds it with the DECIMAL(w,s) result (r13)
+            return (
+                f"percentile_disc(0.5) WITHIN GROUP (ORDER BY {e}) "
+                f"{over_sql}"
+            ), over_close + 1
+        lst = (
+            f"sort_array(filter(collect_list({e}) "
+            f"{over_sql}, __v -> __v IS NOT NULL))"
+        )
+        return (
+            f"(CASE WHEN size({lst}) = 0 THEN "
+            f"CAST(NULL AS DOUBLE) ELSE "
+            f"(CAST(get({lst}, CAST((size({lst}) - 1) / 2 AS INT)) AS DOUBLE) + "
+            f"CAST(get({lst}, CAST(size({lst}) / 2 AS INT)) AS DOUBLE)) / 2 END)"
+        ), over_close + 1
+    return None
+
+
+@_shim("array_length")
+def _shim_array_length(c):
+    if len(c.args) == 2:
+        # 2-arg form takes a dimension; lists have exactly
+        # one (DuckDB errors on any other value)
+        a, d_ = c.args
+        return (
+            f"(CASE WHEN ({d_}) = 1 THEN size(({a})) "
+            f"ELSE CAST(raise_error('array_length: "
+            f"list has exactly one dimension') AS INT) "
+            f"END)"
+        )
+
+
+@_shim("list_where", "array_where")
+def _shim_list_where(c):
+    if len(c.args) == 2:
+        # mask selection keeping NULL ELEMENTS where the
+        # mask is true (list_where([1,NULL,3],[t,t,f]) =
+        # [1,NULL]) — a struct zip so NULL values survive
+        # the filter; zip_with pads a shorter mask with
+        # NULL = drop (DuckDB errors on length mismatch)
+        l_, m_ = c.args
+        return (
+            f"transform(filter(zip_with(({l_}), ({m_}), "
+            f"(__x, __m) -> struct(__x AS v, __m AS keep)), "
+            f"__s -> __s.keep), __s -> __s.v)"
+        )
+
+
+@_shim("mad")
+def _shim_mad(c):
+    if len(c.args) == 1:
+        # median absolute deviation: numerics cast to
+        # DOUBLE; temporals route through epoch micros and
+        # come back as a day-time interval (DuckDB returns
+        # INTERVAL there). The call name survives for the
+        # window and grouped lowerings that follow; any
+        # other call is lowered by the trailing
+        # _rewrite_mad_fallback_template pass.
+        a = c.args[0]
+        # DISTINCT qualifier hoists OUTSIDE the cast so the
+        # restructure/template can dedupe before the medians
+        a, mad_distinct = _split_distinct_prefix(a)
+        dq = "DISTINCT " if mad_distinct else ""
+        if _static_temporal_sql(a):
+            return (
+                f"make_dt_interval(0, 0, 0, "
+                f"mad({dq}CAST(unix_micros(CAST(({a}) AS "
+                f"TIMESTAMP_LTZ)) AS DOUBLE)) / 1000000.0D)"
+            )
+        else:
+            if _arg_domain(a).kind == "dec":
+                # statically-DECIMAL chain: keep the raw
+                # arg so the restructure/template/streaming
+                # passes can detect the truncating
+                # unscaled-integer domain and the
+                # DECIMAL(w,s) result type (r13;
+                # _mad_mode_and_wrap) — they add their own
+                # double casts over the unscaled values
+                return f"mad({dq}({a}))"
+            else:
+                return f"mad({dq}CAST(({a}) AS DOUBLE))"
+
+
+@_shim("substring_grapheme")
+def _shim_substring_grapheme(c):
+    if len(c.args) == 2:
+        # default length = to end of string (UDF is 3-arg)
+        a, b = c.args
+        return f"substring_grapheme({a}, {b}, 2147483647)"
+
+
+@_shim("decade", "century", "millennium")
+def _shim_decade(c):
+    if len(c.args) == 1:
+        # interval overload: years-derived bucket of a
+        # literal INTERVAL n UNIT (day-time units hold no
+        # years: decade(INTERVAL 3 DAY) = 0)
+        c0 = c.code(0)
+        if (
+            len(c0) == 3
+            and c0[0].is_kw("INTERVAL")
+            and c0[1].kind in ("number", "word")
+            and c0[1].text.isdigit()
+            and c0[2].kind == "word"
+        ):
+            months_per = {
+                "year": 12, "years": 12,
+                "month": 1, "months": 1,
+                "quarter": 3, "quarters": 3,
+                "decade": 120, "decades": 120,
+                "century": 1200, "centuries": 1200,
+                "millennium": 12000, "millennia": 12000,
+            }.get(c0[2].text.lower(), 0)
+            years = (int(c0[1].text) * months_per) // 12
+            div = {
+                "decade": 10, "century": 100,
+                "millennium": 1000,
+            }[c.name]
+            return f"CAST({years // div} AS BIGINT)"
+
+
+@_shim("timezone")
+def _shim_timezone(c):
+    if len(c.args) == 2:
+        # timezone(tz, ts): interpret the (naive) timestamp
+        # as tz-local and give the UTC instant — DuckDB's
+        # TIMESTAMPTZ rendered in this engine's UTC session
+        tz, ts = c.args
+        return f"to_utc_timestamp({ts}, {tz})"
+
+
+@_shim("timezone")
+def _shim_timezone_2(c):
+    if len(c.args) == 1:
+        # 1-arg form: the session's UTC offset in seconds
+        # (this engine's session timezone is UTC by design)
+        return "CAST(0 AS BIGINT)"
+
+
+@_shim("json_type")
+def _shim_json_type(c):
+    if len(c.args) == 1:
+        # leaf/container type names, matching DuckDB's set
+        # (verified: OBJECT/ARRAY/VARCHAR/BOOLEAN/NULL/
+        # BIGINT for -n, UBIGINT for +n, DOUBLE otherwise)
+        a = c.args[0]
+        t = f"trim(({a}))"
+        num = r"'^-?[0-9]+(\\.[0-9]+)?([eE][+-]?[0-9]+)?$'"
+        return (
+            f"(CASE WHEN ({a}) IS NULL THEN "
+            f"CAST(NULL AS STRING) "
+            f"WHEN {t} LIKE '{{%' THEN 'OBJECT' "
+            f"WHEN {t} LIKE '[%' THEN 'ARRAY' "
+            f"WHEN {t} LIKE '\"%' THEN 'VARCHAR' "
+            f"WHEN {t} IN ('true', 'false') THEN 'BOOLEAN' "
+            f"WHEN {t} = 'null' THEN 'NULL' "
+            f"WHEN {t} RLIKE '^-[0-9]+$' THEN 'BIGINT' "
+            f"WHEN {t} RLIKE '^[0-9]+$' THEN 'UBIGINT' "
+            f"WHEN {t} RLIKE {num} THEN 'DOUBLE' "
+            f"ELSE CAST(raise_error(concat("
+            f"'json_type: malformed JSON: ', {t})) "
+            f"AS STRING) END)"
+        )
+
+
+@_shim("bar")
+def _shim_bar(c):
+    if len(c.args) in (3, 4):
+        # DuckDB bar(): full blocks + floor-to-eighth partial,
+        # then right-pad with spaces to `width` BYTES (each
+        # block char is 3 bytes of UTF-8 — reproducing
+        # DuckDB's byte-based padding exactly)
+        x, lo_a, hi_a = c.args[:3]
+        width = c.args[3] if len(c.args) == 4 else "80"
+        # zero-width range: DuckDB renders full for x > max,
+        # empty otherwise (verified) — the nullif'd division
+        # would raise DIVIDE_BY_ZERO under ANSI
+        frac = (
+            f"coalesce((CAST(({x}) AS DOUBLE) - "
+            f"CAST(({lo_a}) AS DOUBLE)) / "
+            f"nullif(CAST(({hi_a}) AS DOUBLE) - "
+            f"CAST(({lo_a}) AS DOUBLE), 0), "
+            f"CASE WHEN CAST(({x}) AS DOUBLE) > "
+            f"CAST(({lo_a}) AS DOUBLE) THEN CAST(1 AS DOUBLE) "
+            f"ELSE CAST(0 AS DOUBLE) END)"
+        )
+        units = (
+            f"(least(greatest({frac}, CAST(0 AS DOUBLE)), "
+            f"CAST(1 AS DOUBLE)) * ({width}))"
+        )
+        full = f"CAST(floor({units}) AS INT)"
+        rem8 = f"CAST(floor(({units} - floor({units})) * 8) AS INT)"
+        nchars = f"({full} + (CASE WHEN {rem8} >= 1 THEN 1 ELSE 0 END))"
+        return (
+            f"concat(repeat('█', {full}), "
+            f"CASE WHEN {rem8} BETWEEN 1 AND 7 THEN "
+            "element_at(array('▏','▎','▍','▌','▋','▊','▉'), "
+            f"{rem8}) ELSE '' END, "
+            f"repeat(' ', greatest(0, CAST(({width}) AS INT)"
+            f" - 3 * {nchars})))"
+        )
+
+
+@_shim("arg_max", "arg_min", "argmax", "argmin")
+def _shim_arg_max(c):
+    if len(c.args) == 2:
+        # DuckDB skips rows whose VALUE argument is NULL
+        # (verified: arg_max over ('a',1),(NULL,5) = 'a');
+        # Spark max_by returns the NULL — mask the ordering
+        # key so those rows never win
+        a, b = c.args
+        fn2 = "max_by" if "max" in c.name else "min_by"
+        return (
+            f"{fn2}(({a}), CASE WHEN ({a}) IS NOT NULL "
+            f"THEN ({b}) END)"
+        )
+
+
+@_shim("generate_series")
+def _shim_generate_series(c):
+    if len(c.args) == 1:
+        # 1-arg form: 0..n inclusive
+        a = c.args[0]
+        return f"sequence(0, ({a}))"
+
+
+@_shim("greatest", "least")
+def _shim_greatest(c):
+    if len(c.args) == 1:
+        # 1-arg identity (Spark requires >= 2 args)
+        a = c.args[0]
+        return f"(({a}))"
+
+
+@_shim("array_reverse_sort")
+def _shim_array_reverse_sort(c):
+    if len(c.args) == 1:
+        a = c.args[0]
+        return f"sort_array(({a}), false)"
+
+
+@_shim("regexp_escape")
+def _shim_regexp_escape(c):
+    if len(c.args) == 1:
+        # DuckDB uses RE2 QuoteMeta: backslash before every
+        # non-[A-Za-z0-9_] character
+        a = c.args[0]
+        return (
+            f"regexp_replace(({a}), "
+            f"'([^A-Za-z0-9_])', '\\\\\\\\$1')"
+        )
+
+
+@_shim("parse_filename", "parse_dirpath", "parse_dirname")
+def _shim_parse_filename(c):
+    if len(c.args) in (1, 2):
+        p_ = c.args[0]
+        sep = "[/\\\\\\\\]"  # SQL literal -> regex [/\\]
+        if c.name == "parse_dirpath":
+            repl = (
+                f"regexp_extract(({p_}), '^(.*){sep}', 1)"
+            )
+        elif c.name == "parse_dirname":
+            repl = (
+                f"regexp_extract(({p_}), "
+                f"'^([^/\\\\\\\\]*){sep}', 1)"
+            )
+        else:
+            plain = (
+                f"regexp_extract(({p_}), "
+                f"'([^/\\\\\\\\]*)$', 1)"
+            )
+            if len(c.args) == 2:
+                trim = (
+                    f"regexp_extract(({p_}), "
+                    f"'([^/\\\\\\\\.]*)(\\\\.[^/\\\\\\\\]*)?$'"
+                    f", 1)"
+                )
+                b = c.args[1]
+                repl = (
+                    f"(CASE WHEN ({b}) THEN {trim} "
+                    f"ELSE {plain} END)"
+                )
+            else:
+                repl = plain
+        return repl
+
+
+@_shim("md5_number_lower", "md5_number_upper")
+def _shim_md5_number_lower(c):
+    if len(c.args) == 1:
+        # little-endian uint64 of md5 bytes 8..15 (lower) /
+        # 0..7 (upper), verified against DuckDB
+        a = c.args[0]
+        h = f"md5(({a}))"
+        start = 17 if c.name == "md5_number_lower" else 1
+        pairs = ", ".join(
+            f"substr({h}, {start + 2 * i}, 2)"
+            for i in reversed(range(8))
+        )
+        return (
+            f"CAST(conv(concat({pairs}), 16, 10) "
+            f"AS DECIMAL(20, 0))"
+        )
+
+
+@_shim("struct_extract")
+def _shim_struct_extract(c):
+    if len(c.args) == 2:
+        # literal field name -> dot access (Spark has no
+        # struct_extract function)
+        s_, f_code = c.args[0], c.code(1)
+        if len(f_code) == 1 and f_code[0].kind == "string":
+            fname2 = f_code[0].text[1:-1]
+            return f"(({s_}).`{fname2}`)"
+
+
+@_shim("map_extract")
+def _shim_map_extract(c):
+    if len(c.args) == 2:
+        # DuckDB returns a LIST: [value] on hit, [] on miss
+        m_, k_ = c.args
+        return (
+            f"filter(array(try_element_at(({m_}), ({k_}))), "
+            f"xx -> xx IS NOT NULL)"
+        )
+
+
+@_shim("count", "count_star")
+def _shim_count(c):
+    if len(c.inner) == 0:
+        # DuckDB count() / count_star() = count(*)
+        return "count(*)"
+
+
+@_shim("dayofweek", "weekday")
+def _shim_dayofweek(c):
+    if len(c.args) == 1:
+        # DuckDB: Sunday=0..Saturday=6 (both are aliases);
+        # Spark dayofweek: Sunday=1
+        a = c.args[0]
+        return f"(dayofweek(({a})) - 1)"
+
+
+@_shim(
+    "century", "decade", "millennium", "era", "isoyear", "julian",
+    "microsecond", "millisecond", "timezone_hour", "timezone_minute",
+    "epoch_ns",
+)
+def _shim_century(c):
+    if len(c.args) == 1:
+        a = c.args[0]
+        part_shims = {
+            "century": f"CAST(ceil(year(({a})) / 100.0) AS BIGINT)",
+            "decade": f"CAST(floor(year(({a})) / 10.0) AS BIGINT)",
+            "millennium": (
+                f"CAST(ceil(year(({a})) / 1000.0) AS BIGINT)"
+            ),
+            "era": (
+                f"(CASE WHEN year(({a})) > 0 THEN 1 ELSE 0 END)"
+            ),
+            # the Thursday of x's ISO week determines the
+            # year. This emission is FINAL Spark SQL (call
+            # shims do not reprocess their own output), so
+            # ``weekday`` is Spark's Monday=0 builtin and
+            # 3 - weekday is the Thursday offset directly
+            "isoyear": (
+                f"CAST(year(date_add(CAST(({a}) AS DATE), "
+                f"3 - weekday(({a})))) AS BIGINT)"
+            ),
+            # verified: julian(DATE '2024-03-05') = 2460375.0
+            # = unix_days + 2440588
+            "julian": (
+                f"(CAST(CAST(({a}) AS TIMESTAMP_LTZ) AS DOUBLE) "
+                f"/ 86400.0D + 2440588.0D)"
+            ),
+            # DuckDB: sub-MINUTE micro/milliseconds (incl.
+            # the seconds), e.g. 15123456 for :15.123456
+            "microsecond": (
+                f"CAST(unix_micros(CAST(({a}) AS TIMESTAMP_LTZ))"
+                f" % 60000000 AS BIGINT)"
+            ),
+            "millisecond": (
+                f"CAST(unix_micros(CAST(({a}) AS TIMESTAMP_LTZ))"
+                f" % 60000000 DIV 1000 AS BIGINT)"
+            ),
+            # session timezone is UTC by engine design
+            "timezone_hour": "CAST(0 AS BIGINT)",
+            "timezone_minute": "CAST(0 AS BIGINT)",
+            "epoch_ns": (
+                f"(unix_micros(CAST(({a}) AS TIMESTAMP_LTZ)) * 1000)"
+            ),
+        }
+        return part_shims[c.name]
+
+
+@_shim("make_timestamp", "make_timestamptz")
+def _shim_make_timestamp(c):
+    if len(c.args) == 1:
+        # 1-arg form: microseconds since epoch
+        a = c.args[0]
+        return f"timestamp_micros(CAST(({a}) AS BIGINT))"
+
+
+@_shim("to_timestamp")
+def _shim_to_timestamp(c):
+    if len(c.args) == 1:
+        # DuckDB to_timestamp(DOUBLE): seconds since epoch
+        a = c.args[0]
+        return f"timestamp_seconds(CAST(({a}) AS DOUBLE))"
+
+
+@_shim("ceil", "ceiling", "floor")
+def _shim_ceil(c):
+    if (
+        len(c.args) == 1
+        and not _plain_decimal_literal_arg(c.inner, c.spans[0])
+        and _static_numeric_type(
+            c.arg_toks(0)
+        ) not in ("decimal", "decimal0")
+        and c.start not in _values_spans(c.tokens)
+    ):
+        # DuckDB types ceil/floor of int/bigint/double as
+        # DOUBLE (ceil(5) = 5.0, ceil(1e300) = 1e300);
+        # Spark returns BIGINT, which renders differently
+        # ('5' vs '5.0' through format()/VARCHAR casts) and
+        # overflows past 2^63. Values at |x| >= 2^53 are
+        # already integral doubles — returned as-is, which
+        # also covers inf and avoids the BIGINT hop; the
+        # zero-window branch keeps IEEE -0.0 (ceil(-0.5) =
+        # -0.0 like DuckDB). Decimal LITERALS, fractional-
+        # literal arithmetic CHAINS (r9b, fuzz-found via
+        # round's twin), and plain column refs with a
+        # published DECIMAL schema hint keep Spark's native
+        # DECIMAL(p,0) ceil, which
+        # already matches DuckDB; an UNHINTED decimal
+        # column reference can't be seen lexically and
+        # takes the DOUBLE path (documented corner: its
+        # VARCHAR cast gains '.0').
+        a = c.args[0]
+        fn = "floor" if c.name == "floor" else "ceiling"
+        if (
+            c.in_py_udf
+            and len(a) > _BIND_THRESHOLD
+            and _render_static_type(
+                c.code(0)
+            ) == "double"
+        ):
+            # long statically-DOUBLE operand inside a
+            # Python-UDF span: the repeated CASE mentions
+            # it ~7x per nesting level — route through the
+            # __duck_fint twin (operand once, repr
+            # transport)
+            mode = "floor" if fn == "floor" else "ceil"
+            return (
+                f"CAST(__duck_fint(CAST(({a}) AS"
+                f" STRING), '{mode}') AS DOUBLE)"
+            )
+        if len(a) <= _BIND_THRESHOLD or c.in_py_udf:
+            # short operand: direct CASE stays inside
+            # whole-stage codegen (subexpression
+            # elimination dedupes the repeated cast)
+            cx = f"CAST(({a}) AS DOUBLE)"
+            if fn == "floor":
+                zwin = f"({cx} >= 0.0 AND {cx} < 1.0)"
+            else:
+                zwin = f"({cx} > -1.0 AND {cx} <= 0.0)"
+            return (
+                f"(CASE WHEN isnan({cx}) OR abs({cx})"
+                f" >= 9007199254740992.0 THEN {cx} "
+                f"WHEN {zwin} THEN {cx} * 0.0 "
+                f"ELSE CAST({fn}({cx}) AS DOUBLE) END)"
+            )
+        if fn == "floor":
+            zwin = "(__cl >= 0.0 AND __cl < 1.0)"
+        else:
+            zwin = "(__cl > -1.0 AND __cl <= 0.0)"
+        # long operand lambda-bound once: nested numeric
+        # rewrites stay linear in plan size
+        return (
+            f"(element_at(transform(array(CAST(({a}) "
+            f"AS DOUBLE)), __cl -> "
+            f"CASE WHEN isnan(__cl) OR abs(__cl) >= "
+            f"9007199254740992.0 THEN __cl "
+            f"WHEN {zwin} THEN __cl * 0.0 "
+            f"ELSE CAST({fn}(__cl) AS DOUBLE) END), 1))"
+        )
+
+
+@_shim("trunc")
+def _shim_trunc(c):
+    if len(c.args) == 1:
+        # 1-arg numeric trunc-toward-zero (Spark trunc is
+        # date-only); DOUBLE keeps DOUBLE type like DuckDB.
+        # DuckDB is type-PRESERVING here (trunc(5) = 5 INT,
+        # trunc(-4.7) = -4 DECIMAL(2,0), trunc(x::DOUBLE)
+        # DOUBLE): numeric literals dispatch statically —
+        # integers are identity, decimals truncate at
+        # translate time with DuckDB's DECIMAL(p,0) typing
+        # (p = digit count of the literal). Non-literal
+        # int/decimal-typed expressions can't be seen
+        # lexically and take the DOUBLE path (same
+        # documented corner as ceil/floor).
+        lit = _signed_plain_number_arg(c.inner, c.spans[0])
+        if lit is not None:
+            sign, text = lit
+            if "." not in text:
+                return f"({sign}{text})"
+            else:
+                p = len(text) - 1  # all digits, dot dropped
+                ip = text.split(".", 1)[0] or "0"
+                return f"CAST({sign}{ip} AS DECIMAL({p},0))"
+        chain = _static_numeric_type(
+            c.arg_toks(0)
+        )
+        if chain == "int":
+            # integer chain: trunc is the identity and
+            # DuckDB is type-preserving (trunc(7 + 3)
+            # renders '10', not the template's '10.0')
+            a = c.args[0]
+            return f"({a})"
+        if chain in ("decimal", "decimal0"):
+            # statically DECIMAL operand (r9b): floor/
+            # ceiling on a decimal is DECIMAL(p,0) in both
+            # engines — emit the core WITHOUT the typeof
+            # CASE, whose DOUBLE branch would coerce the
+            # result and lose the rendering ('100' vs
+            # '100.0')
+            a = c.args[0]
+            return (
+                f"(CASE WHEN ({a}) >= 0 THEN "
+                f"floor(({a})) ELSE ceiling(({a})) END)"
+            )
+        a = c.args[0]
+        if (
+            c.in_py_udf
+            and len(a) > _BIND_THRESHOLD
+            and _render_static_type(
+                c.code(0)
+            ) == "double"
+        ):
+            # span escape, same as ceil/floor above (~8
+            # mentions otherwise)
+            return (
+                f"CAST(__duck_fint(CAST(({a}) AS"
+                f" STRING), 'trunc') AS DOUBLE)"
+            )
+        # DOUBLE-branch guards (r10b, pre-existing bug):
+        # floor/ceiling return BIGINT, which a |x| >= 2^53
+        # double overflows (trunc(1e300) clamped to 2^63,
+        # inf/nan -> garbage); those magnitudes are already
+        # integral and pass through like DuckDB, and the
+        # |x| < 1 window keeps the IEEE sign of zero
+        # (trunc(-0.4) = -0.0)
+        if len(a) <= _BIND_THRESHOLD or c.in_py_udf:
+            cx = f"CAST(({a}) AS DOUBLE)"
+            core = (
+                f"(CASE WHEN ({a}) >= 0 THEN floor(({a})) "
+                f"ELSE ceiling(({a})) END)"
+            )
+            gcore = (
+                f"(CASE WHEN isnan({cx}) OR abs({cx}) >= "
+                f"9007199254740992.0 THEN {cx} "
+                f"WHEN {cx} > -1.0 AND {cx} < 1.0 "
+                f"THEN {cx} * 0.0 "
+                f"ELSE CAST((CASE WHEN {cx} >= 0 THEN "
+                f"floor({cx}) ELSE ceiling({cx}) END) "
+                f"AS DOUBLE) END)"
+            )
+            return (
+                f"(CASE WHEN typeof({a}) IN "
+                f"('double', 'float')"
+                f" THEN {gcore} "
+                f"ELSE {core} END)"
+            )
+        else:
+            # long operand bound once (the repeated-operand
+            # form is ~8 mentions); the mixed-branch CASE
+            # coerces to DOUBLE anyway, so forcing double
+            # here is type-identical
+            return (
+                f"(element_at(transform(array("
+                f"CAST(({a}) AS DOUBLE)), __tr -> "
+                "CASE WHEN isnan(__tr) OR abs(__tr) >= "
+                "9007199254740992.0 THEN __tr "
+                "WHEN __tr > -1.0 AND __tr < 1.0 "
+                "THEN __tr * 0.0 "
+                "WHEN __tr >= 0 THEN "
+                "CAST(floor(__tr) AS DOUBLE) "
+                "ELSE CAST(ceiling(__tr) AS DOUBLE) "
+                "END), 1))"
+            )
+
+
+@_shim("sem")
+def _shim_sem(c):
+    if len(c.args) == 1:
+        # standard error of the mean; DuckDB uses the
+        # POPULATION stddev over sqrt(n) (verified)
+        a = c.args[0]
+        return (
+            f"(stddev_pop(({a})) / "
+            f"nullif(sqrt(CAST(count(({a})) AS DOUBLE)), 0))"
+        )
+
+
+@_shim("signbit")
+def _shim_signbit(c):
+    if len(c.args) == 1:
+        # DuckDB signbit(-0.0) is false (verified), so a
+        # plain comparison is exact
+        a = c.args[0]
+        return f"(({a}) < 0)"
+
+
+@_shim("regexp_extract_all")
+def _shim_regexp_extract_all(c):
+    if len(c.args) == 2:
+        # DuckDB's 2-arg form returns full matches (group 0);
+        # Spark requires the index
+        a, b = c.args
+        return f"regexp_extract_all(({a}), ({b}), 0)"
+
+
+@_shim("json_valid")
+def _shim_json_valid(c):
+    if len(c.args) == 1:
+        a = c.args[0]
+        return (
+            f"(CASE WHEN ({a}) IS NULL THEN "
+            f"CAST(NULL AS BOOLEAN) "
+            f"ELSE get_json_object(({a}), '$') IS NOT NULL "
+            f"END)"
+        )
+
+
+@_shim("json_array_length")
+def _shim_json_array_length(c):
+    if len(c.args) == 1:
+        # DuckDB returns 0 for non-array JSON; Spark NULL
+        a = c.args[0]
+        return (
+            f"(CASE WHEN ({a}) IS NULL THEN "
+            f"CAST(NULL AS BIGINT) ELSE "
+            f"CAST(coalesce(json_array_length(({a})), 0) "
+            f"AS BIGINT) END)"
+        )
+
+
+@_shim("json_array")
+def _shim_json_array(c):
+    # constructor: compact rendering matches DuckDB for
+    # uniform element types (mixed types unify in Spark
+    # arrays — documented)
+    if len(c.inner) == 0:
+        return "'[]'"
+    else:
+        rendered = ", ".join(
+            c.args
+        )
+        return f"to_json(array({rendered}))"
+
+
+@_shim("json_object")
+def _shim_json_object(c):
+    if len(c.inner) == 0:
+        return "'{}'"
+    else:
+        rendered = ", ".join(
+            c.args
+        )
+        return f"to_json(map({rendered}))"
+
+
+@_shim(
+    "list_dot_product", "list_inner_product", "list_negative_dot_product",
+    "list_negative_inner_product", "list_cosine_similarity",
+    "list_cosine_distance", "list_distance",
+)
+def _shim_list_dot_product(c):
+    if len(c.args) == 2:
+        a, b = c.args
+
+        def _dot(u: str, v: str) -> str:
+            return (
+                f"aggregate(zip_with(({u}), ({v}), "
+                f"(xx, yy) -> CAST(xx AS DOUBLE) * yy), "
+                f"CAST(0 AS DOUBLE), (acc, vv) -> acc + vv)"
+            )
+
+        if c.name in ("list_dot_product", "list_inner_product"):
+            repl = _dot(a, b)
+        elif c.name in (
+            "list_negative_dot_product",
+            "list_negative_inner_product",
+        ):
+            repl = f"-({_dot(a, b)})"
+        elif c.name == "list_distance":
+            repl = (
+                f"sqrt(aggregate(zip_with(({a}), ({b}), "
+                f"(xx, yy) -> (CAST(xx AS DOUBLE) - yy) * "
+                f"(CAST(xx AS DOUBLE) - yy)), "
+                f"CAST(0 AS DOUBLE), (acc, vv) -> acc + vv))"
+            )
+        else:
+            cos = (
+                f"({_dot(a, b)} / nullif(sqrt({_dot(a, a)}) * "
+                f"sqrt({_dot(b, b)}), 0))"
+            )
+            repl = (
+                cos
+                if c.name == "list_cosine_similarity"
+                else f"(1.0D - {cos})"
+            )
+        return repl
+
+
+@_shim("list_select", "array_select")
+def _shim_list_select(c):
+    if len(c.args) == 2:
+        # 1-based index list selection
+        l_, idx = c.args
+        return (
+            f"transform(({idx}), ii -> "
+            f"element_at(({l_}), CAST(ii AS INT)))"
+        )
+
+
+@_shim("grade_up", "list_grade_up", "array_grade_up")
+def _shim_grade_up(c):
+    if len(c.args) == 1:
+        # 1-based indexes that would sort the list ascending
+        # (verified: grade_up([30,10,20]) = [2,3,1]); stable
+        # by original position via the (value, index) sort
+        a = c.args[0]
+        return (
+            f"transform(array_sort(zip_with(({a}), "
+            f"sequence(1, size(({a}))), "
+            f"(vv, ii) -> named_struct('v', vv, 'i', ii))), "
+            f"ss -> ss.i)"
+        )
+
+
+@_shim("get_bit")
+def _shim_get_bit(c):
+    if len(c.args) == 2:
+        # STRING-typed bitstrings (no BIT type in Spark);
+        # DuckDB indexes bits 0-based from the left
+        b_, ix = c.args
+        return (
+            f"CAST(substr(({b_}), CAST(({ix}) AS INT) + 1, 1)"
+            f" AS INT)"
+        )
+
+
+@_shim("set_bit")
+def _shim_set_bit(c):
+    if len(c.args) == 3:
+        b_, ix, v_ = c.args
+        return (
+            f"concat(substr(({b_}), 1, CAST(({ix}) AS INT)), "
+            f"CAST(({v_}) AS STRING), "
+            f"substr(({b_}), CAST(({ix}) AS INT) + 2))"
+        )
+
+
+@_shim("bit_position")
+def _shim_bit_position(c):
+    if len(c.args) == 2:
+        # bit_position(needle, haystack): 1-based, 0 if absent
+        sub, b_ = c.args
+        return f"instr(({b_}), ({sub}))"
+
+
+@_shim(
+    "to_years", "to_months", "to_quarters", "to_decades", "to_centuries",
+    "to_millennia", "to_weeks", "to_days", "to_hours", "to_minutes",
+    "to_seconds", "to_milliseconds", "to_microseconds",
+)
+def _shim_to_years(c):
+    if len(c.args) == 1:
+        a = c.args[0]
+        ai = f"CAST(({a}) AS INT)"
+        ad = f"CAST(({a}) AS DOUBLE)"
+        iv = {
+            "to_years": f"make_ym_interval({ai}, 0)",
+            "to_months": f"make_ym_interval(0, {ai})",
+            "to_quarters": f"make_ym_interval(0, {ai} * 3)",
+            "to_decades": f"make_ym_interval({ai} * 10, 0)",
+            "to_centuries": f"make_ym_interval({ai} * 100, 0)",
+            "to_millennia": f"make_ym_interval({ai} * 1000, 0)",
+            "to_weeks": f"make_dt_interval({ai} * 7)",
+            "to_days": f"make_dt_interval({ai})",
+            "to_hours": f"make_dt_interval(0, {ai})",
+            "to_minutes": f"make_dt_interval(0, 0, {ai})",
+            "to_seconds": f"make_dt_interval(0, 0, 0, {ad})",
+            "to_milliseconds": (
+                f"make_dt_interval(0, 0, 0, {ad} / 1000.0D)"
+            ),
+            "to_microseconds": (
+                f"make_dt_interval(0, 0, 0, {ad} / 1000000.0D)"
+            ),
+        }
+        return iv[c.name]
+
+
+@_shim("encode", "decode")
+def _shim_encode(c):
+    if len(c.args) == 1:
+        # DuckDB 1-arg encode(VARCHAR)->BLOB / decode(BLOB)
+        # ->VARCHAR; Spark's are 2-arg with a charset
+        a = c.args[0]
+        return f"{c.name}(({a}), 'UTF-8')"
+
+
+@_shim("format_bytes", "formatreadablesize", "formatreadabledecimalsize")
+def _shim_format_bytes(c):
+    if len(c.args) == 1:
+        # DuckDB: size units with ONE decimal TRUNCATED
+        # toward zero (format_bytes(1997) = '1.9 KiB',
+        # verified — 1.9502 does NOT round up); below one
+        # unit prints 'N byte[s]'; beyond the last unit
+        # stays there ('1024.0 PiB'). CAST-to-STRING of the
+        # 1-decimal double renders shortest form 'x.y'.
+        # formatReadableSize is the binary (KiB) alias;
+        # formatReadableDecimalSize is 1000-based kB/MB/...
+        x = c.args[0]
+        xd = f"CAST(({x}) AS DOUBLE)"
+        if c.name == "formatreadabledecimalsize":
+            base, logk = "1000", f"log10(abs({xd})) / 3"
+            units = "' kB', ' MB', ' GB', ' TB', ' PB'"
+        else:
+            base, logk = "1024", f"log2(abs({xd})) / 10"
+            units = "' KiB', ' MiB', ' GiB', ' TiB', ' PiB'"
+        k = f"least(CAST(floor({logk}) AS INT), 5)"
+        scaled = (
+            f"{xd} / power(CAST({base} AS DOUBLE), {k}) * 10"
+        )
+        q = (
+            f"(CAST((CASE WHEN {xd} >= 0 "
+            f"THEN floor({scaled}) "
+            f"ELSE ceiling({scaled}) END) AS DOUBLE) / 10)"
+        )
+        return (
+            f"(CASE WHEN ({x}) IS NULL THEN "
+            f"CAST(NULL AS STRING) "
+            f"WHEN abs(({x})) < {base} THEN "
+            f"concat(CAST(({x}) AS STRING), "
+            f"CASE WHEN abs(({x})) = 1 THEN ' byte' "
+            f"ELSE ' bytes' END) "
+            f"ELSE concat(CAST({q} AS STRING), "
+            f"element_at(array({units}), {k})) END)"
+        )
+
+
+@_shim("bitstring")
+def _shim_bitstring(c):
+    if len(c.args) == 2:
+        # DuckDB bitstring(s, len) zero-pads left to len
+        # (BIT type; string-compatible — '0...' compare is
+        # TRUE in DuckDB); shorter len errors, as there
+        s_, l_ = c.args
+        return (
+            f"(CASE WHEN ({l_}) < length({s_}) THEN "
+            f"CAST(raise_error('bitstring: Length must "
+            f"be equal or larger than input string') "
+            f"AS STRING) "
+            f"ELSE lpad(({s_}), ({l_}), '0') END)"
+        )
+
+
+@_shim("date_add")
+def _shim_date_add(c):
+    if len(c.args) == 2:
+        second = c.args[1]
+        if second.upper().startswith("INTERVAL"):
+            first = c.args[0]
+            return f"CAST((({first}) + {second}) AS TIMESTAMP)"
+
+
+@_shim("dayname", "monthname")
+def _shim_dayname(c):
+    if len(c.args) == 1:
+        fmt = "EEEE" if c.name == "dayname" else "MMMM"
+        return f"date_format({c.args[0]}, '{fmt}')"
+
+
+@_shim("age")
+def _shim_age(c):
+    # 1-arg age(x) = age(current_date::TIMESTAMP, x);
+    # both args cast so DATE columns reach the UDF as
+    # timestamps (the 2-arg UDF is session-registered)
+    if len(c.args) == 1:
+        return (
+            "age(CAST(current_date() AS TIMESTAMP), "
+            f"CAST(({c.args[0]}) AS TIMESTAMP))"
+        )
+    if len(c.args) == 2:
+        return (
+            f"age(CAST(({c.args[0]}) AS "
+            "TIMESTAMP), "
+            f"CAST(({c.args[1]}) AS "
+            "TIMESTAMP))"
+        )
+    return c.tokens[c.start : c.close + 1]
+
+
+@_shim("isodow")
+def _shim_isodow(c):
+    if len(c.args) == 1:
+        return f"(weekday({c.args[0]}) + 1)"
+
+
+@_shim("list_unique", "array_unique")
+def _shim_list_unique(c):
+    if len(c.args) == 1:
+        return f"size(array_distinct({c.args[0]}))"
+
+
+@_shim("map")
+def _shim_map(c):
+    if len(c.args) == 2:
+        # DuckDB's 2-arg map() is ALWAYS the
+        # (keys_list, values_list) form — rewrite
+        # unconditionally (list-typed column args
+        # included; a non-list arg fails analysis loudly,
+        # exactly like DuckDB's binder). Single-entry
+        # brace literals can't reach here: the brace
+        # rewrite emits the __brace_map sentinel.
+        a, b = c.args
+        return f"map_from_arrays({a}, {b})"
+
+
+@_shim("to_base")
+def _shim_to_base(c):
+    if len(c.args) == 2:
+        a, b = c.args
+        return f"conv({a}, 10, {b})"
+
+
+@_shim("list_reduce")
+def _shim_list_reduce(c):
+    if len(c.args) == 2:
+        # DuckDB has no init arg: seed with the first element
+        l, lam = c.args
+        return (
+            f"reduce(slice(({l}), 2, size(({l})) - 1), "
+            f"get(({l}), 0), {lam})"
+        )
+
+
+@_shim("read_parquet")
+def _shim_read_parquet(c):
+    if len(c.args) == 1:
+        # table function over one literal path -> Spark's
+        # direct-file query (reference in_tables_creator.py
+        # uses the same DuckDB form internally)
+        path_code = c.code(0)
+        if len(path_code) == 1 and path_code[0].kind == "string":
+            path = path_code[0].text[1:-1].replace("''", "'")
+            return "parquet.`" + path.replace("`", "``") + "`"
+
+
+@_shim("jaccard")
+def _shim_jaccard(c):
+    if len(c.args) == 2:
+        # DuckDB: Jaccard similarity of the character SETS
+        # (case-sensitive, duplicates ignored)
+        a, b = c.args
+        ca = f"array_distinct(split(({a}), ''))"
+        cb = f"array_distinct(split(({b}), ''))"
+        return (
+            f"(CAST(size(array_intersect({ca}, {cb})) AS DOUBLE)"
+            f" / CAST(size(array_union({ca}, {cb})) AS DOUBLE))"
+        )
+
+
+@_shim("hamming", "mismatches")
+def _shim_hamming(c):
+    if len(c.args) == 2:
+        # positional mismatch count; equal length enforced
+        # like DuckDB's Invalid Input error
+        a, b = c.args
+        return (
+            f"(CASE WHEN length({a}) <> length({b}) THEN "
+            f"CAST(raise_error('{c.name}: strings must be of "
+            f"equal length') AS BIGINT) ELSE "
+            f"CAST(size(filter(zip_with(split(({a}), ''), "
+            f"split(({b}), ''), (__x, __y) -> __x <> __y), "
+            f"__z -> __z)) AS BIGINT) END)"
+        )
+
+
+@_shim("regexp_split_to_table")
+def _shim_regexp_split_to_table(c):
+    if len(c.args) == 2:
+        a, b = c.args
+        return f"explode(split(({a}), ({b})))"
+
+
+@_shim("string_agg", "listagg", "group_concat")
+def _shim_string_agg_2(c):
+    if (
+        _order_at(c) is None
+        and len(c.args) in (1, 2)
+        and c.spans[0][1] > c.spans[0][0]
+    ):
+        # DuckDB string_agg/group_concat default to ','
+        # (Spark listagg defaults to ''); group_concat is
+        # a plain alias
+        rendered = c.args
+        sep = rendered[1] if len(rendered) == 2 else "','"
+        return f"listagg({rendered[0]}, {sep})"
+
+
+@_shim(
+    "list_aggregate", "list_aggr", "aggregate", "array_aggregate",
+    "array_aggr",
+)
+def _shim_list_aggregate(c):
+    if len(c.args) >= 2:
+        l = c.args[0]
+        fname_code = c.code(1)
+        if len(fname_code) == 1 and fname_code[0].kind == "string":
+            fname = fname_code[0].text[1:-1].lower()
+            repl = None
+            # DuckDB list_aggregate follows SQL aggregate
+            # semantics: NULL elements are skipped and an
+            # empty/all-NULL list yields NULL (not 0, and no
+            # division by zero for avg)
+            nn = (
+                f"filter(transform(({l}), v -> CAST(v AS "
+                f"DOUBLE)), v -> v IS NOT NULL)"
+            )
+            nn_sum = (
+                f"aggregate({nn}, CAST(0 AS DOUBLE), "
+                f"(a, x) -> a + x)"
+            )
+            if fname == "sum":
+                repl = (
+                    f"(CASE WHEN size({nn}) = 0 THEN "
+                    f"CAST(NULL AS DOUBLE) ELSE {nn_sum} END)"
+                )
+            elif fname in ("avg", "mean"):
+                repl = (
+                    f"(CASE WHEN size({nn}) = 0 THEN "
+                    f"CAST(NULL AS DOUBLE) ELSE "
+                    f"{nn_sum} / size({nn}) END)"
+                )
+            elif fname == "min":
+                repl = f"array_min(({l}))"
+            elif fname == "max":
+                repl = f"array_max(({l}))"
+            elif fname == "count":
+                repl = (
+                    f"CAST(size(filter(({l}), "
+                    f"v -> v IS NOT NULL)) AS BIGINT)"
+                )
+            elif fname == "first":
+                repl = f"get(({l}), 0)"
+            elif fname == "last":
+                repl = f"get(({l}), size(({l})) - 1)"
+            elif fname == "string_agg" and len(c.args) == 3:
+                sep = c.args[2]
+                repl = f"array_join(({l}), ({sep}))"
+            if repl is not None:
+                return repl
+
+
+@_shim("printf")
+def _shim_printf(c):
+    if len(c.args) >= 2:
+        # DuckDB printf returns NULL when ANY argument is
+        # NULL (r10b, pre-existing divergence: Spark's
+        # printf renders NULL args as text). Float
+        # directives additionally need a DOUBLE cast
+        # (r10c, fuzz-found): DuckDB's fmt printf accepts
+        # DECIMAL as float-family ('%.1f' on DECIMAL(5,4)
+        # renders '5.6') while Spark's Java formatter
+        # throws IllegalFormatConversionException on its
+        # own Decimal. Integer directives stay uncasted —
+        # both engines reject non-integer args loudly.
+        # Args bind ONCE in an outer lambda struct so
+        # volatile args (random(), nextval) cannot
+        # disagree between the NULL guard and the render
+        # (same rationale as the format() branch); inside
+        # a Python-UDF argument span the binding would
+        # defeat ExtractPythonUDFs, so that path keeps the
+        # repeated-operand form.
+        parts = c.args
+        fmt_code = c.code(0)
+        # directive k -> 'twin' (fmt-exact Python render,
+        # substituted as %s), 'double' (CAST AS DOUBLE:
+        # exotic float flags — '#' point forcing, %a hex —
+        # keep Java's close-enough render), or None
+        # (pass-through). Twin-eligible: f/F/e/E/g/G with
+        # flags in {-,+,space,0} and numeric width/prec.
+        # Non-literal format strings, '*' widths and
+        # '%n$' positionals keep the uncasted call.
+        plan = None
+        fmt_body = None
+        if len(fmt_code) == 1 and fmt_code[0].kind == "string":
+            fmt_body = fmt_code[0].text[1:-1]
+            specs = list(re.finditer(
+                r"%([-+ #0-9.$*']*)([a-zA-Z%])", fmt_body
+            ))
+            if not any(
+                "*" in m_.group(1) or "$" in m_.group(1)
+                for m_ in specs
+            ):
+                plan = []
+                for m_ in specs:
+                    fl, sp = m_.groups()
+                    if sp == "%":
                         continue
-                if (
-                    low in ("left", "right")
-                    and len(args) == 2
-                    and not _nonneg_int_literal(inner[args[1][0]: args[1][1]])
-                ):
-                    # DuckDB: negative n drops |n| chars from the other
-                    # end; Spark returns ''
-                    s, cnt = (_sql(inner, st, e) for st, e in args)
-                    if low == "left":
-                        out.extend(
-                            _toks(
-                                f"substring(({s}), 1, CASE WHEN ({cnt}) < 0 "
-                                f"THEN greatest(length({s}) + ({cnt}), 0) "
-                                f"ELSE ({cnt}) END)"
+                    if sp in "fFeEgG" and re.fullmatch(
+                        r"[-+ 0]*\d*(?:\.\d+)?", fl
+                    ):
+                        plan.append(("twin", m_))
+                    elif sp in "fFeEgGaA":
+                        plan.append(("double", m_))
+                    else:
+                        plan.append((None, m_))
+        bind = not c.in_py_udf
+        refs = (
+            [f"__pf.__g{k}" for k in range(len(parts))]
+            if bind
+            else parts
+        )
+        # rebuild the format string with twin directives
+        # replaced by a bare %s (the twin renders width,
+        # flags and precision itself)
+        if plan is not None and fmt_body is not None:
+            rebuilt = []
+            pos_ = 0
+            for kind_, m_ in plan:
+                if kind_ == "twin":
+                    rebuilt.append(fmt_body[pos_: m_.start()])
+                    rebuilt.append("%s")
+                    pos_ = m_.end()
+            rebuilt.append(fmt_body[pos_:])
+            fmt_arg = "'" + "".join(rebuilt) + "'"
+        else:
+            fmt_arg = f"({refs[0]})"
+
+        def _pf_slot(k: int, raw: str) -> str:
+            # value expression for struct slot k (raw arg,
+            # or the twin render of it — the twin is a
+            # Python UDF, so it must sit OUTSIDE the
+            # binding lambda's body; rendering in the slot
+            # keeps it in the lambda's INPUT, which
+            # ExtractPythonUDFs hoists cleanly)
+            if plan is None or not (
+                1 <= k <= len(plan)
+            ):
+                return f"({raw})"
+            kind_, m_ = plan[k - 1]
+            if kind_ == "twin":
+                return (
+                    f"__duck_printf('%{m_.group(1)}"
+                    f"{m_.group(2)}', CAST(CAST(({raw}) "
+                    "AS DOUBLE) AS STRING))"
+                )
+            if kind_ == "double":
+                return f"CAST(({raw}) AS DOUBLE)"
+            return f"({raw})"
+
+        if bind:
+            slots = [
+                _pf_slot(k, p) for k, p in enumerate(parts)
+            ]
+            call_args = [f"({r})" for r in refs[1:]]
+            guards = " OR ".join(
+                f"(({r}) IS NULL)" for r in refs
+            )
+            call = (
+                f"(CASE WHEN {guards} THEN "
+                f"CAST(NULL AS STRING) ELSE "
+                f"printf({fmt_arg}, "
+                f"{', '.join(call_args)}) END)"
+            )
+            struct = ", ".join(
+                f"'__g{k}', {s_}"
+                for k, s_ in enumerate(slots)
+            )
+            call = (
+                "(element_at(transform(array("
+                f"named_struct({struct})), "
+                f"__pf -> {call}), 1))"
+            )
+        else:
+            call_args = [
+                _pf_slot(k, p)
+                for k, p in enumerate(parts)
+            ][1:]
+            guards = " OR ".join(
+                f"(({p}) IS NULL)" for p in parts
+            )
+            call = (
+                f"(CASE WHEN {guards} THEN "
+                f"CAST(NULL AS STRING) ELSE "
+                f"printf({fmt_arg}, "
+                f"{', '.join(call_args)}) END)"
+            )
+        return call
+
+
+@_shim("format")
+def _shim_format(c):
+    if len(c.args) >= 1:
+        fmt_code = c.code(0)
+        if len(fmt_code) == 1 and fmt_code[0].kind == "string":
+            fmt = fmt_code[0].text[1:-1]
+            # fmtlib placeholders -> printf: {} and
+            # {:[width][.prec][dfsxoe]} (positional {n},
+            # fill/align, and locale {:,} forms are left
+            # unrewritten -> loud analysis error)
+            esc = (
+                fmt.replace("%", "%%")
+                .replace("{{", "\x00")
+                .replace("}}", "\x01")
+            )
+
+            parts_out = []
+            typs = []
+            bare_widths = []
+            pos = 0
+            fmt_ok = True
+            for m in _FMTLIB_PH_RE.finditer(esc):
+                rep = _fmtlib_placeholder(m.group(1))
+                if rep is None:
+                    fmt_ok = False
+                    break
+                parts_out.append(esc[pos: m.start()])
+                parts_out.append(rep[0])
+                typs.append((rep[1], rep[3]))
+                bare_widths.append(rep[2])
+                pos = m.end()
+            if fmt_ok:
+                parts_out.append(esc[pos:])
+                # Spark's %f/%e reject DECIMAL and %x/%o
+                # non-integral args — cast per placeholder
+                # (fmtlib coerces; positional alignment is
+                # 1:1 since {n} refs were rejected above)
+                arg_sqls = c.args[1:]
+                # bind every argument ONCE in an outer
+                # lambda struct (volatile args — random(),
+                # sequence values — must not evaluate twice
+                # and disagree between the NULL guard and
+                # the rendered value; expensive args must
+                # not compute twice). Inside a Python-UDF
+                # argument the binding would defeat
+                # ExtractPythonUDFs, so that path keeps the
+                # repeated-operand form.
+                bind_args = bool(arg_sqls) and not c.in_py_udf
+                arg_refs = (
+                    [
+                        f"__fmt.__g{k}"
+                        for k in range(len(arg_sqls))
+                    ]
+                    if bind_args
+                    else arg_sqls
+                )
+                casted = []
+                slot_exprs = list(arg_sqls)
+                for k_, (tp_, w_, a_) in enumerate(zip(
+                    typs, bare_widths, arg_refs
+                )):
+                    t_, expl_ = tp_
+                    if t_ == "q":
+                        # typeless {:W.P} (r10c): fmt's
+                        # 'general' float presentation
+                        # (probe-matrix-exact incl. the
+                        # zeros-capped-at-P and tie-keep
+                        # quirks) via the twin; strings/
+                        # dates stringify + truncate to P
+                        # chars, left-aligned; ints/bools
+                        # raise like DuckDB (row-level
+                        # where DuckDB raises at bind —
+                        # zero-row inputs stay silent).
+                        # typeof() is foldable, so
+                        # Catalyst prunes the dead
+                        # branches on typed columns.
+                        width_, prec_ = w_
+                        spec_ = (
+                            "{:" + width_ + "." + prec_ + "}"
+                        )
+                        pP = int(prec_)
+                        wN = int(width_ or 0)
+                        raw = (
+                            arg_sqls[k_] if bind_args else a_
+                        )
+                        tw_ = (
+                            f"__duck_printf('{spec_}', "
+                            f"CAST(({raw}) AS STRING))"
+                        )
+                        zfill = (
+                            width_.startswith("0")
+                            and len(width_) > 1
+                        )
+                        fill = "'0'" if zfill else "' '"
+                        if c.in_py_udf:
+                            tr0 = (
+                                "substring(CAST(("
+                                f"{raw}) AS STRING), 1, {pP})"
                             )
+                            trunc = tr0
+                            if wN:
+                                trunc = (
+                                    f"(CASE WHEN length({tr0})"
+                                    f" >= {wN} THEN {tr0} "
+                                    f"ELSE rpad({tr0}, {wN}, "
+                                    f"{fill}) END)"
+                                )
+                            str_path = trunc
+                        else:
+                            tr0 = f"substring(__fq.v, 1, {pP})"
+                            trunc = tr0
+                            if wN:
+                                trunc = (
+                                    f"(CASE WHEN length({tr0})"
+                                    f" >= {wN} THEN {tr0} "
+                                    f"ELSE rpad({tr0}, {wN}, "
+                                    f"{fill}) END)"
+                                )
+                            str_path = (
+                                "(element_at(transform(array("
+                                "named_struct('v', CAST(("
+                                f"{raw}) AS STRING))), "
+                                f"__fq -> {trunc}), 1))"
+                            )
+                        slot = (
+                            f"(CASE WHEN typeof(({raw})) IN "
+                            "('double', 'float') OR "
+                            f"typeof(({raw})) LIKE 'decimal%'"
+                            f" THEN {tw_} WHEN "
+                            f"typeof(({raw})) IN ('tinyint',"
+                            " 'smallint', 'int', 'bigint', "
+                            "'boolean') THEN raise_error("
+                            "'format: precision not allowed "
+                            "for this argument type') "
+                            f"ELSE {str_path} END)"
+                        )
+                        if bind_args:
+                            slot_exprs[k_] = slot
+                            casted.append(f"({a_})")
+                        else:
+                            casted.append(slot)
+                        continue
+                    if (
+                        expl_
+                        and t_ in ("f", "e")
+                        and w_ is None
+                    ):
+                        # explicit {:.Nf}/{:.Ne}: route
+                        # through the fmt-exact printf
+                        # twin (r10c — Java's Formatter
+                        # rounds the SHORTEST repr half-up
+                        # where fmt rounds the exact
+                        # value: {:.2f} of 1.005 is '1.00'
+                        # in DuckDB, '1.01' off Java) and
+                        # substitute a bare %s; the twin
+                        # renders width/precision itself
+                        # (fmt's {:8.2f} == printf %8.2f,
+                        # incl. the zero-fill inf quirk).
+                        # The twin is a Python UDF, so it
+                        # renders in the struct SLOT
+                        # (lambda input) in the bound
+                        # form, never in the lambda body.
+                        spec_ = parts_out[2 * k_ + 1]
+                        parts_out[2 * k_ + 1] = "%s"
+                        tw_ = (
+                            f"__duck_printf('{spec_}', "
+                            "CAST(CAST(("
+                            + arg_sqls[k_]
+                            + ") AS DOUBLE) AS STRING))"
+                        )
+                        if bind_args:
+                            slot_exprs[k_] = tw_
+                            casted.append(f"({a_})")
+                        else:
+                            casted.append(tw_)
+                        continue
+                    # fmtlib receives DECIMAL/DOUBLE args
+                    # as doubles, so {}/{:N} render them
+                    # shortest-round-trip with fmtlib's
+                    # decimal/scientific cutoffs (8.6400
+                    # -> '8.64', 1e-4 -> '0.0001', 1e16 ->
+                    # '1e+16'), not Java's formatting. The
+                    # arg is lambda-bound ONCE (nested
+                    # args stay linear in plan size), and
+                    # the double hop goes THROUGH the
+                    # string repr: CAST(v AS DOUBLE)
+                    # directly fails ANALYSIS for
+                    # date/timestamp args even in the
+                    # unreached branch, while
+                    # string->double analyzes for every
+                    # type and is value-identical for
+                    # decimals/doubles (both correctly
+                    # rounded)
+                    if c.in_py_udf:
+                        # inside a Python-UDF argument the
+                        # __fa lambda binding defeats
+                        # ExtractPythonUDFs (_PY_UDF_FNS):
+                        # repeat the operand and chain the
+                        # Python render twin. TRY_CAST —
+                        # extraction hoists UDF args past
+                        # the CASE guard, and a date arg's
+                        # string->double cast would raise.
+                        vsp = f"CAST(({a_}) AS STRING)"
+                        dec_p = (
+                            f"(CASE WHEN typeof(({a_})) "
+                            "LIKE 'decimal%' OR "
+                            f"typeof(({a_})) IN "
+                            "('double', 'float') THEN "
+                            "__duck_render(CAST(TRY_CAST("
+                            f"{vsp} AS DOUBLE) AS STRING)"
+                            ", 'double') "
+                            f"ELSE {vsp} END)"
+                        )
+                        if w_ is not None:
+                            num_t = (
+                                f"typeof(({a_})) IN "
+                                "('tinyint', 'smallint', "
+                                "'int', 'bigint', 'float',"
+                                " 'double') OR "
+                                f"typeof(({a_})) LIKE "
+                                "'decimal%'"
+                            )
+                            casted.append(
+                                "(CASE WHEN length("
+                                f"{dec_p}) >= {w_} THEN "
+                                f"{dec_p} WHEN {num_t} "
+                                f"THEN lpad({dec_p}, {w_},"
+                                " ' ') ELSE rpad("
+                                f"{dec_p}, {w_}, ' ') "
+                                "END)"
+                            )
+                        elif t_ == "s":
+                            casted.append(dec_p)
+                        elif t_ in ("f", "e"):
+                            casted.append(
+                                f"CAST(({a_}) AS DOUBLE)"
+                            )
+                        elif t_ in ("x", "o", "d"):
+                            casted.append(
+                                f"CAST(({a_}) AS BIGINT)"
+                            )
+                        else:
+                            casted.append(a_)
+                        continue
+                    vs = "CAST(__fa.v AS STRING)"
+                    # inlined core, not the __duck_fmt_repr
+                    # SQL function: a SQL-function call
+                    # cannot appear inside the __fa lambda
+                    fdbl = _shortest_double_core_sql(
+                        f"CAST(CAST({vs} AS DOUBLE) "
+                        "AS STRING)",
+                        -4, 15, yy=False,
+                    )
+                    dec_str = (
+                        "(CASE WHEN typeof(__fa.v) LIKE"
+                        " 'decimal%' OR typeof(__fa.v) IN"
+                        " ('double', 'float')"
+                        f" THEN {fdbl}"
+                        f" ELSE {vs} END)"
+                    )
+                    bound_pre = (
+                        "(element_at(transform(array("
+                        f"named_struct('v', ({a_}))), "
+                        "__fa -> "
+                    )
+                    if w_ is not None:
+                        # {:N}: fmtlib pads to a MINIMUM
+                        # width, RIGHT-aligning numeric
+                        # args and left-aligning everything
+                        # else (strings, booleans, dates/
+                        # timestamps — DuckDB stringifies
+                        # non-numeric args before fmt)
+                        body = (
+                            "element_at(transform(array("
+                            f"{dec_str}), __fs -> "
+                            f"CASE WHEN length(__fs) >= {w_}"
+                            " THEN __fs"
+                            " WHEN typeof(__fa.v) IN"
+                            " ('tinyint', 'smallint',"
+                            " 'int', 'bigint', 'float',"
+                            " 'double')"
+                            " OR typeof(__fa.v) LIKE"
+                            " 'decimal%'"
+                            f" THEN lpad(__fs, {w_}, ' ')"
+                            f" ELSE rpad(__fs, {w_}, ' ')"
+                            " END), 1)"
+                        )
+                        casted.append(
+                            bound_pre + body + "), 1))"
+                        )
+                    elif t_ == "s":
+                        casted.append(
+                            bound_pre + dec_str + "), 1))"
+                        )
+                    elif t_ in ("f", "e"):
+                        casted.append(
+                            f"CAST(({a_}) AS DOUBLE)"
+                        )
+                    elif t_ in ("x", "o", "d"):
+                        casted.append(
+                            f"CAST(({a_}) AS BIGINT)"
                         )
                     else:
-                        out.extend(
-                            _toks(
-                                f"(CASE WHEN ({cnt}) < 0 THEN "
-                                f"substring(({s}), -({cnt}) + 1) "
-                                f"ELSE substring(({s}), "
-                                f"greatest(length({s}) - ({cnt}) + 1, 1)) END)"
-                            )
-                        )
-                    i = close + 1
-                    continue
-                if low == "split_part" and len(args) == 3:
-                    # DuckDB split_part is never-NULL (r10c fuzz
-                    # find): NULL string/index and index 0 give '',
-                    # a NULL delimiter returns the string UNSPLIT,
-                    # and an EMPTY delimiter splits into characters
-                    # (split_part('a,b', '', -1) = 'b') — Spark
-                    # NULL-propagates, raises on 0, and treats ''
-                    # as no-split. try_element_at: OOB char index
-                    # must give '' under ANSI too.
-                    s, d, ix = (_sql(inner, st, e) for st, e in args)
-                    out.extend(
-                        _toks(
-                            f"(CASE WHEN ({s}) IS NULL OR ({ix}) IS "
-                            f"NULL OR ({ix}) = 0 THEN '' "
-                            f"WHEN ({d}) IS NULL THEN "
-                            f"CAST(({s}) AS STRING) "
-                            f"WHEN ({d}) = '' THEN coalesce("
-                            f"try_element_at(split(CAST(({s}) AS "
-                            f"STRING), ''), CAST(({ix}) AS INT)), '') "
-                            f"ELSE split_part(CAST(({s}) AS STRING), "
-                            f"({d}), ({ix})) END)"
-                        )
+                        casted.append(a_)
+                casted += arg_refs[len(typs):]
+                spark_fmt = (
+                    "".join(parts_out)
+                    .replace("\x00", "{")
+                    .replace("\x01", "}")
+                )
+                rest = ", ".join(casted)
+                tail = f", {rest}" if rest else ""
+                call = f"format_string('{spark_fmt}'{tail})"
+                if arg_sqls:
+                    # DuckDB format() is NULL on ANY null
+                    # argument; Java's format_string prints
+                    # 'null'. The guard tests the BOUND
+                    # values, so it cannot disagree with
+                    # what gets rendered.
+                    guard = " OR ".join(
+                        f"(({a}) IS NULL)" for a in arg_refs
                     )
-                    i = close + 1
-                    continue
-                if low in ("list_slice", "array_slice") and len(args) == 3:
-                    l, a, b = (_sql(inner, s, e) for s, e in args)
-                    out.extend(_toks(_slice_expr(f"({l})", a, b, False)))
-                    i = close + 1
-                    continue
-                if low == "list_has_all" and len(args) == 2:
-                    a, b = (_sql(inner, s, e) for s, e in args)
-                    out.extend(_toks(f"(size(array_except({b}, {a})) = 0)"))
-                    i = close + 1
-                    continue
-                if low in ("list_sum", "list_avg") and len(args) == 1:
-                    # DOUBLE accumulator: element types (int/decimal/
-                    # float) all widen cleanly; ANSI rejects a
-                    # type-growing decimal accumulator otherwise
-                    l = _sql(inner, *args[0])
-                    agg = (
-                        f"aggregate(transform(({l}), v -> CAST(v AS DOUBLE)), "
-                        "CAST(0 AS DOUBLE), (a, x) -> a + x)"
+                    call = (
+                        f"(CASE WHEN {guard} THEN "
+                        f"CAST(NULL AS STRING) ELSE {call} "
+                        "END)"
                     )
-                    if low == "list_avg":
-                        agg = f"({agg} / size(({l})))"
-                    out.extend(_toks(agg))
-                    i = close + 1
-                    continue
-                if low == "struct_pack":
-                    fields = []
-                    for s, e in args:
-                        seg = inner[s:e]
-                        # ':=' arrives as two op tokens ':' '='
-                        colons = _top_level_positions(
-                            seg, 0, len(seg),
-                            lambda t: t.kind == "op" and t.text == ":",
-                        )
-                        w = None
-                        for c in colons:
-                            nc = _next_code(seg, c)
-                            if nc < len(seg) and seg[nc].text == "=":
-                                w = (c, nc)
-                                break
-                        if w is None:
-                            fields = None
+                if bind_args:
+                    struct = ", ".join(
+                        f"'__g{k}', ({a})"
+                        for k, a in enumerate(slot_exprs)
+                    )
+                    call = (
+                        "(element_at(transform(array("
+                        f"named_struct({struct})), "
+                        f"__fmt -> {call}), 1))"
+                    )
+                return call
+
+
+@_shim(
+    "json_extract", "json_extract_path", "json_extract_string",
+    "json_extract_path_text",
+)
+def _shim_json_extract(c):
+    if len(c.args) == 2:
+        # text variants map to get_json_object; the
+        # JSON-returning variants re-quote string leaves
+        # via a variant type probe (see _json_get_sql)
+        s_, p_ = c.args
+        p_code = c.code(1)
+        if len(p_code) == 1 and p_code[0].kind == "string":
+            p_ = _encode_spark_string(
+                _json_path_literal(
+                    _decode_spark_string(p_code[0])
+                )
+            ).text
+        elif (
+            len(p_code) == 1
+            and p_code[0].kind in ("number", "word")
+            and p_code[0].text.isdigit()
+        ):
+            # integer path = array index
+            p_ = f"'$[{p_code[0].text}]'"
+        elif (
+            p_code
+            and p_code[0].kind == "word"
+            and p_code[0].text.lower() == "array"
+        ):
+            # DuckDB list-of-paths form: one extraction per
+            # path, returned as a list (paths normalized to
+            # $-style at runtime)
+            norm = ("CASE WHEN substr(pp, 1, 1) = '$' "
+                    "THEN pp ELSE concat('$.', pp) END")
+            if c.name in ("json_extract", "json_extract_path"):
+                body = _json_get_sql(
+                    f"({s_})", norm, allow_udf=False,
+                    py_udf_ctx=c.in_py_udf,
+                )
+            else:
+                body = f"get_json_object(({s_}), {norm})"
+            return f"transform(({p_}), pp -> {body})"
+        if c.name in ("json_extract", "json_extract_path"):
+            return _json_get_sql(
+                f"({s_})", p_, py_udf_ctx=c.in_py_udf
+            )
+        else:
+            return f"get_json_object({s_}, {p_})"
+
+
+@_shim("unicode")
+def _shim_unicode(c):
+    if len(c.args) == 1:
+        # codepoint of the first char; '' is -1 in DuckDB
+        a = c.args[0]
+        return (
+            f"(CASE WHEN ({a}) = '' THEN -1 "
+            f"ELSE ascii({a}) END)"
+        )
+
+
+@_shim("xor")
+def _shim_xor(c):
+    if len(c.args) == 2:
+        # DuckDB xor() function (its ^ is power); Spark ^ IS
+        # xor — safe here because the power pass already ran
+        a, b = c.args
+        return f"(({a}) ^ ({b}))"
+
+
+@_shim("even")
+def _shim_even(c):
+    if len(c.args) == 1:
+        # round away from zero to the next even number
+        a = c.args[0]
+        return (
+            f"(sign(CAST(({a}) AS DOUBLE)) * "
+            f"ceil(abs(CAST(({a}) AS DOUBLE)) / 2) * 2)"
+        )
+
+
+@_shim("isnan", "isinf", "isfinite")
+def _shim_isnan(c):
+    if len(c.args) == 1:
+        # DuckDB returns NULL for NULL input (Spark isnan
+        # gives false); isinf/isfinite have no Spark builtin
+        a = c.args[0]
+        if c.name != "isnan" and _static_temporal_sql(a):
+            # temporal overload: Spark has no infinite
+            # dates/timestamps, so every non-NULL value is
+            # finite (static dispatch — the numeric CAST
+            # below would fail Spark analysis on temporals)
+            lit = "TRUE" if c.name == "isfinite" else "FALSE"
+            return (
+                f"(CASE WHEN ({a}) IS NULL THEN "
+                f"CAST(NULL AS BOOLEAN) ELSE {lit} END)"
+            )
+        d = f"CAST(({a}) AS DOUBLE)"
+        inf = "CAST('Infinity' AS DOUBLE)"
+        if c.name == "isnan":
+            body = f"isnan({d})"
+        elif c.name == "isinf":
+            body = f"abs({d}) = {inf}"
+        else:
+            body = f"(NOT isnan({d}) AND abs({d}) <> {inf})"
+        return (
+            f"(CASE WHEN ({a}) IS NULL "
+            f"THEN CAST(NULL AS BOOLEAN) ELSE {body} END)"
+        )
+
+
+@_shim("sha256")
+def _shim_sha256(c):
+    if len(c.args) == 1:
+        a = c.args[0]
+        return f"sha2({a}, 256)"
+
+
+@_shim("list_prepend")
+def _shim_list_prepend(c):
+    if len(c.args) == 2:
+        # DuckDB: (element, list); Spark array_prepend:
+        # (list, element)
+        e_, l_ = c.args
+        return f"array_prepend({l_}, {e_})"
+
+
+@_shim("levenshtein", "editdist3")
+def _shim_levenshtein(c):
+    if len(c.args) == 2:
+        # DuckDB levenshtein runs over UTF-8 BYTES; Spark's
+        # builtin is codepoint-based. Identical for ASCII, so
+        # dispatch: builtin when both sides are pure ASCII
+        # (octet length == char length), byte-level pandas
+        # UDF otherwise.
+        a, b = c.args
+        return (
+            f"(CASE WHEN octet_length({a}) = length({a}) "
+            f"AND octet_length({b}) = length({b}) "
+            f"THEN CAST(levenshtein({a}, {b}) AS BIGINT) "
+            f"ELSE levenshtein_bytes({a}, {b}) END)"
+        )
+
+
+@_shim("range")
+def _shim_range(c):
+    if (
+        len(c.args) in (1, 2, 3)
+        and not (
+            c.prev is not None
+            and c.prev.kind == "word"
+            and c.prev.upper in ("FROM", "JOIN")
+        )
+    ):
+        # scalar range(): EXCLUSIVE end (generate_series is
+        # the inclusive one); empty when the window is empty
+        # instead of Spark sequence()'s auto-negative step
+        vals = c.args
+        if len(vals) == 1:
+            a, b, s_ = "0", vals[0], "1"
+        elif len(vals) == 2:
+            (a, b), s_ = vals, "1"
+        else:
+            a, b, s_ = vals
+        empty = f"slice(sequence(({a}), ({a})), 1, 0)"
+        return (
+            f"(CASE WHEN ({s_}) > 0 AND ({b}) > ({a}) "
+            f"THEN sequence(({a}), ({b}) - 1, ({s_})) "
+            f"WHEN ({s_}) < 0 AND ({b}) < ({a}) "
+            f"THEN sequence(({a}), ({b}) + 1, ({s_})) "
+            f"ELSE {empty} END)"
+        )
+
+
+@_shim("log")
+def _shim_log(c):
+    if len(c.args) == 1:
+        # DuckDB single-arg log() is BASE-10; Spark's is ln
+        a = c.args[0]
+        return f"log10({a})"
+
+
+@_shim("trim", "ltrim", "rtrim")
+def _shim_trim(c):
+    if len(c.args) == 2:
+        # DuckDB: (source, trim_chars); Spark's 2-arg
+        # ltrim/rtrim take (trim_chars, source) and 2-arg
+        # trim does too — btrim has DuckDB's order
+        a, b = c.args
+        if c.name == "trim":
+            return f"btrim({a}, {b})"
+        else:
+            return f"{c.name}({b}, {a})"
+
+
+@_shim("list_reverse_sort")
+def _shim_list_reverse_sort(c):
+    if len(c.args) == 1:
+        a = c.args[0]
+        return f"sort_array({a}, false)"
+
+
+@_shim("sign")
+def _shim_sign(c):
+    if len(c.args) == 1:
+        # DuckDB sign() is TINYINT; Spark returns double
+        a = c.args[0]
+        return f"CAST(sign({a}) AS TINYINT)"
+
+
+@_shim("avg", "mean")
+def _shim_avg(c):
+    if len(c.args) == 1:
+        # DuckDB avg() is ALWAYS DOUBLE; Spark's decimal avg
+        # keeps scale+4 and truncates. Cast the argument
+        # (after DISTINCT, if any) unless it is an interval.
+        arg_sql = c.args[0].strip()
+        distinct = ""
+        if arg_sql.upper().startswith("DISTINCT "):
+            distinct, arg_sql = "DISTINCT ", arg_sql[9:]
+        if "interval" not in arg_sql.lower():
+            return f"avg({distinct}CAST(({arg_sql}) AS DOUBLE))"
+
+
+@_shim("left", "right")
+def _shim_left(c):
+    if (
+        len(c.args) == 2
+        and not _nonneg_int_literal(c.arg_toks(1))
+    ):
+        # DuckDB: negative n drops |n| chars from the other
+        # end; Spark returns ''
+        s, cnt = c.args
+        if c.name == "left":
+            return (
+                f"substring(({s}), 1, CASE WHEN ({cnt}) < 0 "
+                f"THEN greatest(length({s}) + ({cnt}), 0) "
+                f"ELSE ({cnt}) END)"
+            )
+        else:
+            return (
+                f"(CASE WHEN ({cnt}) < 0 THEN "
+                f"substring(({s}), -({cnt}) + 1) "
+                f"ELSE substring(({s}), "
+                f"greatest(length({s}) - ({cnt}) + 1, 1)) END)"
+            )
+
+
+@_shim("split_part")
+def _shim_split_part(c):
+    if len(c.args) == 3:
+        # DuckDB split_part is never-NULL (r10c fuzz
+        # find): NULL string/index and index 0 give '',
+        # a NULL delimiter returns the string UNSPLIT,
+        # and an EMPTY delimiter splits into characters
+        # (split_part('a,b', '', -1) = 'b') — Spark
+        # NULL-propagates, raises on 0, and treats ''
+        # as no-split. try_element_at: OOB char index
+        # must give '' under ANSI too.
+        s, d, ix = c.args
+        return (
+            f"(CASE WHEN ({s}) IS NULL OR ({ix}) IS "
+            f"NULL OR ({ix}) = 0 THEN '' "
+            f"WHEN ({d}) IS NULL THEN "
+            f"CAST(({s}) AS STRING) "
+            f"WHEN ({d}) = '' THEN coalesce("
+            f"try_element_at(split(CAST(({s}) AS "
+            f"STRING), ''), CAST(({ix}) AS INT)), '') "
+            f"ELSE split_part(CAST(({s}) AS STRING), "
+            f"({d}), ({ix})) END)"
+        )
+
+
+@_shim("list_slice", "array_slice")
+def _shim_list_slice(c):
+    if len(c.args) == 3:
+        l, a, b = c.args
+        return _slice_expr(f"({l})", a, b, False)
+
+
+@_shim("list_has_all")
+def _shim_list_has_all(c):
+    if len(c.args) == 2:
+        a, b = c.args
+        return f"(size(array_except({b}, {a})) = 0)"
+
+
+@_shim("list_sum", "list_avg")
+def _shim_list_sum(c):
+    if len(c.args) == 1:
+        # DOUBLE accumulator: element types (int/decimal/
+        # float) all widen cleanly; ANSI rejects a
+        # type-growing decimal accumulator otherwise
+        l = c.args[0]
+        agg = (
+            f"aggregate(transform(({l}), v -> CAST(v AS DOUBLE)), "
+            "CAST(0 AS DOUBLE), (a, x) -> a + x)"
+        )
+        if c.name == "list_avg":
+            agg = f"({agg} / size(({l})))"
+        return agg
+
+
+@_shim("struct_pack")
+def _shim_struct_pack(c):
+    fields = []
+    for s, e in c.spans:
+        seg = c.inner[s:e]
+        # ':=' arrives as two op tokens ':' '='
+        colons = _top_level_positions(
+            seg, 0, len(seg),
+            lambda t: t.kind == "op" and t.text == ":",
+        )
+        w = None
+        for cp in colons:
+            nc = _next_code(seg, cp)
+            if nc < len(seg) and seg[nc].text == "=":
+                w = (cp, nc)
+                break
+        if w is None:
+            fields = None
+            break
+        name = _sql(seg, 0, w[0])
+        val = _sql(seg, w[1] + 1, len(seg))
+        fields.append(f"'{name}', {val}")
+    if fields is not None:
+        return f"named_struct({', '.join(fields)})"
+
+
+@_shim("like_escape", "ilike_escape", "not_like_escape", "not_ilike_escape")
+def _shim_like_escape(c):
+    if len(c.args) == 3:
+        a, b, esc = c.args
+        if "ilike" in c.name:
+            a, b = f"lower({a})", f"lower({b})"
+        neg = "NOT " if c.name.startswith("not_") else ""
+        return f"({neg}{a} LIKE {b} ESCAPE {esc})"
+
+
+@_shim()
+def _shim_nulls_hoist(c):
+    # DuckDB puts IGNORE/RESPECT NULLS inside the call parens; Spark
+    # wants it after them: fn(x IGNORE NULLS) -> fn(x) IGNORE NULLS
+    code = [j for j, t in enumerate(c.inner) if t.kind not in ("ws", "comment")]
+    if (
+        len(code) >= 2
+        and c.inner[code[-1]].is_kw("NULLS")
+        and c.inner[code[-2]].is_kw("IGNORE", "RESPECT")
+    ):
+        kw = c.inner[code[-2]].upper
+        return (
+            c.tokens[c.start : c.p_open + 1]
+            + c.inner[: code[-2]]
+            + _toks(f") {kw} NULLS")
+        )
+    return None
+
+
+@_shim("time_bucket")
+def _shim_time_bucket(c):
+    if len(c.args) == 2:
+        first = c.args[0].upper().split()
+        ts = c.args[1]
+        # literal INTERVAL n UNIT only
+        if len(first) == 3 and first[0] == "INTERVAL" and first[1].isdigit():
+            n_units, unit = int(first[1]), first[2].rstrip("S")
+            secs = {
+                "SECOND": 1, "MINUTE": 60, "HOUR": 3600,
+                "DAY": 86400, "WEEK": 604800,
+            }.get(unit)
+            if secs is not None:
+                w = n_units * secs
+                o = 946857600  # 2000-01-03 UTC, the
+                # TimescaleDB/DuckDB bucket origin (Monday)
+                return (
+                    "CAST(timestamp_seconds(CAST(floor("
+                    f"(unix_timestamp(CAST(({ts}) AS TIMESTAMP)) - {o})"
+                    f" / {w}) AS BIGINT) * {w} + {o}) AS TIMESTAMP_NTZ)"
+                )
+            if n_units == 1 and unit in ("MONTH", "YEAR"):
+                return (
+                    f"CAST(date_trunc('{unit}', {ts}) "
+                    "AS TIMESTAMP_NTZ)"
+                )
+
+
+@_shim("yearweek")
+def _shim_yearweek(c):
+    # (to_days/to_hours/... are handled earlier via
+    # make_dt_interval/make_ym_interval — PySpark-fetchable
+    # interval types, unlike make_interval's CalendarInterval)
+    if len(c.args) == 1:
+        a = c.args[0]
+        return (
+            f"CAST(extract(YEAROFWEEK FROM ({a})) * 100 "
+            f"+ weekofyear({a}) AS BIGINT)"
+        )
+
+
+@_shim("median")
+def _shim_median(c):
+    if len(c.args) == 1:
+        # DuckDB median(DECIMAL) does NOT interpolate: it is
+        # quantile_disc(x, 0.5) — the LOWER middle element,
+        # type-preserving (probed: median of DECIMAL [1.00,
+        # 2.00] is 1.00 where quantile_cont gives 1.50).
+        # Statically DECIMAL args with width <= 15 take
+        # percentile_disc + an exact cast back; windowed
+        # calls and other types keep Spark's median
+        a0 = _sql(c.inner, 0, len(c.inner))
+        ch0 = _parse_literal_decimal_chain(a0)
+        after0 = _next_code(c.tokens, c.close)
+        filt0, f_end0 = _consume_filter_clause(c.tokens, after0)
+        after0b = (
+            _next_code(c.tokens, f_end0 - 1)
+            if filt0 is not None
+            else after0
+        )
+        end0 = f_end0 if filt0 is not None else c.close + 1
+        if (
+            ch0 is not None
+            and not ch0[3]
+            and ch0[1] <= 15
+            and not (
+                after0b < len(c.tokens) and c.tokens[after0b].is_kw("OVER")
+            )
+        ):
+            # a FILTER rider attaches to the INNER aggregate
+            # (consumed from the stream) — trailing it after
+            # the CAST is a parse error (r12 ADVICE)
+            return (
+                "CAST(percentile_disc(0.5) WITHIN GROUP "
+                f"(ORDER BY {a0}){filt0 or ''} AS "
+                f"DECIMAL({ch0[1]},{ch0[2]}))"
+            ), end0
+        if (
+            ch0 is not None
+            and not ch0[3]
+            and ch0[1] <= 38
+            and filt0 is None
+            and after0b < len(c.tokens)
+            and c.tokens[after0b].is_kw("OVER")
+        ):
+            # WINDOWED decimal median: DuckDB's is the
+            # discrete lower-middle (type-preserving), not
+            # Spark's interpolating median — reroute to
+            # the quantile_disc spelling and let the late
+            # frame pass stream/fold it (r13); the OVER
+            # tokens stay in the stream and attach
+            return (
+                "percentile_disc(0.5) WITHIN GROUP "
+                f"(ORDER BY {a0})"
+            )
+        if (
+            ch0 is not None
+            and not ch0[3]
+            and 15 < ch0[1] <= 38
+            and not (
+                after0b < len(c.tokens) and c.tokens[after0b].is_kw("OVER")
+            )
+        ):
+            # wide decimals: the double roundtrip through
+            # percentile_disc loses low digits — exact
+            # element select in the compiled core (median
+            # IS quantile_disc at 0.5, probed r12)
+            return _qdec_wide_agg_sql(
+                "qdisc", a0, "0.5", ch0[1], ch0[2], filt0 or ""
+            ), end0
+
+
+@_shim("percentile_cont")
+def _shim_percentile_cont(c):
+    if len(c.args) == 1:
+        # aggregate WITHIN GROUP over a statically DECIMAL
+        # ascending order expr: DuckDB quantizes the result
+        # to the input's DECIMAL(w, s) (see
+        # _quantile_cont_agg_sql); windowed forms keep
+        # their _rewrite_agg_window_frames path
+        j2 = _next_code(c.tokens, c.close)
+        if j2 < len(c.tokens) and c.tokens[j2].is_kw("WITHIN"):
+            g_kw = _next_code(c.tokens, j2)
+            g_open = _next_code(c.tokens, g_kw)
+            if (
+                g_kw < len(c.tokens)
+                and c.tokens[g_kw].is_kw("GROUP")
+                and g_open < len(c.tokens)
+                and c.tokens[g_open].kind == "op"
+                and c.tokens[g_open].text == "("
+            ):
+                g_close = _matching_paren(c.tokens, g_open)
+                after2 = _next_code(c.tokens, g_close)
+                filt2, f_end2 = _consume_filter_clause(
+                    c.tokens, after2
+                )
+                after2b = (
+                    _next_code(c.tokens, f_end2 - 1)
+                    if filt2 is not None
+                    else after2
+                )
+                windowed = (
+                    after2b < len(c.tokens)
+                    and c.tokens[after2b].is_kw("OVER")
+                )
+                if windowed:
+                    filt2 = None  # rider stays in the stream
+                gcode = [
+                    t
+                    for t in c.tokens[g_open + 1 : g_close]
+                    if t.kind not in ("ws", "comment")
+                ]
+                if (
+                    not windowed
+                    and len(gcode) >= 3
+                    and gcode[0].is_kw("ORDER")
+                    and gcode[1].is_kw("BY")
+                ):
+                    body = list(gcode[2:])
+                    asc = True
+                    while (
+                        body
+                        and body[-1].kind == "word"
+                        and body[-1].upper
+                        in ("ASC", "NULLS", "LAST", "FIRST", "DESC")
+                    ):
+                        if body[-1].upper in ("FIRST", "DESC"):
+                            asc = False
                             break
-                        name = _sql(seg, 0, w[0])
-                        val = _sql(seg, w[1] + 1, len(seg))
-                        fields.append(f"'{name}', {val}")
-                    if fields is not None:
-                        out.extend(_toks(f"named_struct({', '.join(fields)})"))
-                        i = close + 1
-                        continue
-                if low in (
-                    "like_escape", "ilike_escape",
-                    "not_like_escape", "not_ilike_escape",
-                ) and len(args) == 3:
-                    a, b, c = (_sql(inner, s, e) for s, e in args)
-                    if "ilike" in low:
-                        a, b = f"lower({a})", f"lower({b})"
-                    neg = "NOT " if low.startswith("not_") else ""
-                    out.extend(_toks(f"({neg}{a} LIKE {b} ESCAPE {c})"))
-                    i = close + 1
-                    continue
-                # DuckDB puts IGNORE/RESPECT NULLS inside the call parens;
-                # Spark wants it after them: fn(x IGNORE NULLS) -> fn(x) IGNORE NULLS
-                if len(inner) >= 2:
-                    tail_codes = [
-                        j for j in range(len(inner))
-                        if inner[j].kind not in ("ws", "comment")
-                    ]
-                    if (
-                        len(tail_codes) >= 2
-                        and inner[tail_codes[-1]].is_kw("NULLS")
-                        and inner[tail_codes[-2]].is_kw("IGNORE", "RESPECT")
-                    ):
-                        kw = inner[tail_codes[-2]].upper
-                        head = inner[: tail_codes[-2]]
-                        out.append(tok)
-                        out.extend(tokens[i + 1 : p_open + 1])
-                        out.extend(head)
-                        out.extend(_toks(f") {kw} NULLS"))
-                        i = close + 1
-                        continue
-                if low == "time_bucket" and len(args) == 2:
-                    first = _sql(inner, *args[0]).upper().split()
-                    ts = _sql(inner, *args[1])
-                    # literal INTERVAL n UNIT only
-                    if len(first) == 3 and first[0] == "INTERVAL" and first[1].isdigit():
-                        n_units, unit = int(first[1]), first[2].rstrip("S")
-                        secs = {
-                            "SECOND": 1, "MINUTE": 60, "HOUR": 3600,
-                            "DAY": 86400, "WEEK": 604800,
-                        }.get(unit)
-                        if secs is not None:
-                            w = n_units * secs
-                            o = 946857600  # 2000-01-03 UTC, the
-                            # TimescaleDB/DuckDB bucket origin (Monday)
-                            out.extend(
-                                _toks(
-                                    "CAST(timestamp_seconds(CAST(floor("
-                                    f"(unix_timestamp(CAST(({ts}) AS TIMESTAMP)) - {o})"
-                                    f" / {w}) AS BIGINT) * {w} + {o}) AS TIMESTAMP_NTZ)"
-                                )
-                            )
-                            i = close + 1
-                            continue
-                        if n_units == 1 and unit in ("MONTH", "YEAR"):
-                            out.extend(
-                                _toks(
-                                    f"CAST(date_trunc('{unit}', {ts}) "
-                                    "AS TIMESTAMP_NTZ)"
-                                )
-                            )
-                            i = close + 1
-                            continue
-                # (to_days/to_hours/... are handled earlier via
-                # make_dt_interval/make_ym_interval — PySpark-fetchable
-                # interval types, unlike make_interval's CalendarInterval)
-                if low == "yearweek" and len(args) == 1:
-                    a = _sql(inner, *args[0])
-                    out.extend(
-                        _toks(
-                            f"CAST(extract(YEAROFWEEK FROM ({a})) * 100 "
-                            f"+ weekofyear({a}) AS BIGINT)"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "median" and len(args) == 1:
-                    # DuckDB median(DECIMAL) does NOT interpolate: it is
-                    # quantile_disc(x, 0.5) — the LOWER middle element,
-                    # type-preserving (probed: median of DECIMAL [1.00,
-                    # 2.00] is 1.00 where quantile_cont gives 1.50).
-                    # Statically DECIMAL args with width <= 15 take
-                    # percentile_disc + an exact cast back; windowed
-                    # calls and other types keep Spark's median
-                    a0 = _sql(inner, ilo, ihi)
-                    ch0 = _parse_literal_decimal_chain(a0)
-                    after0 = _next_code(tokens, close)
-                    filt0, f_end0 = _consume_filter_clause(tokens, after0)
-                    after0b = (
-                        _next_code(tokens, f_end0 - 1)
-                        if filt0 is not None
-                        else after0
-                    )
-                    if (
-                        ch0 is not None
-                        and not ch0[3]
-                        and ch0[1] <= 15
-                        and not (
-                            after0b < n and tokens[after0b].is_kw("OVER")
-                        )
-                    ):
-                        # a FILTER rider attaches to the INNER aggregate
-                        # (consumed from the stream) — trailing it after
-                        # the CAST is a parse error (r12 ADVICE)
-                        out.extend(
-                            _toks(
-                                "CAST(percentile_disc(0.5) WITHIN GROUP "
-                                f"(ORDER BY {a0}){filt0 or ''} AS "
-                                f"DECIMAL({ch0[1]},{ch0[2]}))"
-                            )
-                        )
-                        i = f_end0 if filt0 is not None else close + 1
-                        continue
-                    if (
-                        ch0 is not None
-                        and not ch0[3]
-                        and ch0[1] <= 38
-                        and filt0 is None
-                        and after0b < n
-                        and tokens[after0b].is_kw("OVER")
-                    ):
-                        # WINDOWED decimal median: DuckDB's is the
-                        # discrete lower-middle (type-preserving), not
-                        # Spark's interpolating median — reroute to
-                        # the quantile_disc spelling and let the late
-                        # frame pass stream/fold it (r13); the OVER
-                        # tokens stay in the stream and attach
-                        out.extend(
-                            _toks(
-                                "percentile_disc(0.5) WITHIN GROUP "
-                                f"(ORDER BY {a0})"
-                            )
-                        )
-                        i = close + 1
-                        continue
-                    if (
-                        ch0 is not None
-                        and not ch0[3]
-                        and 15 < ch0[1] <= 38
-                        and not (
-                            after0b < n and tokens[after0b].is_kw("OVER")
-                        )
-                    ):
-                        # wide decimals: the double roundtrip through
-                        # percentile_disc loses low digits — exact
-                        # element select in the compiled core (median
-                        # IS quantile_disc at 0.5, probed r12)
-                        out.extend(
-                            _toks(
-                                _qdec_wide_agg_sql(
-                                    "qdisc",
-                                    a0,
-                                    "0.5",
-                                    ch0[1],
-                                    ch0[2],
-                                    filt0 or "",
-                                )
-                            )
-                        )
-                        i = f_end0 if filt0 is not None else close + 1
-                        continue
-                if low == "percentile_cont" and len(args) == 1:
-                    # aggregate WITHIN GROUP over a statically DECIMAL
-                    # ascending order expr: DuckDB quantizes the result
-                    # to the input's DECIMAL(w, s) (see
-                    # _quantile_cont_agg_sql); windowed forms keep
-                    # their _rewrite_agg_window_frames path
-                    j2 = _next_code(tokens, close)
-                    if j2 < n and tokens[j2].is_kw("WITHIN"):
-                        g_kw = _next_code(tokens, j2)
-                        g_open = _next_code(tokens, g_kw)
+                        body.pop()
+                    if asc and body:
+                        xsql = "".join(t.text for t in body)
+                        ch2 = _parse_literal_decimal_chain(xsql)
                         if (
-                            g_kw < n
-                            and tokens[g_kw].is_kw("GROUP")
-                            and g_open < n
-                            and tokens[g_open].kind == "op"
-                            and tokens[g_open].text == "("
+                            ch2 is not None
+                            and not ch2[3]
+                            and ch2[1] <= 38
                         ):
-                            g_close = _matching_paren(tokens, g_open)
-                            after2 = _next_code(tokens, g_close)
-                            filt2, f_end2 = _consume_filter_clause(
-                                tokens, after2
-                            )
-                            after2b = (
-                                _next_code(tokens, f_end2 - 1)
-                                if filt2 is not None
-                                else after2
-                            )
-                            windowed = (
-                                after2b < n
-                                and tokens[after2b].is_kw("OVER")
-                            )
-                            if windowed:
-                                filt2 = None  # rider stays in the stream
-                            gcode = [
-                                t
-                                for t in tokens[g_open + 1 : g_close]
-                                if t.kind not in ("ws", "comment")
-                            ]
-                            if (
-                                not windowed
-                                and len(gcode) >= 3
-                                and gcode[0].is_kw("ORDER")
-                                and gcode[1].is_kw("BY")
-                            ):
-                                body = list(gcode[2:])
-                                asc = True
-                                while (
-                                    body
-                                    and body[-1].kind == "word"
-                                    and body[-1].upper
-                                    in ("ASC", "NULLS", "LAST", "FIRST", "DESC")
-                                ):
-                                    if body[-1].upper in ("FIRST", "DESC"):
-                                        asc = False
-                                        break
-                                    body.pop()
-                                if asc and body:
-                                    xsql = "".join(t.text for t in body)
-                                    ch2 = _parse_literal_decimal_chain(xsql)
-                                    if (
-                                        ch2 is not None
-                                        and not ch2[3]
-                                        and ch2[1] <= 38
-                                    ):
-                                        qsql = _sql(inner, ilo, ihi)
-                                        out.extend(
-                                            _toks(
-                                                _quantile_cont_agg_sql(
-                                                    xsql,
-                                                    qsql,
-                                                    filt2 or "",
-                                                )
-                                            )
-                                        )
-                                        i = (
-                                            f_end2
-                                            if filt2 is not None
-                                            else g_close + 1
-                                        )
-                                        continue
-                if low == "quantile_cont" and len(args) == 2:
-                    a, b = (_sql(inner, s, e) for s, e in args)
-                    after_qc = _next_code(tokens, close)
-                    filt_qc, f_end_qc = _consume_filter_clause(
-                        tokens, after_qc
-                    )
-                    after_qc2 = (
-                        _next_code(tokens, f_end_qc - 1)
-                        if filt_qc is not None
-                        else after_qc
-                    )
-                    if after_qc2 < n and tokens[after_qc2].is_kw("OVER"):
-                        # windowed: the aggregate DECIMAL-quantize wrap
-                        # cannot carry an OVER suffix — keep the plain
-                        # percentile spelling for the window passes
-                        # (windowed DECIMAL quantization stays the
-                        # documented double-result corner); a FILTER
-                        # rider stays in the stream with it
-                        out.extend(_toks(f"percentile({a}, {b})"))
-                        i = close + 1
-                    else:
-                        # FILTER rider consumed and spliced onto the
-                        # inner aggregate (r12 ADVICE: trailing it
-                        # after the CAST wrap was a parse error)
-                        out.extend(
-                            _toks(
-                                _quantile_cont_agg_sql(
-                                    a, b, filt_qc or ""
-                                )
-                            )
-                        )
-                        i = (
-                            f_end_qc
-                            if filt_qc is not None
-                            else close + 1
-                        )
-                    continue
-                if low in ("quantile_disc", "quantile") and len(args) == 2:
-                    a, b = (_sql(inner, s, e) for s, e in args)
-                    base = f"percentile_disc({b}) WITHIN GROUP (ORDER BY {a})"
-                    after_qd = _next_code(tokens, close)
-                    filt_qd, f_end_qd = _consume_filter_clause(
-                        tokens, after_qd
-                    )
-                    after_qd2 = (
-                        _next_code(tokens, f_end_qd - 1)
-                        if filt_qd is not None
-                        else after_qd
-                    )
-                    windowed_qd = (
-                        after_qd2 < n and tokens[after_qd2].is_kw("OVER")
-                    )
-                    consumed_qd = filt_qd is not None and not windowed_qd
-                    if consumed_qd:
-                        # FILTER rider spliced onto the aggregate so the
-                        # CAST wrap below stays parseable (r12 ADVICE);
-                        # windowed FILTER forms stay in the stream
-                        base = f"{base}{filt_qd}"
-                    chd = _parse_literal_decimal_chain(a)
-                    try:
-                        float(b)
-                    except (TypeError, ValueError):
-                        chd = None  # list-valued quantile: no scalar cast
-                    if (
-                        not windowed_qd
-                        and chd is not None
-                        and not chd[3]
-                        and chd[1] <= 15
-                    ):
-                        # DuckDB keeps the DECIMAL(w,s) element type;
-                        # Spark's percentile_disc returns DOUBLE — the
-                        # selected element is exact below 2^53, so the
-                        # cast back is lossless. Windowed forms keep
-                        # the element-preserving frame fold.
-                        base = f"CAST({base} AS DECIMAL({chd[1]},{chd[2]}))"
-                    elif (
-                        not windowed_qd
-                        and chd is not None
-                        and not chd[3]
-                        and 15 < chd[1] <= 38
-                    ):
-                        # wide decimals: exact element select in the
-                        # compiled core (the double roundtrip loses
-                        # low digits above 2^53)
-                        qd_core, qd_dist = _split_distinct_prefix(a)
-                        base = _qdec_wide_agg_sql(
-                            "qdisc",
-                            qd_core,
-                            b,
-                            chd[1],
-                            chd[2],
-                            filt_qd if consumed_qd else "",
-                            qd_dist,
-                        )
-                    out.extend(_toks(base))
-                    i = f_end_qd if consumed_qd else close + 1
-                    continue
-                if low == "skewness" and len(args) == 1:
-                    # DuckDB reports the SAMPLE (bias-corrected) statistic,
-                    # Spark the population one: g1 * sqrt(n(n-1)) / (n-2).
-                    # nullif: n=2 gives a 0 denominator — DuckDB returns
-                    # NULL there; without it Spark's ANSI mode raises
-                    # DIVIDE_BY_ZERO when g1 is non-NULL (n=2, distinct
-                    # values -> g1 = 0.0)
-                    a = _sql(inner, *args[0])
-                    out.extend(
-                        _toks(
-                            f"(skewness({a}) * sqrt(CAST(count({a}) AS DOUBLE)"
-                            f" * (count({a}) - 1)) / nullif(count({a}) - 2, 0))"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "kurtosis" and len(args) == 1:
-                    # sample excess kurtosis from Spark's population
-                    # value; nullif: n<=3 zeroes the denominator where
-                    # DuckDB returns NULL (ANSI would raise)
-                    a = _sql(inner, *args[0])
-                    n_ = f"CAST(count({a}) AS DOUBLE)"
-                    out.extend(
-                        _toks(
-                            f"((({n_} - 1) / nullif(({n_} - 2) * ({n_} - 3)"
-                            f", 0)) * (({n_} + 1) * kurtosis({a}) + 6))"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "corr" and len(args) == 2:
-                    # Spark's corr raises DIVIDE_BY_ZERO (ANSI) when
-                    # either side has zero variance; DuckDB returns NULL.
-                    # A CASE can't guard an aggregate (aggregates are
-                    # computed before the projection), so corr is
-                    # recomposed from moments with a nullif'd ratio —
-                    # the same covar_pop / (σx σy) DuckDB evaluates.
-                    a, b = (_sql(inner, s, e) for s, e in args)
-                    out.extend(
-                        _toks(
-                            f"(covar_pop({a}, {b}) / "
-                            f"nullif(stddev_pop({a}) * stddev_pop({b}), 0))"
-                        )
-                    )
-                    i = close + 1
-                    continue
-                if low == "regexp_full_match" and len(args) == 2:
-                    a, b = (_sql(inner, s, e) for s, e in args)
-                    out.extend(_toks(f"(regexp_extract({a}, {b}, 0) = {a})"))
-                    i = close + 1
-                    continue
-                # no shim matched: emit name + rewritten call body
-                out.append(tok)
-                out.extend(tokens[i + 1 : p_open + 1])
-                out.extend(inner)
-                out.append(tokens[close])
-                i = close + 1
-                continue
-        out.append(tok)
-        i += 1
-    return out
+                            qsql = _sql(c.inner, 0, len(c.inner))
+                            return _quantile_cont_agg_sql(
+                                xsql, qsql, filt2 or ""
+                            ), (f_end2 if filt2 is not None else g_close + 1)
+
+
+@_shim("quantile_cont")
+def _shim_quantile_cont(c):
+    if len(c.args) == 2:
+        a, b = c.args
+        after_qc = _next_code(c.tokens, c.close)
+        filt_qc, f_end_qc = _consume_filter_clause(
+            c.tokens, after_qc
+        )
+        after_qc2 = (
+            _next_code(c.tokens, f_end_qc - 1)
+            if filt_qc is not None
+            else after_qc
+        )
+        if after_qc2 < len(c.tokens) and c.tokens[after_qc2].is_kw("OVER"):
+            # windowed: the aggregate DECIMAL-quantize wrap
+            # cannot carry an OVER suffix — keep the plain
+            # percentile spelling for the window passes
+            # (windowed DECIMAL quantization stays the
+            # documented double-result corner); a FILTER
+            # rider stays in the stream with it
+            return f"percentile({a}, {b})"
+        else:
+            # FILTER rider consumed and spliced onto the
+            # inner aggregate (r12 ADVICE: trailing it
+            # after the CAST wrap was a parse error)
+            return _quantile_cont_agg_sql(a, b, filt_qc or ""), (
+                f_end_qc if filt_qc is not None else c.close + 1
+            )
+
+
+@_shim("quantile_disc", "quantile")
+def _shim_quantile_disc(c):
+    if len(c.args) == 2:
+        a, b = c.args
+        base = f"percentile_disc({b}) WITHIN GROUP (ORDER BY {a})"
+        after_qd = _next_code(c.tokens, c.close)
+        filt_qd, f_end_qd = _consume_filter_clause(
+            c.tokens, after_qd
+        )
+        after_qd2 = (
+            _next_code(c.tokens, f_end_qd - 1)
+            if filt_qd is not None
+            else after_qd
+        )
+        windowed_qd = (
+            after_qd2 < len(c.tokens) and c.tokens[after_qd2].is_kw("OVER")
+        )
+        consumed_qd = filt_qd is not None and not windowed_qd
+        if consumed_qd:
+            # FILTER rider spliced onto the aggregate so the
+            # CAST wrap below stays parseable (r12 ADVICE);
+            # windowed FILTER forms stay in the stream
+            base = f"{base}{filt_qd}"
+        chd = _parse_literal_decimal_chain(a)
+        try:
+            float(b)
+        except (TypeError, ValueError):
+            chd = None  # list-valued quantile: no scalar cast
+        if (
+            not windowed_qd
+            and chd is not None
+            and not chd[3]
+            and chd[1] <= 15
+        ):
+            # DuckDB keeps the DECIMAL(w,s) element type;
+            # Spark's percentile_disc returns DOUBLE — the
+            # selected element is exact below 2^53, so the
+            # cast back is lossless. Windowed forms keep
+            # the element-preserving frame fold.
+            base = f"CAST({base} AS DECIMAL({chd[1]},{chd[2]}))"
+        elif (
+            not windowed_qd
+            and chd is not None
+            and not chd[3]
+            and 15 < chd[1] <= 38
+        ):
+            # wide decimals: exact element select in the
+            # compiled core (the double roundtrip loses
+            # low digits above 2^53)
+            qd_core, qd_dist = _split_distinct_prefix(a)
+            base = _qdec_wide_agg_sql(
+                "qdisc",
+                qd_core,
+                b,
+                chd[1],
+                chd[2],
+                filt_qd if consumed_qd else "",
+                qd_dist,
+            )
+        return base, (f_end_qd if consumed_qd else c.close + 1)
+
+
+@_shim("skewness")
+def _shim_skewness(c):
+    if len(c.args) == 1:
+        # DuckDB reports the SAMPLE (bias-corrected) statistic,
+        # Spark the population one: g1 * sqrt(n(n-1)) / (n-2).
+        # nullif: n=2 gives a 0 denominator — DuckDB returns
+        # NULL there; without it Spark's ANSI mode raises
+        # DIVIDE_BY_ZERO when g1 is non-NULL (n=2, distinct
+        # values -> g1 = 0.0)
+        a = c.args[0]
+        return (
+            f"(skewness({a}) * sqrt(CAST(count({a}) AS DOUBLE)"
+            f" * (count({a}) - 1)) / nullif(count({a}) - 2, 0))"
+        )
+
+
+@_shim("kurtosis")
+def _shim_kurtosis(c):
+    if len(c.args) == 1:
+        # sample excess kurtosis from Spark's population
+        # value; nullif: n<=3 zeroes the denominator where
+        # DuckDB returns NULL (ANSI would raise)
+        a = c.args[0]
+        n_ = f"CAST(count({a}) AS DOUBLE)"
+        return (
+            f"((({n_} - 1) / nullif(({n_} - 2) * ({n_} - 3)"
+            f", 0)) * (({n_} + 1) * kurtosis({a}) + 6))"
+        )
+
+
+@_shim("corr")
+def _shim_corr(c):
+    if len(c.args) == 2:
+        # Spark's corr raises DIVIDE_BY_ZERO (ANSI) when
+        # either side has zero variance; DuckDB returns NULL.
+        # A CASE can't guard an aggregate (aggregates are
+        # computed before the projection), so corr is
+        # recomposed from moments with a nullif'd ratio —
+        # the same covar_pop / (σx σy) DuckDB evaluates.
+        a, b = c.args
+        return (
+            f"(covar_pop({a}, {b}) / "
+            f"nullif(stddev_pop({a}) * stddev_pop({b}), 0))"
+        )
+
+
+@_shim("regexp_full_match")
+def _shim_regexp_full_match(c):
+    if len(c.args) == 2:
+        a, b = c.args
+        return f"(regexp_extract({a}, {b}, 0) = {a})"
+
+
+# lowercase function name -> its call shims in lowering order; a name
+# without an entry takes the name-independent shims only
+_CALL_SHIMS = {
+    name: tuple(fn for ns, fn in _SHIMS if not ns or name in ns)
+    for names, _ in _SHIMS
+    for name in names
+}
+_ANY_CALL_SHIMS = tuple(fn for ns, fn in _SHIMS if not ns)
+# a statement naming none of these has nothing to shim
+_CALL_SHIM_WORDS = frozenset(_CALL_SHIMS) | {"ignore", "respect"}
+
+
+def _lower_shim(call: _CallSite, walk):
+    """The first call shim's lowering of ``call`` over its lowered
+    arguments, or the call itself over them."""
+    inner = walk(call.arg_tokens(), call.in_py_udf or call.name in _PY_UDF_FNS)
+    spans = _split_top_commas(inner, 0, len(inner))
+    shims = _CALL_SHIMS.get(call.name)
+    c = call._replace(
+        inner=inner,
+        spans=spans,
+        args=tuple(_sql(inner, s, e) for s, e in spans) if shims else None,
+    )
+    for shim in shims or _ANY_CALL_SHIMS:
+        repl = shim(c)
+        if repl is not None:
+            return repl if isinstance(repl, tuple) else (repl, call.close + 1)
+    toks = call.tokens
+    return toks[call.start : call.p_open + 1] + inner + [toks[call.close]], call.close + 1
+
+
+def _rewrite_call_shims(tokens: List[Token]) -> List[Token]:
+    """Argument-aware function shims beyond plain renames: every call
+    whose name has handlers in ``_CALL_SHIMS`` (registered with
+    ``@_shim``) is lowered by the first of them that returns SQL, after
+    its arguments; other calls keep their name over their lowered
+    arguments. To shim another DuckDB function, add one ``@_shim``
+    handler."""
+    return _lower_calls(tokens, None, _lower_shim, _CALL_SHIM_WORDS)
 
 
 def _find_columns_call(item: List[Token]):

@@ -1224,48 +1224,37 @@ def _rewrite_bit_count_width(tokens: List[Token]) -> List[Token]:
     (bit_count(-1::TINYINT) = 8); Spark widens to 64 bits. When the
     argument visibly ends in a narrow cast, mask to that width BEFORE
     the integral-cast pass rewrites the cast shape away."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "word" and tok.text.lower() == "bit_count":
-            p = _next_code(tokens, i)
-            if p < n and tokens[p].kind == "op" and tokens[p].text == "(":
-                close = _matching_paren(tokens, p)
-                raw = [
-                    t
-                    for t in tokens[p + 1: close]
-                    if t.kind not in ("ws", "comment")
-                ]
-                width = None
-                if (
-                    len(raw) >= 2
-                    and raw[-1].kind == "word"
-                    and raw[-1].upper in _BIT_COUNT_WIDTHS
-                    and raw[-2].kind == "op"
-                    and raw[-2].text == "::"
-                ):
-                    width = _BIT_COUNT_WIDTHS[raw[-1].upper]
-                elif (
-                    len(raw) >= 3
-                    and raw[-1].kind == "op"
-                    and raw[-1].text == ")"
-                    and raw[-2].kind == "word"
-                    and raw[-2].upper in _BIT_COUNT_WIDTHS
-                    and raw[-3].is_kw("AS")
-                ):
-                    width = _BIT_COUNT_WIDTHS[raw[-2].upper]
-                if width is not None:
-                    out.append(tok)
-                    out.extend(_toks("(("))
-                    out.extend(tokens[p + 1: close])
-                    out.extend(_toks(f") & {width})"))
-                    i = close + 1
-                    continue
-        out.append(tok)
-        i += 1
-    return out
+
+    def lower(call: _CallSite, walk):
+        raw = [t for t in call.arg_tokens() if t.kind not in ("ws", "comment")]
+        width = None
+        if (
+            len(raw) >= 2
+            and raw[-1].kind == "word"
+            and raw[-1].upper in _BIT_COUNT_WIDTHS
+            and raw[-2].kind == "op"
+            and raw[-2].text == "::"
+        ):
+            width = _BIT_COUNT_WIDTHS[raw[-1].upper]
+        elif (
+            len(raw) >= 3
+            and raw[-1].kind == "op"
+            and raw[-1].text == ")"
+            and raw[-2].kind == "word"
+            and raw[-2].upper in _BIT_COUNT_WIDTHS
+            and raw[-3].is_kw("AS")
+        ):
+            width = _BIT_COUNT_WIDTHS[raw[-2].upper]
+        if width is None:
+            return None
+        return (
+            [call.tokens[call.start]]
+            + _toks("((")
+            + call.arg_tokens()
+            + _toks(f") & {width})")
+        )
+
+    return _lower_calls(tokens, ("bit_count",), lower)
 
 
 def _is_time_primary(tokens: List[Token], i: int):
@@ -2370,36 +2359,23 @@ def _rewrite_concat_null_skipping(tokens: List[Token]) -> List[Token]:
     EARLY, before passes that emit their own ``concat`` calls whose
     NULL-propagation is intentional (the regexp replace-first
     composition must go NULL for a NULL runtime pattern)."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "word" and tok.text.lower() == "concat":
-            p_open = _next_code(tokens, i)
-            if p_open < n and tokens[p_open].kind == "op" and tokens[p_open].text == "(":
-                close = _matching_paren(tokens, p_open)
-                if close > p_open + 1:  # at least one argument
-                    # DuckDB casts EACH argument to VARCHAR before
-                    # joining; without the per-arg cast Spark's
-                    # concat_ws would flatten array arguments and join
-                    # their elements instead (silent wrong results).
-                    # __DUCKVARCHAR: the late _rewrite_varchar_casts
-                    # pass lowers it to the DuckDB-exact cast, so
-                    # DOUBLE/FLOAT args render fmtlib-style ('1e+20')
-                    # like DuckDB's implicit VARCHAR cast does
-                    args = _split_top_level_args(tokens, p_open, close)
-                    out.extend(_toks("concat_ws(''"))
-                    for arg in args:
-                        out.extend(_toks(", CAST(("))
-                        out.extend(_rewrite_concat_null_skipping(arg))
-                        out.extend(_toks(") AS __DUCKVARCHAR)"))
-                    out.append(Token("op", ")"))
-                    i = close + 1
-                    continue
-        out.append(tok)
-        i += 1
-    return out
+
+    def lower(call: _CallSite, walk):
+        if call.close <= call.p_open + 1:  # no argument
+            return None
+        # DuckDB casts EACH argument to VARCHAR before joining; without
+        # the per-arg cast Spark's concat_ws would flatten array
+        # arguments and join their elements instead (silent wrong
+        # results). __DUCKVARCHAR: the late _rewrite_varchar_casts pass
+        # lowers it to the DuckDB-exact cast, so DOUBLE/FLOAT args
+        # render fmtlib-style ('1e+20') like DuckDB's implicit VARCHAR
+        # cast does
+        out = _toks("concat_ws(''")
+        for arg in _call_args(call.tokens, call.p_open, call.close):
+            out += _toks(", CAST((") + walk(arg) + _toks(") AS __DUCKVARCHAR)")
+        return out + [Token("op", ")")]
+
+    return _lower_calls(tokens, ("concat",), lower)
 
 
 def _rewrite_substr_window(
@@ -2433,7 +2409,7 @@ def _rewrite_substr_window(
             p_open = _next_code(tokens, i)
             if p_open < n and tokens[p_open].kind == "op" and tokens[p_open].text == "(":
                 close = _matching_paren(tokens, p_open)
-                args = _split_top_level_args(tokens, p_open, close)
+                args = _call_args(tokens, p_open, close)
                 if len(args) == 3 and not (
                     _nonneg_int_literal(args[1], 1)
                     and _nonneg_int_literal(args[2], 0)
@@ -2569,52 +2545,18 @@ def _rewrite_date_trunc(tokens: List[Token]) -> List[Token]:
     ``_date_trunc_returns_date``)."""
     if not _date_trunc_returns_date():
         return tokens
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "word" and tok.text.lower() == "date_trunc":
-            p_open = _next_code(tokens, i)
-            if p_open < n and tokens[p_open].text == "(":
-                part_idx = _next_code(tokens, p_open)
-                part_tok = tokens[part_idx] if part_idx < n else None
-                part = (
-                    part_tok.text[1:-1].lower()
-                    if part_tok is not None and part_tok.kind == "string"
-                    else None
-                )
-                if part in _DATE_PARTS:
-                    close = _matching_paren(tokens, p_open)
-                    out.extend(_toks("CAST("))
-                    out.extend(tokens[i: close + 1])
-                    out.extend(_toks(" AS DATE)"))
-                    i = close + 1
-                    continue
-        out.append(tok)
-        i += 1
-    return out
 
+    def lower(call: _CallSite, walk):
+        part = call.tokens[_next_code(call.tokens, call.p_open)]
+        if part.kind == "string" and part.text[1:-1].lower() in _DATE_PARTS:
+            return (
+                _toks("CAST(")
+                + call.tokens[call.start : call.close + 1]
+                + _toks(" AS DATE)")
+            )
+        return None
 
-def _split_top_level_args(tokens: List[Token], open_idx: int, close_idx: int) -> List[List[Token]]:
-    """Argument token slices of a call between matching parens."""
-    args: List[List[Token]] = []
-    cur: List[Token] = []
-    depth = 0
-    for j in range(open_idx + 1, close_idx):
-        t = tokens[j]
-        if t.kind == "op" and t.text in ("(", "[", "{"):
-            depth += 1
-        elif t.kind == "op" and t.text in (")", "]", "}"):
-            depth -= 1
-        if depth == 0 and t.kind == "op" and t.text == ",":
-            args.append(cur)
-            cur = []
-        else:
-            cur.append(t)
-    if cur:
-        args.append(cur)
-    return args
+    return _lower_calls(tokens, ("date_trunc",), lower)
 
 
 def _boundary_diff_sql(unit: str, a: str, b: str) -> str:
@@ -2703,40 +2645,22 @@ def _rewrite_date_diff(tokens: List[Token]) -> List[Token]:
     ``date_sub('unit', a, b)`` -> ``timestampdiff`` (DuckDB's date_sub
     IS the complete-periods variant). Spark's own 2-arg
     ``datediff(end, start)`` is left untouched."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "word" and tok.text.lower() in ("date_diff", "datediff", "date_sub"):
-            p_open = _next_code(tokens, i)
-            if p_open < n and tokens[p_open].text == "(":
-                close = _matching_paren(tokens, p_open)
-                args = _split_top_level_args(tokens, p_open, close)
-                first_code = [t for t in args[0] if t.kind not in ("ws", "comment")] if args else []
-                if len(args) == 3 and len(first_code) == 1 and first_code[0].kind == "string":
-                    unit = _DATE_PART_UNIT.get(first_code[0].text[1:-1].upper())
-                    if unit is None:
-                        # unknown datepart: leave untouched (DuckDB
-                        # errors on it too — let Spark raise)
-                        out.append(tok)
-                        i += 1
-                        continue
-                    a = "".join(
-                        t.text for t in _rewrite_date_diff(args[1])
-                    ).strip()
-                    b = "".join(
-                        t.text for t in _rewrite_date_diff(args[2])
-                    ).strip()
-                    if tok.text.lower() == "date_sub":
-                        out.extend(_toks(_complete_periods_sql(unit, a, b)))
-                    else:
-                        out.extend(_toks(_boundary_diff_sql(unit, a, b)))
-                    i = close + 1
-                    continue
-        out.append(tok)
-        i += 1
-    return out
+
+    def lower(call: _CallSite, walk):
+        args = _call_args(call.tokens, call.p_open, call.close)
+        first = [t for t in args[0] if t.kind not in ("ws", "comment")]
+        if not (len(args) == 3 and len(first) == 1 and first[0].kind == "string"):
+            return None
+        # an unknown datepart stays untouched (DuckDB errors on it too)
+        unit = _DATE_PART_UNIT.get(first[0].text[1:-1].upper())
+        if unit is None:
+            return None
+        a, b = ("".join(t.text for t in walk(x)).strip() for x in args[1:])
+        if call.name == "date_sub":
+            return _complete_periods_sql(unit, a, b)
+        return _boundary_diff_sql(unit, a, b)
+
+    return _lower_calls(tokens, ("date_diff", "datediff", "date_sub"), lower)
 
 
 def _pattern_composable(pat: str) -> bool:
@@ -4845,7 +4769,7 @@ def _strip_product_call(arg: List[Token]) -> Optional[List[Token]]:
     close = _matching_paren(arg, p_open)
     if close != code[-1]:
         return None
-    inner_args = _split_top_level_args(arg, p_open, close)
+    inner_args = _call_args(arg, p_open, close)
     if len(inner_args) != 1:
         return None
     return inner_args[0]
@@ -4912,7 +4836,7 @@ def _rewrite_product_entropy(tokens: List[Token], windows=None) -> List[Token]:
             p_open = _next_code(tokens, i)
             if p_open < n and tokens[p_open].text == "(":
                 close = _matching_paren(tokens, p_open)
-                args = _split_top_level_args(tokens, p_open, close)
+                args = _call_args(tokens, p_open, close)
                 inner = _strip_product_call(args[0]) if len(args) == 2 else None
                 if inner is not None:
                     arg = _rewrite_product_entropy(inner, windows)
@@ -4933,7 +4857,7 @@ def _rewrite_product_entropy(tokens: List[Token], windows=None) -> List[Token]:
             p_open = _next_code(tokens, i)
             if p_open < n and tokens[p_open].text == "(":
                 close = _matching_paren(tokens, p_open)
-                args = _split_top_level_args(tokens, p_open, close)
+                args = _call_args(tokens, p_open, close)
                 if len(args) == 1:
                     after = _next_code(tokens, close)
                     if after < n and tokens[after].is_kw("OVER"):
@@ -5049,7 +4973,7 @@ def _entropy_calls_in_item(item: List[Token], fname: str = "entropy",
                 if low == fname:
                     if any(fn in context for fn in stack):
                         return None
-                    args = _split_top_level_args(item, nxt, close)
+                    args = _call_args(item, nxt, close)
                     if len(args) != 1:
                         return None
                     calls.append((i, nxt, close))
@@ -6477,14 +6401,15 @@ def _lazy_windows(tokens: List[Token]):
 def _lower_calls(tokens: List[Token], names, lower, words=None) -> List[Token]:
     """Replace every call site of ``names`` (of every function when
     None) by ``lower(call, walk)``: SQL text or a token list, optionally
-    as ``(replacement, end)`` to end at another index than
-    ``call.end``; None keeps the call and lowers inside its arguments.
+    as ``(replacement, end)`` to end at another index than past the
+    call's ``)``; None keeps the call and scans on into its arguments.
     ``walk(toks, in_py_udf)`` applies the same lowering to a token run,
-    for a lowering that rewrites its own arguments first. A Python
-    UDF's arguments are walked with ``in_py_udf`` set, which each call
-    site inside them carries. Named windows resolve against the
-    statement's WINDOW definitions. With ``words``, a statement naming
-    none of them is returned as is."""
+    for a lowering that rewrites its own arguments first. Each call
+    site carries whether it sits inside a Python UDF's arguments, and
+    named windows resolve against the statement's WINDOW definitions.
+    A statement naming none of ``words`` (default: ``names``) is
+    returned as is."""
+    words = names if words is None else words
     if words is not None and not any(
         t.kind == "word" and t.text.lower() in words for t in tokens
     ):
@@ -6495,31 +6420,25 @@ def _lower_calls(tokens: List[Token], names, lower, words=None) -> List[Token]:
         out: List[Token] = []
         i = 0
         n = len(toks)
+        udf_close = -1  # the ')' of the Python-UDF call being scanned
         while i < n:
             t = toks[i]
             if t.kind == "word":
                 low = t.text.lower()
                 hit = names is None or low in names
                 call = (
-                    _call_site(toks, i, windows, in_py_udf)
+                    _call_site(toks, i, windows, in_py_udf or i < udf_close)
                     if hit or low in _PY_UDF_FNS
                     else None
                 )
-                if call is not None:
-                    repl = lower(call, walk) if hit else None
-                    if repl is not None:
-                        repl, end = (
-                            repl if isinstance(repl, tuple) else (repl, call.end)
-                        )
-                        out.extend(_toks(repl) if isinstance(repl, str) else repl)
-                    else:
-                        out.extend(toks[i : call.p_open + 1])
-                        out.extend(walk(
-                            call.arg_tokens(), in_py_udf or low in _PY_UDF_FNS
-                        ))
-                        out.append(toks[call.close])
-                        end = call.close + 1
-                    i = end
+                if call is not None and low in _PY_UDF_FNS:
+                    udf_close = max(udf_close, call.close)
+                repl = lower(call, walk) if hit and call is not None else None
+                if repl is not None:
+                    repl, i = (
+                        repl if isinstance(repl, tuple) else (repl, call.close + 1)
+                    )
+                    out.extend(_toks(repl) if isinstance(repl, str) else repl)
                     continue
             out.append(t)
             i += 1
@@ -6561,7 +6480,7 @@ def _rewrite_mad_window_inplace(tokens: List[Token]) -> List[Token]:
         core, distinct = _split_distinct_prefix(arg)
         return _streaming_or_none(
             "mad", core, call.spec, shared_prefix, distinct, temporal=temporal
-        ) or _mad_window_template(core, call.spec.text, temporal, distinct)
+        ) or _mad_window_template(core, call.spec.text, temporal, distinct), call.end
 
     return _lower_calls(tokens, ("mad", "make_dt_interval"), lower)
 
@@ -6577,7 +6496,7 @@ def _rewrite_mad_fallback_template(tokens: List[Token]) -> List[Token]:
     def lower(call: _CallSite, walk):
         if not call.plain or call.over:
             return None
-        return _mad_template("".join(t.text for t in walk(call.arg_tokens())))
+        return _mad_template("".join(t.text for t in walk(call.arg_tokens()))), call.end
 
     return _lower_calls(tokens, ("mad",), lower)
 
@@ -6605,7 +6524,8 @@ def _rewrite_ent_window_streaming(tokens: List[Token]) -> List[Token]:
             return None
         arg = "".join(t.text for t in walk(call.arg_tokens()))
         core, distinct = _split_distinct_prefix(arg)
-        return _streaming_or_none("ent", core, spec, shared_prefix, distinct)
+        sql = _streaming_or_none("ent", core, spec, shared_prefix, distinct)
+        return None if sql is None else (sql, call.end)
 
     return _lower_calls(tokens, ("entropy",), lower)
 
@@ -6660,7 +6580,7 @@ def _rewrite_agg_window_frames(tokens: List[Token]) -> List[Token]:
         if not call.plain or spec is None or spec.exclude:
             return None
         low = call.name
-        args = _split_top_level_args(call.tokens, call.p_open, call.close)
+        args = _call_args(call.tokens, call.p_open, call.close)
         if low in _WITHIN_GROUP_FNS:
             # Spark rejects ANY explicit ORDER BY/frame on WITHIN GROUP
             # window aggregates — even a semantically-inert unbounded
@@ -6758,7 +6678,11 @@ def _rewrite_agg_window_frames(tokens: List[Token]) -> List[Token]:
             repl = _streaming_or_none("ent", core, spec, shared_prefix, distinct)
         return repl or _entropy_fold_sql(collected)
 
-    return _lower_calls(tokens, _AGGW_FOLD_FNS, lower)
+    def lower_site(call: _CallSite, walk):
+        sql = lower(call, walk)
+        return None if sql is None else (sql, call.end)
+
+    return _lower_calls(tokens, _AGGW_FOLD_FNS, lower_site)
 
 
 _RE2_VALID_CACHE: dict = {}
@@ -6880,7 +6804,7 @@ def _rewrite_regexp_replace_flags(tokens: List[Token]) -> List[Token]:
             p_open = _next_code(tokens, i)
             if p_open < n and tokens[p_open].text == "(":
                 close = _matching_paren(tokens, p_open)
-                args = _split_top_level_args(tokens, p_open, close)
+                args = _call_args(tokens, p_open, close)
                 # rewrite NESTED regexp_replace calls inside each arg
                 # first — the consumed span is re-emitted from these
                 # lists, so an unprocessed inner 4-arg call would reach
@@ -7273,7 +7197,7 @@ def _rewrite_strftime(tokens: List[Token]) -> List[Token]:
             p_open = _next_code(tokens, i)
             if p_open < n and tokens[p_open].text == "(":
                 close = _matching_paren(tokens, p_open)
-                args = _split_top_level_args(tokens, p_open, close)
+                args = _call_args(tokens, p_open, close)
                 if len(args) == 2:
                     low_fn = tok.text.lower()
                     fn = {
@@ -7424,31 +7348,24 @@ def _rewrite_epoch(tokens: List[Token]) -> List[Token]:
     the session timezone is UTC so the cast preserves wall-clock values.
     (DuckDB's epoch() returns DOUBLE; unix_seconds is BIGINT — cast in
     the script if fractional seconds matter.)"""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "word" and tok.text.lower() in _EPOCH_FNS:
-            p_open = _next_code(tokens, i)
-            if p_open < n and tokens[p_open].text == "(":
-                close = _matching_paren(tokens, p_open)
-                inner = _rewrite_epoch(tokens[p_open + 1: close])
-                if tok.text.lower() == "epoch":
-                    # DuckDB epoch() is DOUBLE with fractional seconds
-                    out.extend(_toks("(CAST(unix_micros(CAST(("))
-                    out.extend(inner)
-                    out.extend(_toks(") AS TIMESTAMP_LTZ)) AS DOUBLE) / 1000000)"))
-                else:
-                    out.append(Token("word", _EPOCH_FNS[tok.text.lower()]))
-                    out.extend(_toks("(CAST(("))
-                    out.extend(inner)
-                    out.extend(_toks(") AS TIMESTAMP_LTZ))"))
-                i = close + 1
-                continue
-        out.append(tok)
-        i += 1
-    return out
+
+    def lower(call: _CallSite, walk):
+        inner = walk(call.arg_tokens())
+        if call.name == "epoch":
+            # DuckDB epoch() is DOUBLE with fractional seconds
+            return (
+                _toks("(CAST(unix_micros(CAST((")
+                + inner
+                + _toks(") AS TIMESTAMP_LTZ)) AS DOUBLE) / 1000000)")
+            )
+        return (
+            [Token("word", _EPOCH_FNS[call.name])]
+            + _toks("(CAST((")
+            + inner
+            + _toks(") AS TIMESTAMP_LTZ))")
+        )
+
+    return _lower_calls(tokens, _EPOCH_FNS, lower)
 
 
 # Spark-valid integral cast targets (DuckDB rounds on numeric->integral
@@ -7833,7 +7750,7 @@ def _rewrite_series_table_fns(tokens: List[Token]) -> List[Token]:
                     and t.upper in ("DATE", "TIMESTAMP", "INTERVAL")
                     for t in tokens[p : close + 1]
                 )
-                rargs = _split_top_level_args(tokens, p, close)
+                rargs = _call_args(tokens, p, close)
                 rendered = [
                     "".join(x.text for x in arg).strip() for arg in rargs
                 ]
@@ -7979,42 +7896,21 @@ def _rewrite_operator_fn_aliases(tokens: List[Token]) -> List[Token]:
     1-arg ``subtract(x)`` = -x, 1-arg ``add(x)`` = x. Runs EARLY so the
     emitted operators flow through the later division/rounding passes
     like hand-written ones."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "word" and tok.text.lower() in _OPERATOR_FN_ALIASES:
-            p = _next_code(tokens, i)
-            if p < n and tokens[p].kind == "op" and tokens[p].text == "(":
-                close = _matching_paren(tokens, p)
-                args = _split_top_level_args(tokens, p, close)
-                op = _OPERATOR_FN_ALIASES[tok.text.lower()]
-                rendered = [
-                    "".join(
-                        t.text
-                        for t in _rewrite_operator_fn_aliases(a)
-                    ).strip()
-                    for a in args
-                ]
-                if len(rendered) == 2 and all(rendered):
-                    out.extend(
-                        _toks(f"(({rendered[0]}) {op} ({rendered[1]}))")
-                    )
-                    i = close + 1
-                    continue
-                if (
-                    len(rendered) == 1
-                    and rendered[0]
-                    and tok.text.lower() in ("add", "subtract")
-                ):
-                    sign = "-" if tok.text.lower() == "subtract" else ""
-                    out.extend(_toks(f"({sign}({rendered[0]}))"))
-                    i = close + 1
-                    continue
-        out.append(tok)
-        i += 1
-    return out
+
+    def lower(call: _CallSite, walk):
+        rendered = [
+            "".join(t.text for t in walk(a)).strip()
+            for a in _call_args(call.tokens, call.p_open, call.close)
+        ]
+        if len(rendered) == 2 and all(rendered):
+            op = _OPERATOR_FN_ALIASES[call.name]
+            return f"(({rendered[0]}) {op} ({rendered[1]}))"
+        if len(rendered) == 1 and rendered[0] and call.name in ("add", "subtract"):
+            sign = "-" if call.name == "subtract" else ""
+            return f"({sign}({rendered[0]}))"
+        return None
+
+    return _lower_calls(tokens, _OPERATOR_FN_ALIASES, lower)
 
 
 # list-producing functions (DuckDB spellings; renames to Spark names run
@@ -9138,7 +9034,7 @@ def _snt_rec(code: List[Token], depth: int) -> Optional[str]:
         and _matching_paren(c, 1) == len(c) - 1
     ):
         fn = c[0].text.lower()
-        args = _split_top_level_args(c, 1, len(c) - 1)
+        args = _call_args(c, 1, len(c) - 1)
 
         def _arg_ty(a):
             return _snt_rec(
@@ -9237,7 +9133,7 @@ def _rewrite_round_double(
                 and tokens[p_open].text == "("
             ):
                 close = _matching_paren(tokens, p_open)
-                args = _split_top_level_args(tokens, p_open, close)
+                args = _call_args(tokens, p_open, close)
                 k: Optional[int] = None
                 if len(args) == 1:
                     k = 0
@@ -9973,7 +9869,7 @@ def _static_interval_literal(op_code: List[Token]):
         and code[1].kind == "op" and code[1].text == "("
         and _matching_paren(code, 1) == len(code) - 1
     ):
-        args = _split_top_level_args(code, 1, len(code) - 1)
+        args = _call_args(code, 1, len(code) - 1)
         vals = []
         for a in args:
             v = lit_of(
@@ -10635,14 +10531,15 @@ def _matching_bracket(tokens: List[Token], open_idx: int) -> int:
 
 
 def _top_level_positions(tokens: List[Token], lo: int, hi: int, match) -> List[int]:
-    """Indices in (lo, hi) where ``match(token)`` holds at bracket depth 0."""
+    """Indices in (lo, hi) where ``match(token)`` holds at depth 0 of
+    parentheses, brackets and braces."""
     depth = 0
     hits: List[int] = []
     for j in range(lo, hi):
         t = tokens[j]
-        if t.kind == "op" and t.text in ("(", "["):
+        if t.kind == "op" and t.text in ("(", "[", "{"):
             depth += 1
-        elif t.kind == "op" and t.text in (")", "]"):
+        elif t.kind == "op" and t.text in (")", "]", "}"):
             depth -= 1
         elif depth == 0 and match(t):
             hits.append(j)
@@ -11035,7 +10932,9 @@ _NOT_VALUE_WORDS = {
 
 
 def _split_top_commas(tokens: List[Token], lo: int, hi: int) -> List[tuple[int, int]]:
-    """(start, end) spans of top-level comma-separated args in (lo, hi)."""
+    """(start, end) spans of the comma-separated items of
+    ``tokens[lo:hi]`` at depth 0 (see ``_top_level_positions``); an
+    empty run is one empty item."""
     commas = _top_level_positions(
         tokens, lo, hi, lambda t: t.kind == "op" and t.text == ","
     )
@@ -11046,6 +10945,15 @@ def _split_top_commas(tokens: List[Token], lo: int, hi: int) -> List[tuple[int, 
         start = c + 1
     spans.append((start, hi))
     return spans
+
+
+def _call_args(tokens: List[Token], open_idx: int, close_idx: int) -> List[List[Token]]:
+    """Argument token lists of the call whose parentheses are at
+    ``open_idx`` and ``close_idx``: ``_split_top_commas`` items, less
+    a last one without any token (``f()`` has no argument, ``f(a,)``
+    one)."""
+    args = [tokens[a:b] for a, b in _split_top_commas(tokens, open_idx + 1, close_idx)]
+    return args if args[-1] else args[:-1]
 
 
 def _sql(tokens: List[Token], lo: int, hi: int) -> str:
@@ -13793,9 +13701,9 @@ def _lower_shim(call: _CallSite, walk):
     for shim in shims or _ANY_CALL_SHIMS:
         repl = shim(c)
         if repl is not None:
-            return repl if isinstance(repl, tuple) else (repl, call.close + 1)
+            return repl
     toks = call.tokens
-    return toks[call.start : call.p_open + 1] + inner + [toks[call.close]], call.close + 1
+    return toks[call.start : call.p_open + 1] + inner + [toks[call.close]]
 
 
 def _rewrite_call_shims(tokens: List[Token]) -> List[Token]:
@@ -15044,37 +14952,20 @@ def _rewrite_date_part_list(tokens: List[Token]) -> List[Token]:
     ``named_struct`` over scalar date_part calls (each then goes
     through the scalar part shims). Literal part lists only; a dynamic
     list expression passes through and fails loudly at Spark parse."""
-    out: List[Token] = []
-    i, n = 0, len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if (
-            tok.kind == "word"
-            and tok.text.lower() in ("date_part", "datepart")
+
+    def lower(call: _CallSite, walk):
+        args = _call_args(call.tokens, call.p_open, call.close)
+        parts = _literal_array_elements(args[0]) if len(args) == 2 else None
+        if not parts or not all(
+            e.startswith("'") and e.endswith("'") and len(e) > 2 for e in parts
         ):
-            p = _next_code(tokens, i)
-            if p < n and tokens[p].kind == "op" and tokens[p].text == "(":
-                close = _matching_paren(tokens, p)
-                args = _split_top_level_args(tokens, p, close)
-                parts = (
-                    _literal_array_elements(args[0])
-                    if len(args) == 2 else None
-                )
-                if parts and all(
-                    e.startswith("'") and e.endswith("'") and len(e) > 2
-                    for e in parts
-                ):
-                    x = "".join(t.text for t in args[1]).strip()
-                    fields = ", ".join(
-                        f"{e}, CAST(date_part({e}, ({x})) AS BIGINT)"
-                        for e in parts
-                    )
-                    out.extend(_toks(f"named_struct({fields})"))
-                    i = close + 1
-                    continue
-        out.append(tok)
-        i += 1
-    return out
+            return None
+        x = "".join(t.text for t in args[1]).strip()
+        return "named_struct({})".format(", ".join(
+            f"{e}, CAST(date_part({e}, ({x})) AS BIGINT)" for e in parts
+        ))
+
+    return _lower_calls(tokens, ("date_part", "datepart"), lower)
 
 
 # window functions Spark refuses to run without an ORDER BY (DuckDB

@@ -2378,9 +2378,7 @@ def _rewrite_concat_null_skipping(tokens: List[Token]) -> List[Token]:
     return _lower_calls(tokens, ("concat",), lower)
 
 
-def _rewrite_substr_window(
-    tokens: List[Token], in_py_udf: bool = False
-) -> List[Token]:
+def _rewrite_substr_window(tokens: List[Token]) -> List[Token]:
     """3-arg ``substr``/``substring`` with DuckDB's extended-window
     semantics: the window is [start, start+len) in 1-based coordinates
     (negative start counts from the end first), INTERSECTED with the
@@ -2396,81 +2394,63 @@ def _rewrite_substr_window(
     Python-UDF argument spans the repeated-operand form is kept
     (lambdas there defeat ExtractPythonUDFs — see _PY_UDF_FNS).
     """
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    udf_spans = _py_udf_arg_spans(tokens) if not in_py_udf else None
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "word" and tok.text.lower() in ("substr", "substring"):
-            in_udf_here = in_py_udf or (
-                udf_spans is not None and i in udf_spans
+
+    def lower(call: _CallSite, walk):
+        args = _call_args(call.tokens, call.p_open, call.close)
+        if len(args) == 3 and not (
+            _nonneg_int_literal(args[1], 1)
+            and _nonneg_int_literal(args[2], 0)
+        ):
+            s, p, l = (
+                "".join(t.text for t in walk(a, call.in_py_udf)).strip()
+                for a in args
             )
-            p_open = _next_code(tokens, i)
-            if p_open < n and tokens[p_open].kind == "op" and tokens[p_open].text == "(":
-                close = _matching_paren(tokens, p_open)
-                args = _call_args(tokens, p_open, close)
-                if len(args) == 3 and not (
-                    _nonneg_int_literal(args[1], 1)
-                    and _nonneg_int_literal(args[2], 0)
-                ):
-                    s, p, l = (
-                        "".join(
-                            t.text
-                            for t in _rewrite_substr_window(
-                                a, in_py_udf=in_udf_here
-                            )
-                        ).strip()
-                        for a in args
-                    )
-                    # bind on post-expansion potential too: a short
-                    # subject like (round(x, 4))::VARCHAR expands ~5 KB
-                    # in LATER passes (round template + the fmtlib
-                    # render dispatch), multiplied by every inline copy
-                    arg0 = [
-                        t for t in args[0] if t.kind not in ("ws", "comment")
-                    ]
-                    expands = _contains_expanding_call(args[0]) or any(
-                        t.kind == "word" and t.text.lower() == "varchar"
-                        for t in arg0
-                    )
-                    bind = not in_udf_here and (
-                        expands
-                        or len(s) + len(p) + len(l) > _BIND_THRESHOLD
-                    )
-                    if bind:
-                        outer = (s, p, l)
-                        s, p, l = "__sb.s", "__sb.p", "__sb.l"
-                    p0 = (
-                        f"(CASE WHEN ({p}) < 0 THEN length({s}) + ({p}) + 1 "
-                        f"ELSE ({p}) END)"
-                    )
-                    a_ = f"({p0} + least(({l}), 0))"
-                    b_ = f"({p0} + greatest(({l}), 0))"
-                    st = f"greatest({a_}, 1)"
-                    ln = f"greatest(least({b_}, length({s}) + 1) - {st}, 0)"
-                    # NULL start/len must produce NULL (r10b,
-                    # pre-existing): Spark's greatest/least SKIP NULL
-                    # arguments, so a NULL position silently clamped to
-                    # 1 and returned a non-NULL window
-                    core = (
-                        f"(CASE WHEN ({p}) IS NULL OR ({l}) IS NULL "
-                        f"THEN CAST(NULL AS STRING) "
-                        f"ELSE substring(({s}), {st}, {ln}) END)"
-                    )
-                    if bind:
-                        so, po, lo = outer
-                        core = (
-                            "element_at(transform(array(named_struct("
-                            f"'s', ({so}), 'p', ({po}), 'l', ({lo})))"
-                            f", __sb -> {core}), 1)"
-                        )
-                    out.extend(_toks(core))
-                    i = close + 1
-                    continue
-        out.append(tok)
-        i += 1
-    return out
+            # bind on post-expansion potential too: a short
+            # subject like (round(x, 4))::VARCHAR expands ~5 KB
+            # in LATER passes (round template + the fmtlib
+            # render dispatch), multiplied by every inline copy
+            arg0 = [
+                t for t in args[0] if t.kind not in ("ws", "comment")
+            ]
+            expands = _contains_expanding_call(args[0]) or any(
+                t.kind == "word" and t.text.lower() == "varchar"
+                for t in arg0
+            )
+            bind = not call.in_py_udf and (
+                expands
+                or len(s) + len(p) + len(l) > _BIND_THRESHOLD
+            )
+            if bind:
+                outer = (s, p, l)
+                s, p, l = "__sb.s", "__sb.p", "__sb.l"
+            p0 = (
+                f"(CASE WHEN ({p}) < 0 THEN length({s}) + ({p}) + 1 "
+                f"ELSE ({p}) END)"
+            )
+            a_ = f"({p0} + least(({l}), 0))"
+            b_ = f"({p0} + greatest(({l}), 0))"
+            st = f"greatest({a_}, 1)"
+            ln = f"greatest(least({b_}, length({s}) + 1) - {st}, 0)"
+            # NULL start/len must produce NULL (r10b,
+            # pre-existing): Spark's greatest/least SKIP NULL
+            # arguments, so a NULL position silently clamped to
+            # 1 and returned a non-NULL window
+            core = (
+                f"(CASE WHEN ({p}) IS NULL OR ({l}) IS NULL "
+                f"THEN CAST(NULL AS STRING) "
+                f"ELSE substring(({s}), {st}, {ln}) END)"
+            )
+            if bind:
+                so, po, lo = outer
+                core = (
+                    "element_at(transform(array(named_struct("
+                    f"'s', ({so}), 'p', ({po}), 'l', ({lo})))"
+                    f", __sb -> {core}), 1)"
+                )
+            return core
+        return None
+
+    return _lower_calls(tokens, ("substr", "substring"), lower)
 
 
 def _rewrite_extract_dow(tokens: List[Token]) -> List[Token]:
@@ -6795,332 +6775,315 @@ def _rewrite_regexp_replace_flags(tokens: List[Token]) -> List[Token]:
     rewritten to an equivalent anchored replace-all; otherwise it is left
     as-is (replace-all, with the validator's DANGER lint pointing at the
     divergence)."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "word" and tok.text.lower() == "regexp_replace":
-            p_open = _next_code(tokens, i)
-            if p_open < n and tokens[p_open].text == "(":
-                close = _matching_paren(tokens, p_open)
-                args = _call_args(tokens, p_open, close)
-                # rewrite NESTED regexp_replace calls inside each arg
-                # first — the consumed span is re-emitted from these
-                # lists, so an unprocessed inner 4-arg call would reach
-                # Spark (whose 4th argument is a position integer)
-                args = [
-                    _rewrite_regexp_replace_flags(a) for a in args
-                ]
-                if len(args) in (3, 4):
-                    pat0 = [
-                        t for t in args[1]
-                        if t.kind not in ("ws", "comment")
-                    ]
-                    if (
-                        len(pat0) == 1
-                        and pat0[0].kind == "string"
-                        and not _re2_pattern_valid(
-                            _decode_spark_string(pat0[0])
-                        )
-                    ):
-                        # RE2-invalid literal pattern: DuckDB returns
-                        # the subject unchanged (any flags); Spark
-                        # would raise. __DUCKVARCHAR keeps DuckDB's
-                        # VARCHAR result typing
-                        out.extend(_toks("CAST(("))
-                        out.extend(args[0])
-                        out.extend(_toks(") AS __DUCKVARCHAR)"))
-                        i = close + 1
-                        continue
-                last_code = (
-                    [t for t in args[-1] if t.kind not in ("ws", "comment")]
-                    if args
-                    else []
+
+    def lower(call: _CallSite, walk):
+        args = _call_args(call.tokens, call.p_open, call.close)
+        out: List[Token] = []
+        # rewrite NESTED regexp_replace calls inside each arg
+        # first — the consumed span is re-emitted from these
+        # lists, so an unprocessed inner 4-arg call would reach
+        # Spark (whose 4th argument is a position integer)
+        args = [walk(a) for a in args]
+        if len(args) in (3, 4):
+            pat0 = [
+                t for t in args[1]
+                if t.kind not in ("ws", "comment")
+            ]
+            if (
+                len(pat0) == 1
+                and pat0[0].kind == "string"
+                and not _re2_pattern_valid(
+                    _decode_spark_string(pat0[0])
                 )
-                flags = (
-                    last_code[0].text[1:-1].lower()
-                    if len(args) == 4
-                    and len(last_code) == 1
-                    and last_code[0].kind == "string"
-                    else None
-                )
-                if flags is not None and set(flags) <= {"g", "i"}:
-                    pat_code = [
-                        t for t in args[1] if t.kind not in ("ws", "comment")
-                    ]
-                    pat_is_lit = (
-                        len(pat_code) == 1 and pat_code[0].kind == "string"
-                    )
-                    if "g" in flags:
-                        # replace-ALL (Spark's native behavior); 'i' adds
-                        # a case-insensitivity scope to the pattern. The
-                        # replacement still follows RE2 rewrite
-                        # semantics (backrefs \N, literal $, invalid
-                        # rewrite -> subject unchanged).
-                        if "i" not in flags:
-                            pat_toks = (
-                                [_encode_spark_string(
-                                    _normalize_named_groups_lit(
-                                        _decode_spark_string(pat_code[0])
-                                    )
-                                )]
-                                if pat_is_lit
-                                else _normalize_named_groups_toks(args[1])
-                            )
-                        elif pat_is_lit:
-                            pat_toks = [_encode_spark_string(
-                                "(?i:"
-                                + _normalize_named_groups_lit(
-                                    _decode_spark_string(pat_code[0])
-                                )
-                                + ")"
-                            )]
-                        else:
-                            pat_toks = (
-                                _toks("concat('(?i:', ")
-                                + _normalize_named_groups_toks(args[1])
-                                + _toks(", ')')")
-                            )
-                        rep_code_g = [
-                            t
-                            for t in args[2]
-                            if t.kind not in ("ws", "comment")
-                        ]
-                        rep_is_lit_g = (
-                            len(rep_code_g) == 1
-                            and rep_code_g[0].kind == "string"
-                        )
-                        ngroups_g = (
-                            _count_capture_groups(
+            ):
+                # RE2-invalid literal pattern: DuckDB returns
+                # the subject unchanged (any flags); Spark
+                # would raise. __DUCKVARCHAR keeps DuckDB's
+                # VARCHAR result typing
+                out.extend(_toks("CAST(("))
+                out.extend(args[0])
+                out.extend(_toks(") AS __DUCKVARCHAR)"))
+                return out
+        last_code = (
+            [t for t in args[-1] if t.kind not in ("ws", "comment")]
+            if args
+            else []
+        )
+        flags = (
+            last_code[0].text[1:-1].lower()
+            if len(args) == 4
+            and len(last_code) == 1
+            and last_code[0].kind == "string"
+            else None
+        )
+        if flags is not None and set(flags) <= {"g", "i"}:
+            pat_code = [
+                t for t in args[1] if t.kind not in ("ws", "comment")
+            ]
+            pat_is_lit = (
+                len(pat_code) == 1 and pat_code[0].kind == "string"
+            )
+            if "g" in flags:
+                # replace-ALL (Spark's native behavior); 'i' adds
+                # a case-insensitivity scope to the pattern. The
+                # replacement still follows RE2 rewrite
+                # semantics (backrefs \N, literal $, invalid
+                # rewrite -> subject unchanged).
+                if "i" not in flags:
+                    pat_toks = (
+                        [_encode_spark_string(
+                            _normalize_named_groups_lit(
                                 _decode_spark_string(pat_code[0])
                             )
-                            if pat_is_lit
-                            else None
-                        )
-                        # conditions under which DuckDB returns the
-                        # subject unchanged (each a token list)
-                        guards: List[List[Token]] = []
-                        pat_sql_g = "".join(t.text for t in args[1])
-                        ng_sql_g = _runtime_ngroups_sql(pat_sql_g)
-                        if not pat_is_lit:
-                            # RE2-invalid runtime pattern VALUE no-ops
-                            guards.append(
-                                _toks("NOT coalesce(__re2_valid((")
-                                + list(args[1])
-                                + _toks(")), true)")
-                            )
-                        if rep_is_lit_g:
-                            rep_lit_g = _decode_spark_string(rep_code_g[0])
-                            j0 = _re2_rewrite_to_java(
-                                rep_lit_g,
-                                0,
-                                ngroups_g,
-                                global_mode=True,
-                            )
-                            if j0 is None:
-                                # out-of-range ref: subject unchanged
-                                out.append(Token("op", "("))
-                                out.extend(args[0])
-                                out.append(Token("op", ")"))
-                                i = close + 1
-                                continue
-                            rep_toks = [_encode_spark_string(j0)]
-                            if not pat_is_lit:
-                                # bound only checkable at runtime
-                                maxref_g = _max_rewrite_ref(rep_lit_g)
-                                if maxref_g > 0:
-                                    guards.append(
-                                        _toks(
-                                            f"({ng_sql_g}) < {maxref_g}"
-                                        )
-                                    )
-                        else:
-                            rep_toks = _rep_rewrite_chain(
-                                args[2], 0, truncate=True
-                            )
-                            # out-of-range refs pre-validate the whole
-                            # VALUE in global mode
-                            if ngroups_g is not None and ngroups_g < 9:
-                                m = ngroups_g + 1
-                                guards.append(
-                                    _toks("((")
-                                    + list(args[2])
-                                    + _toks(") RLIKE ")
-                                    + [
-                                        _encode_spark_string(
-                                            r"^(?:[^\\]|\\[^%d-9])*\\[%d-9]"
-                                            % (m, m)
-                                        )
-                                    ]
-                                    + _toks(")")
-                                )
-                            elif ngroups_g is None:
-                                rep_sql_g = "".join(
-                                    t.text for t in args[2]
-                                )
-                                guards.append(
-                                    _toks(
-                                        _runtime_oob_rlike_sql(
-                                            "(" + rep_sql_g + ")",
-                                            ng_sql_g,
-                                        )
-                                    )
-                                )
-                        call_toks = (
-                            _toks("regexp_replace(")
-                            + list(args[0])
-                            + [Token("op", ",")]
-                            + pat_toks
-                            + [Token("op", ",")]
-                            + rep_toks
-                            + [Token("op", ")")]
-                        )
-                        if guards:
-                            case_toks = _toks("(CASE")
-                            for g in guards:
-                                case_toks += (
-                                    _toks(" WHEN ")
-                                    + g
-                                    + _toks(" THEN (")
-                                    + list(args[0])
-                                    + _toks(")")
-                                )
-                            case_toks += (
-                                _toks(" ELSE ")
-                                + call_toks
-                                + _toks(" END)")
-                            )
-                            out.extend(case_toks)
-                        else:
-                            out.extend(call_toks)
-                        i = close + 1
-                        continue
-                    # flags 'i' or '': DuckDB replace-FIRST. Compose
-                    # when possible; otherwise emit a flagless 3-arg
-                    # call (replace-all divergence, lint-covered) with
-                    # the case scope preserved — never a 4-arg call
-                    # (Spark's 4th arg is a position integer).
-                    rep_code = [
-                        t for t in args[2] if t.kind not in ("ws", "comment")
-                    ]
-                    rep_is_lit = (
-                        len(rep_code) == 1 and rep_code[0].kind == "string"
+                        )]
+                        if pat_is_lit
+                        else _normalize_named_groups_toks(args[1])
                     )
-                    composed = None
-                    if pat_is_lit and rep_is_lit:
-                        composed = replace_first_composition(
-                            _decode_spark_string(pat_code[0]),
-                            _decode_spark_string(rep_code[0]),
-                            case_insensitive="i" in flags,
-                        )
-                        if composed == REPLACE_NOOP:
-                            # invalid rewrite: subject unchanged
-                            out.append(Token("op", "("))
-                            out.extend(args[0])
-                            out.append(Token("op", ")"))
-                            i = close + 1
-                            continue
-                    elif not (pat_is_lit and rep_is_lit):
-                        dyn = _replace_first_dynamic(
-                            args[0],
-                            args[1],
-                            args[2],
+                elif pat_is_lit:
+                    pat_toks = [_encode_spark_string(
+                        "(?i:"
+                        + _normalize_named_groups_lit(
                             _decode_spark_string(pat_code[0])
-                            if pat_is_lit
-                            else None,
-                            _decode_spark_string(rep_code[0])
-                            if rep_is_lit
-                            else None,
-                            case_insensitive="i" in flags,
                         )
-                        if dyn is not None:
-                            out.extend(dyn)
-                            i = close + 1
-                            continue
-                    out.append(tok)
+                        + ")"
+                    )]
+                else:
+                    pat_toks = (
+                        _toks("concat('(?i:', ")
+                        + _normalize_named_groups_toks(args[1])
+                        + _toks(", ')')")
+                    )
+                rep_code_g = [
+                    t
+                    for t in args[2]
+                    if t.kind not in ("ws", "comment")
+                ]
+                rep_is_lit_g = (
+                    len(rep_code_g) == 1
+                    and rep_code_g[0].kind == "string"
+                )
+                ngroups_g = (
+                    _count_capture_groups(
+                        _decode_spark_string(pat_code[0])
+                    )
+                    if pat_is_lit
+                    else None
+                )
+                # conditions under which DuckDB returns the
+                # subject unchanged (each a token list)
+                guards: List[List[Token]] = []
+                pat_sql_g = "".join(t.text for t in args[1])
+                ng_sql_g = _runtime_ngroups_sql(pat_sql_g)
+                if not pat_is_lit:
+                    # RE2-invalid runtime pattern VALUE no-ops
+                    guards.append(
+                        _toks("NOT coalesce(__re2_valid((")
+                        + list(args[1])
+                        + _toks(")), true)")
+                    )
+                if rep_is_lit_g:
+                    rep_lit_g = _decode_spark_string(rep_code_g[0])
+                    j0 = _re2_rewrite_to_java(
+                        rep_lit_g,
+                        0,
+                        ngroups_g,
+                        global_mode=True,
+                    )
+                    if j0 is None:
+                        # out-of-range ref: subject unchanged
+                        out.append(Token("op", "("))
+                        out.extend(args[0])
+                        out.append(Token("op", ")"))
+                        return out
+                    rep_toks = [_encode_spark_string(j0)]
+                    if not pat_is_lit:
+                        # bound only checkable at runtime
+                        maxref_g = _max_rewrite_ref(rep_lit_g)
+                        if maxref_g > 0:
+                            guards.append(
+                                _toks(
+                                    f"({ng_sql_g}) < {maxref_g}"
+                                )
+                            )
+                else:
+                    rep_toks = _rep_rewrite_chain(
+                        args[2], 0, truncate=True
+                    )
+                    # out-of-range refs pre-validate the whole
+                    # VALUE in global mode
+                    if ngroups_g is not None and ngroups_g < 9:
+                        m = ngroups_g + 1
+                        guards.append(
+                            _toks("((")
+                            + list(args[2])
+                            + _toks(") RLIKE ")
+                            + [
+                                _encode_spark_string(
+                                    r"^(?:[^\\]|\\[^%d-9])*\\[%d-9]"
+                                    % (m, m)
+                                )
+                            ]
+                            + _toks(")")
+                        )
+                    elif ngroups_g is None:
+                        rep_sql_g = "".join(
+                            t.text for t in args[2]
+                        )
+                        guards.append(
+                            _toks(
+                                _runtime_oob_rlike_sql(
+                                    "(" + rep_sql_g + ")",
+                                    ng_sql_g,
+                                )
+                            )
+                        )
+                call_toks = (
+                    _toks("regexp_replace(")
+                    + list(args[0])
+                    + [Token("op", ",")]
+                    + pat_toks
+                    + [Token("op", ",")]
+                    + rep_toks
+                    + [Token("op", ")")]
+                )
+                if guards:
+                    case_toks = _toks("(CASE")
+                    for g in guards:
+                        case_toks += (
+                            _toks(" WHEN ")
+                            + g
+                            + _toks(" THEN (")
+                            + list(args[0])
+                            + _toks(")")
+                        )
+                    case_toks += (
+                        _toks(" ELSE ")
+                        + call_toks
+                        + _toks(" END)")
+                    )
+                    out.extend(case_toks)
+                else:
+                    out.extend(call_toks)
+                return out
+            # flags 'i' or '': DuckDB replace-FIRST. Compose
+            # when possible; otherwise emit a flagless 3-arg
+            # call (replace-all divergence, lint-covered) with
+            # the case scope preserved — never a 4-arg call
+            # (Spark's 4th arg is a position integer).
+            rep_code = [
+                t for t in args[2] if t.kind not in ("ws", "comment")
+            ]
+            rep_is_lit = (
+                len(rep_code) == 1 and rep_code[0].kind == "string"
+            )
+            composed = None
+            if pat_is_lit and rep_is_lit:
+                composed = replace_first_composition(
+                    _decode_spark_string(pat_code[0]),
+                    _decode_spark_string(rep_code[0]),
+                    case_insensitive="i" in flags,
+                )
+                if composed == REPLACE_NOOP:
+                    # invalid rewrite: subject unchanged
+                    out.append(Token("op", "("))
+                    out.extend(args[0])
+                    out.append(Token("op", ")"))
+                    return out
+            elif not (pat_is_lit and rep_is_lit):
+                dyn = _replace_first_dynamic(
+                    args[0],
+                    args[1],
+                    args[2],
+                    _decode_spark_string(pat_code[0])
+                    if pat_is_lit
+                    else None,
+                    _decode_spark_string(rep_code[0])
+                    if rep_is_lit
+                    else None,
+                    case_insensitive="i" in flags,
+                )
+                if dyn is not None:
+                    out.extend(dyn)
+                    return out
+            out.append(call.tokens[call.start])
+            out.append(Token("op", "("))
+            out.extend(args[0])
+            out.append(Token("op", ","))
+            if composed is not None:
+                out.append(_encode_spark_string(composed[0]))
+                out.append(Token("op", ","))
+                out.append(_encode_spark_string(composed[1]))
+            else:
+                if "i" not in flags:
+                    out.extend(args[1])
+                elif pat_is_lit:
+                    out.append(
+                        _encode_spark_string(
+                            "(?i:"
+                            + _decode_spark_string(pat_code[0])
+                            + ")"
+                        )
+                    )
+                else:
+                    out.extend(_toks("concat('(?i:', "))
+                    out.extend(args[1])
+                    out.extend(_toks(", ')')"))
+                out.append(Token("op", ","))
+                out.extend(args[2])
+            out.append(Token("op", ")"))
+            return out
+        if len(args) == 3:
+            pat_code = [
+                t for t in args[1] if t.kind not in ("ws", "comment")
+            ]
+            rep_code = [
+                t for t in args[2] if t.kind not in ("ws", "comment")
+            ]
+            pat_is_lit = (
+                len(pat_code) == 1 and pat_code[0].kind == "string"
+            )
+            rep_is_lit = (
+                len(rep_code) == 1 and rep_code[0].kind == "string"
+            )
+            if pat_is_lit and rep_is_lit:
+                composed = replace_first_composition(
+                    _decode_spark_string(pat_code[0]),
+                    _decode_spark_string(rep_code[0]),
+                )
+                if composed == REPLACE_NOOP:
+                    # invalid rewrite: subject unchanged
+                    out.append(Token("op", "("))
+                    out.extend(args[0])
+                    out.append(Token("op", ")"))
+                    return out
+                if composed is not None:
+                    out.append(call.tokens[call.start])
                     out.append(Token("op", "("))
                     out.extend(args[0])
                     out.append(Token("op", ","))
-                    if composed is not None:
-                        out.append(_encode_spark_string(composed[0]))
-                        out.append(Token("op", ","))
-                        out.append(_encode_spark_string(composed[1]))
-                    else:
-                        if "i" not in flags:
-                            out.extend(args[1])
-                        elif pat_is_lit:
-                            out.append(
-                                _encode_spark_string(
-                                    "(?i:"
-                                    + _decode_spark_string(pat_code[0])
-                                    + ")"
-                                )
-                            )
-                        else:
-                            out.extend(_toks("concat('(?i:', "))
-                            out.extend(args[1])
-                            out.extend(_toks(", ')')"))
-                        out.append(Token("op", ","))
-                        out.extend(args[2])
+                    out.append(_encode_spark_string(composed[0]))
+                    out.append(Token("op", ","))
+                    out.append(_encode_spark_string(composed[1]))
                     out.append(Token("op", ")"))
-                    i = close + 1
-                    continue
-                if len(args) == 3:
-                    pat_code = [
-                        t for t in args[1] if t.kind not in ("ws", "comment")
-                    ]
-                    rep_code = [
-                        t for t in args[2] if t.kind not in ("ws", "comment")
-                    ]
-                    pat_is_lit = (
-                        len(pat_code) == 1 and pat_code[0].kind == "string"
-                    )
-                    rep_is_lit = (
-                        len(rep_code) == 1 and rep_code[0].kind == "string"
-                    )
-                    if pat_is_lit and rep_is_lit:
-                        composed = replace_first_composition(
-                            _decode_spark_string(pat_code[0]),
-                            _decode_spark_string(rep_code[0]),
-                        )
-                        if composed == REPLACE_NOOP:
-                            # invalid rewrite: subject unchanged
-                            out.append(Token("op", "("))
-                            out.extend(args[0])
-                            out.append(Token("op", ")"))
-                            i = close + 1
-                            continue
-                        if composed is not None:
-                            out.append(tok)
-                            out.append(Token("op", "("))
-                            out.extend(args[0])
-                            out.append(Token("op", ","))
-                            out.append(_encode_spark_string(composed[0]))
-                            out.append(Token("op", ","))
-                            out.append(_encode_spark_string(composed[1]))
-                            out.append(Token("op", ")"))
-                            i = close + 1
-                            continue
-                    else:
-                        dyn = _replace_first_dynamic(
-                            args[0],
-                            args[1],
-                            args[2],
-                            _decode_spark_string(pat_code[0])
-                            if pat_is_lit
-                            else None,
-                            _decode_spark_string(rep_code[0])
-                            if rep_is_lit
-                            else None,
-                        )
-                        if dyn is not None:
-                            out.extend(dyn)
-                            i = close + 1
-                            continue
-        out.append(tok)
-        i += 1
-    return out
+                    return out
+            else:
+                dyn = _replace_first_dynamic(
+                    args[0],
+                    args[1],
+                    args[2],
+                    _decode_spark_string(pat_code[0])
+                    if pat_is_lit
+                    else None,
+                    _decode_spark_string(rep_code[0])
+                    if rep_is_lit
+                    else None,
+                )
+                if dyn is not None:
+                    out.extend(dyn)
+                    return out
+        return None
+
+    return _lower_calls(tokens, ("regexp_replace",), lower)
 
 
 _STRFTIME_DIRECTIVES = {
@@ -7188,155 +7151,138 @@ def _rewrite_strftime(tokens: List[Token]) -> List[Token]:
     """DuckDB ``strftime(x, '%Y-%m-%d')`` -> ``date_format(x, 'yyyy-MM-dd')``
     and ``strptime(s, fmt)`` -> ``to_timestamp(s, fmt)``, converting
     C-style %-codes to Java datetime patterns."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "word" and tok.text.lower() in ("strftime", "strptime", "try_strptime"):
-            p_open = _next_code(tokens, i)
-            if p_open < n and tokens[p_open].text == "(":
-                close = _matching_paren(tokens, p_open)
-                args = _call_args(tokens, p_open, close)
-                if len(args) == 2:
-                    low_fn = tok.text.lower()
-                    fn = {
-                        "strftime": "date_format",
-                        "strptime": "to_timestamp",
-                        "try_strptime": "try_to_timestamp",
-                    }[low_fn]
-                    # %V/%G (ISO week / ISO week-year): Spark's
-                    # formatter removed week-based patterns, so compose
-                    # those directives from weekofyear()/the ISO-year
-                    # expression and date_format the rest
-                    fmt_code = [
-                        t for t in args[1] if t.kind not in ("ws", "comment")
-                    ]
-                    if (
-                        low_fn == "strftime"
-                        and len(fmt_code) == 1
-                        and fmt_code[0].kind == "string"
-                        and re.search(
-                            r"%[VG]",
-                            _decode_spark_string(fmt_code[0]).replace("%%", ""),
-                        )
-                    ):
-                        fmt_s = _decode_spark_string(fmt_code[0])
-                        ra = _rewrite_strftime(args[0])
-                        x = _sql(ra, 0, len(ra))
-                        # Thursday of x's ISO week. This emission is
-                        # re-processed by the call-shim pass, which
-                        # rewrites ``weekday`` to DuckDB's Sunday=0
-                        # form (dayofweek - 1); (weekday + 6) % 7 then
-                        # lands on Monday=0, the ISO day number
-                        iso_year = (
-                            f"CAST(year(date_add(CAST(({x}) AS DATE), "
-                            f"3 - ((weekday(({x})) + 6) % 7))) AS STRING)"
-                        )
-                        iso_week = (
-                            f"lpad(CAST(weekofyear(({x})) AS STRING), "
-                            f"2, '0')"
-                        )
-                        parts: List[str] = []
-                        chunk: List[str] = []
-                        k = 0
-                        while k < len(fmt_s):
-                            if fmt_s[k] == "%" and k + 1 < len(fmt_s):
-                                d = fmt_s[k + 1]
-                                if d in ("V", "G"):
-                                    if chunk:
-                                        conv = _convert_strftime_format(
-                                            "".join(chunk)
-                                        ).replace("'", "''")
-                                        parts.append(
-                                            f"date_format(({x}), '{conv}')"
-                                        )
-                                        chunk = []
-                                    parts.append(
-                                        iso_week if d == "V" else iso_year
-                                    )
-                                    k += 2
-                                    continue
-                                chunk.append(fmt_s[k])
-                                chunk.append(d)
-                                k += 2
-                                continue
-                            chunk.append(fmt_s[k])
-                            k += 1
-                        if chunk:
-                            conv = _convert_strftime_format(
-                                "".join(chunk)
-                            ).replace("'", "''")
-                            parts.append(f"date_format(({x}), '{conv}')")
-                        body = (
-                            parts[0]
-                            if len(parts) == 1
-                            else "concat(" + ", ".join(parts) + ")"
-                        )
-                        out.extend(_toks(body))
-                        i = close + 1
-                        continue
-                    # parse-side year adjustments (strptime family):
-                    # - no year directive at all: DuckDB's base year is
-                    #   1900, Spark's 1970 -> shift back 70 years
-                    # - %y two-digit year: C pivots 69-99 into the
-                    #   1900s, Java 'yy' always parses 20yy -> shift
-                    #   back a century when the parsed year lands >= x69
-                    adjust = None
-                    if low_fn in ("strptime", "try_strptime"):
-                        fmt_all = "".join(
-                            t.text for t in args[1] if t.kind == "string"
-                        )
-                        if fmt_all and not re.search(
-                            r"%[-]?[yYG]", fmt_all
-                        ):
-                            adjust = "base1900"
-                        elif re.search(r"%[-]?y", fmt_all) and not re.search(
-                            r"%[-]?[YG]", fmt_all
-                        ):
-                            adjust = "c_pivot"
-                    call: List[Token] = [
-                        Token("word", fn), Token("op", "(")
-                    ]
-                    # recurse: the value arg may itself contain strftime calls
-                    call.extend(_rewrite_strftime(args[0]))
-                    call.append(Token("op", ","))
-                    for t in args[1]:
-                        if t.kind == "string":
-                            # decode the SQL literal, convert, re-encode:
-                            # the Java pattern may itself contain quote
-                            # characters ('T' literals, '' escapes)
-                            inner = t.text[1:-1].replace("''", "'")
-                            conv = _convert_strftime_format(inner)
-                            call.append(
-                                Token(
-                                    "string",
-                                    "'" + conv.replace("'", "''") + "'",
+
+    def lower(call: _CallSite, walk):
+        args = _call_args(call.tokens, call.p_open, call.close)
+        if len(args) == 2:
+            low_fn = call.name
+            fn = {
+                "strftime": "date_format",
+                "strptime": "to_timestamp",
+                "try_strptime": "try_to_timestamp",
+            }[low_fn]
+            # %V/%G (ISO week / ISO week-year): Spark's
+            # formatter removed week-based patterns, so compose
+            # those directives from weekofyear()/the ISO-year
+            # expression and date_format the rest
+            fmt_code = [
+                t for t in args[1] if t.kind not in ("ws", "comment")
+            ]
+            if (
+                low_fn == "strftime"
+                and len(fmt_code) == 1
+                and fmt_code[0].kind == "string"
+                and re.search(
+                    r"%[VG]",
+                    _decode_spark_string(fmt_code[0]).replace("%%", ""),
+                )
+            ):
+                fmt_s = _decode_spark_string(fmt_code[0])
+                ra = walk(args[0])
+                x = _sql(ra, 0, len(ra))
+                # Thursday of x's ISO week. This emission is
+                # re-processed by the call-shim pass, which
+                # rewrites ``weekday`` to DuckDB's Sunday=0
+                # form (dayofweek - 1); (weekday + 6) % 7 then
+                # lands on Monday=0, the ISO day number
+                iso_year = (
+                    f"CAST(year(date_add(CAST(({x}) AS DATE), "
+                    f"3 - ((weekday(({x})) + 6) % 7))) AS STRING)"
+                )
+                iso_week = (
+                    f"lpad(CAST(weekofyear(({x})) AS STRING), "
+                    f"2, '0')"
+                )
+                parts: List[str] = []
+                chunk: List[str] = []
+                k = 0
+                while k < len(fmt_s):
+                    if fmt_s[k] == "%" and k + 1 < len(fmt_s):
+                        d = fmt_s[k + 1]
+                        if d in ("V", "G"):
+                            if chunk:
+                                conv = _convert_strftime_format(
+                                    "".join(chunk)
+                                ).replace("'", "''")
+                                parts.append(
+                                    f"date_format(({x}), '{conv}')"
                                 )
+                                chunk = []
+                            parts.append(
+                                iso_week if d == "V" else iso_year
                             )
-                        else:
-                            call.append(t)
-                    call.append(Token("op", ")"))
-                    call_sql = "".join(t.text for t in call)
-                    if adjust == "base1900":
-                        out.extend(
-                            _toks(f"({call_sql} - make_ym_interval(70, 0))")
+                            k += 2
+                            continue
+                        chunk.append(fmt_s[k])
+                        chunk.append(d)
+                        k += 2
+                        continue
+                    chunk.append(fmt_s[k])
+                    k += 1
+                if chunk:
+                    conv = _convert_strftime_format(
+                        "".join(chunk)
+                    ).replace("'", "''")
+                    parts.append(f"date_format(({x}), '{conv}')")
+                body = (
+                    parts[0]
+                    if len(parts) == 1
+                    else "concat(" + ", ".join(parts) + ")"
+                )
+                return body
+            # parse-side year adjustments (strptime family):
+            # - no year directive at all: DuckDB's base year is
+            #   1900, Spark's 1970 -> shift back 70 years
+            # - %y two-digit year: C pivots 69-99 into the
+            #   1900s, Java 'yy' always parses 20yy -> shift
+            #   back a century when the parsed year lands >= x69
+            adjust = None
+            if low_fn in ("strptime", "try_strptime"):
+                fmt_all = "".join(
+                    t.text for t in args[1] if t.kind == "string"
+                )
+                if fmt_all and not re.search(
+                    r"%[-]?[yYG]", fmt_all
+                ):
+                    adjust = "base1900"
+                elif re.search(r"%[-]?y", fmt_all) and not re.search(
+                    r"%[-]?[YG]", fmt_all
+                ):
+                    adjust = "c_pivot"
+            # recurse: the value arg may itself contain strftime calls
+            lowered = [Token("word", fn), Token("op", "(")] + walk(args[0])
+            lowered.append(Token("op", ","))
+            for t in args[1]:
+                if t.kind == "string":
+                    # decode the SQL literal, convert, re-encode:
+                    # the Java pattern may itself contain quote
+                    # characters ('T' literals, '' escapes)
+                    inner = t.text[1:-1].replace("''", "'")
+                    conv = _convert_strftime_format(inner)
+                    lowered.append(
+                        Token(
+                            "string",
+                            "'" + conv.replace("'", "''") + "'",
                         )
-                    elif adjust == "c_pivot":
-                        out.extend(
-                            _toks(
-                                f"(CASE WHEN year({call_sql}) % 100 >= 69 "
-                                f"THEN {call_sql} - make_ym_interval(100, 0) "
-                                f"ELSE {call_sql} END)"
-                            )
-                        )
-                    else:
-                        out.extend(call)
-                    i = close + 1
-                    continue
-        out.append(tok)
-        i += 1
-    return out
+                    )
+                else:
+                    lowered.append(t)
+            lowered.append(Token("op", ")"))
+            call_sql = "".join(t.text for t in lowered)
+            if adjust == "base1900":
+                return f"({call_sql} - make_ym_interval(70, 0))"
+            if adjust == "c_pivot":
+                return (
+                    f"(CASE WHEN year({call_sql}) % 100 >= 69 "
+                    f"THEN {call_sql} - make_ym_interval(100, 0) "
+                    f"ELSE {call_sql} END)"
+                )
+            return lowered
+        return None
+
+    return _lower_calls(
+        tokens, ("strftime", "strptime", "try_strptime"), lower
+    )
 
 
 _EPOCH_FNS = {"epoch": "unix_seconds", "epoch_ms": "unix_millis", "epoch_us": "unix_micros"}
@@ -7728,78 +7674,50 @@ def _rewrite_series_table_fns(tokens: List[Token]) -> List[Token]:
     maps to Spark's native range TVF (same exclusive-end semantics) with
     its ``id`` column renamed to DuckDB's ``range``. Scalar positions
     are untouched (both are list-returning there; handled elsewhere)."""
-    out: List[Token] = []
-    prev_code: Optional[Token] = None
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if (
-            tok.kind == "word"
-            and tok.text.lower() in ("generate_series", "range")
-            and prev_code is not None
-            and prev_code.kind == "word"
-            and prev_code.upper in ("FROM", "JOIN")
+
+    def lower(call: _CallSite, walk):
+        if not (
+            call.prev is not None
+            and call.prev.kind == "word"
+            and call.prev.upper in ("FROM", "JOIN")
         ):
-            p = _next_code(tokens, i)
-            if p < n and tokens[p].kind == "op" and tokens[p].text == "(":
-                close = _matching_paren(tokens, p)
-                inner = _rewrite_series_table_fns(tokens[i + 1 : close + 1])
-                temporal = any(
-                    t.kind == "word"
-                    and t.upper in ("DATE", "TIMESTAMP", "INTERVAL")
-                    for t in tokens[p : close + 1]
-                )
-                rargs = _call_args(tokens, p, close)
-                rendered = [
-                    "".join(x.text for x in arg).strip() for arg in rargs
-                ]
-                if temporal and len(rendered) == 3:
-                    # temporal series: DuckDB yields TIMESTAMPs (DATE
-                    # endpoints widen); Spark's range TVF is BIGINT-only
-                    # so both go through an exploded sequence —
-                    # inclusive for generate_series, with DuckDB's
-                    # EXCLUSIVE end re-applied for range (positive step)
-                    a_t, b_t, s_t = rendered
-                    colname = (
-                        "generate_series"
-                        if tok.text.lower() == "generate_series"
-                        else "`range`"
-                    )
-                    seq = (
-                        f"sequence(CAST(({a_t}) AS TIMESTAMP), "
-                        f"CAST(({b_t}) AS TIMESTAMP), {s_t})"
-                    )
-                    if tok.text.lower() == "generate_series":
-                        out.extend(
-                            _toks(
-                                f"(SELECT explode({seq}) AS {colname})"
-                            )
-                        )
-                    else:
-                        out.extend(
-                            _toks(
-                                f"(SELECT * FROM (SELECT explode({seq}) "
-                                f"AS {colname}) WHERE {colname} < "
-                                f"CAST(({b_t}) AS TIMESTAMP))"
-                            )
-                        )
-                elif tok.text.lower() == "generate_series":
-                    out.extend(_toks("(SELECT explode(sequence"))
-                    out.extend(inner)
-                    out.extend(_toks(") AS generate_series)"))
-                else:
-                    out.extend(_toks("(SELECT id AS `range` FROM range"))
-                    out.extend(inner)
-                    out.extend(_toks(")"))
-                prev_code = out[-1]
-                i = close + 1
-                continue
-        out.append(tok)
-        if tok.kind not in ("ws", "comment"):
-            prev_code = tok
-        i += 1
-    return out
+            return None
+        toks = call.tokens
+        inner = walk(toks[call.start + 1 : call.close + 1])
+        temporal = any(
+            t.kind == "word" and t.upper in ("DATE", "TIMESTAMP", "INTERVAL")
+            for t in toks[call.p_open : call.close + 1]
+        )
+        rendered = [
+            "".join(x.text for x in arg).strip()
+            for arg in _call_args(toks, call.p_open, call.close)
+        ]
+        if temporal and len(rendered) == 3:
+            # temporal series: DuckDB yields TIMESTAMPs (DATE endpoints
+            # widen); Spark's range TVF is BIGINT-only so both go
+            # through an exploded sequence — inclusive for
+            # generate_series, with DuckDB's EXCLUSIVE end re-applied
+            # for range (positive step)
+            a_t, b_t, s_t = rendered
+            seq = (
+                f"sequence(CAST(({a_t}) AS TIMESTAMP), "
+                f"CAST(({b_t}) AS TIMESTAMP), {s_t})"
+            )
+            if call.name == "generate_series":
+                return f"(SELECT explode({seq}) AS generate_series)"
+            return (
+                f"(SELECT * FROM (SELECT explode({seq}) AS `range`) "
+                f"WHERE `range` < CAST(({b_t}) AS TIMESTAMP))"
+            )
+        if call.name == "generate_series":
+            return (
+                _toks("(SELECT explode(sequence")
+                + inner
+                + _toks(") AS generate_series)")
+            )
+        return _toks("(SELECT id AS `range` FROM range") + inner + _toks(")")
+
+    return _lower_calls(tokens, ("generate_series", "range"), lower)
 
 
 def _glob_to_regex(pat: str) -> str:
@@ -7943,9 +7861,6 @@ def _rewrite_polymorphic_len(tokens: List[Token]) -> List[Token]:
     the same way. Unhinted column references keep string semantics
     (documented in COVERAGE.md; reference DuckDB behavior:
     ``len([1,2])`` = 2)."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
     in_lambda = _hof_lambda_spans(tokens) if _TYPE_HINTS.get() else set()
 
     def _listish_operand(lo: int, hi: int, hintable: bool) -> bool:
@@ -7969,36 +7884,26 @@ def _rewrite_polymorphic_len(tokens: List[Token]) -> List[Token]:
                 return True
         return False
 
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "word" and tok.text.lower() in ("len", "length"):
-            p = _next_code(tokens, i)
-            if p < n and tokens[p].kind == "op" and tokens[p].text == "(":
-                close = _matching_paren(tokens, p)
-                hintable = i not in in_lambda
-                # the whole argument, or every operand of a top-level
-                # ``||`` chain (list concat when the operands are
-                # lists), must be visibly list-valued: a list-producing
-                # call spanning the operand, or an ARRAY-hinted plain
-                # column reference
-                pipes = _top_level_positions(
-                    tokens, p + 1, close,
-                    lambda t: t.kind == "op" and t.text == "||",
-                )
-                bounds = [p + 1] + [q + 1 for q in pipes] + [close]
-                spans = [
-                    (bounds[k], pipes[k] if k < len(pipes) else close)
-                    for k in range(len(pipes) + 1)
-                ]
-                if spans and all(
-                    _listish_operand(lo, hi, hintable) for lo, hi in spans
-                ):
-                    out.append(Token("word", "size"))
-                    i += 1
-                    continue
-        out.append(tok)
-        i += 1
-    return out
+    def lower(call: _CallSite, walk):
+        p, close = call.p_open, call.close
+        hintable = call.start not in in_lambda
+        # the whole argument, or every operand of a top-level ``||``
+        # chain (list concat when the operands are lists), must be
+        # visibly list-valued: a list-producing call spanning the
+        # operand, or an ARRAY-hinted plain column reference
+        pipes = _top_level_positions(
+            tokens, p + 1, close, lambda t: t.kind == "op" and t.text == "||"
+        )
+        bounds = [p + 1] + [q + 1 for q in pipes] + [close]
+        spans = [
+            (bounds[k], pipes[k] if k < len(pipes) else close)
+            for k in range(len(pipes) + 1)
+        ]
+        if all(_listish_operand(lo, hi, hintable) for lo, hi in spans):
+            return [Token("word", "size")], call.start + 1
+        return None
+
+    return _lower_calls(tokens, ("len", "length"), lower)
 
 
 def _json_path_literal(v: str) -> str:
@@ -9092,9 +8997,7 @@ def _snt_rec(code: List[Token], depth: int) -> Optional[str]:
     return None
 
 
-def _rewrite_round_double(
-    tokens: List[Token], in_py_udf: bool = False
-) -> List[Token]:
+def _rewrite_round_double(tokens: List[Token]) -> List[Token]:
     """``round(x)`` / ``round(x, k)`` with any int32 literal k — see
     ``_round_double_sql``; literal operands constant-fold
     (``_fold_literal_round``); dynamic scales take
@@ -9116,182 +9019,139 @@ def _rewrite_round_double(
     ('100.242'). Negative k keeps the template: DuckDB's own
     fractional-decimal negative-scale rounding is internally
     inconsistent (see _fold_literal_round)."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    udf_spans = _py_udf_arg_spans(tokens) if not in_py_udf else None
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "word" and tok.text.lower() == "round":
-            in_udf_here = in_py_udf or (
-                udf_spans is not None and i in udf_spans
-            )
-            p_open = _next_code(tokens, i)
+
+    def lower(call: _CallSite, walk):
+        args = _call_args(call.tokens, call.p_open, call.close)
+        k: Optional[int] = None
+        if len(args) == 1:
+            k = 0
+        elif len(args) == 2:
+            k_code = [
+                t for t in args[1] if t.kind not in ("ws", "comment")
+            ]
+            sign = 1
             if (
-                p_open < n
-                and tokens[p_open].kind == "op"
-                and tokens[p_open].text == "("
+                len(k_code) == 2
+                and k_code[0].kind == "op"
+                and k_code[0].text == "-"
             ):
-                close = _matching_paren(tokens, p_open)
-                args = _call_args(tokens, p_open, close)
-                k: Optional[int] = None
-                if len(args) == 1:
-                    k = 0
-                elif len(args) == 2:
-                    k_code = [
-                        t for t in args[1] if t.kind not in ("ws", "comment")
+                sign = -1
+                k_code = k_code[1:]
+            if (
+                len(k_code) == 1
+                and k_code[0].kind in ("number", "word")
+                and k_code[0].text.isdigit()
+                and -2147483648 <= sign * int(k_code[0].text) <= 2147483647
+            ):
+                k = sign * int(k_code[0].text)
+        if k is not None:
+            x = "".join(t.text for t in walk(args[0], call.in_py_udf)).strip()
+            folded = _fold_literal_round(
+                x, k,
+                orig="".join(t.text for t in args[0]).strip(),
+            )
+            sty = (
+                _static_numeric_type(args[0])
+                if folded is None
+                else None
+            )
+            if folded is None and (
+                (k >= 0 and sty in ("decimal", "decimal0"))
+                or (k < 0 and sty == "decimal0")
+            ):
+                # statically DECIMAL operand: native Spark
+                # round matches DuckDB; the template would
+                # coerce the result to DOUBLE
+                return None
+            if folded is None and k < 0 and sty == "decimal":
+                # fractional DECIMAL chain (hinted plain
+                # columns and/or literals): DuckDB's negative-
+                # scale width clamp is statically decidable
+                # from the chain's (w, s). The clamp is
+                # ABSOLUTE — a clamped site is the constant 0
+                # even on NULL input (probed, DuckDB 1.0);
+                # non-clamped sites keep native Spark round,
+                # whose decimal HALF_UP matches DuckDB's
+                # half-away and DECIMAL(_,0) shape
+                res = _parse_literal_decimal_chain(x)
+                if res is not None and not res[3]:
+                    return "0" if -k >= res[1] - res[2] else None
+            if folded is not None:
+                emitted = folded
+            elif not call.in_py_udf and (
+                len(x) > _BIND_THRESHOLD
+                or _contains_expanding_call(args[0])
+            ):
+                inner = _round_double_sql("__rb.x", k)
+                emitted = (
+                    "element_at(transform(array(named_struct("
+                    f"'x', ({x}))), __rb -> {inner}), 1)"
+                )
+            elif call.in_py_udf and (
+                len(x) > _BIND_THRESHOLD
+                or _contains_expanding_call(args[0])
+            ) and _render_static_type(
+                [
+                    t
+                    for t in args[0]
+                    if t.kind not in ("ws", "comment")
+                ]
+            ) == "double":
+                # long statically-DOUBLE operand inside a
+                # Python-UDF span: the template would repeat it
+                # ~9x per nesting level (lambda binding is
+                # span-forbidden) — route through the exact
+                # Python twin, operand passed ONCE as its
+                # shortest-round-trip Java repr
+                emitted = (
+                    f"CAST(__duck_round(CAST(({x}) AS"
+                    f" STRING), {k}) AS DOUBLE)"
+                )
+            else:
+                emitted = _round_double_sql(x, k)
+            return emitted
+        if len(args) == 2:
+            # non-literal scale: Spark round() would reject it
+            # at analysis (NON_FOLDABLE_INPUT); a literal int
+            # beyond int32 keeps Spark round (DuckDB errors)
+            k_code2 = [
+                t for t in args[1] if t.kind not in ("ws", "comment")
+            ]
+            lit_out_of_range = (
+                len(k_code2) == 1
+                and k_code2[0].kind in ("number", "word")
+                and k_code2[0].text.isdigit()
+            ) or (
+                len(k_code2) == 2
+                and k_code2[0].kind == "op"
+                and k_code2[0].text == "-"
+                and k_code2[1].text.isdigit()
+            )
+            if not lit_out_of_range:
+                x, ks = (
+                    "".join(t.text for t in walk(a, call.in_py_udf)).strip()
+                    for a in args
+                )
+                if call.in_py_udf and (
+                    len(x) > _BIND_THRESHOLD
+                    or _contains_expanding_call(args[0])
+                ) and _render_static_type(
+                    [
+                        t
+                        for t in args[0]
+                        if t.kind not in ("ws", "comment")
                     ]
-                    sign = 1
-                    if (
-                        len(k_code) == 2
-                        and k_code[0].kind == "op"
-                        and k_code[0].text == "-"
-                    ):
-                        sign = -1
-                        k_code = k_code[1:]
-                    if (
-                        len(k_code) == 1
-                        and k_code[0].kind in ("number", "word")
-                        and k_code[0].text.isdigit()
-                        and -2147483648 <= sign * int(k_code[0].text) <= 2147483647
-                    ):
-                        k = sign * int(k_code[0].text)
-                if k is not None:
-                    x = "".join(
-                        t.text
-                        for t in _rewrite_round_double(
-                            args[0], in_py_udf=in_udf_here
-                        )
-                    ).strip()
-                    folded = _fold_literal_round(
-                        x, k,
-                        orig="".join(t.text for t in args[0]).strip(),
+                ) == "double":
+                    # same span escape as the literal-k branch
+                    return (
+                        f"CAST(__duck_round(CAST(({x}) AS"
+                        f" STRING), CAST(({ks}) AS INT))"
+                        " AS DOUBLE)"
                     )
-                    sty = (
-                        _static_numeric_type(args[0])
-                        if folded is None
-                        else None
-                    )
-                    if folded is None and (
-                        (k >= 0 and sty in ("decimal", "decimal0"))
-                        or (k < 0 and sty == "decimal0")
-                    ):
-                        # statically DECIMAL operand: native Spark
-                        # round matches DuckDB; the template would
-                        # coerce the result to DOUBLE
-                        out.append(tok)
-                        i += 1
-                        continue
-                    if folded is None and k < 0 and sty == "decimal":
-                        # fractional DECIMAL chain (hinted plain
-                        # columns and/or literals): DuckDB's negative-
-                        # scale width clamp is statically decidable
-                        # from the chain's (w, s). The clamp is
-                        # ABSOLUTE — a clamped site is the constant 0
-                        # even on NULL input (probed, DuckDB 1.0);
-                        # non-clamped sites keep native Spark round,
-                        # whose decimal HALF_UP matches DuckDB's
-                        # half-away and DECIMAL(_,0) shape
-                        res = _parse_literal_decimal_chain(x)
-                        if res is not None and not res[3]:
-                            if -k >= res[1] - res[2]:
-                                out.extend(_toks("0"))
-                                i = close + 1
-                            else:
-                                out.append(tok)
-                                i += 1
-                            continue
-                    if folded is not None:
-                        emitted = folded
-                    elif not in_udf_here and (
-                        len(x) > _BIND_THRESHOLD
-                        or _contains_expanding_call(args[0])
-                    ):
-                        inner = _round_double_sql("__rb.x", k)
-                        emitted = (
-                            "element_at(transform(array(named_struct("
-                            f"'x', ({x}))), __rb -> {inner}), 1)"
-                        )
-                    elif in_udf_here and (
-                        len(x) > _BIND_THRESHOLD
-                        or _contains_expanding_call(args[0])
-                    ) and _render_static_type(
-                        [
-                            t
-                            for t in args[0]
-                            if t.kind not in ("ws", "comment")
-                        ]
-                    ) == "double":
-                        # long statically-DOUBLE operand inside a
-                        # Python-UDF span: the template would repeat it
-                        # ~9x per nesting level (lambda binding is
-                        # span-forbidden) — route through the exact
-                        # Python twin, operand passed ONCE as its
-                        # shortest-round-trip Java repr
-                        emitted = (
-                            f"CAST(__duck_round(CAST(({x}) AS"
-                            f" STRING), {k}) AS DOUBLE)"
-                        )
-                    else:
-                        emitted = _round_double_sql(x, k)
-                    out.extend(_toks(emitted))
-                    i = close + 1
-                    continue
-                if len(args) == 2:
-                    # non-literal scale: Spark round() would reject it
-                    # at analysis (NON_FOLDABLE_INPUT); a literal int
-                    # beyond int32 keeps Spark round (DuckDB errors)
-                    k_code2 = [
-                        t for t in args[1] if t.kind not in ("ws", "comment")
-                    ]
-                    lit_out_of_range = (
-                        len(k_code2) == 1
-                        and k_code2[0].kind in ("number", "word")
-                        and k_code2[0].text.isdigit()
-                    ) or (
-                        len(k_code2) == 2
-                        and k_code2[0].kind == "op"
-                        and k_code2[0].text == "-"
-                        and k_code2[1].text.isdigit()
-                    )
-                    if not lit_out_of_range:
-                        x = "".join(
-                            t.text
-                            for t in _rewrite_round_double(
-                                args[0], in_py_udf=in_udf_here
-                            )
-                        ).strip()
-                        ks = "".join(
-                            t.text
-                            for t in _rewrite_round_double(
-                                args[1], in_py_udf=in_udf_here
-                            )
-                        ).strip()
-                        if in_udf_here and (
-                            len(x) > _BIND_THRESHOLD
-                            or _contains_expanding_call(args[0])
-                        ) and _render_static_type(
-                            [
-                                t
-                                for t in args[0]
-                                if t.kind not in ("ws", "comment")
-                            ]
-                        ) == "double":
-                            # same span escape as the literal-k branch
-                            out.extend(_toks(
-                                f"CAST(__duck_round(CAST(({x}) AS"
-                                f" STRING), CAST(({ks}) AS INT))"
-                                " AS DOUBLE)"
-                            ))
-                        else:
-                            out.extend(
-                                _toks(_round_double_dynamic_sql(x, ks))
-                            )
-                        i = close + 1
-                        continue
-        out.append(tok)
-        i += 1
-    return out
+                return _round_double_dynamic_sql(x, ks)
+        return None
+
+    return _lower_calls(tokens, ("round",), lower)
 
 
 def _integral_cast_sql(x: str, ty: str, fn: str, bind: bool = False) -> str:

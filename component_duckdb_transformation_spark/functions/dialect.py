@@ -9187,9 +9187,7 @@ def _integral_cast_sql(x: str, ty: str, fn: str, bind: bool = False) -> str:
     )
 
 
-def _rewrite_integral_casts(
-    tokens: List[Token], in_py_udf: bool = False
-) -> List[Token]:
+def _rewrite_integral_casts(tokens: List[Token]) -> List[Token]:
     """DuckDB ROUNDS on numeric->integral casts (half away from zero for
     DECIMAL, half to even for DOUBLE); Spark TRUNCATES. See
     ``_integral_cast_sql`` for the exact dispatch. Handles
@@ -9209,76 +9207,78 @@ def _rewrite_integral_casts(
             for t in arg_tokens
         ) or _contains_expanding_call(arg_tokens)
 
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    udf_spans = _py_udf_arg_spans(tokens) if not in_py_udf else None
-    while i < n:
-        tok = tokens[i]
-        in_udf_here = in_py_udf or (
-            udf_spans is not None and i in udf_spans
-        )
-        if tok.kind == "word" and tok.text.lower() in ("cast", "try_cast"):
-            p_open = _next_code(tokens, i)
-            if p_open < n and tokens[p_open].kind == "op" and tokens[p_open].text == "(":
-                close = _matching_paren(tokens, p_open)
-                as_i = _top_level_as(tokens, p_open, close)
-                if as_i is not None:
-                    ty = _next_code(tokens, as_i)
-                    ty_end = _next_code(tokens, ty)
-                    if (
-                        ty < n
-                        and tokens[ty].kind == "word"
-                        and tokens[ty].text.lower() in _INTEGRAL_TYPES
-                        and ty_end == close
-                    ):
-                        arg = tokens[p_open + 1 : as_i]
-                        inner = _rewrite_integral_casts(
-                            arg, in_py_udf=in_udf_here
-                        )
-                        x = "".join(t.text for t in inner).strip()
-                        out.extend(
-                            _toks(
-                                _integral_cast_sql(
-                                    x, tokens[ty].text, tok.text,
-                                    bind=_should_bind(x, arg, in_udf_here),
+    def scan(tokens: List[Token], in_py_udf: bool) -> List[Token]:
+        # in_py_udf: ``tokens`` are a Python UDF's argument
+        out: List[Token] = []
+        i = 0
+        n = len(tokens)
+        udf_spans = _py_udf_arg_spans(tokens) if not in_py_udf else None
+        while i < n:
+            tok = tokens[i]
+            in_udf_here = in_py_udf or (
+                udf_spans is not None and i in udf_spans
+            )
+            if tok.kind == "word" and tok.text.lower() in ("cast", "try_cast"):
+                p_open = _next_code(tokens, i)
+                if p_open < n and tokens[p_open].kind == "op" and tokens[p_open].text == "(":
+                    close = _matching_paren(tokens, p_open)
+                    as_i = _top_level_as(tokens, p_open, close)
+                    if as_i is not None:
+                        ty = _next_code(tokens, as_i)
+                        ty_end = _next_code(tokens, ty)
+                        if (
+                            ty < n
+                            and tokens[ty].kind == "word"
+                            and tokens[ty].text.lower() in _INTEGRAL_TYPES
+                            and ty_end == close
+                        ):
+                            arg = tokens[p_open + 1 : as_i]
+                            inner = scan(arg, in_udf_here)
+                            x = "".join(t.text for t in inner).strip()
+                            out.extend(
+                                _toks(
+                                    _integral_cast_sql(
+                                        x, tokens[ty].text, tok.text,
+                                        bind=_should_bind(x, arg, in_udf_here),
+                                    )
                                 )
                             )
-                        )
-                        i = close + 1
-                        continue
-        elif tok.kind == "op" and tok.text == "::":
-            ty = _next_code(tokens, i)
-            ty_end = _next_code(tokens, ty) if ty < n else n
-            if (
-                ty < n
-                and tokens[ty].kind == "word"
-                and tokens[ty].text.lower() in _INTEGRAL_TYPES
-                and not (
-                    ty_end < n
-                    and tokens[ty_end].kind == "op"
-                    and tokens[ty_end].text == "("
-                )
-            ):
-                operand = _pop_operand(out)
-                if operand:
-                    x = "".join(t.text for t in operand).strip()
-                    out.extend(
-                        _toks(_integral_cast_sql(
-                            x, tokens[ty].text, "CAST",
-                            bind=_should_bind(x, operand, in_udf_here),
-                        ))
+                            i = close + 1
+                            continue
+            elif tok.kind == "op" and tok.text == "::":
+                ty = _next_code(tokens, i)
+                ty_end = _next_code(tokens, ty) if ty < n else n
+                if (
+                    ty < n
+                    and tokens[ty].kind == "word"
+                    and tokens[ty].text.lower() in _INTEGRAL_TYPES
+                    and not (
+                        ty_end < n
+                        and tokens[ty_end].kind == "op"
+                        and tokens[ty_end].text == "("
                     )
+                ):
+                    operand = _pop_operand(out)
+                    if operand:
+                        x = "".join(t.text for t in operand).strip()
+                        out.extend(
+                            _toks(_integral_cast_sql(
+                                x, tokens[ty].text, "CAST",
+                                bind=_should_bind(x, operand, in_udf_here),
+                            ))
+                        )
+                        i = ty + 1
+                        continue
+                    out.append(tok)
+                    out.extend(_toks("DECIMAL(38,0)::"))
+                    out.append(tokens[ty])
                     i = ty + 1
                     continue
-                out.append(tok)
-                out.extend(_toks("DECIMAL(38,0)::"))
-                out.append(tokens[ty])
-                i = ty + 1
-                continue
-        out.append(tok)
-        i += 1
-    return out
+            out.append(tok)
+            i += 1
+        return out
+
+    return scan(tokens, False)
 
 
 def _top_level_as(tokens: List[Token], open_idx: int, close_idx: int):
@@ -9843,9 +9843,7 @@ def _hof_lambda_spans(tokens: List[Token]) -> set:
     return spans
 
 
-def _rewrite_varchar_casts(
-    tokens: List[Token], in_py_udf: bool = False
-) -> List[Token]:
+def _rewrite_varchar_casts(tokens: List[Token]) -> List[Token]:
     """Lower the ``__DUCKVARCHAR`` sentinel (planted by
     ``_rewrite_bare_types`` for user ``VARCHAR``/``TEXT`` cast targets
     and by ``_rewrite_concat_null_skipping`` for concat's per-argument
@@ -9855,93 +9853,95 @@ def _rewrite_varchar_casts(
     ``format()`` shim emits it from. Literal operands render statically
     (exact AND foldable); operands inside VALUES lists keep the plain
     cast (inline tables reject non-foldable lambdas)."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    in_values = _values_spans(tokens)
-    py_spans = _py_udf_arg_spans(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "word" and tok.text.lower() in ("cast", "try_cast"):
-            p_open = _next_code(tokens, i)
-            if p_open < n and tokens[p_open].kind == "op" and tokens[p_open].text == "(":
-                close = _matching_paren(tokens, p_open)
-                as_i = _top_level_as(tokens, p_open, close)
-                if as_i is not None:
-                    ty = _next_code(tokens, as_i)
-                    ty_end = _next_code(tokens, ty) if ty < n else n
-                    if (
-                        ty < n
-                        and tokens[ty].kind == "word"
-                        and tokens[ty].text == "__DUCKVARCHAR"
-                        and ty_end == close
-                    ):
-                        py = in_py_udf or i in py_spans
-                        inner = _rewrite_varchar_casts(
-                            tokens[p_open + 1 : as_i], py
-                        )
-                        inner_code = [
-                            t for t in inner
+    def scan(tokens: List[Token], in_py_udf: bool) -> List[Token]:
+        # in_py_udf: ``tokens`` are a Python UDF's argument
+        out: List[Token] = []
+        i = 0
+        n = len(tokens)
+        in_values = _values_spans(tokens)
+        py_spans = _py_udf_arg_spans(tokens)
+        while i < n:
+            tok = tokens[i]
+            if tok.kind == "word" and tok.text.lower() in ("cast", "try_cast"):
+                p_open = _next_code(tokens, i)
+                if p_open < n and tokens[p_open].kind == "op" and tokens[p_open].text == "(":
+                    close = _matching_paren(tokens, p_open)
+                    as_i = _top_level_as(tokens, p_open, close)
+                    if as_i is not None:
+                        ty = _next_code(tokens, as_i)
+                        ty_end = _next_code(tokens, ty) if ty < n else n
+                        if (
+                            ty < n
+                            and tokens[ty].kind == "word"
+                            and tokens[ty].text == "__DUCKVARCHAR"
+                            and ty_end == close
+                        ):
+                            py = in_py_udf or i in py_spans
+                            inner = scan(tokens[p_open + 1 : as_i], py)
+                            inner_code = [
+                                t for t in inner
+                                if t.kind not in ("ws", "comment")
+                            ]
+                            x = "".join(t.text for t in inner).strip()
+                            static = _static_varchar_cast(inner_code)
+                            listish = _operand_is_listish(inner_code) or (
+                                _hinted_primary_type(inner_code) or ""
+                            ).startswith("array<")
+                            if static is not None:
+                                out.extend(_toks(static))
+                            elif i in in_values or (listish and py):
+                                out.extend(_toks(f"CAST(({x}) AS STRING)"))
+                            elif listish:
+                                out.extend(_toks(_list_varchar_sql(x)))
+                            else:
+                                out.extend(_toks(_varchar_cast_sql(x, py)))
+                            i = close + 1
+                            continue
+            elif tok.kind == "op" and tok.text == "::":
+                ty = _next_code(tokens, i)
+                if (
+                    ty < n
+                    and tokens[ty].kind == "word"
+                    and tokens[ty].text == "__DUCKVARCHAR"
+                ):
+                    operand = _pop_operand(out)
+                    if operand:
+                        x = "".join(t.text for t in operand).strip()
+                        op_code = [
+                            t for t in operand
                             if t.kind not in ("ws", "comment")
                         ]
-                        x = "".join(t.text for t in inner).strip()
-                        static = _static_varchar_cast(inner_code)
-                        listish = _operand_is_listish(inner_code) or (
-                            _hinted_primary_type(inner_code) or ""
+                        static = _static_varchar_cast(op_code)
+                        py2 = in_py_udf or i in py_spans
+                        listish = _operand_is_listish(op_code) or (
+                            _hinted_primary_type(op_code) or ""
                         ).startswith("array<")
                         if static is not None:
                             out.extend(_toks(static))
-                        elif i in in_values or (listish and py):
+                        elif i in in_values or (listish and py2):
                             out.extend(_toks(f"CAST(({x}) AS STRING)"))
                         elif listish:
                             out.extend(_toks(_list_varchar_sql(x)))
                         else:
-                            out.extend(_toks(_varchar_cast_sql(x, py)))
-                        i = close + 1
+                            out.extend(_toks(_varchar_cast_sql(x, py2)))
+                        i = ty + 1
                         continue
-        elif tok.kind == "op" and tok.text == "::":
-            ty = _next_code(tokens, i)
-            if (
-                ty < n
-                and tokens[ty].kind == "word"
-                and tokens[ty].text == "__DUCKVARCHAR"
-            ):
-                operand = _pop_operand(out)
-                if operand:
-                    x = "".join(t.text for t in operand).strip()
-                    op_code = [
-                        t for t in operand
-                        if t.kind not in ("ws", "comment")
-                    ]
-                    static = _static_varchar_cast(op_code)
-                    py2 = in_py_udf or i in py_spans
-                    listish = _operand_is_listish(op_code) or (
-                        _hinted_primary_type(op_code) or ""
-                    ).startswith("array<")
-                    if static is not None:
-                        out.extend(_toks(static))
-                    elif i in in_values or (listish and py2):
-                        out.extend(_toks(f"CAST(({x}) AS STRING)"))
-                    elif listish:
-                        out.extend(_toks(_list_varchar_sql(x)))
-                    else:
-                        out.extend(_toks(_varchar_cast_sql(x, py2)))
+                    out.append(tok)
+                    out.append(Token("word", "STRING"))
                     i = ty + 1
                     continue
-                out.append(tok)
+            if tok.kind == "word" and tok.text == "__DUCKVARCHAR":
+                # leftover sentinel in a shape neither branch claimed
+                # (e.g. a DDL column type): plain STRING, the pre-r8
+                # behavior
                 out.append(Token("word", "STRING"))
-                i = ty + 1
+                i += 1
                 continue
-        if tok.kind == "word" and tok.text == "__DUCKVARCHAR":
-            # leftover sentinel in a shape neither branch claimed
-            # (e.g. a DDL column type): plain STRING, the pre-r8
-            # behavior
-            out.append(Token("word", "STRING"))
+            out.append(tok)
             i += 1
-            continue
-        out.append(tok)
-        i += 1
-    return out
+        return out
+
+    return scan(tokens, False)
 
 
 _INTERVAL_UNITS = frozenset({

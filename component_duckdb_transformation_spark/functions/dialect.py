@@ -10872,32 +10872,13 @@ def _signed_plain_number_arg(tokens: List[Token], span):
     return None
 
 
-# call shims in lowering order: (lowercase names, handler); a handler
-# registered for no names runs for every function
-_SHIMS: list = []
-
-
-def _shim(*names):
-    """Register the decorated call shim for ``names`` after every shim
-    registered before it. A shim takes one ``_CallSite`` whose
-    arguments are already lowered and returns SQL text (or tokens,
-    optionally as ``(replacement, end)``), or None to fall through."""
-
-    def register(fn):
-        _SHIMS.append((names, fn))
-        return fn
-
-    return register
-
-
 def _order_at(c: _CallSite):
     """Index of the top-level ORDER keyword in ``c.inner``, or None."""
     pos = _top_level_positions(c.inner, 0, len(c.inner), lambda t: t.is_kw("ORDER"))
     return pos[0] if pos else None
 
 
-@_shim("first", "last")
-def _shim_first(c):
+def _shim_ordered_first_last(c):
     if _order_at(c) is not None:
         # ordered first/last ARE min_by/max_by
         ob = _order_at(c)
@@ -10925,12 +10906,7 @@ def _shim_first(c):
                 return f"{fn}({head}, {key})"
 
 
-@_shim(
-    "sum", "avg", "mean", "min", "max", "count", "bool_and", "bool_or",
-    "bit_and", "bit_or", "bit_xor", "stddev", "stddev_samp", "stddev_pop",
-    "variance", "var_samp", "var_pop", "median", "product", "entropy",
-)
-def _shim_sum(c):
+def _shim_drop_agg_order(c):
     # order-insensitive aggregates: DuckDB tolerates an
     # in-aggregate ORDER BY; drop it
     ob = _order_at(c)
@@ -10938,8 +10914,7 @@ def _shim_sum(c):
         return f"{c.name}({_sql(c.inner, 0, ob)})"
 
 
-@_shim("string_agg", "group_concat", "array_agg", "list", "collect_list")
-def _shim_string_agg(c):
+def _shim_ordered_list_agg(c):
     ob = _order_at(c)
     if ob is not None:
         head = _sql(c.inner, 0, ob)
@@ -10994,14 +10969,12 @@ def _shim_string_agg(c):
             return expr
 
 
-@_shim("regexp_extract")
 def _shim_regexp_extract(c):
     if len(c.args) == 2:
         a, b = c.args
         return f"regexp_extract({a}, {b}, 0)"
 
 
-@_shim("list_sort", "array_sort", "list_reverse_sort")
 def _shim_list_sort(c):
     if (
         (c.name == "list_reverse_sort" and len(c.args) in (1, 2))
@@ -11054,7 +11027,6 @@ def _shim_list_sort(c):
             return expr
 
 
-@_shim("list_resize", "array_resize")
 def _shim_list_resize(c):
     if len(c.args) in (2, 3):
         # pad with NULL (2-arg) or the given value (3-arg)
@@ -11074,7 +11046,6 @@ def _shim_list_resize(c):
         )
 
 
-@_shim("parse_path")
 def _shim_parse_path(c):
     if len(c.args) in (1, 2):
         # components list; a leading separator is its own
@@ -11104,7 +11075,6 @@ def _shim_parse_path(c):
         )
 
 
-@_shim("array_extract", "list_element", "list_extract")
 def _shim_array_extract(c):
     if len(c.args) == 2:
         # DuckDB overloads these over VARCHAR: 1-based char
@@ -11129,7 +11099,6 @@ def _shim_array_extract(c):
         return f"try_element_at(({s_}), CAST(({ix}) AS INT))"
 
 
-@_shim("octet_length")
 def _shim_octet_length(c):
     if len(c.args) == 1:
         # BIT values are '0'/'1' strings in this engine;
@@ -11151,7 +11120,6 @@ def _shim_octet_length(c):
             return f"CAST(ceil(length({a}) / 8.0) AS BIGINT)"
 
 
-@_shim("make_time")
 def _shim_make_time(c):
     if len(c.args) == 3:
         # TIME is represented as an epoch-day timestamp
@@ -11164,7 +11132,6 @@ def _shim_make_time(c):
         )
 
 
-@_shim("bitstring_agg")
 def _shim_bitstring_agg(c):
     if len(c.args) in (1, 3):
         # bit per position over [min, max] (leftmost = min);
@@ -11187,7 +11154,6 @@ def _shim_bitstring_agg(c):
         )
 
 
-@_shim("struct_insert")
 def _shim_struct_insert(c):
     if len(c.args) >= 2:
         # name := value field append -> named_struct splice.
@@ -11265,7 +11231,6 @@ def _shim_struct_insert(c):
                 return f"named_struct({spread}, {added})"
 
 
-@_shim("count", "median")
 def _shim_over_window(c):
     # window-context rewrites that must consume the trailing OVER
     # clause
@@ -11319,7 +11284,6 @@ def _shim_over_window(c):
     return None
 
 
-@_shim("array_length")
 def _shim_array_length(c):
     if len(c.args) == 2:
         # 2-arg form takes a dimension; lists have exactly
@@ -11333,7 +11297,6 @@ def _shim_array_length(c):
         )
 
 
-@_shim("list_where", "array_where")
 def _shim_list_where(c):
     if len(c.args) == 2:
         # mask selection keeping NULL ELEMENTS where the
@@ -11349,7 +11312,6 @@ def _shim_list_where(c):
         )
 
 
-@_shim("mad")
 def _shim_mad(c):
     if len(c.args) == 1:
         # median absolute deviation: numerics cast to
@@ -11384,7 +11346,6 @@ def _shim_mad(c):
                 return f"mad({dq}CAST(({a}) AS DOUBLE))"
 
 
-@_shim("substring_grapheme")
 def _shim_substring_grapheme(c):
     if len(c.args) == 2:
         # default length = to end of string (UDF is 3-arg)
@@ -11392,8 +11353,7 @@ def _shim_substring_grapheme(c):
         return f"substring_grapheme({a}, {b}, 2147483647)"
 
 
-@_shim("decade", "century", "millennium")
-def _shim_decade(c):
+def _shim_interval_bucket(c):
     if len(c.args) == 1:
         # interval overload: years-derived bucket of a
         # literal INTERVAL n UNIT (day-time units hold no
@@ -11422,7 +11382,6 @@ def _shim_decade(c):
             return f"CAST({years // div} AS BIGINT)"
 
 
-@_shim("timezone")
 def _shim_timezone(c):
     if len(c.args) == 2:
         # timezone(tz, ts): interpret the (naive) timestamp
@@ -11432,15 +11391,13 @@ def _shim_timezone(c):
         return f"to_utc_timestamp({ts}, {tz})"
 
 
-@_shim("timezone")
-def _shim_timezone_2(c):
+def _shim_timezone_offset(c):
     if len(c.args) == 1:
         # 1-arg form: the session's UTC offset in seconds
         # (this engine's session timezone is UTC by design)
         return "CAST(0 AS BIGINT)"
 
 
-@_shim("json_type")
 def _shim_json_type(c):
     if len(c.args) == 1:
         # leaf/container type names, matching DuckDB's set
@@ -11466,7 +11423,6 @@ def _shim_json_type(c):
         )
 
 
-@_shim("bar")
 def _shim_bar(c):
     if len(c.args) in (3, 4):
         # DuckDB bar(): full blocks + floor-to-eighth partial,
@@ -11504,7 +11460,6 @@ def _shim_bar(c):
         )
 
 
-@_shim("arg_max", "arg_min", "argmax", "argmin")
 def _shim_arg_max(c):
     if len(c.args) == 2:
         # DuckDB skips rows whose VALUE argument is NULL
@@ -11519,7 +11474,6 @@ def _shim_arg_max(c):
         )
 
 
-@_shim("generate_series")
 def _shim_generate_series(c):
     if len(c.args) == 1:
         # 1-arg form: 0..n inclusive
@@ -11527,7 +11481,6 @@ def _shim_generate_series(c):
         return f"sequence(0, ({a}))"
 
 
-@_shim("greatest", "least")
 def _shim_greatest(c):
     if len(c.args) == 1:
         # 1-arg identity (Spark requires >= 2 args)
@@ -11535,14 +11488,12 @@ def _shim_greatest(c):
         return f"(({a}))"
 
 
-@_shim("array_reverse_sort")
 def _shim_array_reverse_sort(c):
     if len(c.args) == 1:
         a = c.args[0]
         return f"sort_array(({a}), false)"
 
 
-@_shim("regexp_escape")
 def _shim_regexp_escape(c):
     if len(c.args) == 1:
         # DuckDB uses RE2 QuoteMeta: backslash before every
@@ -11554,7 +11505,6 @@ def _shim_regexp_escape(c):
         )
 
 
-@_shim("parse_filename", "parse_dirpath", "parse_dirname")
 def _shim_parse_filename(c):
     if len(c.args) in (1, 2):
         p_ = c.args[0]
@@ -11589,7 +11539,6 @@ def _shim_parse_filename(c):
         return repl
 
 
-@_shim("md5_number_lower", "md5_number_upper")
 def _shim_md5_number_lower(c):
     if len(c.args) == 1:
         # little-endian uint64 of md5 bytes 8..15 (lower) /
@@ -11607,7 +11556,6 @@ def _shim_md5_number_lower(c):
         )
 
 
-@_shim("struct_extract")
 def _shim_struct_extract(c):
     if len(c.args) == 2:
         # literal field name -> dot access (Spark has no
@@ -11618,7 +11566,6 @@ def _shim_struct_extract(c):
             return f"(({s_}).`{fname2}`)"
 
 
-@_shim("map_extract")
 def _shim_map_extract(c):
     if len(c.args) == 2:
         # DuckDB returns a LIST: [value] on hit, [] on miss
@@ -11629,14 +11576,12 @@ def _shim_map_extract(c):
         )
 
 
-@_shim("count", "count_star")
-def _shim_count(c):
+def _shim_count_star(c):
     if len(c.inner) == 0:
         # DuckDB count() / count_star() = count(*)
         return "count(*)"
 
 
-@_shim("dayofweek", "weekday")
 def _shim_dayofweek(c):
     if len(c.args) == 1:
         # DuckDB: Sunday=0..Saturday=6 (both are aliases);
@@ -11645,12 +11590,7 @@ def _shim_dayofweek(c):
         return f"(dayofweek(({a})) - 1)"
 
 
-@_shim(
-    "century", "decade", "millennium", "era", "isoyear", "julian",
-    "microsecond", "millisecond", "timezone_hour", "timezone_minute",
-    "epoch_ns",
-)
-def _shim_century(c):
+def _shim_date_part_fns(c):
     if len(c.args) == 1:
         a = c.args[0]
         part_shims = {
@@ -11697,7 +11637,6 @@ def _shim_century(c):
         return part_shims[c.name]
 
 
-@_shim("make_timestamp", "make_timestamptz")
 def _shim_make_timestamp(c):
     if len(c.args) == 1:
         # 1-arg form: microseconds since epoch
@@ -11705,7 +11644,6 @@ def _shim_make_timestamp(c):
         return f"timestamp_micros(CAST(({a}) AS BIGINT))"
 
 
-@_shim("to_timestamp")
 def _shim_to_timestamp(c):
     if len(c.args) == 1:
         # DuckDB to_timestamp(DOUBLE): seconds since epoch
@@ -11713,8 +11651,7 @@ def _shim_to_timestamp(c):
         return f"timestamp_seconds(CAST(({a}) AS DOUBLE))"
 
 
-@_shim("ceil", "ceiling", "floor")
-def _shim_ceil(c):
+def _shim_ceil_floor(c):
     if (
         len(c.args) == 1
         and not _plain_decimal_literal_arg(c.inner, c.spans[0])
@@ -11790,7 +11727,6 @@ def _shim_ceil(c):
         )
 
 
-@_shim("trunc")
 def _shim_trunc(c):
     if len(c.args) == 1:
         # 1-arg numeric trunc-toward-zero (Spark trunc is
@@ -11895,7 +11831,6 @@ def _shim_trunc(c):
             )
 
 
-@_shim("sem")
 def _shim_sem(c):
     if len(c.args) == 1:
         # standard error of the mean; DuckDB uses the
@@ -11907,7 +11842,6 @@ def _shim_sem(c):
         )
 
 
-@_shim("signbit")
 def _shim_signbit(c):
     if len(c.args) == 1:
         # DuckDB signbit(-0.0) is false (verified), so a
@@ -11916,7 +11850,6 @@ def _shim_signbit(c):
         return f"(({a}) < 0)"
 
 
-@_shim("regexp_extract_all")
 def _shim_regexp_extract_all(c):
     if len(c.args) == 2:
         # DuckDB's 2-arg form returns full matches (group 0);
@@ -11925,7 +11858,6 @@ def _shim_regexp_extract_all(c):
         return f"regexp_extract_all(({a}), ({b}), 0)"
 
 
-@_shim("json_valid")
 def _shim_json_valid(c):
     if len(c.args) == 1:
         a = c.args[0]
@@ -11937,7 +11869,6 @@ def _shim_json_valid(c):
         )
 
 
-@_shim("json_array_length")
 def _shim_json_array_length(c):
     if len(c.args) == 1:
         # DuckDB returns 0 for non-array JSON; Spark NULL
@@ -11950,7 +11881,6 @@ def _shim_json_array_length(c):
         )
 
 
-@_shim("json_array")
 def _shim_json_array(c):
     # constructor: compact rendering matches DuckDB for
     # uniform element types (mixed types unify in Spark
@@ -11964,7 +11894,6 @@ def _shim_json_array(c):
         return f"to_json(array({rendered}))"
 
 
-@_shim("json_object")
 def _shim_json_object(c):
     if len(c.inner) == 0:
         return "'{}'"
@@ -11975,11 +11904,6 @@ def _shim_json_object(c):
         return f"to_json(map({rendered}))"
 
 
-@_shim(
-    "list_dot_product", "list_inner_product", "list_negative_dot_product",
-    "list_negative_inner_product", "list_cosine_similarity",
-    "list_cosine_distance", "list_distance",
-)
 def _shim_list_dot_product(c):
     if len(c.args) == 2:
         a, b = c.args
@@ -12018,7 +11942,6 @@ def _shim_list_dot_product(c):
         return repl
 
 
-@_shim("list_select", "array_select")
 def _shim_list_select(c):
     if len(c.args) == 2:
         # 1-based index list selection
@@ -12029,7 +11952,6 @@ def _shim_list_select(c):
         )
 
 
-@_shim("grade_up", "list_grade_up", "array_grade_up")
 def _shim_grade_up(c):
     if len(c.args) == 1:
         # 1-based indexes that would sort the list ascending
@@ -12044,7 +11966,6 @@ def _shim_grade_up(c):
         )
 
 
-@_shim("get_bit")
 def _shim_get_bit(c):
     if len(c.args) == 2:
         # STRING-typed bitstrings (no BIT type in Spark);
@@ -12056,7 +11977,6 @@ def _shim_get_bit(c):
         )
 
 
-@_shim("set_bit")
 def _shim_set_bit(c):
     if len(c.args) == 3:
         b_, ix, v_ = c.args
@@ -12067,7 +11987,6 @@ def _shim_set_bit(c):
         )
 
 
-@_shim("bit_position")
 def _shim_bit_position(c):
     if len(c.args) == 2:
         # bit_position(needle, haystack): 1-based, 0 if absent
@@ -12075,11 +11994,6 @@ def _shim_bit_position(c):
         return f"instr(({b_}), ({sub}))"
 
 
-@_shim(
-    "to_years", "to_months", "to_quarters", "to_decades", "to_centuries",
-    "to_millennia", "to_weeks", "to_days", "to_hours", "to_minutes",
-    "to_seconds", "to_milliseconds", "to_microseconds",
-)
 def _shim_to_years(c):
     if len(c.args) == 1:
         a = c.args[0]
@@ -12107,7 +12021,6 @@ def _shim_to_years(c):
         return iv[c.name]
 
 
-@_shim("encode", "decode")
 def _shim_encode(c):
     if len(c.args) == 1:
         # DuckDB 1-arg encode(VARCHAR)->BLOB / decode(BLOB)
@@ -12116,7 +12029,6 @@ def _shim_encode(c):
         return f"{c.name}(({a}), 'UTF-8')"
 
 
-@_shim("format_bytes", "formatreadablesize", "formatreadabledecimalsize")
 def _shim_format_bytes(c):
     if len(c.args) == 1:
         # DuckDB: size units with ONE decimal TRUNCATED
@@ -12156,7 +12068,6 @@ def _shim_format_bytes(c):
         )
 
 
-@_shim("bitstring")
 def _shim_bitstring(c):
     if len(c.args) == 2:
         # DuckDB bitstring(s, len) zero-pads left to len
@@ -12172,7 +12083,6 @@ def _shim_bitstring(c):
         )
 
 
-@_shim("date_add")
 def _shim_date_add(c):
     if len(c.args) == 2:
         second = c.args[1]
@@ -12181,14 +12091,12 @@ def _shim_date_add(c):
             return f"CAST((({first}) + {second}) AS TIMESTAMP)"
 
 
-@_shim("dayname", "monthname")
 def _shim_dayname(c):
     if len(c.args) == 1:
         fmt = "EEEE" if c.name == "dayname" else "MMMM"
         return f"date_format({c.args[0]}, '{fmt}')"
 
 
-@_shim("age")
 def _shim_age(c):
     # 1-arg age(x) = age(current_date::TIMESTAMP, x);
     # both args cast so DATE columns reach the UDF as
@@ -12208,19 +12116,16 @@ def _shim_age(c):
     return c.tokens[c.start : c.close + 1]
 
 
-@_shim("isodow")
 def _shim_isodow(c):
     if len(c.args) == 1:
         return f"(weekday({c.args[0]}) + 1)"
 
 
-@_shim("list_unique", "array_unique")
 def _shim_list_unique(c):
     if len(c.args) == 1:
         return f"size(array_distinct({c.args[0]}))"
 
 
-@_shim("map")
 def _shim_map(c):
     if len(c.args) == 2:
         # DuckDB's 2-arg map() is ALWAYS the
@@ -12234,14 +12139,12 @@ def _shim_map(c):
         return f"map_from_arrays({a}, {b})"
 
 
-@_shim("to_base")
 def _shim_to_base(c):
     if len(c.args) == 2:
         a, b = c.args
         return f"conv({a}, 10, {b})"
 
 
-@_shim("list_reduce")
 def _shim_list_reduce(c):
     if len(c.args) == 2:
         # DuckDB has no init arg: seed with the first element
@@ -12252,7 +12155,6 @@ def _shim_list_reduce(c):
         )
 
 
-@_shim("read_parquet")
 def _shim_read_parquet(c):
     if len(c.args) == 1:
         # table function over one literal path -> Spark's
@@ -12264,7 +12166,6 @@ def _shim_read_parquet(c):
             return "parquet.`" + path.replace("`", "``") + "`"
 
 
-@_shim("jaccard")
 def _shim_jaccard(c):
     if len(c.args) == 2:
         # DuckDB: Jaccard similarity of the character SETS
@@ -12278,7 +12179,6 @@ def _shim_jaccard(c):
         )
 
 
-@_shim("hamming", "mismatches")
 def _shim_hamming(c):
     if len(c.args) == 2:
         # positional mismatch count; equal length enforced
@@ -12294,15 +12194,13 @@ def _shim_hamming(c):
         )
 
 
-@_shim("regexp_split_to_table")
 def _shim_regexp_split_to_table(c):
     if len(c.args) == 2:
         a, b = c.args
         return f"explode(split(({a}), ({b})))"
 
 
-@_shim("string_agg", "listagg", "group_concat")
-def _shim_string_agg_2(c):
+def _shim_string_agg(c):
     if (
         _order_at(c) is None
         and len(c.args) in (1, 2)
@@ -12316,10 +12214,6 @@ def _shim_string_agg_2(c):
         return f"listagg({rendered[0]}, {sep})"
 
 
-@_shim(
-    "list_aggregate", "list_aggr", "aggregate", "array_aggregate",
-    "array_aggr",
-)
 def _shim_list_aggregate(c):
     if len(c.args) >= 2:
         l = c.args[0]
@@ -12370,7 +12264,6 @@ def _shim_list_aggregate(c):
                 return repl
 
 
-@_shim("printf")
 def _shim_printf(c):
     if len(c.args) >= 2:
         # DuckDB printf returns NULL when ANY argument is
@@ -12508,7 +12401,6 @@ def _shim_printf(c):
         return call
 
 
-@_shim("format")
 def _shim_format(c):
     if len(c.args) >= 1:
         fmt_code = c.code(0)
@@ -12848,10 +12740,6 @@ def _shim_format(c):
                 return call
 
 
-@_shim(
-    "json_extract", "json_extract_path", "json_extract_string",
-    "json_extract_path_text",
-)
 def _shim_json_extract(c):
     if len(c.args) == 2:
         # text variants map to get_json_object; the
@@ -12898,7 +12786,6 @@ def _shim_json_extract(c):
             return f"get_json_object({s_}, {p_})"
 
 
-@_shim("unicode")
 def _shim_unicode(c):
     if len(c.args) == 1:
         # codepoint of the first char; '' is -1 in DuckDB
@@ -12909,7 +12796,6 @@ def _shim_unicode(c):
         )
 
 
-@_shim("xor")
 def _shim_xor(c):
     if len(c.args) == 2:
         # DuckDB xor() function (its ^ is power); Spark ^ IS
@@ -12918,7 +12804,6 @@ def _shim_xor(c):
         return f"(({a}) ^ ({b}))"
 
 
-@_shim("even")
 def _shim_even(c):
     if len(c.args) == 1:
         # round away from zero to the next even number
@@ -12929,7 +12814,6 @@ def _shim_even(c):
         )
 
 
-@_shim("isnan", "isinf", "isfinite")
 def _shim_isnan(c):
     if len(c.args) == 1:
         # DuckDB returns NULL for NULL input (Spark isnan
@@ -12959,14 +12843,12 @@ def _shim_isnan(c):
         )
 
 
-@_shim("sha256")
 def _shim_sha256(c):
     if len(c.args) == 1:
         a = c.args[0]
         return f"sha2({a}, 256)"
 
 
-@_shim("list_prepend")
 def _shim_list_prepend(c):
     if len(c.args) == 2:
         # DuckDB: (element, list); Spark array_prepend:
@@ -12975,7 +12857,6 @@ def _shim_list_prepend(c):
         return f"array_prepend({l_}, {e_})"
 
 
-@_shim("levenshtein", "editdist3")
 def _shim_levenshtein(c):
     if len(c.args) == 2:
         # DuckDB levenshtein runs over UTF-8 BYTES; Spark's
@@ -12992,7 +12873,6 @@ def _shim_levenshtein(c):
         )
 
 
-@_shim("range")
 def _shim_range(c):
     if (
         len(c.args) in (1, 2, 3)
@@ -13022,7 +12902,6 @@ def _shim_range(c):
         )
 
 
-@_shim("log")
 def _shim_log(c):
     if len(c.args) == 1:
         # DuckDB single-arg log() is BASE-10; Spark's is ln
@@ -13030,7 +12909,6 @@ def _shim_log(c):
         return f"log10({a})"
 
 
-@_shim("trim", "ltrim", "rtrim")
 def _shim_trim(c):
     if len(c.args) == 2:
         # DuckDB: (source, trim_chars); Spark's 2-arg
@@ -13043,14 +12921,12 @@ def _shim_trim(c):
             return f"{c.name}({b}, {a})"
 
 
-@_shim("list_reverse_sort")
 def _shim_list_reverse_sort(c):
     if len(c.args) == 1:
         a = c.args[0]
         return f"sort_array({a}, false)"
 
 
-@_shim("sign")
 def _shim_sign(c):
     if len(c.args) == 1:
         # DuckDB sign() is TINYINT; Spark returns double
@@ -13058,8 +12934,7 @@ def _shim_sign(c):
         return f"CAST(sign({a}) AS TINYINT)"
 
 
-@_shim("avg", "mean")
-def _shim_avg(c):
+def _shim_avg_double(c):
     if len(c.args) == 1:
         # DuckDB avg() is ALWAYS DOUBLE; Spark's decimal avg
         # keeps scale+4 and truncates. Cast the argument
@@ -13072,7 +12947,6 @@ def _shim_avg(c):
             return f"avg({distinct}CAST(({arg_sql}) AS DOUBLE))"
 
 
-@_shim("left", "right")
 def _shim_left(c):
     if (
         len(c.args) == 2
@@ -13096,7 +12970,6 @@ def _shim_left(c):
             )
 
 
-@_shim("split_part")
 def _shim_split_part(c):
     if len(c.args) == 3:
         # DuckDB split_part is never-NULL (r10c fuzz
@@ -13121,21 +12994,18 @@ def _shim_split_part(c):
         )
 
 
-@_shim("list_slice", "array_slice")
 def _shim_list_slice(c):
     if len(c.args) == 3:
         l, a, b = c.args
         return _slice_expr(f"({l})", a, b, False)
 
 
-@_shim("list_has_all")
 def _shim_list_has_all(c):
     if len(c.args) == 2:
         a, b = c.args
         return f"(size(array_except({b}, {a})) = 0)"
 
 
-@_shim("list_sum", "list_avg")
 def _shim_list_sum(c):
     if len(c.args) == 1:
         # DOUBLE accumulator: element types (int/decimal/
@@ -13151,7 +13021,6 @@ def _shim_list_sum(c):
         return agg
 
 
-@_shim("struct_pack")
 def _shim_struct_pack(c):
     fields = []
     for s, e in c.spans:
@@ -13177,7 +13046,6 @@ def _shim_struct_pack(c):
         return f"named_struct({', '.join(fields)})"
 
 
-@_shim("like_escape", "ilike_escape", "not_like_escape", "not_ilike_escape")
 def _shim_like_escape(c):
     if len(c.args) == 3:
         a, b, esc = c.args
@@ -13187,7 +13055,6 @@ def _shim_like_escape(c):
         return f"({neg}{a} LIKE {b} ESCAPE {esc})"
 
 
-@_shim()
 def _shim_nulls_hoist(c):
     # DuckDB puts IGNORE/RESPECT NULLS inside the call parens; Spark
     # wants it after them: fn(x IGNORE NULLS) -> fn(x) IGNORE NULLS
@@ -13206,7 +13073,6 @@ def _shim_nulls_hoist(c):
     return None
 
 
-@_shim("time_bucket")
 def _shim_time_bucket(c):
     if len(c.args) == 2:
         first = c.args[0].upper().split()
@@ -13234,7 +13100,6 @@ def _shim_time_bucket(c):
                 )
 
 
-@_shim("yearweek")
 def _shim_yearweek(c):
     # (to_days/to_hours/... are handled earlier via
     # make_dt_interval/make_ym_interval — PySpark-fetchable
@@ -13247,8 +13112,7 @@ def _shim_yearweek(c):
         )
 
 
-@_shim("median")
-def _shim_median(c):
+def _shim_decimal_median(c):
     if len(c.args) == 1:
         # DuckDB median(DECIMAL) does NOT interpolate: it is
         # quantile_disc(x, 0.5) — the LOWER middle element,
@@ -13318,7 +13182,6 @@ def _shim_median(c):
             ), end0
 
 
-@_shim("percentile_cont")
 def _shim_percentile_cont(c):
     if len(c.args) == 1:
         # aggregate WITHIN GROUP over a statically DECIMAL
@@ -13390,7 +13253,6 @@ def _shim_percentile_cont(c):
                             ), (f_end2 if filt2 is not None else g_close + 1)
 
 
-@_shim("quantile_cont")
 def _shim_quantile_cont(c):
     if len(c.args) == 2:
         a, b = c.args
@@ -13420,7 +13282,6 @@ def _shim_quantile_cont(c):
             )
 
 
-@_shim("quantile_disc", "quantile")
 def _shim_quantile_disc(c):
     if len(c.args) == 2:
         a, b = c.args
@@ -13482,7 +13343,6 @@ def _shim_quantile_disc(c):
         return base, (f_end_qd if consumed_qd else c.close + 1)
 
 
-@_shim("skewness")
 def _shim_skewness(c):
     if len(c.args) == 1:
         # DuckDB reports the SAMPLE (bias-corrected) statistic,
@@ -13498,7 +13358,6 @@ def _shim_skewness(c):
         )
 
 
-@_shim("kurtosis")
 def _shim_kurtosis(c):
     if len(c.args) == 1:
         # sample excess kurtosis from Spark's population
@@ -13512,7 +13371,6 @@ def _shim_kurtosis(c):
         )
 
 
-@_shim("corr")
 def _shim_corr(c):
     if len(c.args) == 2:
         # Spark's corr raises DIVIDE_BY_ZERO (ANSI) when
@@ -13528,13 +13386,182 @@ def _shim_corr(c):
         )
 
 
-@_shim("regexp_full_match")
 def _shim_regexp_full_match(c):
     if len(c.args) == 2:
         a, b = c.args
         return f"(regexp_extract({a}, {b}, 0) = {a})"
 
 
+# (lowercase function names, call shim) in lowering order; a shim for
+# no names runs for every function. A shim takes one ``_CallSite``
+# whose arguments are already lowered and returns SQL text (or
+# tokens, optionally as ``(replacement, end)``), or None to fall
+# through to the next.
+_SHIMS = (
+    (("first", "last"), _shim_ordered_first_last),
+    (
+        (
+            "sum", "avg", "mean", "min", "max", "count", "bool_and", "bool_or",
+            "bit_and", "bit_or", "bit_xor", "stddev", "stddev_samp", "stddev_pop",
+            "variance", "var_samp", "var_pop", "median", "product", "entropy",
+        ),
+        _shim_drop_agg_order,
+    ),
+    (
+        (
+            "string_agg", "group_concat", "array_agg", "list", "collect_list",
+        ),
+        _shim_ordered_list_agg,
+    ),
+    (("regexp_extract",), _shim_regexp_extract),
+    (("list_sort", "array_sort", "list_reverse_sort"), _shim_list_sort),
+    (("list_resize", "array_resize"), _shim_list_resize),
+    (("parse_path",), _shim_parse_path),
+    (("array_extract", "list_element", "list_extract"), _shim_array_extract),
+    (("octet_length",), _shim_octet_length),
+    (("make_time",), _shim_make_time),
+    (("bitstring_agg",), _shim_bitstring_agg),
+    (("struct_insert",), _shim_struct_insert),
+    (("count", "median"), _shim_over_window),
+    (("array_length",), _shim_array_length),
+    (("list_where", "array_where"), _shim_list_where),
+    (("mad",), _shim_mad),
+    (("substring_grapheme",), _shim_substring_grapheme),
+    (("decade", "century", "millennium"), _shim_interval_bucket),
+    (("timezone",), _shim_timezone),
+    (("timezone",), _shim_timezone_offset),
+    (("json_type",), _shim_json_type),
+    (("bar",), _shim_bar),
+    (("arg_max", "arg_min", "argmax", "argmin"), _shim_arg_max),
+    (("generate_series",), _shim_generate_series),
+    (("greatest", "least"), _shim_greatest),
+    (("array_reverse_sort",), _shim_array_reverse_sort),
+    (("regexp_escape",), _shim_regexp_escape),
+    (
+        (
+            "parse_filename", "parse_dirpath", "parse_dirname",
+        ),
+        _shim_parse_filename,
+    ),
+    (("md5_number_lower", "md5_number_upper"), _shim_md5_number_lower),
+    (("struct_extract",), _shim_struct_extract),
+    (("map_extract",), _shim_map_extract),
+    (("count", "count_star"), _shim_count_star),
+    (("dayofweek", "weekday"), _shim_dayofweek),
+    (
+        (
+            "century", "decade", "millennium", "era", "isoyear", "julian",
+            "microsecond", "millisecond", "timezone_hour", "timezone_minute",
+            "epoch_ns",
+        ),
+        _shim_date_part_fns,
+    ),
+    (("make_timestamp", "make_timestamptz"), _shim_make_timestamp),
+    (("to_timestamp",), _shim_to_timestamp),
+    (("ceil", "ceiling", "floor"), _shim_ceil_floor),
+    (("trunc",), _shim_trunc),
+    (("sem",), _shim_sem),
+    (("signbit",), _shim_signbit),
+    (("regexp_extract_all",), _shim_regexp_extract_all),
+    (("json_valid",), _shim_json_valid),
+    (("json_array_length",), _shim_json_array_length),
+    (("json_array",), _shim_json_array),
+    (("json_object",), _shim_json_object),
+    (
+        (
+            "list_dot_product", "list_inner_product", "list_negative_dot_product",
+            "list_negative_inner_product", "list_cosine_similarity",
+            "list_cosine_distance", "list_distance",
+        ),
+        _shim_list_dot_product,
+    ),
+    (("list_select", "array_select"), _shim_list_select),
+    (("grade_up", "list_grade_up", "array_grade_up"), _shim_grade_up),
+    (("get_bit",), _shim_get_bit),
+    (("set_bit",), _shim_set_bit),
+    (("bit_position",), _shim_bit_position),
+    (
+        (
+            "to_years", "to_months", "to_quarters", "to_decades", "to_centuries",
+            "to_millennia", "to_weeks", "to_days", "to_hours", "to_minutes",
+            "to_seconds", "to_milliseconds", "to_microseconds",
+        ),
+        _shim_to_years,
+    ),
+    (("encode", "decode"), _shim_encode),
+    (
+        (
+            "format_bytes", "formatreadablesize", "formatreadabledecimalsize",
+        ),
+        _shim_format_bytes,
+    ),
+    (("bitstring",), _shim_bitstring),
+    (("date_add",), _shim_date_add),
+    (("dayname", "monthname"), _shim_dayname),
+    (("age",), _shim_age),
+    (("isodow",), _shim_isodow),
+    (("list_unique", "array_unique"), _shim_list_unique),
+    (("map",), _shim_map),
+    (("to_base",), _shim_to_base),
+    (("list_reduce",), _shim_list_reduce),
+    (("read_parquet",), _shim_read_parquet),
+    (("jaccard",), _shim_jaccard),
+    (("hamming", "mismatches"), _shim_hamming),
+    (("regexp_split_to_table",), _shim_regexp_split_to_table),
+    (("string_agg", "listagg", "group_concat"), _shim_string_agg),
+    (
+        (
+            "list_aggregate", "list_aggr", "aggregate", "array_aggregate",
+            "array_aggr",
+        ),
+        _shim_list_aggregate,
+    ),
+    (("printf",), _shim_printf),
+    (("format",), _shim_format),
+    (
+        (
+            "json_extract", "json_extract_path", "json_extract_string",
+            "json_extract_path_text",
+        ),
+        _shim_json_extract,
+    ),
+    (("unicode",), _shim_unicode),
+    (("xor",), _shim_xor),
+    (("even",), _shim_even),
+    (("isnan", "isinf", "isfinite"), _shim_isnan),
+    (("sha256",), _shim_sha256),
+    (("list_prepend",), _shim_list_prepend),
+    (("levenshtein", "editdist3"), _shim_levenshtein),
+    (("range",), _shim_range),
+    (("log",), _shim_log),
+    (("trim", "ltrim", "rtrim"), _shim_trim),
+    (("list_reverse_sort",), _shim_list_reverse_sort),
+    (("sign",), _shim_sign),
+    (("avg", "mean"), _shim_avg_double),
+    (("left", "right"), _shim_left),
+    (("split_part",), _shim_split_part),
+    (("list_slice", "array_slice"), _shim_list_slice),
+    (("list_has_all",), _shim_list_has_all),
+    (("list_sum", "list_avg"), _shim_list_sum),
+    (("struct_pack",), _shim_struct_pack),
+    (
+        (
+            "like_escape", "ilike_escape", "not_like_escape", "not_ilike_escape",
+        ),
+        _shim_like_escape,
+    ),
+    ((), _shim_nulls_hoist),
+    (("time_bucket",), _shim_time_bucket),
+    (("yearweek",), _shim_yearweek),
+    (("median",), _shim_decimal_median),
+    (("percentile_cont",), _shim_percentile_cont),
+    (("quantile_cont",), _shim_quantile_cont),
+    (("quantile_disc", "quantile"), _shim_quantile_disc),
+    (("skewness",), _shim_skewness),
+    (("kurtosis",), _shim_kurtosis),
+    (("corr",), _shim_corr),
+    (("regexp_full_match",), _shim_regexp_full_match),
+)
 # lowercase function name -> its call shims in lowering order; a name
 # without an entry takes the name-independent shims only
 _CALL_SHIMS = {

@@ -2627,6 +2627,9 @@ class SparkStatementExecutor:
             checks = _ddl_checks(st.sql)
         else:
             df = self.spark.sql(translate(body))
+            names = _dedupe_names(df.columns)
+            if names != df.columns:
+                df = df.toDF(*names)
             # persist TIME pseudo-hints and enum bindings the CTAS
             # output inherits from its defining statement, so TIME
             # values wrap at midnight and enum ordinals survive a
@@ -3171,6 +3174,21 @@ def _body_after_as(sql: str, allow_missing: bool = False) -> Optional[str]:
     if allow_missing:
         return None
     raise UserException(f"Missing AS <select> body in: {sql[:100]}")
+
+
+def _dedupe_names(names: List[str]) -> List[str]:
+    """DuckDB's CTAS column names: a name already taken (ignoring case)
+    gets the first free ``_<n>`` suffix, n = 1, 2, ... (``k, k, K`` ->
+    ``k, k_1, K_2``; ``k, k_1, k`` -> ``k, k_1, k_2``)."""
+    taken: set = set()
+    out = []
+    for name in names:
+        new, k = name, 1
+        while new.lower() in taken:
+            new, k = f"{name}_{k}", k + 1
+        taken.add(new.lower())
+        out.append(new)
+    return out
 
 
 def _terminal_order_by(body: str) -> Optional[str]:

@@ -47,6 +47,23 @@ def test_create_table_as_from(spark, table_store):
     run_blocks(spark, table_store, blocks)
     assert spark.table("copy_t").count() == 5
 
+    # repeated output names: DuckDB renames each repeat to the first
+    # free <name>_<n> (compared with DuckDB's own CTAS)
+    import duckdb
+
+    ex = SparkStatementExecutor(spark, table_store)
+    con = duckdb.connect()
+    for select in (
+        "SELECT 1 AS k, 2 AS k, 3 AS K",
+        "SELECT 1 AS k, 2 AS k_1, 3 AS k",
+        "SELECT 1 AS a, 2 AS A, 3 AS a_1, 4 AS a",
+    ):
+        _run(ex, f"CREATE OR REPLACE TABLE dup_t AS {select}")
+        con.execute(f"CREATE OR REPLACE TABLE dup_t AS {select}")
+        want = con.execute("SELECT * FROM dup_t")
+        assert spark.table("dup_t").columns == [d[0] for d in want.description]
+        assert [tuple(r) for r in spark.table("dup_t").collect()] == want.fetchall()
+
 
 def test_insert_values(spark, table_store):
     blocks = [Block(name="b", codes=[Code(name="c", script=[

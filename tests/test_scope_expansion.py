@@ -108,16 +108,23 @@ def test_join_with_repeated_names_matches_duckdb(spark, scope_env, q):
     assert sorted((tuple(r) for r in got.collect()), key=_key) == want
 
 
-def test_unresolvable_scope_is_an_error(scope_env):
-    ex, _ = scope_env
-    # the expansion names k twice (x.k, y.k): the CTAS fails on the
-    # duplicate output name, where DuckDB renames the second to k_1
-    with pytest.raises(Exception):
-        _run(
-            ex,
-            "CREATE OR REPLACE TABLE se_bad AS SELECT * REPLACE (a + 1 AS a) "
-            "FROM se_t1 x JOIN se_t2 y ON x.k = y.k",
-        )
+def test_repeated_scope_names_rename_like_duckdb(spark, scope_env):
+    ex, con = scope_env
+    # the expansion names k twice (x.k, y.k): the CTAS renames the
+    # second to k_1, as DuckDB does
+    sql = (
+        "CREATE OR REPLACE TABLE se_dup AS SELECT * REPLACE (a + 1 AS a) "
+        "FROM se_t1 x JOIN se_t2 y ON x.k = y.k"
+    )
+    _run(ex, sql)
+    con.execute(sql)
+    cur = con.execute("SELECT * FROM se_dup")
+    want_cols = [d[0] for d in cur.description]
+    assert want_cols == ["k", "a", "s", "k_1", "b"]
+    assert spark.table("se_dup").columns == want_cols
+    want = sorted((tuple(r) for r in cur.fetchall()), key=_key)
+    got = sorted((tuple(r) for r in spark.table("se_dup").collect()), key=_key)
+    assert got == want
 
 
 def test_startup_check_skips_star_replace(spark):

@@ -41,10 +41,10 @@ from ..exceptions import UserException
 from ..functions.dialect import (
     SCAN_ROW_NUMBER,
     _alias_expr_hint,
+    _call_args,
     _matching_paren,
     _pop_operand,
     _split_top_commas,
-    _split_top_level_args,
     column_type_hints,
     expand_scopes,
     translate,
@@ -776,7 +776,7 @@ class SparkStatementExecutor:
             )
         vals: List[str] = []
         close = _matching_paren(tokens, code[2])
-        for arg in _split_top_level_args(tokens, code[2], close):
+        for arg in _call_args(tokens, code[2], close):
             arg = [t for t in arg if t.kind not in ("ws", "comment")]
             if len(arg) != 1 or arg[0].kind != "string":
                 raise UserException(
@@ -1825,7 +1825,7 @@ class SparkStatementExecutor:
                 close = _matching_paren(tokens, nxt)
                 args = [
                     [t for t in arg if t.kind not in ("ws", "comment")]
-                    for arg in _split_top_level_args(tokens, nxt, close)
+                    for arg in _call_args(tokens, nxt, close)
                 ]
                 view = self._register_file_read(
                     tok.text.lower(), args, hashlib
@@ -2562,7 +2562,7 @@ class SparkStatementExecutor:
                 break
             hi += 1
         out = []
-        for item in _split_top_level_args(code, lo - 1, hi):
+        for item in _call_args(code, lo - 1, hi):
             if not item:
                 continue
             if len(item) == 1 and item[0].text == "*":

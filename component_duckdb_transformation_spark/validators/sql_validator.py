@@ -22,10 +22,10 @@ from ..actions.results import MessageType, ValidationResult
 from ..configuration import Block
 from ..functions.dialect import (
     STAR_REPLACE_PATTERN,
+    _call_args,
     _matching_paren,
     _next_code,
     _pattern_composable,
-    _split_top_level_args,
     fmtlib_format_ok,
     replace_first_composition,
     translate,
@@ -63,7 +63,7 @@ def _three_arg_regexp_replace(sql: str) -> bool:
             p_open = _next_code(tokens, i)
             if p_open < n and tokens[p_open].text == "(":
                 close = _matching_paren(tokens, p_open)
-                args = _split_top_level_args(tokens, p_open, close)
+                args = _call_args(tokens, p_open, close)
                 if len(args) != 3:
                     continue
                 pat_code = [t for t in args[1] if t.kind not in ("ws", "comment")]
@@ -194,7 +194,7 @@ def _untranslatable_functions(sql: str) -> set[str]:
             found.add(low)
         elif low in ("list_aggregate", "list_aggr", "format"):
             close = _matching_paren(tokens, p_open)
-            args = _split_top_level_args(tokens, p_open, close)
+            args = _call_args(tokens, p_open, close)
             lit_idx = 1 if low != "format" else 0
             lit = (
                 [t for t in args[lit_idx] if t.kind not in ("ws", "comment")]

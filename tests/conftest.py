@@ -1,4 +1,4 @@
-"""Shared fixtures: one SparkSession per test session, testdata paths."""
+"""Shared fixtures: one SparkSession for the suite, testdata paths."""
 
 from __future__ import annotations
 
@@ -10,16 +10,25 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
-@pytest.fixture(scope="session")
+_SESSION: list = []  # the suite's one SparkSession
+
+
+@pytest.fixture(scope="module")
 def spark():
+    """The suite's SparkSession, rebuilt for the next module when a
+    module stopped it (``test_vanilla_session.py`` stops the active
+    session to build a conf-free one)."""
     from component_duckdb_transformation_spark.session import build_spark_session
 
-    spark = build_spark_session(
-        app_name="cdts-tests",
-        threads=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
-        shuffle_partitions=8,
-    )
-    yield spark
+    if not _SESSION or _SESSION[0].sparkContext._jsc is None:
+        _SESSION[:] = [
+            build_spark_session(
+                app_name="cdts-tests",
+                threads=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
+                shuffle_partitions=8,
+            )
+        ]
+    yield _SESSION[0]
 
 
 @pytest.fixture()

@@ -12921,12 +12921,6 @@ def _shim_trim(c):
             return f"{c.name}({b}, {a})"
 
 
-def _shim_list_reverse_sort(c):
-    if len(c.args) == 1:
-        a = c.args[0]
-        return f"sort_array({a}, false)"
-
-
 def _shim_sign(c):
     if len(c.args) == 1:
         # DuckDB sign() is TINYINT; Spark returns double
@@ -13535,7 +13529,6 @@ _SHIMS = (
     (("range",), _shim_range),
     (("log",), _shim_log),
     (("trim", "ltrim", "rtrim"), _shim_trim),
-    (("list_reverse_sort",), _shim_list_reverse_sort),
     (("sign",), _shim_sign),
     (("avg", "mean"), _shim_avg_double),
     (("left", "right"), _shim_left),

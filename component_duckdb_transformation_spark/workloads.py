@@ -20,7 +20,6 @@ floats quantized to integer arithmetic where ranking depends on them.
 
 from __future__ import annotations
 
-import re
 import weakref
 from dataclasses import dataclass
 from typing import Callable, Dict, Optional
@@ -28,7 +27,7 @@ from typing import Callable, Dict, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.dialect import expand_scopes, translate
+from .functions.dialect import Token, expand_scopes, tokenize, translate
 from .operators import dedup, multimodal, sampling, similarity, temporal, text_analysis
 from .operators.asof import asof_join
 from .sources.parquet_io import read_parquet
@@ -105,6 +104,27 @@ class Workload:
 WORKLOADS: Dict[str, Workload] = {}
 
 
+def _swap_from_table(sql: str, table: str, view: str) -> str:
+    """``sql`` with the one ``FROM <table>`` reference naming ``view``
+    instead; raises ValueError unless exactly one FROM names
+    ``table``."""
+    toks = tokenize(sql)
+    hits = []
+    prev = None
+    for k, t in enumerate(toks):
+        if t.kind in ("ws", "comment"):
+            continue
+        if prev is not None and prev.is_kw("FROM") and t.kind == "word" and (
+            t.text.lower() == table.lower()
+        ):
+            hits.append(k)
+        prev = t
+    if len(hits) != 1:
+        raise ValueError(f"{len(hits)} FROM {table} references, want one")
+    toks[hits[0]] = Token("word", view)
+    return "".join(t.text for t in toks)
+
+
 def _add_sql(
     name: str,
     sql: str,
@@ -133,9 +153,7 @@ def _add_sql(
             fan_out_narrow(spark.table(fan_from)).createOrReplaceTempView(
                 view
             )
-            _sql = re.sub(
-                rf"(?i)\bFROM\s+{fan_from}\b", f"FROM {view}", _sql
-            )
+            _sql = _swap_from_table(_sql, fan_from, view)
         # same schema-aware dispatch a statement gets through the
         # executor: dependency-table column types published to the
         # translator (len/brackets/|| by type)

@@ -1,9 +1,11 @@
-"""Translation golden: every workload and q_surface statement translates
-to the text whose hash is committed in ``tools/translate_golden.json``
-(no type hints published, window ids normalised)."""
+"""Translation golden: every workload, q_surface and battery statement
+translates to the text whose hash is committed in
+``tools/translate_golden.json`` (window ids normalised), and every call
+shim fires on some of them."""
 
 from __future__ import annotations
 
+import collections
 import importlib.util
 import os
 
@@ -24,3 +26,33 @@ def _golden():
 def test_translate_golden():
     moved = _golden().moved()
     assert not moved, f"translated text moved for: {', '.join(moved)}"
+
+
+def test_every_call_shim_fires(monkeypatch):
+    """Every ``_CALL_SHIMS`` handler lowers some corpus or battery text:
+    a handler nothing reaches is deleted, not kept."""
+    from component_duckdb_transformation_spark.functions import dialect
+
+    hits: collections.Counter = collections.Counter()
+
+    def counted(shim):
+        def run(call):
+            repl = shim(call)
+            if repl is not None:
+                hits[shim] += 1
+            return repl
+
+        return run
+
+    monkeypatch.setattr(dialect, "_CALL_SHIMS", {
+        name: tuple(counted(s) for s in shims)
+        for name, shims in dialect._CALL_SHIMS.items()
+    })
+    monkeypatch.setattr(
+        dialect, "_ANY_CALL_SHIMS", tuple(counted(s) for s in dialect._ANY_CALL_SHIMS)
+    )
+    golden = _golden()
+    for sql, hints in golden.corpus().values():
+        golden._translate(sql, hints)
+    dead = [shim.__name__ for _, shim in dialect._SHIMS if not hits[shim]]
+    assert not dead, f"call shims that never fire: {', '.join(dead)}"

@@ -44,6 +44,7 @@ sample variants in both.
 from __future__ import annotations
 
 import contextlib
+import functools
 import re
 from contextvars import ContextVar
 from typing import Dict, List, NamedTuple, Optional
@@ -4844,7 +4845,8 @@ def _rewrite_product_entropy(tokens: List[Token], windows=None) -> List[Token]:
                         # window form: product composes for ANY frame;
                         # entropy for full-partition frames (per-value
                         # counts need the (keys, value) partition trick)
-                        spec, end = _over_spec(tokens, after, windows)
+                        body, end = _over_spec(tokens, after, windows)
+                        spec = None if body is None else _parse_spec(body)
                         repl = None
                         if spec is not None:
                             arg_s = "".join(
@@ -6249,34 +6251,36 @@ def _named_windows(tokens: List[Token]) -> dict:
 _WITHIN_GROUP_FNS = frozenset({"percentile_cont", "percentile_disc"})
 
 
-class _CallSite(NamedTuple):
+class _CallSite:
     """One ``fn(args) [WITHIN GROUP (ORDER BY key)] [OVER (spec) | OVER
     name]`` call site (``_call_site``). ``within`` is ``(key text,
     DISTINCT)`` for an ascending WITHIN GROUP key, else None; ``spec``
-    is None without OVER or for an unresolved window name; ``end`` is
-    the index past the call. ``prev`` is the code token before the
-    name; ``plain`` is False for a dotted name and for a WITHIN GROUP
-    on a name outside ``_WITHIN_GROUP_FNS`` (the call then ends at its
-    ``)``); ``in_py_udf`` is True inside a Python UDF's arguments (see
-    ``_PY_UDF_FNS``). A call shim (``_lower_shim``) sees its arguments
-    already lowered: ``inner``, their top-level ``spans`` in it and
-    their texts ``args``."""
+    (parsed on first use) is None without OVER or for an unresolved
+    window name; ``end`` is the index past the call. ``prev`` is the
+    code token before the name; ``plain`` is False for a dotted name
+    and for a WITHIN GROUP on a name outside ``_WITHIN_GROUP_FNS`` (the
+    call then ends at its ``)``); ``in_py_udf`` is True inside a Python
+    UDF's arguments (see ``_PY_UDF_FNS``). A call shim
+    (``_lower_shim``) sees its arguments already lowered: ``inner``,
+    their top-level ``spans`` in it and their texts ``args``."""
 
-    tokens: List[Token]
-    name: str
-    start: int
-    p_open: int
-    close: int
-    within: Optional[tuple]
-    over: bool
-    spec: Optional[_WinSpec]
-    end: int
-    prev: Optional[Token] = None
-    plain: bool = True
-    in_py_udf: bool = False
-    inner: Optional[List[Token]] = None
-    spans: Optional[list] = None
-    args: Optional[tuple] = None
+    def __init__(self, tokens, i, p_open, close, prev, in_py_udf):
+        self.tokens = tokens
+        self.name = tokens[i].text.lower()
+        self.start, self.p_open, self.close, self.end = i, p_open, close, close + 1
+        self.prev = prev
+        self.plain = not (prev is not None and prev.kind == "op" and prev.text == ".")
+        self.in_py_udf = in_py_udf
+        self.within: Optional[tuple] = None
+        self.over = False
+        self.spec_body: Optional[List[Token]] = None
+        self.inner: Optional[List[Token]] = None
+        self.spans: Optional[list] = None
+        self.args: Optional[tuple] = None
+
+    @functools.cached_property
+    def spec(self) -> Optional[_WinSpec]:
+        return None if self.spec_body is None else _parse_spec(self.spec_body)
 
     def arg_tokens(self) -> List[Token]:
         return self.tokens[self.p_open + 1 : self.close]
@@ -6300,28 +6304,25 @@ def _call_site(tokens: List[Token], i: int, windows=None, in_py_udf=False):
     p = i - 1
     while p >= 0 and tokens[p].kind in ("ws", "comment"):
         p -= 1
-    prev = tokens[p] if p >= 0 else None
-    plain = not (prev is not None and prev.kind == "op" and prev.text == ".")
     p_open = _next_code(tokens, i)
     if not (p_open < n and tokens[p_open].kind == "op" and tokens[p_open].text == "("):
         return None
-    name = tokens[i].text.lower()
     close = _matching_paren(tokens, p_open)
     site = _CallSite(
-        tokens, name, i, p_open, close, None, False, None, close + 1, prev,
-        plain, in_py_udf,
+        tokens, i, p_open, close, tokens[p] if p >= 0 else None, in_py_udf
     )
     after = _next_code(tokens, close)
     if after < n and tokens[after].is_kw("WITHIN"):
         g_kw = _next_code(tokens, after)
         g_open = _next_code(tokens, g_kw)
         if not (
-            name in _WITHIN_GROUP_FNS
+            site.name in _WITHIN_GROUP_FNS
             and g_open < n
             and tokens[g_kw].is_kw("GROUP")
             and tokens[g_open].text == "("
         ):
-            return site._replace(plain=False)
+            site.plain = False
+            return site
         g_close = _matching_paren(tokens, g_open)
         code = [
             t for t in tokens[g_open + 1 : g_close]
@@ -6336,33 +6337,31 @@ def _call_site(tokens: List[Token], i: int, windows=None, in_py_udf=False):
                 desc = desc or key[-1].is_kw("DESC")
                 key.pop()
             if key and not desc:
-                site = site._replace(
-                    within=("".join(t.text for t in key).strip(), distinct)
-                )
-        site = site._replace(end=g_close + 1)
+                site.within = ("".join(t.text for t in key).strip(), distinct)
+        site.end = g_close + 1
         after = _next_code(tokens, g_close)
-    if not (after < n and tokens[after].is_kw("OVER")):
-        return site
-    spec, end = _over_spec(tokens, after, windows)
-    return site._replace(over=True, spec=spec, end=end)
+    if after < n and tokens[after].is_kw("OVER"):
+        site.over = True
+        site.spec_body, site.end = _over_spec(tokens, after, windows)
+    return site
 
 
 def _over_spec(tokens: List[Token], k: int, windows=None):
-    """``(spec, end)`` for the OVER at ``tokens[k]``: the parsed inline
-    spec, or a window name resolved through ``windows`` (a callable
-    returning ``_named_windows``); spec None when unresolved. ``end`` is
-    the index past the spec."""
+    """``(spec body, end)`` for the OVER at ``tokens[k]``: the inline
+    spec's tokens, or a window name's resolved through ``windows`` (a
+    callable returning ``_named_windows``); None when unresolved.
+    ``end`` is the index past the spec."""
     n = len(tokens)
     sp = _next_code(tokens, k)
     if sp < n and tokens[sp].kind == "op" and tokens[sp].text == "(":
         end = _matching_paren(tokens, sp) + 1
-        return _parse_spec(tokens[sp + 1 : end - 1]), end
+        return tokens[sp + 1 : end - 1], end
     body = None
     if sp < n and windows is not None and tokens[sp].kind in (
         "word", "bident", "qident",
     ):
         body = windows().get(unquote_name(tokens[sp]).lower())
-    return (_parse_spec(body) if body is not None else None), sp + 1
+    return body, sp + 1
 
 
 def _lazy_windows(tokens: List[Token]):
@@ -10879,9 +10878,9 @@ def _order_at(c: _CallSite):
 
 
 def _shim_ordered_first_last(c):
-    if _order_at(c) is not None:
-        # ordered first/last ARE min_by/max_by
-        ob = _order_at(c)
+    # ordered first/last ARE min_by/max_by
+    ob = _order_at(c)
+    if ob is not None:
         head = _sql(c.inner, 0, ob)
         order_expr = _sql(c.inner, ob, len(c.inner))[len("ORDER"):].strip()
         if order_expr.upper().startswith("BY"):
@@ -13571,15 +13570,13 @@ def _lower_shim(call: _CallSite, walk):
     """The first call shim's lowering of ``call`` over its lowered
     arguments, or the call itself over them."""
     inner = walk(call.arg_tokens(), call.in_py_udf or call.name in _PY_UDF_FNS)
-    spans = _split_top_commas(inner, 0, len(inner))
+    call.inner = inner
+    call.spans = _split_top_commas(inner, 0, len(inner))
     shims = _CALL_SHIMS.get(call.name)
-    c = call._replace(
-        inner=inner,
-        spans=spans,
-        args=tuple(_sql(inner, s, e) for s, e in spans) if shims else None,
-    )
+    if shims:
+        call.args = tuple(_sql(inner, s, e) for s, e in call.spans)
     for shim in shims or _ANY_CALL_SHIMS:
-        repl = shim(c)
+        repl = shim(call)
         if repl is not None:
             return repl
     toks = call.tokens
@@ -13588,11 +13585,10 @@ def _lower_shim(call: _CallSite, walk):
 
 def _rewrite_call_shims(tokens: List[Token]) -> List[Token]:
     """Argument-aware function shims beyond plain renames: every call
-    whose name has handlers in ``_CALL_SHIMS`` (registered with
-    ``@_shim``) is lowered by the first of them that returns SQL, after
-    its arguments; other calls keep their name over their lowered
-    arguments. To shim another DuckDB function, add one ``@_shim``
-    handler."""
+    whose name has shims in ``_CALL_SHIMS`` is lowered by the first of
+    them that returns SQL, after its arguments; other calls keep their
+    name over their lowered arguments. To shim another DuckDB function,
+    write its handler and add it to ``_SHIMS``."""
     return _lower_calls(tokens, None, _lower_shim, _CALL_SHIM_WORDS)
 
 

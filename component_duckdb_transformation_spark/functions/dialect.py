@@ -10944,9 +10944,7 @@ def _shim_ordered_list_agg(c):
             )
         )
         hdist = re.match(r"(?is)^\s*DISTINCT\b", head)
-        hcore = (
-            head[hdist.end():].strip() if hdist else head
-        )
+        hcore = (head[hdist.end():].strip() if hdist else head)
         if core.replace(" ", "") == hcore.replace(" ", ""):
             arr = (
                 f"transform(collect_list("
@@ -10993,9 +10991,7 @@ def _shim_list_sort(c):
                 if t.kind not in ("ws", "comment")
             ]
             if len(code) == 1 and code[0].kind == "string":
-                lits.append(
-                    code[0].text[1:-1].strip().upper()
-                )
+                lits.append(code[0].text[1:-1].strip().upper())
             else:
                 litok = False
         if litok:
@@ -11004,9 +11000,7 @@ def _shim_list_sort(c):
                 nulls = lits[0] if lits else "NULLS LAST"
             else:
                 order = lits[0] if lits else "ASC"
-                nulls = (
-                    lits[1] if len(lits) > 1 else "NULLS LAST"
-                )
+                nulls = (lits[1] if len(lits) > 1 else "NULLS LAST")
             # Spark: array_sort = ASC NULLS LAST;
             # sort_array(asc) = ASC NULLS FIRST;
             # sort_array(desc) = DESC NULLS LAST (measured)
@@ -11178,9 +11172,7 @@ def _shim_struct_insert(c):
                     and code[2][1].text == "="
                 ):
                     name = unquote_name(code[0][1])
-                    val = _sql(
-                        c.inner, s_ + code[2][0] + 1, e_
-                    )
+                    val = _sql(c.inner, s_ + code[2][0] + 1, e_)
                     pairs.append((name, val))
                 else:
                     return None
@@ -11208,9 +11200,7 @@ def _shim_struct_insert(c):
             # existing-name collision falls through to the
             # loud unresolved-function error, like DuckDB's
             # duplicate-entry error)
-            s_hint = _hinted_primary_type(
-                c.arg_toks(0)
-            )
+            s_hint = _hinted_primary_type(c.arg_toks(0))
             flds = (
                 _struct_hint_fields(s_hint)
                 if s_hint is not None
@@ -11654,9 +11644,7 @@ def _shim_ceil_floor(c):
     if (
         len(c.args) == 1
         and not _plain_decimal_literal_arg(c.inner, c.spans[0])
-        and _static_numeric_type(
-            c.arg_toks(0)
-        ) not in ("decimal", "decimal0")
+        and _static_numeric_type(c.arg_toks(0)) not in ("decimal", "decimal0")
         and c.start not in _values_spans(c.tokens)
     ):
         # DuckDB types ceil/floor of int/bigint/double as
@@ -11681,9 +11669,7 @@ def _shim_ceil_floor(c):
         if (
             c.in_py_udf
             and len(a) > _BIND_THRESHOLD
-            and _render_static_type(
-                c.code(0)
-            ) == "double"
+            and _render_static_type(c.code(0)) == "double"
         ):
             # long statically-DOUBLE operand inside a
             # Python-UDF span: the repeated CASE mentions
@@ -11748,9 +11734,7 @@ def _shim_trunc(c):
                 p = len(text) - 1  # all digits, dot dropped
                 ip = text.split(".", 1)[0] or "0"
                 return f"CAST({sign}{ip} AS DECIMAL({p},0))"
-        chain = _static_numeric_type(
-            c.arg_toks(0)
-        )
+        chain = _static_numeric_type(c.arg_toks(0))
         if chain == "int":
             # integer chain: trunc is the identity and
             # DuckDB is type-preserving (trunc(7 + 3)
@@ -11773,9 +11757,7 @@ def _shim_trunc(c):
         if (
             c.in_py_udf
             and len(a) > _BIND_THRESHOLD
-            and _render_static_type(
-                c.code(0)
-            ) == "double"
+            and _render_static_type(c.code(0)) == "double"
         ):
             # span escape, same as ceil/floor above (~8
             # mentions otherwise)
@@ -11887,9 +11869,7 @@ def _shim_json_array(c):
     if len(c.inner) == 0:
         return "'[]'"
     else:
-        rendered = ", ".join(
-            c.args
-        )
+        rendered = ", ".join(c.args)
         return f"to_json(array({rendered}))"
 
 
@@ -11897,9 +11877,7 @@ def _shim_json_object(c):
     if len(c.inner) == 0:
         return "'{}'"
     else:
-        rendered = ", ".join(
-            c.args
-        )
+        rendered = ", ".join(c.args)
         return f"to_json(map({rendered}))"
 
 
@@ -12345,9 +12323,7 @@ def _shim_printf(c):
             # binding lambda's body; rendering in the slot
             # keeps it in the lambda's INPUT, which
             # ExtractPythonUDFs hoists cleanly)
-            if plan is None or not (
-                1 <= k <= len(plan)
-            ):
+            if plan is None or not (1 <= k <= len(plan)):
                 return f"({raw})"
             kind_, m_ = plan[k - 1]
             if kind_ == "twin":
@@ -12481,9 +12457,7 @@ def _shim_format(c):
                         )
                         pP = int(prec_)
                         wN = int(width_ or 0)
-                        raw = (
-                            arg_sqls[k_] if bind_args else a_
-                        )
+                        raw = (arg_sqls[k_] if bind_args else a_)
                         tw_ = (
                             f"__duck_printf('{spec_}', "
                             f"CAST(({raw}) AS STRING))"
@@ -12686,13 +12660,9 @@ def _shim_format(c):
                             f" ELSE rpad(__fs, {w_}, ' ')"
                             " END), 1)"
                         )
-                        casted.append(
-                            bound_pre + body + "), 1))"
-                        )
+                        casted.append(bound_pre + body + "), 1))")
                     elif t_ == "s":
-                        casted.append(
-                            bound_pre + dec_str + "), 1))"
-                        )
+                        casted.append(bound_pre + dec_str + "), 1))")
                     elif t_ in ("f", "e"):
                         casted.append(
                             f"CAST(({a_}) AS DOUBLE)"
@@ -12748,9 +12718,7 @@ def _shim_json_extract(c):
         p_code = c.code(1)
         if len(p_code) == 1 and p_code[0].kind == "string":
             p_ = _encode_spark_string(
-                _json_path_literal(
-                    _decode_spark_string(p_code[0])
-                )
+                _json_path_literal(_decode_spark_string(p_code[0]))
             ).text
         elif (
             len(p_code) == 1
@@ -13195,9 +13163,7 @@ def _shim_percentile_cont(c):
             ):
                 g_close = _matching_paren(c.tokens, g_open)
                 after2 = _next_code(c.tokens, g_close)
-                filt2, f_end2 = _consume_filter_clause(
-                    c.tokens, after2
-                )
+                filt2, f_end2 = _consume_filter_clause(c.tokens, after2)
                 after2b = (
                     _next_code(c.tokens, f_end2 - 1)
                     if filt2 is not None
@@ -13250,9 +13216,7 @@ def _shim_quantile_cont(c):
     if len(c.args) == 2:
         a, b = c.args
         after_qc = _next_code(c.tokens, c.close)
-        filt_qc, f_end_qc = _consume_filter_clause(
-            c.tokens, after_qc
-        )
+        filt_qc, f_end_qc = _consume_filter_clause(c.tokens, after_qc)
         after_qc2 = (
             _next_code(c.tokens, f_end_qc - 1)
             if filt_qc is not None
@@ -13280,9 +13244,7 @@ def _shim_quantile_disc(c):
         a, b = c.args
         base = f"percentile_disc({b}) WITHIN GROUP (ORDER BY {a})"
         after_qd = _next_code(c.tokens, c.close)
-        filt_qd, f_end_qd = _consume_filter_clause(
-            c.tokens, after_qd
-        )
+        filt_qd, f_end_qd = _consume_filter_clause(c.tokens, after_qd)
         after_qd2 = (
             _next_code(c.tokens, f_end_qd - 1)
             if filt_qd is not None

@@ -2528,8 +2528,10 @@ def _rewrite_date_trunc(tokens: List[Token]) -> List[Token]:
         return tokens
 
     def lower(call: _CallSite, walk):
-        part = call.tokens[_next_code(call.tokens, call.p_open)]
-        if part.kind == "string" and part.text[1:-1].lower() in _DATE_PARTS:
+        part = call.tokens[_next_code(call.tokens, call.p_open) :][:1]
+        if part and part[0].kind == "string" and (
+            part[0].text[1:-1].lower() in _DATE_PARTS
+        ):
             return (
                 _toks("CAST(")
                 + call.tokens[call.start : call.close + 1]
@@ -2629,7 +2631,7 @@ def _rewrite_date_diff(tokens: List[Token]) -> List[Token]:
 
     def lower(call: _CallSite, walk):
         args = _call_args(call.tokens, call.p_open, call.close)
-        first = [t for t in args[0] if t.kind not in ("ws", "comment")]
+        first = [t for t in args[0] if t.kind not in ("ws", "comment")] if args else []
         if not (len(args) == 3 and len(first) == 1 and first[0].kind == "string"):
             return None
         # an unknown datepart stays untouched (DuckDB errors on it too)

@@ -10,25 +10,30 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
 
-_SESSION: list = []  # the suite's one SparkSession
+def _build_spark():
+    from component_duckdb_transformation_spark.session import build_spark_session
+
+    return build_spark_session(
+        app_name="cdts-tests",
+        threads=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
+        shuffle_partitions=8,
+    )
+
+
+@pytest.fixture(scope="session")
+def _spark_box():
+    """The suite's one SparkSession, in a box ``spark`` refills."""
+    return [_build_spark()]
 
 
 @pytest.fixture(scope="module")
-def spark():
+def spark(_spark_box):
     """The suite's SparkSession, rebuilt for the next module when a
     module stopped it (``test_vanilla_session.py`` stops the active
     session to build a conf-free one)."""
-    from component_duckdb_transformation_spark.session import build_spark_session
-
-    if not _SESSION or _SESSION[0].sparkContext._jsc is None:
-        _SESSION[:] = [
-            build_spark_session(
-                app_name="cdts-tests",
-                threads=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
-                shuffle_partitions=8,
-            )
-        ]
-    yield _SESSION[0]
+    if _spark_box[0].sparkContext._jsc is None:
+        _spark_box[0] = _build_spark()
+    yield _spark_box[0]
 
 
 @pytest.fixture()

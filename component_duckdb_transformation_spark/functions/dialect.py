@@ -10879,32 +10879,28 @@ def _order_at(c: _CallSite):
     return pos[0] if pos else None
 
 
+def _order_key(c: _CallSite, ob: int):
+    """``(key, DESC)`` of the ``ORDER BY key [ASC|DESC]`` at ``ob`` in
+    ``c.inner``, or None when BY does not follow ORDER."""
+    order_expr = _sql(c.inner, ob, len(c.inner))[len("ORDER"):].strip()
+    if not order_expr.upper().startswith("BY"):
+        return None
+    order_expr = order_expr[2:].strip()
+    if order_expr.upper().endswith(" DESC"):
+        return order_expr[:-5].strip(), True
+    if order_expr.upper().endswith(" ASC"):
+        return order_expr[:-4].strip(), False
+    return order_expr, False
+
+
 def _shim_ordered_first_last(c):
     # ordered first/last ARE min_by/max_by
     ob = _order_at(c)
-    if ob is not None:
-        head = _sql(c.inner, 0, ob)
-        order_expr = _sql(c.inner, ob, len(c.inner))[len("ORDER"):].strip()
-        if order_expr.upper().startswith("BY"):
-            order_expr = order_expr[2:].strip()
-            desc = order_expr.upper().endswith(" DESC")
-            key = (
-                order_expr[:-5].strip()
-                if desc
-                else (
-                    order_expr[:-4].strip()
-                    if order_expr.upper().endswith(" ASC")
-                    else order_expr
-                )
-            )
-            if "," not in key:
-                lo_first = c.name == "first"
-                fn = (
-                    "min_by"
-                    if lo_first != desc
-                    else "max_by"
-                )
-                return f"{fn}({head}, {key})"
+    order = _order_key(c, ob) if ob is not None else None
+    if order is not None and "," not in order[0]:
+        key, desc = order
+        fn = "min_by" if (c.name == "first") != desc else "max_by"
+        return f"{fn}({_sql(c.inner, 0, ob)}, {key})"
 
 
 def _shim_drop_agg_order(c):
@@ -10932,19 +10928,9 @@ def _shim_ordered_list_agg(c):
         # rows are collected as structs and unwrapped —
         # the per-element lambda cost is group-sized);
         # NULLs sort LAST in DuckDB for ASC and DESC
-        order_expr = tail[len("ORDER") :].strip()
-        assert order_expr.upper().startswith("BY")
-        order_expr = order_expr[2:].strip()
-        desc = order_expr.upper().endswith(" DESC")
-        core = (
-            order_expr[:-5].strip()
-            if desc
-            else (
-                order_expr[:-4].strip()
-                if order_expr.upper().endswith(" ASC")
-                else order_expr
-            )
-        )
+        order = _order_key(c, ob)
+        assert order is not None
+        core, desc = order
         hdist = re.match(r"(?is)^\s*DISTINCT\b", head)
         hcore = (head[hdist.end():].strip() if hdist else head)
         if core.replace(" ", "") == hcore.replace(" ", ""):

@@ -667,86 +667,31 @@ def _translate_tokens(tokens: List[Token]) -> str:
 
 
 def _translate_tokens_inner(tokens: List[Token]) -> str:
-    tokens = _from_first_scope(_rewrite_from_first(tokens))
-    tokens = _rewrite_table_name_literals(tokens)
-    tokens = _rewrite_numeric_underscores(tokens)
-    # e'...' decoding must precede the raw-string backslash doubling
-    tokens = _rewrite_escape_strings(tokens)
-    tokens = _rewrite_string_escapes(tokens)
-    tokens = _rewrite_quoted_identifiers(tokens)
-    tokens = _rewrite_trailing_commas(tokens)
-    tokens = _rewrite_at_time_zone(tokens)
-    tokens = _rewrite_time_wrap(tokens)
-    tokens = _rewrite_time_casts(tokens)
-    tokens = _rewrite_time_literals(tokens)
-    tokens = _rewrite_brace_literals(tokens)
-    tokens = _rewrite_concat_null_skipping(tokens)
-    tokens = _rewrite_substr_window(tokens)
-    tokens = _rewrite_array_type_suffix(tokens)
-    tokens = _rewrite_brackets(tokens)
-    tokens = _rewrite_date_part_list(tokens)
-    tokens = _rewrite_cte_materialized(tokens)
-    tokens = _rewrite_series_table_fns(tokens)
-    tokens = _rewrite_operator_fn_aliases(tokens)
-    tokens = _rewrite_polymorphic_len(tokens)
-    tokens = _rewrite_collations(tokens)
-    tokens = _rewrite_similar_to(tokens)
-    tokens = _rewrite_glob(tokens)
-    tokens = _rewrite_asof_join(tokens)
-    tokens = _rewrite_positional_join(tokens)
-    tokens = _rewrite_using_sample(tokens)
-    tokens = _rewrite_statement_unpivot(tokens)
-    tokens = _rewrite_extract_dow(tokens)
-    tokens = _rewrite_date_trunc(tokens)
-    tokens = _rewrite_date_diff(tokens)
-    tokens = _rewrite_regexp_replace_flags(tokens)
-    tokens = _rewrite_strftime(tokens)
-    tokens = _rewrite_epoch(tokens)
-    tokens = _rewrite_bare_types(tokens)
-    tokens = _rewrite_bit_count_width(tokens)
-    tokens = _rewrite_integral_casts(tokens)
-    tokens = _rewrite_power_and_regex_ops(tokens)
-    tokens = _rewrite_any_all(tokens)
-    tokens = _rewrite_filter_to_case(tokens)
-    tokens = _rewrite_json_arrows(tokens)
-    tokens = _rewrite_division_double(tokens)
-    tokens = _rewrite_round_double(tokens)
-    tokens = _rewrite_window_exclude(tokens)
-    tokens = _rewrite_unordered_ranking(tokens)
-    tokens = _rewrite_call_shims(tokens)
-    tokens = _rewrite_varchar_casts(tokens)
-    tokens = _rewrite_pipe_concat_casts(tokens)
-    tokens = _rewrite_date_interval_add(tokens)
-    tokens = _rewrite_filter_shorthand(tokens)
-    tokens = _rewrite_simple(tokens)
-    tokens = _innermost_first(tokens, _rewrite_distinct_on, {"distinct"})
-    tokens = _innermost_first(tokens, _rewrite_qualify, {"qualify"})
-    tokens = _rewrite_order_null_ordering(tokens)
-    tokens = _innermost_first(
-        tokens, lambda t: _rewrite_aggfn_groupby(t, _MAD_SPEC), {"mad"}
-    )
-    tokens = _innermost_first(
-        tokens, lambda t: _rewrite_aggfn_groupby(t, _ENTROPY_SPEC), {"entropy"}
-    )
-    tokens = _innermost_first(tokens, _rewrite_mad_window, {"mad"})
-    tokens = _rewrite_mad_window_inplace(tokens)
-    tokens = _rewrite_mad_fallback_template(tokens)
-    tokens = _rewrite_product_entropy(tokens)
-    tokens = _rewrite_ent_window_streaming(tokens)
-    tokens = _innermost_first(
-        tokens, _rewrite_entropy_window_running, {"entropy"}
-    )
-    tokens = _rewrite_agg_window_frames(tokens)
-    tokens = _rewrite_fuse_percentile_cont(tokens)
-    # brace-map sentinel back to Spark's variadic map (see
-    # _rewrite_brace_literals)
-    out = [
-        Token("word", "map")
-        if t.kind == "word" and t.text == "__brace_map"
-        else t
+    """Run the ``_PASSES`` table in order. A pass whose trigger shares no
+    word or operator with the statement cannot change it and is skipped;
+    the set is rebuilt after every change, since passes emit words later
+    passes key on (``percentile_cont``, ``make_dt_interval``)."""
+    present = _present(tokens)
+    for rewrite, trigger in _PASSES:
+        if trigger is None or not present.isdisjoint(trigger):
+            out = rewrite(tokens)
+            if out is not tokens and out != tokens:
+                tokens, present = out, _present(out)
+    return "".join(t.text for t in tokens)
+
+
+def _present(tokens: List[Token]) -> set:
+    """The lowercase words and operators of a statement."""
+    return {t.text.lower() for t in tokens if t.kind in ("word", "op")}
+
+
+def _restore_brace_map(tokens: List[Token]) -> List[Token]:
+    """The brace-map sentinel back to Spark's variadic ``map`` (see
+    ``_rewrite_brace_literals``)."""
+    return [
+        Token("word", "map") if t.kind == "word" and t.text == "__brace_map" else t
         for t in tokens
     ]
-    return "".join(t.text for t in out)
 
 
 def _pctl_fold_sql(emit: str, p_text: str, is_disc: bool) -> str:
@@ -1114,73 +1059,64 @@ def _rewrite_array_type_suffix(tokens: List[Token]) -> List[Token]:
     Handles scalar element types, parenthesized ones
     (``DECIMAL(10,2)[]``), and nesting (``INT[][]``) — a ``[]`` whose
     preceding token is not a type shape is left for the bracket pass."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "op" and tok.text == "[":
-            j = _next_code(tokens, i)
-            if j < n and tokens[j].kind == "op" and tokens[j].text == "]":
-                k = len(out) - 1
-                while k >= 0 and out[k].kind in ("ws", "comment"):
-                    k -= 1
-                span = None
-                if (
-                    k >= 0
-                    and out[k].kind == "word"
-                    and out[k].text.lower() in _ARRAY_ELEM_TYPE_MAP
-                ):
-                    span = k
-                elif k >= 0 and out[k].kind == "op" and out[k].text in (")", ">"):
-                    open_t = "(" if out[k].text == ")" else "<"
-                    close_t = out[k].text
-                    depth = 0
-                    m = k
-                    while m >= 0:
-                        t = out[m]
-                        if t.kind == "op" and t.text == close_t:
-                            depth += 1
-                        elif t.kind == "op" and t.text == open_t:
-                            depth -= 1
-                            if depth == 0:
-                                break
-                        m -= 1
-                    w = m - 1
-                    while w >= 0 and out[w].kind in ("ws", "comment"):
-                        w -= 1
-                    heads = (
-                        ("decimal", "numeric", "varchar", "char", "struct")
-                        if close_t == ")"
-                        else ("array", "map", "struct")
-                    )
-                    if (
-                        m >= 0
-                        and w >= 0
-                        and out[w].kind == "word"
-                        and out[w].text.lower() in heads
-                    ):
-                        span = w
-                if span is not None:
-                    inner = out[span:]
-                    code = [t for t in inner if t.kind not in ("ws", "comment")]
-                    if len(code) == 1 and code[0].kind == "word":
-                        inner = [
-                            Token(
-                                "word",
-                                _ARRAY_ELEM_TYPE_MAP[code[0].text.lower()],
-                            )
-                        ]
-                    del out[span:]
-                    out.append(Token("word", "ARRAY"))
-                    out.append(Token("op", "<"))
-                    out.extend(inner)
-                    out.append(Token("op", ">"))
-                    i = j + 1
-                    continue
-        out.append(tok)
-        i += 1
-    return out
+
+    def lower(tokens, i, out):
+        j = _next_code(tokens, i)
+        if not (j < len(tokens) and tokens[j].kind == "op" and tokens[j].text == "]"):
+            return None
+        k = len(out) - 1
+        while k >= 0 and out[k].kind in ("ws", "comment"):
+            k -= 1
+        span = None
+        if (
+            k >= 0
+            and out[k].kind == "word"
+            and out[k].text.lower() in _ARRAY_ELEM_TYPE_MAP
+        ):
+            span = k
+        elif k >= 0 and out[k].kind == "op" and out[k].text in (")", ">"):
+            open_t = "(" if out[k].text == ")" else "<"
+            close_t = out[k].text
+            depth = 0
+            m = k
+            while m >= 0:
+                t = out[m]
+                if t.kind == "op" and t.text == close_t:
+                    depth += 1
+                elif t.kind == "op" and t.text == open_t:
+                    depth -= 1
+                    if depth == 0:
+                        break
+                m -= 1
+            w = m - 1
+            while w >= 0 and out[w].kind in ("ws", "comment"):
+                w -= 1
+            heads = (
+                ("decimal", "numeric", "varchar", "char", "struct")
+                if close_t == ")"
+                else ("array", "map", "struct")
+            )
+            if (
+                m >= 0
+                and w >= 0
+                and out[w].kind == "word"
+                and out[w].text.lower() in heads
+            ):
+                span = w
+        if span is None:
+            return None
+        inner = out[span:]
+        code = [t for t in inner if t.kind not in ("ws", "comment")]
+        if len(code) == 1 and code[0].kind == "word":
+            inner = [Token("word", _ARRAY_ELEM_TYPE_MAP[code[0].text.lower()])]
+        del out[span:]
+        out.append(Token("word", "ARRAY"))
+        out.append(Token("op", "<"))
+        out.extend(inner)
+        out.append(Token("op", ">"))
+        return j + 1
+
+    return _lower_sites(tokens, {"["}, lower)
 
 
 _TRAILING_COMMA_CLAUSES = {
@@ -1195,21 +1131,17 @@ def _rewrite_trailing_commas(tokens: List[Token]) -> List[Token]:
     verified; function calls and row expressions do NOT accept them,
     matching the contexts this pass drops: before a clause keyword,
     ``]``, ``}``, or end of statement — never before ``)``)."""
-    out: List[Token] = []
-    n = len(tokens)
-    for i, tok in enumerate(tokens):
-        if tok.kind == "op" and tok.text == ",":
-            j = _next_code(tokens, i)
-            if j >= n:
-                continue
-            nxt = tokens[j]
-            if (nxt.kind == "op" and nxt.text in ("]", "}")) or (
-                nxt.kind == "word"
-                and nxt.upper in _TRAILING_COMMA_CLAUSES
-            ):
-                continue
-        out.append(tok)
-    return out
+
+    def lower(tokens, i, out):
+        j = _next_code(tokens, i)
+        if (
+            j >= len(tokens)
+            or (tokens[j].kind == "op" and tokens[j].text in ("]", "}"))
+            or (tokens[j].kind == "word" and tokens[j].upper in _TRAILING_COMMA_CLAUSES)
+        ):
+            return i + 1
+
+    return _lower_sites(tokens, {","}, lower)
 
 
 _BIT_COUNT_WIDTHS = {
@@ -1355,53 +1287,39 @@ def _rewrite_time_casts(tokens: List[Token]) -> List[Token]:
     CASE dispatch would break inline-table foldability — a ::TIME
     inside VALUES stays and fails loudly like before."""
     in_values = _values_spans(tokens)
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if (
-            tok.kind == "word"
-            and tok.text.lower() == "cast"
-            and i not in in_values
-        ):
+
+    def lower(tokens, i, out):
+        n = len(tokens)
+        if i in in_values:
+            return None
+        if tokens[i].kind == "word":  # CAST(x AS TIME)
             j = _next_code(tokens, i)
-            if j < n and tokens[j].kind == "op" and tokens[j].text == "(":
-                close = _matching_paren(tokens, j)
-                code = [
-                    m for m in range(j + 1, close)
-                    if tokens[m].kind not in ("ws", "comment")
-                ]
-                if (
-                    len(code) >= 2
-                    and tokens[code[-1]].is_kw("TIME")
-                    and tokens[code[-2]].is_kw("AS")
-                ):
-                    arg = "".join(
-                        t.text for t in tokens[j + 1: code[-2]]
-                    ).strip()
-                    out.extend(_toks(_time_cast_sql(arg)))
-                    i = close + 1
-                    continue
-        if (
-            tok.kind == "op"
-            and tok.text == "::"
-            and i not in in_values
-        ):
-            k = _next_code(tokens, i)
-            if k < n and tokens[k].is_kw("TIME"):
-                # TIME must be the full cast target (TIMESTAMP etc.
-                # start with other keywords; `TIME ZONE` never follows
-                # ``::``)
-                operand = _pop_operand(out)
-                if operand:
-                    arg = "".join(t.text for t in operand).strip()
-                    out.extend(_toks(_time_cast_sql(arg)))
-                    i = k + 1
-                    continue
-        out.append(tok)
-        i += 1
-    return out
+            if not (j < n and tokens[j].kind == "op" and tokens[j].text == "("):
+                return None
+            close = _matching_paren(tokens, j)
+            code = [
+                m for m in range(j + 1, close)
+                if tokens[m].kind not in ("ws", "comment")
+            ]
+            if not (
+                len(code) >= 2
+                and tokens[code[-1]].is_kw("TIME")
+                and tokens[code[-2]].is_kw("AS")
+            ):
+                return None
+            out.extend(_toks(_time_cast_sql(_sql(tokens, j + 1, code[-2]))))
+            return close + 1
+        # x::TIME — TIME must be the full cast target (TIMESTAMP etc.
+        # start with other keywords; `TIME ZONE` never follows ``::``)
+        k = _next_code(tokens, i)
+        if k < n and tokens[k].is_kw("TIME"):
+            operand = _pop_operand(out)
+            if operand:
+                arg = "".join(t.text for t in operand).strip()
+                out.extend(_toks(_time_cast_sql(arg)))
+                return k + 1
+
+    return _lower_sites(tokens, {"cast", "::"}, lower)
 
 
 def _rewrite_at_time_zone(tokens: List[Token]) -> List[Token]:
@@ -1410,59 +1328,42 @@ def _rewrite_at_time_zone(tokens: List[Token]) -> List[Token]:
     which the function pass later lowers to ``to_utc_timestamp``.
     Rendering keeps this engine's UTC-session convention (no
     TIMESTAMPTZ ``+00`` suffix — COVERAGE.md)."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.is_kw("AT"):
-            j = _next_code(tokens, i)
-            k = _next_code(tokens, j) if j < n else n
-            if (
-                j < n
-                and tokens[j].is_kw("TIME")
-                and k < n
-                and tokens[k].is_kw("ZONE")
-            ):
-                z = _next_code(tokens, k)
-                if z < n:
-                    if tokens[z].kind == "op" and tokens[z].text == "(":
-                        z_end = _matching_paren(tokens, z) + 1
-                    elif tokens[z].kind in (
-                        "string", "word", "bident", "qident"
-                    ):
-                        z_end = z + 1
-                        nx = _next_code(tokens, z)
-                        while (
-                            nx < n
-                            and tokens[nx].kind == "op"
-                            and tokens[nx].text == "."
-                        ):
-                            nx = _next_code(tokens, nx)
-                            z_end = nx + 1
-                            nx = _next_code(tokens, nx)
-                    else:
-                        out.append(tok)
-                        i += 1
-                        continue
-                    operand = _pop_operand(out)
-                    # fold a typed-literal prefix (TIMESTAMP '...')
-                    k3 = len(out) - 1
-                    while k3 >= 0 and out[k3].kind in ("ws", "comment"):
-                        k3 -= 1
-                    if k3 >= 0 and out[k3].is_kw(
-                        "DATE", "TIME", "TIMESTAMP", "TIMESTAMPTZ"
-                    ):
-                        operand = out[k3:] + operand
-                        del out[k3:]
-                    o_sql = "".join(t.text for t in operand).strip()
-                    z_sql = _sql(tokens, z, z_end)
-                    out.extend(_toks(f"timezone({z_sql}, {o_sql})"))
-                    i = z_end
-                    continue
-        out.append(tok)
-        i += 1
-    return out
+
+    def lower(tokens, i, out):
+        n = len(tokens)
+        j = _next_code(tokens, i)
+        k = _next_code(tokens, j) if j < n else n
+        if not (
+            j < n and tokens[j].is_kw("TIME") and k < n and tokens[k].is_kw("ZONE")
+        ):
+            return None
+        z = _next_code(tokens, k)
+        if z >= n:
+            return None
+        if tokens[z].kind == "op" and tokens[z].text == "(":
+            z_end = _matching_paren(tokens, z) + 1
+        elif tokens[z].kind in ("string", "word", "bident", "qident"):
+            z_end = z + 1
+            nx = _next_code(tokens, z)
+            while nx < n and tokens[nx].kind == "op" and tokens[nx].text == ".":
+                nx = _next_code(tokens, nx)
+                z_end = nx + 1
+                nx = _next_code(tokens, nx)
+        else:
+            return None
+        operand = _pop_operand(out)
+        # fold a typed-literal prefix (TIMESTAMP '...')
+        k3 = len(out) - 1
+        while k3 >= 0 and out[k3].kind in ("ws", "comment"):
+            k3 -= 1
+        if k3 >= 0 and out[k3].is_kw("DATE", "TIME", "TIMESTAMP", "TIMESTAMPTZ"):
+            operand = out[k3:] + operand
+            del out[k3:]
+        o_sql = "".join(t.text for t in operand).strip()
+        out.extend(_toks(f"timezone({_sql(tokens, z, z_end)}, {o_sql})"))
+        return z_end
+
+    return _lower_sites(tokens, {"at"}, lower)
 
 
 def _rewrite_time_wrap(tokens: List[Token]) -> List[Token]:
@@ -1671,23 +1572,17 @@ def _rewrite_time_literals(tokens: List[Token]) -> List[Token]:
     same representation). Documented divergence (COVERAGE.md):
     arithmetic crossing midnight lands on the next epoch day instead of
     wrapping, and results render as timestamps."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.is_kw("TIME"):
-            j = _next_code(tokens, i)
-            if j < n and tokens[j].kind == "string":
-                t = _decode_spark_string(tokens[j])
-                out.append(Token("word", "TIMESTAMP"))
-                out.append(Token("ws", " "))
-                out.append(_encode_spark_string(f"1970-01-01 {t}"))
-                i = j + 1
-                continue
-        out.append(tok)
-        i += 1
-    return out
+
+    def lower(tokens, i, out):
+        j = _next_code(tokens, i)
+        if j < len(tokens) and tokens[j].kind == "string":
+            t = _decode_spark_string(tokens[j])
+            out.append(Token("word", "TIMESTAMP"))
+            out.append(Token("ws", " "))
+            out.append(_encode_spark_string(f"1970-01-01 {t}"))
+            return j + 1
+
+    return _lower_sites(tokens, {"time"}, lower)
 
 
 _TEMPORAL_PREFIX_RE = re.compile(
@@ -1990,88 +1885,54 @@ def _rewrite_any_all(tokens: List[Token]) -> List[Token]:
 
     ``GROUP/ORDER BY ALL``, ``UNION ALL`` etc. never match — the token
     before the quantifier must be a comparison operator."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.is_kw("ANY") or tok.is_kw("ALL"):
-            p = _next_code(tokens, i)
-            if p < n and tokens[p].kind == "op" and tokens[p].text == "(":
-                k = len(out) - 1
-                while k >= 0 and out[k].kind in ("ws", "comment"):
-                    k -= 1
-                if (
-                    k >= 0
-                    and out[k].kind == "op"
-                    and out[k].text in _ANY_ALL_CMP_OPS
-                ):
-                    close = _matching_paren(tokens, p)
-                    inner = _rewrite_any_all(tokens[p + 1: close])
-                    icode = [
-                        t for t in inner if t.kind not in ("ws", "comment")
-                    ]
-                    is_sub = bool(icode) and (
-                        icode[0].is_kw("SELECT")
-                        or icode[0].is_kw("FROM")
-                        or icode[0].is_kw("WITH")
-                        or icode[0].is_kw("VALUES")
-                    )
-                    op = out[k].text
-                    is_any = tok.is_kw("ANY")
-                    if (not is_sub) or (
-                        is_sub
-                        and (
-                            (is_any and op in ("=", "=="))
-                            or (not is_any and op == "<>")
-                        )
-                    ):
-                        del out[k:]
-                        left = _pop_operand(out)
-                        left_sql = "".join(t.text for t in left).strip()
-                        inner_sql = "".join(t.text for t in inner)
-                        if is_sub:
-                            neg = "" if is_any else "NOT "
-                            out.extend(
-                                _toks(
-                                    f"({left_sql}) {neg}IN ({inner_sql})"
-                                )
-                            )
-                        else:
-                            elems = _literal_array_elements(inner)
-                            if elems is not None and len(elems) <= 20:
-                                # literal-list quantifier: expand to a
-                                # plain OR/AND chain — identical three-
-                                # valued semantics to exists/forall, no
-                                # lambda (works around a Spark 4.x
-                                # Catalyst bug mis-pushing join-mixed
-                                # lambda predicates through joins —
-                                # INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND),
-                                # and each conjunct can push down to
-                                # the scan
-                                if not elems:
-                                    out.extend(
-                                        _toks("false" if is_any else "true")
-                                    )
-                                else:
-                                    joiner = " OR " if is_any else " AND "
-                                    out.extend(_toks("(" + joiner.join(
-                                        f"(({left_sql}) {op} ({e}))"
-                                        for e in elems
-                                    ) + ")"))
-                            else:
-                                fn = "exists" if is_any else "forall"
-                                out.extend(
-                                    _toks(
-                                        f"{fn}(({inner_sql}), "
-                                        f"__x -> ({left_sql}) {op} __x)"
-                                    )
-                                )
-                        i = close + 1
-                        continue
-        out.append(tok)
-        i += 1
-    return out
+
+    def lower(tokens, i, out):
+        p = _next_code(tokens, i)
+        if not (p < len(tokens) and tokens[p].kind == "op" and tokens[p].text == "("):
+            return None
+        k = len(out) - 1
+        while k >= 0 and out[k].kind in ("ws", "comment"):
+            k -= 1
+        if not (k >= 0 and out[k].kind == "op" and out[k].text in _ANY_ALL_CMP_OPS):
+            return None
+        close = _matching_paren(tokens, p)
+        inner = _rewrite_any_all(tokens[p + 1: close])
+        icode = [t for t in inner if t.kind not in ("ws", "comment")]
+        is_sub = bool(icode) and icode[0].is_kw("SELECT", "FROM", "WITH", "VALUES")
+        op = out[k].text
+        is_any = tokens[i].is_kw("ANY")
+        if is_sub and not (
+            (is_any and op in ("=", "==")) or (not is_any and op == "<>")
+        ):
+            return None
+        del out[k:]
+        left = _pop_operand(out)
+        left_sql = "".join(t.text for t in left).strip()
+        inner_sql = "".join(t.text for t in inner)
+        elems = None if is_sub else _literal_array_elements(inner)
+        if is_sub:
+            neg = "" if is_any else "NOT "
+            out.extend(_toks(f"({left_sql}) {neg}IN ({inner_sql})"))
+        elif elems is not None and len(elems) <= 20:
+            # literal-list quantifier: expand to a plain OR/AND chain —
+            # identical three-valued semantics to exists/forall, no
+            # lambda (works around a Spark 4.x Catalyst bug mis-pushing
+            # join-mixed lambda predicates through joins —
+            # INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND), and each conjunct can
+            # push down to the scan
+            if not elems:
+                out.extend(_toks("false" if is_any else "true"))
+            else:
+                joiner = " OR " if is_any else " AND "
+                out.extend(_toks("(" + joiner.join(
+                    f"(({left_sql}) {op} ({e}))" for e in elems
+                ) + ")"))
+        else:
+            fn = "exists" if is_any else "forall"
+            out.extend(_toks(f"{fn}(({inner_sql}), __x -> ({left_sql}) {op} __x)"))
+        return close + 1
+
+    return _lower_sites(tokens, {"any", "all"}, lower)
 
 
 def _rewrite_positional_join(tokens: List[Token]) -> List[Token]:
@@ -2082,26 +1943,16 @@ def _rewrite_positional_join(tokens: List[Token]) -> List[Token]:
     ordering caveat after COW mutations). Supported shape: both sides
     plain table primaries (name or aliased subquery); anything else is
     left for Spark's parser to reject loudly."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if not tok.is_kw("POSITIONAL"):
-            out.append(tok)
-            i += 1
-            continue
+
+    def lower(tokens, i, out):
+        n = len(tokens)
         j = _next_code(tokens, i)
         if not (j < n and tokens[j].is_kw("JOIN")):
-            out.append(tok)
-            i += 1
-            continue
+            return None
         # right primary: name/dotted or parenthesized + optional alias
         r0 = _next_code(tokens, j)
         if r0 >= n:
-            out.append(tok)
-            i += 1
-            continue
+            return None
         if tokens[r0].kind == "op" and tokens[r0].text == "(":
             r_end = _matching_paren(tokens, r0) + 1
         elif tokens[r0].kind in ("word", "bident", "qident"):
@@ -2112,9 +1963,7 @@ def _rewrite_positional_join(tokens: List[Token]) -> List[Token]:
                 r_end = k + 1
                 k = _next_code(tokens, k)
         else:
-            out.append(tok)
-            i += 1
-            continue
+            return None
         alias_end = r_end
         a0 = _next_code(tokens, r_end - 1)
         if a0 < n and tokens[a0].is_kw("AS"):
@@ -2130,15 +1979,9 @@ def _rewrite_positional_join(tokens: List[Token]) -> List[Token]:
             alias_end = a0 + 1
         right = _parse_table_primary(tokens[r0:alias_end])
         lstart = _table_primary_backward(out)
-        left = (
-            _parse_table_primary(out[lstart:])
-            if lstart is not None
-            else None
-        )
+        left = _parse_table_primary(out[lstart:]) if lstart is not None else None
         if right is None or left is None:
-            out.append(tok)
-            i += 1
-            continue
+            return None
         (lsrc, lal), (rsrc, ral) = left, right
 
         def _wrap(src: str, al: str) -> str:
@@ -2155,8 +1998,9 @@ def _rewrite_positional_join(tokens: List[Token]) -> List[Token]:
         )
         _patch_enclosing_star_for_asof(out, lal, "__pos")
         _patch_enclosing_star_for_asof(out, ral, "__pos")
-        i = alias_end
-    return out
+        return alias_end
+
+    return _lower_sites(tokens, {"positional"}, lower)
 
 
 def _rewrite_asof_join(tokens: List[Token]) -> List[Token]:
@@ -2177,47 +2021,31 @@ def _rewrite_asof_join(tokens: List[Token]) -> List[Token]:
     are patched with ``EXCEPT (__asof_end)`` so the helper column never
     reaches the result schema (``_patch_enclosing_star_for_asof``).
     """
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if not tok.is_kw("ASOF"):
-            out.append(tok)
-            i += 1
-            continue
+
+    def lower(tokens, i, out):
+        n = len(tokens)
         # --- join type
         j = _next_code(tokens, i)
         left_join = j < n and tokens[j].is_kw("LEFT")
-        if j < n and (tokens[j].is_kw("LEFT") or tokens[j].is_kw("INNER")):
+        if j < n and tokens[j].is_kw("LEFT", "INNER"):
             j = _next_code(tokens, j)
         if not (j < n and tokens[j].is_kw("JOIN")):
-            out.append(tok)
-            i += 1
-            continue
+            return None
         # --- right ref
         r0 = _next_code(tokens, j)
         if r0 >= n:
-            out.append(tok)
-            i += 1
-            continue
+            return None
         if tokens[r0].kind == "op" and tokens[r0].text == "(":
             r_end = _matching_paren(tokens, r0) + 1
         elif tokens[r0].kind in ("word", "bident", "qident"):
             r_end = r0 + 1
             k = _next_code(tokens, r0)
-            while (
-                k < n
-                and tokens[k].kind == "op"
-                and tokens[k].text == "."
-            ):
+            while k < n and tokens[k].kind == "op" and tokens[k].text == ".":
                 k = _next_code(tokens, k)
                 r_end = k + 1
                 k = _next_code(tokens, k)
         else:
-            out.append(tok)
-            i += 1
-            continue
+            return None
         rsource = tokens[r0:r_end]
         # --- alias
         a0 = _next_code(tokens, r_end - 1)
@@ -2242,9 +2070,7 @@ def _rewrite_asof_join(tokens: List[Token]) -> List[Token]:
         # --- ON condition
         on0 = _next_code(tokens, alias_end - 1)
         if not (ralias and on0 < n and tokens[on0].is_kw("ON")):
-            out.append(tok)
-            i += 1
-            continue
+            return None
         c0 = on0 + 1
         depth = 0
         c_end = c0
@@ -2316,9 +2142,7 @@ def _rewrite_asof_join(tokens: List[Token]) -> List[Token]:
                 ok = False
                 break
         if not ok or ineq is None:
-            out.append(tok)
-            i += 1
-            continue
+            return None
         # --- build the replacement
         lref, rref, op = ineq
         ts_col = rref[1]
@@ -2348,9 +2172,9 @@ def _rewrite_asof_join(tokens: List[Token]) -> List[Token]:
             )
         )
         _patch_enclosing_star_for_asof(out, ralias)
-        i = c_end
-        continue
-    return out
+        return c_end
+
+    return _lower_sites(tokens, {"asof"}, lower)
 
 
 def _rewrite_concat_null_skipping(tokens: List[Token]) -> List[Token]:
@@ -2465,40 +2289,33 @@ def _rewrite_extract_dow(tokens: List[Token]) -> List[Token]:
     rewrites both calls to the DuckDB Sunday=0 convention. The EXTRACT
     keyword form is untouched by the call shims (and this pass never
     re-scans its own output)."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.is_kw("EXTRACT"):
-            p_open = _next_code(tokens, i)
-            if p_open < n and tokens[p_open].text == "(":
-                field_idx = _next_code(tokens, p_open)
-                field = tokens[field_idx].upper if field_idx < n else ""
-                if field in ("DOW", "DAYOFWEEK", "ISODOW"):
-                    close = _matching_paren(tokens, p_open)
-                    if field == "ISODOW":
-                        from_idx = _next_code(tokens, field_idx)
-                        expr = tokens[_next_code(tokens, from_idx): close]
-                        out.extend(_toks("(((extract(DAYOFWEEK FROM "))
-                        out.extend(expr)
-                        out.extend(_toks(") + 5) % 7) + 1)"))
-                    else:
-                        out.append(Token("op", "("))
-                        out.extend(tokens[i: close + 1])
-                        out.extend(_toks(" - 1)"))
-                    i = close + 1
-                    continue
-                if field in ("SECOND", "SECONDS"):
-                    close = _matching_paren(tokens, p_open)
-                    out.extend(_toks("CAST(floor("))
-                    out.extend(tokens[i: close + 1])
-                    out.extend(_toks(") AS BIGINT)"))
-                    i = close + 1
-                    continue
-        out.append(tok)
-        i += 1
-    return out
+
+    def lower(tokens, i, out):
+        n = len(tokens)
+        p_open = _next_code(tokens, i)
+        if not (p_open < n and tokens[p_open].text == "("):
+            return None
+        field_idx = _next_code(tokens, p_open)
+        field = tokens[field_idx].upper if field_idx < n else ""
+        close = _matching_paren(tokens, p_open)
+        if field == "ISODOW":
+            from_idx = _next_code(tokens, field_idx)
+            out.extend(_toks("(((extract(DAYOFWEEK FROM "))
+            out.extend(tokens[_next_code(tokens, from_idx): close])
+            out.extend(_toks(") + 5) % 7) + 1)"))
+        elif field in ("DOW", "DAYOFWEEK"):
+            out.append(Token("op", "("))
+            out.extend(tokens[i: close + 1])
+            out.extend(_toks(" - 1)"))
+        elif field in ("SECOND", "SECONDS"):
+            out.extend(_toks("CAST(floor("))
+            out.extend(tokens[i: close + 1])
+            out.extend(_toks(") AS BIGINT)"))
+        else:
+            return None
+        return close + 1
+
+    return _lower_sites(tokens, {"extract"}, lower)
 
 
 def _date_trunc_returns_date() -> bool:
@@ -4556,60 +4373,41 @@ def _rewrite_filter_to_case(tokens: List[Token]) -> List[Token]:
     Runs BEFORE the call shims so the mad/entropy machinery sees the
     folded argument; handles the WHERE-less shorthand itself. DISTINCT
     riders stay outside the CASE."""
-    n = len(tokens)
-    if not any(
-        t.kind == "word" and t.text.lower() in _FILTER_TO_CASE_FNS
-        for t in tokens
-    ):
-        return tokens
-    out: List[Token] = []
-    i = 0
-    while i < n:
-        t = tokens[i]
-        if t.kind == "word" and t.text.lower() in _FILTER_TO_CASE_FNS:
-            p = len(out) - 1
-            while p >= 0 and out[p].kind in ("ws", "comment"):
-                p -= 1
-            dotted = p >= 0 and out[p].kind == "op" and out[p].text == "."
-            p_open = _next_code(tokens, i)
-            if (
-                not dotted
-                and p_open < n
-                and tokens[p_open].kind == "op"
-                and tokens[p_open].text == "("
-            ):
-                close = _matching_paren(tokens, p_open)
-                f_kw = _next_code(tokens, close)
-                if f_kw < n and tokens[f_kw].is_kw("FILTER"):
-                    f_open = _next_code(tokens, f_kw)
-                    if (
-                        f_open < n
-                        and tokens[f_open].kind == "op"
-                        and tokens[f_open].text == "("
-                    ):
-                        f_close = _matching_paren(tokens, f_open)
-                        cond_lo = _next_code(tokens, f_open)
-                        if cond_lo < n and tokens[cond_lo].is_kw("WHERE"):
-                            cond_lo = _next_code(tokens, cond_lo)
-                        cond = _sql(tokens, cond_lo, f_close)
-                        inner = _rewrite_filter_to_case(
-                            tokens[p_open + 1 : close]
-                        )
-                        arg = "".join(tk.text for tk in inner)
-                        core, is_distinct = _split_distinct_prefix(arg)
-                        dq = "DISTINCT " if is_distinct else ""
-                        out.append(t)
-                        out.extend(
-                            _toks(
-                                f"({dq}CASE WHEN ({cond}) THEN ({core})"
-                                " ELSE NULL END)"
-                            )
-                        )
-                        i = f_close + 1
-                        continue
-        out.append(t)
-        i += 1
-    return out
+
+    def lower(tokens, i, out):
+        n = len(tokens)
+        p = len(out) - 1
+        while p >= 0 and out[p].kind in ("ws", "comment"):
+            p -= 1
+        if p >= 0 and out[p].kind == "op" and out[p].text == ".":
+            return None  # dotted
+        p_open = _next_code(tokens, i)
+        if not (
+            p_open < n and tokens[p_open].kind == "op" and tokens[p_open].text == "("
+        ):
+            return None
+        close = _matching_paren(tokens, p_open)
+        f_kw = _next_code(tokens, close)
+        if not (f_kw < n and tokens[f_kw].is_kw("FILTER")):
+            return None
+        f_open = _next_code(tokens, f_kw)
+        if not (
+            f_open < n and tokens[f_open].kind == "op" and tokens[f_open].text == "("
+        ):
+            return None
+        f_close = _matching_paren(tokens, f_open)
+        cond_lo = _next_code(tokens, f_open)
+        if cond_lo < n and tokens[cond_lo].is_kw("WHERE"):
+            cond_lo = _next_code(tokens, cond_lo)
+        cond = _sql(tokens, cond_lo, f_close)
+        inner = _rewrite_filter_to_case(tokens[p_open + 1 : close])
+        core, is_distinct = _split_distinct_prefix("".join(tk.text for tk in inner))
+        dq = "DISTINCT " if is_distinct else ""
+        out.append(tokens[i])
+        out.extend(_toks(f"({dq}CASE WHEN ({cond}) THEN ({core}) ELSE NULL END)"))
+        return f_close + 1
+
+    return _lower_sites(tokens, _FILTER_TO_CASE_FNS, lower)
 
 
 def _rewrite_filter_shorthand(tokens: List[Token]) -> List[Token]:
@@ -4617,39 +4415,26 @@ def _rewrite_filter_shorthand(tokens: List[Token]) -> List[Token]:
     requires ``FILTER (WHERE cond)``. Only the clause form (FILTER
     directly after a closing paren) is touched — ``filter(list,
     lambda)`` calls are untouched."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "word" and tok.upper == "FILTER":
-            prev = next(
-                (
-                    t
-                    for t in reversed(out)
-                    if t.kind not in ("ws", "comment")
-                ),
-                None,
-            )
-            p_open = _next_code(tokens, i)
-            if (
-                prev is not None
-                and prev.kind == "op"
-                and prev.text == ")"
-                and p_open < n
-                and tokens[p_open].kind == "op"
-                and tokens[p_open].text == "("
-            ):
-                first = _next_code(tokens, p_open)
-                if first < n and not tokens[first].is_kw("WHERE"):
-                    out.append(tok)
-                    out.extend(tokens[i + 1: p_open + 1])
-                    out.extend(_toks("WHERE "))
-                    i = p_open + 1
-                    continue
-        out.append(tok)
-        i += 1
-    return out
+
+    def lower(tokens, i, out):
+        n = len(tokens)
+        prev = next((t for t in reversed(out) if t.kind not in ("ws", "comment")), None)
+        p_open = _next_code(tokens, i)
+        if (
+            prev is not None
+            and prev.kind == "op"
+            and prev.text == ")"
+            and p_open < n
+            and tokens[p_open].kind == "op"
+            and tokens[p_open].text == "("
+        ):
+            first = _next_code(tokens, p_open)
+            if first < n and not tokens[first].is_kw("WHERE"):
+                out.extend(tokens[i: p_open + 1])
+                out.extend(_toks("WHERE "))
+                return p_open + 1
+
+    return _lower_sites(tokens, {"filter"}, lower)
 
 
 def _rewrite_order_null_ordering(tokens: List[Token]) -> List[Token]:
@@ -4660,67 +4445,58 @@ def _rewrite_order_null_ordering(tokens: List[Token]) -> List[Token]:
     (the difference changes row SETS under LIMIT and window frames, not
     just presentation order). ``ORDER BY ALL`` is left untouched (Spark
     accepts no NULLS clause there; documented divergence)."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.is_kw("ORDER"):
-            by_i = _next_code(tokens, i)
-            if by_i < n and tokens[by_i].is_kw("BY"):
-                out.extend(tokens[i: by_i + 1])
-                j = by_i + 1
-                item: List[Token] = []
-                depth = 0
 
-                def flush(item: List[Token]) -> None:
-                    code = [t for t in item if t.kind not in ("ws", "comment")]
-                    # top-level NULLS only (a nested OVER's NULLS clause
-                    # must not mask the outer item's default)
-                    d = 0
-                    has_nulls = False
-                    for t in item:
-                        if t.kind == "op" and t.text == "(":
-                            d += 1
-                        elif t.kind == "op" and t.text == ")":
-                            d -= 1
-                        elif d == 0 and t.is_kw("NULLS"):
-                            has_nulls = True
-                    is_all = len(code) == 1 and code[0].is_kw("ALL")
-                    desc = bool(code) and code[-1].is_kw("DESC")
-                    # recurse: subqueries / window calls inside the item
-                    out.extend(_rewrite_order_null_ordering(item))
-                    if code and not has_nulls and not is_all and not desc:
-                        out.extend(_toks(" NULLS LAST "))
+    def flush(item: List[Token], out: List[Token]) -> None:
+        code = [t for t in item if t.kind not in ("ws", "comment")]
+        # top-level NULLS only (a nested OVER's NULLS clause must not
+        # mask the outer item's default)
+        d = 0
+        has_nulls = False
+        for t in item:
+            if t.kind == "op" and t.text == "(":
+                d += 1
+            elif t.kind == "op" and t.text == ")":
+                d -= 1
+            elif d == 0 and t.is_kw("NULLS"):
+                has_nulls = True
+        is_all = len(code) == 1 and code[0].is_kw("ALL")
+        desc = bool(code) and code[-1].is_kw("DESC")
+        # recurse: subqueries / window calls inside the item
+        out.extend(_rewrite_order_null_ordering(item))
+        if code and not has_nulls and not is_all and not desc:
+            out.extend(_toks(" NULLS LAST "))
 
-                while j < n:
-                    t = tokens[j]
-                    if t.kind == "op" and t.text == "(":
-                        depth += 1
-                    elif t.kind == "op" and t.text == ")":
-                        if depth == 0:
-                            break
-                        depth -= 1
-                    elif depth == 0 and t.kind == "op" and t.text == ",":
-                        flush(item)
-                        item = []
-                        out.append(t)
-                        j += 1
-                        continue
-                    elif (
-                        depth == 0
-                        and t.kind == "word"
-                        and t.upper in _ORDER_LIST_TERMINATORS
-                    ):
-                        break
-                    item.append(t)
-                    j += 1
-                flush(item)
-                i = j
+    def lower(tokens, i, out):
+        n = len(tokens)
+        by_i = _next_code(tokens, i)
+        if not (by_i < n and tokens[by_i].is_kw("BY")):
+            return None
+        out.extend(tokens[i: by_i + 1])
+        j = by_i + 1
+        item: List[Token] = []
+        depth = 0
+        while j < n:
+            t = tokens[j]
+            if t.kind == "op" and t.text == "(":
+                depth += 1
+            elif t.kind == "op" and t.text == ")":
+                if depth == 0:
+                    break
+                depth -= 1
+            elif depth == 0 and t.kind == "op" and t.text == ",":
+                flush(item, out)
+                item = []
+                out.append(t)
+                j += 1
                 continue
-        out.append(tok)
-        i += 1
-    return out
+            elif depth == 0 and t.kind == "word" and t.upper in _ORDER_LIST_TERMINATORS:
+                break
+            item.append(t)
+            j += 1
+        flush(item, out)
+        return j
+
+    return _lower_sites(tokens, {"order"}, lower)
 
 
 def _splice_template(template: str, args: dict) -> List[Token]:
@@ -4808,87 +4584,69 @@ def _rewrite_product_entropy(tokens: List[Token], windows=None) -> List[Token]:
     windows resolve against the statement's WINDOW definitions."""
     if windows is None:
         windows = _lazy_windows(tokens)
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "word" and tok.text.lower() == "round":
+
+    def lower(tokens, i, out):
+        n = len(tokens)
+        low = tokens[i].text.lower()
+        p_open = _next_code(tokens, i)
+        if not (p_open < n and tokens[p_open].text == "("):
+            return None
+        close = _matching_paren(tokens, p_open)
+        args = _call_args(tokens, p_open, close)
+        if low == "round":
             # round(product(x), n) needs the sign applied OUTSIDE the
             # round (see _ROUND_PRODUCT_TEMPLATE).
-            p_open = _next_code(tokens, i)
-            if p_open < n and tokens[p_open].text == "(":
-                close = _matching_paren(tokens, p_open)
-                args = _call_args(tokens, p_open, close)
-                inner = _strip_product_call(args[0]) if len(args) == 2 else None
-                if inner is not None:
-                    arg = _rewrite_product_entropy(inner, windows)
-                    scale = _rewrite_product_entropy(args[1], windows)
-                    out.extend(
-                        _splice_template(
-                            _ROUND_PRODUCT_TEMPLATE,
-                            {"__E0": arg, "__N0": scale},
-                        )
-                    )
-                    i = close + 1
-                    continue
-        if tok.kind == "word" and tok.text.lower() in (
-            "product",
-            "entropy",
-            "histogram",
-        ):
-            p_open = _next_code(tokens, i)
-            if p_open < n and tokens[p_open].text == "(":
-                close = _matching_paren(tokens, p_open)
-                args = _call_args(tokens, p_open, close)
-                if len(args) == 1:
-                    after = _next_code(tokens, close)
-                    if after < n and tokens[after].is_kw("OVER"):
-                        # window form: product composes for ANY frame;
-                        # entropy for full-partition frames (per-value
-                        # counts need the (keys, value) partition trick)
-                        body, end = _over_spec(tokens, after, windows)
-                        spec = None if body is None else _parse_spec(body)
-                        repl = None
-                        if spec is not None:
-                            arg_s = "".join(
-                                t.text
-                                for t in _rewrite_product_entropy(args[0], windows)
-                            )
-                            low2 = tok.text.lower()
-                            if low2 == "product":
-                                repl = _product_window_sql(arg_s, spec.text)
-                            elif (
-                                low2 == "entropy"
-                                and spec.full
-                                # DISTINCT args can't restructure onto
-                                # per-count built-ins; left for the
-                                # frame-materialization fold (r10)
-                                and not _DISTINCT_PREFIX_RE.match(arg_s)
-                            ):
-                                repl = _entropy_window_sql(arg_s, spec.partition)
-                        if repl is not None:
-                            out.extend(_toks(repl))
-                            i = end
-                            continue
-                        # unsupported window shape: leave the call
-                        # untouched (loud unresolved-function error,
-                        # never the aggregate template + OVER)
-                        out.append(tok)
-                        i += 1
-                        continue
-                    arg = _rewrite_product_entropy(args[0], windows)
-                    tmpl = {
-                        "product": _PRODUCT_TEMPLATE,
-                        "entropy": _entropy_template(),
-                        "histogram": _histogram_template(),
-                    }[tok.text.lower()]
-                    out.extend(_splice_template(tmpl, {"__E0": arg}))
-                    i = close + 1
-                    continue
-        out.append(tok)
-        i += 1
-    return out
+            inner = _strip_product_call(args[0]) if len(args) == 2 else None
+            if inner is None:
+                return None
+            arg = _rewrite_product_entropy(inner, windows)
+            scale = _rewrite_product_entropy(args[1], windows)
+            out.extend(
+                _splice_template(_ROUND_PRODUCT_TEMPLATE, {"__E0": arg, "__N0": scale})
+            )
+            return close + 1
+        if len(args) != 1:
+            return None
+        after = _next_code(tokens, close)
+        if after < n and tokens[after].is_kw("OVER"):
+            # window form: product composes for ANY frame; entropy for
+            # full-partition frames (per-value counts need the (keys,
+            # value) partition trick)
+            body, end = _over_spec(tokens, after, windows)
+            spec = None if body is None else _parse_spec(body)
+            repl = None
+            if spec is not None:
+                arg_s = "".join(
+                    t.text for t in _rewrite_product_entropy(args[0], windows)
+                )
+                if low == "product":
+                    repl = _product_window_sql(arg_s, spec.text)
+                elif (
+                    low == "entropy"
+                    and spec.full
+                    # DISTINCT args can't restructure onto per-count
+                    # built-ins; left for the frame-materialization fold
+                    # (r10)
+                    and not _DISTINCT_PREFIX_RE.match(arg_s)
+                ):
+                    repl = _entropy_window_sql(arg_s, spec.partition)
+            if repl is None:
+                # unsupported window shape: leave the call untouched
+                # (loud unresolved-function error, never the aggregate
+                # template + OVER)
+                return None
+            out.extend(_toks(repl))
+            return end
+        arg = _rewrite_product_entropy(args[0], windows)
+        tmpl = {
+            "product": _PRODUCT_TEMPLATE,
+            "entropy": _entropy_template(),
+            "histogram": _histogram_template(),
+        }[low]
+        out.extend(_splice_template(tmpl, {"__E0": arg}))
+        return close + 1
+
+    return _lower_sites(tokens, {"round", "product", "entropy", "histogram"}, lower)
 
 
 # Aggregate/window call names that, when they ENCLOSE an entropy() call,
@@ -6182,31 +5940,30 @@ def _lambda_var_dot(tokens: List[Token], k: int) -> bool:
     )
 
 
-def _innermost_first(tokens: List[Token], rewrite, words=None) -> List[Token]:
-    """Apply ``rewrite`` inside every parenthesized scope, innermost
-    first, then at the top level. With ``words``, a statement naming
-    none of them is returned as is (``rewrite`` must leave any scope
-    without them unchanged)."""
-    if words is not None and not any(
-        t.kind == "word" and t.text.lower() in words for t in tokens
-    ):
-        return tokens
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "op" and tok.text == "(":
-            close = _matching_paren(tokens, i)
-            if close > i:
-                out.append(tok)
-                out.extend(_innermost_first(tokens[i + 1 : close], rewrite))
-                out.append(tokens[close])
-                i = close + 1
-                continue
-        out.append(tok)
-        i += 1
-    return rewrite(out)
+def _innermost_first(rewrite, **kwargs):
+    """The pass applying ``rewrite(tokens, **kwargs)`` inside every
+    parenthesized scope, innermost first, then at the top level."""
+
+    @functools.wraps(rewrite)
+    def run(tokens: List[Token]) -> List[Token]:
+        out: List[Token] = []
+        i = 0
+        n = len(tokens)
+        while i < n:
+            tok = tokens[i]
+            if tok.kind == "op" and tok.text == "(":
+                close = _matching_paren(tokens, i)
+                if close > i:
+                    out.append(tok)
+                    out.extend(run(tokens[i + 1 : close]))
+                    out.append(tokens[close])
+                    i = close + 1
+                    continue
+            out.append(tok)
+            i += 1
+        return rewrite(out, **kwargs)
+
+    return run
 
 
 def _named_windows(tokens: List[Token]) -> dict:
@@ -6379,7 +6136,7 @@ def _lazy_windows(tokens: List[Token]):
     return windows
 
 
-def _lower_calls(tokens: List[Token], names, lower, words=None) -> List[Token]:
+def _lower_calls(tokens: List[Token], names, lower) -> List[Token]:
     """Replace every call site of ``names`` (of every function when
     None) by ``lower(call, walk)``: SQL text or a token list, optionally
     as ``(replacement, end)`` to end at another index than past the
@@ -6387,14 +6144,7 @@ def _lower_calls(tokens: List[Token], names, lower, words=None) -> List[Token]:
     ``walk(toks, in_py_udf)`` applies the same lowering to a token run,
     for a lowering that rewrites its own arguments first. Each call
     site carries whether it sits inside a Python UDF's arguments, and
-    named windows resolve against the statement's WINDOW definitions.
-    A statement naming none of ``words`` (default: ``names``) is
-    returned as is."""
-    words = names if words is None else words
-    if words is not None and not any(
-        t.kind == "word" and t.text.lower() in words for t in tokens
-    ):
-        return tokens
+    named windows resolve against the statement's WINDOW definitions."""
     windows = _lazy_windows(tokens)
 
     def walk(toks: List[Token], in_py_udf: bool = False) -> List[Token]:
@@ -6428,6 +6178,27 @@ def _lower_calls(tokens: List[Token], names, lower, words=None) -> List[Token]:
     return walk(tokens)
 
 
+def _lower_sites(tokens: List[Token], trigger, lower) -> List[Token]:
+    """Call ``lower(tokens, i, out)`` at every word or operator whose
+    lowercase text is in ``trigger``: it appends its replacement to
+    ``out`` and returns the index to resume at, or returns None to keep
+    the token. ``tokens`` itself comes back when nothing was lowered."""
+    out: List[Token] = []
+    lowered = False
+    i = 0
+    n = len(tokens)
+    while i < n:
+        t = tokens[i]
+        if t.kind in ("word", "op") and t.text.lower() in trigger:
+            j = lower(tokens, i, out)
+            if j is not None:
+                i, lowered = j, True
+                continue
+        out.append(t)
+        i += 1
+    return out if lowered else tokens
+
+
 def _rewrite_mad_window_inplace(tokens: List[Token]) -> List[Token]:
     """Lower every ``mad(x) OVER (spec)`` the full-partition restructure
     left behind — bounded ROWS/RANGE and running frames, plus
@@ -6441,11 +6212,6 @@ def _rewrite_mad_window_inplace(tokens: List[Token]) -> List[Token]:
     when the statement-level gate allows it, every other frame the
     O(frame)-per-row fold (``_mad_window_template``). Pass-through
     (loud): EXCLUDE modes other than NO OTHERS."""
-    if not any(
-        t.kind == "word" and t.text.lower() in ("mad", "make_dt_interval")
-        for t in tokens
-    ):
-        return tokens
     shared_prefix = _shared_window_prefix(tokens)
 
     def lower(call: _CallSite, walk):
@@ -6493,8 +6259,6 @@ def _rewrite_ent_window_streaming(tokens: List[Token]) -> List[Token]:
     telescoped first). Non-streamable shapes (no static type, mixed
     prefixes, full partitions) pass through untouched for the
     telescoping/fold passes that follow."""
-    if not any(t.kind == "word" and t.text.lower() == "entropy" for t in tokens):
-        return tokens
     shared_prefix = _shared_window_prefix(tokens)
     if shared_prefix is None:
         return tokens
@@ -6547,11 +6311,6 @@ def _rewrite_agg_window_frames(tokens: List[Token]) -> List[Token]:
     DISTINCT arguments dedupe the materialized frame (array_distinct).
     Runs LAST so no later pass touches the emitted folds and every
     argument/spec is already translated."""
-    if not any(
-        t.kind == "word" and t.text.lower() in _AGGW_FOLD_FNS
-        for t in tokens
-    ):
-        return tokens
     if not any(t.kind == "word" and t.upper == "OVER" for t in tokens):
         return tokens
     shared_prefix = _shared_window_prefix(tokens)
@@ -7521,11 +7280,8 @@ def _rewrite_power_and_regex_ops(tokens: List[Token]) -> List[Token]:
     ``~`` ``!~`` ``~~`` ``!~~`` become RLIKE/LIKE forms. A PREFIX ``~``
     (bitwise NOT) is untouched. Runs before the division pass so the
     emitted power() calls participate in divisor capture."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
 
-    def _prev_is_operand() -> bool:
+    def prev_is_operand(out: List[Token]) -> bool:
         for t in reversed(out):
             if t.kind in ("ws", "comment"):
                 continue
@@ -7539,44 +7295,31 @@ def _rewrite_power_and_regex_ops(tokens: List[Token]) -> List[Token]:
             return t.kind == "op" and t.text in (")", "]")
         return False
 
-    while i < n:
+    def lower(tokens, i, out):
+        n = len(tokens)
         tok = tokens[i]
-        if tok.kind == "op" and tok.text in ("^", "**"):
+        if tok.text in ("^", "**"):
             left = _pop_operand(out)
             j = i + 1
             while j < n and tokens[j].kind in ("ws", "comment"):
                 j += 1
             end = _capture_operand(tokens, j)
-            right = _rewrite_power_and_regex_ops(tokens[j:end])
             out.extend(_toks(" power("))
             out.extend(left if left else [Token("number", "0")])
             out.append(Token("op", ","))
-            out.extend(right)
+            out.extend(_rewrite_power_and_regex_ops(tokens[j:end]))
             out.append(Token("op", ")"))
-            i = end
-            continue
-        if tok.kind == "op" and tok.text == "~" and _prev_is_operand():
-            j = i + 1
-            dbl = j < n and tokens[j].kind == "op" and tokens[j].text == "~"
-            out.extend(_toks(" LIKE " if dbl else " RLIKE "))
-            i = j + 1 if dbl else i + 1
-            continue
-        if (
-            tok.kind == "op"
-            and tok.text == "!"
-            and i + 1 < n
-            and tokens[i + 1].kind == "op"
-            and tokens[i + 1].text == "~"
-            and _prev_is_operand()
-        ):
-            j = i + 2
-            dbl = j < n and tokens[j].kind == "op" and tokens[j].text == "~"
-            out.extend(_toks(" NOT LIKE " if dbl else " NOT RLIKE "))
-            i = j + 1 if dbl else j
-            continue
-        out.append(tok)
-        i += 1
-    return out
+            return end
+        # ~ and ~~, or ! before them
+        j = i + (tok.text == "!")
+        if not (j < n and tokens[j].text == "~" and prev_is_operand(out)):
+            return None
+        dbl = j + 1 < n and tokens[j + 1].kind == "op" and tokens[j + 1].text == "~"
+        neg = " NOT" if tok.text == "!" else ""
+        out.extend(_toks(f"{neg} LIKE " if dbl else f"{neg} RLIKE "))
+        return j + 1 + dbl
+
+    return _lower_sites(tokens, {"^", "**", "~", "!"}, lower)
 
 
 # higher-order functions whose direct arguments may be lambdas — an
@@ -7625,47 +7368,36 @@ def _rewrite_escape_strings(tokens: List[Token]) -> List[Token]:
     backslash escapes and emit a plain literal (runs before the
     raw-string backslash doubling, which would otherwise preserve the
     backslashes verbatim)."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if (
-            tok.kind == "word"
-            and tok.text.lower() == "e"
-            and i + 1 < n
-            and tokens[i + 1].kind == "string"
-        ):
-            raw = tokens[i + 1].text[1:-1].replace("''", "'")
-            decoded: List[str] = []
-            k = 0
-            while k < len(raw):
-                c = raw[k]
-                if c == "\\" and k + 1 < len(raw):
-                    nxt = raw[k + 1]
-                    if nxt in _ESCAPE_MAP:
-                        decoded.append(_ESCAPE_MAP[nxt])
-                        k += 2
+
+    def lower(tokens, i, out):
+        if not (i + 1 < len(tokens) and tokens[i + 1].kind == "string"):
+            return None
+        raw = tokens[i + 1].text[1:-1].replace("''", "'")
+        decoded: List[str] = []
+        k = 0
+        while k < len(raw):
+            c = raw[k]
+            if c == "\\" and k + 1 < len(raw):
+                nxt = raw[k + 1]
+                if nxt in _ESCAPE_MAP:
+                    decoded.append(_ESCAPE_MAP[nxt])
+                    k += 2
+                    continue
+                if nxt in ("x", "u"):
+                    width = 2 if nxt == "x" else 4
+                    hexs = raw[k + 2 : k + 2 + width]
+                    if len(hexs) == width and all(
+                        h in "0123456789abcdefABCDEF" for h in hexs
+                    ):
+                        decoded.append(chr(int(hexs, 16)))
+                        k += 2 + width
                         continue
-                    if nxt in ("x", "u") :
-                        width = 2 if nxt == "x" else 4
-                        hexs = raw[k + 2 : k + 2 + width]
-                        if len(hexs) == width and all(
-                            h in "0123456789abcdefABCDEF" for h in hexs
-                        ):
-                            decoded.append(chr(int(hexs, 16)))
-                            k += 2 + width
-                            continue
-                decoded.append(c)
-                k += 1
-            out.append(
-                Token("string", "'" + "".join(decoded).replace("'", "''") + "'")
-            )
-            i += 2
-            continue
-        out.append(tok)
-        i += 1
-    return out
+            decoded.append(c)
+            k += 1
+        out.append(Token("string", "'" + "".join(decoded).replace("'", "''") + "'"))
+        return i + 2
+
+    return _lower_sites(tokens, {"e"}, lower)
 
 
 def _rewrite_series_table_fns(tokens: List[Token]) -> List[Token]:
@@ -7751,24 +7483,17 @@ def _glob_to_regex(pat: str) -> str:
 def _rewrite_glob(tokens: List[Token]) -> List[Token]:
     """DuckDB ``x GLOB 'pat'`` (and NOT GLOB) with a literal pattern ->
     anchored RLIKE. Dynamic patterns pass through and fail loudly."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.is_kw("GLOB"):
-            j = _next_code(tokens, i)
-            if j < n and tokens[j].kind == "string":
-                # a preceding NOT composes naturally (x NOT RLIKE p)
-                pat = _decode_spark_string(tokens[j])
-                regex = "^(?:" + _glob_to_regex(pat) + ")$"
-                out.extend(_toks(" RLIKE "))
-                out.append(_encode_spark_string(regex))
-                i = j + 1
-                continue
-        out.append(tok)
-        i += 1
-    return out
+
+    def lower(tokens, i, out):
+        j = _next_code(tokens, i)
+        if j < len(tokens) and tokens[j].kind == "string":
+            # a preceding NOT composes naturally (x NOT RLIKE p)
+            pat = _decode_spark_string(tokens[j])
+            out.extend(_toks(" RLIKE "))
+            out.append(_encode_spark_string("^(?:" + _glob_to_regex(pat) + ")$"))
+            return j + 1
+
+    return _lower_sites(tokens, {"glob"}, lower)
 
 
 # DuckDB collation names -> Spark 4 collation names
@@ -7780,30 +7505,17 @@ def _rewrite_collations(tokens: List[Token]) -> List[Token]:
     (case-insensitive compare and ordering, verified equivalent).
     Unmapped collations (NOACCENT and ICU locales need ICU tables) pass
     through and fail loudly at parse."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        out.append(tok)
-        if tok.is_kw("COLLATE"):
-            j = _next_code(tokens, i)
-            if (
-                j < n
-                and tokens[j].kind in ("word", "qident", "string")
-                and tokens[j].text.strip("\"'").lower() in _COLLATION_MAP
-            ):
-                out.extend(tokens[i + 1 : j])
-                out.append(
-                    Token(
-                        "word",
-                        _COLLATION_MAP[tokens[j].text.strip("\"'").lower()],
-                    )
-                )
-                i = j + 1
-                continue
-        i += 1
-    return out
+
+    def lower(tokens, i, out):
+        j = _next_code(tokens, i)
+        if j < len(tokens) and tokens[j].kind in ("word", "qident", "string"):
+            name = _COLLATION_MAP.get(tokens[j].text.strip("\"'").lower())
+            if name is not None:
+                out.extend(tokens[i:j])
+                out.append(Token("word", name))
+                return j + 1
+
+    return _lower_sites(tokens, {"collate"}, lower)
 
 
 _OPERATOR_FN_ALIASES = {"add": "+", "subtract": "-", "multiply": "*", "divide": "//"}
@@ -8102,33 +7814,27 @@ def _rewrite_division_double(tokens: List[Token]) -> List[Token]:
     divisor reproduces the NULL (type-preserving for ``%``/``//``).
     ``//`` becomes Spark's ``DIV`` here (superseding the plain swap in
     ``_rewrite_simple``) so its divisor gets the same guard."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
+
+    def lower(tokens, i, out):
         tok = tokens[i]
-        if tok.kind == "op" and tok.text in ("/", "%", "//"):
-            j = _next_code(tokens, i)
-            if j < n:
-                end = _capture_operand(tokens, j)
-                divisor = _rewrite_division_double(tokens[j:end])
-                if tok.text == "/":
-                    out.append(tok)
-                    out.extend(_toks(" nullif(CAST("))
-                    out.extend(divisor)
-                    out.extend(_toks(" AS DOUBLE), CAST(0 AS DOUBLE))"))
-                else:
-                    out.append(
-                        Token("word", " DIV ") if tok.text == "//" else tok
-                    )
-                    out.extend(_toks(" nullif("))
-                    out.extend(divisor)
-                    out.extend(_toks(", 0)"))
-                i = end
-                continue
-        out.append(tok)
-        i += 1
-    return out
+        j = _next_code(tokens, i)
+        if j >= len(tokens):
+            return None
+        end = _capture_operand(tokens, j)
+        divisor = _rewrite_division_double(tokens[j:end])
+        if tok.text == "/":
+            out.append(tok)
+            out.extend(_toks(" nullif(CAST("))
+            out.extend(divisor)
+            out.extend(_toks(" AS DOUBLE), CAST(0 AS DOUBLE))"))
+        else:
+            out.append(Token("word", " DIV ") if tok.text == "//" else tok)
+            out.extend(_toks(" nullif("))
+            out.extend(divisor)
+            out.extend(_toks(", 0)"))
+        return end
+
+    return _lower_sites(tokens, {"/", "%", "//"}, lower)
 
 
 def _round_double_sql(x: str, k: int) -> str:
@@ -10031,63 +9737,45 @@ def _rewrite_date_interval_add(tokens: List[Token]) -> List[Token]:
     stays an interval) and non-literal interval shapes are left
     untouched. Runs late so ``date_add(d, INTERVAL ...)`` (lowered by
     the call shims to ``d + INTERVAL ...``) is wrapped too."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
+
+    def lower(tokens, i, out):
         tok = tokens[i]
-        if tok.kind == "op" and tok.text in ("+", "-"):
-            j = _next_code(tokens, i)
-            if j < n and tokens[j].kind == "word" and tokens[j].upper == "INTERVAL":
-                end = _interval_literal_end(tokens, j)
-                if end is not None:
-                    operand = _pop_operand(out)
-                    # typed literals: _pop_operand stops at the string,
-                    # absorb a DATE/TIME/TIMESTAMP keyword prefix
-                    op_code = [
-                        t for t in operand
-                        if t.kind not in ("ws", "comment")
-                    ]
-                    if len(op_code) == 1 and op_code[0].kind == "string":
-                        k = len(out) - 1
-                        while k >= 0 and out[k].kind in ("ws", "comment"):
-                            k -= 1
-                        if k >= 0 and out[k].kind == "word" and out[k].upper in (
-                            "DATE", "TIME", "TIMESTAMP", "TIMESTAMPTZ",
-                        ):
-                            operand = [out[k], Token("ws", " ")] + operand
-                            del out[k:]
-                    # left side ends in INTERVAL <n> <unit>: the unit
-                    # word pops alone — look back for the INTERVAL
-                    # keyword within the literal's 3-token window
-                    left_tail_interval = False
-                    if operand:
-                        back = [
-                            t for t in out
-                            if t.kind not in ("ws", "comment")
-                        ][-2:]
-                        left_tail_interval = any(
-                            t.is_kw("INTERVAL") for t in back
-                        )
-                    if (
-                        operand
-                        and not left_tail_interval
-                        and not _interval_valued_operand(operand)
-                    ):
-                        x = "".join(t.text for t in operand).strip()
-                        ival = "".join(
-                            t.text for t in tokens[j:end]
-                        ).strip()
-                        out.extend(_toks(
-                            f"CAST(({x} {tok.text} {ival}) "
-                            f"AS TIMESTAMP)"
-                        ))
-                        i = end
-                        continue
-                    out.extend(operand)
+        j = _next_code(tokens, i)
+        if not (j < len(tokens) and tokens[j].is_kw("INTERVAL")):
+            return None
+        end = _interval_literal_end(tokens, j)
+        if end is None:
+            return None
+        operand = _pop_operand(out)
+        # typed literals: _pop_operand stops at the string, absorb a
+        # DATE/TIME/TIMESTAMP keyword prefix
+        op_code = [t for t in operand if t.kind not in ("ws", "comment")]
+        if len(op_code) == 1 and op_code[0].kind == "string":
+            k = len(out) - 1
+            while k >= 0 and out[k].kind in ("ws", "comment"):
+                k -= 1
+            if k >= 0 and out[k].is_kw("DATE", "TIME", "TIMESTAMP", "TIMESTAMPTZ"):
+                operand = [out[k], Token("ws", " ")] + operand
+                del out[k:]
+        # left side ends in INTERVAL <n> <unit>: the unit word pops
+        # alone — look back for the INTERVAL keyword within the
+        # literal's 3-token window
+        left_tail_interval = bool(operand) and any(
+            t.is_kw("INTERVAL")
+            for t in [t for t in out if t.kind not in ("ws", "comment")][-2:]
+        )
+        if operand and not left_tail_interval and not _interval_valued_operand(operand):
+            x = "".join(t.text for t in operand).strip()
+            ival = "".join(t.text for t in tokens[j:end]).strip()
+            out.extend(_toks(f"CAST(({x} {tok.text} {ival}) AS TIMESTAMP)"))
+            return end
+        # the popped operand goes back as is (a typed literal's gap
+        # normalised to one space)
+        out.extend(operand)
         out.append(tok)
-        i += 1
-    return out
+        return i + 1
+
+    return _lower_sites(tokens, {"+", "-"}, lower)
 
 
 _QUALIFY_TERMINATORS = {"ORDER", "LIMIT", "UNION", "EXCEPT", "INTERSECT", "OFFSET"}
@@ -13539,7 +13227,7 @@ def _rewrite_call_shims(tokens: List[Token]) -> List[Token]:
     them that returns SQL, after its arguments; other calls keep their
     name over their lowered arguments. To shim another DuckDB function,
     write its handler and add it to ``_SHIMS``."""
-    return _lower_calls(tokens, None, _lower_shim, _CALL_SHIM_WORDS)
+    return _lower_calls(tokens, None, _lower_shim)
 
 
 def _find_columns_call(item: List[Token]):
@@ -14129,106 +13817,93 @@ def _rewrite_using_sample(tokens: List[Token]) -> List[Token]:
     system / reservoir) are dropped: Spark has one sampler per unit.
     Sampling is inherently engine-specific — rewrites preserve the
     sample-size contract, not the row selection."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "word" and tok.upper == "USING":
-            j = _next_code(tokens, i)
-            if j < n and tokens[j].is_kw("SAMPLE"):
-                k = _next_code(tokens, j)
-                num = unit = None
-                end = k
-                if k < n and tokens[k].kind == "word":
-                    word = tokens[k].text
-                    if word.replace(".", "", 1).isdigit():
-                        num = word
-                        m = _next_code(tokens, k)
-                        if m < n and tokens[m].kind == "op" and tokens[m].text == "%":
-                            unit, end = "PERCENT", m
-                        elif m < n and tokens[m].is_kw("PERCENT"):
-                            unit, end = "PERCENT", m
-                        elif m < n and tokens[m].is_kw("ROWS"):
-                            unit, end = "ROWS", m
+
+    def lower(tokens, i, out):
+        n = len(tokens)
+        j = _next_code(tokens, i)
+        if not (j < n and tokens[j].is_kw("SAMPLE")):
+            return None
+        k = _next_code(tokens, j)
+        num = unit = None
+        end = k
+        if k < n and tokens[k].kind == "word":
+            word = tokens[k].text
+            if word.replace(".", "", 1).isdigit():
+                num = word
+                m = _next_code(tokens, k)
+                if m < n and tokens[m].kind == "op" and tokens[m].text == "%":
+                    unit, end = "PERCENT", m
+                elif m < n and tokens[m].is_kw("PERCENT"):
+                    unit, end = "PERCENT", m
+                elif m < n and tokens[m].is_kw("ROWS"):
+                    unit, end = "ROWS", m
+                else:
+                    unit, end = "ROWS", k
+                # drop a trailing (method) group
+                m2 = _next_code(tokens, end)
+                if m2 < n and tokens[m2].text == "(":
+                    inner = [
+                        t for t in tokens[m2 + 1 : _matching_paren(tokens, m2)]
+                        if t.kind == "word"
+                    ]
+                    if len(inner) == 1 and inner[0].text.lower() in (
+                        "bernoulli", "system", "reservoir"
+                    ):
+                        end = _matching_paren(tokens, m2)
+            elif word.lower() in ("bernoulli", "system", "reservoir"):
+                # method(n% | n ROWS) form
+                p = _next_code(tokens, k)
+                if p < n and tokens[p].text == "(":
+                    close = _matching_paren(tokens, p)
+                    inner = [
+                        t for t in tokens[p + 1 : close]
+                        if t.kind not in ("ws", "comment")
+                    ]
+                    if inner and inner[0].kind == "word" and inner[
+                        0
+                    ].text.replace(".", "", 1).isdigit():
+                        num = inner[0].text
+                        rest = inner[1:]
+                        if rest and (
+                            rest[0].text == "%" or rest[0].is_kw("PERCENT")
+                        ):
+                            unit = "PERCENT"
                         else:
-                            unit, end = "ROWS", k
-                        # drop a trailing (method) group
-                        m2 = _next_code(tokens, end)
-                        if m2 < n and tokens[m2].text == "(":
-                            inner = [
-                                t for t in tokens[m2 + 1 : _matching_paren(tokens, m2)]
-                                if t.kind == "word"
-                            ]
-                            if len(inner) == 1 and inner[0].text.lower() in (
-                                "bernoulli", "system", "reservoir"
-                            ):
-                                end = _matching_paren(tokens, m2)
-                    else:
-                        # method(n% | n ROWS) form
-                        if word.lower() in ("bernoulli", "system", "reservoir"):
-                            p = _next_code(tokens, k)
-                            if p < n and tokens[p].text == "(":
-                                close = _matching_paren(tokens, p)
-                                inner = [
-                                    t for t in tokens[p + 1 : close]
-                                    if t.kind not in ("ws", "comment")
-                                ]
-                                if inner and inner[0].kind == "word" and inner[
-                                    0
-                                ].text.replace(".", "", 1).isdigit():
-                                    num = inner[0].text
-                                    rest = inner[1:]
-                                    if rest and (
-                                        rest[0].text == "%" or rest[0].is_kw("PERCENT")
-                                    ):
-                                        unit = "PERCENT"
-                                    else:
-                                        unit = "ROWS"
-                                    end = close
-                if num is not None:
-                    frag = f"TABLESAMPLE ({num} {unit})"
-                    # keep REPEATABLE (seed)
-                    r = _next_code(tokens, end)
-                    if r < n and tokens[r].is_kw("REPEATABLE"):
-                        p = _next_code(tokens, r)
-                        if p < n and tokens[p].text == "(":
-                            close = _matching_paren(tokens, p)
-                            seed = "".join(
-                                t.text for t in tokens[p + 1 : close]
-                            ).strip()
-                            frag += f" REPEATABLE ({seed})"
-                            end = close
-                    out.extend(_toks(frag))
-                    i = end + 1
-                    continue
-        out.append(tok)
-        i += 1
-    return out
+                            unit = "ROWS"
+                        end = close
+        if num is None:
+            return None
+        frag = f"TABLESAMPLE ({num} {unit})"
+        # keep REPEATABLE (seed)
+        r = _next_code(tokens, end)
+        if r < n and tokens[r].is_kw("REPEATABLE"):
+            p = _next_code(tokens, r)
+            if p < n and tokens[p].text == "(":
+                close = _matching_paren(tokens, p)
+                seed = "".join(t.text for t in tokens[p + 1 : close]).strip()
+                frag += f" REPEATABLE ({seed})"
+                end = close
+        out.extend(_toks(frag))
+        return end + 1
+
+    return _lower_sites(tokens, {"using"}, lower)
 
 
 def _rewrite_similar_to(tokens: List[Token]) -> List[Token]:
     """``x [NOT] SIMILAR TO '<pat>'`` -> ``x [NOT] RLIKE '^(?:<pat>)$'``
     (full-match anchoring; literal patterns only)."""
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "word" and tok.upper == "SIMILAR":
-            j = _next_code(tokens, i)
-            if j < n and tokens[j].kind == "word" and tokens[j].upper == "TO":
-                k = _next_code(tokens, j)
-                if k < n and tokens[k].kind == "string":
-                    pat = tokens[k].text[1:-1]
-                    out.append(Token("word", "RLIKE"))
-                    out.append(Token("ws", " "))
-                    out.append(Token("string", f"'^(?:{pat})$'"))
-                    i = k + 1
-                    continue
-        out.append(tok)
-        i += 1
-    return out
+
+    def lower(tokens, i, out):
+        j = _next_code(tokens, i)
+        if j < len(tokens) and tokens[j].is_kw("TO"):
+            k = _next_code(tokens, j)
+            if k < len(tokens) and tokens[k].kind == "string":
+                out.append(Token("word", "RLIKE"))
+                out.append(Token("ws", " "))
+                out.append(Token("string", f"'^(?:{tokens[k].text[1:-1]})$'"))
+                return k + 1
+
+    return _lower_sites(tokens, {"similar"}, lower)
 
 
 def _rewrite_brace_literals(tokens: List[Token]) -> List[Token]:
@@ -14236,117 +13911,100 @@ def _rewrite_brace_literals(tokens: List[Token]) -> List[Token]:
     ``{'a': 1, 'b': x}``      -> ``named_struct('a', 1, 'b', x)``
     ``map {'k': v, ...}``     -> ``map('k', v, ...)``
     """
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.kind == "op" and tok.text == "{":
-            close = None
-            depth = 0
-            for j in range(i, n):
-                t = tokens[j]
-                if t.kind == "op" and t.text in ("{", "(", "["):
-                    depth += 1
-                elif t.kind == "op" and t.text in ("}", ")", "]"):
-                    depth -= 1
-                    if depth == 0:
-                        close = j
-                        break
-            if close is not None:
-                inner = _rewrite_brace_literals(tokens[i + 1 : close])
-                # was this preceded by the word `map`?
-                is_map = False
-                for k in range(len(out) - 1, -1, -1):
-                    if out[k].kind in ("ws", "comment"):
-                        continue
-                    is_map = out[k].kind == "word" and out[k].text.lower() == "map"
-                    if is_map:
-                        del out[k:]
+
+    def lower(tokens, i, out):
+        close = None
+        depth = 0
+        for j in range(i, len(tokens)):
+            t = tokens[j]
+            if t.kind == "op" and t.text in ("{", "(", "["):
+                depth += 1
+            elif t.kind == "op" and t.text in ("}", ")", "]"):
+                depth -= 1
+                if depth == 0:
+                    close = j
                     break
-                parts = []
-                for s, e in _split_top_commas(inner, 0, len(inner)):
-                    colons = _top_level_positions(
-                        inner, s, e, lambda t: t.kind == "op" and t.text == ":"
-                    )
-                    if not colons:
-                        parts = None
-                        break
-                    c = colons[0]
-                    parts.append(f"{_sql(inner, s, c)}, {_sql(inner, c + 1, e)}")
-                if parts is not None:
-                    # the map branch emits the SENTINEL name so the
-                    # 2-arg map() list-pair handler can't mistake a
-                    # single-entry brace literal (variadic key/value
-                    # pair) for DuckDB's map(keys_list, values_list);
-                    # translate() renames it back at the end
-                    fn = "__brace_map" if is_map else "named_struct"
-                    out.extend(_toks(f"{fn}({', '.join(parts)})"))
-                    i = close + 1
-                    continue
-                # not a literal we understand: fall through untouched
-                if is_map:
-                    out.append(Token("word", "map"))
-        out.append(tok)
-        i += 1
-    return out
+        if close is None:
+            return None
+        inner = _rewrite_brace_literals(tokens[i + 1 : close])
+        # was this preceded by the word `map`?
+        is_map = False
+        for k in range(len(out) - 1, -1, -1):
+            if out[k].kind in ("ws", "comment"):
+                continue
+            is_map = out[k].kind == "word" and out[k].text.lower() == "map"
+            if is_map:
+                del out[k:]
+            break
+        parts = []
+        for s, e in _split_top_commas(inner, 0, len(inner)):
+            colons = _top_level_positions(
+                inner, s, e, lambda t: t.kind == "op" and t.text == ":"
+            )
+            if not colons:
+                parts = None
+                break
+            c = colons[0]
+            parts.append(f"{_sql(inner, s, c)}, {_sql(inner, c + 1, e)}")
+        if parts is not None:
+            # the map branch emits the SENTINEL name so the 2-arg map()
+            # list-pair handler can't mistake a single-entry brace
+            # literal (variadic key/value pair) for DuckDB's
+            # map(keys_list, values_list); _restore_brace_map renames
+            # it back at the end
+            fn = "__brace_map" if is_map else "named_struct"
+            out.extend(_toks(f"{fn}({', '.join(parts)})"))
+            return close + 1
+        if not is_map:
+            return None
+        # not a literal we understand: `map` goes back (without the
+        # gap before the brace) and the brace stays
+        out.append(Token("word", "map"))
+        out.append(tokens[i])
+        return i + 1
+
+    return _lower_sites(tokens, {"{"}, lower)
+
+
+# the sites _rewrite_simple lowers
+_SIMPLE_SITES = frozenset({"//", "in", "@", "version", "exclude", *_FN_RENAMES})
 
 
 def _rewrite_simple(tokens: List[Token]) -> List[Token]:
-    out: List[Token] = []
-    i = 0
-    n = len(tokens)
-    while i < n:
-        tok = tokens[i]
-        # floor division
-        if tok.kind == "op" and tok.text == "//":
+    """Token-local spellings: ``//``, ``IN (VALUES ...)``, ``@(x)``,
+    ``version()``, ``exclude(`` and the ``_FN_RENAMES`` calls."""
+
+    def lower(tokens, i, out):
+        low = tokens[i].text.lower()
+        n = len(tokens)
+        nxt = _next_code(tokens, i)
+        if low == "//":  # floor division
             out.append(Token("word", " DIV "))
-            i += 1
-            continue
-        # IN (VALUES ...): DuckDB treats the VALUES list as a subquery;
-        # Spark needs an explicit SELECT wrapper
-        if tok.is_kw("IN"):
-            p = _next_code(tokens, i)
-            v = _next_code(tokens, p) if p < n else n
-            if (
-                p < n
-                and tokens[p].kind == "op"
-                and tokens[p].text == "("
-                and v < n
-                and tokens[v].is_kw("VALUES")
-            ):
-                out.append(tok)
-                out.append(Token("op", "("))
-                out.extend(_toks("SELECT * FROM "))
-                i = v
-                continue
-        # DuckDB's @ absolute-value operator, call form @(x)
-        if tok.kind == "op" and tok.text == "@":
-            nxt = _next_code(tokens, i)
-            if nxt < n and tokens[nxt].kind == "op" and tokens[nxt].text == "(":
-                out.append(Token("word", "abs"))
-                i += 1
-                continue
-        if tok.kind == "word":
-            low = tok.text.lower()
-            nxt = _next_code(tokens, i)
-            calls_fn = nxt < n and tokens[nxt].text == "("
-            if low == "version" and calls_fn:
-                close = _matching_paren(tokens, nxt)
-                out.append(Token("string", f"'{engine_version_string()}'"))
-                i = close + 1
-                continue
-            if low == "exclude" and calls_fn:
-                out.append(Token("word", "EXCEPT"))
-                i += 1
-                continue
-            if low in _FN_RENAMES and calls_fn:
-                out.append(Token("word", _FN_RENAMES[low]))
-                i += 1
-                continue
-        out.append(tok)
-        i += 1
-    return out
+            return i + 1
+        if not (nxt < n and tokens[nxt].kind == "op" and tokens[nxt].text == "("):
+            return None
+        if low == "in":
+            # IN (VALUES ...): DuckDB treats the VALUES list as a
+            # subquery; Spark needs an explicit SELECT wrapper
+            v = _next_code(tokens, nxt)
+            if not (v < n and tokens[v].is_kw("VALUES")):
+                return None
+            out.append(tokens[i])
+            out.append(Token("op", "("))
+            out.extend(_toks("SELECT * FROM "))
+            return v
+        if low == "version":
+            out.append(Token("string", f"'{engine_version_string()}'"))
+            return _matching_paren(tokens, nxt) + 1
+        if low == "@":  # DuckDB's absolute-value operator, call form @(x)
+            out.append(Token("word", "abs"))
+        elif low == "exclude":
+            out.append(Token("word", "EXCEPT"))
+        else:
+            out.append(Token("word", _FN_RENAMES[low]))
+        return i + 1
+
+    return _lower_sites(tokens, _SIMPLE_SITES, lower)
 
 
 # ---------------------------------------------------------------------------
@@ -14754,22 +14412,17 @@ def _rewrite_window_exclude(tokens: List[Token]) -> List[Token]:
     Scale note: each output row materializes its frame, so cost is
     O(frame size) per row — bounded frames are cheap; UNBOUNDED frames
     carry the whole partition per row and should stay small."""
-    out: List[Token] = []
-    i, n = 0, len(tokens)
-    while i < n:
-        t = tokens[i]
-        if t.is_kw("OVER"):
-            p = _next_code(tokens, i)
-            if p < n and tokens[p].kind == "op" and tokens[p].text == "(":
-                close = _matching_paren(tokens, p)
-                repl = _try_exclude_rewrite(out, tokens, p, close)
-                if repl is not None:
-                    out.extend(repl)
-                    i = close + 1
-                    continue
-        out.append(t)
-        i += 1
-    return out
+
+    def lower(tokens, i, out):
+        p = _next_code(tokens, i)
+        if p < len(tokens) and tokens[p].kind == "op" and tokens[p].text == "(":
+            close = _matching_paren(tokens, p)
+            repl = _try_exclude_rewrite(out, tokens, p, close)
+            if repl is not None:
+                out.extend(repl)
+                return close + 1
+
+    return _lower_sites(tokens, {"over"}, lower)
 
 
 def _rewrite_date_part_list(tokens: List[Token]) -> List[Token]:
@@ -14808,83 +14461,123 @@ def _rewrite_unordered_ranking(tokens: List[Token]) -> List[Token]:
     Spark rejects the unordered form, so the scan-order key
     (``SCAN_ORDER_KEY``) is injected as its ORDER BY — the same
     physical-order contract as POSITIONAL JOIN, COVERAGE.md."""
-    out: List[Token] = []
-    i, n = 0, len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.is_kw("OVER"):
-            p = _next_code(tokens, i)
-            if p < n and tokens[p].kind == "op" and tokens[p].text == "(":
-                k = len(out) - 1
-                while k >= 0 and out[k].kind in ("ws", "comment"):
-                    k -= 1
-                # preceding call: ) of fn(...) — find its name
-                fn = None
-                if k >= 0 and out[k].kind == "op" and out[k].text == ")":
-                    depth = 0
-                    m = k
-                    while m >= 0:
-                        t = out[m]
-                        if t.kind == "op" and t.text == ")":
-                            depth += 1
-                        elif t.kind == "op" and t.text == "(":
-                            depth -= 1
-                            if depth == 0:
-                                break
-                        m -= 1
-                    m -= 1
-                    while m >= 0 and out[m].kind in ("ws", "comment"):
-                        m -= 1
-                    if m >= 0 and out[m].kind == "word":
-                        fn = out[m].text.lower()
-                if fn in _ORDER_REQUIRED_WINDOW_FNS:
-                    close = _matching_paren(tokens, p)
-                    body = tokens[p + 1: close]
-                    depth = 0
-                    has_order = False
-                    for t in body:
-                        if t.kind == "op" and t.text == "(":
-                            depth += 1
-                        elif t.kind == "op" and t.text == ")":
-                            depth -= 1
-                        elif depth == 0 and t.is_kw("ORDER"):
-                            has_order = True
-                            break
-                    if not has_order:
-                        out.append(tokens[i])  # OVER
-                        out.extend(tokens[i + 1: p + 1])  # ws + (
-                        out.extend(body)
-                        sep = " " if body and body[-1].kind != "ws" else ""
-                        out.extend(_toks(
-                            f"{sep}ORDER BY {SCAN_ORDER_KEY}"
-                        ))
-                        out.append(tokens[close])
-                        i = close + 1
-                        continue
-        out.append(tok)
-        i += 1
-    return out
+
+    def lower(tokens, i, out):
+        p = _next_code(tokens, i)
+        if not (p < len(tokens) and tokens[p].kind == "op" and tokens[p].text == "("):
+            return None
+        # the preceding call's name
+        call = _trailing_call(out)
+        if call is None or out[call[0]].text.lower() not in _ORDER_REQUIRED_WINDOW_FNS:
+            return None
+        close = _matching_paren(tokens, p)
+        body = tokens[p + 1: close]
+        depth = 0
+        for t in body:
+            if t.kind == "op" and t.text == "(":
+                depth += 1
+            elif t.kind == "op" and t.text == ")":
+                depth -= 1
+            elif depth == 0 and t.is_kw("ORDER"):
+                return None
+        out.extend(tokens[i: p + 1])  # OVER, ws, (
+        out.extend(body)
+        sep = " " if body and body[-1].kind != "ws" else ""
+        out.extend(_toks(f"{sep}ORDER BY {SCAN_ORDER_KEY}"))
+        out.append(tokens[close])
+        return close + 1
+
+    return _lower_sites(tokens, {"over"}, lower)
 
 
 def _rewrite_cte_materialized(tokens: List[Token]) -> List[Token]:
     """Strip DuckDB's ``AS [NOT] MATERIALIZED (`` CTE modifier — a
     planner hint with no Spark equivalent (Catalyst decides reuse)."""
-    out: List[Token] = []
-    i, n = 0, len(tokens)
-    while i < n:
-        tok = tokens[i]
-        if tok.is_kw("AS"):
-            j = _next_code(tokens, i)
-            neg = j < n and tokens[j].is_kw("NOT")
-            k = _next_code(tokens, j) if neg else j
-            if k < n and tokens[k].is_kw("MATERIALIZED"):
-                after = _next_code(tokens, k)
-                if after < n and tokens[after].kind == "op" \
-                        and tokens[after].text == "(":
-                    out.append(tok)
-                    out.append(Token("ws", " "))
-                    i = after
-                    continue
-        out.append(tok)
-        i += 1
-    return out
+
+    def lower(tokens, i, out):
+        n = len(tokens)
+        j = _next_code(tokens, i)
+        k = _next_code(tokens, j) if j < n and tokens[j].is_kw("NOT") else j
+        if k < n and tokens[k].is_kw("MATERIALIZED"):
+            after = _next_code(tokens, k)
+            if after < n and tokens[after].kind == "op" and tokens[after].text == "(":
+                out.append(tokens[i])
+                out.append(Token("ws", " "))
+                return after
+
+    return _lower_sites(tokens, {"as"}, lower)
+
+
+# The translation pipeline, in order: ``(pass, trigger)``. A trigger is
+# the lowercase words and operators of which a statement must hold one
+# for the pass to change it; None runs the pass on every statement
+# (token-kind maps and hint-driven passes).
+_PASSES = (
+    (_rewrite_from_first, None),
+    (_from_first_scope, {"from"}),
+    (_rewrite_table_name_literals, {w.lower() for w in _TABLE_NAME_CONTEXT}),
+    (_rewrite_numeric_underscores, None),
+    # e'...' decoding must precede the raw-string backslash doubling
+    (_rewrite_escape_strings, {"e"}),
+    (_rewrite_string_escapes, None),
+    (_rewrite_quoted_identifiers, None),
+    (_rewrite_trailing_commas, {","}),
+    (_rewrite_at_time_zone, {"zone"}),
+    (_rewrite_time_wrap, None),
+    (_rewrite_time_casts, {"time"}),
+    (_rewrite_time_literals, {"time"}),
+    (_rewrite_brace_literals, {"{"}),
+    (_rewrite_concat_null_skipping, {"concat"}),
+    (_rewrite_substr_window, {"substr", "substring"}),
+    (_rewrite_array_type_suffix, {"["}),
+    (_rewrite_brackets, {"["}),
+    (_rewrite_date_part_list, {"date_part", "datepart"}),
+    (_rewrite_cte_materialized, {"materialized"}),
+    (_rewrite_series_table_fns, {"generate_series", "range"}),
+    (_rewrite_operator_fn_aliases, _OPERATOR_FN_ALIASES),
+    (_rewrite_polymorphic_len, {"len", "length"}),
+    (_rewrite_collations, {"collate"}),
+    (_rewrite_similar_to, {"similar"}),
+    (_rewrite_glob, {"glob"}),
+    (_rewrite_asof_join, {"asof"}),
+    (_rewrite_positional_join, {"positional"}),
+    (_rewrite_using_sample, {"sample"}),
+    (_rewrite_statement_unpivot, {"unpivot"}),
+    (_rewrite_extract_dow, {"extract"}),
+    (_rewrite_date_trunc, {"date_trunc"}),
+    (_rewrite_date_diff, {"date_diff", "datediff", "date_sub"}),
+    (_rewrite_regexp_replace_flags, {"regexp_replace"}),
+    (_rewrite_strftime, {"strftime", "strptime", "try_strptime"}),
+    (_rewrite_epoch, _EPOCH_FNS),
+    (_rewrite_bare_types, {"varchar", "text", "json"}),
+    (_rewrite_bit_count_width, {"bit_count"}),
+    (_rewrite_integral_casts, _INTEGRAL_TYPES),
+    (_rewrite_power_and_regex_ops, {"^", "**", "~"}),
+    (_rewrite_any_all, {"any", "all"}),
+    (_rewrite_filter_to_case, _FILTER_TO_CASE_FNS),
+    (_rewrite_json_arrows, {"->", "->>"}),
+    (_rewrite_division_double, {"/", "%", "//"}),
+    (_rewrite_round_double, {"round"}),
+    (_rewrite_window_exclude, {"exclude"}),
+    (_rewrite_unordered_ranking, _ORDER_REQUIRED_WINDOW_FNS),
+    (_rewrite_call_shims, _CALL_SHIM_WORDS),
+    (_rewrite_varchar_casts, {"__duckvarchar"}),
+    (_rewrite_pipe_concat_casts, {"||"}),
+    (_rewrite_date_interval_add, {"interval"}),
+    (_rewrite_filter_shorthand, {"filter"}),
+    (_rewrite_simple, _SIMPLE_SITES),
+    (_innermost_first(_rewrite_distinct_on), {"distinct"}),
+    (_innermost_first(_rewrite_qualify), {"qualify"}),
+    (_rewrite_order_null_ordering, {"order"}),
+    (_innermost_first(_rewrite_aggfn_groupby, spec=_MAD_SPEC), {"mad"}),
+    (_innermost_first(_rewrite_aggfn_groupby, spec=_ENTROPY_SPEC), {"entropy"}),
+    (_innermost_first(_rewrite_mad_window), {"mad"}),
+    (_rewrite_mad_window_inplace, {"mad", "make_dt_interval"}),
+    (_rewrite_mad_fallback_template, {"mad"}),
+    (_rewrite_product_entropy, {"product", "entropy", "histogram"}),
+    (_rewrite_ent_window_streaming, {"entropy"}),
+    (_innermost_first(_rewrite_entropy_window_running), {"entropy"}),
+    (_rewrite_agg_window_frames, _AGGW_FOLD_FNS),
+    (_rewrite_fuse_percentile_cont, {"percentile_cont", "percentile_disc"}),
+    (_restore_brace_map, {"__brace_map"}),
+)

@@ -16,7 +16,6 @@ one join key is pathologically hot.
 
 from __future__ import annotations
 
-import os
 import re
 from typing import Sequence
 
@@ -40,19 +39,9 @@ def fan_target(sc, parts: int | None = None) -> int:
     fan to the full core count multiplies peak demand by the pool
     width and oversubscribes CPU and Python workers (each fanned task
     pins one). Derive the target from FREE capacity instead — the
-    core count divided by the jobs already running — and let
-    ``SPARK_GRAFT_FAN_MAX`` pin a hard ceiling when the operator mix
-    is known (set it to the measured knee; 0/unset = adaptive)."""
+    core count divided by the jobs already running."""
     dp = sc.defaultParallelism
     requested = parts or dp
-    env = os.environ.get("SPARK_GRAFT_FAN_MAX")
-    if env:
-        try:
-            cap = int(env)
-        except ValueError:
-            cap = 0
-        if cap > 0:
-            return max(2, min(requested, cap))
     try:
         active = len(sc.statusTracker().getActiveJobsIds())
     except Exception:  # noqa: BLE001 — sizing heuristic only

@@ -213,11 +213,11 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     assert any(os.scandir(str(tmp_path / "ckpt")))
 
 
-def test_fan_out_narrow_gates_and_caps(spark, tmp_path, monkeypatch):
+def test_fan_out_narrow_gates_and_caps(spark, tmp_path):
     """r14: fan_out_narrow only fans narrow-over-scan plans (probing a
     shuffled input's RDD can force AQE stage re-execution — r13
-    ADVICE), and its target honors the SPARK_GRAFT_FAN_MAX ceiling /
-    the free-capacity division (r13 VERDICT #1)."""
+    ADVICE), and its target honors the free-capacity division (r13
+    VERDICT #1)."""
     from pyspark.sql import functions as F
 
     from component_duckdb_transformation_spark.operators.skew import (
@@ -248,12 +248,6 @@ def test_fan_out_narrow_gates_and_caps(spark, tmp_path, monkeypatch):
         scan.select(F.col("id").alias("id2")), F.col("id") == F.col("id2")
     )
     assert fan_out_narrow(join, 4) is join
-    # the env ceiling pins the target; the floor stays at 2
-    monkeypatch.setenv("SPARK_GRAFT_FAN_MAX", "3")
-    assert fan_target(spark.sparkContext, 64) == 3
-    monkeypatch.setenv("SPARK_GRAFT_FAN_MAX", "1")
-    assert fan_target(spark.sparkContext, 64) == 2
-    monkeypatch.delenv("SPARK_GRAFT_FAN_MAX")
     # adaptive: never above the requested parts or defaultParallelism
     assert fan_target(spark.sparkContext, 4) <= 4
     assert (

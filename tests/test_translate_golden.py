@@ -1,7 +1,7 @@
 """Translation golden: every workload, q_surface and battery statement
 translates to the text whose hash is committed in
-``tools/translate_golden.json`` (window ids normalised), and every call
-shim fires on some of them."""
+``tools/translate_golden.json`` (window ids normalised), and every
+translation pass and call shim fires on some of them."""
 
 from __future__ import annotations
 
@@ -56,3 +56,40 @@ def test_every_call_shim_fires(monkeypatch):
         golden._translate(sql, hints)
     dead = [shim.__name__ for _, shim in dialect._SHIMS if not hits[shim]]
     assert not dead, f"call shims that never fire: {', '.join(dead)}"
+
+
+def test_every_pass_fires(monkeypatch):
+    """Every ``_PASSES`` entry changes some corpus or battery text (a
+    pass nothing reaches is deleted, not kept), and running every pass
+    on every text, triggers ignored, moves no hash: a trigger never
+    skips a pass that would have changed the statement."""
+    from component_duckdb_transformation_spark.functions import dialect
+
+    passes = dialect._PASSES
+    hits: collections.Counter = collections.Counter()
+
+    def counted(k, rewrite):
+        def run(tokens):
+            out = rewrite(tokens)
+            if out is not tokens and out != tokens:
+                hits[k] += 1
+            return out
+
+        return run
+
+    monkeypatch.setattr(dialect, "_PASSES", tuple(
+        (counted(k, rewrite), trigger) for k, (rewrite, trigger) in enumerate(passes)
+    ))
+    golden = _golden()
+    for sql, hints in golden.corpus().values():
+        golden._translate(sql, hints)
+    dead = [
+        f"{k}:{rewrite.__name__}"
+        for k, (rewrite, _) in enumerate(passes)
+        if not hits[k]
+    ]
+    assert not dead, f"passes that never fire: {', '.join(dead)}"
+
+    monkeypatch.setattr(dialect, "_PASSES", tuple((p, None) for p, _ in passes))
+    moved = golden.moved()
+    assert not moved, f"moved with every pass run: {', '.join(moved)}"

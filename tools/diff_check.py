@@ -2,7 +2,10 @@
 Spark AND its DuckDB oracle over the same parquet dir; compare row count,
 column names/dtypes, and order-insensitive values.
 
-Usage: python tools/diff_check.py [sf_dir | --sf 0.01] [query ...]
+Usage: python tools/diff_check.py [sf_dir | --sf 0.01] [workload ...]
+
+Every other argument must name a workload in ``workloads.WORKLOADS``
+(none: all of them); anything else exits 2 with the valid names.
 
 Run at --sf 0.1 periodically: partial-aggregation numeric drift (e.g.
 sample-moment corrections) only shows up with more rows per group than
@@ -69,20 +72,35 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
     return issues
 
 
-def main() -> int:
-    args = list(sys.argv[1:])
+USAGE = "usage: python tools/diff_check.py [sf_dir | --sf 0.01] [workload ...]"
+
+
+def main(argv=None) -> int:
+    args = list(sys.argv[1:] if argv is None else argv)
     sf_dir = "/root/testdata/sf0.001"
     # --sf 0.1 selects /root/testdata/sf<val>; a positional dir still works
     if "--sf" in args:
         k = args.index("--sf")
+        if k + 1 >= len(args) or args[k + 1].startswith("-"):
+            print(f"--sf needs a scale factor\n{USAGE}", file=sys.stderr)
+            return 2
         sf_dir = f"/root/testdata/sf{args[k + 1]}"
         del args[k : k + 2]
     elif args and "/" in args[0]:
         sf_dir = args.pop(0)
-    only = set(args)
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from component_duckdb_transformation_spark.session import build_spark_session
     from component_duckdb_transformation_spark.workloads import TABLES, WORKLOADS
+
+    only = set(args)
+    unknown = sorted(only - set(WORKLOADS))
+    if unknown:
+        print(
+            f"unknown workload: {' '.join(unknown)}\n{USAGE}\n"
+            f"workloads: {' '.join(WORKLOADS)}",
+            file=sys.stderr,
+        )
+        return 2
+    from component_duckdb_transformation_spark.session import build_spark_session
 
     spark = build_spark_session(app_name="diff-check", threads=8, shuffle_partitions=8)
     con = duckdb.connect()

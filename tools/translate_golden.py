@@ -10,9 +10,14 @@ overload built with ``tools/fn_parity_sweep.py``'s ``canned_call``,
 ``EXCLUDE`` and ``ARG_OVERRIDES`` rules (scalars as ``SELECT <call> AS
 v``, aggregates over a two-row VALUES list); every literal passed to
 ``translate(`` in ``tests/test_dialect*.py`` and
-``tests/test_fn_parity.py``; and hand-written call shapes (dotted
+``tests/test_fn_parity.py``; hand-written call shapes (dotted
 names, comments before ``(``, calls nested in Python-UDF arguments,
-``IGNORE NULLS`` inside the parentheses, ``FROM range(..)``).
+``IGNORE NULLS`` inside the parentheses, ``FROM range(..)``); the SQL
+the dialect tests send through their ``assert_matches_duckdb`` and
+``_both`` helpers; and hand-written texts that make every
+``dialect._PASSES`` entry fire, with the trigger edge cases (a trigger
+word inside a string or comment, a word only an earlier pass emits,
+``GROUP BY ALL``/``UNION ALL`` beside ``= ALL(...)``).
 Workload and q_surface texts translate with no type hints; each battery text carries the name of the hint set it is
 translated under (published through ``dialect.column_type_hints``).
 The per-call window ids (``#w<n>``, ``#g<n>``) are normalised and the

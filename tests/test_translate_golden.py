@@ -1,6 +1,8 @@
 """Translation golden: every workload, q_surface and battery statement
 translates to the text whose hash is committed in
-``tools/translate_golden.json`` (window ids normalised), and every
+``tools/translate_golden.json`` (window ids normalised), every
+DML/DDL statement there and in the executor tests parses to the
+committed outcome of the executor's statement parsers, and every
 translation pass and call shim fires on some of them."""
 
 from __future__ import annotations

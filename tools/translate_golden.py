@@ -24,6 +24,17 @@ The per-call window ids (``#w<n>``, ``#g<n>``) are normalised and the
 text is hashed. A change to the dialect layer that is meant to keep
 translation byte-stable must leave every hash unchanged.
 
+The executor's statement parsers are frozen the same way (``parse:``
+keys): every DML/DDL statement of the corpus, of the executor-path
+workload scripts in ``workloads.py``, of the ``perfbench/gen.py`` DML
+chains, and every literal the executor tests pass to ``_run(``
+(``tests/test_executor.py``) and ``_both(``/``_ok(``/``_rows(``
+(``tests/test_catalog_records.py``) is run through the parser the
+executor uses for its verb (``_parse_update``, ``_insert_clauses``,
+``_parse_merge``, ``_parse_alter``, the ``_ddl_*`` column-list
+parsers) and ``spark_query_text``; the ``repr`` of the outcomes is
+hashed.
+
 Usage:
     python tools/translate_golden.py           # check; names moved hashes
     python tools/translate_golden.py --write   # regenerate the hash file
@@ -32,8 +43,10 @@ Usage:
 
 from __future__ import annotations
 
+import ast
 import contextlib
 import hashlib
+import importlib.util
 import json
 import os
 import re
@@ -291,6 +304,107 @@ def corpus() -> dict:
     return out
 
 
+# (file, helper names) whose string-literal arguments are executor SQL
+_PARSE_CALLS = (
+    ("tests/test_executor.py", ("_run",)),
+    ("tests/test_catalog_records.py", ("_both", "_ok", "_rows")),
+)
+
+
+_DML_DDL_VERBS = ("CREATE", "DROP", "ALTER", "INSERT", "UPDATE", "DELETE", "MERGE", "TRUNCATE")
+
+
+def _literals(path: str, calls=None) -> list:
+    """String constants of a Python file, in source order: every one, or
+    only the arguments of calls to the helpers named in ``calls``."""
+    with open(os.path.join(ROOT, path), encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    if calls is None:
+        nodes = list(ast.walk(tree))
+    else:
+        nodes = [
+            arg
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id in calls
+            for arg in node.args
+        ]
+    return [
+        n.value for n in nodes
+        if isinstance(n, ast.Constant) and isinstance(n.value, str)
+    ]
+
+
+def _dml_chain_scripts() -> list:
+    """The statements of ``perfbench/gen.py``'s DML chains at fixed key
+    boundaries."""
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_gen", os.path.join(ROOT, "perfbench", "gen.py")
+    )
+    gen = importlib.util.module_from_spec(spec)
+    sys.modules[spec.name] = gen  # dataclasses look their module up
+    spec.loader.exec_module(gen)
+    out = []
+    for k, chain in enumerate(gen._CHAINS):
+        out += chain(f"c{k}", [200, 400, 600, 800, 1000])[0]
+    return out
+
+
+def parse_corpus() -> dict:
+    """``parse:<sha256 of the statement, 12 hex>`` -> DML/DDL statement
+    text (see the module docstring for the sources)."""
+    from component_duckdb_transformation_spark.plans.sql_parser import parse_script
+
+    scripts = [sql for sql, _ in corpus().values()]
+    scripts += _literals("component_duckdb_transformation_spark/workloads.py")
+    scripts += _dml_chain_scripts()
+    for path, calls in _PARSE_CALLS:
+        scripts += _literals(path, calls)
+    out = {}
+    for script in scripts:
+        for st in parse_script(script):
+            if st.head.verb in _DML_DDL_VERBS:
+                key = hashlib.sha256(st.sql.encode("utf-8")).hexdigest()[:12]
+                out[f"parse:{key}"] = st.sql
+    return out
+
+
+def _outcome(fn, *args) -> str:
+    try:
+        return repr(fn(*args))
+    except Exception as exc:  # an error is a parse outcome too
+        return f"<error {type(exc).__name__}: {exc}>"
+
+
+def parse_digest(sql: str) -> str:
+    """sha256 of the executor parsers' outcomes on one statement."""
+    from component_duckdb_transformation_spark.plans import executor as ex
+    from component_duckdb_transformation_spark.plans.sql_parser import parse_statement
+
+    st = parse_statement(sql)
+    head = st.head
+    got = [_outcome(ex.spark_query_text, st)]
+    if head.verb == "UPDATE":
+        got.append(_outcome(lambda s: ex._parse_update(ex._split_returning(s)[0]), sql))
+    elif head.verb == "INSERT":
+        got.append(_outcome(ex._insert_clauses, sql))
+    elif head.verb == "MERGE":
+        got.append(_outcome(ex._parse_merge, sql))
+    elif head.verb == "ALTER":
+        got.append(_outcome(ex._parse_alter, st.tail))
+    elif head.verb == "CREATE" and head.kind == "table":
+        for fn in (ex._ddl_column_schema, ex._ddl_primary_key, ex._ddl_not_null, ex._ddl_checks):
+            got.append(_outcome(fn, sql))
+    return hashlib.sha256(repr(got).encode("utf-8")).hexdigest()
+
+
+def _all_digests() -> dict:
+    got = {key: digest(*entry) for key, entry in corpus().items()}
+    got.update({key: parse_digest(sql) for key, sql in parse_corpus().items()})
+    return got
+
+
 def _translate(sql: str, hints: str) -> str:
     from component_duckdb_transformation_spark.functions.dialect import (
         column_type_hints,
@@ -316,7 +430,7 @@ def moved() -> list:
     from either side)."""
     with open(GOLDEN, encoding="utf-8") as fh:
         want = json.load(fh)
-    got = {key: digest(*entry) for key, entry in corpus().items()}
+    got = _all_digests()
     return sorted(k for k in set(want) | set(got) if want.get(k) != got.get(k))
 
 
@@ -337,7 +451,7 @@ def time_corpus(repeats: int = 5) -> float:
 def main() -> int:
     args = sys.argv[1:]
     if "--write" in args:
-        got = {key: digest(*entry) for key, entry in corpus().items()}
+        got = _all_digests()
         with open(GOLDEN, "w", encoding="utf-8") as fh:
             json.dump(got, fh, indent=1, sort_keys=True)
             fh.write("\n")
@@ -347,11 +461,12 @@ def main() -> int:
         n = len(corpus())
         print(f"translated {n} texts: min-of-5 wall {time_corpus():.3f} s")
         return 0
-    texts = corpus()
+    texts = {key: sql for key, (sql, _) in corpus().items()}
+    texts.update(parse_corpus())
     bad = moved()
     for key in bad:
-        sql = texts.get(key, ("",))[0]
-        print(f"MOVED {key}" + (f"  {sql}" if key.startswith("battery:") else ""))
+        sql = texts.get(key, "")
+        print(f"MOVED {key}" + (f"  {sql}" if key.startswith(("battery:", "parse:")) else ""))
     print(f"{len(bad)} moved of {len(texts)}")
     return 1 if bad else 0
 

@@ -41,17 +41,25 @@ from ..exceptions import UserException
 from ..functions.dialect import (
     SCAN_ROW_NUMBER,
     _alias_expr_hint,
-    _call_args,
-    _matching_paren,
     _pop_operand,
-    _split_top_commas,
+    _rewrite_array_type_suffix,
     column_type_hints,
     expand_scopes,
     translate,
 )
 from .orchestrator import Query
 from .sql_parser import ParsedStatement, StatementType, parse_statement
-from .sql_tokens import Token, _bt, code_tokens, tokenize, unquote_name
+from .sql_tokens import (
+    Token,
+    _bt,
+    closing,
+    code_tokens,
+    next_code,
+    split_top_commas,
+    tokenize,
+    top_level,
+    unquote_name,
+)
 
 LOG = logging.getLogger(__name__)
 
@@ -555,37 +563,23 @@ class SparkStatementExecutor:
         beyond that a pivot is almost certainly a mistake."""
         tokens = tokenize(sql)
         code = list(code_tokens(tokens))
+        ctoks = [t for _, t in code]
         n = len(code)
-        p_ci = None
-        depth = 0
-        for ci, (_, tok) in enumerate(code):
-            if tok.kind == "op" and tok.text == "(":
-                depth += 1
-            elif tok.kind == "op" and tok.text == ")":
-                depth -= 1
-            elif (
-                depth == 0
-                and tok.is_kw("PIVOT")
+        p_ci = next(
+            (
+                ci for ci, tok in top_level(ctoks)
+                if tok.is_kw("PIVOT")
                 and ci + 1 < n
-                and code[ci + 1][1].kind in ("word", "bident", "qident")
-            ):
-                p_ci = ci
-                break
+                and ctoks[ci + 1].kind in ("word", "bident", "qident")
+            ),
+            None,
+        )
         if p_ci is None:
             return sql
         name = unquote_name(code[p_ci + 1][1])
 
         def _find(kw: str, from_ci: int) -> Optional[int]:
-            d = 0
-            for j in range(from_ci, n):
-                t = code[j][1]
-                if t.kind == "op" and t.text == "(":
-                    d += 1
-                elif t.kind == "op" and t.text == ")":
-                    d -= 1
-                elif d == 0 and t.is_kw(kw):
-                    return j
-            return None
+            return next((j for j, t in top_level(ctoks, from_ci) if t.is_kw(kw)), None)
 
         on_ci = _find("ON", p_ci + 2)
         using_ci = _find("USING", p_ci + 2)
@@ -775,9 +769,11 @@ class SparkStatementExecutor:
                 f"Only CREATE TYPE ... AS ENUM is supported: {st.sql[:80]}"
             )
         vals: List[str] = []
-        close = _matching_paren(tokens, code[2])
-        for arg in _call_args(tokens, code[2], close):
-            arg = [t for t in arg if t.kind not in ("ws", "comment")]
+        close = closing(tokens, code[2])
+        for a, b in split_top_commas(tokens, code[2] + 1, close):
+            if a == b == close:
+                continue  # ENUM () or a trailing comma
+            arg = [t for t in tokens[a:b] if t.kind not in ("ws", "comment")]
             if len(arg) != 1 or arg[0].kind != "string":
                 raise UserException(
                     "CREATE TYPE AS ENUM: values must be string "
@@ -821,7 +817,7 @@ class SparkStatementExecutor:
         changed = False
         while i < n:
             tok = tokens[i]
-            nxt = _next_code_idx(tokens, i)
+            nxt = next_code(tokens, i)
             # enum_range(NULL::name) — before the :: pass eats the name
             if (
                 tok.kind == "word"
@@ -829,7 +825,7 @@ class SparkStatementExecutor:
                 and nxt < n
                 and tokens[nxt].kind == "op" and tokens[nxt].text == "("
             ):
-                close = _matching_paren(tokens, nxt)
+                close = closing(tokens, nxt)
                 inner = [
                     t for t in tokens[nxt + 1: close]
                     if t.kind not in ("ws", "comment")
@@ -865,7 +861,7 @@ class SparkStatementExecutor:
                 and nxt < n and tokens[nxt].kind == "op"
                 and tokens[nxt].text == "("
             ):
-                close = _matching_paren(tokens, nxt)
+                close = closing(tokens, nxt)
                 body = tokens[nxt + 1: close]
                 code = [
                     (k, t) for k, t in enumerate(body)
@@ -968,14 +964,14 @@ class SparkStatementExecutor:
             an enum column; else None."""
             if i >= n or tokens[i].kind not in ("word", "bident", "qident"):
                 return None
-            j = _next_code_idx(tokens, i)
+            j = next_code(tokens, i)
             if j < n and tokens[j].kind == "op" and tokens[j].text == ".":
-                k = _next_code_idx(tokens, j)
+                k = next_code(tokens, j)
                 if k < n and tokens[k].kind in ("word", "bident", "qident"):
                     col = unquote_name(tokens[k]).lower()
                     if col in colmap:
                         # not a deeper dotted path
-                        m = _next_code_idx(tokens, k)
+                        m = next_code(tokens, k)
                         if m < n and tokens[m].kind == "op" and tokens[
                             m
                         ].text in (".", "("):
@@ -985,7 +981,7 @@ class SparkStatementExecutor:
                 return None
             col = unquote_name(tokens[i]).lower()
             if col in colmap:
-                m = _next_code_idx(tokens, i)
+                m = next_code(tokens, i)
                 if m < n and tokens[m].kind == "op" and tokens[m].text in (
                     ".",
                     "(",
@@ -1005,14 +1001,14 @@ class SparkStatementExecutor:
             tok = tokens[i]
             # min(col) / max(col)
             if tok.kind == "word" and tok.text.lower() in ("min", "max"):
-                p = _next_code_idx(tokens, i)
+                p = next_code(tokens, i)
                 if p < n and tokens[p].kind == "op" and tokens[p].text == "(":
-                    close = _matching_paren(tokens, p)
-                    inner_lo = _next_code_idx(tokens, p)
+                    close = closing(tokens, p)
+                    inner_lo = next_code(tokens, p)
                     r = ref_at(inner_lo)
                     if (
                         r is not None
-                        and _next_code_idx(tokens, r[1] - 1) == close
+                        and next_code(tokens, r[1] - 1) == close
                     ):
                         _, _, col, txt = r
                         fn = tok.text.lower()
@@ -1024,69 +1020,53 @@ class SparkStatementExecutor:
                         continue
             # ORDER BY items
             if tok.is_kw("ORDER"):
-                p = _next_code_idx(tokens, i)
+                p = next_code(tokens, i)
                 if p < n and tokens[p].is_kw("BY"):
                     out.extend(tokens[i:p + 1])
-                    j = p + 1
-                    depth = 0
-                    item_lo = j
-                    while j <= n:
-                        t = tokens[j] if j < n else None
-                        ends = t is None or (
-                            depth == 0
-                            and (
-                                (t.kind == "op" and t.text in (")", ","))
-                                or t.is_kw(
-                                    "LIMIT", "OFFSET", "FETCH", "ROWS",
-                                    "RANGE", "GROUPS", "UNION", "EXCEPT",
-                                    "INTERSECT", "HAVING", "WINDOW",
-                                    "QUALIFY", "EXCLUDE", "USING",
-                                )
+                    end = closing(tokens, p)
+                    end = next(
+                        (
+                            j for j, t in top_level(tokens, p + 1, end)
+                            if t.is_kw(
+                                "LIMIT", "OFFSET", "FETCH", "ROWS",
+                                "RANGE", "GROUPS", "UNION", "EXCEPT",
+                                "INTERSECT", "HAVING", "WINDOW",
+                                "QUALIFY", "EXCLUDE", "USING",
                             )
+                        ),
+                        end,
+                    )
+                    for item_lo, j in split_top_commas(tokens, p + 1, end):
+                        item = tokens[item_lo:j]
+                        code = [
+                            (k, x) for k, x in enumerate(item)
+                            if x.kind not in ("ws", "comment")
+                        ]
+                        tail0 = len(code)
+                        while tail0 and code[tail0 - 1][1].is_kw(
+                            "ASC", "DESC", "FIRST", "LAST", "NULLS"
+                        ):
+                            tail0 -= 1
+                        r = (
+                            ref_at(item_lo + code[0][0])
+                            if code[:tail0]
+                            else None
                         )
-                        if ends:
-                            item = tokens[item_lo:j]
-                            code = [
-                                (k, x) for k, x in enumerate(item)
-                                if x.kind not in ("ws", "comment")
-                            ]
-                            tail0 = len(code)
-                            while tail0 and code[tail0 - 1][1].is_kw(
-                                "ASC", "DESC", "FIRST", "LAST", "NULLS"
-                            ):
-                                tail0 -= 1
-                            r = (
-                                ref_at(item_lo + code[0][0])
-                                if code[:tail0]
-                                else None
-                            )
-                            if (
-                                r is not None
-                                and tail0 >= 1
-                                and r[1] - item_lo == code[tail0 - 1][0] + 1
-                            ):
-                                _, _, col, txt = r
-                                out.extend(tokenize(
-                                    f" array_position({arr(col)}, {txt})"
-                                ))
-                                out.extend(item[code[tail0 - 1][0] + 1:])
-                            else:
-                                out.extend(item)
-                            if t is None:
-                                i = j
-                                break
-                            if t.kind == "op" and t.text == ",":
-                                out.append(t)
-                                j += 1
-                                item_lo = j
-                                continue
-                            i = j
-                            break
-                        if t.kind == "op" and t.text in ("(", "["):
-                            depth += 1
-                        elif t.kind == "op" and t.text in (")", "]"):
-                            depth -= 1
-                        j += 1
+                        if (
+                            r is not None
+                            and tail0 >= 1
+                            and r[1] - item_lo == code[tail0 - 1][0] + 1
+                        ):
+                            _, _, col, txt = r
+                            out.extend(tokenize(
+                                f" array_position({arr(col)}, {txt})"
+                            ))
+                            out.extend(item[code[tail0 - 1][0] + 1:])
+                        else:
+                            out.extend(item)
+                        if j < end:
+                            out.append(tokens[j])  # the comma
+                    i = end
                     continue
             # range comparisons — positional ONLY when BOTH sides are
             # enum-typed (col ref or 'lit'::ename cast) with the same
@@ -1161,17 +1141,17 @@ class SparkStatementExecutor:
                             )
                 # right operand: enum col ref or 'lit'::ename, followed
                 # by a boundary
-                rlo = _next_code_idx(tokens, i)
+                rlo = next_code(tokens, i)
                 rref = None  # (values, text)
                 rend = None
                 if rlo < n and tokens[rlo].kind == "string":
-                    c2 = _next_code_idx(tokens, rlo)
+                    c2 = next_code(tokens, rlo)
                     if (
                         c2 < n
                         and tokens[c2].kind == "op"
                         and tokens[c2].text == "::"
                     ):
-                        c3 = _next_code_idx(tokens, c2)
+                        c3 = next_code(tokens, c2)
                         if c3 < n and tokens[c3].kind in (
                             "word", "bident", "qident"
                         ):
@@ -1191,7 +1171,7 @@ class SparkStatementExecutor:
                         rend = r[1]
                         rref = (colmap[r[2]], r[3])
                 if rend is not None:
-                    after = _next_code_idx(tokens, rend - 1)
+                    after = next_code(tokens, rend - 1)
                     if not (
                         after >= n
                         or (
@@ -1246,10 +1226,10 @@ class SparkStatementExecutor:
         for i, t in enumerate(tokens):
             if t.kind != "word" or t.text.lower() != fname:
                 continue
-            j = _next_code_idx(tokens, i)
+            j = next_code(tokens, i)
             if j >= n or tokens[j].kind != "op" or tokens[j].text != "(":
                 continue
-            close = _matching_paren(tokens, j)
+            close = closing(tokens, j)
             inner = [
                 x for x in tokens[j + 1: close]
                 if x.kind not in ("ws", "comment")
@@ -1319,25 +1299,20 @@ class SparkStatementExecutor:
 
         # statement shape, read on the (possibly currval-inlined) text
         sql_toks = tokenize(sql)
-        depth = 0
         has_from = False
         has_row_filter = False
         has_values = False
         saw_body = False  # a depth-0 SELECT or VALUES was seen at all
-        for t in sql_toks:
-            if t.kind == "op" and t.text in ("(", "["):
-                depth += 1
-            elif t.kind == "op" and t.text in (")", "]"):
-                depth -= 1
-            elif depth == 0 and t.is_kw("FROM"):
+        for _, t in top_level(sql_toks):
+            if t.is_kw("FROM"):
                 has_from = True
                 break
-            elif depth == 0 and t.is_kw("WHERE", "QUALIFY", "LIMIT"):
+            elif t.is_kw("WHERE", "QUALIFY", "LIMIT"):
                 has_row_filter = True
-            elif depth == 0 and t.is_kw("VALUES"):
+            elif t.is_kw("VALUES"):
                 has_values = True  # may carry multiple row groups
                 saw_body = True
-            elif depth == 0 and t.is_kw("SELECT"):
+            elif t.is_kw("SELECT"):
                 saw_body = True
         # a FROM-less, filter-less, conflict-mode-less INSERT inserts
         # exactly one row (or raises): the post-execute sequence advance
@@ -1368,35 +1343,21 @@ class SparkStatementExecutor:
             rank_sql = SCAN_ROW_NUMBER
             # plan the query part (first top-level SELECT/VALUES,
             # minus any INSERT tail clauses), with nextval neutralized
-            qlo = qhi = None
-            depth = 0
-            for k, t in enumerate(sql_toks):
-                if t.kind == "op" and t.text in ("(", "["):
-                    depth += 1
-                elif t.kind == "op" and t.text in (")", "]"):
-                    depth -= 1
-                elif depth == 0 and t.is_kw("SELECT", "VALUES"):
-                    qlo = k
-                    break
+            qlo = next(
+                (k for k, t in top_level(sql_toks) if t.is_kw("SELECT", "VALUES")),
+                None,
+            )
             if qlo is not None:
                 qhi = len(sql_toks)
-                depth = 0
-                for k in range(qlo, len(sql_toks)):
-                    t = sql_toks[k]
-                    if t.kind == "op" and t.text in ("(", "["):
-                        depth += 1
-                    elif t.kind == "op" and t.text in (")", "]"):
-                        depth -= 1
-                    elif depth == 0 and t.is_kw("RETURNING"):
+                for k, t in top_level(sql_toks, qlo):
+                    nk = next_code(sql_toks, k)
+                    if t.is_kw("RETURNING") or (
+                        t.is_kw("ON")
+                        and nk < len(sql_toks)
+                        and sql_toks[nk].is_kw("CONFLICT")
+                    ):
                         qhi = k
                         break
-                    elif depth == 0 and t.is_kw("ON"):
-                        nk = _next_code_idx(sql_toks, k)
-                        if nk < len(sql_toks) and sql_toks[nk].is_kw(
-                            "CONFLICT"
-                        ):
-                            qhi = k
-                            break
                 qtext = "".join(t.text for t in sql_toks[qlo:qhi])
                 probe_q = self._replace_nextval_once(
                     qtext, "CAST(0 AS BIGINT)"
@@ -1517,22 +1478,17 @@ class SparkStatementExecutor:
         if not code or not toks[code[0]].is_kw("SELECT"):
             return None
         sel0 = code[0]
-        first_item = _next_code_idx(toks, sel0)
+        first_item = next_code(toks, sel0)
         if first_item < len(toks) and toks[first_item].is_kw(
             "DISTINCT", "ALL"
         ):
             return None
         # depth-0 FROM + ordinal/ALL guard on GROUP/ORDER bodies
-        depth = 0
         from_idx = None
         guard = False  # inside a GROUP BY / ORDER BY body
         ordinal_idxs: List[int] = []
-        for k, t in enumerate(toks):
-            if t.kind == "op" and t.text in ("(", "["):
-                depth += 1
-            elif t.kind == "op" and t.text in (")", "]"):
-                depth -= 1
-            elif depth == 0 and t.kind == "word":
+        for k, t in top_level(toks):
+            if t.kind == "word":
                 u = t.upper
                 if u == "FROM" and from_idx is None:
                     from_idx = k
@@ -1548,7 +1504,7 @@ class SparkStatementExecutor:
                     ordinal_idxs.append(k)
         if from_idx is None or from_idx <= sel0:
             return None
-        items = _split_top_commas(toks, first_item, from_idx)
+        items = split_top_commas(toks, first_item, from_idx)
         seq_pos = None
         for idx, (lo, hi) in enumerate(items):
             if any(
@@ -1822,10 +1778,11 @@ class SparkStatementExecutor:
                 and tokens[nxt].kind == "op"
                 and tokens[nxt].text == "("
             ):
-                close = _matching_paren(tokens, nxt)
+                close = closing(tokens, nxt)
                 args = [
-                    [t for t in arg if t.kind not in ("ws", "comment")]
-                    for arg in _call_args(tokens, nxt, close)
+                    [t for t in tokens[a:b] if t.kind not in ("ws", "comment")]
+                    for a, b in split_top_commas(tokens, nxt + 1, close)
+                    if not a == b == close  # f() or a trailing comma
                 ]
                 view = self._register_file_read(
                     tok.text.lower(), args, hashlib
@@ -1945,12 +1902,9 @@ class SparkStatementExecutor:
                 while j < n and tokens[j].kind in ("ws", "comment"):
                     j += 1
                 if j < n and tokens[j].kind == "op" and tokens[j].text == "(":
-                    close = _matching_paren(tokens, j)
+                    close = closing(tokens, j)
                     params, body = self._macros[tok.text.lower()]
-                    args = [
-                        a.strip()
-                        for a in _split_csv_tokens(tokens[j + 1: close])
-                    ]
+                    args = _item_texts(tokens, j + 1, close)
                     if len(args) == len(params):
                         sub = {p.lower(): a for p, a in zip(params, args)}
                         out.append(Token("op", "("))
@@ -2477,15 +2431,10 @@ class SparkStatementExecutor:
             t for t in tokenize(body) if t.kind not in ("ws", "comment")
         ]
         n = len(code)
-        depth = 0
         starts: List[int] = []
         ends: List[int] = []
-        for i, t in enumerate(code):
-            if t.kind == "op" and t.text in ("(", "["):
-                depth += 1
-            elif t.kind == "op" and t.text in (")", "]"):
-                depth -= 1
-            elif depth or t.kind != "word":
+        for i, t in top_level(code):
+            if t.kind != "word":
                 continue
             elif t.upper == "SELECT" and len(starts) == len(ends):
                 starts.append(i)
@@ -2550,19 +2499,13 @@ class SparkStatementExecutor:
             "ALL",
         ):
             lo += 1
-        hi = lo
-        depth = 0
-        while hi < end:
-            t = code[hi]
-            if t.kind == "op" and t.text in ("(", "["):
-                depth += 1
-            elif t.kind == "op" and t.text in (")", "]"):
-                depth -= 1
-            elif depth == 0 and t.kind == "word" and t.upper == "FROM":
-                break
-            hi += 1
+        hi = next(
+            (j for j, t in top_level(code, lo, end) if t.kind == "word" and t.upper == "FROM"),
+            end,
+        )
         out = []
-        for item in _call_args(code, lo - 1, hi):
+        for a, b in split_top_commas(code, lo, hi):
+            item = code[a:b]
             if not item:
                 continue
             if len(item) == 1 and item[0].text == "*":
@@ -3155,14 +3098,8 @@ def _body_after_as(sql: str, allow_missing: bool = False) -> Optional[str]:
     """Text after the top-level AS in CREATE ... AS <select>.
     Handles DuckDB's `CREATE TABLE t AS FROM x` and parenthesized bodies."""
     tokens = tokenize(sql)
-    depth = 0
-    seen_create_name = False
-    for i, tok in enumerate(tokens):
-        if tok.kind == "op" and tok.text == "(":
-            depth += 1
-        elif tok.kind == "op" and tok.text == ")":
-            depth -= 1
-        elif depth == 0 and tok.is_kw("AS"):
+    for i, tok in top_level(tokens):
+        if tok.is_kw("AS"):
             body = "".join(t.text for t in tokens[i + 1:]).strip()
             if body.startswith("(") and body.endswith(")"):
                 inner = body[1:-1].strip()
@@ -3194,19 +3131,14 @@ def _dedupe_names(names: List[str]) -> List[str]:
 def _terminal_order_by(body: str) -> Optional[str]:
     """Top-level 'ORDER BY ...' clause text (without LIMIT tail), if any."""
     tokens = tokenize(body)
-    depth = 0
     order_start = None
     limit_start = None
-    code = list(code_tokens(tokens))
-    for pos, (idx, tok) in enumerate(code):
-        if tok.kind == "op" and tok.text == "(":
-            depth += 1
-        elif tok.kind == "op" and tok.text == ")":
-            depth -= 1
-        elif depth == 0 and tok.is_kw("ORDER"):
-            if pos + 1 < len(code) and code[pos + 1][1].is_kw("BY"):
+    for idx, tok in top_level(tokens):
+        if tok.is_kw("ORDER"):
+            nxt = next_code(tokens, idx)
+            if nxt < len(tokens) and tokens[nxt].is_kw("BY"):
                 order_start = idx
-        elif depth == 0 and tok.is_kw("LIMIT") and order_start is not None:
+        elif tok.is_kw("LIMIT") and order_start is not None:
             limit_start = idx
             break
     if order_start is None:
@@ -3242,24 +3174,18 @@ _DDL_TYPE_MAP = {
 }
 
 
-def _split_top_level(tokens: List[Token]) -> List[List[Token]]:
-    """Split a token run on top-level commas."""
-    parts: List[List[Token]] = []
-    part: List[Token] = []
-    depth = 0
-    for tok in tokens:
-        if tok.kind == "op" and tok.text == "(":
-            depth += 1
-        elif tok.kind == "op" and tok.text == ")":
-            depth -= 1
-        if depth == 0 and tok.kind == "op" and tok.text == ",":
-            parts.append(part)
-            part = []
-        else:
-            part.append(tok)
-    if part:
-        parts.append(part)
-    return parts
+def _column_items(sql: str) -> List[List[Token]]:
+    """Code tokens of each item of the column list ``_column_list_span``
+    finds (no list: no items)."""
+    span = _column_list_span(sql)
+    if span is None:
+        return []
+    tokens, open_idx, close_idx = span
+    return [
+        [t for t in tokens[a:b] if t.kind not in ("ws", "comment")]
+        for a, b in split_top_commas(tokens, open_idx + 1, close_idx)
+        if not a == b == close_idx  # () or a trailing comma
+    ]
 
 
 def _unquote_ident(tok: Token) -> str:
@@ -3274,22 +3200,12 @@ def _column_list_span(sql: str) -> Optional[tuple[List[Token], int, int]]:
     """(tokens, open_idx, close_idx) of the first top-level paren group,
     provided it appears before any SELECT/WITH/VALUES/FROM keyword."""
     tokens = tokenize(sql)
-    depth = 0
     for i, tok in enumerate(tokens):
-        if tok.is_kw("SELECT", "WITH", "VALUES", "FROM") and depth == 0:
+        if tok.is_kw("SELECT", "WITH", "VALUES", "FROM"):
             return None
         if tok.kind == "op" and tok.text == "(":
-            # find matching close
-            d = 0
-            for j in range(i, len(tokens)):
-                t = tokens[j]
-                if t.kind == "op" and t.text == "(":
-                    d += 1
-                elif t.kind == "op" and t.text == ")":
-                    d -= 1
-                    if d == 0:
-                        return tokens, i, j
-            return None
+            close = closing(tokens, i)
+            return (tokens, i, close) if close < len(tokens) else None
     return None
 
 
@@ -3509,31 +3425,27 @@ def _ddl_column_schema(
     column typed with a registered ENUM (``enum_types`` name -> values)
     maps to STRING and lands in ``enum_cols`` (name -> enum name) for
     the caller's insert-time CHECK."""
-    span = _column_list_span(sql)
-    if span is None:
+    if _column_list_span(sql) is None:
         raise UserException(
             f"CREATE TABLE without AS body or column list: {sql[:100]}"
         )
-    tokens, open_idx, close_idx = span
     items: List[str] = []
-    for part in _split_top_level(tokens[open_idx + 1: close_idx]):
-        code = [t for t in part if t.kind not in ("ws", "comment")]
+    for code in _column_items(sql):
         if not code:
             continue
         first = code[0]
         if first.kind == "word" and first.upper in _TABLE_CONSTRAINT_KWS:
             continue  # table-level constraint entry
         name = _unquote_ident(first)
-        type_toks: List[Token] = []
-        depth = 0
-        for tok in code[1:]:
-            if tok.kind == "op" and tok.text == "(":
-                depth += 1
-            elif tok.kind == "op" and tok.text == ")":
-                depth -= 1
-            if depth == 0 and tok.kind == "word" and tok.upper in _COL_CONSTRAINT_KWS:
-                break
-            type_toks.append(tok)
+        stop = next(
+            (
+                k for k, tok in top_level(code, 1)
+                if tok.kind == "word" and tok.upper in _COL_CONSTRAINT_KWS
+            ),
+            len(code),
+        )
+        # DuckDB's list suffix (INTEGER[]) lowers as in a cast
+        type_toks = _rewrite_array_type_suffix(code[1:stop])
         if not type_toks:
             raise UserException(f"Column '{name}' has no type in: {sql[:100]}")
         type_text = " ".join(t.text for t in type_toks)
@@ -3568,14 +3480,9 @@ def _ddl_primary_key(sql: str) -> Optional[List[str]]:
     ``CREATE TABLE``, lowercase: column-level ``a INT PRIMARY KEY`` and
     table-level ``PRIMARY KEY (a, b)`` / ``CONSTRAINT n PRIMARY KEY
     (...)`` forms. None when the DDL declares neither."""
-    span = _column_list_span(sql)
-    if span is None:
-        return None
-    tokens, open_idx, close_idx = span
     pk: List[str] = []
     unique: List[str] = []
-    for part in _split_top_level(tokens[open_idx + 1: close_idx]):
-        code = [t for t in part if t.kind not in ("ws", "comment")]
+    for code in _column_items(sql):
         if not code:
             continue
         first = code[0]
@@ -3618,13 +3525,8 @@ def _ddl_primary_key(sql: str) -> Optional[List[str]]:
 def _ddl_not_null(sql: str) -> List[str]:
     """Columns declared NOT NULL (or PRIMARY KEY, which implies it) in
     a bare-DDL CREATE TABLE, lowercase."""
-    span = _column_list_span(sql)
-    if span is None:
-        return []
-    tokens, open_idx, close_idx = span
     out: List[str] = []
-    for part in _split_top_level(tokens[open_idx + 1: close_idx]):
-        code = [t for t in part if t.kind not in ("ws", "comment")]
+    for code in _column_items(sql):
         if not code:
             continue
         first = code[0]
@@ -3654,30 +3556,15 @@ def _ddl_checks(sql: str) -> List[str]:
         return []
     tokens, open_idx, close_idx = span
     out: List[str] = []
-    for part in _split_top_level(tokens[open_idx + 1: close_idx]):
-        j = 0
-        while j < len(part):
-            t = part[j]
-            if t.kind == "word" and t.upper == "CHECK":
-                k = j + 1
-                while k < len(part) and part[k].kind in ("ws", "comment"):
-                    k += 1
-                if k < len(part) and part[k].kind == "op" and part[k].text == "(":
-                    depth = 0
-                    m = k
-                    while m < len(part):
-                        if part[m].kind == "op" and part[m].text == "(":
-                            depth += 1
-                        elif part[m].kind == "op" and part[m].text == ")":
-                            depth -= 1
-                            if depth == 0:
-                                break
-                        m += 1
-                    out.append(
-                        "".join(x.text for x in part[k + 1: m]).strip()
-                    )
-                    j = m
-            j += 1
+    j = open_idx + 1
+    while j < close_idx:
+        if tokens[j].is_kw("CHECK"):
+            k = next_code(tokens, j)
+            if k < close_idx and tokens[k].kind == "op" and tokens[k].text == "(":
+                m = closing(tokens, k)
+                out.append("".join(x.text for x in tokens[k + 1: m]).strip())
+                j = m
+        j += 1
     return out
 
 
@@ -3689,68 +3576,43 @@ def _split_on_conflict(sql: str):
     """
     tokens = tokenize(sql)
     n = len(tokens)
-    depth = 0
     at = None
-    for i, t in enumerate(tokens):
-        if t.kind == "op" and t.text == "(":
-            depth += 1
-        elif t.kind == "op" and t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.is_kw("ON"):
-            j = _next_code_idx(tokens, i)
+    for i, t in top_level(tokens):
+        if t.is_kw("ON"):
+            j = next_code(tokens, i)
             if j < n and tokens[j].is_kw("CONFLICT"):
                 at = (i, j)
                 break
     if at is None:
         return sql, None
     pre = "".join(t.text for t in tokens[: at[0]])
-    k = _next_code_idx(tokens, at[1])
+    k = next_code(tokens, at[1])
     cols = None
     if k < n and tokens[k].kind == "op" and tokens[k].text == "(":
-        close = k
-        d = 0
-        while close < n:
-            t = tokens[close]
-            if t.kind == "op" and t.text == "(":
-                d += 1
-            elif t.kind == "op" and t.text == ")":
-                d -= 1
-                if d == 0:
-                    break
-            close += 1
+        close = closing(tokens, k)
         cols = [
             _unquote_ident(t).lower()
             for t in tokens[k + 1: close]
             if t.kind in ("word", "bident", "qident")
         ]
-        k = _next_code_idx(tokens, close)
+        k = next_code(tokens, close)
     if not (k < n and tokens[k].is_kw("DO")):
         raise UserException(f"Unsupported ON CONFLICT form: {sql[:120]}")
-    k = _next_code_idx(tokens, k)
+    k = next_code(tokens, k)
     if k < n and tokens[k].is_kw("NOTHING"):
         return pre, {"cols": cols, "action": "nothing", "sets": "", "where": None}
     if not (
         k < n
         and tokens[k].is_kw("UPDATE")
-        and _next_code_idx(tokens, k) < n
-        and tokens[_next_code_idx(tokens, k)].is_kw("SET")
+        and next_code(tokens, k) < n
+        and tokens[next_code(tokens, k)].is_kw("SET")
     ):
         raise UserException(f"Unsupported ON CONFLICT form: {sql[:120]}")
-    k = _next_code_idx(tokens, k)  # SET
-    rest = tokens[k + 1:]
+    k = next_code(tokens, k)  # SET
     # split a trailing top-level WHERE off the SET list
-    d = 0
-    where = None
-    for i, t in enumerate(rest):
-        if t.kind == "op" and t.text == "(":
-            d += 1
-        elif t.kind == "op" and t.text == ")":
-            d -= 1
-        elif d == 0 and t.is_kw("WHERE"):
-            where = "".join(x.text for x in rest[i + 1:]).strip()
-            rest = rest[:i]
-            break
-    sets = "".join(t.text for t in rest).strip()
+    w = next((i for i, t in top_level(tokens, k + 1) if t.is_kw("WHERE")), None)
+    where = None if w is None else "".join(x.text for x in tokens[w + 1:]).strip()
+    sets = "".join(t.text for t in tokens[k + 1: w]).strip()
     return pre, {"cols": cols, "action": "update", "sets": sets, "where": where}
 
 
@@ -3766,37 +3628,20 @@ def _split_returning(sql: str):
     """Split a trailing top-level ``RETURNING <exprs>`` off an INSERT.
     Returns (sql_without_returning, exprs_text_or_None)."""
     tokens = tokenize(sql)
-    depth = 0
-    for i, t in enumerate(tokens):
-        if t.kind == "op" and t.text == "(":
-            depth += 1
-        elif t.kind == "op" and t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.is_kw("RETURNING"):
+    for i, t in top_level(tokens):
+        if t.is_kw("RETURNING"):
             exprs = "".join(x.text for x in tokens[i + 1:]).strip().rstrip(";")
             head = "".join(x.text for x in tokens[:i]).rstrip()
             return head, exprs or "*"
     return sql, None
 
 
-def _next_code_idx(tokens: List[Token], i: int) -> int:
-    j = i + 1
-    while j < len(tokens) and tokens[j].kind in ("ws", "comment"):
-        j += 1
-    return j
-
-
 def _insert_column_list(sql: str) -> Optional[List[str]]:
     """Explicit column list of ``INSERT INTO t (c1, c2) ...``, or None.
     The paren group must appear before the source keyword — ``INSERT
     INTO t VALUES (...)`` has none."""
-    span = _column_list_span(sql)
-    if span is None:
-        return None
-    tokens, open_idx, close_idx = span
     cols: List[str] = []
-    for part in _split_top_level(tokens[open_idx + 1: close_idx]):
-        code = [t for t in part if t.kind not in ("ws", "comment")]
+    for code in _column_items(sql):
         if len(code) != 1 or code[0].kind not in ("word", "qident", "bident"):
             return None  # not a plain column list
         cols.append(_unquote_ident(code[0]))
@@ -3837,17 +3682,12 @@ def _parse_update(
     into ([(col, expr)], from_text, pred)."""
     tokens = tokenize(sql)
     set_idx = from_idx = where_idx = None
-    depth = 0
-    for i, tok in enumerate(tokens):
-        if tok.kind == "op" and tok.text == "(":
-            depth += 1
-        elif tok.kind == "op" and tok.text == ")":
-            depth -= 1
-        elif depth == 0 and tok.is_kw("SET") and set_idx is None:
+    for i, tok in top_level(tokens):
+        if tok.is_kw("SET") and set_idx is None:
             set_idx = i
-        elif depth == 0 and tok.is_kw("FROM") and set_idx is not None and from_idx is None:
+        elif tok.is_kw("FROM") and set_idx is not None and from_idx is None:
             from_idx = i
-        elif depth == 0 and tok.is_kw("WHERE"):
+        elif tok.is_kw("WHERE"):
             where_idx = i
             break
     if set_idx is None:
@@ -3855,29 +3695,7 @@ def _parse_update(
     set_end = min(
         x for x in (from_idx, where_idx, len(tokens)) if x is not None
     )
-    set_text_tokens = tokens[set_idx + 1: set_end]
-    assignments: List[tuple[str, str]] = []
-    # split on top-level commas
-    part: List[Token] = []
-    depth = 0
-    parts: List[List[Token]] = []
-    for tok in set_text_tokens:
-        if tok.kind == "op" and tok.text == "(":
-            depth += 1
-        elif tok.kind == "op" and tok.text == ")":
-            depth -= 1
-        if depth == 0 and tok.kind == "op" and tok.text == ",":
-            parts.append(part)
-            part = []
-        else:
-            part.append(tok)
-    if part:
-        parts.append(part)
-    for ptoks in parts:
-        text = "".join(t.text for t in ptoks)
-        col, _, expr = text.partition("=")
-        col_name = col.strip().strip('"`')
-        assignments.append((col_name, expr.strip()))
+    assignments = _split_assignments(tokens, set_idx + 1, set_end)
     from_text = None
     if from_idx is not None:
         from_end = where_idx if where_idx is not None else len(tokens)
@@ -3931,19 +3749,10 @@ def _parse_alter(tail: str):
         if col is None or i + 1 >= n:
             return None
         # remaining text = type [DEFAULT expr]
-        rest = tokens[code[i + 1][0]:]
-        default = None
-        depth = 0
-        for j, t in enumerate(rest):
-            if t.kind == "op" and t.text == "(":
-                depth += 1
-            elif t.kind == "op" and t.text == ")":
-                depth -= 1
-            elif depth == 0 and t.is_kw("DEFAULT"):
-                default = "".join(x.text for x in rest[j + 1:]).strip()
-                rest = rest[:j]
-                break
-        type_text = "".join(t.text for t in rest).strip()
+        lo = code[i + 1][0]
+        d = next((j for j, t in top_level(tokens, lo) if t.is_kw("DEFAULT")), None)
+        default = None if d is None else "".join(x.text for x in tokens[d + 1:]).strip()
+        type_text = "".join(t.text for t in tokens[lo:d]).strip()
         if not type_text:
             return None
         return "add_column", {
@@ -3986,27 +3795,15 @@ def _parse_alter(tail: str):
     return None
 
 
-def _split_assignment_tokens(toks: List[Token]) -> List[tuple[str, str]]:
-    """Split `c = expr[, ...]` token runs into [(col, expr)]."""
-    parts: List[List[Token]] = []
-    part: List[Token] = []
-    depth = 0
-    for tok in toks:
-        if tok.kind == "op" and tok.text == "(":
-            depth += 1
-        elif tok.kind == "op" and tok.text == ")":
-            depth -= 1
-        if depth == 0 and tok.kind == "op" and tok.text == ",":
-            parts.append(part)
-            part = []
-        else:
-            part.append(tok)
-    if part:
-        parts.append(part)
+def _split_assignments(tokens: List[Token], lo: int, hi: int) -> List[tuple[str, str]]:
+    """``[(col, expr)]`` of the ``c = expr[, ...]`` list in
+    ``tokens[lo:hi]`` (UPDATE, MERGE ... UPDATE SET and, through the
+    MERGE it lowers to, ON CONFLICT DO UPDATE SET)."""
     out: List[tuple[str, str]] = []
-    for ptoks in parts:
-        text = "".join(t.text for t in ptoks)
-        col, _, expr = text.partition("=")
+    for a, b in split_top_commas(tokens, lo, hi):
+        if a == b == hi:
+            continue  # nothing after the last comma
+        col, _, expr = "".join(t.text for t in tokens[a:b]).partition("=")
         out.append((col.strip().strip('"`'), expr.strip()))
     return out
 
@@ -4018,6 +3815,7 @@ def _parse_merge(sql: str):
     sets | cols/values}]}. kind in update/delete/insert."""
     tokens = tokenize(sql)
     code = _code(sql)
+    ctoks = [t for _, t in code]
     n = len(code)
     if n < 4 or code[0][1].upper != "MERGE" or code[1][1].upper != "INTO":
         return None
@@ -4038,16 +3836,7 @@ def _parse_merge(sql: str):
     using_start = code[i][0] + 1
 
     def _find_kw(kw: str, from_code_idx: int) -> Optional[int]:
-        depth = 0
-        for j in range(from_code_idx, n):
-            t = code[j][1]
-            if t.kind == "op" and t.text == "(":
-                depth += 1
-            elif t.kind == "op" and t.text == ")":
-                depth -= 1
-            elif depth == 0 and t.is_kw(kw):
-                return j
-        return None
+        return next((j for j, t in top_level(ctoks, from_code_idx) if t.is_kw(kw)), None)
 
     on_ci = _find_kw("ON", i + 1)
     if on_ci is None:
@@ -4116,12 +3905,11 @@ def _parse_merge(sql: str):
             j += 1
             if j >= end_ci or not code[j][1].is_kw("SET"):
                 return None
-            set_toks = tokens[code[j][0] + 1: end_raw]
             clauses.append(
                 {
                     "kind": "update",
                     "cond": cond,
-                    "sets": _split_assignment_tokens(set_toks),
+                    "sets": _split_assignments(tokens, code[j][0] + 1, end_raw),
                     "by_source": by_source,
                 }
             )
@@ -4136,7 +3924,7 @@ def _parse_merge(sql: str):
                 star = True
             elif j < end_ci:
                 if code[j][1].kind == "op" and code[j][1].text == "(":
-                    close_raw = _matching_paren(tokens, code[j][0])
+                    close_raw = closing(tokens, code[j][0])
                     cols = [
                         p.strip().strip('"`')
                         for p in "".join(
@@ -4149,10 +3937,8 @@ def _parse_merge(sql: str):
                     jj = j + 1
                     if jj >= end_ci or code[jj][1].text != "(":
                         return None
-                    close_raw = _matching_paren(tokens, code[jj][0])
-                    values = _split_csv_tokens(
-                        tokens[code[jj][0] + 1: close_raw]
-                    )
+                    close_raw = closing(tokens, code[jj][0])
+                    values = _item_texts(tokens, code[jj][0] + 1, close_raw)
                 else:
                     return None
             clauses.append(
@@ -4175,23 +3961,11 @@ def _parse_merge(sql: str):
     }
 
 
-def _split_csv_tokens(toks: List[Token]) -> List[str]:
-    parts: List[str] = []
-    cur: List[Token] = []
-    depth = 0
-    for tok in toks:
-        if tok.kind == "op" and tok.text in ("(", "["):
-            depth += 1
-        elif tok.kind == "op" and tok.text in (")", "]"):
-            depth -= 1
-        if depth == 0 and tok.kind == "op" and tok.text == ",":
-            parts.append("".join(t.text for t in cur).strip())
-            cur = []
-        else:
-            cur.append(tok)
-    if cur:
-        parts.append("".join(t.text for t in cur).strip())
-    return [p for p in parts if p]
+def _item_texts(tokens: List[Token], lo: int, hi: int) -> List[str]:
+    """The non-blank top-level comma items of ``tokens[lo:hi]`` as
+    stripped text."""
+    texts = ("".join(t.text for t in tokens[a:b]).strip() for a, b in split_top_commas(tokens, lo, hi))
+    return [x for x in texts if x]
 
 
 def _merge_insert_projection(clause, fields) -> str:
@@ -4240,10 +4014,8 @@ def _parse_macro(tail: str):
     code = [i for i, t in enumerate(tokens) if t.kind not in ("ws", "comment")]
     if not code or tokens[code[0]].text != "(":
         return None
-    close = _matching_paren(tokens, code[0])
-    params = [
-        p.strip().strip('`"') for p in _split_csv_tokens(tokens[code[0] + 1: close])
-    ]
+    close = closing(tokens, code[0])
+    params = [p.strip('`"') for p in _item_texts(tokens, code[0] + 1, close)]
     after = [i for i in code if i > close]
     if not after or not tokens[after[0]].is_kw("AS"):
         return None
@@ -4284,21 +4056,13 @@ def _split_pivot_in_list(on_expr: str):
     (on_expr, None) when there is no top-level IN list."""
     tokens = tokenize(on_expr)
     n = len(tokens)
-    depth = 0
-    for i, tok in enumerate(tokens):
-        if tok.kind == "op" and tok.text == "(":
-            depth += 1
-        elif tok.kind == "op" and tok.text == ")":
-            depth -= 1
-        elif depth == 0 and tok.is_kw("IN"):
-            j = i + 1
-            while j < n and tokens[j].kind in ("ws", "comment"):
-                j += 1
+    for i, tok in top_level(tokens):
+        if tok.is_kw("IN"):
+            j = next_code(tokens, i)
             if j < n and tokens[j].kind == "op" and tokens[j].text == "(":
-                close = _matching_paren(tokens, j)
+                close = closing(tokens, j)
                 vals = []
-                for part in _split_csv_tokens(tokens[j + 1: close]):
-                    text = part.strip()
+                for text in _item_texts(tokens, j + 1, close):
                     name = (
                         text[1:-1].replace("''", "'")
                         if text.startswith("'") and text.endswith("'")
@@ -4315,28 +4079,18 @@ def _split_pivot_aggs(agg_expr: str):
     [(expr, alias|None)] pairs (``sum(x) AS s, count(*) AS c``)."""
     tokens = tokenize(agg_expr)
     out = []
-    for part_text in _split_csv_tokens(tokens):
-        ptoks = tokenize(part_text)
-        as_pos = _top_level_as(ptoks)
+    for a, b in split_top_commas(tokens, 0, len(tokens)):
+        text = "".join(t.text for t in tokens[a:b]).strip()
+        if not text:
+            continue
+        as_pos = next((j for j, t in top_level(tokens, a, b) if t.is_kw("AS")), None)
         if as_pos is None:
-            out.append((part_text.strip(), None))
+            out.append((text, None))
         else:
-            expr = "".join(t.text for t in ptoks[:as_pos]).strip()
-            alias = "".join(t.text for t in ptoks[as_pos + 1:]).strip().strip('"`')
+            expr = "".join(t.text for t in tokens[a:as_pos]).strip()
+            alias = "".join(t.text for t in tokens[as_pos + 1: b]).strip().strip('"`')
             out.append((expr, alias))
     return out
-
-
-def _top_level_as(tokens: List[Token]) -> Optional[int]:
-    depth = 0
-    for i, tok in enumerate(tokens):
-        if tok.kind == "op" and tok.text == "(":
-            depth += 1
-        elif tok.kind == "op" and tok.text == ")":
-            depth -= 1
-        elif depth == 0 and tok.is_kw("AS"):
-            return i
-    return None
 
 
 # aggregates whose dialect rewrite replaces the call with a composite
@@ -4370,7 +4124,7 @@ def _attach_agg_filter(expr: str, predicate: str) -> Optional[str]:
         if k < n and tokens[k].kind == "word" and tokens[k].upper == "FILTER":
             p = _next(k + 1)
             if p < n and tokens[p].kind == "op" and tokens[p].text == "(":
-                fclose = _matching_paren(tokens, p)
+                fclose = closing(tokens, p)
                 body = "".join(t.text for t in tokens[p + 1 : fclose]).strip()
                 if body.upper().startswith("WHERE"):
                     body = body[5:].strip()
@@ -4384,7 +4138,7 @@ def _attach_agg_filter(expr: str, predicate: str) -> Optional[str]:
         if low in _AGG_FN_NAMES or low in _ARG_WRAPPED_AGGS:
             j = _next(i + 1)
             if j < n and tokens[j].kind == "op" and tokens[j].text == "(":
-                close = _matching_paren(tokens, j)
+                close = closing(tokens, j)
                 found = True
                 existing = _existing_filter(close + 1)
                 if low in _ARG_WRAPPED_AGGS:
@@ -4432,7 +4186,7 @@ def _parse_copy(sql: str):
         return None
     i = 1
     if code[i][1].kind == "op" and code[i][1].text == "(":
-        close_raw = _matching_paren(tokens, code[i][0])
+        close_raw = closing(tokens, code[i][0])
         source = "".join(
             t.text for t in tokens[code[i][0]: close_raw + 1]
         )
@@ -4453,7 +4207,7 @@ def _parse_copy(sql: str):
     i += 1
     opts: dict = {}
     if i < n and code[i][1].kind == "op" and code[i][1].text == "(":
-        close_raw = _matching_paren(tokens, code[i][0])
+        close_raw = closing(tokens, code[i][0])
         inner = [
             (j, t) for j, t in code[i + 1:]
             if j < close_raw
@@ -4480,16 +4234,11 @@ def _delete_using_where(sql: str) -> tuple[Optional[str], Optional[str]]:
     """Split ``DELETE FROM t [USING sources] [WHERE pred]`` into
     (using_text, where_text)."""
     tokens = tokenize(sql)
-    depth = 0
     using_idx = where_idx = None
-    for i, tok in enumerate(tokens):
-        if tok.kind == "op" and tok.text == "(":
-            depth += 1
-        elif tok.kind == "op" and tok.text == ")":
-            depth -= 1
-        elif depth == 0 and tok.is_kw("USING") and using_idx is None:
+    for i, tok in top_level(tokens):
+        if tok.is_kw("USING") and using_idx is None:
             using_idx = i
-        elif depth == 0 and tok.is_kw("WHERE"):
+        elif tok.is_kw("WHERE"):
             where_idx = i
             break
     where = (

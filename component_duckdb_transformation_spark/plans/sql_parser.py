@@ -24,7 +24,15 @@ from dataclasses import dataclass, field
 from enum import Enum
 from typing import List, Optional, Sequence, Set
 
-from .sql_tokens import Token, code_tokens, split_statements, tokenize, unquote_name
+from .sql_tokens import (
+    Token,
+    closing,
+    code_tokens,
+    split_statements,
+    tokenize,
+    top_level,
+    unquote_name,
+)
 
 _NAME_KINDS = ("word", "qident", "bident", "string")
 # words that may directly follow FROM/JOIN but are not table names
@@ -330,6 +338,7 @@ def _dotted_name(code: Sequence[tuple[int, Token]], pos: int) -> tuple[Optional[
 
 def _collect_cte_aliases(code: Sequence[tuple[int, Token]]) -> Set[str]:
     aliases: Set[str] = set()
+    toks = [t for _, t in code]
     i = 0
     n = len(code)
     while i < n:
@@ -346,7 +355,7 @@ def _collect_cte_aliases(code: Sequence[tuple[int, Token]]) -> Set[str]:
                 alias = unquote_name(name_tok)
                 j += 1
                 if j < n and code[j][1].text == "(":  # column list
-                    j = _skip_parens(code, j)
+                    j = closing(toks, j) + 1
                 if j >= n or not code[j][1].is_kw("AS"):
                     break
                 j += 1
@@ -355,7 +364,7 @@ def _collect_cte_aliases(code: Sequence[tuple[int, Token]]) -> Set[str]:
                 if j >= n or code[j][1].text != "(":
                     break
                 aliases.add(alias)
-                j = _skip_parens(code, j)
+                j = closing(toks, j) + 1
                 if j < n and code[j][1].text == ",":
                     j += 1
                     continue
@@ -364,22 +373,6 @@ def _collect_cte_aliases(code: Sequence[tuple[int, Token]]) -> Set[str]:
         else:
             i += 1
     return aliases
-
-
-def _skip_parens(code: Sequence[tuple[int, Token]], pos: int) -> int:
-    """pos points at '('; return index just past the matching ')'."""
-    depth = 0
-    i = pos
-    while i < len(code):
-        t = code[i][1]
-        if t.kind == "op" and t.text == "(":
-            depth += 1
-        elif t.kind == "op" and t.text == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    return i
 
 
 def _collect_outputs(
@@ -525,14 +518,23 @@ def _capture_from_list(code: Sequence[tuple[int, Token]], pos: int, deps: Set[st
 
 
 def _has_top_level_order_by(code: Sequence[tuple[int, Token]]) -> bool:
-    depth = 0
-    for idx, (_, tok) in enumerate(code):
-        if tok.kind == "op" and tok.text == "(":
-            depth += 1
-        elif tok.kind == "op" and tok.text == ")":
-            depth -= 1
-        elif depth <= 1 and tok.is_kw("ORDER"):
-            nxt = idx + 1
-            if nxt < len(code) and code[nxt][1].is_kw("BY"):
+    """ORDER BY at depth 0, or at depth 0 of a bracket opened at depth 0
+    (``AS (SELECT ... ORDER BY x)``)."""
+    toks = [t for _, t in code]
+    n = len(toks)
+
+    def order_by(j: int) -> bool:
+        return toks[j].is_kw("ORDER") and j + 1 < n and toks[j + 1].is_kw("BY")
+
+    i = 0
+    while i < n:
+        if toks[i].kind == "op" and toks[i].text in ("(", "[", "{"):
+            end = closing(toks, i)
+            if any(order_by(j) for j, _ in top_level(toks, i + 1, end)):
                 return True
+            i = end + 1
+        elif order_by(i):
+            return True
+        else:
+            i += 1
     return False

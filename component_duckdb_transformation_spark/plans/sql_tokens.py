@@ -16,12 +16,36 @@ Token kinds:
                round-trip; the parser skips them)
 - ``op``       any other punctuation, one token per char except multi-char
                operators (::, <=, >=, <>, !=, ||, //)
+
+Bracket nesting is decided here and nowhere else. The brackets are the
+``op`` tokens ``(``, ``[`` and ``{``, closed by any of ``)``, ``]``
+and ``}``; a bracket inside a string, quoted identifier or comment is
+part of that token and never counts. The depth before a token is the
+number of opening brackets before it less the number of closing ones,
+and a token is *top level* when that depth is 0 and it is not itself a
+bracket (a stray closing bracket takes the depth below 0, so the
+tokens after it are not top level until an opening bracket brings it
+back). Four functions serve every scan:
+
+- ``next_code(tokens, i)``: index of the first non-whitespace,
+  non-comment token after ``i`` (``len(tokens)`` when none);
+- ``closing(tokens, i)``: index of the bracket closing the one at
+  ``i``; when ``tokens[i]`` opens nothing, of the bracket closing the
+  scope ``i`` lies in (``len(tokens)`` when none closes);
+- ``top_level(tokens, lo, hi)``: ``(j, token)`` for each top-level
+  token of ``tokens[lo:hi]``;
+- ``split_top_commas(tokens, lo, hi)``: ``(start, end)`` spans of the
+  items between its top-level commas.
+
+``balanced(tokens)`` says whether every bracket closes with its own
+kind; ``functions.dialect.translate`` hands an unbalanced statement
+back unchanged, so its passes may assume balanced input.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator, List
+from typing import Iterator, List, Optional
 
 _MULTI_OPS = ("::", "<=", ">=", "<>", "!=", "||", "//", "->>", "->", "**")
 
@@ -173,6 +197,79 @@ def code_tokens(tokens: List[Token]) -> Iterator[tuple[int, Token]]:
     for idx, tok in enumerate(tokens):
         if tok.kind not in ("ws", "comment"):
             yield idx, tok
+
+
+_OPEN = ("(", "[", "{")
+_CLOSE = (")", "]", "}")
+
+
+def next_code(tokens: List[Token], i: int) -> int:
+    """Index of the first non-whitespace, non-comment token after
+    ``i``; ``len(tokens)`` when there is none."""
+    j = i + 1
+    while j < len(tokens) and tokens[j].kind in ("ws", "comment"):
+        j += 1
+    return j
+
+
+def closing(tokens: List[Token], i: int) -> int:
+    """Index of the bracket closing the one at ``i`` or, when
+    ``tokens[i]`` is not an opening bracket, the scope ``i`` lies in:
+    ``len(tokens)`` when none does."""
+    n = len(tokens)
+    # a scan from inside a scope starts one level down
+    depth = 0 if i < n and tokens[i].kind == "op" and tokens[i].text in _OPEN else 1
+    for j in range(i, n):
+        t = tokens[j]
+        if t.kind == "op":
+            if t.text in _OPEN:
+                depth += 1
+            elif t.text in _CLOSE:
+                depth -= 1
+                if depth == 0:
+                    return j
+    return n
+
+
+def top_level(tokens: List[Token], lo: int = 0, hi: Optional[int] = None) -> Iterator[tuple[int, Token]]:
+    """``(j, token)`` for each token of ``tokens[lo:hi]`` at depth 0
+    that is not a bracket (see the module docstring)."""
+    depth = 0
+    for j in range(lo, len(tokens) if hi is None else hi):
+        t = tokens[j]
+        if t.kind == "op" and t.text in _OPEN:
+            depth += 1
+        elif t.kind == "op" and t.text in _CLOSE:
+            depth -= 1
+        elif depth == 0:
+            yield j, t
+
+
+def split_top_commas(tokens: List[Token], lo: int, hi: int) -> List[tuple[int, int]]:
+    """(start, end) spans of the comma-separated items of
+    ``tokens[lo:hi]`` at depth 0; an empty run is one empty item."""
+    spans = []
+    start = lo
+    for j, t in top_level(tokens, lo, hi):
+        if t.kind == "op" and t.text == ",":
+            spans.append((start, j))
+            start = j + 1
+    spans.append((start, hi))
+    return spans
+
+
+def balanced(tokens: List[Token]) -> bool:
+    """True when every bracket closes, with its own kind, and no
+    closing bracket comes first."""
+    stack: List[str] = []
+    for t in tokens:
+        if t.kind != "op":
+            continue
+        if t.text in _OPEN:
+            stack.append(_CLOSE[_OPEN.index(t.text)])
+        elif t.text in _CLOSE and (not stack or stack.pop() != t.text):
+            return False
+    return not stack
 
 
 def split_statements(sql: str) -> List[str]:

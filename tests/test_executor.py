@@ -1464,3 +1464,59 @@ def test_sequence_setop_insert_counted(spark, table_store):
         ], i
         _run(ex, "DROP TABLE so_out")
         _run(ex, "DROP TABLE so_cur")
+
+
+def _both(ex, con, sql):
+    _run(ex, sql)
+    con.execute(sql)
+
+
+def _rows_match_duckdb(spark, con, table):
+    def plain(v):
+        if hasattr(v, "asDict"):
+            return {k: plain(x) for k, x in v.asDict().items()}
+        if isinstance(v, list):
+            return [plain(x) for x in v]
+        return v
+
+    got = sorted(tuple(plain(v) for v in r) for r in spark.table(table).collect())
+    want = sorted(tuple(r) for r in con.execute(f"SELECT * FROM {table}").fetchall())
+    assert got == want
+
+
+def test_set_lists_split_only_at_top_level_commas(spark, table_store):
+    """A comma inside a list or struct literal is not an assignment
+    boundary: UPDATE, MERGE ... UPDATE SET and ON CONFLICT DO UPDATE
+    SET keep ``[1, 2]`` and ``{'x': 1, 'y': 2}`` whole (DuckDB 1.0 has
+    no MERGE: its equivalent UPDATE is the oracle; it refuses to update
+    a list column of a table with a key, so those assign to ``b`` and ``c``)."""
+    import duckdb
+
+    ex = SparkStatementExecutor(spark, table_store)
+    con = duckdb.connect()
+    _both(ex, con, "CREATE TABLE set_t AS SELECT 1 AS k, [0, 0] AS a, 5 AS b, {'x': 0, 'y': 0} AS s")
+    _both(ex, con, "UPDATE set_t SET a = [1, 2], b = 3 WHERE k = 1")
+    _both(ex, con, "UPDATE set_t SET s = {'x': 1, 'y': 2}, b = b + 1")
+    _both(ex, con, "CREATE TABLE set_pk (k INTEGER PRIMARY KEY, a INTEGER[], b INTEGER, c INTEGER)")
+    _both(ex, con, "INSERT INTO set_pk VALUES (1, [0], 0, 0), (2, [0], 0, 0)")
+    _both(ex, con, "INSERT INTO set_pk VALUES (1, [5], 5, 5) ON CONFLICT (k) DO UPDATE SET b = [7, 8][2], c = 9")
+    _rows_match_duckdb(spark, con, "set_t")
+    _rows_match_duckdb(spark, con, "set_pk")
+    _run(ex, "CREATE TABLE set_src AS SELECT 2 AS k")
+    _run(ex, "MERGE INTO set_pk USING set_src ON set_pk.k = set_src.k "
+             "WHEN MATCHED THEN UPDATE SET b = [3, 4][1], c = 1")
+    con.execute("UPDATE set_pk SET b = [3, 4][1], c = 1 WHERE k = 2")
+    _rows_match_duckdb(spark, con, "set_pk")
+
+
+def test_ddl_list_column_type_matches_duckdb(spark, table_store):
+    """``INTEGER[]`` in a bare-DDL column list lowers like the cast
+    suffix (``ARRAY<INT>``), and a following INSERT lands the lists."""
+    import duckdb
+
+    ex = SparkStatementExecutor(spark, table_store)
+    con = duckdb.connect()
+    _both(ex, con, "CREATE TABLE ddl_l (k INTEGER PRIMARY KEY, a INTEGER[], b INTEGER, v VARCHAR[])")
+    _both(ex, con, "INSERT INTO ddl_l VALUES (1, [1, 2], 3, ['x']), (2, NULL, 4, [])")
+    assert dict(spark.table("ddl_l").dtypes)["a"] == "array<int>"
+    _rows_match_duckdb(spark, con, "ddl_l")

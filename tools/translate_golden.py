@@ -27,9 +27,9 @@ translation byte-stable must leave every hash unchanged.
 The executor's statement parsers are frozen the same way (``parse:``
 keys): every DML/DDL statement of the corpus, of the executor-path
 workload scripts in ``workloads.py``, of the ``perfbench/gen.py`` DML
-chains, and every literal the executor tests pass to ``_run(``
-(``tests/test_executor.py``) and ``_both(``/``_ok(``/``_rows(``
-(``tests/test_catalog_records.py``) is run through the parser the
+chains, and every literal the executor tests pass to ``_run(`` and
+``_both(`` (``tests/test_executor.py``) and ``_both(``/``_ok(``/
+``_rows(`` (``tests/test_catalog_records.py``) is run through the parser the
 executor uses for its verb (``_parse_update``, ``_insert_clauses``,
 ``_parse_merge``, ``_parse_alter``, the ``_ddl_*`` column-list
 parsers) and ``spark_query_text``; the ``repr`` of the outcomes is
@@ -306,7 +306,7 @@ def corpus() -> dict:
 
 # (file, helper names) whose string-literal arguments are executor SQL
 _PARSE_CALLS = (
-    ("tests/test_executor.py", ("_run",)),
+    ("tests/test_executor.py", ("_run", "_both")),
     ("tests/test_catalog_records.py", ("_both", "_ok", "_rows")),
 )
 

@@ -50,7 +50,17 @@ from contextvars import ContextVar
 from typing import Dict, List, NamedTuple, Optional
 
 from .. import engine_version_string
-from ..plans.sql_tokens import Token, _bt, tokenize, unquote_name
+from ..plans.sql_tokens import (
+    Token,
+    _bt,
+    balanced,
+    closing,
+    next_code,
+    split_top_commas,
+    tokenize,
+    top_level,
+    unquote_name,
+)
 
 # Column-type hints for schema-aware dispatch. Translation is lexical
 # (the reference surface is raw DuckDB SQL strings, reference
@@ -109,7 +119,7 @@ def _hinted_primary_type(tokens: List[Token]) -> Optional[str]:
     while (
         len(code) >= 3
         and code[0].kind == "op" and code[0].text == "("
-        and _matching_paren(code, 0) == len(code) - 1
+        and closing(code, 0) == len(code) - 1
     ):
         code = code[1:-1]
     if not code:
@@ -226,7 +236,7 @@ def _double_valued_call(tokens: List[Token]) -> bool:
         and code[0].kind == "word"
         and code[0].text.lower() in _DOUBLE_VALUED_FNS
         and code[1].kind == "op" and code[1].text == "("
-        and _matching_paren(code, 1) == len(code) - 1
+        and closing(code, 1) == len(code) - 1
     )
 
 
@@ -383,26 +393,6 @@ _FN_RENAMES = {
 }
 
 
-def _next_code(tokens: List[Token], i: int) -> int:
-    j = i + 1
-    while j < len(tokens) and tokens[j].kind in ("ws", "comment"):
-        j += 1
-    return j
-
-
-def _matching_paren(tokens: List[Token], open_idx: int) -> int:
-    depth = 0
-    for j in range(open_idx, len(tokens)):
-        t = tokens[j]
-        if t.kind == "op" and t.text == "(":
-            depth += 1
-        elif t.kind == "op" and t.text == ")":
-            depth -= 1
-            if depth == 0:
-                return j
-    return len(tokens) - 1
-
-
 # CAST targets the alias typer can translate into hint strings — the
 # Spark simpleString the executor's publisher would report for a column
 # of the type this engine's cast emission actually produces (integrals
@@ -441,32 +431,20 @@ def _cast_target_hint(code: List[Token]) -> Optional[str]:
         and code[0].text.lower() in ("cast", "try_cast")
         and code[1].kind == "op"
         and code[1].text == "("
-        and _matching_paren(code, 1) == len(code) - 1
+        and closing(code, 1) == len(code) - 1
     ):
-        depth = 0
-        for j in range(2, len(code) - 1):
-            t = code[j]
-            if t.kind == "op" and t.text in ("(", "["):
-                depth += 1
-            elif t.kind == "op" and t.text in (")", "]"):
-                depth -= 1
-            elif depth == 0 and t.kind == "word" and t.upper == "AS":
+        for j, t in top_level(code, 2, len(code) - 1):
+            if t.kind == "word" and t.upper == "AS":
                 ty = code[j + 1 : len(code) - 1]
                 break
     else:
         last = None
-        depth = 0
-        for j, t in enumerate(code):
+        for j, t in top_level(code):
             if t.kind == "op":
-                if t.text in ("(", "["):
-                    depth += 1
-                elif t.text in (")", "]"):
-                    depth -= 1
-                elif depth == 0:
-                    if t.text == "::":
-                        last = j
-                    elif t.text != ".":
-                        return None  # another top-level operator
+                if t.text == "::":
+                    last = j
+                elif t.text != ".":
+                    return None  # another top-level operator
         if last is not None:
             ty = code[last + 1 :]
     if not ty or ty[0].kind != "word":
@@ -505,7 +483,7 @@ def _alias_expr_hint(code: List[Token]) -> Optional[str]:
         len(code) >= 3
         and code[0].kind == "op"
         and code[0].text == "("
-        and _matching_paren(code, 0) == len(code) - 1
+        and closing(code, 0) == len(code) - 1
     ):
         code = code[1:-1]
     if not code:
@@ -639,8 +617,13 @@ def _derive_alias_static_hints(tokens: List[Token]) -> Dict[str, str]:
 
 def translate(sql: str) -> str:
     """Translate one DuckDB-dialect statement to Spark SQL: a pure
-    function of the text and the hints ``column_type_hints`` publishes."""
+    function of the text and the hints ``column_type_hints`` publishes.
+    A statement whose brackets do not balance comes back unchanged: the
+    passes assume balanced brackets, and Spark then reports the error
+    on the text the user wrote."""
     tokens = tokenize(sql)
+    if not balanced(tokens):
+        return sql
     # In-statement alias typing (r10): `SELECT <statically-typed expr>
     # AS d` publishes d's type for the REST of this statement, so
     # downstream round/ceil/`||`/rendering templates dispatch on the
@@ -780,7 +763,7 @@ def _rewrite_fuse_percentile_cont(tokens: List[Token]) -> List[Token]:
             i += 1
             continue
         is_disc = t.text.lower() == "percentile_disc"
-        p_open = _next_code(tokens, i)
+        p_open = next_code(tokens, i)
         if not (
             p_open < n
             and tokens[p_open].kind == "op"
@@ -788,7 +771,7 @@ def _rewrite_fuse_percentile_cont(tokens: List[Token]) -> List[Token]:
         ):
             i += 1
             continue
-        p_close = _matching_paren(tokens, p_open)
+        p_close = closing(tokens, p_open)
         arg = [
             t2
             for t2 in tokens[p_open + 1 : p_close]
@@ -802,15 +785,15 @@ def _rewrite_fuse_percentile_cont(tokens: List[Token]) -> List[Token]:
         ):
             i = p_close + 1
             continue
-        j = _next_code(tokens, p_close)
+        j = next_code(tokens, p_close)
         if not (j < n and tokens[j].kind == "word" and tokens[j].upper == "WITHIN"):
             i = p_close + 1
             continue
-        j2 = _next_code(tokens, j)
+        j2 = next_code(tokens, j)
         if not (j2 < n and tokens[j2].upper == "GROUP"):
             i = p_close + 1
             continue
-        g_open = _next_code(tokens, j2)
+        g_open = next_code(tokens, j2)
         if not (
             g_open < n
             and tokens[g_open].kind == "op"
@@ -818,7 +801,7 @@ def _rewrite_fuse_percentile_cont(tokens: List[Token]) -> List[Token]:
         ):
             i = p_close + 1
             continue
-        g_close = _matching_paren(tokens, g_open)
+        g_close = closing(tokens, g_open)
         inner = [
             t2
             for t2 in tokens[g_open + 1 : g_close]
@@ -840,20 +823,12 @@ def _rewrite_fuse_percentile_cont(tokens: List[Token]) -> List[Token]:
             expr = expr[:-2]
         if expr and expr[-1].kind == "word" and expr[-1].upper in ("ASC",):
             expr = expr[:-1]
-        bail = not expr
-        depth = 0
-        for t2 in expr:
-            if t2.kind == "op" and t2.text == "(":
-                depth += 1
-            elif t2.kind == "op" and t2.text == ")":
-                depth -= 1
-            elif depth == 0 and (
-                (t2.kind == "op" and t2.text == ",")
-                or (t2.kind == "word" and t2.upper in ("DESC", "NULLS"))
-            ):
-                bail = True
-                break
-        after = _next_code(tokens, g_close)
+        bail = not expr or any(
+            (t2.kind == "op" and t2.text == ",")
+            or (t2.kind == "word" and t2.upper in ("DESC", "NULLS"))
+            for _, t2 in top_level(expr)
+        )
+        after = next_code(tokens, g_close)
         if after < n and tokens[after].kind == "word" and tokens[after].upper in (
             "OVER",
             "FILTER",
@@ -915,7 +890,7 @@ def _rewrite_from_first(tokens: List[Token]) -> List[Token]:
     while i < n:
         tok = tokens[i]
         if tok.kind == "op" and tok.text == "(":
-            close = _matching_paren(tokens, i)
+            close = closing(tokens, i)
             inner = _rewrite_from_first(tokens[i + 1 : close])
             # a '(' after a non-keyword identifier is a call argument
             # list; after a keyword (FROM/IN/EXISTS/...) it's a group
@@ -945,34 +920,20 @@ def _from_first_scope(tokens: List[Token]) -> List[Token]:
     ``SELECT list|* FROM t ...`` (the SELECT clause, wherever it
     appears at depth 0, moves to the front; absent SELECT means
     ``SELECT *``)."""
-    first = _next_code(tokens, -1)
+    first = next_code(tokens, -1)
     n = len(tokens)
     if first >= n or not tokens[first].is_kw("FROM"):
         return tokens
-    depth = 0
-    sel = None
-    for j in range(first + 1, n):
-        t = tokens[j]
-        if t.kind == "op" and t.text == "(":
-            depth += 1
-        elif t.kind == "op" and t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.is_kw("SELECT"):
-            sel = j
-            break
+    sel = next((j for j, t in top_level(tokens, first + 1) if t.is_kw("SELECT")), None)
     if sel is None:
         return tokens[:first] + _toks("SELECT * ") + tokens[first:]
-    end = n
-    depth = 0
-    for j in range(sel + 1, n):
-        t = tokens[j]
-        if t.kind == "op" and t.text == "(":
-            depth += 1
-        elif t.kind == "op" and t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.kind == "word" and t.upper in _FROM_FIRST_CLAUSES:
-            end = j
-            break
+    end = next(
+        (
+            j for j, t in top_level(tokens, sel + 1)
+            if t.kind == "word" and t.upper in _FROM_FIRST_CLAUSES
+        ),
+        n,
+    )
     return (
         tokens[:first]
         + tokens[sel:end]
@@ -1061,7 +1022,7 @@ def _rewrite_array_type_suffix(tokens: List[Token]) -> List[Token]:
     preceding token is not a type shape is left for the bracket pass."""
 
     def lower(tokens, i, out):
-        j = _next_code(tokens, i)
+        j = next_code(tokens, i)
         if not (j < len(tokens) and tokens[j].kind == "op" and tokens[j].text == "]"):
             return None
         k = len(out) - 1
@@ -1133,7 +1094,7 @@ def _rewrite_trailing_commas(tokens: List[Token]) -> List[Token]:
     ``]``, ``}``, or end of statement — never before ``)``)."""
 
     def lower(tokens, i, out):
-        j = _next_code(tokens, i)
+        j = next_code(tokens, i)
         if (
             j >= len(tokens)
             or (tokens[j].kind == "op" and tokens[j].text in ("]", "}"))
@@ -1198,17 +1159,17 @@ def _is_time_primary(tokens: List[Token], i: int):
     n = len(tokens)
     t = tokens[i]
     if t.is_kw("TIME"):
-        j = _next_code(tokens, i)
+        j = next_code(tokens, i)
         if j < n and tokens[j].kind == "string":
             return (i, j + 1)
     if t.kind == "word" and t.text.lower() == "make_time":
-        j = _next_code(tokens, i)
+        j = next_code(tokens, i)
         if j < n and tokens[j].kind == "op" and tokens[j].text == "(":
-            return (i, _matching_paren(tokens, j) + 1)
+            return (i, closing(tokens, j) + 1)
     if t.kind == "word" and t.text.lower() == "cast":
-        j = _next_code(tokens, i)
+        j = next_code(tokens, i)
         if j < n and tokens[j].kind == "op" and tokens[j].text == "(":
-            close = _matching_paren(tokens, j)
+            close = closing(tokens, j)
             code = [
                 m for m in range(j + 1, close)
                 if tokens[m].kind not in ("ws", "comment")
@@ -1223,8 +1184,8 @@ def _is_time_primary(tokens: List[Token], i: int):
         # trailing ``::TIME`` on a SIMPLE primary makes it TIME-valued
         # (parenthesized/qualified bases would leave their prefix
         # outside the wrapped span — those keep the unwrapped default)
-        j = _next_code(tokens, i)
-        k = _next_code(tokens, j) if j < n else n
+        j = next_code(tokens, i)
+        k = next_code(tokens, j) if j < n else n
         if (
             j < n
             and tokens[j].kind == "op" and tokens[j].text == "::"
@@ -1249,7 +1210,7 @@ def _is_time_primary(tokens: List[Token], i: int):
         # a call or a qualifier position is not a column reference;
         # qualified refs (q.col) keep the unwrapped default — the
         # qualifier would fall outside the wrapped span
-        j = _next_code(tokens, i)
+        j = next_code(tokens, i)
         after_bad = (
             j < n
             and tokens[j].kind == "op"
@@ -1293,10 +1254,10 @@ def _rewrite_time_casts(tokens: List[Token]) -> List[Token]:
         if i in in_values:
             return None
         if tokens[i].kind == "word":  # CAST(x AS TIME)
-            j = _next_code(tokens, i)
+            j = next_code(tokens, i)
             if not (j < n and tokens[j].kind == "op" and tokens[j].text == "("):
                 return None
-            close = _matching_paren(tokens, j)
+            close = closing(tokens, j)
             code = [
                 m for m in range(j + 1, close)
                 if tokens[m].kind not in ("ws", "comment")
@@ -1311,7 +1272,7 @@ def _rewrite_time_casts(tokens: List[Token]) -> List[Token]:
             return close + 1
         # x::TIME — TIME must be the full cast target (TIMESTAMP etc.
         # start with other keywords; `TIME ZONE` never follows ``::``)
-        k = _next_code(tokens, i)
+        k = next_code(tokens, i)
         if k < n and tokens[k].is_kw("TIME"):
             operand = _pop_operand(out)
             if operand:
@@ -1331,24 +1292,24 @@ def _rewrite_at_time_zone(tokens: List[Token]) -> List[Token]:
 
     def lower(tokens, i, out):
         n = len(tokens)
-        j = _next_code(tokens, i)
-        k = _next_code(tokens, j) if j < n else n
+        j = next_code(tokens, i)
+        k = next_code(tokens, j) if j < n else n
         if not (
             j < n and tokens[j].is_kw("TIME") and k < n and tokens[k].is_kw("ZONE")
         ):
             return None
-        z = _next_code(tokens, k)
+        z = next_code(tokens, k)
         if z >= n:
             return None
         if tokens[z].kind == "op" and tokens[z].text == "(":
-            z_end = _matching_paren(tokens, z) + 1
+            z_end = closing(tokens, z) + 1
         elif tokens[z].kind in ("string", "word", "bident", "qident"):
             z_end = z + 1
-            nx = _next_code(tokens, z)
+            nx = next_code(tokens, z)
             while nx < n and tokens[nx].kind == "op" and tokens[nx].text == ".":
-                nx = _next_code(tokens, nx)
+                nx = next_code(tokens, nx)
                 z_end = nx + 1
-                nx = _next_code(tokens, nx)
+                nx = next_code(tokens, nx)
         else:
             return None
         operand = _pop_operand(out)
@@ -1454,14 +1415,14 @@ def _rewrite_time_wrap(tokens: List[Token]) -> List[Token]:
         fwd_ops = 0
         j = hi
         while True:
-            p = _next_code(tokens, j - 1)
+            p = next_code(tokens, j - 1)
             if not (
                 p < n
                 and tokens[p].kind == "op"
                 and tokens[p].text in ("+", "-")
             ):
                 break
-            q = _next_code(tokens, p)
+            q = next_code(tokens, p)
             if q >= n:
                 break
             # forward operand
@@ -1471,10 +1432,10 @@ def _rewrite_time_wrap(tokens: List[Token]) -> List[Token]:
                 skip = True
                 o_hi = sub[1]
             elif tokens[q].is_kw("INTERVAL"):
-                o_hi = _next_code(tokens, q)
+                o_hi = next_code(tokens, q)
                 if o_hi < n and tokens[o_hi].kind in ("number", "word", "string"):
                     was_str = tokens[o_hi].kind == "string"
-                    nxt = _next_code(tokens, o_hi)
+                    nxt = next_code(tokens, o_hi)
                     o_hi += 1
                     if not was_str and nxt < n and tokens[nxt].kind == "word":
                         o_hi = nxt + 1
@@ -1485,26 +1446,26 @@ def _rewrite_time_wrap(tokens: List[Token]) -> List[Token]:
                 else:
                     break
             elif tokens[q].kind == "op" and tokens[q].text == "(":
-                o_hi = _matching_paren(tokens, q) + 1
+                o_hi = closing(tokens, q) + 1
             elif tokens[q].is_kw("DATE", "TIMESTAMP", "TIMESTAMPTZ") and (
-                (ds := _next_code(tokens, q)) < n
+                (ds := next_code(tokens, q)) < n
                 and tokens[ds].kind == "string"
             ):
                 o_hi = ds + 1  # typed literal
             elif tokens[q].kind in ("word", "bident", "qident"):
                 o_hi = q + 1
-                nx = _next_code(tokens, q)
+                nx = next_code(tokens, q)
                 if nx < n and tokens[nx].kind == "op" and tokens[nx].text == "(":
-                    o_hi = _matching_paren(tokens, nx) + 1
+                    o_hi = closing(tokens, nx) + 1
                 else:
                     while (
                         nx < n
                         and tokens[nx].kind == "op"
                         and tokens[nx].text == "."
                     ):
-                        nx = _next_code(tokens, nx)
+                        nx = next_code(tokens, nx)
                         o_hi = nx + 1
-                        nx = _next_code(tokens, nx)
+                        nx = next_code(tokens, nx)
             elif tokens[q].kind in ("number", "string"):
                 o_hi = q + 1
             else:
@@ -1524,7 +1485,7 @@ def _rewrite_time_wrap(tokens: List[Token]) -> List[Token]:
                 if back_ops == 1 and back and back[-1].text == "+":
                     comp = "".join(t.text for t in back[:-1]).strip()
                 elif fwd_ops == 1 and fwd:
-                    fc = _next_code(fwd, -1)
+                    fc = next_code(fwd, -1)
                     if fc < len(fwd) and fwd[fc].text == "+":
                         comp = "".join(
                             t.text for t in fwd[fc + 1:]
@@ -1574,7 +1535,7 @@ def _rewrite_time_literals(tokens: List[Token]) -> List[Token]:
     wrapping, and results render as timestamps."""
 
     def lower(tokens, i, out):
-        j = _next_code(tokens, i)
+        j = next_code(tokens, i)
         if j < len(tokens) and tokens[j].kind == "string":
             t = _decode_spark_string(tokens[j])
             out.append(Token("word", "TIMESTAMP"))
@@ -1690,62 +1651,51 @@ def _patch_enclosing_star_for_asof(
             break
     if sel is None or from_idx is None or from_idx < sel:
         return
-    k = sel + 1
-    depth = 0
-    while k < from_idx:
-        t = out[k]
-        if t.kind == "op" and t.text in ("(", "["):
-            depth += 1
-        elif t.kind == "op" and t.text in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t.kind == "op" and t.text == "*":
-            # qualifier, if any
-            p = k - 1
-            while p > sel and out[p].kind in ("ws", "comment"):
-                p -= 1
-            qual = None
-            if p > sel and out[p].kind == "op" and out[p].text == ".":
-                q = p - 1
-                while q > sel and out[q].kind in ("ws", "comment"):
-                    q -= 1
-                if q > sel and out[q].kind in ("word", "bident", "qident"):
-                    qual = unquote_name(out[q])
-            if qual is not None and qual.lower() != ralias.lower():
-                k += 1
-                continue
-            # a bare `*` is a projection star only right after SELECT /
-            # DISTINCT / ALL / a list comma — anything else (identifier,
-            # literal, `)`) makes it multiplication
-            if qual is None and not (
-                out[p].is_kw("SELECT", "DISTINCT", "ALL")
-                or (out[p].kind == "op" and out[p].text == ",")
-            ):
-                k += 1
-                continue
-            nxt = _next_code(out, k)
-            entry = _toks(f"{ralias}.{col}")
-            # merge into an existing exclusion list (EXCLUDE is the
-            # DuckDB spelling — a later pass converts it to EXCEPT)
+    stars = [k for k, t in top_level(out, sel + 1, from_idx) if t.kind == "op" and t.text == "*"]
+    # right to left, so an insertion leaves the earlier stars in place
+    for k in reversed(stars):
+        # qualifier, if any
+        p = k - 1
+        while p > sel and out[p].kind in ("ws", "comment"):
+            p -= 1
+        qual = None
+        if p > sel and out[p].kind == "op" and out[p].text == ".":
+            q = p - 1
+            while q > sel and out[q].kind in ("ws", "comment"):
+                q -= 1
+            if q > sel and out[q].kind in ("word", "bident", "qident"):
+                qual = unquote_name(out[q])
+        if qual is not None and qual.lower() != ralias.lower():
+            continue
+        # a bare `*` is a projection star only right after SELECT /
+        # DISTINCT / ALL / a list comma — anything else (identifier,
+        # literal, `)`) makes it multiplication
+        if qual is None and not (
+            out[p].is_kw("SELECT", "DISTINCT", "ALL")
+            or (out[p].kind == "op" and out[p].text == ",")
+        ):
+            continue
+        nxt = next_code(out, k)
+        entry = _toks(f"{ralias}.{col}")
+        # merge into an existing exclusion list (EXCLUDE is the
+        # DuckDB spelling — a later pass converts it to EXCEPT)
+        if (
+            nxt < from_idx
+            and out[nxt].is_kw("EXCEPT", "EXCLUDE")
+        ):
+            p_open = next_code(out, nxt)
             if (
-                nxt < from_idx
-                and out[nxt].is_kw("EXCEPT", "EXCLUDE")
+                p_open < from_idx
+                and out[p_open].kind == "op"
+                and out[p_open].text == "("
             ):
-                p_open = _next_code(out, nxt)
-                if (
-                    p_open < from_idx
-                    and out[p_open].kind == "op"
-                    and out[p_open].text == "("
-                ):
-                    ins = entry + [Token("op", ","), Token("ws", " ")]
-                    out[p_open + 1: p_open + 1] = ins
-                    from_idx += len(ins)
-                    k = p_open + len(ins)
-                    continue
-            ins = _toks(" EXCEPT (") + entry + [Token("op", ")")]
-            out[k + 1: k + 1] = ins
-            from_idx += len(ins)
-            k += len(ins)
-        k += 1
+                ins = entry + [Token("op", ","), Token("ws", " ")]
+                out[p_open + 1: p_open + 1] = ins
+                from_idx += len(ins)
+                continue
+        ins = _toks(" EXCEPT (") + entry + [Token("op", ")")]
+        out[k + 1: k + 1] = ins
+        from_idx += len(ins)
 
 
 def _table_primary_backward(out: List[Token]):
@@ -1782,7 +1732,7 @@ def _parse_table_primary(toks: List[Token]):
     if first >= n_:
         return None
     if toks[first].kind == "op" and toks[first].text == "(":
-        close = _matching_paren(toks, first)
+        close = closing(toks, first)
         if close < 0:
             return None
         src = "".join(t.text for t in toks[first: close + 1])
@@ -1795,13 +1745,13 @@ def _parse_table_primary(toks: List[Token]):
         if toks[first].kind not in ("word", "bident", "qident"):
             return None
         k = first
-        j = _next_code(toks, k)
+        j = next_code(toks, k)
         while j < n_ and toks[j].kind == "op" and toks[j].text == ".":
-            j = _next_code(toks, j)
+            j = next_code(toks, j)
             if j >= n_:
                 return None
             k = j
-            j = _next_code(toks, j)
+            j = next_code(toks, j)
         src = "".join(t.text for t in toks[first: k + 1])
         rest = [
             t for t in toks[k + 1:] if t.kind not in ("ws", "comment")
@@ -1849,27 +1799,14 @@ def _literal_array_elements(inner: List[Token]):
         return None
     if not (second.kind == "op" and second.text == "("):
         return None
-    close = _matching_paren(inner, code_idx[1])
+    close = closing(inner, code_idx[1])
     if close != code_idx[-1]:
         return None
-    elems: List[str] = []
-    depth = 0
-    cur: List[str] = []
-    for t in inner[code_idx[1] + 1: close]:
-        if t.kind == "op" and t.text == "(":
-            depth += 1
-        elif t.kind == "op" and t.text == ")":
-            depth -= 1
-        if depth == 0 and t.kind == "op" and t.text == ",":
-            elems.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(t.text)
-    tail = "".join(cur).strip()
-    if tail:
-        elems.append(tail)
-    elif elems:
-        return None  # trailing comma — not a clean literal
+    elems = [_sql(inner, a, b) for a, b in split_top_commas(inner, code_idx[1] + 1, close)]
+    if not elems[-1]:
+        if len(elems) > 1:
+            return None  # trailing comma — not a clean literal
+        elems.pop()  # array()
     return elems
 
 
@@ -1887,7 +1824,7 @@ def _rewrite_any_all(tokens: List[Token]) -> List[Token]:
     before the quantifier must be a comparison operator."""
 
     def lower(tokens, i, out):
-        p = _next_code(tokens, i)
+        p = next_code(tokens, i)
         if not (p < len(tokens) and tokens[p].kind == "op" and tokens[p].text == "("):
             return None
         k = len(out) - 1
@@ -1895,7 +1832,7 @@ def _rewrite_any_all(tokens: List[Token]) -> List[Token]:
             k -= 1
         if not (k >= 0 and out[k].kind == "op" and out[k].text in _ANY_ALL_CMP_OPS):
             return None
-        close = _matching_paren(tokens, p)
+        close = closing(tokens, p)
         inner = _rewrite_any_all(tokens[p + 1: close])
         icode = [t for t in inner if t.kind not in ("ws", "comment")]
         is_sub = bool(icode) and icode[0].is_kw("SELECT", "FROM", "WITH", "VALUES")
@@ -1946,28 +1883,28 @@ def _rewrite_positional_join(tokens: List[Token]) -> List[Token]:
 
     def lower(tokens, i, out):
         n = len(tokens)
-        j = _next_code(tokens, i)
+        j = next_code(tokens, i)
         if not (j < n and tokens[j].is_kw("JOIN")):
             return None
         # right primary: name/dotted or parenthesized + optional alias
-        r0 = _next_code(tokens, j)
+        r0 = next_code(tokens, j)
         if r0 >= n:
             return None
         if tokens[r0].kind == "op" and tokens[r0].text == "(":
-            r_end = _matching_paren(tokens, r0) + 1
+            r_end = closing(tokens, r0) + 1
         elif tokens[r0].kind in ("word", "bident", "qident"):
             r_end = r0 + 1
-            k = _next_code(tokens, r0)
+            k = next_code(tokens, r0)
             while k < n and tokens[k].kind == "op" and tokens[k].text == ".":
-                k = _next_code(tokens, k)
+                k = next_code(tokens, k)
                 r_end = k + 1
-                k = _next_code(tokens, k)
+                k = next_code(tokens, k)
         else:
             return None
         alias_end = r_end
-        a0 = _next_code(tokens, r_end - 1)
+        a0 = next_code(tokens, r_end - 1)
         if a0 < n and tokens[a0].is_kw("AS"):
-            a1 = _next_code(tokens, a0)
+            a1 = next_code(tokens, a0)
             if a1 < n and tokens[a1].kind in ("word", "bident", "qident"):
                 alias_end = a1 + 1
         elif (
@@ -2025,34 +1962,34 @@ def _rewrite_asof_join(tokens: List[Token]) -> List[Token]:
     def lower(tokens, i, out):
         n = len(tokens)
         # --- join type
-        j = _next_code(tokens, i)
+        j = next_code(tokens, i)
         left_join = j < n and tokens[j].is_kw("LEFT")
         if j < n and tokens[j].is_kw("LEFT", "INNER"):
-            j = _next_code(tokens, j)
+            j = next_code(tokens, j)
         if not (j < n and tokens[j].is_kw("JOIN")):
             return None
         # --- right ref
-        r0 = _next_code(tokens, j)
+        r0 = next_code(tokens, j)
         if r0 >= n:
             return None
         if tokens[r0].kind == "op" and tokens[r0].text == "(":
-            r_end = _matching_paren(tokens, r0) + 1
+            r_end = closing(tokens, r0) + 1
         elif tokens[r0].kind in ("word", "bident", "qident"):
             r_end = r0 + 1
-            k = _next_code(tokens, r0)
+            k = next_code(tokens, r0)
             while k < n and tokens[k].kind == "op" and tokens[k].text == ".":
-                k = _next_code(tokens, k)
+                k = next_code(tokens, k)
                 r_end = k + 1
-                k = _next_code(tokens, k)
+                k = next_code(tokens, k)
         else:
             return None
         rsource = tokens[r0:r_end]
         # --- alias
-        a0 = _next_code(tokens, r_end - 1)
+        a0 = next_code(tokens, r_end - 1)
         ralias = None
         alias_end = r_end
         if a0 < n and tokens[a0].is_kw("AS"):
-            a1 = _next_code(tokens, a0)
+            a1 = next_code(tokens, a0)
             if a1 < n and tokens[a1].kind in ("word", "bident", "qident"):
                 ralias = unquote_name(tokens[a1])
                 alias_end = a1 + 1
@@ -2068,56 +2005,38 @@ def _rewrite_asof_join(tokens: List[Token]) -> List[Token]:
             if len(code) == 1 and code[0].kind in ("word", "bident", "qident"):
                 ralias = unquote_name(code[0])
         # --- ON condition
-        on0 = _next_code(tokens, alias_end - 1)
+        on0 = next_code(tokens, alias_end - 1)
         if not (ralias and on0 < n and tokens[on0].is_kw("ON")):
             return None
         c0 = on0 + 1
-        depth = 0
-        c_end = c0
-        while c_end < n:
-            t = tokens[c_end]
-            if t.kind == "op" and t.text == "(":
-                depth += 1
-            elif t.kind == "op" and t.text == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif (
-                depth == 0
-                and t.kind == "word"
-                and t.upper in _ASOF_COND_END
-            ):
-                break
-            c_end += 1
+        scope_end = closing(tokens, on0)
+        c_end = next(
+            (
+                j for j, t in top_level(tokens, c0, scope_end)
+                if t.kind == "word" and t.upper in _ASOF_COND_END
+            ),
+            scope_end,
+        )
         cond = tokens[c0:c_end]
         # split on top-level AND
-        conjuncts: List[List[Token]] = [[]]
-        depth = 0
-        for t in cond:
-            if t.kind == "op" and t.text == "(":
-                depth += 1
-            elif t.kind == "op" and t.text == ")":
-                depth -= 1
-            if depth == 0 and t.is_kw("AND"):
-                conjuncts.append([])
-            else:
-                conjuncts[-1].append(t)
+        conjuncts: List[List[Token]] = []
+        start = c0
+        for j, t in top_level(tokens, c0, c_end):
+            if t.is_kw("AND"):
+                conjuncts.append(tokens[start:j])
+                start = j + 1
+        conjuncts.append(tokens[start:c_end])
         eqs = []
         ineq = None
         ok = True
         for cj in conjuncts:
-            op_i = None
-            depth = 0
-            for ci, t in enumerate(cj):
-                if t.kind == "op" and t.text == "(":
-                    depth += 1
-                elif t.kind == "op" and t.text == ")":
-                    depth -= 1
-                elif depth == 0 and t.kind == "op" and t.text in (
-                    "=", ">=", ">", "<=", "<"
-                ):
-                    op_i = ci
-                    break
+            op_i = next(
+                (
+                    ci for ci, t in top_level(cj)
+                    if t.kind == "op" and t.text in ("=", ">=", ">", "<=", "<")
+                ),
+                None,
+            )
             if op_i is None:
                 ok = False
                 break
@@ -2292,16 +2211,16 @@ def _rewrite_extract_dow(tokens: List[Token]) -> List[Token]:
 
     def lower(tokens, i, out):
         n = len(tokens)
-        p_open = _next_code(tokens, i)
+        p_open = next_code(tokens, i)
         if not (p_open < n and tokens[p_open].text == "("):
             return None
-        field_idx = _next_code(tokens, p_open)
+        field_idx = next_code(tokens, p_open)
         field = tokens[field_idx].upper if field_idx < n else ""
-        close = _matching_paren(tokens, p_open)
+        close = closing(tokens, p_open)
         if field == "ISODOW":
-            from_idx = _next_code(tokens, field_idx)
+            from_idx = next_code(tokens, field_idx)
             out.extend(_toks("(((extract(DAYOFWEEK FROM "))
-            out.extend(tokens[_next_code(tokens, from_idx): close])
+            out.extend(tokens[next_code(tokens, from_idx): close])
             out.extend(_toks(") + 5) % 7) + 1)"))
         elif field in ("DOW", "DAYOFWEEK"):
             out.append(Token("op", "("))
@@ -2345,7 +2264,7 @@ def _rewrite_date_trunc(tokens: List[Token]) -> List[Token]:
         return tokens
 
     def lower(call: _CallSite, walk):
-        part = call.tokens[_next_code(call.tokens, call.p_open) :][:1]
+        part = call.tokens[next_code(call.tokens, call.p_open) :][:1]
         if part and part[0].kind == "string" and (
             part[0].text[1:-1].lower() in _DATE_PARTS
         ):
@@ -3206,20 +3125,15 @@ _FULL_FRAMES = frozenset(
 def _parse_spec(toks: List[Token]) -> _WinSpec:
     """Parse the tokens between an OVER's parentheses (or a WINDOW
     definition's) into a ``_WinSpec``."""
-    depth = 0
     order_at = None
     cut = len(toks)
-    for k, t in enumerate(toks):
-        if t.kind == "op" and t.text in ("(", "["):
-            depth += 1
-        elif t.kind == "op" and t.text in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t.kind == "word":
+    for k, t in top_level(toks):
+        if t.kind == "word":
             if t.upper in ("ROWS", "RANGE", "GROUPS", "EXCLUDE"):
                 cut = k
                 break
             if t.upper == "ORDER" and order_at is None:
-                by = _next_code(toks, k)
+                by = next_code(toks, k)
                 if by < len(toks) and toks[by].is_kw("BY"):
                     order_at = k
     head = [t for t in toks[:cut] if t.kind not in ("ws", "comment")]
@@ -3334,10 +3248,10 @@ def _shared_window_prefix(tokens: List[Token]):
     for i, t in enumerate(tokens):
         if not t.is_kw("OVER"):
             continue
-        j = _next_code(tokens, i)
+        j = next_code(tokens, i)
         if not (j < len(tokens) and tokens[j].kind == "op" and tokens[j].text == "("):
             return None  # named window: resolution unknown
-        keys.add(_parse_spec(tokens[j + 1 : _matching_paren(tokens, j)]).key)
+        keys.add(_parse_spec(tokens[j + 1 : closing(tokens, j)]).key)
         count += 1
     if len(keys) == 1:
         return keys.pop(), count
@@ -3352,17 +3266,12 @@ def _prefix_partition_fp_sql(prefix: str) -> str:
     (r12 ADVICE: a pushed predicate could otherwise line row numbers
     up across a partition change). No PARTITION BY -> constant 0."""
     toks = _toks(prefix)
-    depth = 0
     start = None
     end = len(toks)
-    for i, t in enumerate(toks):
-        if t.kind == "op" and t.text == "(":
-            depth += 1
-        elif t.kind == "op" and t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.kind == "word":
+    for i, t in top_level(toks):
+        if t.kind == "word":
             if t.upper == "PARTITION" and start is None:
-                j = _next_code(toks, i)
+                j = next_code(toks, i)
                 if j < len(toks) and toks[j].is_kw("BY"):
                     start = j + 1
             elif t.upper == "ORDER" and start is not None:
@@ -3383,36 +3292,17 @@ def _reverse_prefix_sql(prefix: str):
     is engine-arbitrary exactly like forward ROWS frames. None when the
     prefix has no parseable ORDER BY tail."""
     toks = _toks(prefix)
-    depth = 0
     ob = None
-    for i, t in enumerate(toks):
-        if t.kind == "op" and t.text == "(":
-            depth += 1
-        elif t.kind == "op" and t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.kind == "word" and t.upper == "ORDER":
-            j = _next_code(toks, i)
+    for i, t in top_level(toks):
+        if t.kind == "word" and t.upper == "ORDER":
+            j = next_code(toks, i)
             if j < len(toks) and toks[j].is_kw("BY"):
                 ob = (i, j)
                 break
     if ob is None:
         return None
     head = "".join(t.text for t in toks[: ob[0]]).strip()
-    items_toks = toks[ob[1] + 1 :]
-    items: List[List[Token]] = []
-    cur: List[Token] = []
-    depth = 0
-    for t in items_toks:
-        if t.kind == "op" and t.text in ("(", "["):
-            depth += 1
-        elif t.kind == "op" and t.text in (")", "]"):
-            depth -= 1
-        if depth == 0 and t.kind == "op" and t.text == ",":
-            items.append(cur)
-            cur = []
-        else:
-            cur.append(t)
-    items.append(cur)
+    items = [toks[a:b] for a, b in split_top_commas(toks, ob[1] + 1, len(toks))]
     out = []
     for it in items:
         code = [t for t in it if t.kind not in ("ws", "comment")]
@@ -3554,13 +3444,13 @@ def _consume_filter_clause(tokens: List[Token], i: int):
     (r12 ADVICE)."""
     n = len(tokens)
     if i < n and tokens[i].is_kw("FILTER"):
-        f_open = _next_code(tokens, i)
+        f_open = next_code(tokens, i)
         if (
             f_open < n
             and tokens[f_open].kind == "op"
             and tokens[f_open].text == "("
         ):
-            f_close = _matching_paren(tokens, f_open)
+            f_close = closing(tokens, f_open)
             return (
                 " FILTER " + _sql(tokens, f_open, f_close + 1),
                 f_close + 1,
@@ -4013,7 +3903,7 @@ def _operand_is_listish(code: List[Token]) -> bool:
         len(code) >= 3
         and code[0].kind == "op" and code[0].text == "("
         and code[-1].kind == "op" and code[-1].text == ")"
-        and _matching_paren(code, 0) == len(code) - 1
+        and closing(code, 0) == len(code) - 1
     ):
         code = code[1:-1]
     return bool(
@@ -4033,12 +3923,12 @@ def _forward_operand_end(tokens: List[Token], j: int) -> int:
     if t.kind == "string":
         k = j + 1
     elif t.kind == "op" and t.text == "(":
-        k = _matching_paren(tokens, j) + 1
+        k = closing(tokens, j) + 1
     elif t.kind in ("word", "bident", "qident"):
         if t.upper in ("CASE", "NOT", "EXISTS", "SELECT", "INTERVAL"):
             return -1
         k = j + 1
-        nk = _next_code(tokens, j)
+        nk = next_code(tokens, j)
         if (
             t.upper in ("DATE", "TIME", "TIMESTAMP", "TIMESTAMPTZ")
             and nk < n
@@ -4047,7 +3937,7 @@ def _forward_operand_end(tokens: List[Token], j: int) -> int:
             # typed literal: DATE '2020-01-02' is one primary
             k = nk + 1
         elif nk < n and tokens[nk].kind == "op" and tokens[nk].text == "(":
-            k = _matching_paren(tokens, nk) + 1
+            k = closing(tokens, nk) + 1
     else:
         return -1
     # postfix chains
@@ -4058,32 +3948,25 @@ def _forward_operand_end(tokens: List[Token], j: int) -> int:
         if nk >= n or tokens[nk].kind != "op":
             return k
         if tokens[nk].text == ".":
-            nk2 = _next_code(tokens, nk)
+            nk2 = next_code(tokens, nk)
             if nk2 < n and tokens[nk2].kind in ("word", "bident", "qident"):
                 k = nk2 + 1
                 continue
             return k
         if tokens[nk].text == "::":
-            nk2 = _next_code(tokens, nk)
+            nk2 = next_code(tokens, nk)
             if nk2 < n and tokens[nk2].kind == "word":
                 k = nk2 + 1
-                nk3 = _next_code(tokens, nk2)
+                nk3 = next_code(tokens, nk2)
                 if nk3 < n and tokens[nk3].kind == "op" and tokens[nk3].text == "(":
-                    k = _matching_paren(tokens, nk3) + 1
+                    k = closing(tokens, nk3) + 1
                 continue
             return k
         if tokens[nk].text == "[":
-            d = 0
-            for m in range(nk, n):
-                if tokens[m].kind == "op" and tokens[m].text == "[":
-                    d += 1
-                elif tokens[m].kind == "op" and tokens[m].text == "]":
-                    d -= 1
-                    if d == 0:
-                        k = m + 1
-                        break
-            else:
+            m = closing(tokens, nk)
+            if m == n:
                 return k
+            k = m + 1
             continue
         return k
 
@@ -4115,7 +3998,7 @@ def _rewrite_pipe_concat_casts(tokens: List[Token]) -> List[Token]:
     while i < n:
         tok = tokens[i]
         if tok.kind == "op" and tok.text == "||" and i not in in_lambda:
-            j = _next_code(tokens, i)
+            j = next_code(tokens, i)
             if j < n:
                 r_end = _forward_operand_end(tokens, j)
             else:
@@ -4134,7 +4017,7 @@ def _rewrite_pipe_concat_casts(tokens: List[Token]) -> List[Token]:
                     and tokens[nk].text != "||"
                 ):
                     break
-                nj = _next_code(tokens, nk)
+                nj = next_code(tokens, nk)
                 nxt = _forward_operand_end(tokens, nj) if nj < n else -1
                 if nxt <= 0:
                     r_end = -1
@@ -4381,24 +4264,24 @@ def _rewrite_filter_to_case(tokens: List[Token]) -> List[Token]:
             p -= 1
         if p >= 0 and out[p].kind == "op" and out[p].text == ".":
             return None  # dotted
-        p_open = _next_code(tokens, i)
+        p_open = next_code(tokens, i)
         if not (
             p_open < n and tokens[p_open].kind == "op" and tokens[p_open].text == "("
         ):
             return None
-        close = _matching_paren(tokens, p_open)
-        f_kw = _next_code(tokens, close)
+        close = closing(tokens, p_open)
+        f_kw = next_code(tokens, close)
         if not (f_kw < n and tokens[f_kw].is_kw("FILTER")):
             return None
-        f_open = _next_code(tokens, f_kw)
+        f_open = next_code(tokens, f_kw)
         if not (
             f_open < n and tokens[f_open].kind == "op" and tokens[f_open].text == "("
         ):
             return None
-        f_close = _matching_paren(tokens, f_open)
-        cond_lo = _next_code(tokens, f_open)
+        f_close = closing(tokens, f_open)
+        cond_lo = next_code(tokens, f_open)
         if cond_lo < n and tokens[cond_lo].is_kw("WHERE"):
-            cond_lo = _next_code(tokens, cond_lo)
+            cond_lo = next_code(tokens, cond_lo)
         cond = _sql(tokens, cond_lo, f_close)
         inner = _rewrite_filter_to_case(tokens[p_open + 1 : close])
         core, is_distinct = _split_distinct_prefix("".join(tk.text for tk in inner))
@@ -4419,7 +4302,7 @@ def _rewrite_filter_shorthand(tokens: List[Token]) -> List[Token]:
     def lower(tokens, i, out):
         n = len(tokens)
         prev = next((t for t in reversed(out) if t.kind not in ("ws", "comment")), None)
-        p_open = _next_code(tokens, i)
+        p_open = next_code(tokens, i)
         if (
             prev is not None
             and prev.kind == "op"
@@ -4428,7 +4311,7 @@ def _rewrite_filter_shorthand(tokens: List[Token]) -> List[Token]:
             and tokens[p_open].kind == "op"
             and tokens[p_open].text == "("
         ):
-            first = _next_code(tokens, p_open)
+            first = next_code(tokens, p_open)
             if first < n and not tokens[first].is_kw("WHERE"):
                 out.extend(tokens[i: p_open + 1])
                 out.extend(_toks("WHERE "))
@@ -4450,15 +4333,7 @@ def _rewrite_order_null_ordering(tokens: List[Token]) -> List[Token]:
         code = [t for t in item if t.kind not in ("ws", "comment")]
         # top-level NULLS only (a nested OVER's NULLS clause must not
         # mask the outer item's default)
-        d = 0
-        has_nulls = False
-        for t in item:
-            if t.kind == "op" and t.text == "(":
-                d += 1
-            elif t.kind == "op" and t.text == ")":
-                d -= 1
-            elif d == 0 and t.is_kw("NULLS"):
-                has_nulls = True
+        has_nulls = any(t.is_kw("NULLS") for _, t in top_level(item))
         is_all = len(code) == 1 and code[0].is_kw("ALL")
         desc = bool(code) and code[-1].is_kw("DESC")
         # recurse: subqueries / window calls inside the item
@@ -4468,33 +4343,23 @@ def _rewrite_order_null_ordering(tokens: List[Token]) -> List[Token]:
 
     def lower(tokens, i, out):
         n = len(tokens)
-        by_i = _next_code(tokens, i)
+        by_i = next_code(tokens, i)
         if not (by_i < n and tokens[by_i].is_kw("BY")):
             return None
         out.extend(tokens[i: by_i + 1])
-        j = by_i + 1
-        item: List[Token] = []
-        depth = 0
-        while j < n:
-            t = tokens[j]
-            if t.kind == "op" and t.text == "(":
-                depth += 1
-            elif t.kind == "op" and t.text == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif depth == 0 and t.kind == "op" and t.text == ",":
-                flush(item, out)
-                item = []
-                out.append(t)
-                j += 1
-                continue
-            elif depth == 0 and t.kind == "word" and t.upper in _ORDER_LIST_TERMINATORS:
-                break
-            item.append(t)
-            j += 1
-        flush(item, out)
-        return j
+        end = closing(tokens, by_i)
+        end = next(
+            (
+                j for j, t in top_level(tokens, by_i + 1, end)
+                if t.kind == "word" and t.upper in _ORDER_LIST_TERMINATORS
+            ),
+            end,
+        )
+        for a, b in split_top_commas(tokens, by_i + 1, end):
+            flush(tokens[a:b], out)
+            if b < end:
+                out.append(tokens[b])  # the comma
+        return end
 
     return _lower_sites(tokens, {"order"}, lower)
 
@@ -4522,10 +4387,10 @@ def _strip_product_call(arg: List[Token]) -> Optional[List[Token]]:
     j0 = code[0]
     if not (arg[j0].kind == "word" and arg[j0].text.lower() == "product"):
         return None
-    p_open = _next_code(arg, j0)
+    p_open = next_code(arg, j0)
     if p_open >= len(arg) or arg[p_open].text != "(":
         return None
-    close = _matching_paren(arg, p_open)
+    close = closing(arg, p_open)
     if close != code[-1]:
         return None
     inner_args = _call_args(arg, p_open, close)
@@ -4588,10 +4453,10 @@ def _rewrite_product_entropy(tokens: List[Token], windows=None) -> List[Token]:
     def lower(tokens, i, out):
         n = len(tokens)
         low = tokens[i].text.lower()
-        p_open = _next_code(tokens, i)
+        p_open = next_code(tokens, i)
         if not (p_open < n and tokens[p_open].text == "("):
             return None
-        close = _matching_paren(tokens, p_open)
+        close = closing(tokens, p_open)
         args = _call_args(tokens, p_open, close)
         if low == "round":
             # round(product(x), n) needs the sign applied OUTSIDE the
@@ -4607,7 +4472,7 @@ def _rewrite_product_entropy(tokens: List[Token], windows=None) -> List[Token]:
             return close + 1
         if len(args) != 1:
             return None
-        after = _next_code(tokens, close)
+        after = next_code(tokens, close)
         if after < n and tokens[after].is_kw("OVER"):
             # window form: product composes for ANY frame; entropy for
             # full-partition frames (per-value counts need the (keys,
@@ -4692,12 +4557,12 @@ def _entropy_calls_in_item(item: List[Token], fname: str = "entropy",
     while i < n:
         t = item[i]
         if t.kind == "op" and t.text == "(":
-            fc = _next_code(item, i)
+            fc = next_code(item, i)
             if fc < n and item[fc].kind == "word" and item[fc].upper in (
                 "SELECT",
                 "WITH",
             ):
-                i = _matching_paren(item, i) + 1
+                i = closing(item, i) + 1
                 continue
             stack.append("(")
             i += 1
@@ -4708,10 +4573,10 @@ def _entropy_calls_in_item(item: List[Token], fname: str = "entropy",
             i += 1
             continue
         if t.kind == "word":
-            nxt = _next_code(item, i)
+            nxt = next_code(item, i)
             if nxt < n and item[nxt].text == "(":
                 low = t.text.lower()
-                close = _matching_paren(item, nxt)
+                close = closing(item, nxt)
                 if low == fname:
                     if any(fn in context for fn in stack):
                         return None
@@ -4733,17 +4598,10 @@ def _entropy_outer_name(item: List[Token]) -> Optional[str]:
     alias, or the final segment of a bare (dotted) column; None for an
     unaliased expression (output name would change — fall back)."""
     alias = None
-    depth = 0
     code = [j for j, t in enumerate(item) if t.kind not in ("ws", "comment")]
-    for pos, j in enumerate(code):
-        t = item[j]
-        if t.kind == "op" and t.text in ("(", "["):
-            depth += 1
-        elif t.kind == "op" and t.text in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t.kind == "word" and t.upper == "AS":
-            if pos + 1 < len(code):
-                alias = item[code[pos + 1]].text
+    for j, t in top_level(item):
+        if t.kind == "word" and t.upper == "AS" and next_code(item, j) < len(item):
+            alias = item[next_code(item, j)].text
     if alias is not None:
         return alias
     text = "".join(t.text for t in item).strip()
@@ -4755,10 +4613,11 @@ def _entropy_outer_name(item: List[Token]) -> Optional[str]:
 def _entropy_order_tail_ok(tokens: List[Token], order_idx: int, end: int) -> bool:
     """ORDER BY terms must be plain identifiers or ordinals so they
     still resolve in the restructured outer query."""
-    by = _next_code(tokens, order_idx)
-    body = _sql(tokens, by + 1, end)
-    for term in _split_csv_text(body):
-        words = term.split()
+    by = next_code(tokens, order_idx)
+    for a, b in split_top_commas(tokens, by + 1, end):
+        words = _sql(tokens, a, b).split()
+        if not words:
+            continue
         while words and words[-1].upper() in ("ASC", "DESC", "FIRST", "LAST"):
             if words[-1].upper() in ("FIRST", "LAST"):
                 words = words[:-1]
@@ -4790,39 +4649,39 @@ def _replace_clause_aggs(
     while i < n_:
         t = seg[i]
         if t.kind == "word":
-            nk = _next_code(seg, i)
+            nk = next_code(seg, i)
             if (
                 nk < n_
                 and seg[nk].kind == "op"
                 and seg[nk].text == "("
                 and t.text.lower() in aggset
             ):
-                close = _matching_paren(seg, nk)
+                close = closing(seg, nk)
                 if close < 0:
                     return None
                 end = close
                 while True:  # WITHIN GROUP (...) / FILTER (...) riders
-                    after = _next_code(seg, end)
+                    after = next_code(seg, end)
                     if after < n_ and seg[after].is_kw("WITHIN"):
-                        g = _next_code(seg, after)
-                        p = _next_code(seg, g) if g < n_ else n_
+                        g = next_code(seg, after)
+                        p = next_code(seg, g) if g < n_ else n_
                         if (
                             g < n_
                             and seg[g].is_kw("GROUP")
                             and p < n_
                             and seg[p].text == "("
                         ):
-                            end = _matching_paren(seg, p)
+                            end = closing(seg, p)
                             continue
                         return None
                     if after < n_ and seg[after].is_kw("FILTER"):
-                        p = _next_code(seg, after)
+                        p = next_code(seg, after)
                         if p < n_ and seg[p].text == "(":
-                            end = _matching_paren(seg, p)
+                            end = closing(seg, p)
                             continue
                         return None
                     break
-                after = _next_code(seg, end)
+                after = next_code(seg, end)
                 if after < n_ and seg[after].is_kw("OVER"):
                     return None
                 call = "".join(x.text for x in seg[i : end + 1])
@@ -4833,17 +4692,17 @@ def _replace_clause_aggs(
                 continue
             if t.is_kw("OVER"):
                 return None
-        nk = _next_code(seg, i)
+        nk = next_code(seg, i)
         is_call = nk < n_ and seg[nk].kind == "op" and seg[nk].text == "("
         if t.kind in ("word", "bident", "qident") and not is_call:
             end = i  # dotted chain -> group-key export
-            j2 = _next_code(seg, i)
+            j2 = next_code(seg, i)
             while j2 < n_ and seg[j2].kind == "op" and seg[j2].text == ".":
-                j2 = _next_code(seg, j2)
+                j2 = next_code(seg, j2)
                 if j2 >= n_:
                     break
                 end = j2
-                j2 = _next_code(seg, j2)
+                j2 = next_code(seg, j2)
             last = unquote_name(seg[end]).lower()
             if last in keymap:
                 out.append(keymap[last])
@@ -4965,7 +4824,7 @@ def _rewrite_aggfn_groupby(tokens: List[Token], spec: dict) -> List[Token]:
     context = spec["context"]
     tag = spec.get("tag", "")
     n = len(tokens)
-    first = _next_code(tokens, -1)
+    first = next_code(tokens, -1)
     if first >= n or tokens[first].kind != "word":
         return tokens
     if not any(
@@ -4973,14 +4832,8 @@ def _rewrite_aggfn_groupby(tokens: List[Token], spec: dict) -> List[Token]:
     ):
         return tokens
     if tokens[first].upper == "WITH":
-        depth = 0
-        for j in range(first + 1, n):
-            t = tokens[j]
-            if t.kind == "op" and t.text in ("(", "["):
-                depth += 1
-            elif t.kind == "op" and t.text in (")", "]"):
-                depth -= 1
-            elif depth == 0 and t.kind == "word" and t.upper == "SELECT":
+        for j, t in top_level(tokens, first + 1):
+            if t.kind == "word" and t.upper == "SELECT":
                 return tokens[:j] + _rewrite_aggfn_groupby(
                     tokens[j:], spec
                 )
@@ -4989,21 +4842,11 @@ def _rewrite_aggfn_groupby(tokens: List[Token], spec: dict) -> List[Token]:
         return tokens
 
     # set operations: each branch restructures independently
-    depth = 0
-    for j in range(first + 1, n):
-        t = tokens[j]
-        if t.kind == "op" and t.text in ("(", "["):
-            depth += 1
-        elif t.kind == "op" and t.text in (")", "]"):
-            depth -= 1
-        elif (
-            depth == 0
-            and t.kind == "word"
-            and t.upper in ("UNION", "EXCEPT", "INTERSECT")
-        ):
-            k = _next_code(tokens, j)
+    for j, t in top_level(tokens, first + 1):
+        if t.kind == "word" and t.upper in ("UNION", "EXCEPT", "INTERSECT"):
+            k = next_code(tokens, j)
             if k < n and tokens[k].upper in ("ALL", "DISTINCT"):
-                k = _next_code(tokens, k)
+                k = next_code(tokens, k)
             return (
                 _rewrite_aggfn_groupby(tokens[:j], spec)
                 + tokens[j:k]
@@ -5011,14 +4854,8 @@ def _rewrite_aggfn_groupby(tokens: List[Token], spec: dict) -> List[Token]:
             )
 
     clause_idx: dict = {}
-    depth = 0
-    for j in range(first + 1, n):
-        t = tokens[j]
-        if t.kind == "op" and t.text in ("(", "["):
-            depth += 1
-        elif t.kind == "op" and t.text in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t.kind == "word":
+    for j, t in top_level(tokens, first + 1):
+        if t.kind == "word":
             u = t.upper
             if u == "GROUP":
                 # not the clause when part of "WITHIN GROUP (...)"
@@ -5051,7 +4888,7 @@ def _rewrite_aggfn_groupby(tokens: List[Token], spec: dict) -> List[Token]:
         return min(b for b in boundaries if b > idx)
 
     from_idx = clause_idx["FROM"]
-    sel_lo = _next_code(tokens, first)
+    sel_lo = next_code(tokens, first)
     if sel_lo < n and tokens[sel_lo].upper in ("DISTINCT", "ALL"):
         return tokens
 
@@ -5066,12 +4903,12 @@ def _rewrite_aggfn_groupby(tokens: List[Token], spec: dict) -> List[Token]:
     keys: List[str] = []
     if "GROUP" in clause_idx:
         g_idx = clause_idx["GROUP"]
-        by = _next_code(tokens, g_idx)
+        by = next_code(tokens, g_idx)
         if by >= n or tokens[by].upper != "BY":
             return tokens
         g_end = clause_end(g_idx)
         gsel_items: List[tuple] = []
-        for ilo, ihi in _split_top_commas(tokens, sel_lo, from_idx):
+        for ilo, ihi in split_top_commas(tokens, sel_lo, from_idx):
             seg = tokens[ilo:ihi]
             code = [
                 j for j, t in enumerate(seg)
@@ -5101,7 +4938,7 @@ def _rewrite_aggfn_groupby(tokens: List[Token], spec: dict) -> List[Token]:
                     continue
                 if tt.upper in ("SELECT", "OVER"):
                     return False
-                nk2 = _next_code(ktoks, kk)
+                nk2 = next_code(ktoks, kk)
                 if (
                     nk2 < len(ktoks)
                     and ktoks[nk2].kind == "op"
@@ -5111,8 +4948,10 @@ def _rewrite_aggfn_groupby(tokens: List[Token], spec: dict) -> List[Token]:
                     return False
             return True
 
-        for term in _split_csv_text(_sql(tokens, by + 1, g_end)):
-            t_strip = term.strip()
+        for a, b in split_top_commas(tokens, by + 1, g_end):
+            t_strip = _sql(tokens, a, b)
+            if not t_strip:
+                continue
             if t_strip.upper() == "ALL":
                 return tokens
             if re.fullmatch(r"\d+", t_strip):
@@ -5175,7 +5014,7 @@ def _rewrite_aggfn_groupby(tokens: List[Token], spec: dict) -> List[Token]:
     ):
         return tokens
 
-    items = _split_top_commas(tokens, sel_lo, from_idx)
+    items = split_top_commas(tokens, sel_lo, from_idx)
     ent_args: List[str] = []  # distinct argument SQL, in first-seen order
     arg_ids: dict = {}
     outer_items: List[str] = []
@@ -5205,7 +5044,7 @@ def _rewrite_aggfn_groupby(tokens: List[Token], spec: dict) -> List[Token]:
         for j, t in enumerate(item):
             if in_span(j) or t.kind != "word":
                 continue
-            nxt = _next_code(item, j)
+            nxt = next_code(item, j)
             if (
                 nxt < len(item)
                 and item[nxt].text == "("
@@ -5479,20 +5318,14 @@ def _from_wrap(tokens: List[Token], word: str, classify, lower, alias: str):
         return tokens
     if not any(t.kind == "word" and t.upper == "OVER" for t in tokens):
         return tokens
-    first = _next_code(tokens, -1)
+    first = next_code(tokens, -1)
     if first >= n or tokens[first].upper not in ("WITH", "SELECT"):
         return tokens
     from_idx = setop = None
     tail_idx = n
     bail = False
-    depth = 0
-    for j in range(first + 1, n):
-        t = tokens[j]
-        if t.kind == "op" and t.text in ("(", "["):
-            depth += 1
-        elif t.kind == "op" and t.text in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t.kind == "word":
+    for j, t in top_level(tokens, first + 1):
+        if t.kind == "word":
             u = t.upper
             if tokens[first].upper == "WITH":
                 if u == "SELECT":
@@ -5515,11 +5348,11 @@ def _from_wrap(tokens: List[Token], word: str, classify, lower, alias: str):
             elif u in ("ORDER", "LIMIT", "OFFSET") and from_idx is not None:
                 tail_idx = j
     if setop is not None:
-        k = _next_code(tokens, setop)
+        k = next_code(tokens, setop)
         if k < n and tokens[k].upper in ("ALL", "DISTINCT"):
-            k = _next_code(tokens, k)
+            k = next_code(tokens, k)
         if k < n and tokens[k].upper == "BY":  # UNION BY NAME
-            k = _next_code(tokens, _next_code(tokens, k))
+            k = next_code(tokens, next_code(tokens, k))
         return (
             _from_wrap(tokens[:setop], word, classify, lower, alias)
             + tokens[setop:k]
@@ -5527,11 +5360,11 @@ def _from_wrap(tokens: List[Token], word: str, classify, lower, alias: str):
         )
     if tokens[first].upper == "WITH" or bail or from_idx is None:
         return tokens
-    sel_start = _next_code(tokens, first)
+    sel_start = next_code(tokens, first)
     distinct = ""
     if sel_start < n and tokens[sel_start].upper in ("DISTINCT", "ALL"):
         distinct = tokens[sel_start].upper + " "
-        sel_start = _next_code(tokens, sel_start)
+        sel_start = next_code(tokens, sel_start)
 
     def scan(lo: int, hi: int):
         """Candidates in [lo, hi), or None on a bail. Subquery parens
@@ -5541,11 +5374,11 @@ def _from_wrap(tokens: List[Token], word: str, classify, lower, alias: str):
         while i < hi:
             t = tokens[i]
             if t.kind == "op" and t.text == "(":
-                k = _next_code(tokens, i)
+                k = next_code(tokens, i)
                 if k < n and tokens[k].kind == "word" and tokens[k].upper in (
                     "SELECT", "WITH", "FROM",
                 ):
-                    i = _matching_paren(tokens, i) + 1
+                    i = closing(tokens, i) + 1
                     continue
             elif t.kind == "op" and t.text == ".":
                 # engine-emitted lambda-var dots (__rb.x and friends)
@@ -5630,9 +5463,9 @@ def _madw_classify(tokens: List[Token], i: int):
             cand = (i, call.end, arg, call.spec.partition, temporal)
             return call.end, cand if full else None
     if low in _MADW_AGG_NAMES:
-        p_open = _next_code(tokens, i)
+        p_open = next_code(tokens, i)
         if p_open < len(tokens) and tokens[p_open].text == "(":
-            after = _next_code(tokens, _matching_paren(tokens, p_open))
+            after = next_code(tokens, closing(tokens, p_open))
             if not (after < len(tokens) and tokens[after].is_kw("OVER")):
                 return "bail"
     return None
@@ -5768,21 +5601,7 @@ def _relocate_nonwindow_items(
     window alias) stay outer. Moved aliases join ``helper_names`` so
     a bare ``*`` item excludes them. Returns
     (outer_select_text, moved_item_texts)."""
-    items = []
-    d = 0
-    a = sel_start
-    i = sel_start
-    while i < from_idx:
-        t = tokens[i]
-        if t.kind == "op" and t.text in ("(", "["):
-            d += 1
-        elif t.kind == "op" and t.text in (")", "]"):
-            d -= 1
-        elif d == 0 and t.kind == "op" and t.text == ",":
-            items.append((a, i))
-            a = i + 1
-        i += 1
-    items.append((a, from_idx))
+    items = split_top_commas(tokens, sel_start, from_idx)
 
     def item_alias(lo: int, hi: int):
         code = [
@@ -5792,14 +5611,9 @@ def _relocate_nonwindow_items(
         ]
         if len(code) < 3:
             return None
-        d2 = 0
         as_at = None
-        for pos, (k, t) in enumerate(code):
-            if t.kind == "op" and t.text in ("(", "["):
-                d2 += 1
-            elif t.kind == "op" and t.text in (")", "]"):
-                d2 -= 1
-            elif d2 == 0 and t.is_kw("AS"):
+        for pos, t in top_level([t for _, t in code]):
+            if t.is_kw("AS"):
                 as_at = pos
         if (
             as_at is not None
@@ -5952,7 +5766,7 @@ def _innermost_first(rewrite, **kwargs):
         while i < n:
             tok = tokens[i]
             if tok.kind == "op" and tok.text == "(":
-                close = _matching_paren(tokens, i)
+                close = closing(tokens, i)
                 if close > i:
                     out.append(tok)
                     out.extend(run(tokens[i + 1 : close]))
@@ -5978,9 +5792,9 @@ def _named_windows(tokens: List[Token]) -> dict:
             continue
         j = i
         while True:  # name AS (spec) [, name AS (spec) ...]
-            nm = _next_code(tokens, j)
-            as_kw = _next_code(tokens, nm)
-            op = _next_code(tokens, as_kw)
+            nm = next_code(tokens, j)
+            as_kw = next_code(tokens, nm)
+            op = next_code(tokens, as_kw)
             if not (
                 op < n
                 and tokens[nm].kind in ("word", "bident", "qident")
@@ -5988,9 +5802,9 @@ def _named_windows(tokens: List[Token]) -> dict:
                 and tokens[op].text == "("
             ):
                 break
-            close = _matching_paren(tokens, op)
+            close = closing(tokens, op)
             body = tokens[op + 1 : close]
-            head = body[_next_code(body, -1) :][:1]
+            head = body[next_code(body, -1) :][:1]
             plain = not head or head[0].is_kw(
                 "PARTITION", "ORDER", "ROWS", "RANGE", "GROUPS"
             )
@@ -6000,7 +5814,7 @@ def _named_windows(tokens: List[Token]) -> dict:
                 and _sql(out[key], 0, len(out[key])) == _sql(body, 0, len(body))
             )
             out[key] = body if plain and same else None
-            j = _next_code(tokens, close)
+            j = next_code(tokens, close)
             if not (j < n and tokens[j].text == ","):
                 break
     return out
@@ -6063,17 +5877,17 @@ def _call_site(tokens: List[Token], i: int, windows=None, in_py_udf=False):
     p = i - 1
     while p >= 0 and tokens[p].kind in ("ws", "comment"):
         p -= 1
-    p_open = _next_code(tokens, i)
+    p_open = next_code(tokens, i)
     if not (p_open < n and tokens[p_open].kind == "op" and tokens[p_open].text == "("):
         return None
-    close = _matching_paren(tokens, p_open)
+    close = closing(tokens, p_open)
     site = _CallSite(
         tokens, i, p_open, close, tokens[p] if p >= 0 else None, in_py_udf
     )
-    after = _next_code(tokens, close)
+    after = next_code(tokens, close)
     if after < n and tokens[after].is_kw("WITHIN"):
-        g_kw = _next_code(tokens, after)
-        g_open = _next_code(tokens, g_kw)
+        g_kw = next_code(tokens, after)
+        g_open = next_code(tokens, g_kw)
         if not (
             site.name in _WITHIN_GROUP_FNS
             and g_open < n
@@ -6082,7 +5896,7 @@ def _call_site(tokens: List[Token], i: int, windows=None, in_py_udf=False):
         ):
             site.plain = False
             return site
-        g_close = _matching_paren(tokens, g_open)
+        g_close = closing(tokens, g_open)
         code = [
             t for t in tokens[g_open + 1 : g_close]
             if t.kind not in ("ws", "comment")
@@ -6098,7 +5912,7 @@ def _call_site(tokens: List[Token], i: int, windows=None, in_py_udf=False):
             if key and not desc:
                 site.within = ("".join(t.text for t in key).strip(), distinct)
         site.end = g_close + 1
-        after = _next_code(tokens, g_close)
+        after = next_code(tokens, g_close)
     if after < n and tokens[after].is_kw("OVER"):
         site.over = True
         site.spec_body, site.end = _over_spec(tokens, after, windows)
@@ -6111,9 +5925,9 @@ def _over_spec(tokens: List[Token], k: int, windows=None):
     callable returning ``_named_windows``); None when unresolved.
     ``end`` is the index past the spec."""
     n = len(tokens)
-    sp = _next_code(tokens, k)
+    sp = next_code(tokens, k)
     if sp < n and tokens[sp].kind == "op" and tokens[sp].text == "(":
-        end = _matching_paren(tokens, sp) + 1
+        end = closing(tokens, sp) + 1
         return tokens[sp + 1 : end - 1], end
     body = None
     if sp < n and windows is not None and tokens[sp].kind in (
@@ -7089,12 +6903,12 @@ def _capture_operand(tokens: List[Token], i: int) -> int:
     n = len(tokens)
     j = i
     while j < n and tokens[j].kind == "op" and tokens[j].text in ("+", "-"):
-        j = _next_code(tokens, j)
+        j = next_code(tokens, j)
     if j >= n:
         return j
     t = tokens[j]
     if t.kind == "op" and t.text == "(":
-        j = _matching_paren(tokens, j) + 1
+        j = closing(tokens, j) + 1
     elif t.is_kw("CASE"):
         # CASE ... END is a primary: scan to the matching END (CASE
         # nests inside WHEN/THEN branches)
@@ -7111,62 +6925,62 @@ def _capture_operand(tokens: List[Token], i: int) -> int:
             k += 1
         j = min(k + 1, n)
     elif t.kind in ("word", "bident", "qident", "number", "string"):
-        nxt = _next_code(tokens, j)
+        nxt = next_code(tokens, j)
         if (
             t.kind in ("word", "bident", "qident")
             and nxt < n
             and tokens[nxt].kind == "op"
             and tokens[nxt].text == "("
         ):
-            j = _matching_paren(tokens, nxt) + 1
+            j = closing(tokens, nxt) + 1
         else:
             j += 1
     else:
         return j + 1
     # postfix pieces
     while True:
-        k = _next_code(tokens, j - 1)
+        k = next_code(tokens, j - 1)
         if k >= n:
             return j
         t = tokens[k]
         if t.kind == "op" and t.text == ".":
-            m = _next_code(tokens, k)
+            m = next_code(tokens, k)
             if m < n and tokens[m].kind in ("word", "bident", "qident"):
                 j = m + 1
                 continue
             return j
         if t.kind == "op" and t.text == "[":
-            j = _matching_paren(tokens, k) + 1
+            j = closing(tokens, k) + 1
             continue
         if t.kind == "op" and t.text == "::":
-            m = _next_code(tokens, k)
+            m = next_code(tokens, k)
             if m < n and tokens[m].kind == "word":
-                p = _next_code(tokens, m)
+                p = next_code(tokens, m)
                 if p < n and tokens[p].kind == "op" and tokens[p].text == "(":
-                    j = _matching_paren(tokens, p) + 1
+                    j = closing(tokens, p) + 1
                 else:
                     j = m + 1
                 continue
             return j
         if t.kind == "word" and t.upper in ("FILTER", "OVER"):
-            m = _next_code(tokens, k)
+            m = next_code(tokens, k)
             if m < n and tokens[m].kind == "op" and tokens[m].text == "(":
-                j = _matching_paren(tokens, m) + 1
+                j = closing(tokens, m) + 1
                 continue
             if t.upper == "OVER" and m < n and tokens[m].kind == "word":
                 j = m + 1  # named window
                 continue
             return j
         if t.kind == "word" and t.upper == "WITHIN":
-            m = _next_code(tokens, k)
+            m = next_code(tokens, k)
             if m < n and tokens[m].is_kw("GROUP"):
-                p = _next_code(tokens, m)
+                p = next_code(tokens, m)
                 if p < n and tokens[p].kind == "op" and tokens[p].text == "(":
-                    j = _matching_paren(tokens, p) + 1
+                    j = closing(tokens, p) + 1
                     continue
             return j
         if t.kind == "word" and t.upper in ("IGNORE", "RESPECT"):
-            m = _next_code(tokens, k)
+            m = next_code(tokens, k)
             if m < n and tokens[m].is_kw("NULLS"):
                 j = m + 1
                 continue
@@ -7485,7 +7299,7 @@ def _rewrite_glob(tokens: List[Token]) -> List[Token]:
     anchored RLIKE. Dynamic patterns pass through and fail loudly."""
 
     def lower(tokens, i, out):
-        j = _next_code(tokens, i)
+        j = next_code(tokens, i)
         if j < len(tokens) and tokens[j].kind == "string":
             # a preceding NOT composes naturally (x NOT RLIKE p)
             pat = _decode_spark_string(tokens[j])
@@ -7507,7 +7321,7 @@ def _rewrite_collations(tokens: List[Token]) -> List[Token]:
     through and fail loudly at parse."""
 
     def lower(tokens, i, out):
-        j = _next_code(tokens, i)
+        j = next_code(tokens, i)
         if j < len(tokens) and tokens[j].kind in ("word", "qident", "string"):
             name = _COLLATION_MAP.get(tokens[j].text.strip("\"'").lower())
             if name is not None:
@@ -7585,10 +7399,10 @@ def _rewrite_polymorphic_len(tokens: List[Token]) -> List[Token]:
             and tokens[first].kind == "word"
             and tokens[first].text.lower() in _LIST_VALUED_FNS
         ):
-            ip = _next_code(tokens, first)
+            ip = next_code(tokens, first)
             if ip < hi and tokens[ip].kind == "op" and tokens[ip].text == "(":
-                iclose = _matching_paren(tokens, ip)
-                nxt = _next_code(tokens, iclose)
+                iclose = closing(tokens, ip)
+                nxt = next_code(tokens, iclose)
                 if nxt >= hi:
                     return True
         if hintable:
@@ -7604,9 +7418,7 @@ def _rewrite_polymorphic_len(tokens: List[Token]) -> List[Token]:
         # chain (list concat when the operands are lists), must be
         # visibly list-valued: a list-producing call spanning the
         # operand, or an ARRAY-hinted plain column reference
-        pipes = _top_level_positions(
-            tokens, p + 1, close, lambda t: t.kind == "op" and t.text == "||"
-        )
+        pipes = [j for j, t in top_level(tokens, p + 1, close) if t.kind == "op" and t.text == "||"]
         bounds = [p + 1] + [q + 1 for q in pipes] + [close]
         spans = [
             (bounds[k], pipes[k] if k < len(pipes) else close)
@@ -7759,7 +7571,7 @@ def _rewrite_json_arrows(tokens: List[Token]) -> List[Token]:
                 stack.pop()
         elif tok.kind == "op" and tok.text in ("->", "->>"):
             if not (stack and stack[-1] in _LAMBDA_FNS):
-                j = _next_code(tokens, i)
+                j = next_code(tokens, i)
                 if j < n and tokens[j].kind in ("string", "number", "word"):
                     rt = tokens[j]
                     path = None
@@ -7817,7 +7629,7 @@ def _rewrite_division_double(tokens: List[Token]) -> List[Token]:
 
     def lower(tokens, i, out):
         tok = tokens[i]
-        j = _next_code(tokens, i)
+        j = next_code(tokens, i)
         if j >= len(tokens):
             return None
         end = _capture_operand(tokens, j)
@@ -8481,7 +8293,7 @@ def _contains_expanding_call(arg_tokens: List[Token]) -> bool:
     n = len(arg_tokens)
     for k, t in enumerate(arg_tokens):
         if t.kind == "word" and t.text.lower() in _EXPANDING_FNS:
-            nk = _next_code(arg_tokens, k)
+            nk = next_code(arg_tokens, k)
             if nk < n and arg_tokens[nk].kind == "op" \
                     and arg_tokens[nk].text == "(":
                 return True
@@ -8532,7 +8344,7 @@ def _snt_rec(code: List[Token], depth: int) -> Optional[str]:
     while (
         len(code) >= 3
         and code[0].kind == "op" and code[0].text == "("
-        and _matching_paren(code, 0) == len(code) - 1
+        and closing(code, 0) == len(code) - 1
     ):
         code = code[1:-1]
     while code and code[0].kind == "op" and code[0].text in ("+", "-"):
@@ -8541,21 +8353,13 @@ def _snt_rec(code: List[Token], depth: int) -> Optional[str]:
         return None
     # split on top-level binary + - * (a sign at a part start is unary)
     parts: List[List[Token]] = []
-    cur: List[Token] = []
-    d = 0
-    for t in code:
-        if t.kind == "op":
-            if t.text == "(":
-                d += 1
-            elif t.text == ")":
-                d -= 1
-            elif d == 0 and t.text in ("+", "-", "*"):
-                if cur:
-                    parts.append(cur)
-                    cur = []
-                continue
-        cur.append(t)
-    parts.append(cur)
+    start = 0
+    for j, t in top_level(code):
+        if t.kind == "op" and t.text in ("+", "-", "*"):
+            if j > start:
+                parts.append(code[start:j])
+            start = j + 1
+    parts.append(code[start:])
     if not parts[-1]:
         return None
     if len(parts) > 1:
@@ -8585,41 +8389,24 @@ def _snt_rec(code: List[Token], depth: int) -> Optional[str]:
         # loses the scale-keeping rendering (r12 fuzz find:
         # round(CASE WHEN .. THEN int_col ELSE 30.4846 END, 4)
         # rendered '147.0' where DuckDB keeps '147.0000').
-        exprs: List[List[Token]] = []
-        cur2 = None
-        d2 = 0
+        # this CASE's own WHEN/THEN/ELSE (cd counts nested CASEs)
+        marks = [(0, "WHEN")]
         cd = 0
-        i2 = 1
-        while i2 < len(c) - 1:
-            t2 = c[i2]
-            if t2.kind == "op":
-                if t2.text == "(":
-                    d2 += 1
-                elif t2.text == ")":
-                    d2 -= 1
-            if d2 == 0 and t2.kind == "word":
-                u = t2.upper
-                if u == "CASE":
-                    cd += 1
-                elif u == "END":
-                    cd -= 1
-                elif cd == 0 and u == "WHEN":
-                    if cur2 is not None:
-                        exprs.append(cur2)
-                        cur2 = None
-                    i2 += 1
-                    continue
-                elif cd == 0 and u in ("THEN", "ELSE"):
-                    if cur2 is not None:
-                        exprs.append(cur2)
-                    cur2 = []
-                    i2 += 1
-                    continue
-            if cur2 is not None:
-                cur2.append(t2)
-            i2 += 1
-        if cur2:
-            exprs.append(cur2)
+        for j, t2 in top_level(c, 1, len(c) - 1):
+            u = t2.upper if t2.kind == "word" else ""
+            if u == "CASE":
+                cd += 1
+            elif u == "END":
+                cd -= 1
+            elif cd == 0 and u in ("WHEN", "THEN", "ELSE"):
+                marks.append((j, u))
+        marks.append((len(c) - 1, "END"))
+        # the THEN/ELSE branches (a trailing empty one is no branch)
+        exprs = [
+            c[j + 1:k]
+            for (j, u), (k, _) in zip(marks, marks[1:])
+            if u != "WHEN" and (c[j + 1:k] or k < len(c) - 1)
+        ]
         tys = []
         for e in exprs:
             if (
@@ -8643,7 +8430,7 @@ def _snt_rec(code: List[Token], depth: int) -> Optional[str]:
         len(c) >= 3
         and c[0].kind == "word"
         and c[1].kind == "op" and c[1].text == "("
-        and _matching_paren(c, 1) == len(c) - 1
+        and closing(c, 1) == len(c) - 1
     ):
         fn = c[0].text.lower()
         args = _call_args(c, 1, len(c) - 1)
@@ -8926,13 +8713,13 @@ def _rewrite_integral_casts(tokens: List[Token]) -> List[Token]:
                 udf_spans is not None and i in udf_spans
             )
             if tok.kind == "word" and tok.text.lower() in ("cast", "try_cast"):
-                p_open = _next_code(tokens, i)
+                p_open = next_code(tokens, i)
                 if p_open < n and tokens[p_open].kind == "op" and tokens[p_open].text == "(":
-                    close = _matching_paren(tokens, p_open)
-                    as_i = _top_level_as(tokens, p_open, close)
+                    close = closing(tokens, p_open)
+                    as_i = next((j for j, t in top_level(tokens, p_open + 1, close) if t.is_kw("AS")), None)
                     if as_i is not None:
-                        ty = _next_code(tokens, as_i)
-                        ty_end = _next_code(tokens, ty)
+                        ty = next_code(tokens, as_i)
+                        ty_end = next_code(tokens, ty)
                         if (
                             ty < n
                             and tokens[ty].kind == "word"
@@ -8953,8 +8740,8 @@ def _rewrite_integral_casts(tokens: List[Token]) -> List[Token]:
                             i = close + 1
                             continue
             elif tok.kind == "op" and tok.text == "::":
-                ty = _next_code(tokens, i)
-                ty_end = _next_code(tokens, ty) if ty < n else n
+                ty = next_code(tokens, i)
+                ty_end = next_code(tokens, ty) if ty < n else n
                 if (
                     ty < n
                     and tokens[ty].kind == "word"
@@ -8986,20 +8773,6 @@ def _rewrite_integral_casts(tokens: List[Token]) -> List[Token]:
         return out
 
     return scan(tokens, False)
-
-
-def _top_level_as(tokens: List[Token], open_idx: int, close_idx: int):
-    """Index of the depth-1 AS keyword inside a CAST's parens."""
-    depth = 0
-    for j in range(open_idx, close_idx):
-        t = tokens[j]
-        if t.kind == "op" and t.text == "(":
-            depth += 1
-        elif t.kind == "op" and t.text == ")":
-            depth -= 1
-        elif depth == 1 and t.is_kw("AS"):
-            return j
-    return None
 
 
 def _rewrite_bare_types(tokens: List[Token]) -> List[Token]:
@@ -9080,9 +8853,9 @@ def _py_udf_arg_spans(tokens: List[Token]) -> set:
     n = len(tokens)
     for k, t in enumerate(tokens):
         if t.kind == "word" and t.text.lower() in _PY_UDF_FNS:
-            nk = _next_code(tokens, k)
+            nk = next_code(tokens, k)
             if nk < n and tokens[nk].kind == "op" and tokens[nk].text == "(":
-                close = _matching_paren(tokens, nk)
+                close = closing(tokens, nk)
                 if close > nk:
                     spans.update(range(nk, close + 1))
     return spans
@@ -9241,7 +9014,7 @@ def _render_static_type(code: List[Token]):
         len(code) >= 3
         and code[0].kind == "op"
         and code[0].text == "("
-        and _matching_paren(code, 0) == len(code) - 1
+        and closing(code, 0) == len(code) - 1
     ):
         code = code[1:-1]
     h = _cast_target_hint(code) or _hinted_primary_type(code)
@@ -9260,7 +9033,7 @@ def _render_static_type(code: List[Token]):
         and code[0].kind == "word"
         and code[1].kind == "op"
         and code[1].text == "("
-        and _matching_paren(code, 1) == len(code) - 1
+        and closing(code, 1) == len(code) - 1
     ):
         low = code[0].text.lower()
         if low in _STRING_VALUED_FNS:
@@ -9271,16 +9044,10 @@ def _render_static_type(code: List[Token]):
     # (the division rewrite forces float division like DuckDB, whose
     # `/` is always DOUBLE; `//` is the integer form) — unless an
     # INTERVAL is involved (interval / n stays interval)
-    if not any(t.kind == "word" and t.upper == "INTERVAL" for t in code):
-        depth = 0
-        for t in code:
-            if t.kind == "op":
-                if t.text in ("(", "["):
-                    depth += 1
-                elif t.text in (")", "]"):
-                    depth -= 1
-                elif depth == 0 and t.text == "/":
-                    return "double"
+    if not any(t.kind == "word" and t.upper == "INTERVAL" for t in code) and any(
+        t.kind == "op" and t.text == "/" for _, t in top_level(code)
+    ):
+        return "double"
     return None
 
 
@@ -9363,7 +9130,7 @@ def _static_interval_literal(op_code: List[Token]):
     while (
         len(code) >= 3
         and code[0].kind == "op" and code[0].text == "("
-        and _matching_paren(code, 0) == len(code) - 1
+        and closing(code, 0) == len(code) - 1
     ):
         code = code[1:-1]
     if not code:
@@ -9376,16 +9143,16 @@ def _static_interval_literal(op_code: List[Token]):
         while (
             len(sp) >= 3
             and sp[0].kind == "op" and sp[0].text == "("
-            and _matching_paren(sp, 0) == len(sp) - 1
+            and closing(sp, 0) == len(sp) - 1
         ):
             sp = sp[1:-1]
         if (
             len(sp) >= 4
             and sp[0].kind == "word" and sp[0].text.lower() == "cast"
             and sp[1].kind == "op" and sp[1].text == "("
-            and _matching_paren(sp, 1) == len(sp) - 1
+            and closing(sp, 1) == len(sp) - 1
         ):
-            as_i = _top_level_as(sp, 1, len(sp) - 1)
+            as_i = next((j for j, t in top_level(sp, 2, len(sp) - 1) if t.is_kw("AS")), None)
             if as_i is None:
                 return None
             return lit_of(sp[2:as_i])
@@ -9434,7 +9201,7 @@ def _static_interval_literal(op_code: List[Token]):
         and code[0].text.lower() in ("make_dt_interval", "make_ym_interval")
         and len(code) >= 3
         and code[1].kind == "op" and code[1].text == "("
-        and _matching_paren(code, 1) == len(code) - 1
+        and closing(code, 1) == len(code) - 1
     ):
         args = _call_args(code, 1, len(code) - 1)
         vals = []
@@ -9476,7 +9243,7 @@ def _static_varchar_cast(op_code: List[Token]):
         len(op_code) >= 3
         and op_code[0].kind == "op" and op_code[0].text == "("
         and op_code[-1].kind == "op" and op_code[-1].text == ")"
-        and _matching_paren(op_code, 0) == len(op_code) - 1
+        and closing(op_code, 0) == len(op_code) - 1
     ):
         op_code = op_code[1:-1]
     iv = _static_interval_literal(op_code)
@@ -9511,17 +9278,17 @@ def _values_spans(tokens: List[Token]) -> set:
     while i < n:
         t = tokens[i]
         if t.kind == "word" and t.upper == "VALUES":
-            j = _next_code(tokens, i)
+            j = next_code(tokens, i)
             while (
                 j < n
                 and tokens[j].kind == "op"
                 and tokens[j].text == "("
             ):
-                close = _matching_paren(tokens, j)
+                close = closing(tokens, j)
                 spans.update(range(j, close + 1))
-                k = _next_code(tokens, close)
+                k = next_code(tokens, close)
                 if k < n and tokens[k].kind == "op" and tokens[k].text == ",":
-                    j = _next_code(tokens, k)
+                    j = next_code(tokens, k)
                 else:
                     break
         i += 1
@@ -9537,16 +9304,9 @@ def _hof_lambda_spans(tokens: List[Token]) -> set:
     n = len(tokens)
     for idx, t in enumerate(tokens):
         if t.kind == "op" and t.text == "->":
-            depth = 0
-            for m in range(idx, n):
-                tm = tokens[m]
-                if tm.kind == "op" and tm.text == "(":
-                    depth += 1
-                elif tm.kind == "op" and tm.text == ")":
-                    if depth == 0:
-                        spans.update(range(idx, m))
-                        break
-                    depth -= 1
+            end = closing(tokens, idx)
+            if end < n:
+                spans.update(range(idx, end))
     return spans
 
 
@@ -9570,13 +9330,13 @@ def _rewrite_varchar_casts(tokens: List[Token]) -> List[Token]:
         while i < n:
             tok = tokens[i]
             if tok.kind == "word" and tok.text.lower() in ("cast", "try_cast"):
-                p_open = _next_code(tokens, i)
+                p_open = next_code(tokens, i)
                 if p_open < n and tokens[p_open].kind == "op" and tokens[p_open].text == "(":
-                    close = _matching_paren(tokens, p_open)
-                    as_i = _top_level_as(tokens, p_open, close)
+                    close = closing(tokens, p_open)
+                    as_i = next((j for j, t in top_level(tokens, p_open + 1, close) if t.is_kw("AS")), None)
                     if as_i is not None:
-                        ty = _next_code(tokens, as_i)
-                        ty_end = _next_code(tokens, ty) if ty < n else n
+                        ty = next_code(tokens, as_i)
+                        ty_end = next_code(tokens, ty) if ty < n else n
                         if (
                             ty < n
                             and tokens[ty].kind == "word"
@@ -9605,7 +9365,7 @@ def _rewrite_varchar_casts(tokens: List[Token]) -> List[Token]:
                             i = close + 1
                             continue
             elif tok.kind == "op" and tok.text == "::":
-                ty = _next_code(tokens, i)
+                ty = next_code(tokens, i)
                 if (
                     ty < n
                     and tokens[ty].kind == "word"
@@ -9671,12 +9431,12 @@ def _interval_literal_end(tokens: List[Token], i: int):
     ``INTERVAL '3' MONTH`` / ``INTERVAL (n) MONTH``), or None when the
     shape is not a literal."""
     n = len(tokens)
-    j = _next_code(tokens, i)
+    j = next_code(tokens, i)
     if j >= n:
         return None
     t = tokens[j]
     if t.kind == "string":
-        k = _next_code(tokens, j)
+        k = next_code(tokens, j)
         if (
             k < n
             and tokens[k].kind == "word"
@@ -9685,8 +9445,8 @@ def _interval_literal_end(tokens: List[Token], i: int):
             return k + 1
         return j + 1
     if t.kind == "op" and t.text == "(":
-        close = _matching_paren(tokens, j)
-        k = _next_code(tokens, close)
+        close = closing(tokens, j)
+        k = next_code(tokens, close)
         if (
             k < n
             and tokens[k].kind == "word"
@@ -9695,7 +9455,7 @@ def _interval_literal_end(tokens: List[Token], i: int):
             return k + 1
         return None
     if t.kind == "word" and _NUM_LITERAL_RE.match(t.text):
-        k = _next_code(tokens, j)
+        k = next_code(tokens, j)
         if (
             k < n
             and tokens[k].kind == "word"
@@ -9712,7 +9472,7 @@ def _interval_valued_operand(operand: List[Token]) -> bool:
         len(code) >= 3
         and code[0].kind == "op" and code[0].text == "("
         and code[-1].kind == "op" and code[-1].text == ")"
-        and _matching_paren(code, 0) == len(code) - 1
+        and closing(code, 0) == len(code) - 1
     ):
         code = code[1:-1]
     if not code:
@@ -9740,7 +9500,7 @@ def _rewrite_date_interval_add(tokens: List[Token]) -> List[Token]:
 
     def lower(tokens, i, out):
         tok = tokens[i]
-        j = _next_code(tokens, i)
+        j = next_code(tokens, i)
         if not (j < len(tokens) and tokens[j].is_kw("INTERVAL")):
             return None
         end = _interval_literal_end(tokens, j)
@@ -9781,26 +9541,6 @@ def _rewrite_date_interval_add(tokens: List[Token]) -> List[Token]:
 _QUALIFY_TERMINATORS = {"ORDER", "LIMIT", "UNION", "EXCEPT", "INTERSECT", "OFFSET"}
 
 
-def _split_csv_text(text: str) -> List[str]:
-    """Split SQL text on top-level commas."""
-    parts: List[str] = []
-    cur: List[Token] = []
-    depth = 0
-    for t in tokenize(text):
-        if t.kind == "op" and t.text in ("(", "["):
-            depth += 1
-        elif t.kind == "op" and t.text in (")", "]"):
-            depth -= 1
-        if t.kind == "op" and t.text == "," and depth == 0:
-            parts.append("".join(x.text for x in cur).strip())
-            cur = []
-        else:
-            cur.append(t)
-    if cur:
-        parts.append("".join(x.text for x in cur).strip())
-    return [p for p in parts if p]
-
-
 def _plain_identifier_name(text: str) -> str | None:
     """Final segment of a bare (possibly dotted) identifier, else None."""
     code = [t for t in tokenize(text) if t.kind not in ("ws", "comment")]
@@ -9823,20 +9563,18 @@ def _order_terms_survive(win_order: str, select_list: str) -> bool:
     exposes (by output name/alias, or via a ``*`` wildcard item)."""
     exposed: set[str] = set()
     wildcard = False
-    for item in _split_csv_text(select_list):
-        stripped = item.strip()
-        if stripped == "*" or stripped.endswith(".*"):
+    sel = tokenize(select_list)
+    for a, b in split_top_commas(sel, 0, len(sel)):
+        item = _sql(sel, a, b)
+        if not item:
+            continue
+        if item == "*" or item.endswith(".*"):
             wildcard = True
             continue
-        code = [t for t in tokenize(item) if t.kind not in ("ws", "comment")]
+        code = [t for t in sel[a:b] if t.kind not in ("ws", "comment")]
         alias = None
-        depth = 0
-        for j, t in enumerate(code):
-            if t.kind == "op" and t.text in ("(", "["):
-                depth += 1
-            elif t.kind == "op" and t.text in (")", "]"):
-                depth -= 1
-            elif depth == 0 and t.is_kw("AS") and j + 1 < len(code):
+        for j, t in top_level(code):
+            if t.is_kw("AS") and j + 1 < len(code):
                 alias = code[j + 1]
         if alias is not None:
             exposed.add(alias.text.strip('`"').lower())
@@ -9849,8 +9587,11 @@ def _order_terms_survive(win_order: str, select_list: str) -> bool:
         body = body[5:].strip()
         if body.upper().startswith("BY"):
             body = body[2:].strip()
-    for term in _split_csv_text(body):
-        words = term.split()
+    terms = tokenize(body)
+    for a, b in split_top_commas(terms, 0, len(terms)):
+        words = _sql(terms, a, b).split()
+        if not words:
+            continue
         while words and words[-1].upper() in ("ASC", "DESC", "FIRST", "LAST"):
             if words[-1].upper() in ("FIRST", "LAST"):
                 words = words[:-1]
@@ -9874,8 +9615,11 @@ def _rebind_on_terms_to_output(on_sql: str, select_list: str) -> Optional[str]:
     all (the outer ORDER BY is then skipped — output is unique per key,
     so it was cosmetic)."""
     exposed: dict = {}
-    for item in _split_csv_text(select_list):
-        item = item.strip()
+    sel = tokenize(select_list)
+    for a, b in split_top_commas(sel, 0, len(sel)):
+        item = _sql(sel, a, b)
+        if not item:
+            continue
         m = re.match(
             r"(?is)^(.*?)\s+AS\s+([A-Za-z_][A-Za-z0-9_]*)\s*$", item
         )
@@ -9884,8 +9628,12 @@ def _rebind_on_terms_to_output(on_sql: str, select_list: str) -> Optional[str]:
         else:
             exposed[item.replace(" ", "").lower()] = item
     terms = []
-    for term in _split_csv_text(on_sql):
-        name = exposed.get(term.strip().replace(" ", "").lower())
+    on = tokenize(on_sql)
+    for a, b in split_top_commas(on, 0, len(on)):
+        term = _sql(on, a, b)
+        if not term:
+            continue
+        name = exposed.get(term.replace(" ", "").lower())
         if name is None:
             return None
         terms.append(name)
@@ -9904,31 +9652,25 @@ def _rewrite_distinct_on(tokens: List[Token]) -> List[Token]:
     Ordering inside the window uses the statement's ORDER BY when
     present (DuckDB's pick-first semantics), else the ON keys.
     """
-    first = _next_code(tokens, -1)
+    first = next_code(tokens, -1)
     if first >= len(tokens) or tokens[first].upper != "SELECT":
         return tokens
-    d_idx = _next_code(tokens, first)
+    d_idx = next_code(tokens, first)
     if d_idx >= len(tokens) or tokens[d_idx].upper != "DISTINCT":
         return tokens
-    on_idx = _next_code(tokens, d_idx)
+    on_idx = next_code(tokens, d_idx)
     if on_idx >= len(tokens) or tokens[on_idx].upper != "ON":
         return tokens
-    p_open = _next_code(tokens, on_idx)
+    p_open = next_code(tokens, on_idx)
     if p_open >= len(tokens) or tokens[p_open].text != "(":
         return tokens
-    p_close = _matching_paren(tokens, p_open)
+    p_close = closing(tokens, p_open)
     on_sql = "".join(t.text for t in tokens[p_open + 1 : p_close]).strip()
 
     n = len(tokens)
-    depth = 0
     from_idx = order_idx = limit_idx = None
-    for j in range(p_close + 1, n):
-        t = tokens[j]
-        if t.kind == "op" and t.text == "(":
-            depth += 1
-        elif t.kind == "op" and t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.kind == "word":
+    for j, t in top_level(tokens, p_close + 1):
+        if t.kind == "word":
             u = t.upper
             if u == "FROM" and from_idx is None:
                 from_idx = j
@@ -9985,52 +9727,26 @@ def _rewrite_qualify(tokens: List[Token]) -> List[Token]:
     Applies to top-level SELECT/WITH statements; QUALIFY inside
     subqueries is out of scope (v1).
     """
-    first = _next_code(tokens, -1)
+    first = next_code(tokens, -1)
     if first >= len(tokens) or tokens[first].upper not in ("SELECT", "WITH"):
         return tokens
-    depth = 0
-    q_idx = None
-    for i, tok in enumerate(tokens):
-        if tok.kind == "op" and tok.text == "(":
-            depth += 1
-        elif tok.kind == "op" and tok.text == ")":
-            depth -= 1
-        elif depth == 0 and tok.is_kw("QUALIFY"):
-            q_idx = i
-            break
+    q_idx = next((i for i, tok in top_level(tokens) if tok.is_kw("QUALIFY")), None)
     if q_idx is None:
         return tokens
     # predicate extent: up to a top-level terminator or end/semicolon
-    depth = 0
-    p_end = len(tokens)
-    for j in range(q_idx + 1, len(tokens)):
-        t = tokens[j]
-        if t.kind == "op" and t.text == "(":
-            depth += 1
-        elif t.kind == "op" and t.text == ")":
-            depth -= 1
-        elif depth == 0 and (
-            (t.kind == "word" and t.upper in _QUALIFY_TERMINATORS)
+    p_end = next(
+        (
+            j for j, t in top_level(tokens, q_idx + 1)
+            if (t.kind == "word" and t.upper in _QUALIFY_TERMINATORS)
             or (t.kind == "op" and t.text == ";")
-        ):
-            p_end = j
-            break
+        ),
+        len(tokens),
+    )
     pred = tokens[q_idx + 1: p_end]
     tail = [t for t in tokens[p_end:] if not (t.kind == "op" and t.text == ";")]
-    # select-list end: first top-level FROM after the main SELECT
-    depth = 0
-    from_idx = None
-    for i, tok in enumerate(tokens[:q_idx]):
-        if tok.kind == "op" and tok.text == "(":
-            depth += 1
-        elif tok.kind == "op" and tok.text == ")":
-            depth -= 1
-        elif depth == 0 and tok.is_kw("FROM"):
-            from_idx = i
-            # keep scanning: the LAST top-level FROM before QUALIFY is
-            # still the main one only for simple selects; the first is
-            # correct because subquery FROMs are parenthesized
-            break
+    # select-list end: first top-level FROM after the main SELECT (the
+    # first is the main one because subquery FROMs are parenthesized)
+    from_idx = next((i for i, tok in top_level(tokens, 0, q_idx) if tok.is_kw("FROM")), None)
     if from_idx is None:
         return tokens
     inner: List[Token] = list(tokens[:from_idx])
@@ -10064,35 +9780,6 @@ def _rewrite_string_escapes(tokens: List[Token]) -> List[Token]:
         else:
             out.append(tok)
     return out
-
-
-def _matching_bracket(tokens: List[Token], open_idx: int) -> int:
-    depth = 0
-    for j in range(open_idx, len(tokens)):
-        t = tokens[j]
-        if t.kind == "op" and t.text in ("[", "("):
-            depth += 1
-        elif t.kind == "op" and t.text in ("]", ")"):
-            depth -= 1
-            if depth == 0:
-                return j
-    return len(tokens) - 1
-
-
-def _top_level_positions(tokens: List[Token], lo: int, hi: int, match) -> List[int]:
-    """Indices in (lo, hi) where ``match(token)`` holds at depth 0 of
-    parentheses, brackets and braces."""
-    depth = 0
-    hits: List[int] = []
-    for j in range(lo, hi):
-        t = tokens[j]
-        if t.kind == "op" and t.text in ("(", "[", "{"):
-            depth += 1
-        elif t.kind == "op" and t.text in (")", "]", "}"):
-            depth -= 1
-        elif depth == 0 and match(t):
-            hits.append(j)
-    return hits
 
 
 def _capture_primary_backward(out: List[Token]) -> List[Token]:
@@ -10215,23 +9902,12 @@ def _visibly_string_base(base: List[Token]) -> bool:
     while (
         len(code) >= 3
         and code[0].kind == "op" and code[0].text == "("
-        and _matching_paren(code, 0) == len(code) - 1
+        and closing(code, 0) == len(code) - 1
     ):
         innerc = code[1:-1]
-        has_pipe = bool(_top_level_positions(
-            innerc, 0, len(innerc),
-            lambda t: t.kind == "op" and t.text == "||",
-        ))
-        if has_pipe:
-            depth = 0
-            for t in innerc:
-                if t.kind == "op" and t.text == "(":
-                    depth += 1
-                elif t.kind == "op" and t.text == ")":
-                    depth -= 1
-                elif depth == 0 and t.kind == "string":
-                    return True
-            return False
+        top = [t for _, t in top_level(innerc)]
+        if any(t.kind == "op" and t.text == "||" for t in top):
+            return any(t.kind == "string" for t in top)
         code = innerc
     return (
         len(code) == 1 and code[0].kind == "string"
@@ -10240,7 +9916,7 @@ def _visibly_string_base(base: List[Token]) -> bool:
         and code[0].kind == "word"
         and code[0].text.lower() in _STRING_VALUED_FNS
         and code[1].kind == "op" and code[1].text == "("
-        and _matching_paren(code, 1) == len(code) - 1
+        and closing(code, 1) == len(code) - 1
     )
 
 
@@ -10279,7 +9955,7 @@ def _rewrite_brackets(tokens: List[Token]) -> List[Token]:
     while i < n:
         tok = tokens[i]
         if tok.kind == "op" and tok.text == "[":
-            close = _matching_bracket(tokens, i)
+            close = closing(tokens, i)
             inner = _rewrite_brackets(tokens[i + 1 : close])
             is_index = prev_code is not None and (
                 prev_code.kind in ("word", "bident", "qident")
@@ -10290,14 +9966,12 @@ def _rewrite_brackets(tokens: List[Token]) -> List[Token]:
             if not is_index:
                 # list comprehension [expr FOR var IN list [IF cond]]
                 # -> transform(filter(list, var -> cond), var -> expr)
-                fors = _top_level_positions(
-                    inner, 0, len(inner), lambda t: t.is_kw("FOR")
-                )
+                fors = [j for j, t in top_level(inner) if t.is_kw("FOR")]
                 comp = None
                 if len(fors) == 1:
                     f = fors[0]
-                    v = _next_code(inner, f)
-                    inkw = _next_code(inner, v) if v < len(inner) else len(inner)
+                    v = next_code(inner, f)
+                    inkw = next_code(inner, v) if v < len(inner) else len(inner)
                     if (
                         v < len(inner)
                         and inner[v].kind in ("word", "bident", "qident")
@@ -10305,10 +9979,7 @@ def _rewrite_brackets(tokens: List[Token]) -> List[Token]:
                         and inner[inkw].is_kw("IN")
                     ):
                         var = unquote_name(inner[v])
-                        ifs = _top_level_positions(
-                            inner, inkw + 1, len(inner),
-                            lambda t: t.is_kw("IF"),
-                        )
+                        ifs = [j for j, t in top_level(inner, inkw + 1) if t.is_kw("IF")]
                         expr = _sql(inner, 0, f)
                         if ifs:
                             lst = _sql(inner, inkw + 1, ifs[0])
@@ -10327,9 +9998,7 @@ def _rewrite_brackets(tokens: List[Token]) -> List[Token]:
                     out.extend(inner)
                     out.append(Token("op", ")"))
             else:
-                colons = _top_level_positions(
-                    inner, 0, len(inner), lambda t: t.kind == "op" and t.text == ":"
-                )
+                colons = [j for j, t in top_level(inner) if t.kind == "op" and t.text == ":"]
                 base = _capture_primary_backward(out)
                 hint = (
                     _hinted_primary_type(base)
@@ -10480,28 +10149,12 @@ _NOT_VALUE_WORDS = {
 }
 
 
-def _split_top_commas(tokens: List[Token], lo: int, hi: int) -> List[tuple[int, int]]:
-    """(start, end) spans of the comma-separated items of
-    ``tokens[lo:hi]`` at depth 0 (see ``_top_level_positions``); an
-    empty run is one empty item."""
-    commas = _top_level_positions(
-        tokens, lo, hi, lambda t: t.kind == "op" and t.text == ","
-    )
-    spans = []
-    start = lo
-    for c in commas:
-        spans.append((start, c))
-        start = c + 1
-    spans.append((start, hi))
-    return spans
-
-
 def _call_args(tokens: List[Token], open_idx: int, close_idx: int) -> List[List[Token]]:
     """Argument token lists of the call whose parentheses are at
     ``open_idx`` and ``close_idx``: ``_split_top_commas`` items, less
     a last one without any token (``f()`` has no argument, ``f(a,)``
     one)."""
-    args = [tokens[a:b] for a, b in _split_top_commas(tokens, open_idx + 1, close_idx)]
+    args = [tokens[a:b] for a, b in split_top_commas(tokens, open_idx + 1, close_idx)]
     return args if args[-1] else args[:-1]
 
 
@@ -10522,7 +10175,7 @@ def _plain_decimal_literal_arg(tokens: List[Token], span) -> bool:
         len(code) >= 3
         and code[0].kind == "op" and code[0].text == "("
         and code[-1].kind == "op" and code[-1].text == ")"
-        and _matching_paren(code, 0) == len(code) - 1
+        and closing(code, 0) == len(code) - 1
     ):
         code = code[1:-1]
     if len(code) == 2 and code[0].kind == "op" and code[0].text in ("-", "+"):
@@ -10545,7 +10198,7 @@ def _signed_plain_number_arg(tokens: List[Token], span):
         len(code) >= 3
         and code[0].kind == "op" and code[0].text == "("
         and code[-1].kind == "op" and code[-1].text == ")"
-        and _matching_paren(code, 0) == len(code) - 1
+        and closing(code, 0) == len(code) - 1
     ):
         code = code[1:-1]
     sign = ""
@@ -10563,8 +10216,7 @@ def _signed_plain_number_arg(tokens: List[Token], span):
 
 def _order_at(c: _CallSite):
     """Index of the top-level ORDER keyword in ``c.inner``, or None."""
-    pos = _top_level_positions(c.inner, 0, len(c.inner), lambda t: t.is_kw("ORDER"))
-    return pos[0] if pos else None
+    return next((j for j, t in top_level(c.inner) if t.is_kw("ORDER")), None)
 
 
 def _order_key(c: _CallSite, ob: int):
@@ -10607,7 +10259,7 @@ def _shim_ordered_list_agg(c):
         if c.name in ("string_agg", "group_concat"):
             # DuckDB's default separator is ',' (Spark
             # listagg defaults to '')
-            if len(_split_top_commas(c.inner, 0, ob)) == 1:
+            if len(split_top_commas(c.inner, 0, ob)) == 1:
                 head = f"{head}, ','"
             return f"listagg({head}) WITHIN GROUP ({tail})"
         # array_agg/list: only the sort-by-self form
@@ -10899,8 +10551,8 @@ def _shim_struct_insert(c):
 def _shim_over_window(c):
     # window-context rewrites that must consume the trailing OVER
     # clause
-    after = _next_code(c.tokens, c.close)
-    op_ = _next_code(c.tokens, after)
+    after = next_code(c.tokens, c.close)
+    op_ = next_code(c.tokens, after)
     if not (
         op_ < len(c.tokens)
         and c.tokens[after].is_kw("OVER")
@@ -10908,7 +10560,7 @@ def _shim_over_window(c):
         and c.tokens[op_].text == "("
     ):
         return None
-    over_close = _matching_paren(c.tokens, op_)
+    over_close = closing(c.tokens, op_)
     over_sql = "".join(t.text for t in c.tokens[after : over_close + 1])
     icode = [t for t in c.inner if t.kind not in ("ws", "comment")]
     if c.name == "count" and icode and icode[0].is_kw("DISTINCT"):
@@ -12663,13 +12315,10 @@ def _shim_struct_pack(c):
     for s, e in c.spans:
         seg = c.inner[s:e]
         # ':=' arrives as two op tokens ':' '='
-        colons = _top_level_positions(
-            seg, 0, len(seg),
-            lambda t: t.kind == "op" and t.text == ":",
-        )
+        colons = [j for j, t in top_level(seg) if t.kind == "op" and t.text == ":"]
         w = None
         for cp in colons:
-            nc = _next_code(seg, cp)
+            nc = next_code(seg, cp)
             if nc < len(seg) and seg[nc].text == "=":
                 w = (cp, nc)
                 break
@@ -12760,10 +12409,10 @@ def _shim_decimal_median(c):
         # calls and other types keep Spark's median
         a0 = _sql(c.inner, 0, len(c.inner))
         ch0 = _parse_literal_decimal_chain(a0)
-        after0 = _next_code(c.tokens, c.close)
+        after0 = next_code(c.tokens, c.close)
         filt0, f_end0 = _consume_filter_clause(c.tokens, after0)
         after0b = (
-            _next_code(c.tokens, f_end0 - 1)
+            next_code(c.tokens, f_end0 - 1)
             if filt0 is not None
             else after0
         )
@@ -12826,10 +12475,10 @@ def _shim_percentile_cont(c):
         # to the input's DECIMAL(w, s) (see
         # _quantile_cont_agg_sql); windowed forms keep
         # their _rewrite_agg_window_frames path
-        j2 = _next_code(c.tokens, c.close)
+        j2 = next_code(c.tokens, c.close)
         if j2 < len(c.tokens) and c.tokens[j2].is_kw("WITHIN"):
-            g_kw = _next_code(c.tokens, j2)
-            g_open = _next_code(c.tokens, g_kw)
+            g_kw = next_code(c.tokens, j2)
+            g_open = next_code(c.tokens, g_kw)
             if (
                 g_kw < len(c.tokens)
                 and c.tokens[g_kw].is_kw("GROUP")
@@ -12837,11 +12486,11 @@ def _shim_percentile_cont(c):
                 and c.tokens[g_open].kind == "op"
                 and c.tokens[g_open].text == "("
             ):
-                g_close = _matching_paren(c.tokens, g_open)
-                after2 = _next_code(c.tokens, g_close)
+                g_close = closing(c.tokens, g_open)
+                after2 = next_code(c.tokens, g_close)
                 filt2, f_end2 = _consume_filter_clause(c.tokens, after2)
                 after2b = (
-                    _next_code(c.tokens, f_end2 - 1)
+                    next_code(c.tokens, f_end2 - 1)
                     if filt2 is not None
                     else after2
                 )
@@ -12891,10 +12540,10 @@ def _shim_percentile_cont(c):
 def _shim_quantile_cont(c):
     if len(c.args) == 2:
         a, b = c.args
-        after_qc = _next_code(c.tokens, c.close)
+        after_qc = next_code(c.tokens, c.close)
         filt_qc, f_end_qc = _consume_filter_clause(c.tokens, after_qc)
         after_qc2 = (
-            _next_code(c.tokens, f_end_qc - 1)
+            next_code(c.tokens, f_end_qc - 1)
             if filt_qc is not None
             else after_qc
         )
@@ -12919,10 +12568,10 @@ def _shim_quantile_disc(c):
     if len(c.args) == 2:
         a, b = c.args
         base = f"percentile_disc({b}) WITHIN GROUP (ORDER BY {a})"
-        after_qd = _next_code(c.tokens, c.close)
+        after_qd = next_code(c.tokens, c.close)
         filt_qd, f_end_qd = _consume_filter_clause(c.tokens, after_qd)
         after_qd2 = (
-            _next_code(c.tokens, f_end_qd - 1)
+            next_code(c.tokens, f_end_qd - 1)
             if filt_qd is not None
             else after_qd
         )
@@ -13209,7 +12858,7 @@ def _lower_shim(call: _CallSite, walk):
     arguments, or the call itself over them."""
     inner = walk(call.arg_tokens(), call.in_py_udf or call.name in _PY_UDF_FNS)
     call.inner = inner
-    call.spans = _split_top_commas(inner, 0, len(inner))
+    call.spans = split_top_commas(inner, 0, len(inner))
     shims = _CALL_SHIMS.get(call.name)
     if shims:
         call.args = tuple(_sql(inner, s, e) for s, e in call.spans)
@@ -13236,9 +12885,9 @@ def _find_columns_call(item: List[Token]):
     a supported argument shape."""
     for j, t in enumerate(item):
         if t.kind == "word" and t.text.lower() == "columns":
-            p = _next_code(item, j)
+            p = next_code(item, j)
             if p < len(item) and item[p].text == "(":
-                close = _matching_paren(item, p)
+                close = closing(item, p)
                 inner = [
                     x for x in item[p + 1 : close]
                     if x.kind not in ("ws", "comment")
@@ -13350,18 +12999,8 @@ def _expand_scope(
     with_defs: List[str] = []
     local_recursive = False
     body_start = 0
-    sel = None
-    depth = 0
-    for j in range(n):
-        t = tokens[j]
-        if t.kind == "op" and t.text == "(":
-            depth += 1
-        elif t.kind == "op" and t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.is_kw("WITH", "SELECT"):
-            sel = j
-            break
-    first = _next_code(tokens, -1)
+    sel = next((j for j, t in top_level(tokens) if t.is_kw("WITH", "SELECT")), None)
+    first = next_code(tokens, -1)
     from_first = first < n and tokens[first].is_kw("FROM")
     if sel is not None and tokens[sel].is_kw("SELECT") and not from_first:
         # statement prefix (CREATE ... AS / INSERT INTO t) stays outside
@@ -13369,24 +13008,24 @@ def _expand_scope(
         body_start = sel
     if sel is not None and tokens[sel].is_kw("WITH"):
         body_start = sel  # statement prefix before WITH, if any
-        j = _next_code(tokens, sel)
+        j = next_code(tokens, sel)
         if j < n and tokens[j].is_kw("RECURSIVE"):
             local_recursive = True
-            j = _next_code(tokens, j)
+            j = next_code(tokens, j)
         # CTE list: name [(cols)] AS ( body ) [, ...]
         while j < n:
             def_start = j
             if tokens[j].kind not in ("word", "bident", "qident"):
                 break
-            j = _next_code(tokens, j)
+            j = next_code(tokens, j)
             if j < n and tokens[j].kind == "op" and tokens[j].text == "(":
-                j = _next_code(tokens, _matching_paren(tokens, j))
+                j = next_code(tokens, closing(tokens, j))
             if not (j < n and tokens[j].is_kw("AS")):
                 break
-            j = _next_code(tokens, j)
+            j = next_code(tokens, j)
             if not (j < n and tokens[j].kind == "op" and tokens[j].text == "("):
                 break
-            body_close = _matching_paren(tokens, j)
+            body_close = closing(tokens, j)
             inner = _expand_scope(
                 tokens[j + 1 : body_close],
                 resolve,
@@ -13399,10 +13038,10 @@ def _expand_scope(
                 + ")"
             )
             with_defs.append(def_text.strip())
-            j = _next_code(tokens, body_close)
+            j = next_code(tokens, body_close)
             body_start = body_close + 1
             if j < n and tokens[j].kind == "op" and tokens[j].text == ",":
-                j = _next_code(tokens, j)
+                j = next_code(tokens, j)
                 continue
             body_start = j if j < n else n
             break
@@ -13425,7 +13064,7 @@ def _expand_scope(
     while i < nb:
         t = body[i]
         if t.kind == "op" and t.text == "(":
-            close = _matching_paren(body, i)
+            close = closing(body, i)
             if close > i:
                 out.append(t)
                 out.extend(
@@ -13440,38 +13079,28 @@ def _expand_scope(
         i += 1
     # --- top-level set-op scan
     ops = []  # (start, end_exclusive, kind, all_flag, by_name)
-    depth = 0
-    k = 0
     no = len(out)
-    while k < no:
-        t = out[k]
-        if t.kind == "op" and t.text == "(":
-            depth += 1
-        elif t.kind == "op" and t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.is_kw("UNION", "EXCEPT", "INTERSECT", "MINUS"):
+    for k, t in top_level(out):
+        if t.is_kw("UNION", "EXCEPT", "INTERSECT", "MINUS"):
             kind = t.upper
             end = k + 1
             all_flag = False
             by_name = False
-            m = _next_code(out, k)
+            m = next_code(out, k)
             if m < no and out[m].is_kw("ALL", "DISTINCT"):
                 all_flag = out[m].is_kw("ALL")
                 end = m + 1
-                m = _next_code(out, m)
+                m = next_code(out, m)
             if (
                 kind == "UNION"
                 and m < no
                 and out[m].is_kw("BY")
             ):
-                m2 = _next_code(out, m)
+                m2 = next_code(out, m)
                 if m2 < no and out[m2].is_kw("NAME"):
                     by_name = True
                     end = m2 + 1
             ops.append((k, end, kind, all_flag, by_name))
-            k = end
-            continue
-        k += 1
     resolved: Dict[str, List[str]] = {}
 
     def _res(text: str) -> List[str]:
@@ -13496,13 +13125,8 @@ def _expand_scope(
     branches = pieces[0::2]
     last = branches[-1]
     tail: List[Token] = []
-    depth = 0
-    for j, t in enumerate(last):
-        if t.kind == "op" and t.text == "(":
-            depth += 1
-        elif t.kind == "op" and t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.is_kw("ORDER", "LIMIT", "OFFSET"):
+    for j, t in top_level(last):
+        if t.is_kw("ORDER", "LIMIT", "OFFSET"):
             tail = last[j:]
             branches[-1] = last[:j]
             break
@@ -13544,38 +13168,30 @@ def _expand_items(tokens: List[Token], res) -> List[Token]:
     items expanded against the branch's FROM clause (``res(query) ->
     [col]`` resolves a query's columns in the branch's scope)."""
     n = len(tokens)
-    start = _next_code(tokens, -1)
+    start = next_code(tokens, -1)
     if not (start < n and tokens[start].is_kw("SELECT")):
         return tokens
-    start = _next_code(tokens, start)
+    start = next_code(tokens, start)
     if start < n and tokens[start].is_kw("ALL", "DISTINCT"):
-        start = _next_code(tokens, start)
+        start = next_code(tokens, start)
         if start < n and tokens[start].is_kw("ON"):
-            start = _next_code(
-                tokens, _matching_paren(tokens, _next_code(tokens, start))
+            start = next_code(
+                tokens, closing(tokens, next_code(tokens, start))
             )
     # the depth-0 FROM (not the one of IS [NOT] DISTINCT FROM)
-    frm = None
-    depth = 0
-    prev = None
-    for j in range(start, n):
-        t = tokens[j]
-        if t.kind in ("ws", "comment"):
-            continue
-        if t.kind == "op" and t.text in ("(", "["):
-            depth += 1
-        elif t.kind == "op" and t.text in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t.is_kw("FROM") and not (prev and prev.is_kw("DISTINCT")):
-            frm = j
-            break
-        prev = t
+    def after_distinct(j: int) -> bool:  # IS [NOT] DISTINCT FROM
+        k = j - 1
+        while k >= start and tokens[k].kind in ("ws", "comment"):
+            k -= 1
+        return k >= start and tokens[k].is_kw("DISTINCT")
+
+    frm = next(
+        (j for j, t in top_level(tokens, start) if t.is_kw("FROM") and not after_distinct(j)),
+        None,
+    )
     if frm is None:
         return tokens
-    ends = _top_level_positions(
-        tokens, frm, n, lambda t: t.is_kw(*_FROM_CLAUSE_ENDS)
-    )
-    from_end = ends[0] if ends else n
+    from_end = next((j for j, t in top_level(tokens, frm) if t.is_kw(*_FROM_CLAUSE_ENDS)), n)
     from_text = _sql(tokens, frm, from_end)
 
     def cols_of(star: str) -> List[tuple]:
@@ -13601,7 +13217,7 @@ def _expand_items(tokens: List[Token], res) -> List[Token]:
 
     texts: List[str] = []
     changed = False
-    for s, e in _split_top_commas(tokens, start, frm):
+    for s, e in split_top_commas(tokens, start, frm):
         new = _expand_item(tokens[s:e], cols_of)
         changed = changed or new is not None
         texts.append(_sql(tokens, s, e) if new is None else ", ".join(new))
@@ -13632,7 +13248,7 @@ def _expand_item(item: List[Token], cols_of) -> Optional[List[str]]:
     if call is None:
         return None
     c_start, c_end, arg = call
-    if _top_level_positions(item, 0, len(item), lambda t: t.is_kw("AS")):
+    if any(t.is_kw("AS") for _, t in top_level(item)):
         raise _Unresolvable()  # an aliased COLUMNS item names no column
     cols = cols_of("*")
     if arg == "*":
@@ -13661,29 +13277,29 @@ def _star_replace_item(
     (a plain or EXCLUDE-only star is the translator's)."""
     n = len(item)
     excl: set = set()
-    j = _next_code(item, star)
+    j = next_code(item, star)
     if j < n and item[j].is_kw("EXCLUDE", "EXCEPT"):
-        p = _next_code(item, j)
+        p = next_code(item, j)
         if not (p < n and item[p].kind == "op" and item[p].text == "("):
             return None
-        close = _matching_paren(item, p)
-        for s, e in _split_top_commas(item, p + 1, close):
+        close = closing(item, p)
+        for s, e in split_top_commas(item, p + 1, close):
             name = [t for t in item[s:e] if t.kind not in ("ws", "comment")]
             if len(name) != 1:
                 raise _Unresolvable()
             excl.add(unquote_name(name[0]).lower())
-        j = _next_code(item, close)
+        j = next_code(item, close)
     if not (j < n and item[j].is_kw("REPLACE")):
         return None
-    p = _next_code(item, j)
+    p = next_code(item, j)
     if not (p < n and item[p].kind == "op" and item[p].text == "("):
         return None
-    close = _matching_paren(item, p)
-    if _next_code(item, close) < n:
+    close = closing(item, p)
+    if next_code(item, close) < n:
         raise _Unresolvable()
     repl: Dict[str, str] = {}
-    for s, e in _split_top_commas(item, p + 1, close):
-        as_pos = _top_level_positions(item, s, e, lambda t: t.is_kw("AS"))
+    for s, e in split_top_commas(item, p + 1, close):
+        as_pos = [j for j, t in top_level(item, s, e) if t.is_kw("AS")]
         name = [
             t for t in item[as_pos[-1] + 1 : e] if t.kind not in ("ws", "comment")
         ] if as_pos else []
@@ -13715,38 +13331,38 @@ def _from_aliases(tokens: List[Token], frm: int, hi: int) -> List[str]:
     is referenced by — its alias, else its table name — in order; empty
     when an item has no nameable reference."""
     out: List[str] = []
-    k = _next_code(tokens, frm)
+    k = next_code(tokens, frm)
     while k < hi:
         t = tokens[k]
         name = None
         if t.kind == "op" and t.text == "(":
-            k = _next_code(tokens, _matching_paren(tokens, k))
+            k = next_code(tokens, closing(tokens, k))
         elif t.kind in ("word", "bident", "qident") and not t.is_kw(*_FROM_ITEM_ENDS):
             name = t.text
-            k = _next_code(tokens, k)
+            k = next_code(tokens, k)
             while k + 1 < hi and tokens[k].text == "." :
-                k = _next_code(tokens, k)
+                k = next_code(tokens, k)
                 name = tokens[k].text
-                k = _next_code(tokens, k)
+                k = next_code(tokens, k)
         else:
             return []
         if k < hi and tokens[k].is_kw("AS"):
-            k = _next_code(tokens, k)
+            k = next_code(tokens, k)
         if (
             k < hi
             and tokens[k].kind in ("word", "bident", "qident")
             and not tokens[k].is_kw(*_FROM_ITEM_ENDS)
         ):
             name = tokens[k].text
-            k = _next_code(tokens, k)
+            k = next_code(tokens, k)
         if name is None:
             return []
         out.append(name)
         while k < hi and not (tokens[k].text == "," or tokens[k].is_kw("JOIN")):
             if tokens[k].kind == "op" and tokens[k].text == "(":
-                k = _matching_paren(tokens, k)
-            k = _next_code(tokens, k)
-        k = _next_code(tokens, k)
+                k = closing(tokens, k)
+            k = next_code(tokens, k)
+        k = next_code(tokens, k)
     return out
 
 
@@ -13758,41 +13374,25 @@ def _rewrite_statement_unpivot(tokens: List[Token]) -> List[Token]:
     explicit-column form; others pass through."""
     # locate depth-0 UNPIVOT followed by a table ref then ON
     n = len(tokens)
-    depth = 0
-    for i in range(n):
-        tok = tokens[i]
-        if tok.kind == "op" and tok.text == "(":
-            depth += 1
-        elif tok.kind == "op" and tok.text == ")":
-            depth -= 1
-        elif depth == 0 and tok.is_kw("UNPIVOT"):
-            t_idx = _next_code(tokens, i)
+    for i, tok in top_level(tokens):
+        if tok.is_kw("UNPIVOT"):
+            t_idx = next_code(tokens, i)
             if t_idx >= n or tokens[t_idx].kind not in ("word", "bident", "qident"):
                 return tokens
-            on_idx = _next_code(tokens, t_idx)
+            on_idx = next_code(tokens, t_idx)
             if on_idx >= n or not tokens[on_idx].is_kw("ON"):
                 return tokens
-            into_idx = None
-            d = 0
-            for j in range(on_idx + 1, n):
-                t = tokens[j]
-                if t.kind == "op" and t.text == "(":
-                    d += 1
-                elif t.kind == "op" and t.text == ")":
-                    d -= 1
-                elif d == 0 and t.is_kw("INTO"):
-                    into_idx = j
-                    break
+            into_idx = next((j for j, t in top_level(tokens, on_idx + 1) if t.is_kw("INTO")), None)
             if into_idx is None:
                 return tokens
-            name_kw = _next_code(tokens, into_idx)
+            name_kw = next_code(tokens, into_idx)
             if name_kw >= n or not tokens[name_kw].is_kw("NAME"):
                 return tokens
-            name_idx = _next_code(tokens, name_kw)
-            value_kw = _next_code(tokens, name_idx)
+            name_idx = next_code(tokens, name_kw)
+            value_kw = next_code(tokens, name_idx)
             if value_kw >= n or not tokens[value_kw].is_kw("VALUE"):
                 return tokens
-            value_idx = _next_code(tokens, value_kw)
+            value_idx = next_code(tokens, value_kw)
             if value_idx >= n:
                 return tokens
             table = tokens[t_idx].text
@@ -13820,17 +13420,17 @@ def _rewrite_using_sample(tokens: List[Token]) -> List[Token]:
 
     def lower(tokens, i, out):
         n = len(tokens)
-        j = _next_code(tokens, i)
+        j = next_code(tokens, i)
         if not (j < n and tokens[j].is_kw("SAMPLE")):
             return None
-        k = _next_code(tokens, j)
+        k = next_code(tokens, j)
         num = unit = None
         end = k
         if k < n and tokens[k].kind == "word":
             word = tokens[k].text
             if word.replace(".", "", 1).isdigit():
                 num = word
-                m = _next_code(tokens, k)
+                m = next_code(tokens, k)
                 if m < n and tokens[m].kind == "op" and tokens[m].text == "%":
                     unit, end = "PERCENT", m
                 elif m < n and tokens[m].is_kw("PERCENT"):
@@ -13840,21 +13440,21 @@ def _rewrite_using_sample(tokens: List[Token]) -> List[Token]:
                 else:
                     unit, end = "ROWS", k
                 # drop a trailing (method) group
-                m2 = _next_code(tokens, end)
+                m2 = next_code(tokens, end)
                 if m2 < n and tokens[m2].text == "(":
                     inner = [
-                        t for t in tokens[m2 + 1 : _matching_paren(tokens, m2)]
+                        t for t in tokens[m2 + 1 : closing(tokens, m2)]
                         if t.kind == "word"
                     ]
                     if len(inner) == 1 and inner[0].text.lower() in (
                         "bernoulli", "system", "reservoir"
                     ):
-                        end = _matching_paren(tokens, m2)
+                        end = closing(tokens, m2)
             elif word.lower() in ("bernoulli", "system", "reservoir"):
                 # method(n% | n ROWS) form
-                p = _next_code(tokens, k)
+                p = next_code(tokens, k)
                 if p < n and tokens[p].text == "(":
-                    close = _matching_paren(tokens, p)
+                    close = closing(tokens, p)
                     inner = [
                         t for t in tokens[p + 1 : close]
                         if t.kind not in ("ws", "comment")
@@ -13875,11 +13475,11 @@ def _rewrite_using_sample(tokens: List[Token]) -> List[Token]:
             return None
         frag = f"TABLESAMPLE ({num} {unit})"
         # keep REPEATABLE (seed)
-        r = _next_code(tokens, end)
+        r = next_code(tokens, end)
         if r < n and tokens[r].is_kw("REPEATABLE"):
-            p = _next_code(tokens, r)
+            p = next_code(tokens, r)
             if p < n and tokens[p].text == "(":
-                close = _matching_paren(tokens, p)
+                close = closing(tokens, p)
                 seed = "".join(t.text for t in tokens[p + 1 : close]).strip()
                 frag += f" REPEATABLE ({seed})"
                 end = close
@@ -13894,9 +13494,9 @@ def _rewrite_similar_to(tokens: List[Token]) -> List[Token]:
     (full-match anchoring; literal patterns only)."""
 
     def lower(tokens, i, out):
-        j = _next_code(tokens, i)
+        j = next_code(tokens, i)
         if j < len(tokens) and tokens[j].is_kw("TO"):
-            k = _next_code(tokens, j)
+            k = next_code(tokens, j)
             if k < len(tokens) and tokens[k].kind == "string":
                 out.append(Token("word", "RLIKE"))
                 out.append(Token("ws", " "))
@@ -13913,18 +13513,8 @@ def _rewrite_brace_literals(tokens: List[Token]) -> List[Token]:
     """
 
     def lower(tokens, i, out):
-        close = None
-        depth = 0
-        for j in range(i, len(tokens)):
-            t = tokens[j]
-            if t.kind == "op" and t.text in ("{", "(", "["):
-                depth += 1
-            elif t.kind == "op" and t.text in ("}", ")", "]"):
-                depth -= 1
-                if depth == 0:
-                    close = j
-                    break
-        if close is None:
+        close = closing(tokens, i)
+        if close == len(tokens):
             return None
         inner = _rewrite_brace_literals(tokens[i + 1 : close])
         # was this preceded by the word `map`?
@@ -13937,10 +13527,8 @@ def _rewrite_brace_literals(tokens: List[Token]) -> List[Token]:
                 del out[k:]
             break
         parts = []
-        for s, e in _split_top_commas(inner, 0, len(inner)):
-            colons = _top_level_positions(
-                inner, s, e, lambda t: t.kind == "op" and t.text == ":"
-            )
+        for s, e in split_top_commas(inner, 0, len(inner)):
+            colons = [j for j, t in top_level(inner, s, e) if t.kind == "op" and t.text == ":"]
             if not colons:
                 parts = None
                 break
@@ -13977,7 +13565,7 @@ def _rewrite_simple(tokens: List[Token]) -> List[Token]:
     def lower(tokens, i, out):
         low = tokens[i].text.lower()
         n = len(tokens)
-        nxt = _next_code(tokens, i)
+        nxt = next_code(tokens, i)
         if low == "//":  # floor division
             out.append(Token("word", " DIV "))
             return i + 1
@@ -13986,7 +13574,7 @@ def _rewrite_simple(tokens: List[Token]) -> List[Token]:
         if low == "in":
             # IN (VALUES ...): DuckDB treats the VALUES list as a
             # subquery; Spark needs an explicit SELECT wrapper
-            v = _next_code(tokens, nxt)
+            v = next_code(tokens, nxt)
             if not (v < n and tokens[v].is_kw("VALUES")):
                 return None
             out.append(tokens[i])
@@ -13995,7 +13583,7 @@ def _rewrite_simple(tokens: List[Token]) -> List[Token]:
             return v
         if low == "version":
             out.append(Token("string", f"'{engine_version_string()}'"))
-            return _matching_paren(tokens, nxt) + 1
+            return closing(tokens, nxt) + 1
         if low == "@":  # DuckDB's absolute-value operator, call form @(x)
             out.append(Token("word", "abs"))
         elif low == "exclude":
@@ -14130,14 +13718,9 @@ def _try_exclude_rewrite(out: List[Token], tokens: List[Token],
     Spark parse."""
     body = tokens[open_idx + 1: close_idx]
     # locate top-level clause positions inside the OVER body
-    depth = 0
     excl_idx = order_idx = frame_idx = None
-    for k, t in enumerate(body):
-        if t.kind == "op" and t.text == "(":
-            depth += 1
-        elif t.kind == "op" and t.text == ")":
-            depth -= 1
-        elif depth == 0 and t.kind == "word":
+    for k, t in top_level(body):
+        if t.kind == "word":
             u = t.upper
             if u == "EXCLUDE" and excl_idx is None:
                 excl_idx = k
@@ -14183,21 +13766,11 @@ def _try_exclude_rewrite(out: List[Token], tokens: List[Token],
     if order_idx is not None:
         stop = frame_idx if frame_idx is not None else excl_idx
         section = body[order_idx:stop]
-        by_i = _next_code(section, 0)
+        by_i = next_code(section, 0)
         if by_i >= len(section) or not section[by_i].is_kw("BY"):
             return None
-        items: List[List[Token]] = [[]]
-        d = 0
-        for t in section[by_i + 1:]:
-            if t.kind == "op" and t.text == "(":
-                d += 1
-            elif t.kind == "op" and t.text == ")":
-                d -= 1
-            if d == 0 and t.kind == "op" and t.text == ",":
-                items.append([])
-            else:
-                items[-1].append(t)
-        for item in items:
+        for a, b in split_top_commas(section, by_i + 1, len(section)):
+            item = section[a:b]
             code = [t for t in item if t.kind not in ("ws", "comment")]
             while code and (
                 code[-1].is_kw("ASC", "DESC", "FIRST", "LAST", "NULLS")
@@ -14225,14 +13798,8 @@ def _try_exclude_rewrite(out: List[Token], tokens: List[Token],
         return None
     if arg_code[0].is_kw("DISTINCT"):
         return None
-    d = 0
-    for t in arg_toks:
-        if t.kind == "op" and t.text == "(":
-            d += 1
-        elif t.kind == "op" and t.text == ")":
-            d -= 1
-        elif d == 0 and t.kind == "op" and t.text == ",":
-            return None  # multi-argument aggregate
+    if len(split_top_commas(arg_toks, 0, len(arg_toks))) > 1:
+        return None  # multi-argument aggregate
     count_star = (
         agg == "COUNT" and len(arg_code) == 1
         and arg_code[0].kind == "op" and arg_code[0].text == "*"
@@ -14414,9 +13981,9 @@ def _rewrite_window_exclude(tokens: List[Token]) -> List[Token]:
     carry the whole partition per row and should stay small."""
 
     def lower(tokens, i, out):
-        p = _next_code(tokens, i)
+        p = next_code(tokens, i)
         if p < len(tokens) and tokens[p].kind == "op" and tokens[p].text == "(":
-            close = _matching_paren(tokens, p)
+            close = closing(tokens, p)
             repl = _try_exclude_rewrite(out, tokens, p, close)
             if repl is not None:
                 out.extend(repl)
@@ -14463,23 +14030,17 @@ def _rewrite_unordered_ranking(tokens: List[Token]) -> List[Token]:
     physical-order contract as POSITIONAL JOIN, COVERAGE.md."""
 
     def lower(tokens, i, out):
-        p = _next_code(tokens, i)
+        p = next_code(tokens, i)
         if not (p < len(tokens) and tokens[p].kind == "op" and tokens[p].text == "("):
             return None
         # the preceding call's name
         call = _trailing_call(out)
         if call is None or out[call[0]].text.lower() not in _ORDER_REQUIRED_WINDOW_FNS:
             return None
-        close = _matching_paren(tokens, p)
+        close = closing(tokens, p)
         body = tokens[p + 1: close]
-        depth = 0
-        for t in body:
-            if t.kind == "op" and t.text == "(":
-                depth += 1
-            elif t.kind == "op" and t.text == ")":
-                depth -= 1
-            elif depth == 0 and t.is_kw("ORDER"):
-                return None
+        if any(t.is_kw("ORDER") for _, t in top_level(body)):
+            return None
         out.extend(tokens[i: p + 1])  # OVER, ws, (
         out.extend(body)
         sep = " " if body and body[-1].kind != "ws" else ""
@@ -14496,10 +14057,10 @@ def _rewrite_cte_materialized(tokens: List[Token]) -> List[Token]:
 
     def lower(tokens, i, out):
         n = len(tokens)
-        j = _next_code(tokens, i)
-        k = _next_code(tokens, j) if j < n and tokens[j].is_kw("NOT") else j
+        j = next_code(tokens, i)
+        k = next_code(tokens, j) if j < n and tokens[j].is_kw("NOT") else j
         if k < n and tokens[k].is_kw("MATERIALIZED"):
-            after = _next_code(tokens, k)
+            after = next_code(tokens, k)
             if after < n and tokens[after].kind == "op" and tokens[after].text == "(":
                 out.append(tokens[i])
                 out.append(Token("ws", " "))

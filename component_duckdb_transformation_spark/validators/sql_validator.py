@@ -23,8 +23,6 @@ from ..configuration import Block
 from ..functions.dialect import (
     STAR_REPLACE_PATTERN,
     _call_args,
-    _matching_paren,
-    _next_code,
     _pattern_composable,
     fmtlib_format_ok,
     replace_first_composition,
@@ -33,7 +31,7 @@ from ..functions.dialect import (
 from ..plans.executor import spark_query_text
 from ..plans.orchestrator import iterate_blocks, query_name
 from ..plans.sql_parser import parse_script
-from ..plans.sql_tokens import tokenize
+from ..plans.sql_tokens import closing, next_code, tokenize
 
 LOG = logging.getLogger(__name__)
 
@@ -60,9 +58,9 @@ def _three_arg_regexp_replace(sql: str) -> bool:
     n = len(tokens)
     for i, tok in enumerate(tokens):
         if tok.kind == "word" and tok.text.lower() == "regexp_replace":
-            p_open = _next_code(tokens, i)
+            p_open = next_code(tokens, i)
             if p_open < n and tokens[p_open].text == "(":
-                close = _matching_paren(tokens, p_open)
+                close = closing(tokens, p_open)
                 args = _call_args(tokens, p_open, close)
                 if len(args) != 3:
                     continue
@@ -186,14 +184,14 @@ def _untranslatable_functions(sql: str) -> set[str]:
         low = tok.text.lower() if tok.kind == "word" else ""
         if not low:
             continue
-        p_open = _next_code(tokens, i)
+        p_open = next_code(tokens, i)
         is_call = p_open < n and tokens[p_open].text == "("
         if not is_call:
             continue
         if low in _UNSUPPORTED_FUNCTIONS:
             found.add(low)
         elif low in ("list_aggregate", "list_aggr", "format"):
-            close = _matching_paren(tokens, p_open)
+            close = closing(tokens, p_open)
             args = _call_args(tokens, p_open, close)
             lit_idx = 1 if low != "format" else 0
             lit = (

@@ -10151,7 +10151,7 @@ _NOT_VALUE_WORDS = {
 
 def _call_args(tokens: List[Token], open_idx: int, close_idx: int) -> List[List[Token]]:
     """Argument token lists of the call whose parentheses are at
-    ``open_idx`` and ``close_idx``: ``_split_top_commas`` items, less
+    ``open_idx`` and ``close_idx``: ``split_top_commas`` items, less
     a last one without any token (``f()`` has no argument, ``f(a,)``
     one)."""
     args = [tokens[a:b] for a, b in split_top_commas(tokens, open_idx + 1, close_idx)]
@@ -14074,7 +14074,7 @@ def _rewrite_cte_materialized(tokens: List[Token]) -> List[Token]:
 # for the pass to change it; None runs the pass on every statement
 # (token-kind maps and hint-driven passes).
 _PASSES = (
-    (_rewrite_from_first, None),
+    (_rewrite_from_first, {"from"}),
     (_from_first_scope, {"from"}),
     (_rewrite_table_name_literals, {w.lower() for w in _TABLE_NAME_CONTEXT}),
     (_rewrite_numeric_underscores, None),

@@ -18,6 +18,23 @@ def test_quoted_identifiers_to_backticks():
     assert translate('SELECT "my col" FROM "my-table"') == "SELECT `my col` FROM `my-table`"
 
 
+def test_unbalanced_statement_is_returned_unchanged():
+    # an unclosed or mismatched bracket leaves the statement as written
+    # (it used to come back with the unclosed paren doubled), so Spark's
+    # error quotes the user's own text
+    for sql in (
+        "SELECT sum(",
+        "SELECT a FROM (",
+        "SELECT [1, 2",
+        "SELECT f(x]",
+        "SELECT 1)",
+        "SELECT {'a': (1}",
+    ):
+        assert translate(sql) == sql
+    # brackets inside strings and comments do not count
+    assert translate("SELECT '(' AS p -- )") == "SELECT '(' AS p -- )"
+
+
 def test_dow_shim():
     out = translate("SELECT extract(dow FROM d) FROM t")
     assert "(extract(dow FROM d) - 1)" in out

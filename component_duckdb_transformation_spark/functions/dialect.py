@@ -4600,7 +4600,7 @@ def _entropy_outer_name(item: List[Token]) -> Optional[str]:
     alias = None
     code = [j for j, t in enumerate(item) if t.kind not in ("ws", "comment")]
     for j, t in top_level(item):
-        if t.kind == "word" and t.upper == "AS" and next_code(item, j) < len(item):
+        if t.is_kw("AS") and next_code(item, j) < len(item):
             alias = item[next_code(item, j)].text
     if alias is not None:
         return alias

@@ -1,5 +1,6 @@
 """Minimal SQL tokenizer shared by the dependency parser
-(plans.sql_parser) and the dialect translator (functions.dialect).
+(plans.sql_parser), the executor's statement parsers (plans.executor)
+and the dialect translator (functions.dialect).
 
 The reference delegates parsing to sqlglot (reference src/sql_parser.py:35).
 This engine instead uses a purpose-built tokenizer: the scheduling layer
@@ -33,7 +34,7 @@ back). Four functions serve every scan:
   ``i``; when ``tokens[i]`` opens nothing, of the bracket closing the
   scope ``i`` lies in (``len(tokens)`` when none closes);
 - ``top_level(tokens, lo, hi)``: ``(j, token)`` for each top-level
-  token of ``tokens[lo:hi]``;
+  token of ``tokens[lo:hi]``, the depth counted from ``lo``;
 - ``split_top_commas(tokens, lo, hi)``: ``(start, end)`` spans of the
   items between its top-level commas.
 

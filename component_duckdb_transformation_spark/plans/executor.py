@@ -2088,164 +2088,165 @@ class SparkStatementExecutor:
             LOG.warning("Ignoring engine SET (no Spark equivalent): %s", st.sql[:80])
 
     def _merge(self, st: ParsedStatement) -> None:
-        """``MERGE INTO target USING source ON cond WHEN MATCHED [AND c]
-        THEN UPDATE SET ...|DELETE WHEN NOT MATCHED [AND c] THEN INSERT
-        ...`` (DuckDB 1.4+). Spark plan: one (target x source) join
-        evaluates every clause condition and SET expression, a LEFT join
-        stitches the winners back onto the row-id-tagged target
-        (first-matching clause wins, rows chosen by a DELETE clause drop
-        out), and a LEFT ANTI join computes the INSERT rows — then one
-        copy-on-write rewrite. A target row matching multiple source
-        rows raises, per the SQL standard (checked inside the plan with
-        a window count, no extra pass). ``WHEN NOT MATCHED BY SOURCE
-        THEN UPDATE|DELETE`` applies to target rows without a match,
-        evaluated in the stitch phase over target columns."""
-        from pyspark.sql import functions as F
-
+        """``MERGE INTO target [AS a] USING source ON cond WHEN MATCHED
+        [AND c] THEN UPDATE SET ...|DELETE WHEN NOT MATCHED [AND c] THEN
+        INSERT ... WHEN NOT MATCHED BY SOURCE [AND c] THEN
+        UPDATE|DELETE`` (DuckDB 1.4+), run on the matched-row plan; a
+        target row matching several source rows raises, per the SQL
+        standard."""
         parsed = _parse_merge(st.sql)
         if parsed is None:
             raise UserException(f"Unsupported MERGE form: {st.sql[:140]}")
         name = parsed["target"]
         if self.store.table(name) is None:
             raise UserException(f"MERGE INTO unknown table '{name}'")
+        self._apply_matched(
+            name,
+            parsed["target_alias"] or name,
+            parsed["source"],
+            parsed["on"],
+            parsed["clauses"],
+            "raise",
+        )
+
+    def _apply_matched(
+        self, name, alias, source, on, clauses, multi_match, probed=False
+    ) -> None:
+        """The one matched-row mutation plan, shared by MERGE, UPDATE ...
+        FROM and INSERT ... ON CONFLICT DO UPDATE. ``clauses`` are
+        ``_parse_merge``'s clause dicts; ``source`` is a FROM list (a
+        MERGE source, UPDATE ... FROM's comma list) and ``on`` matches
+        it to the target aliased ``alias``.
+
+        Spark plan: the target tagged with a persisted row id; one match
+        query ``FROM tagged AS alias, source WHERE on`` evaluates every
+        clause condition and SET expression; a LEFT join stitches the
+        first applicable clause back onto each row (rows a DELETE clause
+        picks drop out; BY SOURCE clauses apply to unmatched rows, over
+        target columns); a LEFT ANTI join per INSERT clause adds the
+        unmatched source rows — then one copy-on-write rewrite. A target
+        row with several matches raises (``multi_match="raise"``: MERGE,
+        ON CONFLICT) or takes any one of them (``"any"``: DuckDB's
+        UPDATE ... FROM updates it once), one window in the match query.
+        Before the rewrite the constraint probe checks those on the
+        columns the SET lists assign and, for INSERT clauses, NOT NULL
+        and CHECK on the inserted rows plus key uniqueness of the result
+        (skipped when ``probed``: ON CONFLICT has already checked every
+        row it proposes)."""
+        from pyspark.sql import functions as F
+
         current = self.spark.table(_bt(name))
         fields = current.schema.fields
-        t_alias = parsed["target_alias"] or name
-        src = translate(parsed["source"])
-        on = translate(parsed["on"])
+        sets = [a for cl in clauses for a in cl.get("sets", ())]
+        _check_set_columns(name, fields, sets)
+        src, on = translate(source), translate(on)
         join_cl = [
-            c for c in parsed["clauses"]
-            if c["kind"] in ("update", "delete") and not c.get("by_source")
+            c for c in clauses if c["kind"] != "insert" and not c.get("by_source")
         ]
-        bs_cl = [c for c in parsed["clauses"] if c.get("by_source")]
-        inserts = [c for c in parsed["clauses"] if c["kind"] == "insert"]
+        bs_cl = [c for c in clauses if c.get("by_source")]
+        inserts = [c for c in clauses if c["kind"] == "insert"]
 
         tagged_view = f"__mrg_{uuid.uuid4().hex[:10]}"
         tagged = current.withColumn("__rid", F.monotonically_increasing_id())
         tagged.persist()
         tagged.createOrReplaceTempView(tagged_view)
+        target = f"{_bt(tagged_view)} AS {_bt(alias)}"
         try:
             # the stitch frame carries the statement's target alias, so
             # BY SOURCE conditions/SET expressions (target-column scope,
             # possibly alias-qualified) resolve directly
-            kept = self.spark.table(_bt(tagged_view)).alias(t_alias)
-
-            def tcol(fname: str) -> F.Column:
-                return F.col(f"{t_alias}.{_bt(fname)}")
-
+            kept = self.spark.table(_bt(tagged_view)).alias(alias)
+            cols = {f.name: F.col(f"{_bt(alias)}.{_bt(f.name)}") for f in fields}
             if join_cl or bs_cl:
                 sel = [
-                    f"{_bt(t_alias)}.__rid AS __rid",
-                    f"count(*) OVER (PARTITION BY {_bt(t_alias)}.__rid) AS __nm",
+                    f"{_bt(alias)}.__rid AS __rid",
+                    f"row_number() OVER (PARTITION BY {_bt(alias)}.__rid "
+                    f"ORDER BY 1) AS __mn",
                 ]
                 for ci, cl in enumerate(join_cl):
                     cond = translate(cl["cond"]) if cl["cond"] else "true"
                     sel.append(f"({cond}) AS __c{ci}")
-                    for j, (_, expr) in enumerate(cl.get("sets", [])):
+                    for j, (_, expr) in enumerate(cl.get("sets", ())):
                         sel.append(f"({translate(expr)}) AS __s{ci}_{j}")
-                matches = self.spark.sql(
-                    f"SELECT {', '.join(sel)} "
-                    f"FROM {_bt(tagged_view)} AS {_bt(t_alias)} JOIN {src} ON {on}"
-                )
-                if not join_cl:
-                    # only matched-ness is needed; dedupe so multi-match
-                    # rows aren't duplicated by the stitch join
-                    matches = matches.select("__rid").distinct()
-                joined = kept.join(matches.alias("__m"), on="__rid", how="left")
-                if join_cl:
-                    joined = joined.filter(
-                        F.when(
-                            F.col("__m.__nm") > 1,
-                            F.expr(
-                                "raise_error('MERGE: a target row matched "
-                                "multiple source rows') IS NULL"
-                            ),
-                        ).otherwise(F.lit(True))
+                # several matches for one target row: MERGE raises (SQL
+                # standard), UPDATE ... FROM keeps any one (DuckDB
+                # updates the row once); BY SOURCE alone needs only
+                # matched-ness
+                many = (
+                    F.expr(
+                        "raise_error('MERGE: a target row matched multiple "
+                        "source rows') IS NULL"
                     )
+                    if multi_match == "raise" and join_cl
+                    else F.lit(False)
+                )
+                matches = self.spark.sql(
+                    f"SELECT {', '.join(sel)} FROM {target}, {src} WHERE {on}"
+                ).filter(F.when(F.col("__mn") > 1, many).otherwise(True))
+                joined = kept.join(matches.alias("__m"), on="__rid", how="left")
                 # first applicable clause per row, separately for the
                 # matched (join) and unmatched (BY SOURCE) populations
+                matched = F.col("__m.__rid").isNotNull()
                 clause_idx = F.lit(None).cast("int")
                 for ci in reversed(range(len(join_cl))):
                     clause_idx = F.when(
-                        F.col("__m.__rid").isNotNull() & F.col(f"__m.__c{ci}"),
-                        F.lit(ci),
+                        matched & F.col(f"__m.__c{ci}"), F.lit(ci)
                     ).otherwise(clause_idx)
                 bs_idx = F.lit(None).cast("int")
                 for ci in reversed(range(len(bs_cl))):
-                    cond = (
-                        F.expr(translate(bs_cl[ci]["cond"]))
-                        if bs_cl[ci]["cond"]
-                        else F.lit(True)
-                    )
+                    cond = bs_cl[ci]["cond"]
                     bs_idx = F.when(
-                        F.col("__m.__rid").isNull() & cond, F.lit(ci)
+                        ~matched & (F.expr(translate(cond)) if cond else F.lit(True)),
+                        F.lit(ci),
                     ).otherwise(bs_idx)
                 joined = joined.withColumn("__clause", clause_idx).withColumn(
                     "__bs", bs_idx
                 )
-                for ci, cl in enumerate(join_cl):
-                    if cl["kind"] == "delete":
+                for col, cls in (("__clause", join_cl), ("__bs", bs_cl)):
+                    dropped = [i for i, cl in enumerate(cls) if cl["kind"] == "delete"]
+                    if dropped:
                         joined = joined.filter(
-                            F.col("__clause").isNull() | (F.col("__clause") != ci)
+                            F.col(col).isNull() | ~F.col(col).isin(dropped)
                         )
-                for ci, cl in enumerate(bs_cl):
-                    if cl["kind"] == "delete":
-                        joined = joined.filter(
-                            F.col("__bs").isNull() | (F.col("__bs") != ci)
-                        )
-                cols = []
                 for fld in fields:
-                    value = tcol(fld.name)
+                    value = cols[fld.name]
                     for ci, cl in enumerate(join_cl):
-                        if cl["kind"] != "update":
-                            continue
-                        set_map = {
-                            c.lower(): j for j, (c, _) in enumerate(cl["sets"])
-                        }
-                        j = set_map.get(fld.name.lower())
-                        if j is not None:
-                            value = F.when(
-                                F.col("__clause") == ci,
-                                F.col(f"__m.__s{ci}_{j}").cast(fld.dataType),
-                            ).otherwise(value)
+                        for j, (c, _) in enumerate(cl.get("sets", ())):
+                            if c.lower() == fld.name.lower():
+                                value = F.when(
+                                    F.col("__clause") == ci,
+                                    F.col(f"__m.__s{ci}_{j}").cast(fld.dataType),
+                                ).otherwise(value)
                     for ci, cl in enumerate(bs_cl):
-                        if cl["kind"] != "update":
-                            continue
-                        set_map = {
-                            c.lower(): (c, e)
-                            for c, e in cl["sets"]
-                        }
-                        hit = set_map.get(fld.name.lower())
-                        if hit is not None:
-                            value = F.when(
-                                F.col("__bs") == ci,
-                                F.expr(translate(hit[1])).cast(fld.dataType),
-                            ).otherwise(value)
-                    cols.append(value.alias(fld.name))
-                result = joined.select(*cols)
-            else:
-                result = kept.select(
-                    *[tcol(f.name).alias(f.name) for f in fields]
-                )
+                        for c, expr in cl.get("sets", ()):
+                            if c.lower() == fld.name.lower():
+                                value = F.when(
+                                    F.col("__bs") == ci,
+                                    F.expr(translate(expr)).cast(fld.dataType),
+                                ).otherwise(value)
+                    cols[fld.name] = value
+                kept = joined
+            result = kept.select(*[v.alias(k) for k, v in cols.items()])
 
+            added = None
             earlier_conds: List[str] = []
             for cl in inserts:
                 # first-match-wins across NOT MATCHED clauses: exclude
                 # rows already taken by an earlier clause's condition
                 preds = [f"NOT ({c})" for c in earlier_conds]
-                if cl["cond"]:
-                    this = translate(cl["cond"])
-                    preds.append(f"({this})")
-                    earlier_conds.append(this)
-                else:
-                    earlier_conds.append("true")
-                cond = f" WHERE {' AND '.join(preds)}" if preds else ""
-                proj = _merge_insert_projection(cl, fields)
+                this = translate(cl["cond"]) if cl["cond"] else "true"
+                preds.append(f"({this})")
+                earlier_conds.append(this)
                 ins = self.spark.sql(
-                    f"SELECT {proj} FROM {src} LEFT ANTI JOIN "
-                    f"{_bt(tagged_view)} AS {_bt(t_alias)} ON {on}{cond}"
+                    f"SELECT {_merge_insert_projection(cl, fields)} FROM {src} "
+                    f"LEFT ANTI JOIN {target} ON {on} WHERE {' AND '.join(preds)}"
                 )
-                result = result.unionAll(ins)
+                added = ins if added is None else added.unionAll(ins)
+            if added is not None:
+                result = result.unionAll(added)
+            self._validate_update_constraints(
+                name, result, {c.lower() for c, _ in sets}, None if probed else added
+            )
             self.store.rewrite(name, result)
         finally:
             self.spark.catalog.dropTempView(tagged_view)
@@ -2611,10 +2612,12 @@ class SparkStatementExecutor:
             "replace" if head.or_replace else "ignore" if head.or_ignore else None
         )
         if conflict is not None:
+            sets = tokenize(conflict["sets"])
+            sets = _split_assignments(sets, 0, len(sets))
             mode = (
                 "ignore"
                 if conflict["action"] == "nothing"
-                else ("update", conflict["sets"], conflict["where"])
+                else ("update", sets, conflict["where"])
             )
         df = self.spark.sql(translate(spark_query_text(st)))
         cols = _insert_column_list(sql)
@@ -2636,6 +2639,12 @@ class SparkStatementExecutor:
                 "There are no UNIQUE/PRIMARY KEY Indexes that refer to "
                 f"this table, ON CONFLICT is a no-op for '{name}'"
             )
+        for col, _ in mode[1] if isinstance(mode, tuple) else ():
+            if col.lower() in keys:
+                raise UserException(
+                    f"Binder Error: Can not assign to column '{col}' because "
+                    "it has a UNIQUE/PRIMARY KEY constraint"
+                )
         nn, chk = state.not_null, state.checks
         if returning is not None and (mode is not None or keys or nn or chk):
             raise UserException(
@@ -2644,8 +2653,7 @@ class SparkStatementExecutor:
             )
         if mode is None and not keys and not nn and not chk:
             if returning is not None:
-                # DuckDB returns the inserted rows (target-aligned);
-                # registered as the `returning` view, like SUMMARIZE.
+                # DuckDB returns the inserted rows (target-aligned).
                 # Materialize BEFORE the append: the source plan may
                 # read the table being inserted into (INSERT INTO t
                 # SELECT ... FROM t RETURNING *) or be
@@ -2658,11 +2666,9 @@ class SparkStatementExecutor:
                     else _align_by_position(df, target)
                 )
                 aligned = aligned.localCheckpoint(eager=True)
-                self.store.insert_into(name, aligned)
-                aligned.createOrReplaceTempView("__returning_src")
-                self.spark.sql(translate(
-                    f"SELECT {returning} FROM __returning_src"
-                )).createOrReplaceTempView("returning")
+                self._commit_returning(
+                    lambda: self.store.insert_into(name, aligned), aligned, returning
+                )
                 return
             self.store.insert_into(name, df, columns=cols)
             return
@@ -2673,8 +2679,8 @@ class SparkStatementExecutor:
         constraint semantics: duplicate keys (within the batch, or vs
         the table for plain INSERT) raise; OR REPLACE copy-on-writes
         matching rows out; OR IGNORE / ON CONFLICT DO NOTHING anti-joins
-        the incoming side; ON CONFLICT DO UPDATE lowers onto the MERGE
-        executor with the source aliased ``excluded``. All paths are
+        the incoming side; ON CONFLICT DO UPDATE runs the matched-row
+        plan with the incoming rows aliased ``excluded``. All paths are
         joins on the key columns — no collects beyond the fused 1-row
         constraint probe (``_probe_constraints``; a plain keyed INSERT
         adds its table-clash join to it)."""
@@ -2730,28 +2736,28 @@ class SparkStatementExecutor:
             )
             self.store.rewrite(name, current.unionByName(fresh))
             return
-        # ON CONFLICT DO UPDATE SET ... [WHERE c] -> MERGE (source
-        # aliased `excluded`, matching DuckDB's pseudo-table)
+        # ON CONFLICT DO UPDATE SET ... [WHERE c]: the update clause
+        # guarded by the WHERE, then INSERT * for the rows left, over
+        # the incoming rows aliased `excluded` (DuckDB's pseudo-table).
+        # They passed the probe above, so the plan probes only the
+        # assigned columns
         _, sets, where = mode
         src_view = f"__ins_src_{uuid.uuid4().hex[:10]}"
         aligned.createOrReplaceTempView(src_view)
         try:
-            on = " AND ".join(
-                f"{_bt(name)}.{_bt(k)} = excluded.{_bt(k)}"
-                for k in key_cols
-            )
-            guard = f"AND ({where}) " if where else ""
-            merge_sql = (
-                f"MERGE INTO {_bt(name)} USING {src_view} AS excluded "
-                f"ON {on} WHEN MATCHED {guard}THEN UPDATE SET {sets} "
-                f"WHEN NOT MATCHED THEN INSERT *"
-            )
-            self._merge(
-                ParsedStatement(
-                    sql=merge_sql,
-                    statement_type=StatementType.OTHER,
-                    outputs={name},
-                )
+            self._apply_matched(
+                name,
+                name,
+                f"{src_view} AS excluded",
+                " AND ".join(
+                    f"{_bt(name)}.{_bt(k)} = excluded.{_bt(k)}" for k in key_cols
+                ),
+                [
+                    {"kind": "update", "cond": where, "sets": sets},
+                    {"kind": "insert", "cond": None, "star": True},
+                ],
+                "raise",
+                probed=True,
             )
         finally:
             self.spark.catalog.dropTempView(src_view)
@@ -2766,8 +2772,8 @@ class SparkStatementExecutor:
         over ``key_cols``, and, given ``clash`` (the current keys), a
         LEFT join flag for incoming keys already in the table — instead
         of 3+N separate LIMIT-1 jobs each re-scanning the frame. The
-        first violation raises DuckDB's error; an INSERT's duplicate
-        key re-probes only on that failure path, for the key text."""
+        first violation raises DuckDB's error; a duplicate key re-probes
+        only on that failure path, for the key text."""
         from pyspark.sql import functions as F
 
         aggs: List = [
@@ -2807,11 +2813,6 @@ class SparkStatementExecutor:
                     f"table {name}: ({e})"
                 )
         if key_cols and flags["__dup"]:
-            if update:
-                raise UserException(
-                    "Constraint Error: PRIMARY KEY or UNIQUE constraint "
-                    f"violated by UPDATE on '{name}'"
-                )
             dup = (
                 df.groupBy(*[_bt(k) for k in key_cols])
                 .count()
@@ -2819,7 +2820,14 @@ class SparkStatementExecutor:
                 .limit(1)
                 .collect()
             )
-            key_txt = ", ".join(str(v) for v in list(dup[0])[:-1])
+            values = list(dup[0])[:-1]
+            if update:
+                key_txt = ", ".join(f"{k}: {v}" for k, v in zip(key_cols, values))
+                raise UserException(
+                    f'Constraint Error: Duplicate key "{key_txt}" violates '
+                    "primary key constraint"
+                )
+            key_txt = ", ".join(str(v) for v in values)
             raise UserException(
                 "Constraint Error: PRIMARY KEY or UNIQUE constraint "
                 f'violated: duplicate key "{key_txt}"'
@@ -2831,25 +2839,27 @@ class SparkStatementExecutor:
             )
 
     def _validate_update_constraints(
-        self, name: str, new_df: DataFrame, assigned_lower: set
+        self, name: str, new_df: DataFrame, assigned_lower: set, inserted=None
     ) -> None:
-        """Re-validate constraints an UPDATE can break — DuckDB
-        enforces NOT NULL / CHECK / PRIMARY KEY on update, and skipping
-        it lets an UPDATE silently write a NULL into a NOT NULL column.
-        Cost-proportional: only constraints whose columns are actually
-        assigned are probed, in the one fused aggregate pass over the
-        post-update frame (the COW rewrite scans it anyway)."""
+        """Re-validate the constraints a mutation can break — DuckDB
+        enforces NOT NULL / CHECK / PRIMARY KEY on every write, and
+        skipping it lets an UPDATE silently write a NULL into a NOT
+        NULL column. Cost-proportional: only constraints whose columns
+        are assigned are probed, in one fused aggregate pass over the
+        post-update frame (the COW rewrite scans it anyway); the rows
+        ``inserted`` (by MERGE's INSERT clauses) get every NOT NULL and
+        CHECK, and then the key must stay unique over ``new_df``."""
         state = self._catalog(name or "")
         by_lower = {f.name.lower(): f.name for f in new_df.schema.fields}
-        keys = state.primary_key
+        nn = [by_lower[c] for c in state.not_null if c in by_lower]
+        keys = [by_lower[k] for k in state.primary_key if k in by_lower]
+        if inserted is not None:
+            self._probe_constraints(name, inserted, nn, state.checks, None)
+        key_assigned = any(k.lower() in assigned_lower for k in keys)
         self._probe_constraints(
             name,
             new_df,
-            [
-                by_lower[c]
-                for c in state.not_null
-                if c in assigned_lower and c in by_lower
-            ],
+            [c for c in nn if c.lower() in assigned_lower],
             [
                 e
                 for e in state.checks
@@ -2859,11 +2869,22 @@ class SparkStatementExecutor:
                     for t in tokenize(e)
                 )
             ],
-            [by_lower[k] for k in keys if k in by_lower]
-            if any(k in assigned_lower for k in keys)
-            else None,
-            update=True,
+            keys if key_assigned or inserted is not None else None,
+            update=key_assigned,
         )
+
+    def _commit_returning(self, commit, rows, returning) -> None:
+        """Run the mutation ``commit``. Given a RETURNING list, publish
+        ``SELECT <list>`` over ``rows`` (the affected rows, planned
+        before the commit, so they read the version it replaces) as the
+        ``returning`` view once the commit succeeded, like SUMMARIZE."""
+        if returning is None:
+            commit()
+            return
+        rows.createOrReplaceTempView("__returning_src")
+        out = self.spark.sql(translate(f"SELECT {returning} FROM __returning_src"))
+        commit()
+        out.createOrReplaceTempView("returning")
 
     def _update(self, st: ParsedStatement) -> None:
         name = st.head.name
@@ -2874,127 +2895,37 @@ class SparkStatementExecutor:
                 raise UserException(
                     "UPDATE ... FROM with RETURNING is not supported"
                 )
-            self._update_from(name, assignments, from_text, where)
+            # a target row matching several FROM rows is updated once,
+            # from any one of them, as DuckDB does
+            self._apply_matched(
+                name,
+                name,
+                from_text,
+                where or "true",
+                [{"kind": "update", "cond": None, "sets": assignments}],
+                "any",
+            )
             return
         current = self.spark.table(_bt(name))
-        cols = []
+        _check_set_columns(name, current.schema.fields, assignments)
         pred = f"coalesce(({translate(where)}), false)" if where else "true"
         assigned = {c.lower(): e for c, e in assignments}
-        # a stale column (e.g. renamed away) must fail like DuckDB's
-        # binder, not silently no-op (round-6 mutation-fuzz find)
-        field_names = {f.name.lower() for f in current.schema.fields}
-        for col, _ in assignments:
-            if col.lower() not in field_names:
-                raise UserException(
-                    f"UPDATE: referenced update column '{col}' not found "
-                    f"in table '{name}'"
-                )
-        for fld in current.schema.fields:
-            expr = assigned.get(fld.name.lower())
-            if expr is not None:
-                cols.append(
-                    f"CASE WHEN {pred} THEN CAST(({translate(expr)}) AS "
-                    f"{fld.dataType.simpleString()}) ELSE {_bt(fld.name)} END AS {_bt(fld.name)}"
-                )
-            else:
-                cols.append(_bt(fld.name))
-        new_df = self.spark.table(_bt(name)).selectExpr(*cols)
-        self._validate_update_constraints(
-            name, new_df, set(assigned)
+        cols = [
+            f"CASE WHEN {pred} THEN CAST(({translate(assigned[f.name.lower()])}) "
+            f"AS {f.dataType.simpleString()}) ELSE {_bt(f.name)} END AS {_bt(f.name)}"
+            if f.name.lower() in assigned
+            else _bt(f.name)
+            for f in current.schema.fields
+        ]
+        new_df = current.selectExpr(*cols)
+        self._validate_update_constraints(name, new_df, set(assigned))
+        # RETURNING: the matched rows through the same assignment
+        # projection (pre-image filter, post-update values)
+        self._commit_returning(
+            lambda: self.store.rewrite(name, new_df),
+            current.filter(pred).selectExpr(*cols) if returning else None,
+            returning,
         )
-        if returning is not None:
-            # post-update values of the matched rows (pre-image filter,
-            # assignments applied — the captured plan reads the
-            # pre-rewrite COW version)
-            ret_cols = []
-            for fld in current.schema.fields:
-                expr = assigned.get(fld.name.lower())
-                if expr is not None:
-                    ret_cols.append(
-                        f"CAST(({translate(expr)}) AS "
-                        f"{fld.dataType.simpleString()}) AS {_bt(fld.name)}"
-                    )
-                else:
-                    ret_cols.append(_bt(fld.name))
-            matched = current.filter(pred).selectExpr(*ret_cols)
-            matched.createOrReplaceTempView("__returning_src")
-            ret_df = self.spark.sql(translate(
-                f"SELECT {returning} FROM __returning_src"
-            ))
-        self.store.rewrite(name, new_df)
-        if returning is not None:
-            ret_df.createOrReplaceTempView("returning")
-
-    def _update_from(
-        self,
-        name: str,
-        assignments: List[tuple[str, str]],
-        from_text: str,
-        where: Optional[str],
-    ) -> None:
-        """``UPDATE t SET c = expr FROM src [WHERE pred]`` — Postgres/
-        DuckDB join-update (reference scripts use it for dimension
-        backfills). Spark plan: tag the target with a synthetic row id,
-        evaluate the assignment expressions in the (target x FROM
-        sources) join that WHERE filters, keep one match per row id
-        (multi-match picks an arbitrary winner, matching
-        Postgres/DuckDB), then stitch the matches back with a LEFT
-        join — one shuffle on the row id, copy-on-write rewrite like
-        every other mutation."""
-        from pyspark.sql import functions as F
-
-        current = self.spark.table(_bt(name))
-        fields = {f.name.lower(): f for f in current.schema.fields}
-        for col, _ in assignments:
-            if col.lower() not in fields:
-                raise UserException(f"UPDATE: unknown column '{col}'")
-        tagged_view = f"__upd_{uuid.uuid4().hex[:10]}"
-        # persist: the tagged subtree appears twice in the final plan
-        # (match probe + stitch base); materializing it once pins the
-        # synthetic row ids so both sides agree
-        tagged = current.withColumn("__rid", F.monotonically_increasing_id())
-        tagged.persist()
-        tagged.createOrReplaceTempView(tagged_view)
-        try:
-            set_exprs = ", ".join(
-                f"({translate(expr)}) AS __set_{i}"
-                for i, (_, expr) in enumerate(assignments)
-            )
-            pred = f"WHERE {translate(where)}" if where else ""
-            matches = self.spark.sql(
-                f"SELECT * FROM ("
-                f"SELECT {_bt(name)}.__rid AS __rid, {set_exprs}, "
-                f"row_number() OVER (PARTITION BY {_bt(name)}.__rid "
-                f"ORDER BY 1) AS __mn "
-                f"FROM {_bt(tagged_view)} AS {_bt(name)}, {translate(from_text)} "
-                f"{pred}) WHERE __mn = 1"
-            ).drop("__mn")
-            joined = self.spark.table(_bt(tagged_view)).alias("t").join(
-                matches.alias("m"), on="__rid", how="left"
-            )
-            cols = []
-            set_idx = {c.lower(): i for i, (c, _) in enumerate(assignments)}
-            for fld in current.schema.fields:
-                i = set_idx.get(fld.name.lower())
-                if i is not None:
-                    cols.append(
-                        F.when(
-                            F.col("m.__rid").isNotNull(),
-                            F.col(f"m.__set_{i}").cast(fld.dataType),
-                        )
-                        .otherwise(F.col(f"t.{_bt(fld.name)}"))
-                        .alias(fld.name)
-                    )
-                else:
-                    cols.append(F.col(f"t.{_bt(fld.name)}"))
-            result = joined.select(*cols)
-            self._validate_update_constraints(
-                name, result, {c.lower() for c, _ in assignments}
-            )
-            self.store.rewrite(name, result)
-        finally:
-            self.spark.catalog.dropTempView(tagged_view)
-            tagged.unpersist()
 
     def _delete(self, st: ParsedStatement) -> None:
         name = st.head.name
@@ -3004,39 +2935,27 @@ class SparkStatementExecutor:
             raise UserException(
                 "DELETE ... USING with RETURNING is not supported"
             )
+        current = self.spark.table(_bt(name))
+        hit = f"coalesce(({translate(where)}), false)" if where else None
         if using is not None:
             # DELETE FROM t USING src WHERE pred: delete target rows
             # with ANY qualifying source match — an anti-join (NOT
             # EXISTS), the plan Catalyst turns into a hash LeftAnti
-            pred = translate(where) if where else "true"
             new_df = self.spark.sql(
                 f"SELECT {_bt(name)}.* FROM {_bt(name)} "
                 f"WHERE NOT EXISTS (SELECT 1 FROM {translate(using)} "
-                f"WHERE coalesce(({pred}), false))"
+                f"WHERE {hit or 'true'})"
             )
-        elif where is None:
-            new_df = self.spark.table(_bt(name)).limit(0)
+        elif hit is None:
+            new_df = current.limit(0)
         else:
-            new_df = self.spark.table(_bt(name)).filter(
-                f"NOT coalesce(({translate(where)}), false)"
-            )
-        if returning is not None:
-            # the deleted rows (pre-image, captured before the rewrite)
-            current = self.spark.table(_bt(name))
-            deleted = (
-                current
-                if where is None
-                else current.filter(
-                    f"coalesce(({translate(where)}), false)"
-                )
-            )
-            deleted.createOrReplaceTempView("__returning_src")
-            ret_df = self.spark.sql(translate(
-                f"SELECT {returning} FROM __returning_src"
-            ))
-        self.store.rewrite(name, new_df)
-        if returning is not None:
-            ret_df.createOrReplaceTempView("returning")
+            new_df = current.filter(f"NOT {hit}")
+        # RETURNING: the deleted rows (pre-image)
+        self._commit_returning(
+            lambda: self.store.rewrite(name, new_df),
+            (current if hit is None else current.filter(hit)) if returning else None,
+            returning,
+        )
 
     #: statements the executor's own code parses, by head (verb, kind);
     #: every other statement is a query ``_run`` hands to Spark
@@ -3797,8 +3716,8 @@ def _parse_alter(tail: str):
 
 def _split_assignments(tokens: List[Token], lo: int, hi: int) -> List[tuple[str, str]]:
     """``[(col, expr)]`` of the ``c = expr[, ...]`` list in
-    ``tokens[lo:hi]`` (UPDATE, MERGE ... UPDATE SET and, through the
-    MERGE it lowers to, ON CONFLICT DO UPDATE SET)."""
+    ``tokens[lo:hi]`` (UPDATE, MERGE ... UPDATE SET and ON CONFLICT DO
+    UPDATE SET)."""
     out: List[tuple[str, str]] = []
     for a, b in split_top_commas(tokens, lo, hi):
         if a == b == hi:
@@ -3806,6 +3725,18 @@ def _split_assignments(tokens: List[Token], lo: int, hi: int) -> List[tuple[str,
         col, _, expr = "".join(t.text for t in tokens[a:b]).partition("=")
         out.append((col.strip().strip('"`'), expr.strip()))
     return out
+
+
+def _check_set_columns(name: str, fields, sets) -> None:
+    """DuckDB's binder rejects a SET naming no column of the target: a
+    stale (e.g. renamed-away) column fails instead of a silent no-op."""
+    have = {f.name.lower() for f in fields}
+    for col, _ in sets:
+        if col.lower() not in have:
+            raise UserException(
+                f"UPDATE: referenced update column '{col}' not found "
+                f"in table '{name}'"
+            )
 
 
 def _parse_merge(sql: str):

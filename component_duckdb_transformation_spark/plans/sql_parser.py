@@ -30,7 +30,6 @@ from .sql_tokens import (
     code_tokens,
     split_statements,
     tokenize,
-    top_level,
     unquote_name,
 )
 
@@ -110,10 +109,6 @@ class ParsedStatement:
     outputs: Set[str] = field(default_factory=set)
     dependencies: Set[str] = field(default_factory=set)
     cte_aliases: Set[str] = field(default_factory=set)
-    # terminal ORDER BY present in a CREATE TABLE/VIEW body — tracked so
-    # the export layer can re-apply ordering (Spark temp views do not
-    # persist order; see SURVEY §7 hard-part 2)
-    has_order_by: bool = False
     head: StatementHead = field(default_factory=StatementHead)
 
     @property
@@ -192,14 +187,12 @@ def parse_statement(sql: str) -> ParsedStatement:
             # `returning` view (added after the mutation branch above
             # folded outputs into deps, so no self-dependency appears)
             outputs.add("returning")
-    has_order = _has_top_level_order_by(code)
     return ParsedStatement(
         sql=sql,
         statement_type=stype,
         outputs=outputs,
         dependencies=deps,
         cte_aliases=ctes,
-        has_order_by=has_order,
         head=head,
     )
 
@@ -515,26 +508,3 @@ def _capture_from_list(code: Sequence[tuple[int, Token]], pos: int, deps: Set[st
             continue
         return i
     return i
-
-
-def _has_top_level_order_by(code: Sequence[tuple[int, Token]]) -> bool:
-    """ORDER BY at depth 0, or at depth 0 of a bracket opened at depth 0
-    (``AS (SELECT ... ORDER BY x)``)."""
-    toks = [t for _, t in code]
-    n = len(toks)
-
-    def order_by(j: int) -> bool:
-        return toks[j].is_kw("ORDER") and j + 1 < n and toks[j + 1].is_kw("BY")
-
-    i = 0
-    while i < n:
-        if toks[i].kind == "op" and toks[i].text in ("(", "[", "{"):
-            end = closing(toks, i)
-            if any(order_by(j) for j, _ in top_level(toks, i + 1, end)):
-                return True
-            i = end + 1
-        elif order_by(i):
-            return True
-        else:
-            i += 1
-    return False

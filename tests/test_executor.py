@@ -204,6 +204,11 @@ def test_update_from_join_update(spark, table_store):
     _run(ex, "UPDATE uft SET amt = ufd.boost FROM ufd WHERE uft.id = ufd.id")
     got = {(r.id, r.amt) for r in spark.table("uft").collect()}
     assert got == {(1, 100.0), (2, 20.0), (3, 300.0)}
+    # every row matches both FROM rows: DuckDB updates each row once,
+    # from either match, where MERGE would raise
+    _run(ex, "UPDATE uft SET amt = ufd.boost FROM ufd")
+    got = sorted(r.amt for r in spark.table("uft").collect())
+    assert len(got) == 3 and set(got) <= {100.0, 300.0}
 
 
 def test_alter_table_forms(spark, table_store):
@@ -651,6 +656,70 @@ def test_primary_key_constraint_inserts(spark, table_store):
         _run(ex, "INSERT INTO ck VALUES (1, 1, 5)")
 
 
+def test_constraints_hold_on_merge_and_on_conflict(spark, table_store):
+    """MERGE and ON CONFLICT DO UPDATE reach the same constraint probe
+    as UPDATE and INSERT: each statement raises DuckDB 1.0's error and
+    leaves the table as it was. DuckDB 1.0 has no MERGE, so each MERGE
+    is compared with the UPDATE ... FROM or INSERT it amounts to."""
+    import duckdb
+    import pytest
+
+    from component_duckdb_transformation_spark.exceptions import UserException
+    from component_duckdb_transformation_spark.plans.executor import (
+        SparkStatementExecutor,
+    )
+
+    ex = SparkStatementExecutor(spark, table_store)
+    con = duckdb.connect()
+    for s in (
+        "CREATE TABLE qs AS SELECT 1 AS k, CAST(NULL AS INTEGER) AS b",
+        "CREATE TABLE s5 AS SELECT * FROM (VALUES (5), (5)) v(k)",
+        "CREATE TABLE s7 AS SELECT * FROM (VALUES (7)) v(k)",
+    ):
+        _run(ex, s)
+        con.execute(s)
+    upsert = "INSERT INTO p VALUES (1, 5, 5) ON CONFLICT (k) DO UPDATE SET "
+    matched = "MERGE INTO p USING qs ON p.k = qs.k WHEN MATCHED THEN UPDATE SET "
+    cases = [
+        (upsert + "b = NULL", None),
+        (upsert + "c = -1", None),
+        (upsert + "k = 3", None),
+        (matched + "b = qs.b", "UPDATE p SET b = qs.b FROM qs WHERE p.k = qs.k"),
+        (matched + "k = 2", "UPDATE p SET k = 2 FROM qs WHERE p.k = qs.k"),
+        (matched + "c = -3", "UPDATE p SET c = -3 FROM qs WHERE p.k = qs.k"),
+        (
+            "MERGE INTO p USING s5 s ON p.k = s.k "
+            "WHEN NOT MATCHED THEN INSERT VALUES (s.k, 1, 1)",
+            "INSERT INTO p SELECT s.k, 1, 1 FROM s5 s",
+        ),
+        (
+            "MERGE INTO p USING s7 s ON p.k = s.k "
+            "WHEN NOT MATCHED THEN INSERT (k) VALUES (s.k)",
+            "INSERT INTO p (k) SELECT s.k FROM s7 s",
+        ),
+    ]
+    for ours, duck in cases:
+        for s in (
+            "DROP TABLE IF EXISTS p",
+            "CREATE TABLE p (k INTEGER PRIMARY KEY, b INTEGER NOT NULL, "
+            "c INTEGER CHECK (c > 0))",
+            "INSERT INTO p VALUES (1, 1, 1), (2, 2, 2)",
+        ):
+            _run(ex, s)
+            con.execute(s)
+        with pytest.raises(duckdb.Error) as want:
+            con.execute(duck or ours)
+        # the error class and its first clause, e.g. "Constraint
+        # Error: NOT NULL constraint failed"
+        prefix = ":".join(str(want.value).split(":")[:2])
+        with pytest.raises(UserException) as got:
+            _run(ex, ours)
+        assert str(got.value).startswith(prefix), (ours, str(got.value), prefix)
+        rows = sorted(tuple(r) for r in spark.table("p").collect())
+        assert rows == con.execute("FROM p ORDER BY k").fetchall(), ours
+        assert rows == [(1, 1, 1), (2, 2, 2)], ours
+
+
 def test_not_null_and_check_constraints(spark, table_store):
     """INSERT-time NOT NULL / CHECK enforcement (DuckDB-verified: a
     NULL passes a CHECK, violates NOT NULL)."""
@@ -1004,7 +1073,10 @@ def test_update_time_constraint_validation(spark, table_store):
         _run(ex, "UPDATE upc SET a = NULL WHERE k = 1")
     with pytest.raises(UserException, match="CHECK constraint"):
         _run(ex, "UPDATE upc SET b = -1 WHERE k = 2")
-    with pytest.raises(UserException, match="PRIMARY KEY or UNIQUE"):
+    # DuckDB 1.0's text for a key an UPDATE duplicates
+    with pytest.raises(
+        UserException, match='Duplicate key "k: 1" violates primary key constraint'
+    ):
         _run(ex, "UPDATE upc SET k = 1 WHERE k = 2")
     # failed updates must not have mutated the table
     assert sorted(tuple(r) for r in spark.table("upc").collect()) == [

@@ -18,7 +18,6 @@ def test_create_view_string_literal_names():
     assert st.statement_type == StatementType.CREATE_VIEW
     assert st.outputs == {"week.csv"}
     assert st.dependencies == {"days.csv"}
-    assert st.has_order_by
 
 
 def test_cte_aliases_excluded():
